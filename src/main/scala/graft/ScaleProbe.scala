@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
  * with disjoint vertex-id shifts (structure-preserving 10x scale:
  * same degree distribution, 10x volume) and times the heavy phases —
  * triangle stats (the adjacency exchange), Pregel seeding, and one
- * full refinement-iteration equivalent (degree maps + derived stats
- * + global-WCC evaluation) — while sampling peak JVM heap.
+ * full refinement-iteration equivalent (fused neighborhood surfaces
+ * + derived stats + global-WCC evaluation) — while sampling peak JVM
+ * heap.
  *
  * Usage: runMain graft.ScaleProbe [replicas] [sfDir] [phases]
  * `phases` (optional, comma-separated substrings) restricts which
@@ -114,9 +115,8 @@ object ScaleProbe {
       }
       val vertexCount = g.numVertices
       phase("one refinement iteration (wcc)") {
-        // mirrors the production refineCompact iteration: one fused
-        // exchange feeding stats AND the WCC evaluation (the replicated
-        // probe graph is hub-free like its sf base)
+        // mirrors one production refinement generation: one fused
+        // exchange feeding stats AND the WCC evaluation
         val surf = CommunityOps.nbrSurfaces(init)
         surf.cache()
         val cs = CommunityOps.statsFromSurfaces(init, surf)

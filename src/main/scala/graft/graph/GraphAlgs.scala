@@ -1764,23 +1764,6 @@ object GraphAlgs {
   final case class KTruss(edges: DataFrame, r1Count: Long, converged: Boolean,
       release: () => Unit)
 
-  /** Merge-scan intersection of two sorted distinct Long arrays,
-   * returning the COMMON ELEMENTS (the delta peel needs the triangle
-   * apexes, not just their count). */
-  /** Merge-scan intersection COUNT over two sorted distinct Long
-   * arrays (the plain-Scala twin of the native `intersect_count`
-   * expression, local to the RDD loops here). */
-  private[graph] def sortedIntersectCount(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var j = 0; var c = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
-
   /** `a` minus `rm` over sorted distinct Long arrays; result stays
    * sorted (the k-truss overlay's lazy neighbor removal). */
   private[graph] def sortedRemove(a: Array[Long], rm: Array[Long]): Array[Long] = {
@@ -1805,19 +1788,6 @@ object GraphAlgs {
       if (j >= b.length || (i < a.length && a(i) < b(j))) { out += a(i); i += 1 }
       else if (i >= a.length || b(j) < a(i)) { out += b(j); j += 1 }
       else { out += a(i); i += 1; j += 1 }
-    }
-    out.toArray
-  }
-
-  private[graph] def sortedIntersect(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val out = new scala.collection.mutable.ArrayBuffer[Long](
-      math.min(a.length, b.length))
-    var i = 0; var j = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { out += x; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
     }
     out.toArray
   }
@@ -2104,7 +2074,7 @@ object GraphAlgs {
     // edge, Σ min(deg_u, deg_v) shipped bytes, hub-safe where the
     // old ship-N(src)-to-dst pass paid O(hub²) on skewed graphs
     val (sup0, rel0) = coLocatedIntersect(edges0, adj, pv) {
-      (u, v, nu, nv) => ((u, v), sortedIntersectCount(nu, nv))
+      (u, v, nu, nv) => ((u, v), SortedIntersect.count(nu, nv))
     }
     var base: RDD[((Long, Long), Int)] =
       sup0.partitionBy(pe).persist(StorageLevel.MEMORY_AND_DISK)
@@ -2195,7 +2165,7 @@ object GraphAlgs {
         // the deleted flag, exactly as the old physical filter did.
         val (dApex, relD) = coLocatedIntersect(
           d.map { case ((u, v), _) => (u, v) }, effAdj(adj, remAdj), pv) {
-          (u, v, nu, nv) => ((u, v), sortedIntersect(nu, nv))
+          (u, v, nu, nv) => ((u, v), SortedIntersect.commons(nu, nv))
         }
         val dec: RDD[((Long, Long), Int)] = dApex
           .flatMap { case ((u, v), apexes) =>
@@ -3361,7 +3331,6 @@ object GraphAlgs {
           st = jumped
         }
       }
-      println(s"[graft-scc] peel round $outer: fixpoint in $inner rounds over $nActive active")
       val peel = st
         .filter { case (_, (f, b, _, _, _)) => f == b }
         .map { case (v, (f, _, _, _, _)) => (v, f) }.persist()

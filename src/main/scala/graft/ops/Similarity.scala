@@ -689,7 +689,9 @@ object Similarity {
   /** Nearest-centroid assignment of (vec_id, q) rows against a
    * centroid literal — the shuffle-free side of Lloyd and the
    * on-arrival cell assignment of a streaming ingest. Ties break on
-   * the smaller cluster id. */
+   * the smaller cluster id. Output is one row per INPUT row: rows
+   * sharing a vec_id are each assigned, never collapsed to one per
+   * vec_id — callers needing unique ids dedup first. */
   def assignToCentroids(q: DataFrame, centroids: Array[Array[Long]]): DataFrame =
     q.withColumn("best", centroidArgmin(col("q"), centroids))
       .select(col("vec_id"), col("q"),

@@ -143,11 +143,10 @@ object GraphQueries {
   /** The seed partition's pipeline evaluation (surfaces, stats,
    * global WCC) — iteration 0 of the refinement loop AND the
    * `claimed` side of the seeding value check, memoized so a session
-   * running both pays the pass once. Hub graphs (never the sf
-   * corpus) fall back to the Map-based evaluation with no shareable
-   * surface, mirroring `refinePartition`'s strategy choice. */
+   * running both pays the pass once. The refinement run it is handed
+   * to owns the cached surface's release. */
   private def seedEval(spark: SparkSession, sfDir: String):
-      (Option[org.apache.spark.graphx.VertexRDD[CommunityOps.NbrSurface]],
+      (org.apache.spark.graphx.VertexRDD[CommunityOps.NbrSurface],
         Map[Long, CommunityData], Double) =
     memoize(spark, s"seedEval:$sfDir") {
       DistributedWCC.seedEvaluation(init(spark, sfDir),
@@ -312,8 +311,8 @@ object GraphQueries {
 
   /** Value-level certificate for the SEEDING phase, mirroring
    * [[wccPartitionWccCheck]]: the pipeline's own evaluation of the
-   * seed partition (community stats + computeGlobalWCC on the seeded
-   * core — the same machinery that scores the refinement loop's
+   * seed partition (community stats + global WCC on the seeded core
+   * — the same machinery that scores the refinement loop's
    * iteration 0) must agree to 1e-9 with a fully independent
    * DataFrame recomputation ([[WccCheck]]) from nothing but the
    * emitted labels (core labels + pruned-out singletons, the Output
@@ -324,8 +323,6 @@ object GraphQueries {
     val nVertices = graph(spark, sfDir).numVertices
     // the pipeline's own score of the seed partition — the memoized
     // iteration-0 evaluation the refinement run also starts from
-    // (value-identical to an ad-hoc computeGlobalWCC re-evaluation,
-    // PropertySpec's surfaces-vs-maps scalar agreement)
     val claimed = seedEval(spark, sfDir)._3
     val labels = spark.createDataFrame(
       graph(spark, sfDir).vertices.leftOuterJoin(

@@ -1,5 +1,6 @@
 package graft.wcc
 
+import graft.graph.SortedIntersect
 import org.apache.spark.graphx._
 
 /**
@@ -57,28 +58,6 @@ object CommunityOps {
         ctx.sendToDst(Map(ctx.srcAttr.cId -> 1))
       },
       mergeCountMaps)
-
-  /** Community stats derived from the per-vertex community-degree
-   * maps the movement step computes anyway — NO extra pass over the
-   * edges: r(c) counts members; a(c) = half the sum of members'
-   * same-community degrees (each internal edge seen from both ends);
-   * b(c) = sum of members' external degrees (each external edge seen
-   * once per endpoint community). Pure integer arithmetic, so the
-   * result is VALUE-IDENTICAL to `computeCommunityStats` — the
-   * refinement trajectory cannot move.
-   *
-   * Replaces one full triplet scan per refinement iteration in both
-   * hill-climbing loops; the collect stays O(#communities). */
-  def statsFromDegrees(graph: Graph[VertexData, Int],
-      deg: VertexRDD[Map[Long, Int]]): Map[Long, CommunityData] = {
-    val perVertex = graph.vertices.leftJoin(deg) { (_, vd, mOpt) =>
-      val m = mOpt.getOrElse(Map.empty[Long, Int])
-      var own = 0; var ext = 0
-      m.foreach { case (c, n) => if (c == vd.cId) own += n else ext += n }
-      (vd.cId, own, ext)
-    }
-    statsFromTriples(perVertex)
-  }
 
   /** Community-stats fold from per-vertex (cId, own, ext) triples.
    * Two value-identical forms, picked by partition count:
@@ -198,9 +177,8 @@ object CommunityOps {
   /** The fused exchange: one aggregateMessages pass producing each
    * vertex's [[NbrSurface]]. Value-identical to
    * `vertexCommunityDegrees` + the evaluation's same-community
-   * array build; intended for hub-free graphs (callers check max
-   * degree once — on a hub graph the separate Map/oriented paths
-   * apply). */
+   * array build. Hub-safe: the combiner appends in place, so a
+   * degree-D vertex costs O(D) state and allocation. */
   def nbrSurfaces(graph: Graph[VertexData, Int]): VertexRDD[NbrSurface] =
     graph.aggregateMessages[NbrAgg](
       ctx => {
@@ -234,8 +212,13 @@ object CommunityOps {
         NbrSurface(cIds, counts, sameNbrs)
       }
 
-  /** `statsFromDegrees` on the compact surface — same integer
-   * arithmetic, value-identical. */
+  /** Community stats derived from the surfaces the movement step
+   * consumes anyway — NO extra pass over the edges: r(c) counts
+   * members; a(c) = half the sum of members' same-community degrees
+   * (each internal edge seen from both ends); b(c) = sum of members'
+   * external degrees (each external edge seen once per endpoint
+   * community). Pure integer arithmetic, so the result is
+   * VALUE-IDENTICAL to `computeCommunityStats`. */
   def statsFromSurfaces(graph: Graph[VertexData, Int],
       surf: VertexRDD[NbrSurface]): Map[Long, CommunityData] = {
     val perVertex = graph.vertices.leftJoin(surf) { (_, vd, sOpt) =>
@@ -249,15 +232,18 @@ object CommunityOps {
     statsFromTriples(perVertex)
   }
 
-  /** The label-dependent half of the compact WCC evaluation — the
+  /** The label-dependent half of the WCC evaluation — the
    * per-vertex (vd, same-community degree, intra-community triangle
    * count) scaffold, MATERIALIZED (cached + counted) but with no
-   * community stats consumed. It is independent of the per-iteration
-   * stats collect, so the refinement loop runs the two as CONCURRENT
-   * Spark jobs (the iteration's two heavy jobs were strictly
-   * sequential before — PERF.md r20: ~350 ms stats + ~220 ms eval per
-   * iteration at sf0.1, both dispatch-bound on mostly-idle
-   * executors). The caller owns the returned cache. */
+   * community stats consumed. Per same-community edge it intersects
+   * the two endpoints' same-community neighbor arrays with the
+   * skew-adaptive [[SortedIntersect]] kernel (each triangle seen once
+   * per incident edge, hence /2; endpoints cannot appear in an
+   * intersection — no self-loops), so a hub costs O(deg(leaf) * log
+   * D) per edge instead of the merge scan's O(D). It is independent
+   * of the per-iteration stats collect, so the refinement loop runs
+   * the two as CONCURRENT Spark jobs (PERF.md r20). The caller owns
+   * the returned cache. */
   def wccEvalScaffold(graph: Graph[VertexData, Int],
       surf: VertexRDD[NbrSurface]): VertexRDD[(VertexData, Int, Int)] = {
     val gA: Graph[(VertexData, Array[Long]), Int] =
@@ -265,7 +251,7 @@ object CommunityOps {
         (vd, sOpt.map(_.sameNbrs).getOrElse(Array.emptyLongArray)))
     val commTri: VertexRDD[Int] = gA.aggregateMessages[Int](
       ctx => if (ctx.srcAttr._1.cId == ctx.dstAttr._1.cId) {
-        val c = TriangleStats.sortedIntersectCount(ctx.srcAttr._2, ctx.dstAttr._2)
+        val c = SortedIntersect.count(ctx.srcAttr._2, ctx.dstAttr._2)
         ctx.sendToSrc(c); ctx.sendToDst(c)
       }, _ + _)
     val scaffold = gA.outerJoinVertices(commTri)((_, va, tcOpt) =>
@@ -325,12 +311,11 @@ object CommunityOps {
     }
   }
 
-  /** G7 on the compact surface: the same-community neighbor arrays
-   * were already built by the fused exchange, so the evaluation is
-   * just the per-edge intersection pass + the WCC_V sum. Only valid
-   * on hub-free graphs (callers' max-degree check); value-identical
-   * to `computeGlobalWCC`'s direct branch. Composed from the split
-   * scaffold/fold halves the refinement loop overlaps. */
+  /** G7 on the surface: the same-community neighbor arrays were
+   * already built by the fused exchange, so the evaluation is just
+   * the scaffold's per-edge intersection pass + the WCC_V sum.
+   * Composed from the split scaffold/fold halves the refinement loop
+   * overlaps. */
   def computeGlobalWccFromSurfaces(graph: Graph[VertexData, Int],
       surf: VertexRDD[NbrSurface], stats: Map[Long, CommunityData],
       vertexCount: Long): Double = {
@@ -343,11 +328,12 @@ object CommunityOps {
   /**
    * G7: global WCC = (sum over vertices of WCC_V) / vertexCount.
    *
-   * Two aggregateMessages passes (same-community adjacency arrays,
-   * then per-edge array intersections for intra-community triangle
-   * counts) + a broadcast of the community-stats map — the reference's
-   * `computeGlobalWCC` (`DistributedWCC.scala:422-460`) with its two
-   * edge-decoration joins replaced by triplet access.
+   * The reference's own plan (`DistributedWCC.scala:422-533`): one
+   * aggregateMessages pass for the same-community adjacency arrays,
+   * one for the per-edge intersections, then the WCC_V sum under the
+   * broadcast community stats. The pipeline evaluates through
+   * [[wccEvalScaffold]] instead; this form shares none of its array
+   * building and is the reference PropertySpec pins it against.
    *
    * @param vertexCount divisor — the ORIGINAL (unpruned) vertex count
    *                    (reference passes `this.vertexCount`, `:41`)
@@ -356,62 +342,31 @@ object CommunityOps {
       stats: Map[Long, CommunityData], vertexCount: Long): Double = {
     val sc = graph.vertices.sparkContext
     val bStats = sc.broadcast(stats)
-
-    // Hub guard at ZERO cost: a vertex's same-community degree is
-    // bounded by its community's size - 1, and sizes are already on
-    // the driver in `stats`. Only when some community could hold an
-    // internal hub above the threshold does the evaluation divert to
-    // the oriented once-per-triangle path; the common case runs the
-    // reference's own two-aggregateMessages array plan verbatim
-    // (`:462-533`), where vtC is the array length for free.
-    val maxInternalDeg =
-      (if (stats.isEmpty) 0 else stats.values.map(_.r).max) - 1
-
-    val sumWcc = if (maxInternalDeg <= TriangleStats.HubDegreeThreshold) {
-      // same-community neighbor ids per vertex (`:509-533`)
-      val commNbors: VertexRDD[Array[Long]] = graph.aggregateMessages[Array[Long]](
-        ctx => if (ctx.srcAttr.cId == ctx.dstAttr.cId) {
-          ctx.sendToSrc(Array(ctx.dstId)); ctx.sendToDst(Array(ctx.srcId))
-        }, _ ++ _)
-      val gA: Graph[(VertexData, Array[Long]), Int] =
-        graph.outerJoinVertices(commNbors)((_, vd, a) =>
-          (vd, a.map(_.sorted).getOrElse(Array.empty[Long])))
-      // intra-community triangles per vertex (`:462-507`): per
-      // same-community edge, merge-intersect the two same-community
-      // neighborhoods; each triangle is seen once per incident edge,
-      // hence /2. Endpoints cannot appear in an intersection (no
-      // self-loops).
-      val commTri: VertexRDD[Int] = gA.aggregateMessages[Int](
-        ctx => if (ctx.srcAttr._1.cId == ctx.dstAttr._1.cId) {
-          val c = TriangleStats.sortedIntersectCount(ctx.srcAttr._2, ctx.dstAttr._2)
-          ctx.sendToSrc(c); ctx.sendToDst(c)
-        }, _ + _)
-      gA.outerJoinVertices(commTri)((_, va, tcOpt) =>
-          (va._1, va._2.length, tcOpt.getOrElse(0) / 2))
-        .vertices
-        .map { case (_, (vd, vtC, tC)) =>
-          WCCMetric.computeWccV(vd, bStats.value(vd.cId), vtC, tC)
-        }
-        .sum()
-    } else {
-      // a community big enough to hide a hub: Int-message degrees
-      // for vtC, oriented enumeration for tC (bounded out-lists,
-      // each triangle credits its three vertices, no halving)
-      val vtC: VertexRDD[Int] = graph.aggregateMessages[Int](
-        ctx => if (ctx.srcAttr.cId == ctx.dstAttr.cId) {
-          ctx.sendToSrc(1); ctx.sendToDst(1)
-        }, _ + _)
-      val tC = TriangleStats.vertexTriangles(
-        graph.subgraph(epred = t => t.srcAttr.cId == t.dstAttr.cId))
-      graph
-        .outerJoinVertices(vtC)((_, vd, o) => (vd, o.getOrElse(0)))
-        .outerJoinVertices(tC)((_, p, o) => (p._1, p._2, o.getOrElse(0)))
-        .vertices
-        .map { case (_, (vd, vtc, tc)) =>
-          WCCMetric.computeWccV(vd, bStats.value(vd.cId), vtc, tc)
-        }
-        .sum()
-    }
+    // same-community neighbor ids per vertex (`:509-533`)
+    val commNbors: VertexRDD[Array[Long]] = graph.aggregateMessages[Array[Long]](
+      ctx => if (ctx.srcAttr.cId == ctx.dstAttr.cId) {
+        ctx.sendToSrc(Array(ctx.dstId)); ctx.sendToDst(Array(ctx.srcId))
+      }, _ ++ _)
+    val gA: Graph[(VertexData, Array[Long]), Int] =
+      graph.outerJoinVertices(commNbors)((_, vd, a) =>
+        (vd, a.map(_.sorted).getOrElse(Array.empty[Long])))
+    // intra-community triangles per vertex (`:462-507`): per
+    // same-community edge, intersect the two same-community
+    // neighborhoods; each triangle is seen once per incident edge,
+    // hence /2. Endpoints cannot appear in an intersection (no
+    // self-loops).
+    val commTri: VertexRDD[Int] = gA.aggregateMessages[Int](
+      ctx => if (ctx.srcAttr._1.cId == ctx.dstAttr._1.cId) {
+        val c = SortedIntersect.count(ctx.srcAttr._2, ctx.dstAttr._2)
+        ctx.sendToSrc(c); ctx.sendToDst(c)
+      }, _ + _)
+    val sumWcc = gA.outerJoinVertices(commTri)((_, va, tcOpt) =>
+        (va._1, va._2.length, tcOpt.getOrElse(0) / 2))
+      .vertices
+      .map { case (_, (vd, vtC, tC)) =>
+        WCCMetric.computeWccV(vd, bStats.value(vd.cId), vtC, tC)
+      }
+      .sum()
     bStats.destroy()
     sumWcc / vertexCount
   }

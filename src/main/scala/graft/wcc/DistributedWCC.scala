@@ -1,7 +1,6 @@
 package graft.wcc
 
 import org.apache.spark.graphx._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Batch DWCC community detection (SURVEY.md §3.1): preprocess
@@ -70,7 +69,7 @@ object DistributedWCC {
       maxPregelIterations: Int = 50,
       precomputedStats: Option[TriangleStats.Result] = None,
       precomputedInit: Option[Graph[VertexData, Int]] = None,
-      precomputedSeedEval: Option[(Option[VertexRDD[CommunityOps.NbrSurface]],
+      precomputedSeedEval: Option[(VertexRDD[CommunityOps.NbrSurface],
         Map[Long, CommunityData], Double)] = None): Output = {
     val vertexCount = graph.numVertices
     // failure-path sweep (review r17): precomputed inputs predate the
@@ -114,28 +113,18 @@ object DistributedWCC {
         // scalar score, so a failure BEFORE refinement consumed it
         // must release it here (review r17)
         WccUtil.quietly(precomputedSeedEval.foreach(
-          _._1.foreach(_.unpersist(blocking = false))))
+          _._1.unpersist(blocking = false)))
         WccUtil.quietly(
           WccUtil.sweepNewCaches(graph.vertices.sparkContext, sweepBase))
         throw t
     }
   }
 
-  /** Refinement loop (G5, reference `DistributedWCC.scala:260-329`):
-   * movements are accepted while global WCC improves; an improvement
-   * above Threshold resets the retry budget.
-   *
-   * Each iteration computes the per-vertex community-degree maps ONCE
-   * and derives BOTH the movement decisions and the community stats
-   * from them (`statsFromDegrees` — integer-exact, value-identical to
-   * the two-scan form, trajectory unchanged), so an iteration costs
-   * one degree pass plus the two-pass WCC evaluation. */
-  /** TEST-ONLY failure seam: when >= 0, the refinement loops throw
-   * at the matching point — 0 = right after the compact path's
-   * iteration-0 seed evaluation, k >= 1 = the top of generation k
-   * (compact) / after movement-graph k is cached (maps) — letting
-   * the leak specs prove the thrown-through release coverage on
-   * every stage of both strategies. Never set outside specs. */
+  /** TEST-ONLY failure seam: when >= 0, the refinement loop throws
+   * at the matching point — 0 = right after the iteration-0 seed
+   * evaluation, k >= 1 = the top of generation k — letting the leak
+   * specs prove the thrown-through release coverage on every stage.
+   * Never set outside specs. */
   @volatile private[wcc] var testFailAtIter: Int = -1
 
   /** Test seams for RefineLoopGuardSpec (VERDICT r18 item 4): an
@@ -150,61 +139,68 @@ object DistributedWCC {
   @volatile private[wcc] var testScaffoldDelayMs: Long = 0L
   @volatile private[wcc] var lastScaffoldOverlapped: Boolean = false
 
+  /** Iteration-0 evaluation of a seed partition — THE evaluation the
+   * refinement loop starts from: the fused [[CommunityOps.nbrSurfaces]]
+   * exchange (cached; the caller, or the refinement it is handed to,
+   * owns the release) plus the concurrent stats/WCC evaluation over
+   * it. Exposed so a caller verifying the seed partition (the seeding
+   * value check) can share it with [[run]] via `precomputedSeedEval`
+   * instead of evaluating twice. */
+  private[graft] def seedEvaluation(initGraph: Graph[VertexData, Int],
+      vertexCount: Long): (VertexRDD[CommunityOps.NbrSurface],
+        Map[Long, CommunityData], Double) = {
+    val surf = CommunityOps.nbrSurfaces(initGraph)
+    surf.cache()
+    val (cs, w) = CommunityOps.evalSurfacesConcurrent(initGraph, surf,
+      vertexCount)
+    (surf, cs, w)
+  }
+
+  /** One movement step (reference `DistributedWCC.scala:331-365`),
+   * shared by the batch and the incremental refinement: the stats
+   * are broadcast, every vertex with a surface takes its
+   * [[bestMovementCompact]] decision, and the moved graph is cached
+   * (not materialized — the caller's next action does that). The
+   * returned accumulator counts vertices whose community changed;
+   * task retries can only inflate a nonzero count, never fabricate
+   * one from a true zero. */
+  private[wcc] def movementStep(graph: Graph[VertexData, Int],
+      surf: VertexRDD[CommunityOps.NbrSurface], stats: Map[Long, CommunityData],
+      globalCC: Double, vertexCount: Long, accName: String)
+      : (Graph[VertexData, Int], org.apache.spark.util.LongAccumulator) = {
+    val sc = graph.vertices.sparkContext
+    val bStats = sc.broadcast(stats)
+    val movedAcc = sc.longAccumulator(accName)
+    val moved = graph.outerJoinVertices(surf) { (_, vd, sOpt) =>
+      sOpt match {
+        case Some(s) =>
+          val out = bestMovementCompact(vd, s.cIds, s.counts, bStats.value,
+            globalCC, vertexCount)
+          if (out.cId != vd.cId) movedAcc.add(1L)
+          out
+        case None => vd
+      }
+    }
+    moved.cache()
+    (moved, movedAcc)
+  }
+
+  /** Refinement loop (G5, reference `DistributedWCC.scala:260-329`):
+   * movements are accepted while global WCC improves; an improvement
+   * above Threshold resets the retry budget.
+   *
+   * Each generation runs ONE fused exchange producing the compact
+   * [[CommunityOps.NbrSurface]], which feeds the next movement step,
+   * the derived community stats AND the WCC evaluation. There is one
+   * loop for every graph: hub safety lives in the evaluation's
+   * skew-adaptive intersection kernel, not in a second strategy. */
   private[wcc] def refinePartition(initGraph: Graph[VertexData, Int], vertexCount: Long,
       maxRetries: Int,
-      seedEval: Option[(Option[VertexRDD[CommunityOps.NbrSurface]],
+      seedEval: Option[(VertexRDD[CommunityOps.NbrSurface],
         Map[Long, CommunityData], Double)] = None): (Graph[VertexData, Int], Map[Long, CommunityData], Double, Double) = {
     // globalCC = (sum of cc over PRUNED vertices) / ORIGINAL count
     // (reference `:261-262` — the sum runs on the optimized graph).
     val globalCC = initGraph.vertices.map(_._2.cc).sum() / vertexCount
-
-    // Strategy choice, once per refinement: on a hub-free graph
-    // (internal degrees bounded by max degree <= threshold) each
-    // iteration runs ONE fused exchange producing the compact
-    // NbrSurface, which feeds movements, derived stats AND the WCC
-    // evaluation. Hub graphs keep the Map-based path with its
-    // per-iteration oriented escape. Both paths are value-identical,
-    // so the choice cannot move the trajectory.
-    if (hubFreeStrategy(initGraph))
-      refineCompact(initGraph, vertexCount, maxRetries, globalCC,
-        seedEval.collect { case (Some(s), cs, w) => (s, cs, w) })
-    else refineWithMaps(initGraph, vertexCount, maxRetries, globalCC,
-      seedEval.map { case (_, cs, w) => (cs, w) })
-  }
-
-  /** The compact-vs-maps strategy predicate — ONE definition shared
-   * by the refinement loop and [[seedEvaluation]], so the two can
-   * never choose different evaluation machinery for the same graph. */
-  private def hubFreeStrategy(g: Graph[VertexData, Int]): Boolean =
-    g.degrees.map(_._2).fold(0)(math.max) <= TriangleStats.HubDegreeThreshold
-
-  /** Iteration-0 evaluation of a seed partition — THE evaluation the
-   * refinement loop starts from, routed through the same strategy
-   * predicate. Exposed so a caller verifying the seed partition (the
-   * seeding value check) can share it with [[run]] via
-   * `precomputedSeedEval` instead of evaluating twice. The surface
-   * RDD is present exactly on the hub-free compact path. */
-  private[graft] def seedEvaluation(initGraph: Graph[VertexData, Int],
-      vertexCount: Long): (Option[VertexRDD[CommunityOps.NbrSurface]],
-        Map[Long, CommunityData], Double) =
-    if (hubFreeStrategy(initGraph)) {
-      val surf = CommunityOps.nbrSurfaces(initGraph)
-      surf.cache()
-      val (cs, w) = CommunityOps.evalSurfacesConcurrent(initGraph, surf,
-        vertexCount)
-      (Some(surf), cs, w)
-    } else {
-      // statsFromDegrees / computeCommunityStats are integer-exact
-      // equals (PropertySpec), so handing these to refineWithMaps
-      // cannot move the trajectory either
-      val cs = CommunityOps.computeCommunityStats(initGraph)
-      (None, cs, CommunityOps.computeGlobalWCC(initGraph, cs, vertexCount))
-    }
-
-  private def refineCompact(initGraph: Graph[VertexData, Int], vertexCount: Long,
-      maxRetries: Int, globalCC: Double,
-      seedEval: Option[(VertexRDD[CommunityOps.NbrSurface],
-        Map[Long, CommunityData], Double)] = None): (Graph[VertexData, Int], Map[Long, CommunityData], Double, Double) = {
     // entry snapshot for the failure-path sweep (leak-spec finding,
     // r17): a precomputed seed surface and the init graph predate
     // this, so the sweep can never touch caller-owned caches
@@ -212,18 +208,13 @@ object DistributedWCC {
     var bestPartition = initGraph
     // The iteration-0 evaluation of the seed partition may arrive
     // precomputed (GraphQueries memoizes it so the seeding value
-    // check shares it). It MUST be the result of this exact
-    // surfaces-path computation on the same seed graph — identical
-    // code on identical input — so the refinement trajectory is
-    // bit-unchanged; the surf may be unpersisted below like any
-    // superseded generation (callers keep only the scalar score).
+    // check shares it). It MUST be [[seedEvaluation]] of the same
+    // seed graph — identical code on identical input — so the
+    // refinement trajectory is bit-unchanged; the surf may be
+    // unpersisted below like any superseded generation (callers keep
+    // only the scalar score).
     var (bestSurf, bestCs, bestWcc) = try {
-      val seed = seedEval.getOrElse {
-        val s = CommunityOps.nbrSurfaces(bestPartition); s.cache()
-        val (cs, w) = CommunityOps.evalSurfacesConcurrent(bestPartition, s,
-          vertexCount)
-        (s, cs, w)
-      }
+      val seed = seedEval.getOrElse(seedEvaluation(bestPartition, vertexCount))
       if (testFailAtIter == 0)
         throw new RuntimeException("injected test failure after seed evaluation")
       seed
@@ -265,24 +256,12 @@ object DistributedWCC {
     def advance(baseGraph: Graph[VertexData, Int],
         baseSurf: VertexRDD[CommunityOps.NbrSurface],
         baseCs: Map[Long, CommunityData]): Gen = {
-      val bStats = sc.broadcast(baseCs)
       // movement-count telemetry (log-only — never read for control
-      // flow, so task retries inflating it are harmless): sizes the
-      // would-be win of a delta-surface iteration (O(Σdeg(moved))
-      // exchange instead of O(|E|)) against the measured move
-      // profile. See PERF.md round-21.
-      val movedAcc = sc.longAccumulator(s"wcc-moves-gen")
-      val mg = baseGraph.outerJoinVertices(baseSurf) { (_, vd, sOpt) =>
-        sOpt match {
-          case Some(s) =>
-            val out = bestMovementCompact(vd, s.cIds, s.counts, bStats.value,
-              globalCC, vertexCount)
-            if (out.cId != vd.cId) movedAcc.add(1L)
-            out
-          case None => vd
-        }
-      }
-      mg.cache()
+      // flow): sizes the would-be win of a delta-surface iteration
+      // (O(Σdeg(moved)) exchange instead of O(|E|)) against the
+      // measured move profile. See PERF.md round-21.
+      val (mg, movedAcc) = movementStep(baseGraph, baseSurf, baseCs,
+        globalCC, vertexCount, "wcc-moves-gen")
       iter += 1
       if (iter % 8 == 0 && sc.getCheckpointDir.isDefined) mg.checkpoint()
       val ms = CommunityOps.nbrSurfaces(mg)
@@ -398,104 +377,6 @@ object DistributedWCC {
     bestSurf.unpersist(blocking = false)
 
     (bestPartition, bestCs, bestWcc, globalCC)
-  }
-
-  private def refineWithMaps(initGraph: Graph[VertexData, Int], vertexCount: Long,
-      maxRetries: Int, globalCC: Double,
-      seedEval: Option[(Map[Long, CommunityData], Double)] = None): (Graph[VertexData, Int], Map[Long, CommunityData], Double, Double) = {
-    // entry snapshot for the failure-path sweep — same contract as
-    // the compact path (review r17: the hub-graph strategy needs the
-    // identical thrown-through hygiene; a mid-refinement failure must
-    // not pin the degree maps, candidate generations, or GraphX
-    // self-persists for the session). Caller-owned inputs (initGraph,
-    // the memoized seed stats) predate the snapshot and survive.
-    val sweepBase = WccUtil.cacheSnapshot(initGraph.vertices.sparkContext)
-    var bestPartition = initGraph
-    try {
-    var bestDeg = CommunityOps.vertexCommunityDegrees(bestPartition)
-    bestDeg.cache()
-    var bestCs = seedEval.map(_._1).getOrElse(
-      CommunityOps.statsFromDegrees(bestPartition, bestDeg))
-    var bestWcc = seedEval.map(_._2).getOrElse(
-      CommunityOps.computeGlobalWCC(bestPartition, bestCs, vertexCount))
-
-    var foundNewBestPartition = true
-    var retriesLeft = maxRetries
-    var iter = 0
-    do {
-      val t0 = System.currentTimeMillis()
-      val movementGraph = getBestMovements(bestPartition, bestDeg, bestCs,
-        globalCC, vertexCount)
-      movementGraph.cache()
-      iter += 1
-      if (iter == testFailAtIter)
-        throw new RuntimeException(s"injected test failure at iter $iter")
-      // truncate lineage periodically: each accepted iteration chains
-      // joins + aggregations and the DAG must not compound over 5-50
-      // iterations (SURVEY.md §7.3). localCheckpoint is unusable here
-      // (it upgrades the storage level, which VertexRDD forbids), so
-      // use a reliable checkpoint when a dir is configured.
-      val sc0 = movementGraph.vertices.sparkContext
-      if (iter % 8 == 0 && sc0.getCheckpointDir.isDefined) movementGraph.checkpoint()
-
-      val movedDeg = CommunityOps.vertexCommunityDegrees(movementGraph)
-      movedDeg.cache()
-      val newCs = CommunityOps.statsFromDegrees(movementGraph, movedDeg)
-      val newWcc = CommunityOps.computeGlobalWCC(movementGraph, newCs, vertexCount)
-      retriesLeft -= 1
-      System.err.println(s"[graft-wcc] refine iter $iter: " +
-        s"${System.currentTimeMillis() - t0} ms, wcc=$newWcc (best=$bestWcc)")
-
-      if (newWcc > bestWcc) {
-        if (newWcc / bestWcc - 1 > Threshold) retriesLeft = maxRetries
-        val prev = bestPartition
-        val prevDeg = bestDeg
-        bestPartition = movementGraph
-        bestDeg = movedDeg
-        bestWcc = newWcc
-        bestCs = newCs
-        prevDeg.unpersist(blocking = false)
-        if (prev ne initGraph) {
-          prev.unpersistVertices(blocking = false)
-          prev.edges.unpersist(blocking = false)
-        }
-      } else {
-        foundNewBestPartition = false
-        movedDeg.unpersist(blocking = false)
-        movementGraph.unpersistVertices(blocking = false)
-        movementGraph.edges.unpersist(blocking = false)
-      }
-    } while (foundNewBestPartition && retriesLeft > 0)
-    bestDeg.unpersist(blocking = false)
-
-    (bestPartition, bestCs, bestWcc, globalCC)
-    } catch {
-      case t: Throwable =>
-        // everything registered since entry is this call's garbage on
-        // failure; the accepted bestPartition (when not the caller's
-        // init graph) postdates the snapshot, so the sweep reaches it
-        // and the degree maps without naming them
-        WccUtil.quietly(
-          WccUtil.sweepNewCaches(initGraph.vertices.sparkContext, sweepBase))
-        throw t
-    }
-  }
-
-  /** One movement step (reference `DistributedWCC.scala:331-365`):
-   * per-vertex neighbor-community degree maps + broadcast community
-   * stats -> local REMOVE/TRANSFER/STAY decision. */
-  private def getBestMovements(graph: Graph[VertexData, Int],
-      vcDegrees: org.apache.spark.graphx.VertexRDD[Map[Long, Int]],
-      stats: Map[Long, CommunityData], globalCC: Double,
-      vertexCount: Long): Graph[VertexData, Int] = {
-    val sc = graph.vertices.sparkContext
-    val bStats = sc.broadcast(stats)
-    graph.outerJoinVertices(vcDegrees) { (_, vd, degOpt) =>
-      degOpt match {
-        case Some(deg) => bestMovement(vd, deg, bStats.value, globalCC, vertexCount)
-        case None      => vd
-      }
-    }
   }
 
   /** F7 (reference `DistributedWCC.scala:368-405`): REMOVE iff

@@ -1,9 +1,9 @@
 package graft.wcc
 
+import graft.graph.SortedIntersect
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Incremental DWCC ("IDWCC", SURVEY.md §3.3): given a previously
@@ -284,15 +284,11 @@ object IncrementalWCC {
         val newEdge = nw.contains(ctx.srcId) || nw.contains(ctx.dstId)
         if (newEdge || borderEdge) {
           // skewed pairs (hub-leaf edges dominate a power-law batch)
-          // gallop: scan the SMALLER sorted array and advance in the
-          // larger by doubling steps + binary search — O(min * log
-          // max) instead of the merge scan's O(min + max), which on
-          // a degree-D hub paid O(D) per incident edge = O(D²) per
-          // hub (the skew probe's super-linear wall term). Balanced
-          // pairs keep the linear merge scan. Identical commons
-          // either way — the counts are bit-equal.
+          // gallop inside the kernel: O(min * log max) instead of the
+          // merge scan's O(D) per incident edge of a degree-D hub
+          // (the skew probe's super-linear wall term)
           var c = 0; var newVt = true
-          visitCommons(ctx.srcAttr._2, ctx.dstAttr._2) { x =>
+          SortedIntersect.visitCommons(ctx.srcAttr._2, ctx.dstAttr._2) { x =>
             if (x != ctx.srcId && x != ctx.dstId) {
               if (newEdge || nw.contains(x)) c += 1 else newVt = false
             }
@@ -343,7 +339,7 @@ object IncrementalWCC {
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
         @inline def canon(a: Long, b: Long): (Long, Long) =
           (math.min(a, b), math.max(a, b))
-        visitCommons(nu, nv) { w =>
+        SortedIntersect.visitCommons(nu, nv) { w =>
           // w == u / w == v impossible: no self-loops in either region
           out += canon(u, v); out += canon(u, w); out += canon(v, w)
         }
@@ -431,154 +427,50 @@ object IncrementalWCC {
    * consumed it. */
   private[wcc] def refinePartition(initGraph: Graph[VertexData, Int],
       globalCC: Double, vertexCount: Long): Graph[VertexData, Int] = {
-    val sc = initGraph.vertices.sparkContext
-    // Same strategy split as the batch refinement: on hub-free
-    // graphs one fused exchange per iteration feeds BOTH the
-    // movement join and the (integer-exact, value-identical)
-    // derived community stats; hub graphs keep the Map path.
-    val hubFree = initGraph.degrees.map(_._2).fold(0)(math.max) <=
-      TriangleStats.HubDegreeThreshold
-    if (hubFree) {
-      var curSurf = CommunityOps.nbrSurfaces(initGraph)
-      curSurf.cache()
-      var bestCs = CommunityOps.statsFromSurfaces(initGraph, curSurf)
-      var g = initGraph
-      var it = 0
-      var quiesced = false
-      do {
-        it += 1
-        val bStats = sc.broadcast(bestCs)
-        val movedAcc = sc.longAccumulator(s"idwcc-moves-$it")
-        val moved = g.outerJoinVertices(curSurf) { (_, vd, sOpt) =>
-          sOpt match {
-            case Some(s) =>
-              // the reference restricts candidates to stats-present
-              // communities (`:372`), which is vacuous here: stats
-              // are recomputed from this same graph, so every
-              // neighbor cId is present — pass the full map.
-              val out = DistributedWCC.bestMovementCompact(vd, s.cIds, s.counts,
-                bStats.value, globalCC, vertexCount)
-              if (out.cId != vd.cId) movedAcc.add(1L)
-              out
-            case None => vd
-          }
-        }
-        moved.cache()
-        if (it == 5) {
-          // dead-work skip: no 6th movement consumes these surfaces/
-          // stats — materialize the join (populating the accumulator)
-          // with a count instead of the exchange + collect
-          moved.vertices.count()
-          curSurf.unpersist(blocking = false)
-        } else {
-          val movedSurf = CommunityOps.nbrSurfaces(moved)
-          movedSurf.cache()
-          bestCs = CommunityOps.statsFromSurfaces(moved, movedSurf)
-          curSurf.unpersist(blocking = false)
-          curSurf = movedSurf
-        }
-        if (g ne initGraph) {
-          g.unpersistVertices(blocking = false)
-          g.edges.unpersist(blocking = false)
-        }
-        g = moved
-        // the action above (stats collect or the final count)
-        // materialized the joined vertices, so the accumulator is
-        // populated by the time it is read
-        quiesced = movedAcc.value == 0L
-        if (quiesced && it < 5)
-          System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
-      } while (it < 5 && !quiesced)
-      if (it < 5) curSurf.unpersist(blocking = false)
-      g
-    } else {
-      var curDeg = CommunityOps.vertexCommunityDegrees(initGraph)
-      curDeg.cache()
-      var bestCs = CommunityOps.statsFromDegrees(initGraph, curDeg)
-      var g = initGraph
-      var it = 0
-      var quiesced = false
-      do {
-        it += 1
-        val bStats = sc.broadcast(bestCs)
-        val movedAcc = sc.longAccumulator(s"idwcc-moves-$it")
-        val moved = g.outerJoinVertices(curDeg) { (_, vd, degOpt) =>
-          degOpt match {
-            case Some(deg) =>
-              val out = DistributedWCC.bestMovement(vd, deg, bStats.value,
-                globalCC, vertexCount)
-              if (out.cId != vd.cId) movedAcc.add(1L)
-              out
-            case None => vd
-          }
-        }
-        moved.cache()
-        if (it == 5) {
-          // same dead-work skip as the compact path
-          moved.vertices.count()
-          curDeg.unpersist(blocking = false)
-        } else {
-          val movedDeg = CommunityOps.vertexCommunityDegrees(moved)
-          movedDeg.cache()
-          bestCs = CommunityOps.statsFromDegrees(moved, movedDeg)
-          curDeg.unpersist(blocking = false)
-          curDeg = movedDeg
-        }
-        if (g ne initGraph) {
-          g.unpersistVertices(blocking = false)
-          g.edges.unpersist(blocking = false)
-        }
-        g = moved
-        quiesced = movedAcc.value == 0L
-        if (quiesced && it < 5)
-          System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
-      } while (it < 5 && !quiesced)
-      if (it < 5) curDeg.unpersist(blocking = false)
-      g
-    }
-  }
-
-  /** Visits every common element of two SORTED long arrays, in
-   * ascending order, exactly as the classic two-pointer merge scan
-   * does (with duplicates, the visit count is the merge-pairing
-   * count — pinned by VisitCommonsSpec's property test). Skewed
-   * pairs (sizes differing >16x — hub-leaf edges dominate a
-   * power-law batch) gallop instead: scan the SMALLER array and
-   * advance in the larger by doubling probes + a binary search,
-   * O(min * log max) instead of the merge scan's O(min + max),
-   * which on a degree-D hub paid O(D) per incident edge = O(D²)
-   * per hub (the skew-idwcc probe's super-linear wall term). */
-  private[wcc] def visitCommons(sa: Array[Long], sb: Array[Long])(
-      visit: Long => Unit): Unit = {
-    val swap = sa.length > sb.length
-    val a = if (swap) sb else sa
-    val b = if (swap) sa else sb
-    if (a.length.toLong * 16 < b.length) {
-      var i = 0; var lo = 0
-      while (i < a.length && lo < b.length) {
-        val x = a(i)
-        // doubling probe from lo, then binary search the window
-        var step = 1; var hi = lo
-        while (hi < b.length && b(hi) < x) { lo = hi + 1; hi = lo + step - 1; step *= 2 }
-        if (hi >= b.length) hi = b.length - 1
-        // invariant: b(lo-1) < x (if lo > 0); answer position in [lo, hi]
-        var l = lo; var h = hi
-        while (l < h) {
-          val m = (l + h) >>> 1
-          if (b(m) < x) l = m + 1 else h = m
-        }
-        if (l < b.length && b(l) == x) { visit(x); lo = l + 1 }
-        else lo = l
-        i += 1
+    // one fused exchange per iteration feeds BOTH the movement step
+    // and the (integer-exact) derived community stats — on every
+    // graph, hubs included
+    var curSurf = CommunityOps.nbrSurfaces(initGraph)
+    curSurf.cache()
+    var bestCs = CommunityOps.statsFromSurfaces(initGraph, curSurf)
+    var g = initGraph
+    var it = 0
+    var quiesced = false
+    do {
+      it += 1
+      // the reference restricts candidates to stats-present
+      // communities (`:372`), which is vacuous here: stats are
+      // recomputed from this same graph, so every neighbor cId is
+      // present — the movement step gets the full map.
+      val (moved, movedAcc) = DistributedWCC.movementStep(g, curSurf, bestCs,
+        globalCC, vertexCount, s"idwcc-moves-$it")
+      if (it == 5) {
+        // dead-work skip: no 6th movement consumes these surfaces/
+        // stats — materialize the join (populating the accumulator)
+        // with a count instead of the exchange + collect
+        moved.vertices.count()
+        curSurf.unpersist(blocking = false)
+      } else {
+        val movedSurf = CommunityOps.nbrSurfaces(moved)
+        movedSurf.cache()
+        bestCs = CommunityOps.statsFromSurfaces(moved, movedSurf)
+        curSurf.unpersist(blocking = false)
+        curSurf = movedSurf
       }
-    } else {
-      var i = 0; var j = 0
-      while (i < a.length && j < b.length) {
-        val x = a(i); val y = b(j)
-        if (x == y) { visit(x); i += 1; j += 1 }
-        else if (x < y) i += 1 else j += 1
+      if (g ne initGraph) {
+        g.unpersistVertices(blocking = false)
+        g.edges.unpersist(blocking = false)
       }
-    }
+      g = moved
+      // the action above (stats collect or the final count)
+      // materialized the joined vertices, so the accumulator is
+      // populated by the time it is read
+      quiesced = movedAcc.value == 0L
+      if (quiesced && it < 5)
+        System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
+    } while (it < 5 && !quiesced)
+    if (it < 5) curSurf.unpersist(blocking = false)
+    g
   }
 
   private def timed[T](phase: String)(f: => T): T = {

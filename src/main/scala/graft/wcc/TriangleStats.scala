@@ -1,7 +1,7 @@
 package graft.wcc
 
+import graft.graph.SortedIntersect
 import org.apache.spark.graphx._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Triangle statistics + preprocessing prune (G1/G2/G3/P4 in
@@ -38,18 +38,6 @@ import org.apache.spark.storage.StorageLevel
  * (`DistributedWCC.scala:111`).
  */
 object TriangleStats {
-
-  /** Count of common elements of two sorted arrays. */
-  private[wcc] def sortedIntersectCount(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var j = 0; var c = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
 
   final case class Result(
       /** pruned triangle-core graph; vertex attr has t, vt filled,
@@ -114,55 +102,15 @@ object TriangleStats {
     if (maxDegree(graph) <= HubDegreeThreshold)
       fullAdj(graph).triplets.map { t =>
         ((math.min(t.srcId, t.dstId), math.max(t.srcId, t.dstId)),
-          sortedIntersectCount(t.srcAttr, t.dstAttr))
+          SortedIntersect.count(t.srcAttr, t.dstAttr))
       }
     else orientedAdj(graph).triplets.flatMap { t =>
-      val a = t.srcAttr; val b = t.dstAttr
       val s = t.srcId; val d = t.dstId
       val out = scala.collection.mutable.ArrayBuffer.empty[((Long, Long), Int)]
-      var i = 0; var j = 0
-      while (i < a.length && j < b.length) {
-        val x = a(i); val y = b(j)
-        if (x == y) {
-          out += (((math.min(s, d), math.max(s, d)), 1))
-          out += (((math.min(s, x), math.max(s, x)), 1))
-          out += (((math.min(d, x), math.max(d, x)), 1))
-          i += 1; j += 1
-        } else if (x < y) i += 1
-        else j += 1
-      }
-      out
-    }.reduceByKey(_ + _)
-  }
-
-  /** Per-VERTEX triangle counts (t), vertices in no triangle absent.
-   * Same adaptive split as [[edgeSupport]]: per-edge intersections
-   * summed per endpoint (each triangle seen from two incident edges,
-   * hence /2) for hub-free graphs; the oriented once-per-triangle
-   * enumeration crediting all three vertices (no halving) beyond the
-   * hub threshold. Values are identical. */
-  private[wcc] def vertexTriangles[V: scala.reflect.ClassTag](
-      graph: Graph[V, _]): org.apache.spark.rdd.RDD[(Long, Int)] = {
-    if (maxDegree(graph) <= HubDegreeThreshold) {
-      val g = fullAdj(graph)
-      g.aggregateMessages[Int](
-        ctx => {
-          val c = sortedIntersectCount(ctx.srcAttr, ctx.dstAttr)
-          if (c > 0) { ctx.sendToSrc(c); ctx.sendToDst(c) }
-        }, _ + _)
-        .map { case (id, twoT) => (id, twoT / 2) }
-        .filter(_._2 > 0)
-    } else orientedAdj(graph).triplets.flatMap { t =>
-      val a = t.srcAttr; val b = t.dstAttr
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-      var i = 0; var j = 0
-      while (i < a.length && j < b.length) {
-        val x = a(i); val y = b(j)
-        if (x == y) {
-          out += ((t.srcId, 1)); out += ((t.dstId, 1)); out += ((x, 1))
-          i += 1; j += 1
-        } else if (x < y) i += 1
-        else j += 1
+      SortedIntersect.visitCommons(t.srcAttr, t.dstAttr) { x =>
+        out += (((math.min(s, d), math.max(s, d)), 1))
+        out += (((math.min(s, x), math.max(s, x)), 1))
+        out += (((math.min(d, x), math.max(d, x)), 1))
       }
       out
     }.reduceByKey(_ + _)

@@ -126,7 +126,7 @@ case class HammingDistance(left: Expression, right: Expression)
  * arrays MUST be sorted ascending and duplicate-free (what
  * `sort_array(collect_set/list distinct)` produces) — the result is
  * undefined otherwise, matching the contract of the RDD-side
- * `TriangleStats.sortedIntersectCount` this mirrors.
+ * `graft.graph.SortedIntersect.count` this mirrors.
  */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

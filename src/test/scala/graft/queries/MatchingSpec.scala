@@ -90,7 +90,9 @@ class MatchingSpec extends SparkSpec {
       (0L, 999999999999L), (7L, 8L), (70L, 80L)) ++
       (1 to 400).map { _ =>
         val a = rnd(1000000000000L); val b = rnd(1000000000000L)
-        if (a == b) (a, b + 1) else (math.min(a, b), math.max(a, b))
+        // clamped so both ids stay inside the id < 1e12 domain
+        if (a == b) { val lo = math.min(a, 999999999998L); (lo, lo + 1) }
+        else (math.min(a, b), math.max(a, b))
       }).distinct
     val withKeys = edges.map { case (u, v) =>
       val (w1, w2) = packed(u, v)

@@ -57,12 +57,12 @@ object IncrDump {
       .toDF("src", "dst").distinct()
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/core_edges")
 
-    // fixed-5 refinement, one dump per iteration (Map path — value-
-    // identical to refinePartition's compact path)
+    // fixed-5 refinement, one dump per iteration (Map form — value-
+    // identical to refinePartition's surface form)
     var g = init
     for (it <- 1 to 5) {
       val deg = CommunityOps.vertexCommunityDegrees(g); deg.cache()
-      val cs = CommunityOps.statsFromDegrees(g, deg)
+      val cs = CommunityOps.computeCommunityStats(g)
       val bStats = g.vertices.sparkContext.broadcast(cs)
       val moved = g.outerJoinVertices(deg) { (_, vd, degOpt) =>
         degOpt match {

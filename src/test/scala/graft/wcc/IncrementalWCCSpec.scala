@@ -46,84 +46,9 @@ class IncrementalWCCSpec extends SparkSpec {
     assert(out.stats === state.stats)
   }
 
-  test("testStream on email-Eu-core: full driver loop terminates with sane output") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
-    val result = IncrementalWCC.testStream(spark, canon, 0.8, 1)
-    val rows = result.collect()
-    // vertex universe = the bulk graph's vertices (both endpoints
-    // below splitVertex), per the reference's graft-back quirk
-    assert(rows.length > 0)
-    // communities may be centered on merged-graph vertices OUTSIDE the
-    // returned bulk universe (reference graft-back quirk) — every cid
-    // is some vertex of the full canonical graph
-    val allIds = canon.select("src").union(canon.select("dst"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    assert(rows.forall(r => allIds.contains(r.getLong(1))))
-    // deterministic across runs
-    val again = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ===
-      again.map(r => (r.getLong(0), r.getLong(1))).toSeq)
-  }
 
-  test("testStream with derived bulk stats equals the from-scratch replay") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
-    val plain = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val adj = graft.graph.GraphAlgs.weightedAdjacency(EdgeOps.symmetrize(canon))
-    val derived = IncrementalWCC.testStream(spark, canon, 0.8, 1,
-      bulkStatsFor = Some(split =>
-        TriangleStats.restrictedResult(adj, canon, split))).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(derived === plain)
-  }
 
-  test("delta triangle flags equal the from-scratch merged-graph support flags") {
-    // email-Eu-core, reference split: bulk = both endpoints < 0.8*maxId
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
-    val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
-    val split = math.floor(maxVertex * 0.8)
-    val bulkEdges = canon.where(s"src < $split and dst < $split").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val state = IncrementalWCC.prepare(
-      Graph.fromEdges(bulkEdges, 0)
-        .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
-    assert(state.bulkFlagged.isDefined)
-    val m = IncrementalWCC.merge(state, batchRdd)
-    val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
-      .filter(_._2 > 0).map(_._1).collect().toSet
-    val incremental = state.bulkFlagged.get
-      .union(IncrementalWCC.deltaFlags(batchRdd, m.touchedNbrs))
-      .distinct().collect().toSet
-    assert(incremental === fromScratch)
-  }
 
-  test("run with bulkFlagged emits the same labels as the from-scratch path") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
-    val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
-    val split = math.floor(maxVertex * 0.8)
-    val bulkEdges = canon.where(s"src < $split and dst < $split").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val state = IncrementalWCC.prepare(
-      Graph.fromEdges(bulkEdges, 0)
-        .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
-    // force the delta path regardless of the adaptive volume
-    // crossover (this fixture's 0.8-split batch is far from micro)
-    val fast = IncrementalWCC.run(state, batchRdd, releaseInput = false,
-      deltaFlagMaxVolumeFraction = Double.PositiveInfinity)
-      .graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
-    val slow = IncrementalWCC.run(state.copy(bulkFlagged = None), batchRdd,
-      releaseInput = false)
-      .graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
-    assert(fast === slow)
-  }
 
   test("deltaVolume prices each batch edge at the sum of its endpoint degrees") {
     // star: hub 0 - {1..200}, plus triangle edge (1,2) for nonzero stats
@@ -229,13 +154,131 @@ class IncrementalWCCSpec extends SparkSpec {
     out.graph.edges.unpersist(blocking = false)
   }
 
-  test("testStream with multiple micro-batches runs the full replay loop") {
+  private def testStreamSane(canon: org.apache.spark.sql.DataFrame): Unit = {
+    val result = IncrementalWCC.testStream(spark, canon, 0.8, 1)
+    val rows = result.collect()
+    // vertex universe = the bulk graph's vertices (both endpoints
+    // below splitVertex), per the reference's graft-back quirk
+    assert(rows.length > 0)
+    // communities may be centered on merged-graph vertices OUTSIDE the
+    // returned bulk universe (reference graft-back quirk) — every cid
+    // is some vertex of the full canonical graph
+    val allIds = canon.select("src").union(canon.select("dst"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    assert(rows.forall(r => allIds.contains(r.getLong(1))))
+    // deterministic across runs
+    val again = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      again.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+  }
+
+  test("testStream on email-Eu-core: full driver loop terminates with sane output") {
     val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
     val canon = EdgeOps.canonicalize(raw)
+    testStreamSane(canon)
+  }
+
+  test(s"testStream on ${ParityGraph.Name}: full driver loop terminates with sane output") {
+    testStreamSane(EdgeOps.canonicalize(ParityGraph.load(spark)))
+  }
+
+  private def derivedBulkStatsReplay(canon: org.apache.spark.sql.DataFrame): Unit = {
+    val plain = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val adj = graft.graph.GraphAlgs.weightedAdjacency(EdgeOps.symmetrize(canon))
+    val derived = IncrementalWCC.testStream(spark, canon, 0.8, 1,
+      bulkStatsFor = Some(split =>
+        TriangleStats.restrictedResult(adj, canon, split))).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(derived === plain)
+  }
+
+  test("testStream with derived bulk stats equals the from-scratch replay") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val canon = EdgeOps.canonicalize(raw)
+    derivedBulkStatsReplay(canon)
+  }
+
+  test(s"testStream with derived bulk stats equals the from-scratch replay (${ParityGraph.Name})") {
+    derivedBulkStatsReplay(EdgeOps.canonicalize(ParityGraph.load(spark)))
+  }
+
+  private def deltaFlagsParity(canon: org.apache.spark.sql.DataFrame): Unit = {
+    val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
+    val split = math.floor(maxVertex * 0.8)
+    val bulkEdges = canon.where(s"src < $split and dst < $split").rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
+    val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
+    val state = IncrementalWCC.prepare(
+      Graph.fromEdges(bulkEdges, 0)
+        .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
+    assert(state.bulkFlagged.isDefined)
+    val m = IncrementalWCC.merge(state, batchRdd)
+    val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
+      .filter(_._2 > 0).map(_._1).collect().toSet
+    val incremental = state.bulkFlagged.get
+      .union(IncrementalWCC.deltaFlags(batchRdd, m.touchedNbrs))
+      .distinct().collect().toSet
+    assert(incremental === fromScratch)
+  }
+
+  test("delta triangle flags equal the from-scratch merged-graph support flags") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val canon = EdgeOps.canonicalize(raw)
+    deltaFlagsParity(canon)
+  }
+
+  test(s"delta triangle flags equal the from-scratch merged-graph support flags (${ParityGraph.Name})") {
+    deltaFlagsParity(EdgeOps.canonicalize(ParityGraph.load(spark)))
+  }
+
+  private def bulkFlaggedRunParity(canon: org.apache.spark.sql.DataFrame): Unit = {
+    val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
+    val split = math.floor(maxVertex * 0.8)
+    val bulkEdges = canon.where(s"src < $split and dst < $split").rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
+    val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
+    val state = IncrementalWCC.prepare(
+      Graph.fromEdges(bulkEdges, 0)
+        .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
+    // force the delta path regardless of the adaptive volume
+    // crossover (this fixture's 0.8-split batch is far from micro)
+    val fast = IncrementalWCC.run(state, batchRdd, releaseInput = false,
+      deltaFlagMaxVolumeFraction = Double.PositiveInfinity)
+      .graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
+    val slow = IncrementalWCC.run(state.copy(bulkFlagged = None), batchRdd,
+      releaseInput = false)
+      .graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
+    assert(fast === slow)
+  }
+
+  test("run with bulkFlagged emits the same labels as the from-scratch path") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val canon = EdgeOps.canonicalize(raw)
+    bulkFlaggedRunParity(canon)
+  }
+
+  test(s"run with bulkFlagged emits the same labels as the from-scratch path (${ParityGraph.Name})") {
+    bulkFlaggedRunParity(EdgeOps.canonicalize(ParityGraph.load(spark)))
+  }
+
+  private def multiBatchReplay(canon: org.apache.spark.sql.DataFrame): Unit = {
     val result = IncrementalWCC.testStream(spark, canon, 0.8, 3).collect()
     assert(result.length > 0)
     // same bulk universe as the single-batch variant (graft-back quirk)
     val single = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
     assert(result.map(_.getLong(0)).toSet === single.map(_.getLong(0)).toSet)
+  }
+
+  test("testStream with multiple micro-batches runs the full replay loop") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    val canon = EdgeOps.canonicalize(raw)
+    multiBatchReplay(canon)
+  }
+
+  test(s"testStream with multiple micro-batches runs the full replay loop (${ParityGraph.Name})") {
+    multiBatchReplay(EdgeOps.canonicalize(ParityGraph.load(spark)))
   }
 }

@@ -21,6 +21,11 @@ object ReferenceSim {
   }
   private val ord: Ordering[Msg] = Ordering.by(m => (m.cc, m.vt, m.vId))
 
+  /** a ∩ b, filtering the smaller set: linear per pair even when one
+   * side is a hub's neighborhood. */
+  private def common(a: Set[Long], b: Set[Long]): Set[Long] =
+    if (a.size <= b.size) a.filter(b) else b.filter(a)
+
   final class V(val vId: Long, val t: Int, val vt: Int) {
     var cId: Long = vId
     var changed: Boolean = false
@@ -138,7 +143,7 @@ object ReferenceSim {
       val tC = mutable.Map.empty[Long, Int].withDefaultValue(0)
       und.foreach { case (u, v) =>
         if (part(u) == part(v)) {
-          val c = (commNbors(u) & commNbors(v)).count(w => w != u && w != v)
+          val c = common(commNbors(u), commNbors(v)).count(w => w != u && w != v)
           tC(u) += c; tC(v) += c
         }
       }
@@ -227,12 +232,12 @@ object ReferenceSim {
     def triangleStats(edges: Seq[(Long, Long)]): (Map[Long, (Int, Int)], Map[Long, Seq[Long]]) = {
       val adj = adjacency(edges).map { case (k, v) => k -> v.toSet }
       val stats = adj.map { case (u, ns) =>
-        val t = ns.toSeq.map(v => (adj(v) & ns).size).sum / 2
-        val vt = ns.count(v => (adj(v) & ns).nonEmpty)
+        val t = ns.toSeq.map(v => common(adj(v), ns).size).sum / 2
+        val vt = ns.count(v => common(adj(v), ns).nonEmpty)
         u -> (t, vt)
       }
       val prunedEdges = edges.filter { case (u, v) =>
-        (adj(u) & adj(v)).nonEmpty && stats(u)._1 > 0 && stats(v)._1 > 0
+        common(adj(u), adj(v)).nonEmpty && stats(u)._1 > 0 && stats(v)._1 > 0
       }
       // keep t>0 vertices even if edge-isolated after the prune
       val prunedAdj0 = adjacency(prunedEdges)
@@ -290,7 +295,7 @@ object ReferenceSim {
         val newEdge = nw(u) || nw(v)
         if (newEdge || borderEdge) {
           var c = 0; var newVt = true
-          (nbrs(u) & nbrs(v)).foreach { w =>
+          common(nbrs(u), nbrs(v)).foreach { w =>
             if (w != u && w != v) {
               if (newEdge || nw(w)) c += 1 else newVt = false
             }
@@ -315,7 +320,7 @@ object ReferenceSim {
       // seeded re-partition on the merged pruned graph
       val mPrunedV = mergedState.filter(_._2._1 > 0)
       val mPrunedEdges = merged.filter { case (u, v) =>
-        (mAdj(u) & mAdj(v)).nonEmpty && mPrunedV.contains(u) && mPrunedV.contains(v)
+        common(mAdj(u), mAdj(v)).nonEmpty && mPrunedV.contains(u) && mPrunedV.contains(v)
       }
       val mPrunedAdj0 = adjacency(mPrunedEdges)
       val mPrunedAdj = mPrunedV.keys.map(k => k -> mPrunedAdj0.getOrElse(k, Seq.empty)).toMap
@@ -334,19 +339,23 @@ object ReferenceSim {
 }
 
 class ReferenceSimSpec extends SparkSpec {
+  import GraphFixtures._
 
-  test("distributed initial partition matches the faithful reference simulation (email-Eu-core)") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val g = EdgeOps.toGraph(EdgeOps.canonicalize(raw))
+  /** Pruned-core adjacency + (t, vt) of `g`, the simulator's input. */
+  private def simInput(g: org.apache.spark.graphx.Graph[Int, Int])
+      : (TriangleStats.Result, Map[Long, Seq[Long]], Map[Long, (Int, Int)]) = {
     val tri = TriangleStats.run(g)
-
-    // pruned-graph adjacency + stats for the simulator
-    val adjPairs = tri.pruned.edges.collect()
+    val adj = tri.pruned.edges.collect()
       .flatMap(e => Seq((e.srcId, e.dstId), (e.dstId, e.srcId)))
-    val adj: Map[Long, Seq[Long]] = adjPairs.groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2).toSeq }
-    val stats: Map[Long, (Int, Int)] = tri.pruned.vertices.collect()
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSeq }
+    val stats = tri.pruned.vertices.collect()
       .map { case (id, vd) => id -> (vd.t, vd.vt) }.toMap
+    (tri, adj, stats)
+  }
+
+  private def initialPartitionParity(raw: org.apache.spark.sql.DataFrame): Unit = {
+    val g = EdgeOps.toGraph(EdgeOps.canonicalize(raw))
+    val (tri, adj, stats) = simInput(g)
 
     val simulated = ReferenceSim.initialPartition(adj, stats)
     val distributed = InitialPartition.run(tri.pruned)
@@ -358,15 +367,8 @@ class ReferenceSimSpec extends SparkSpec {
       s"${diffs.size} vertices diverge from the reference simulation, first 10: ${diffs.take(10)}")
   }
 
-  test("full DWCC partition matches the sequential pipeline simulation (email-Eu-core)") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val g = EdgeOps.toGraph(EdgeOps.canonicalize(raw))
-    val tri = TriangleStats.run(g)
-    val adj = tri.pruned.edges.collect()
-      .flatMap(e => Seq((e.srcId, e.dstId), (e.dstId, e.srcId)))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSeq }
-    val stats = tri.pruned.vertices.collect()
-      .map { case (id, vd) => id -> (vd.t, vd.vt) }.toMap
+  private def dwccParity(g: org.apache.spark.graphx.Graph[Int, Int]): Unit = {
+    val (_, adj, stats) = simInput(g)
 
     val simInit = ReferenceSim.initialPartition(adj, stats)
     val simFinal = ReferenceSim.refine(adj, stats, simInit, g.numVertices)
@@ -383,19 +385,39 @@ class ReferenceSimSpec extends SparkSpec {
     }
   }
 
-  test("incremental IDWCC matches the sequential pipeline simulation (email-Eu-core)") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
+  private def idwccParity(canon: org.apache.spark.sql.DataFrame,
+      microBatchCount: Int): Unit = {
     val edges = canon.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-    val simulated = ReferenceSim.incrementalPipeline(edges, 0.8)
-    val distributed = IncrementalWCC.testStream(spark, canon, 0.8, 1)
+    val simulated = ReferenceSim.incrementalPipeline(edges, 0.8, microBatchCount)
+    val distributed = IncrementalWCC.testStream(spark, canon, 0.8, microBatchCount)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
     assert(distributed.keySet === simulated.keySet)
     val diffs = distributed.keys.filter(k => distributed(k) != simulated(k)).toSeq.sorted
     assert(diffs.isEmpty,
       s"${diffs.size} of ${simulated.size} vertices diverge, first 10: ${diffs.take(10)}")
+    if (microBatchCount > 1) {
+      // the multi-batch path is NOT vacuously the single-batch one
+      val single = ReferenceSim.incrementalPipeline(edges, 0.8, microBatchCount = 1)
+      assert(simulated != single,
+        "fixture too small: multi-batch and 1-batch runs coincide, the test exercises nothing")
+    }
+  }
+
+  test("distributed initial partition matches the faithful reference simulation (email-Eu-core)") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    initialPartitionParity(raw)
+  }
+
+  test("full DWCC partition matches the sequential pipeline simulation (email-Eu-core)") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    dwccParity(EdgeOps.toGraph(EdgeOps.canonicalize(raw)))
+  }
+
+  test("incremental IDWCC matches the sequential pipeline simulation (email-Eu-core)") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    idwccParity(EdgeOps.canonicalize(raw), 1)
   }
 
   test("3-micro-batch incremental IDWCC matches the sequential simulation (email-Eu-core)") {
@@ -405,21 +427,37 @@ class ReferenceSimSpec extends SparkSpec {
     // against the bulk universe, and the batch-edge-dropping quirk
     // (each batch merges onto the BULK edge set, never batch 1's)
     val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
-    val edges = canon.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    idwccParity(EdgeOps.canonicalize(raw), 3)
+  }
 
-    val simulated = ReferenceSim.incrementalPipeline(edges, 0.8, microBatchCount = 3)
-    val distributed = IncrementalWCC.testStream(spark, canon, 0.8, 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+  test(s"distributed initial partition matches the faithful reference simulation (${ParityGraph.Name})") {
+    initialPartitionParity(ParityGraph.load(spark))
+  }
 
-    assert(distributed.keySet === simulated.keySet)
-    val diffs = distributed.keys.filter(k => distributed(k) != simulated(k)).toSeq.sorted
-    assert(diffs.isEmpty,
-      s"${diffs.size} of ${simulated.size} vertices diverge, first 10: ${diffs.take(10)}")
-    // and the multi-batch path is NOT vacuously the single-batch one
-    val single = ReferenceSim.incrementalPipeline(edges, 0.8, microBatchCount = 1)
-    assert(simulated != single,
-      "fixture too small: 3-batch and 1-batch runs coincide, the test exercises nothing")
+  test(s"full DWCC partition matches the sequential pipeline simulation (${ParityGraph.Name})") {
+    dwccParity(EdgeOps.toGraph(EdgeOps.canonicalize(ParityGraph.load(spark))))
+  }
+
+  test(s"incremental IDWCC matches the sequential pipeline simulation (${ParityGraph.Name})") {
+    idwccParity(EdgeOps.canonicalize(ParityGraph.load(spark)), 1)
+  }
+
+  test(s"3-micro-batch incremental IDWCC matches the sequential simulation (${ParityGraph.Name})") {
+    idwccParity(EdgeOps.canonicalize(ParityGraph.load(spark)), 3)
+  }
+
+  // a hub above TriangleStats.HubDegreeThreshold: the refinement and
+  // the WCC evaluation run with hub-sized same-community arrays
+  test("full DWCC partition matches the sequential pipeline simulation (hub above the degree threshold)") {
+    assert(hubPath.count(_._1 == 0L) > TriangleStats.HubDegreeThreshold)
+    dwccParity(graphOf(spark, hubPath))
+  }
+
+  test("incremental IDWCC matches the sequential pipeline simulation (hub above the degree threshold)") {
+    import spark.implicits._
+    // the 0.8 split leaves the bulk hub below the threshold; the
+    // merged graph's fixed-5 refinement sees it above
+    idwccParity(hubPath.toDF("src", "dst"), 1)
   }
 
   test("simulation parity on micro-graphs too") {

@@ -19,7 +19,7 @@ import org.scalatest.time.SpanSugar._
  *
  * 2. The scaffold evaluation of generation k runs CONCURRENTLY with
  *    the speculative build of generation k+1
- *    (`DistributedWCC.refineCompact`'s pipelined acceptance loop). A
+ *    (`DistributedWCC.refinePartition`'s pipelined acceptance loop). A
  *    regression that serializes them — inlining the scaffold call or
  *    joining the future before speculating — restores the r16
  *    pre-pipelining critical path. Pinned via an injected scaffold

@@ -12,6 +12,12 @@ object GraphFixtures {
       spark.sparkContext.parallelize(canon.map(e => Edge(e._1, e._2, 1))), 0)
   }
 
+  /** A hub above [[TriangleStats.HubDegreeThreshold]] (vertex 0,
+   * adjacent to 1..10500) plus the path 1-2-...-10500: every path
+   * edge closes a triangle through the hub. */
+  val hubPath: Seq[(Long, Long)] =
+    (1L to 10500L).map(i => (0L, i)) ++ (1L until 10500L).map(i => (i, i + 1))
+
   /** Brute-force per-vertex triangle stats: (t, vt). */
   def bruteTriangles(edges: Seq[(Long, Long)]): Map[Long, (Int, Int)] = {
     val und = edges.filter(e => e._1 != e._2)
@@ -101,15 +107,13 @@ class TriangleStatsSpec extends SparkSpec {
   }
 
   test("sortedIntersectCount") {
-    assert(TriangleStats.sortedIntersectCount(Array(1L, 3L, 5L), Array(2L, 3L, 5L, 7L)) === 2)
-    assert(TriangleStats.sortedIntersectCount(Array.empty[Long], Array(1L)) === 0)
+    assert(graft.graph.SortedIntersect.count(Array(1L, 3L, 5L), Array(2L, 3L, 5L, 7L)) === 2)
+    assert(graft.graph.SortedIntersect.count(Array.empty[Long], Array(1L)) === 0)
   }
 
-  test("restrictedResult equals run() on the restricted email-Eu-core graph") {
+  private def restrictedParity(canon: org.apache.spark.sql.DataFrame): Unit = {
     import graft.graph.EdgeOps
     import org.apache.spark.sql.functions.{col, greatest, max}
-    val canon = EdgeOps.canonicalize(
-      EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv"))
     val maxVertex = canon.agg(max(greatest(col("src"), col("dst"))))
       .head().getLong(0)
     val split = math.floor(maxVertex * 0.8) // the IDWCC harness split
@@ -135,5 +139,17 @@ class TriangleStatsSpec extends SparkSpec {
     val sE = direct.pruned.edges.collect()
       .map(e => ((math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)), e.attr)).toMap
     assert(dE === sE)
+  }
+
+  test("restrictedResult equals run() on the restricted email-Eu-core graph") {
+    import graft.graph.EdgeOps
+    val canon = EdgeOps.canonicalize(
+      EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv"))
+    restrictedParity(canon)
+  }
+
+  test(s"restrictedResult equals run() on the restricted ${ParityGraph.Name} graph") {
+    import graft.graph.EdgeOps
+    restrictedParity(EdgeOps.canonicalize(ParityGraph.load(spark)))
   }
 }

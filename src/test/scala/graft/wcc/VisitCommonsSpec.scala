@@ -1,14 +1,16 @@
 package graft.wcc
 
+import graft.graph.SortedIntersect
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Pins the gallop/merge intersection primitive behind the
-  * incremental merge's delta recount: for ANY pair of sorted long
-  * arrays — including duplicates and the heavily skewed shapes that
-  * select the galloping branch — the visited commons equal the
-  * classic two-pointer merge scan's pairings, in ascending order. */
+/** Pins the gallop/merge intersection kernel behind every RDD-side
+  * triangle count and listing: for ANY pair of sorted long arrays —
+  * including duplicates and the heavily skewed shapes that select
+  * the galloping branch — the visited commons equal the classic
+  * two-pointer merge scan's pairings, in ascending order, and the
+  * counting and collecting forms agree with them. */
 class VisitCommonsSpec extends AnyFunSuite {
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
@@ -30,7 +32,7 @@ class VisitCommonsSpec extends AnyFunSuite {
 
   private def collected(a: Array[Long], b: Array[Long]): Seq[Long] = {
     val out = Seq.newBuilder[Long]
-    IncrementalWCC.visitCommons(a, b)(out += _)
+    SortedIntersect.visitCommons(a, b)(out += _)
     out.result()
   }
 
@@ -39,7 +41,10 @@ class VisitCommonsSpec extends AnyFunSuite {
 
   test("visitCommons == merge scan on random arrays (with duplicates)") {
     forAll(sortedArray, sortedArray) { (a, b) =>
-      assert(collected(a, b) === mergeReference(a, b))
+      val ref = mergeReference(a, b)
+      assert(collected(a, b) === ref)
+      assert(SortedIntersect.count(a, b) === ref.size)
+      assert(SortedIntersect.commons(a, b).toSeq === ref)
     }
   }
 

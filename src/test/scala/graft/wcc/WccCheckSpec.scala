@@ -25,14 +25,21 @@ class WccCheckSpec extends SparkSpec {
     assert(math.abs(recomputed - out.bestWcc) <= 1e-12)
   }
 
-  test("email-Eu-core: recompute matches the claimed bestWcc") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
+  private def recomputeMatchesClaimed(canon: org.apache.spark.sql.DataFrame): Unit = {
     val out = DistributedWCC.run(EdgeOps.toGraph(canon))
     val recomputed = WccCheck.globalWccOfPartition(canon, labelsOf(out))
     assert(out.bestWcc > 0.0)
     assert(math.abs(recomputed - out.bestWcc) <= 1e-9,
       s"recomputed=$recomputed claimed=${out.bestWcc}")
+  }
+
+  test("email-Eu-core: recompute matches the claimed bestWcc") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    recomputeMatchesClaimed(EdgeOps.canonicalize(raw))
+  }
+
+  test(s"${ParityGraph.Name}: recompute matches the claimed bestWcc") {
+    recomputeMatchesClaimed(EdgeOps.canonicalize(ParityGraph.load(spark)))
   }
 
   test("precomputed common-neighbor counts give the identical score") {
@@ -87,9 +94,7 @@ class WccCheckSpec extends SparkSpec {
     assert(shared === self)
   }
 
-  test("email-Eu-core: det recompute is identical with and without precomputed stages") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
+  private def detRecomputeShared(canon: org.apache.spark.sql.DataFrame): Unit = {
     val out = DistributedWCC.run(EdgeOps.toGraph(canon))
     val self = WccCheck.globalWccOfPartitionDet(canon, labelsOf(out))
     val cnt = WccCheck.edgeCommonCounts(canon).cache()
@@ -103,5 +108,14 @@ class WccCheckSpec extends SparkSpec {
     // unchanged by stage sharing
     assert(java.lang.Double.doubleToLongBits(shared) ===
       java.lang.Double.doubleToLongBits(self))
+  }
+
+  test("email-Eu-core: det recompute is identical with and without precomputed stages") {
+    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
+    detRecomputeShared(EdgeOps.canonicalize(raw))
+  }
+
+  test(s"${ParityGraph.Name}: det recompute is identical with and without precomputed stages") {
+    detRecomputeShared(EdgeOps.canonicalize(ParityGraph.load(spark)))
   }
 }

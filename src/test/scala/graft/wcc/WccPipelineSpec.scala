@@ -140,10 +140,10 @@ class DistributedWCCSpec extends SparkSpec {
   }
 
   test("hub-path refinement thrown-through failure releases every cached surface (review r17)") {
-    // hub degree > HubDegreeThreshold routes refinePartition to the
-    // Map-based strategy — the branch review r17 found had NO
-    // failure-path hygiene; the sweep must reach the degree maps and
-    // the candidate generation without naming them
+    // hub degree > HubDegreeThreshold: the single refinement loop
+    // runs with hub-sized surfaces and evaluation arrays; a failure at
+    // generation 1 must release the seed surface, the candidate
+    // generation and the GraphX self-persists without naming them
     val n = 10500L
     val hubEdges = (1L to n).map(i => (0L, i)) ++
       (1L until n).map(i => (i, i + 1))
