@@ -115,14 +115,16 @@ object ScaleProbe {
       }
       val vertexCount = g.numVertices
       phase("one refinement iteration (wcc)") {
-        // mirrors one production refinement generation: one fused
-        // exchange feeding stats AND the WCC evaluation
-        val surf = CommunityOps.nbrSurfaces(init)
-        surf.cache()
-        val cs = CommunityOps.statsFromSurfaces(init, surf)
-        val wcc = CommunityOps.computeGlobalWccFromSurfaces(init, surf, cs, vertexCount)
-        println(s"[scale-probe] communities=${cs.size} wcc=$wcc")
-        surf.unpersist(blocking = false)
+        // one production refinement generation: the seed blocks, then
+        // the one-job step that scores them and builds the next
+        val globalCC = IncrementalWCC.detGlobalCC(init.vertices, vertexCount)
+        val seed = RefineState.seed(init, countTriangles = true)
+        val next = seed.step(globalCC, vertexCount, score = true,
+          countTriangles = true, checkpoint = false)
+        println(s"[scale-probe] communities=${seed.stats.size} " +
+          s"wcc=${next.wccPrev / vertexCount} moves=${next.moved}")
+        seed.release()
+        next.release()
       }
     }
 

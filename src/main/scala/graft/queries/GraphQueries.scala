@@ -140,14 +140,14 @@ object GraphQueries {
     spark.createDataFrame(deg).toDF("vid", "cid", "deg").orderBy("vid", "cid")
   }
 
-  /** The seed partition's pipeline evaluation (surfaces, stats,
-   * global WCC) — iteration 0 of the refinement loop AND the
-   * `claimed` side of the seeding value check, memoized so a session
-   * running both pays the pass once. The refinement run it is handed
-   * to owns the cached surface's release. */
+  /** The seed partition's pipeline evaluation (seed vertex-block
+   * state, stats, global WCC — `_3` is the seed WCC) — iteration 0 of
+   * the refinement loop AND the `claimed` side of the seeding value
+   * check, memoized so a session running both pays the two jobs once.
+   * The refinement run it is handed to owns the cached blocks'
+   * release. */
   private def seedEval(spark: SparkSession, sfDir: String):
-      (org.apache.spark.graphx.VertexRDD[CommunityOps.NbrSurface],
-        Map[Long, CommunityData], Double) =
+      (graft.wcc.RefineState, Map[Long, CommunityData], Double) =
     memoize(spark, s"seedEval:$sfDir") {
       DistributedWCC.seedEvaluation(init(spark, sfDir),
         graph(spark, sfDir).numVertices)

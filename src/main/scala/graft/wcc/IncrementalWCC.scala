@@ -219,7 +219,7 @@ object IncrementalWCC {
    * the driver: #blocks = maxId/2^16 (a 10^12-id space yields ~15M
    * doubles; past that add a super-block tier with the same
    * discipline). */
-  private[wcc] def detGlobalCC(vertices: VertexRDD[VertexData],
+  private[graft] def detGlobalCC(vertices: VertexRDD[VertexData],
       vertexCount: Long): Double = {
     val blockSums = vertices
       .map { case (id, vd) => (id >>> 16, (id, vd.cc)) }
@@ -407,70 +407,48 @@ object IncrementalWCC {
    * present in the current stats (always true here because stats are
    * recomputed from the same graph each iteration).
    *
+   * Runs on [[RefineState]] blocks: one job builds the seed blocks and
+   * their stats, then each iteration is ONE job of two stages — the
+   * movement decisions with their label messages, and the label
+   * application whose job result is the next stats and the move
+   * count. No stage counts triangles: this loop never scores WCC.
+   *
    * Zero-move short-circuit (value-identical): the movement decision
-   * is a pure function of the current graph state — if an iteration
-   * moves NO vertex, the state is unchanged and every remaining
-   * iteration provably recomputes the identical no-op, so the loop
-   * exits early instead of paying their exchanges. Detection is a
-   * LongAccumulator bumped inside the movement join when a cId
-   * changes — retries can only inflate a NONZERO count, never
-   * fabricate one from a true zero, and only zero-ness is read.
+   * is a pure function of the current state — if an iteration moves
+   * NO vertex, every remaining iteration provably recomputes the
+   * identical no-op, so the loop exits early. The move count is part
+   * of the job result, so it is exact.
    *
    * Final-iteration dead-work skip (value-identical): iteration 5's
-   * surfaces/stats exist only to feed a 6th movement that never
-   * runs, and [[run]] grafts ONLY the labels (returning the stale
-   * INCOMING stats — reference quirk `IncrementalWCC.scala:69`), so
-   * the last iteration materializes the movement join with a plain
-   * count instead of paying the exchange + collect. Returns the
-   * refined graph alone — there is no truthful stats value to
-   * return once the final recompute is skipped, and no caller
-   * consumed it. */
+   * labels feed no 6th movement, and [[run]] grafts ONLY the labels
+   * (returning the stale INCOMING stats — reference quirk
+   * `IncrementalWCC.scala:69`), so the last movement runs inside the
+   * job that materializes the returned graph, with no label exchange
+   * and no stats. Returns the refined graph alone — there is no
+   * truthful stats value to return once the final recompute is
+   * skipped, and no caller consumed it. */
   private[wcc] def refinePartition(initGraph: Graph[VertexData, Int],
       globalCC: Double, vertexCount: Long): Graph[VertexData, Int] = {
-    // one fused exchange per iteration feeds BOTH the movement step
-    // and the (integer-exact) derived community stats — on every
-    // graph, hubs included
-    var curSurf = CommunityOps.nbrSurfaces(initGraph)
-    curSurf.cache()
-    var bestCs = CommunityOps.statsFromSurfaces(initGraph, curSurf)
-    var g = initGraph
-    var it = 0
-    var quiesced = false
-    do {
-      it += 1
-      // the reference restricts candidates to stats-present
-      // communities (`:372`), which is vacuous here: stats are
-      // recomputed from this same graph, so every neighbor cId is
-      // present — the movement step gets the full map.
-      val (moved, movedAcc) = DistributedWCC.movementStep(g, curSurf, bestCs,
-        globalCC, vertexCount, s"idwcc-moves-$it")
-      if (it == 5) {
-        // dead-work skip: no 6th movement consumes these surfaces/
-        // stats — materialize the join (populating the accumulator)
-        // with a count instead of the exchange + collect
-        moved.vertices.count()
-        curSurf.unpersist(blocking = false)
-      } else {
-        val movedSurf = CommunityOps.nbrSurfaces(moved)
-        movedSurf.cache()
-        bestCs = CommunityOps.statsFromSurfaces(moved, movedSurf)
-        curSurf.unpersist(blocking = false)
-        curSurf = movedSurf
+    var s = RefineState.seed(initGraph, countTriangles = false)
+    try {
+      var it = 0
+      var labels: RDD[(VertexId, Long)] = null
+      while (labels == null) {
+        it += 1
+        if (it == 5) labels = s.movedLabels(globalCC, vertexCount)
+        else {
+          val next = s.step(globalCC, vertexCount, score = false,
+            countTriangles = false, checkpoint = false)
+          s.release()
+          s = next
+          if (next.moved == 0L) {
+            System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
+            labels = next.labels
+          }
+        }
       }
-      if (g ne initGraph) {
-        g.unpersistVertices(blocking = false)
-        g.edges.unpersist(blocking = false)
-      }
-      g = moved
-      // the action above (stats collect or the final count)
-      // materialized the joined vertices, so the accumulator is
-      // populated by the time it is read
-      quiesced = movedAcc.value == 0L
-      if (quiesced && it < 5)
-        System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
-    } while (it < 5 && !quiesced)
-    if (it < 5) curSurf.unpersist(blocking = false)
-    g
+      RefineState.toGraph(initGraph, labels)
+    } finally s.release()
   }
 
   private def timed[T](phase: String)(f: => T): T = {

@@ -238,7 +238,7 @@ object InitialPartition {
         }
       }
       .partitionBy(p)
-    state.persist(StorageLevel.MEMORY_AND_DISK)
+    state.persist(StorageLevel.MEMORY_AND_DISK_SER)
 
     // One Spark job per superstep: the msgs count is the round's only
     // action and materializes the current state generation en route,
@@ -269,7 +269,7 @@ object InitialPartition {
           (acc: FlagMsg, m: FlagMsg) => acc.addAll(m),
           (a: FlagMsg, b: FlagMsg) => FlagMsg.merge(a, b),
           p)
-      msgs.persist(StorageLevel.MEMORY_AND_DISK)
+      msgs.persist(StorageLevel.MEMORY_AND_DISK_SER)
       val n = msgs.count() // materializes `state` (its one consumer)
       if (prevState != null) prevState.unpersist(blocking = false)
       if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
@@ -299,7 +299,7 @@ object InitialPartition {
               (id, next)
             }
         }
-        state.persist(StorageLevel.MEMORY_AND_DISK)
+        state.persist(StorageLevel.MEMORY_AND_DISK_SER)
       }
     }
     state.count() // materialize the final generation

@@ -1,0 +1,538 @@
+package graft.wcc
+
+import scala.collection.mutable.ArrayBuilder
+
+import graft.graph.SortedIntersect
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.graphx._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
+
+/** The label-independent half of a vertex block: one partition's
+ * vertices and their sorted adjacency, built once per seed state and
+ * shared by reference by every generation moved from it.
+ *
+ * @param ids       local vertex ids, ascending
+ * @param offs      CSR offsets: vertex i's neighbors are
+ *                  `nbrs(offs(i) until offs(i + 1))`, ascending
+ * @param ref       per adjacency slot: the neighbor's local index
+ *                  (>= 0), or `~g` for ghost g (a neighbor that lives
+ *                  in another partition)
+ * @param ghosts    ids of the remote neighbors, ascending
+ * @param ghostPart partition of each ghost */
+private[wcc] final class Adjacency(
+    val ids: Array[Long], val t: Array[Int], val vt: Array[Int],
+    val offs: Array[Int], val nbrs: Array[Long], val ref: Array[Int],
+    val ghosts: Array[Long], val ghostPart: Array[Int]) extends Serializable {
+  def n: Int = ids.length
+  def deg(i: Int): Int = offs(i + 1) - offs(i)
+}
+
+/** One partition of a refinement generation, in primitive arrays:
+ * the shared [[Adjacency]], the own labels, the ghosts' labels (the
+ * neighbor labels of remote slots; local slots read `label`), the
+ * same-community degree `own` (ext = degree - own) and the
+ * same-community triangle count `tri` (null when the generation was
+ * built without stage C). `prevLabel` holds the labels of the
+ * generation this one was moved from; `wccPrev` and `moved` are this
+ * partition's WCC_V sum of that generation and its move count. */
+private[wcc] final class VertexBlock(
+    val adj: Adjacency, val label: Array[Long], val ghostLabel: Array[Long],
+    val own: Array[Int], val tri: Array[Int], val prevLabel: Array[Long],
+    val wccPrev: Double, val moved: Long) extends Serializable {
+
+  @inline def nbrLabel(j: Int): Long = {
+    val r = adj.ref(j)
+    if (r >= 0) label(r) else ghostLabel(~r)
+  }
+
+  def vertex(i: Int): VertexData =
+    VertexData(adj.ids(i), adj.t(i), adj.vt(i), label(i))
+
+  /** vertex i's same-community neighbor ids, ascending */
+  def sameNbrs(i: Int): Array[Long] = {
+    val out = new Array[Long](own(i))
+    var k = 0; var j = adj.offs(i)
+    while (j < adj.offs(i + 1)) {
+      if (nbrLabel(j) == label(i)) { out(k) = adj.nbrs(j); k += 1 }
+      j += 1
+    }
+    out
+  }
+}
+
+/** Stage A -> B message: new labels of moved vertices. A partition
+ * always sends one to itself (`src` == target), which also carries
+ * its WCC_V sum and move count to the job result. */
+private[wcc] final class Moves(val src: Int, val ids: Array[Long],
+    val labels: Array[Long], val wcc: Double, val moved: Long) extends Serializable
+
+/** Stage B -> C message: same-community neighbor arrays, one per
+ * vertex with a same-community neighbor in the target partition. */
+private[wcc] final class SameSets(val ids: Array[Long],
+    val sets: Array[Array[Long]]) extends Serializable
+
+/** Build-time edge slots bound for one partition: (self, neighbor,
+ * neighbor label). */
+private[wcc] final class EdgeSlots(val self: Array[Long], val nbr: Array[Long],
+    val nbrLabel: Array[Long]) extends Serializable
+
+/** One partition's job result: its community-stat partial (per
+ * community: members, summed same-community degree, summed external
+ * degree) plus the carried WCC_V sum and move count. */
+private[wcc] final class Partial(val cIds: Array[Long], val sums: Array[Long],
+    val wcc: Double, val moved: Long) extends Serializable
+
+/**
+ * Co-partitioned vertex state of the WCC refinement loops (ROADMAP
+ * D3): a `HashPartitioner` pair RDD over the pruned core holding ONE
+ * cached [[VertexBlock]] per partition — the layout of GraphX's vertex
+ * partitions, without per-vertex objects. Vertex v lives in partition
+ * `part.getPartition(v)`; a block is keyed by its partition index,
+ * which the same partitioner maps to itself.
+ *
+ * [[step]] advances a generation with ONE Spark job of at most three
+ * stages:
+ *  - A scores this generation's WCC_V under the broadcast stats, takes
+ *    every vertex's [[DistributedWCC.bestMovementCompact]] decision and
+ *    sends the new labels of moved vertices to the partitions holding
+ *    their neighbors;
+ *  - B applies them and ships each vertex's same-community neighbor
+ *    array once per target partition (never once per neighbor, so a
+ *    hub costs at most one copy per partition);
+ *  - C intersects the arrays with [[SortedIntersect]].
+ * The job result is, per partition, the next generation's stats
+ * partial and the WCC_V sum of this one, folded on the driver in
+ * partition order — bit-reproducible, exactly once. Without triangle
+ * counting (the IDWCC loop never scores WCC) the step ends after B.
+ *
+ * @param stats   community stats of this generation
+ * @param wccPrev WCC_V sum of the generation this one was moved from
+ *                (0 for a seed state)
+ * @param moved   vertices whose label changed building this one
+ */
+final class RefineState private (
+    private[wcc] val blocks: RDD[(Int, VertexBlock)],
+    private[wcc] val part: HashPartitioner,
+    val stats: Map[Long, CommunityData], private[graft] val wccPrev: Double,
+    private[graft] val moved: Long) {
+  import RefineState._
+
+  def release(): Unit = blocks.unpersist(blocking = false)
+
+  /** Global WCC of this generation under its own stats: one job over
+   * the cached blocks (needs triangle counts). */
+  private[wcc] def wcc(vertexCount: Long): Double = {
+    val bStats = blocks.sparkContext.broadcast(stats)
+    val sums = blocks.sparkContext.runJob(blocks,
+      (it: Iterator[(Int, VertexBlock)]) => wccSum(it.next()._2, bStats.value))
+    bStats.destroy()
+    foldInOrder(sums) / vertexCount
+  }
+
+  /** The next generation, built by one job (see the class doc).
+   * `score` adds this generation's WCC_V sum to the result (its
+   * triangle counts must exist); `countTriangles` runs stage C;
+   * `checkpoint` marks the new generation for a reliable checkpoint. */
+  private[graft] def step(globalCC: Double, vertexCount: Long, score: Boolean,
+      countTriangles: Boolean, checkpoint: Boolean): RefineState = {
+    val sc = blocks.sparkContext
+    val bStats = sc.broadcast(stats)
+    val p = part
+    val moves = blocks.mapPartitions { it =>
+      val (pid, b) = it.next()
+      val s = bStats.value
+      val wcc = if (score) wccSum(b, s) else 0.0
+      sendMoves(pid, b, decide(b, s, globalCC, vertexCount), wcc, p.numPartitions)
+    }.partitionBy(p)
+    val moved = blocks.zipPartitions(moves, preservesPartitioning = true)(applyMoves)
+    val next = if (countTriangles) withTriangles(moved, p) else moved
+    next.persist(StorageLevel.MEMORY_AND_DISK)
+    if (checkpoint) next.checkpoint()
+    try {
+      val (cs, wcc, n) = merge(sc.runJob(next, partialOf _))
+      new RefineState(next, p, cs, wcc, n)
+    } catch { case t: Throwable => next.unpersist(blocking = false); throw t }
+    finally bStats.unpersist(blocking = false)
+  }
+
+  /** Labels after one more movement, without building a generation —
+   * the final fixed-5 iteration, which only feeds the output graph.
+   * Lazy: the caller's action runs stage A. */
+  private[wcc] def movedLabels(globalCC: Double, vertexCount: Long): RDD[(VertexId, Long)] = {
+    val bStats = blocks.sparkContext.broadcast(stats)
+    labelsOf(decide(_, bStats.value, globalCC, vertexCount))
+  }
+
+  /** this generation's labels, under [[part]] */
+  private[wcc] def labels: RDD[(VertexId, Long)] = labelsOf(_.label)
+
+  /** labels of the generation this one was moved from */
+  private[wcc] def prevLabels: RDD[(VertexId, Long)] = labelsOf(_.prevLabel)
+
+  private def labelsOf(f: VertexBlock => Array[Long]): RDD[(VertexId, Long)] =
+    blocks.mapPartitions({ it =>
+      val b = it.next()._2
+      val l = f(b)
+      Iterator.range(0, l.length).map(i => (b.adj.ids(i), l(i)))
+    }, preservesPartitioning = true)
+}
+
+private[graft] object RefineState {
+
+  /** The seed generation of `graph`: one job that builds the blocks
+   * (adjacency, labels, same-community degrees and, with
+   * `countTriangles`, the triangle counts) and returns their stats. The
+   * caller owns the release. */
+  def seed(graph: Graph[VertexData, Int], countTriangles: Boolean): RefineState = {
+    val part = new HashPartitioner(graph.vertices.getNumPartitions)
+    val verts: RDD[(VertexId, VertexData)] =
+      if (graph.vertices.partitioner.contains(part)) graph.vertices
+      else graph.vertices.partitionBy(part)
+    val slots = graph.triplets.mapPartitions { it =>
+      val self = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      val nbr = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      val lab = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      def add(u: Long, v: Long, lv: Long): Unit = {
+        val q = part.getPartition(u)
+        if (self(q) == null) {
+          self(q) = new ArrayBuilder.ofLong; nbr(q) = new ArrayBuilder.ofLong
+          lab(q) = new ArrayBuilder.ofLong
+        }
+        self(q) += u; nbr(q) += v; lab(q) += lv
+      }
+      it.foreach { t =>
+        add(t.srcId, t.dstId, t.dstAttr.cId)
+        add(t.dstId, t.srcId, t.srcAttr.cId)
+      }
+      Iterator.range(0, self.length).filter(self(_) != null).map(q =>
+        (q, new EdgeSlots(self(q).result(), nbr(q).result(), lab(q).result())))
+    }.partitionBy(part)
+    val base = verts.zipPartitions(slots, preservesPartitioning = true) { (vIt, sIt) =>
+      val pid = TaskContext.getPartitionId()
+      Iterator((pid, build(pid, part, vIt.toArray, sIt.map(_._2).toArray)))
+    }
+    val blocks = if (countTriangles) withTriangles(base, part) else base
+    blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (cs, _, _) = merge(blocks.sparkContext.runJob(blocks, partialOf _))
+      new RefineState(blocks, part, cs, 0.0, 0L)
+    } catch { case t: Throwable => blocks.unpersist(blocking = false); throw t }
+  }
+
+  /** `graph` relabeled by `labels`, cached and materialized — the
+   * one GraphX step of a refinement: handing the result back. */
+  def toGraph(graph: Graph[VertexData, Int],
+      labels: RDD[(VertexId, Long)]): Graph[VertexData, Int] = {
+    val g = graph.outerJoinVertices(labels) { (_, vd, l) =>
+      l match {
+        case Some(c) if c != vd.cId => vd.copy(cId = c)
+        case _ => vd
+      }
+    }
+    g.cache()
+    g.vertices.count()
+    g
+  }
+
+  private def build(pid: Int, part: HashPartitioner,
+      vs: Array[(VertexId, VertexData)], slots: Array[EdgeSlots]): VertexBlock = {
+    java.util.Arrays.sort(vs, Ordering.by((v: (VertexId, VertexData)) => v._1))
+    val n = vs.length
+    val ids = vs.map(_._1)
+    val offs = new Array[Int](n + 1)
+    var ghostIds = new ArrayBuilder.ofLong
+    slots.foreach { s =>
+      var k = 0
+      while (k < s.self.length) {
+        offs(localIndex(ids, s.self(k)) + 1) += 1
+        if (part.getPartition(s.nbr(k)) != pid) ghostIds += s.nbr(k)
+        k += 1
+      }
+    }
+    var i = 0
+    while (i < n) { offs(i + 1) += offs(i); i += 1 }
+    val ghosts = distinctSorted(ghostIds.result())
+    ghostIds = null
+    val ghostLabel = new Array[Long](ghosts.length)
+    val nbrs = new Array[Long](offs(n))
+    val cursor = java.util.Arrays.copyOf(offs, n)
+    slots.foreach { s =>
+      var k = 0
+      while (k < s.self.length) {
+        val li = localIndex(ids, s.self(k))
+        nbrs(cursor(li)) = s.nbr(k); cursor(li) += 1
+        if (part.getPartition(s.nbr(k)) != pid)
+          ghostLabel(java.util.Arrays.binarySearch(ghosts, s.nbr(k))) = s.nbrLabel(k)
+        k += 1
+      }
+    }
+    val ref = new Array[Int](nbrs.length)
+    i = 0
+    while (i < n) {
+      java.util.Arrays.sort(nbrs, offs(i), offs(i + 1))
+      var j = offs(i)
+      while (j < offs(i + 1)) {
+        ref(j) =
+          if (part.getPartition(nbrs(j)) == pid) localIndex(ids, nbrs(j))
+          else ~java.util.Arrays.binarySearch(ghosts, nbrs(j))
+        j += 1
+      }
+      i += 1
+    }
+    val adj = new Adjacency(ids, vs.map(_._2.t), vs.map(_._2.vt), offs, nbrs, ref,
+      ghosts, ghosts.map(part.getPartition))
+    val label = vs.map(_._2.cId)
+    new VertexBlock(adj, label, ghostLabel, ownDegrees(adj, label, ghostLabel),
+      null, null, 0.0, 0L)
+  }
+
+  private def localIndex(ids: Array[Long], v: Long): Int = {
+    val i = java.util.Arrays.binarySearch(ids, v)
+    require(i >= 0, s"vertex $v is not in its hash partition's vertex set")
+    i
+  }
+
+  private def distinctSorted(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var w = 0; var k = 0
+    while (k < a.length) {
+      if (w == 0 || a(k) != a(w - 1)) { a(w) = a(k); w += 1 }
+      k += 1
+    }
+    java.util.Arrays.copyOf(a, w)
+  }
+
+  private def ownDegrees(adj: Adjacency, label: Array[Long],
+      ghostLabel: Array[Long]): Array[Int] = {
+    val own = new Array[Int](adj.n)
+    var i = 0
+    while (i < adj.n) {
+      var c = 0; var j = adj.offs(i)
+      while (j < adj.offs(i + 1)) {
+        val r = adj.ref(j)
+        if ((if (r >= 0) label(r) else ghostLabel(~r)) == label(i)) c += 1
+        j += 1
+      }
+      own(i) = c
+      i += 1
+    }
+    own
+  }
+
+  /** WCC_V summed over one block in ascending vertex id order */
+  private def wccSum(b: VertexBlock, stats: Map[Long, CommunityData]): Double = {
+    var s = 0.0; var i = 0
+    while (i < b.adj.n) {
+      val vd = b.vertex(i)
+      s += WCCMetric.computeWccV(vd, stats(vd.cId), b.own(i), b.tri(i))
+      i += 1
+    }
+    s
+  }
+
+  /** Every vertex's movement decision: its neighbor labels sorted and
+   * run-length encoded into the compact (cId, count) arrays. */
+  private def decide(b: VertexBlock, stats: Map[Long, CommunityData],
+      globalCC: Double, vertexCount: Long): Array[Long] = {
+    val adj = b.adj
+    val next = b.label.clone()
+    var maxDeg = 0; var i = 0
+    while (i < adj.n) { maxDeg = math.max(maxDeg, adj.deg(i)); i += 1 }
+    val scratch = new Array[Long](maxDeg)
+    i = 0
+    while (i < adj.n) {
+      val d = adj.deg(i)
+      if (d > 0) {
+        var k = 0
+        while (k < d) { scratch(k) = b.nbrLabel(adj.offs(i) + k); k += 1 }
+        java.util.Arrays.sort(scratch, 0, d)
+        var uniq = 1; k = 1
+        while (k < d) { if (scratch(k) != scratch(k - 1)) uniq += 1; k += 1 }
+        val cIds = new Array[Long](uniq)
+        val counts = new Array[Int](uniq)
+        var u = 0; cIds(0) = scratch(0); k = 0
+        while (k < d) {
+          if (scratch(k) != cIds(u)) { u += 1; cIds(u) = scratch(k) }
+          counts(u) += 1
+          k += 1
+        }
+        next(i) = DistributedWCC.bestMovementCompact(b.vertex(i), cIds, counts,
+          stats, globalCC, vertexCount).cId
+      }
+      i += 1
+    }
+    next
+  }
+
+  /** Stage A's output: the self message (moved own vertices plus the
+   * partition's WCC_V sum and move count), then one message per other
+   * partition holding a neighbor of a moved vertex. */
+  private def sendMoves(pid: Int, b: VertexBlock, next: Array[Long], wcc: Double,
+      numParts: Int): Iterator[(Int, Moves)] = {
+    val adj = b.adj
+    val ids = new Array[ArrayBuilder.ofLong](numParts)
+    val labs = new Array[ArrayBuilder.ofLong](numParts)
+    def add(q: Int, v: Long, l: Long): Unit = {
+      if (ids(q) == null) { ids(q) = new ArrayBuilder.ofLong; labs(q) = new ArrayBuilder.ofLong }
+      ids(q) += v; labs(q) += l
+    }
+    val stamp = new Array[Int](numParts)
+    var moved = 0L
+    var i = 0
+    while (i < adj.n) {
+      if (next(i) != b.label(i)) {
+        moved += 1
+        add(pid, adj.ids(i), next(i))
+        var j = adj.offs(i)
+        while (j < adj.offs(i + 1)) {
+          val r = adj.ref(j)
+          if (r < 0) {
+            val q = adj.ghostPart(~r)
+            if (stamp(q) != i + 1) { stamp(q) = i + 1; add(q, adj.ids(i), next(i)) }
+          }
+          j += 1
+        }
+      }
+      i += 1
+    }
+    def result(b: ArrayBuilder.ofLong) =
+      if (b == null) Array.emptyLongArray else b.result()
+    Iterator((pid, new Moves(pid, result(ids(pid)), result(labs(pid)), wcc, moved))) ++
+      Iterator.range(0, numParts).filter(q => q != pid && ids(q) != null).map(q =>
+        (q, new Moves(pid, ids(q).result(), labs(q).result(), 0.0, 0L)))
+  }
+
+  /** Stage B: the next generation's labels and same-community degrees */
+  private def applyMoves(bIt: Iterator[(Int, VertexBlock)],
+      mIt: Iterator[(Int, Moves)]): Iterator[(Int, VertexBlock)] = {
+    val (pid, b) = bIt.next()
+    val adj = b.adj
+    val label = b.label.clone()
+    val ghostLabel = b.ghostLabel.clone()
+    var wcc = 0.0; var moved = 0L
+    mIt.foreach { case (_, m) =>
+      val self = m.src == pid
+      if (self) { wcc = m.wcc; moved = m.moved }
+      var k = 0
+      while (k < m.ids.length) {
+        if (self) label(localIndex(adj.ids, m.ids(k))) = m.labels(k)
+        else ghostLabel(java.util.Arrays.binarySearch(adj.ghosts, m.ids(k))) = m.labels(k)
+        k += 1
+      }
+    }
+    Iterator((pid, new VertexBlock(adj, label, ghostLabel,
+      ownDegrees(adj, label, ghostLabel), null, b.label, wcc, moved)))
+  }
+
+  /** Stages B (ship) and C (intersect): `blocks` with triangle counts */
+  private def withTriangles(blocks: RDD[(Int, VertexBlock)],
+      part: HashPartitioner): RDD[(Int, VertexBlock)] = {
+    val same = blocks.mapPartitions { it =>
+      val (pid, b) = it.next()
+      val adj = b.adj
+      val ids = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      val sets = new Array[ArrayBuilder.ofRef[Array[Long]]](part.numPartitions)
+      val stamp = new Array[Int](part.numPartitions)
+      var i = 0
+      while (i < adj.n) {
+        var s: Array[Long] = null
+        var j = adj.offs(i)
+        while (j < adj.offs(i + 1)) {
+          val r = adj.ref(j)
+          if (r < 0 && b.ghostLabel(~r) == b.label(i)) {
+            val q = adj.ghostPart(~r)
+            if (stamp(q) != i + 1) {
+              stamp(q) = i + 1
+              if (s == null) s = b.sameNbrs(i)
+              if (ids(q) == null) {
+                ids(q) = new ArrayBuilder.ofLong; sets(q) = new ArrayBuilder.ofRef[Array[Long]]
+              }
+              ids(q) += adj.ids(i); sets(q) += s
+            }
+          }
+          j += 1
+        }
+        i += 1
+      }
+      Iterator.range(0, part.numPartitions).filter(q => q != pid && ids(q) != null)
+        .map(q => (q, new SameSets(ids(q).result(), sets(q).result())))
+    }.partitionBy(part)
+    blocks.zipPartitions(same, preservesPartitioning = true) { (bIt, sIt) =>
+      val (pid, b) = bIt.next()
+      val adj = b.adj
+      val remote = new Array[Array[Long]](adj.ghosts.length)
+      sIt.foreach { case (_, s) =>
+        var k = 0
+        while (k < s.ids.length) {
+          remote(java.util.Arrays.binarySearch(adj.ghosts, s.ids(k))) = s.sets(k)
+          k += 1
+        }
+      }
+      val local = Array.tabulate(adj.n)(b.sameNbrs)
+      val tri = new Array[Int](adj.n)
+      var i = 0
+      while (i < adj.n) {
+        var c = 0; var j = adj.offs(i)
+        while (j < adj.offs(i + 1)) {
+          if (b.nbrLabel(j) == b.label(i)) {
+            val r = adj.ref(j)
+            c += SortedIntersect.count(local(i), if (r >= 0) local(r) else remote(~r))
+          }
+          j += 1
+        }
+        // each triangle is seen from both of its other edges at i
+        tri(i) = c / 2
+        i += 1
+      }
+      Iterator((pid, new VertexBlock(adj, b.label, b.ghostLabel, b.own, tri,
+        b.prevLabel, b.wccPrev, b.moved)))
+    }
+  }
+
+  /** The job-result function: a block's stats partial and carried sums */
+  private def partialOf(it: Iterator[(Int, VertexBlock)]): Partial = {
+    val b = it.next()._2
+    val m = new java.util.HashMap[Long, Array[Long]]()
+    var i = 0
+    while (i < b.adj.n) {
+      var a = m.get(b.label(i))
+      if (a == null) { a = new Array[Long](3); m.put(b.label(i), a) }
+      a(0) += 1; a(1) += b.own(i); a(2) += b.adj.deg(i) - b.own(i)
+      i += 1
+    }
+    val cIds = new Array[Long](m.size)
+    val sums = new Array[Long](3 * m.size)
+    var k = 0
+    m.forEach { (c, a) =>
+      cIds(k) = c; System.arraycopy(a, 0, sums, 3 * k, 3); k += 1
+    }
+    new Partial(cIds, sums, b.wccPrev, b.moved)
+  }
+
+  /** Driver fold of the per-partition results, in partition order:
+   * community stats (integer sums: a(c) is half the summed
+   * same-community degree, every internal edge being seen from both
+   * ends), the WCC_V sum and the move count. */
+  private def merge(parts: Array[Partial]): (Map[Long, CommunityData], Double, Long) = {
+    val m = new java.util.HashMap[Long, Array[Long]]()
+    parts.foreach { p =>
+      var k = 0
+      while (k < p.cIds.length) {
+        val a = m.get(p.cIds(k))
+        if (a == null) m.put(p.cIds(k), java.util.Arrays.copyOfRange(p.sums, 3 * k, 3 * k + 3))
+        else { a(0) += p.sums(3 * k); a(1) += p.sums(3 * k + 1); a(2) += p.sums(3 * k + 2) }
+        k += 1
+      }
+    }
+    val cs = Map.newBuilder[Long, CommunityData]
+    m.forEach((c, a) => cs += ((c, CommunityData(a(0).toInt, (a(1) / 2).toDouble, a(2).toInt))))
+    (cs.result(), foldInOrder(parts.map(_.wcc)), parts.map(_.moved).sum)
+  }
+
+  private def foldInOrder(xs: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < xs.length) { s += xs(i); i += 1 }
+    s
+  }
+}

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
  * from nothing but the emitted (vid, cid) labels and the raw
  * canonical edge list — pure DataFrame joins + the native sorted
  * merge-scan intersection, sharing NO code with the GraphX pipeline
- * that produced the partition (`CommunityOps.wccEvalScaffold`).
+ * that produced the partition (`RefineState`).
  *
  * Once the partition is fixed the metric is closed-form (reference
  * `DistributedWCC.scala:422-460` + `WCCMetric.scala:16-21`):

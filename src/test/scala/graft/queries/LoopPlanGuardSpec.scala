@@ -60,48 +60,13 @@ class LoopPlanGuardSpec extends SparkSpec with TimeLimits {
       // early-stability run shape divergence)
       val edges = (1L until 64L).map(v => (v, v + 1)).toDF("src", "dst")
       def stagesFor(maxRounds: Int, materialize: Boolean = true): (Int, Long) = {
-        val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-        val records = new java.util.concurrent.atomic.AtomicLong(0L)
-        val tag = s"graft-cc2p-probe-$maxRounds-${java.util.UUID.randomUUID()}"
-        val tagged = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onStageSubmitted(
-              ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-            if (ss.properties != null &&
-                tag == ss.properties.getProperty("spark.jobGroup.id")) {
-              counter.incrementAndGet()
-              tagged.add(ss.stageInfo.stageId)
-            }
-            ()
-          }
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            if (tagged.contains(sc.stageInfo.stageId))
-              records.addAndGet(
-                sc.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
-            ()
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          spark.sparkContext.setJobGroup(tag, "two-phase CC stage probe")
-          val cc = try graft.graph.GraphAlgs
+        val c = graft.JobProbe(spark.sparkContext) {
+          graft.graph.GraphAlgs
             .connectedComponentsTwoPhase(edges, maxRounds = maxRounds,
               materializeLargeStar = materialize)
-            finally spark.sparkContext.clearJobGroup()
-          cc.release()
-          // the listener bus is async — poll until the counters hold
-          // still for 5 consecutive 100 ms samples (review r18: a
-          // single quiet 100 ms gap can be a bus stall or GC pause,
-          // and an under-counted run weakens the assertion)
-          var stable = 0; var prev = -1L; var spins = 0
-          while (stable < 5 && spins < 200) {
-            val cur = counter.get() + records.get()
-            if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-            Thread.sleep(100); spins += 1
-          }
-          (counter.get(), records.get())
-        } finally spark.sparkContext.removeSparkListener(listener)
+            .release()
+        }
+        (c.stages, c.shuffleRecordsRead)
       }
       val (s2, r2) = stagesFor(2)
       val (s3, r3) = stagesFor(3)

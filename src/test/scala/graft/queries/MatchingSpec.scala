@@ -138,35 +138,16 @@ class MatchingSpec extends SparkSpec {
     // materialization, the caller's collect) cancels, leaving exactly
     // (roundsA - roundsB) jobs.
     def jobsAndRounds(edges: Seq[(Long, Long)]): (Int, Long) = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
       // count ONLY jobs from the measured run: the suite shares one
       // SparkSession, so a stray background job (e.g. a concurrent
       // fold left over from another suite) landing mid-window would
-      // break the exact jobs-minus-jobs equality below. The matching
-      // loop runs synchronously on THIS thread, so a fresh unique
-      // job group tags exactly its jobs — an already-created pool
-      // thread cannot carry a tag minted after its creation.
-      val tag = s"graft-matching-probe-${java.util.UUID.randomUUID()}"
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          if (tag == js.properties.getProperty("spark.jobGroup.id"))
-            counter.incrementAndGet()
-          ()
-        }
+      // break the exact jobs-minus-jobs equality below; the probe's
+      // job group tags exactly this thread's jobs
+      var out: Array[org.apache.spark.sql.Row] = null
+      val counts = graft.JobProbe(spark.sparkContext) {
+        out = GraphAlgs.matchingDetDF(edges.toDF("src", "dst")).collect()
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setJobGroup(tag, "matching job-count probe")
-        val out = try GraphAlgs.matchingDetDF(edges.toDF("src", "dst")).collect()
-          finally spark.sparkContext.clearJobGroup()
-        // the listener bus is async — poll until the count is stable
-        var prev = -1; var cur = counter.get(); var spins = 0
-        while (cur != prev && spins < 100) {
-          prev = cur; Thread.sleep(100); cur = counter.get(); spins += 1
-        }
-        (cur, out.map(_.getLong(2)).max)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      (counts.jobs, out.map(_.getLong(2)).max)
     }
     // a star matches in exactly 1 round (every edge shares the hub);
     // a long path needs several hash-ordered rounds

@@ -58,7 +58,7 @@ object IncrDump {
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/core_edges")
 
     // fixed-5 refinement, one dump per iteration (Map form — value-
-    // identical to refinePartition's surface form)
+    // identical to refinePartition's vertex-block form)
     var g = init
     for (it <- 1 to 5) {
       val deg = CommunityOps.vertexCommunityDegrees(g); deg.cache()

@@ -68,61 +68,69 @@ class PropertySpec extends SparkSpec {
   }
 
   test("fused NbrSurface equals the Map-based degrees + same-community arrays") {
+    // the refinement's vertex-block state (which replaced the fused
+    // NbrSurface exchange) against the GraphX reference plans
     forAll(edgeGen) { edges =>
       if (edges.nonEmpty) {
         // random-ish partition: cId = vId % 3 (exercises multi- and
         // single-community neighborhoods)
         val g = graphOf(spark, edges)
           .mapVertices((id, _) => VertexData(id, 1, 2, id % 3))
-        val surf = CommunityOps.nbrSurfaces(g).collect().toMap
+        val n = g.numVertices
+        val seed = RefineState.seed(g, countTriangles = true)
+        val blocks = seed.blocks.collect().map(_._2)
+        // community degrees from the blocks' neighbor labels
         val deg = CommunityOps.vertexCommunityDegrees(g).collect().toMap
-        assert(surf.keySet === deg.keySet)
-        surf.foreach { case (vid, s) =>
-          val asMap = s.cIds.zip(s.counts).toMap
-          assert(asMap === deg(vid), s"community degrees diverge at $vid")
-          assert(s.cIds.toSeq === s.cIds.sorted.toSeq)
-          assert(s.sameNbrs.toSeq === s.sameNbrs.sorted.toSeq)
-        }
-        // same-community neighbor sets against brute force
+        val fromBlocks = blocks.flatMap { b =>
+          (0 until b.adj.n).filter(b.adj.deg(_) > 0).map { i =>
+            b.adj.ids(i) -> (b.adj.offs(i) until b.adj.offs(i + 1))
+              .groupBy(b.nbrLabel).map { case (c, js) => c -> js.size }
+          }
+        }.toMap
+        assert(fromBlocks === deg)
+        // sorted adjacency and same-community arrays against brute force
         val und = edges.filter(e => e._1 != e._2)
           .map(e => if (e._1 < e._2) e else e.swap).distinct
-        val cid = und.flatMap(e => Seq(e._1, e._2)).distinct
-          .map(v => (v, v % 3)).toMap
-        und.foreach { case (a, b) =>
-          if (cid(a) == cid(b)) {
-            assert(surf(a).sameNbrs.contains(b) && surf(b).sameNbrs.contains(a))
+        val adjBrute = und.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+          .map { case (v, es) => v -> es.map(_._2).sorted }
+        blocks.foreach { b =>
+          (0 until b.adj.n).foreach { i =>
+            val v = b.adj.ids(i)
+            val nb = b.adj.nbrs.slice(b.adj.offs(i), b.adj.offs(i + 1)).toSeq
+            assert(nb === adjBrute.getOrElse(v, Nil), s"adjacency diverges at $v")
+            assert(b.sameNbrs(i).toSeq === nb.filter(_ % 3 == v % 3))
           }
         }
-        // derived stats identical to the two-scan formulation
-        val s1 = CommunityOps.statsFromSurfaces(g, CommunityOps.nbrSurfaces(g))
-        val s3 = CommunityOps.computeCommunityStats(g)
-        assert(s1 === s3)
-        // WCC evaluation: per-vertex terms identical, scalar equal up
-        // to float summation order
-        val w1 = CommunityOps.computeGlobalWccFromSurfaces(
-          g, CommunityOps.nbrSurfaces(g), s1, g.numVertices)
-        val w2 = CommunityOps.computeGlobalWCC(g, s3, g.numVertices)
-        assert(math.abs(w1 - w2) < 1e-12, s"wcc $w1 vs $w2")
-        // the refinement loop's CONCURRENT evaluation (stats collect
-        // and triangle-exchange scaffold as overlapping jobs) equals
-        // the sequential composition: stats integer-exact, the WCC
-        // scalar up to float summation order
-        val surf3 = CommunityOps.nbrSurfaces(g); surf3.cache()
-        val (cs, w3) = CommunityOps.evalSurfacesConcurrent(g, surf3, g.numVertices)
-        surf3.unpersist(blocking = false)
-        assert(cs === s1)
-        assert(math.abs(w3 - w1) < 1e-12, s"wcc $w3 vs $w1")
+        // stats integer-exact, WCC equal up to float summation order
+        val cs = CommunityOps.computeCommunityStats(g)
+        assert(seed.stats === cs)
+        val w = seed.wcc(n)
+        val wRef = CommunityOps.computeGlobalWCC(g, cs, n)
+        assert(math.abs(w - wRef) < 1e-12, s"wcc $w vs $wRef")
+        // one scored step: it carries the seed's WCC (same fold), and
+        // the generation it builds equals the reference plans over its
+        // labels
+        val next = seed.step(IncrementalWCC.detGlobalCC(g.vertices, n), n,
+          score = true, countTriangles = true, checkpoint = false)
+        assert(next.wccPrev / n === w)
+        val moved = RefineState.toGraph(g, next.labels)
+        val movedCs = CommunityOps.computeCommunityStats(moved)
+        assert(next.stats === movedCs)
+        val wNext = next.wcc(n)
+        val wNextRef = CommunityOps.computeGlobalWCC(moved, movedCs, n)
+        assert(math.abs(wNext - wNextRef) < 1e-12, s"wcc $wNext vs $wNextRef")
+        seed.release(); next.release()
+        moved.unpersistVertices(blocking = false)
       }
     }
   }
 
   test("stats fold: wide (>64-part reduceByKey) form equals the narrow aggregate form") {
-    // statsFromTriples picks its shape by partition count (narrow
-    // single-stage aggregate at bench widths, map-side-combined
-    // reduceByKey at cluster widths). Every other suite runs at <= 64
-    // partitions, so without this pin the 100 TB form could drift
-    // unexercised. Integer sums are order-free — the forms must be
-    // exactly equal.
+    // The driver-side stats fold of the vertex-block state replaced
+    // both statsFromTriples forms; the width pin stays: the state's
+    // stats and its first step's labels must be identical at 4 and
+    // at 80 partitions (integer sums are order-free, and the movement
+    // is a pure function of the state).
     forAll(edgeGen, 4) { edges =>
       if (edges.nonEmpty) {
         val canon = edges.map(e => if (e._1 < e._2) e else e.swap).distinct
@@ -131,15 +139,23 @@ class PropertySpec extends SparkSpec {
           val g0 = org.apache.spark.graphx.Graph.fromEdges(
             sc.parallelize(canon.map(e =>
               org.apache.spark.graphx.Edge(e._1, e._2, 1)), parts), 0)
-          g0.mapVertices((id, _) => VertexData(id, 0, 2, id % 3))
+          g0.mapVertices((id, _) => VertexData(id, 1, 2, id % 3))
         }
-        val narrow = gAt(4)
-        val wide = gAt(80)
-        assert(wide.vertices.getNumPartitions > 64,
-          "premise: the wide graph must cross the 64-partition strategy split")
-        val sN = CommunityOps.statsFromSurfaces(narrow, CommunityOps.nbrSurfaces(narrow))
-        val sW = CommunityOps.statsFromSurfaces(wide, CommunityOps.nbrSurfaces(wide))
+        def run(parts: Int) = {
+          val g = gAt(parts)
+          val seed = RefineState.seed(g, countTriangles = false)
+          val next = seed.step(1.0, g.numVertices, score = false,
+            countTriangles = false, checkpoint = false)
+          val out = (g.vertices.getNumPartitions, seed.stats,
+            next.labels.collect().sortBy(_._1).toSeq)
+          seed.release(); next.release()
+          out
+        }
+        val (_, sN, lN) = run(4)
+        val (wideParts, sW, lW) = run(80)
+        assert(wideParts > 64, "premise: the wide graph must have > 64 partitions")
         assert(sN === sW)
+        assert(lN === lW)
       }
     }
   }

@@ -86,11 +86,10 @@ class DistributedWCCSpec extends SparkSpec {
   }
 
   test("refinement thrown-through failure releases cand/bestSurf (ADVICE r16)") {
-    // hub-free two-triangle graph -> the compact pipelined loop;
-    // inject a failure at the top of iteration 1 and assert the new
-    // outer catch drops the current generation AND the best surface
-    // (the best partition here IS the caller's init graph, which the
-    // catch must NOT release)
+    // inject a failure at the top of generation 1 and assert the
+    // loop's catch drops every live vertex-block generation (the best
+    // partition here IS the caller's init graph, which the catch must
+    // NOT release)
     val g = graphOf(spark,
       Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (3L, 5L)))
     val res = TriangleStats.run(g)
@@ -118,9 +117,8 @@ class DistributedWCCSpec extends SparkSpec {
   }
 
   test("seed-evaluation failure sweeps the seed surface (review r17)") {
-    // iteration-0 seam: the seed surface and the exchange's GraphX
-    // self-persists are registered before the loop's try begins —
-    // the dedicated seed-eval catch must sweep them
+    // iteration-0 seam: the seed state is built inside the loop's
+    // scope and must be released when it fails right after
     val g = graphOf(spark,
       Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (3L, 5L)))
     val res = TriangleStats.run(g)
@@ -140,10 +138,9 @@ class DistributedWCCSpec extends SparkSpec {
   }
 
   test("hub-path refinement thrown-through failure releases every cached surface (review r17)") {
-    // hub degree > HubDegreeThreshold: the single refinement loop
-    // runs with hub-sized surfaces and evaluation arrays; a failure at
-    // generation 1 must release the seed surface, the candidate
-    // generation and the GraphX self-persists without naming them
+    // a 10,500-degree hub: the refinement runs with a hub-sized block
+    // row and same-community arrays; a failure at generation 1 must
+    // release the seed state and the current generation
     val n = 10500L
     val hubEdges = (1L to n).map(i => (0L, i)) ++
       (1L until n).map(i => (i, i + 1))
@@ -162,6 +159,30 @@ class DistributedWCCSpec extends SparkSpec {
       .filterKeys(!before.contains(_)).toMap
     assert(leaked.isEmpty, "leaked persisted RDDs: " +
       leaked.map { case (id, r) => s"$id=$r" }.mkString("; "))
+  }
+
+  test(s"refinement is bit-reproducible on ${ParityGraph.Name}: labels, bestWcc and globalCC") {
+    // the per-generation WCC and globalCC are folded in a fixed order
+    // (partition-order WCC_V sums, blocked ascending-id cc fold), never
+    // in task-completion order, so two runs agree to the bit
+    val g = EdgeOps.toGraph(EdgeOps.canonicalize(ParityGraph.load(spark)))
+    val init = InitialPartition.run(TriangleStats.run(g).pruned)
+    def once() = {
+      val (best, _, wcc, cc) = DistributedWCC.refinePartition(init, g.numVertices, 5)
+      val labels = best.vertices.map { case (id, vd) => (id, vd.cId) }
+        .collect().sortBy(_._1).toSeq
+      if (best ne init) {
+        best.unpersistVertices(blocking = false)
+        best.edges.unpersist(blocking = false)
+      }
+      (labels, java.lang.Double.doubleToLongBits(wcc),
+        java.lang.Double.doubleToLongBits(cc))
+    }
+    val (l1, w1, c1) = once()
+    val (l2, w2, c2) = once()
+    assert(l1 === l2)
+    assert(w1 === w2, "bestWcc differs between runs")
+    assert(c1 === c2, "globalCC differs between runs")
   }
 
   test("invariants on the reference fixture graph (email-Eu-core)") {
