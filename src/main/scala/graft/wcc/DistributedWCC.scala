@@ -5,7 +5,7 @@ import org.apache.spark.graphx._
 /**
  * Batch DWCC community detection (SURVEY.md §3.1): preprocess
  * (triangle stats + prune) -> clustering-coefficient-seeded initial
- * partition (Pregel) -> WCC hill-climbing refinement
+ * partition (a superstep loop) -> WCC hill-climbing refinement
  * (REMOVE/TRANSFER/STAY movements, accepted while the global WCC
  * improves).
  *
@@ -34,7 +34,7 @@ object DistributedWCC {
       /** (vId, (t, vt)) over the full input graph — the reference's
        * TriangleCountResult dump surface */
       triangleStats: VertexRDD[(Int, Int)],
-      /** partition after the Pregel seeding phase — the reference's
+      /** partition after the seeding phase — the reference's
        * InitialPartitionResult dump surface */
       initialPartition: Graph[VertexData, Int],
       /** pruned triangle-core input of the partitioning phases */

@@ -141,7 +141,7 @@ object IncrementalWCC {
   final case class MergeResult(
       fullGraph: Graph[VertexData, Int],
       /** raw unioned graph fullGraph was derived from (released by
-       * `run` once the batch result is materialized) */
+       * `run` once the seed blocks are materialized) */
       merged: Graph[VertexData, Int],
       newIds: Broadcast[Set[Long]],
       borderIds: Broadcast[Set[Long]],
@@ -149,7 +149,7 @@ object IncrementalWCC {
       /** deterministic merged-graph global cc ([[detGlobalCC]]),
        * computed as a CONCURRENT job over the already-materialized
        * cached vertices: its only consumer is the refinement, so the
-       * fold overlaps the gate probe + flagging + Pregel phases
+       * fold overlaps the gate probe + flagging + seeding phases
        * instead of serializing inside the merge. Values unchanged —
        * the blocked fold is bit-reproducible wherever it runs. */
       globalCCF: java.util.concurrent.CompletableFuture[Double],
@@ -183,9 +183,14 @@ object IncrementalWCC {
     // add up — a micro-batch must not widen the standing layout,
     // and the state's count carries the edge-count sizing its
     // builder chose)
+    // the new vertices join under the state's vertex partitioner, so
+    // the union keeps it and the merged graph's vertices stay where the
+    // state's are: no vertex shuffle here, and the seeded labels graft
+    // back onto the state without one
     val fg: Graph[VertexData, Int] = Graph(
       state.graph.vertices.union(
-        sc.parallelize(newIds.toSeq).map(id => (id, VertexData(id, 0, 0, id)))),
+        sc.parallelize(newIds.toSeq).map(id => (id, VertexData(id, 0, 0, id)))
+          .partitionBy(state.graph.vertices.partitioner.get)),
       state.graph.edges.union(newEdges))
       .partitionBy(PartitionStrategy.EdgePartition2D,
         state.graph.edges.getNumPartitions)
@@ -327,8 +332,8 @@ object IncrementalWCC {
    * from the bulk graph contains >= 1 batch edge and is enumerated
    * here (pinned flag-set-equal to the from-scratch
    * `TriangleStats.edgeSupport` path by IncrementalWCCSpec).
-   * Output size is O(new triangles); duplicates are collapsed by the
-   * caller's distinct(). */
+   * Output size is O(new triangles); it may repeat a key, which the
+   * seeding's edge filter tolerates. */
   private[wcc] def deltaFlags(newEdges: RDD[Edge[Int]],
       touchedNbrs: RDD[(Long, Array[Long])]): RDD[(Long, Long)] = {
     newEdges.map(e => (e.srcId, e.dstId))
@@ -348,58 +353,34 @@ object IncrementalWCC {
   }
 
   /** Incremental initial partition (reference
-   * `IncrementalWCC.scala:185-227`): rebuild adjacency on the merged
-   * graph, keep only triangle-closing edges and t>0 vertices, then
-   * run the SAME Pregel — seeded by the surviving cIds.
-   * `precomputedKeep`, when present, is the merged graph's full
+   * `IncrementalWCC.scala:185-227`): keep only the merged graph's
+   * triangle-closing edges and its t > 0 vertices — the vertex and edge
+   * sets of `subgraph(epred = flagged, vpred = t > 0)` — and run the
+   * SAME seeding loop, seeded by the surviving cIds. The blocks are
+   * built straight from the merged graph's triplets, filtered by the
+   * keep set inside the build job ([[InitialPartition.build]]; a
+   * delta-flagged edge may also be bulk-flagged — duplicate keys are
+   * harmless), so no `Graph` is built for the flagged or the pruned
+   * graph. `precomputedKeep`, when present, is the merged graph's full
    * positive-support canonical key set assembled incrementally
-   * (bulk-invariant flags + [[deltaFlags]]) — the from-scratch
-   * support exchange over the near-bulk-sized merged graph is then
-   * skipped entirely. */
+   * (bulk-invariant flags + [[deltaFlags]]); otherwise the hub-safe
+   * oriented support ([[TriangleStats.edgeSupport]]) flags the edges
+   * from scratch.
+   *
+   * Returns the converged seeding as the fixed-5 loop's seed
+   * generation ([[InitialPartition.refineSeed]]): its ghost labels,
+   * same-community degrees and stats are exact. The caller owns the
+   * release. */
   private[wcc] def performInitialPartition(graph: Graph[VertexData, Int],
       maxIterations: Int = 50,
-      precomputedKeep: Option[RDD[(Long, Long)]] = None): Graph[VertexData, Int] = {
-    val pruned = timed("initial-partition/triangle-flagging") {
-      // hub-safe oriented support (TriangleStats.edgeSupport) instead
-      // of shipping full post-merge neighborhoods per edge — same
-      // flag (>=1 common neighbor), bounded message volume. The
-      // precomputed path joins with a COGROUP, which tolerates
-      // duplicate keys in the keep set (a delta-flagged edge may also
-      // be bulk-flagged), so the caller never pays a keep-set-wide
-      // distinct: the one flagging shuffle here is the same one the
-      // from-scratch path pays for its leftOuterJoin.
-      val flaggedEdges = precomputedKeep match {
-        case Some(k) =>
-          graph.edges
-            .map(e => ((math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)), ()))
-            .cogroup(k.map((_, ())))
-            .flatMap { case ((s, d), (es, keeps)) =>
-              val flag = keeps.nonEmpty
-              es.iterator.map(_ => Edge(s, d, flag))
-            }
-        case None =>
-          val keep = TriangleStats.edgeSupport(graph).filter(_._2 > 0)
-          graph.edges
-            .map(e => ((math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)), ()))
-            .leftOuterJoin(keep)
-            .map { case ((s, d), (_, c)) => Edge(s, d, c.isDefined) }
-      }
-      val flagged: Graph[VertexData, Boolean] = Graph(graph.vertices, flaggedEdges)
-      val prunedB = flagged.subgraph(
-        epred = e => e.attr,
-        vpred = (_, v) => v.t > 0)
-      val p = Graph(prunedB.vertices,
-        prunedB.edges.map(e => Edge(e.srcId, e.dstId, 1)))
-      p.cache()
-      p.numVertices
-      p
-    }
-    val out = timed("initial-partition/pregel") {
-      InitialPartition.run(pruned, maxIterations)
-    }
-    // the Graph constructor persists; run() materialized its output
-    release(pruned)
-    out
+      precomputedKeep: Option[RDD[(Long, Long)]] = None): RefineState = {
+    val keep = precomputedKeep.getOrElse(
+      TriangleStats.edgeSupport(graph).filter(_._2 > 0).map(_._1))
+    InitialPartition.refineSeed(graph.vertices.filter(_._2.t > 0),
+      graph.triplets.filter(t => t.srcAttr.t > 0 && t.dstAttr.t > 0)
+        .map(t => (t.srcAttr, t.dstAttr)),
+      Some(keep), new org.apache.spark.HashPartitioner(graph.vertices.getNumPartitions),
+      maxIterations)
   }
 
   /** Fixed-5 refinement (reference `IncrementalWCC.scala:332-393`):
@@ -407,11 +388,11 @@ object IncrementalWCC {
    * present in the current stats (always true here because stats are
    * recomputed from the same graph each iteration).
    *
-   * Runs on [[RefineState]] blocks: one job builds the seed blocks and
-   * their stats, then each iteration is ONE job of two stages — the
-   * movement decisions with their label messages, and the label
-   * application whose job result is the next stats and the move
-   * count. No stage counts triangles: this loop never scores WCC.
+   * Runs on the [[RefineState]] blocks the seeding converged on
+   * (`seed`, which this call consumes): each iteration is ONE job of two
+   * stages — the movement decisions with their label messages, and
+   * the label application whose job result is the next stats and the
+   * move count. No stage counts triangles: this loop never scores WCC.
    *
    * Zero-move short-circuit (value-identical): the movement decision
    * is a pure function of the current state — if an iteration moves
@@ -422,20 +403,21 @@ object IncrementalWCC {
    * Final-iteration dead-work skip (value-identical): iteration 5's
    * labels feed no 6th movement, and [[run]] grafts ONLY the labels
    * (returning the stale INCOMING stats — reference quirk
-   * `IncrementalWCC.scala:69`), so the last movement runs inside the
-   * job that materializes the returned graph, with no label exchange
-   * and no stats. Returns the refined graph alone — there is no
-   * truthful stats value to return once the final recompute is
-   * skipped, and no caller consumed it. */
-  private[wcc] def refinePartition(initGraph: Graph[VertexData, Int],
-      globalCC: Double, vertexCount: Long): Graph[VertexData, Int] = {
-    var s = RefineState.seed(initGraph, countTriangles = false)
+   * `IncrementalWCC.scala:69`), so the last movement is a lazy map over
+   * the last generation, run by the job that materializes the
+   * graft-back, with no label exchange and no stats.
+   *
+   * Returns that generation, which the caller releases once the
+   * graft-back has materialized, and the refined vertices read from it. */
+  private[wcc] def refinePartition(seed: RefineState, globalCC: Double,
+      vertexCount: Long): (RefineState, RDD[(VertexId, VertexData)]) = {
+    var s = seed
     try {
       var it = 0
-      var labels: RDD[(VertexId, Long)] = null
-      while (labels == null) {
+      var out: RDD[(VertexId, VertexData)] = null
+      while (out == null) {
         it += 1
-        if (it == 5) labels = s.movedLabels(globalCC, vertexCount)
+        if (it == 5) out = s.movedVertices(globalCC, vertexCount)
         else {
           val next = s.step(globalCC, vertexCount, score = false,
             countTriangles = false, checkpoint = false)
@@ -443,12 +425,12 @@ object IncrementalWCC {
           s = next
           if (next.moved == 0L) {
             System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
-            labels = next.labels
+            out = next.vertices
           }
         }
       }
-      RefineState.toGraph(initGraph, labels)
-    } finally s.release()
+      (s, out)
+    } catch { case t: Throwable => s.release(); throw t }
   }
 
   private def timed[T](phase: String)(f: => T): T = {
@@ -519,7 +501,17 @@ object IncrementalWCC {
    * the continuously-verified `g_wcc_incremental_delta` row).
    * `expectDeltaPath = true` makes the call fail LOUDLY if the gate
    * falls back — for callers whose purpose is exercising the delta
-   * path, where a silent fallback would hollow out the check. */
+   * path, where a silent fallback would hollow out the check.
+   *
+   * Between the merge and the graft-back the fold holds ONE vertex-block
+   * state ([[RefineState]]) and builds no `Graph`: the seeding builds
+   * the blocks from the merged graph's triplets and the flag set
+   * ([[performInitialPartition]]), the fixed-5 refinement moves the
+   * converged blocks ([[refinePartition]]), and the last movement's
+   * labels are grafted onto the state graph in the job that
+   * materializes it. The merged graph keeps the state's vertex
+   * partitioner, so the blocks and the graft-back join without a
+   * vertex shuffle. */
   def run(state: State, newEdges: RDD[Edge[Int]],
       releaseInput: Boolean = true,
       deltaFlagMaxVolumeFraction: Double = DeltaFlagMaxVolumeFraction,
@@ -540,8 +532,9 @@ object IncrementalWCC {
     // same leak class the merge-side catch was added to close).
     // `failpoint` is the spec-injected seam that PROVES the coverage
     // (IncrementalWCCSpec's phase-failure leak test).
-    var initG: Graph[VertexData, Int] = null
-    var finG: Graph[VertexData, Int] = null
+    // the live vertex-block generation (the seed, then the refined
+    // one) and the graft-back result
+    var live: RefineState = null
     var resG: Graph[VertexData, Int] = null
     try {
     // incremental triangle flagging for genuinely micro batches: the
@@ -568,15 +561,18 @@ object IncrementalWCC {
         "too large or too hub-heavy, or state.bulkFlagged is None)")
     val keep = state.bulkFlagged
       .filter(_ => useDelta)
-      .map(_.union(deltaFlags(newEdges, m.touchedNbrs).distinct()))
-    val init = timed("initial-partition")(
+      .map(_.union(deltaFlags(newEdges, m.touchedNbrs)))
+    live = timed("initial-partition")(
       performInitialPartition(m.fullGraph, precomputedKeep = keep))
-    initG = init
     failpoint("initial-partition")
-    m.touchedNbrs.unpersist(blocking = false)
     val globalCC = WccUtil.joinUnwrapped(m.globalCCF)
-    val finalGraph = timed("refine")(refinePartition(init, globalCC, m.vertexCount))
-    finG = finalGraph
+    // the seed blocks are materialized: nothing reads the merge's
+    // surfaces any more
+    m.touchedNbrs.unpersist(blocking = false)
+    release(m.merged)
+    release(m.fullGraph)
+    val refined = timed("refine")(refinePartition(live, globalCC, m.vertexCount))
+    live = refined._1
     failpoint("refine")
 
     // graft onto the PREVIOUS graph's vertex/edge set (so batch edges
@@ -584,19 +580,20 @@ object IncrementalWCC {
     // BULK edge set again) and return the STALE incoming stats
     // (reference quirks, see object Scaladoc). The join body is the
     // reference's conditional reset ([[graftQuirk]]): self-labeled
-    // result vertices carry ZEROED (t, vt) into the next batch.
-    val resultGraph = state.graph.outerJoinVertices(finalGraph.vertices) { (id, _, vdOpt) =>
-      graftQuirk(id, vdOpt)
+    // result vertices carry ZEROED (t, vt) into the next batch. One
+    // job: materializing the edges materializes the vertices they are
+    // shipped from, and the refinement's last movement with them.
+    val resultGraph = timed("graft") {
+      val g = state.graph.outerJoinVertices(refined._2) { (id, _, vdOpt) =>
+        graftQuirk(id, vdOpt)
+      }
+      resG = g
+      g.cache()
+      g.edges.count()
+      g
     }
-    resG = resultGraph
-    resultGraph.cache()
-    resultGraph.vertices.count()
-    resultGraph.edges.count()
     failpoint("graft")
-    release(m.merged)
-    release(m.fullGraph)
-    release(init)
-    if (finalGraph ne init) release(finalGraph)
+    live.release()
     if (releaseInput) release(state.graph)
     // unpersist (not destroy): evicted lineage re-fetches from the
     // driver if a cached partition is ever recomputed
@@ -623,13 +620,10 @@ object IncrementalWCC {
           m.touchedNbrs.unpersist(blocking = false)
           release(m.merged)
           release(m.fullGraph)
-          // post-merge generations (ADVICE r16): whichever of the
-          // initial partition / refined graph / graft-back result had
-          // materialized by the failure point is pinned too — release
-          // them all; double-release of one the body already freed on
-          // a later failure is the same harmless no-op
-          if (initG != null) release(initG)
-          if (finG != null && (finG ne initG)) release(finG)
+          // post-merge generations (ADVICE r16): whichever vertex-block
+          // generation or graft-back result had materialized by the
+          // failure point is pinned too — release them
+          if (live != null) live.release()
           if (resG != null) release(resG)
           m.newIds.unpersist(blocking = false)
           m.borderIds.unpersist(blocking = false)

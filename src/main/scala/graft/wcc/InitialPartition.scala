@@ -1,80 +1,11 @@
 package graft.wcc
 
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.graphx._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
-
-/** Growable center-flag message for the steady-state seeding rounds:
- * parallel (senderId, isCenter) arrays merged in place (collision-free
- * — at most one message per sender per receiver per superstep), the
- * same in-place-merge discipline as the k-core CoreDelta. */
-final class FlagMsg(id0: Long, flag0: Boolean) extends Serializable {
-  var ids: Array[Long] = { val a = new Array[Long](4); a(0) = id0; a }
-  var flags: Array[Boolean] = { val a = new Array[Boolean](4); a(0) = flag0; a }
-  var size: Int = 1
-
-  private def ensure(extra: Int): Unit = {
-    if (size + extra > ids.length) {
-      val cap = math.max(size + extra, ids.length * 2)
-      ids = java.util.Arrays.copyOf(ids, cap)
-      flags = java.util.Arrays.copyOf(flags, cap)
-    }
-  }
-
-  private[wcc] def addAll(other: FlagMsg): FlagMsg = {
-    ensure(other.size)
-    System.arraycopy(other.ids, 0, ids, size, other.size)
-    System.arraycopy(other.flags, 0, flags, size, other.size)
-    size += other.size
-    this
-  }
-}
-
-object FlagMsg {
-  def merge(a: FlagMsg, b: FlagMsg): FlagMsg =
-    if (a.size >= b.size) a.addAll(b) else b.addAll(a)
-}
-
-/** Growable superstep-1 message: each neighbor's decision-relevant
- * coordinates appended into parallel primitive arrays (the same
- * in-place-merge discipline as [[FlagMsg]]/NbrAgg). Replaces the
- * immutable Map[Long, NborMsg] combiner whose `a ++ b` rebuilt a
- * boxed map per merge — O(deg log deg) allocation churn per vertex
- * on the loop's one full exchange. Senders are unique per receiver
- * (one canonical edge per pair, no self-loops), so no dedup is
- * needed; the receiving vertex program sorts by id once. */
-final class SeedMsg(id0: Long, vt0: Int, cc0: Double, center0: Boolean)
-    extends Serializable {
-  var ids: Array[Long] = { val a = new Array[Long](4); a(0) = id0; a }
-  var vts: Array[Int] = { val a = new Array[Int](4); a(0) = vt0; a }
-  var ccs: Array[Double] = { val a = new Array[Double](4); a(0) = cc0; a }
-  var centers: Array[Boolean] = { val a = new Array[Boolean](4); a(0) = center0; a }
-  var size: Int = 1
-
-  private def ensure(extra: Int): Unit = {
-    if (size + extra > ids.length) {
-      val cap = math.max(size + extra, ids.length * 2)
-      ids = java.util.Arrays.copyOf(ids, cap)
-      vts = java.util.Arrays.copyOf(vts, cap)
-      ccs = java.util.Arrays.copyOf(ccs, cap)
-      centers = java.util.Arrays.copyOf(centers, cap)
-    }
-  }
-
-  private[wcc] def addAll(other: SeedMsg): SeedMsg = {
-    ensure(other.size)
-    System.arraycopy(other.ids, 0, ids, size, other.size)
-    System.arraycopy(other.vts, 0, vts, size, other.size)
-    System.arraycopy(other.ccs, 0, ccs, size, other.size)
-    System.arraycopy(other.centers, 0, centers, size, other.size)
-    size += other.size
-    this
-  }
-}
-
-object SeedMsg {
-  def merge(a: SeedMsg, b: SeedMsg): SeedMsg =
-    if (a.size >= b.size) a.addAll(b) else b.addAll(a)
-}
 
 /**
  * Clustering-coefficient-seeded initial partition (G4 in SURVEY.md
@@ -104,219 +35,325 @@ object SeedMsg {
  * terminate on true message quiescence instead of always burning
  * maxIterations supersteps.
  *
- * Execution shape: only superstep 1 (every vertex broadcasts its
- * (cc, vt, vId, center) to all neighbors, building the per-vertex
- * [[NborCache]]) runs as a GraphX exchange. Every later superstep
- * runs on a co-partitioned pair-RDD state — a changed vertex emits
- * (id, isCenter) to its strictly lower-ranked neighbors, whose ids
- * it already knows FROM ITS OWN CACHE, so the steady-state loop
- * needs no adjacency structure and no per-superstep graph rebuild:
- * one frontier-sized shuffle job per superstep. A Pregel-shaped
- * loop instead re-ships every vertex attribute to the edge
- * partitions on every superstep, which dominates once the adoption
- * frontier collapses (the same finding as the k-core loop).
+ * Execution shape: the loop runs on [[RefineState]]'s columnar vertex
+ * blocks under the vertex RDD's `HashPartitioner`, one cached
+ * [[VertexBlock]] per partition whose adjacency carries the
+ * [[SeedRanks]]:
+ *  - the build job ships every edge as a slot to the partitions of
+ *    both endpoints, the neighbor's (t, vt, cId) riding on the slot,
+ *    builds the blocks and makes the superstep-2 decisions: every
+ *    vertex with a neighbor decides on its neighbors' initial center
+ *    flags;
+ *  - every later superstep is ONE job of two stages. Each vertex whose
+ *    label changed in the previous superstep sends its new label (its
+ *    center flag is `label == id`) once per partition holding it as a
+ *    ghost; the receiving stage applies the labels and re-decides
+ *    exactly the vertices with a higher-ranked neighbor whose center
+ *    flag flipped.
+ * A decision reads only the center flags of higher-ranked neighbors as
+ * of the previous superstep — what the reference's neighbor cache
+ * holds, since a flag is only sent to lower-ranked neighbors — so the
+ * trajectory is the reference's. A lower-ranked neighbor's flag never
+ * decides an adoption. A non-center vertex can switch centers without
+ * a flag transition: its label still travels, so ghost labels stay
+ * exact, but it makes nobody re-decide. The loop stops when no
+ * flipped vertex has a lower-ranked neighbor (the reference's message
+ * quiescence) or after `maxIterations` supersteps.
+ *
+ * The job result per partition is the round's counts and, when none of
+ * its own labels changed, its community-stat partial. After a
+ * superstep in which no label changed, ghost labels, same-community
+ * degrees and stats are exact, so IDWCC hands that generation to the
+ * fixed-5 refinement as is ([[refineSeed]]).
  */
 object InitialPartition {
+  import RefineState.rankGt
 
-  /** (cc, vt, vId) total order on primitives — no NaN/-0.0 can occur
-   * (cc = 2t/(vt(vt-1)) with t >= 1, vt >= 2 on pruned vertices), so
-   * plain comparisons equal the reference's Ordering. */
-  @inline private def rankGt(cc1: Double, vt1: Int, id1: Long,
-      cc2: Double, vt2: Int, id2: Long): Boolean =
-    cc1 > cc2 || (cc1 == cc2 && (vt1 > vt2 || (vt1 == vt2 && id1 > id2)))
+  /** One partition's superstep result: its changed labels, the changed
+   * vertices whose center flag flipped and that have a lower-ranked
+   * neighbor (the reference's senders of the next superstep), and its
+   * stats partial. */
+  private final class Round(val changed: Long, val pending: Long, val partial: Partial)
+      extends Serializable
 
-  /** The adoption decision (reference `DistributedWCC.scala:186-198`):
-   * adopt the highest-ranked center neighbor if it outranks self,
-   * else become (stay) own center; `changed` is exactly the
-   * center-transition flag. */
-  private[wcc] def decide(self: VertexData, cache: NborCache): PState = {
-    var bi = -1
+  /** A cached seeding generation and its round totals; `stats` is exact
+   * when `changed` is 0. */
+  private[wcc] final class Gen(val blocks: RDD[(Int, VertexBlock)], val changed: Long,
+      val pending: Long, val stats: Map[Long, CommunityData]) {
+    def release(): Unit = blocks.unpersist(blocking = false)
+  }
+
+  /** The seeded partition of `pruned`: the block loop plus one relabel
+   * (cached; its vertices materialized). */
+  def run(pruned: Graph[VertexData, Int], maxIterations: Int = 50): Graph[VertexData, Int] = {
+    val part = new HashPartitioner(pruned.vertices.getNumPartitions)
+    val g = converge(build(pruned.vertices, pruned.triplets.map(t => (t.srcAttr, t.dstAttr)),
+      None, part), part, maxIterations)
+    try RefineState.toGraph(pruned, RefineState.labelsOf(g.blocks)(_.label))
+    finally g.release()
+  }
+
+  /** The converged seeding of `vertices` (under `part`) and `edges`
+   * (each edge's two endpoint records; with `keep`, restricted to its
+   * canonical keys) as the seed generation of the refinement: one more
+   * label-shipping job when the last superstep changed labels, so ghost
+   * labels, same-community degrees and stats are exact. The caller
+   * owns the release. */
+  private[wcc] def refineSeed(vertices: RDD[(VertexId, VertexData)],
+      edges: RDD[(VertexData, VertexData)], keep: Option[RDD[(Long, Long)]],
+      part: HashPartitioner, maxIterations: Int): RefineState = {
+    var g = converge(build(vertices, edges, keep, part), part, maxIterations)
+    if (g.changed > 0) {
+      val last = g
+      g = try superstep(last, part, decide = false) finally last.release()
+    }
+    new RefineState(g.blocks, part, g.stats, 0.0, 0L)
+  }
+
+  /** One job per superstep from the build job's `built` until
+   * quiescence. */
+  private def converge(built: => Gen, part: HashPartitioner, maxIterations: Int): Gen = {
+    val t0 = System.currentTimeMillis()
+    var g = built
+    val t1 = System.currentTimeMillis()
+    var i = 2
+    try {
+      while (g.pending > 0 && i < maxIterations) {
+        val prev = g
+        g = superstep(prev, part, decide = true)
+        prev.release()
+        i += 1
+      }
+    } catch { case t: Throwable => g.release(); throw t }
+    System.err.println(s"[graft-wcc] initial-partition: build ${t1 - t0} ms, " +
+      s"supersteps to $i ${System.currentTimeMillis() - t1} ms")
+    g
+  }
+
+  /** The build job: the blocks of `vertices` (under `part`) and `edges`
+   * — with `keep`, only the edges whose canonical (min, max) key it
+   * holds (duplicate keys allowed) — and the superstep-2 decisions.
+   * The keys travel to both endpoint partitions in the same stage as
+   * the edge slots and filter them there, so the flag join costs no
+   * shuffle of its own. */
+  private[wcc] def build(vertices: RDD[(VertexId, VertexData)],
+      edges: RDD[(VertexData, VertexData)], keep: Option[RDD[(Long, Long)]],
+      part: HashPartitioner): Gen = {
+    val verts = RefineState.underPart(vertices, part)
+    val slots = RefineState.edgeSlots(edges, part, ranks = true)
+    finish(keep match {
+      case None =>
+        verts.zipPartitions(slots, preservesPartitioning = true) { (vIt, sIt) =>
+          block(part, vIt, sIt.map(_._2).toArray, None)
+        }
+      case Some(k) =>
+        verts.zipPartitions(slots, keySlots(k, part), preservesPartitioning = true) {
+          (vIt, sIt, kIt) =>
+            block(part, vIt, sIt.map(_._2).toArray, Some(kIt.map(_._2).toArray))
+        }
+    })
+  }
+
+  /** One partition's seeding block, superstep-2 decisions made */
+  private def block(part: HashPartitioner, vIt: Iterator[(VertexId, VertexData)],
+      slots: Array[EdgeSlots], keys: Option[Array[EdgeSlots]]): Iterator[(Int, VertexBlock)] = {
+    val pid = TaskContext.getPartitionId()
+    val vs = vIt.toArray
+    java.util.Arrays.sort(vs, Ordering.by((v: (VertexId, VertexData)) => v._1))
+    val kept = keys.fold(slots)(restrict(vs.map(_._1), slots, _))
+    val (adj, label, ghostLabel) = RefineState.build(pid, part, vs, kept, ranks = true)
+    Iterator((pid, decideRound(adj, label, ghostLabel, null)))
+  }
+
+  /** every canonical key (s, d) as the pair (s, d) at s's partition and
+   * (d, s) at d's, in the [[EdgeSlots]] form without labels */
+  private def keySlots(keep: RDD[(Long, Long)], part: HashPartitioner): RDD[(Int, EdgeSlots)] =
+    keep.mapPartitions { it =>
+      val self = Array.fill(part.numPartitions)(new ArrayBuilder.ofLong)
+      val nbr = Array.fill(part.numPartitions)(new ArrayBuilder.ofLong)
+      it.foreach { case (s, d) =>
+        val p = part.getPartition(s); self(p) += s; nbr(p) += d
+        val q = part.getPartition(d); self(q) += d; nbr(q) += s
+      }
+      Iterator.range(0, part.numPartitions).map(q =>
+        (q, new EdgeSlots(self(q).result(), nbr(q).result(), null, null, null)))
+    }.partitionBy(part)
+
+  /** the slots whose (self, neighbor) pair is among the `keys`;
+   * `ids` are the partition's vertex ids, ascending */
+  private def restrict(ids: Array[Long], slots: Array[EdgeSlots],
+      keys: Array[EdgeSlots]): Array[EdgeSlots] = {
+    // the keys as sorted neighbor lists per local vertex (CSR)
+    val offs = new Array[Int](ids.length + 1)
+    def local(v: Long) = java.util.Arrays.binarySearch(ids, v)
+    keys.foreach(k => k.self.foreach { v => val i = local(v); if (i >= 0) offs(i + 1) += 1 })
     var i = 0
-    while (i < cache.ids.length) {
-      if (cache.center(i) &&
-          (bi < 0 || rankGt(cache.ccs(i), cache.vts(i), cache.ids(i),
-            cache.ccs(bi), cache.vts(bi), cache.ids(bi)))) bi = i
+    while (i < ids.length) { offs(i + 1) += offs(i); i += 1 }
+    val nbrs = new Array[Long](offs(ids.length))
+    val cursor = java.util.Arrays.copyOf(offs, ids.length)
+    keys.foreach { k =>
+      var x = 0
+      while (x < k.self.length) {
+        val li = local(k.self(x))
+        if (li >= 0) { nbrs(cursor(li)) = k.nbr(x); cursor(li) += 1 }
+        x += 1
+      }
+    }
+    i = 0
+    while (i < ids.length) { java.util.Arrays.sort(nbrs, offs(i), offs(i + 1)); i += 1 }
+    slots.map { s =>
+      val self = new ArrayBuilder.ofLong; val nbr = new ArrayBuilder.ofLong
+      val lab = new ArrayBuilder.ofLong
+      val t = new ArrayBuilder.ofInt; val vt = new ArrayBuilder.ofInt
+      var x = 0
+      while (x < s.self.length) {
+        val li = local(s.self(x))
+        if (li >= 0 && java.util.Arrays.binarySearch(nbrs, offs(li), offs(li + 1), s.nbr(x)) >= 0) {
+          self += s.self(x); nbr += s.nbr(x); lab += s.nbrLabel(x)
+          t += s.nbrT(x); vt += s.nbrVt(x)
+        }
+        x += 1
+      }
+      new EdgeSlots(self.result(), nbr.result(), lab.result(), t.result(), vt.result())
+    }
+  }
+
+  /** One superstep (one job): ship the labels the previous superstep
+   * changed, then — with `decide` — re-decide the vertices with a
+   * flipped higher-ranked neighbor. */
+  private[wcc] def superstep(g: Gen, part: HashPartitioner, decide: Boolean): Gen = {
+    val moves = g.blocks.mapPartitions { it =>
+      val (pid, b) = it.next()
+      RefineState.sendMoves(pid, b.adj, b.prevLabel, b.label, 0.0, part.numPartitions)
+    }.partitionBy(part)
+    finish(g.blocks.zipPartitions(moves, preservesPartitioning = true) { (bIt, mIt) =>
+      val (pid, b) = bIt.next()
+      val adj = b.adj
+      val ghostLabel = b.ghostLabel.clone()
+      val ghostFlip = new Array[Boolean](adj.ghosts.length)
+      mIt.foreach { case (_, m) =>
+        if (m.src != pid) {
+          var k = 0
+          while (k < m.ids.length) {
+            val x = java.util.Arrays.binarySearch(adj.ghosts, m.ids(k))
+            val id = adj.ghosts(x)
+            ghostFlip(x) = (ghostLabel(x) == id) != (m.labels(k) == id)
+            ghostLabel(x) = m.labels(k)
+            k += 1
+          }
+        }
+      }
+      val next =
+        if (decide) decideRound(adj, b.label, ghostLabel, receivers(b, ghostFlip))
+        else new VertexBlock(adj, b.label, ghostLabel,
+          RefineState.ownDegrees(adj, b.label, ghostLabel), null, b.label, 0.0, 0L)
+      Iterator((pid, next))
+    })
+  }
+
+  /** Per vertex: whether a higher-ranked neighbor's center flag flipped
+   * in the superstep that built `b` (`ghostFlip` for the ghosts). */
+  private def receivers(b: VertexBlock, ghostFlip: Array[Boolean]): Array[Boolean] = {
+    val adj = b.adj
+    val up = adj.rank.up
+    val flip = Array.tabulate(adj.n)(i => flipped(adj.ids(i), b.prevLabel(i), b.label(i)))
+    val recv = new Array[Boolean](adj.n)
+    if (flip.contains(true) || ghostFlip.contains(true)) {
+      var i = 0
+      while (i < adj.n) {
+        var j = adj.offs(i)
+        while (!recv(i) && j < adj.offs(i + 1)) {
+          val r = adj.ref(j)
+          recv(i) = up(j) && (if (r >= 0) flip(r) else ghostFlip(~r))
+          j += 1
+        }
+        i += 1
+      }
+    }
+    recv
+  }
+
+  @inline private def flipped(id: Long, before: Long, after: Long): Boolean =
+    (before == id) != (after == id)
+
+  /** The decisions of one superstep over `label` and `ghostLabel` (the
+   * previous superstep's): the vertices with a neighbor and `recv` set
+   * (all of them when `recv` is null) re-decide. The result's
+   * `prevLabel` is `label`; it has same-community degrees when no own
+   * label changed. */
+  private def decideRound(adj: Adjacency, label: Array[Long], ghostLabel: Array[Long],
+      recv: Array[Boolean]): VertexBlock = {
+    val next = label.clone()
+    var changed = false
+    var i = 0
+    while (i < adj.n) {
+      if (adj.deg(i) > 0 && (recv == null || recv(i))) {
+        next(i) = adopt(adj, label, ghostLabel, i)
+        changed ||= next(i) != label(i)
+      }
       i += 1
     }
-    if (bi >= 0 && rankGt(cache.ccs(bi), cache.vts(bi), cache.ids(bi),
-        self.cc, self.vt, self.vId))
-      PState(self.copy(cId = cache.ids(bi)), changed = self.isCenter, cache)
-    else
-      PState(self.copy(cId = self.vId), changed = !self.isCenter, cache)
+    val own = if (changed) null else RefineState.ownDegrees(adj, next, ghostLabel)
+    new VertexBlock(adj, next, ghostLabel, own, null, label, 0.0, 0L)
   }
 
-  /** Superstep-2 vertex program (the cache-building receipt of the
-   * initial broadcast, reference `DistributedWCC.scala:169-207`):
-   * sort the received coordinates by sender id (unique by
-   * construction; the defensive self-drop mirrors the reference's
-   * self-message no-op branch) and build the id-sorted cache. */
-  private[wcc] def vprog(st: PState, m: SeedMsg): PState = {
-    val self = st.data
-    val order0 = Array.range(0, m.size)
-      .filter(k => m.ids(k) != self.vId)
-      .sortBy(m.ids(_))
-    // collapse duplicate senders: the old Map[Long, NborMsg] combiner
-    // deduped by sender id implicitly; the parallel-array SeedMsg
-    // keeps every copy, and a duplicated cache entry would let
-    // applyFlags' binarySearch flip only ONE copy on a center
-    // transition, leaving decide() reading the stale twin. Duplicate
-    // senders are outside the canonical-edge contract (no parallel
-    // edges survive canonicalize, and micro-batch edges are new by
-    // construction), but dedup here is one adjacent-equality pass —
-    // cheaper than trusting every caller forever. Payloads from the
-    // same sender are identical (one vertex, one attribute), so
-    // keeping the first is deterministic.
-    val order = if (order0.length < 2) order0 else {
-      var dups = 0
-      var k = 1
-      while (k < order0.length) {
-        if (m.ids(order0(k)) == m.ids(order0(k - 1))) dups += 1
-        k += 1
-      }
-      if (dups == 0) order0 else {
-        val out = new Array[Int](order0.length - dups)
-        out(0) = order0(0)
-        var w = 1; k = 1
-        while (k < order0.length) {
-          if (m.ids(order0(k)) != m.ids(order0(k - 1))) { out(w) = order0(k); w += 1 }
-          k += 1
+  /** The adoption decision (reference `DistributedWCC.scala:186-198`):
+   * the highest-ranked center among the neighbors that outrank vertex
+   * i, else i itself. Duplicate adjacency slots cannot change it. */
+  private def adopt(adj: Adjacency, label: Array[Long], ghostLabel: Array[Long],
+      i: Int): Long = {
+    val rk = adj.rank
+    var found = false
+    var bCc = 0.0; var bVt = 0; var bId = 0L
+    var j = adj.offs(i)
+    while (j < adj.offs(i + 1)) {
+      if (rk.up(j)) {
+        val r = adj.ref(j)
+        val id = if (r >= 0) adj.ids(r) else adj.ghosts(~r)
+        if ((if (r >= 0) label(r) else ghostLabel(~r)) == id) {
+          val cc = if (r >= 0) rk.cc(r) else rk.ghostCc(~r)
+          val vt = if (r >= 0) adj.vt(r) else rk.ghostVt(~r)
+          if (!found || rankGt(cc, vt, id, bCc, bVt, bId)) {
+            found = true; bCc = cc; bVt = vt; bId = id
+          }
         }
-        out
-      }
-    }
-    val cache = NborCache(order.map(m.ids(_)), order.map(m.vts(_)),
-      order.map(m.ccs(_)), order.map(m.centers(_)))
-    decide(self, cache)
-  }
-
-  /** Steady-state vertex program: flip the senders' cached center
-   * flags (copy-on-write) and re-run the adoption decision. */
-  private[wcc] def applyFlags(st: PState, m: FlagMsg): PState = {
-    val c = st.neighbors
-    var center = c.center
-    var copied = false
-    var j = 0
-    while (j < m.size) {
-      val idx = java.util.Arrays.binarySearch(c.ids, m.ids(j))
-      if (idx >= 0 && center(idx) != m.flags(j)) {
-        if (!copied) { center = center.clone(); copied = true }
-        center(idx) = m.flags(j)
       }
       j += 1
     }
-    decide(st.data,
-      if (copied) NborCache(c.ids, c.vts, c.ccs, center) else c)
+    if (found) bId else adj.ids(i)
   }
 
-  def run(pruned: Graph[VertexData, Int], maxIterations: Int = 50): Graph[VertexData, Int] = {
-    val nEdges = pruned.edges.count()
-    // loop partitioner sized to the resident state (the caches are
-    // O(sum of pruned degrees)); floor 8 keeps the one full shuffle
-    // parallel, cap at the edge RDD's own partitioning
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(pruned.edges.getNumPartitions,
-        (2 * nEdges / 500000L).toInt)))
+  /** Persists `blocks` and runs the round's one job on it. */
+  private def finish(blocks: RDD[(Int, VertexBlock)]): Gen = {
+    blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rounds = blocks.sparkContext.runJob(blocks, roundOf _)
+      val (stats, _, _) = RefineState.merge(rounds.map(_.partial))
+      new Gen(blocks, rounds.map(_.changed).sum, rounds.map(_.pending).sum, stats)
+    } catch { case t: Throwable => blocks.unpersist(blocking = false); throw t }
+  }
 
-    // Superstep 1: every vertex broadcasts itself to all neighbors
-    // (`DistributedWCC.scala:161-166`) — the loop's only full
-    // exchange, and the only GraphX step.
-    val msgs0: VertexRDD[SeedMsg] = pruned.aggregateMessages(
-      ctx => {
-        val s = ctx.srcAttr; val d = ctx.dstAttr
-        ctx.sendToDst(new SeedMsg(s.vId, s.vt, s.cc, s.isCenter))
-        ctx.sendToSrc(new SeedMsg(d.vId, d.vt, d.cc, d.isCenter))
-      },
-      SeedMsg.merge)
-
-    // Superstep 2 builds the caches and makes the first decisions;
-    // from here the state lives under the loop partitioner.
-    var state: org.apache.spark.rdd.RDD[(Long, PState)] = pruned.vertices
-      .leftJoin(msgs0) { (_, vd, mOpt) =>
-        mOpt match {
-          case Some(m) => vprog(PState(vd, changed = true, NborCache.empty), m)
-          case None    => PState(vd, changed = false, NborCache.empty)
+  /** The job-result function of a seeding generation's block */
+  private def roundOf(it: Iterator[(Int, VertexBlock)]): Round = {
+    val b = it.next()._2
+    val adj = b.adj
+    var changed = 0L; var pending = 0L
+    var i = 0
+    while (i < adj.n) {
+      if (b.label(i) != b.prevLabel(i)) {
+        changed += 1
+        if (flipped(adj.ids(i), b.prevLabel(i), b.label(i))) {
+          var j = adj.offs(i)
+          var lower = false
+          while (!lower && j < adj.offs(i + 1)) {
+            lower = !adj.rank.up(j) && adj.nbrs(j) != adj.ids(i)
+            j += 1
+          }
+          if (lower) pending += 1
         }
       }
-      .partitionBy(p)
-    state.persist(StorageLevel.MEMORY_AND_DISK_SER)
-
-    // One Spark job per superstep: the msgs count is the round's only
-    // action and materializes the current state generation en route,
-    // so unpersists trail by one generation.
-    var prevState: org.apache.spark.rdd.RDD[(Long, PState)] = null
-    var prevMsgs: org.apache.spark.rdd.RDD[(Long, FlagMsg)] = null
-    var i = 2
-    var quiescent = false
-    while (!quiescent && i < maxIterations) {
-      // send phase (`DistributedWCC.scala:210-218`): a vertex whose
-      // center-ness flipped sends its new flag to every strictly
-      // lower-ranked neighbor — neighbor ids and (immutable) ranks
-      // come from the sender's own cache
-      val msgs = state.mapPartitions(_.flatMap { case (_, st) =>
-        if (!st.changed) Iterator.empty
-        else {
-          val self = st.data
-          val c = st.neighbors
-          val flag = self.isCenter
-          val out = Iterator.range(0, c.ids.length).filter { k =>
-            rankGt(self.cc, self.vt, self.vId, c.ccs(k), c.vts(k), c.ids(k))
-          }.map(k => (c.ids(k), new FlagMsg(self.vId, flag)))
-          out
-        }
-      })
-        .combineByKey[FlagMsg](
-          (m: FlagMsg) => m,
-          (acc: FlagMsg, m: FlagMsg) => acc.addAll(m),
-          (a: FlagMsg, b: FlagMsg) => FlagMsg.merge(a, b),
-          p)
-      msgs.persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val n = msgs.count() // materializes `state` (its one consumer)
-      if (prevState != null) prevState.unpersist(blocking = false)
-      if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
-      if (n == 0) {
-        quiescent = true
-        msgs.unpersist(blocking = false)
-      } else {
-        i += 1
-        prevState = state
-        prevMsgs = msgs
-        // both sides live under p: hash the (frontier-sized) message
-        // side per partition and stream the state — a zipPartitions
-        // merge, not a cogroup that re-buffers the full state every
-        // superstep
-        state = prevState.zipPartitions(msgs, preservesPartitioning = true) {
-          (sIt, mIt) =>
-            val mm = new java.util.HashMap[Long, FlagMsg]()
-            mIt.foreach(kv => mm.put(kv._1, kv._2))
-            sIt.map { case (id, st) =>
-              val m = mm.get(id)
-              val next =
-                if (m != null) applyFlags(st, m)
-                // the consumed send-gate clears on non-receivers so a
-                // vertex only sends in the superstep after it ran
-                else if (st.changed) st.copy(changed = false)
-                else st
-              (id, next)
-            }
-        }
-        state.persist(StorageLevel.MEMORY_AND_DISK_SER)
-      }
+      i += 1
     }
-    state.count() // materialize the final generation
-    if (prevState != null) prevState.unpersist(blocking = false)
-    if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
-    System.err.println(s"[graft-wcc] initial-partition supersteps: $i")
-
-    val finalState = state
-    val out = pruned.outerJoinVertices(state.mapValues(_.data)) { (_, old, opt) =>
-      opt.getOrElse(old)
-    }
-    out.cache()
-    // force vertices AND edges so the loop state (and the input's
-    // shipped attrs) can be dropped
-    out.vertices.count()
-    out.edges.count()
-    finalState.unpersist(blocking = false)
-    out
+    new Round(changed, pending, RefineState.partial(b))
   }
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuilder
 
 import graft.graph.SortedIntersect
 import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
@@ -19,14 +20,25 @@ import org.apache.spark.storage.StorageLevel
  *                  (>= 0), or `~g` for ghost g (a neighbor that lives
  *                  in another partition)
  * @param ghosts    ids of the remote neighbors, ascending
- * @param ghostPart partition of each ghost */
+ * @param ghostPart partition of each ghost
+ * @param rank      the seeding ranks ([[SeedRanks]]), or null when the
+ *                  block was built for refinement alone */
 private[wcc] final class Adjacency(
     val ids: Array[Long], val t: Array[Int], val vt: Array[Int],
     val offs: Array[Int], val nbrs: Array[Long], val ref: Array[Int],
-    val ghosts: Array[Long], val ghostPart: Array[Int]) extends Serializable {
+    val ghosts: Array[Long], val ghostPart: Array[Int],
+    val rank: SeedRanks) extends Serializable {
   def n: Int = ids.length
   def deg(i: Int): Int = offs(i + 1) - offs(i)
 }
+
+/** What the clustering-coefficient seeding ([[InitialPartition]])
+ * needs beyond the adjacency: the cc of every local vertex and ghost,
+ * the ghosts' vt (the ids are the adjacency's), and per adjacency slot
+ * whether the neighbor outranks the slot's own vertex in the
+ * (cc, vt, id) order. Immutable for the whole seeding. */
+private[wcc] final class SeedRanks(val cc: Array[Double], val ghostCc: Array[Double],
+    val ghostVt: Array[Int], val up: Array[Boolean]) extends Serializable
 
 /** One partition of a refinement generation, in primitive arrays:
  * the shared [[Adjacency]], the own labels, the ghosts' labels (the
@@ -63,7 +75,8 @@ private[wcc] final class VertexBlock(
 
 /** Stage A -> B message: new labels of moved vertices. A partition
  * always sends one to itself (`src` == target), which also carries
- * its WCC_V sum and move count to the job result. */
+ * its WCC_V sum and move count to the job result. The seeding
+ * supersteps ship their changed labels in the same form. */
 private[wcc] final class Moves(val src: Int, val ids: Array[Long],
     val labels: Array[Long], val wcc: Double, val moved: Long) extends Serializable
 
@@ -73,9 +86,11 @@ private[wcc] final class SameSets(val ids: Array[Long],
     val sets: Array[Array[Long]]) extends Serializable
 
 /** Build-time edge slots bound for one partition: (self, neighbor,
- * neighbor label). */
+ * neighbor label), plus the neighbor's t and vt when the block is
+ * built for the seeding (null otherwise). */
 private[wcc] final class EdgeSlots(val self: Array[Long], val nbr: Array[Long],
-    val nbrLabel: Array[Long]) extends Serializable
+    val nbrLabel: Array[Long], val nbrT: Array[Int], val nbrVt: Array[Int])
+    extends Serializable
 
 /** One partition's job result: its community-stat partial (per
  * community: members, summed same-community degree, summed external
@@ -84,12 +99,18 @@ private[wcc] final class Partial(val cIds: Array[Long], val sums: Array[Long],
     val wcc: Double, val moved: Long) extends Serializable
 
 /**
- * Co-partitioned vertex state of the WCC refinement loops (ROADMAP
- * D3): a `HashPartitioner` pair RDD over the pruned core holding ONE
- * cached [[VertexBlock]] per partition — the layout of GraphX's vertex
+ * Co-partitioned vertex state of the WCC loops (ROADMAP D3): a
+ * `HashPartitioner` pair RDD over the pruned core holding ONE cached
+ * [[VertexBlock]] per partition — the layout of GraphX's vertex
  * partitions, without per-vertex objects. Vertex v lives in partition
  * `part.getPartition(v)`; a block is keyed by its partition index,
  * which the same partitioner maps to itself.
+ *
+ * A state is built in one job: by [[RefineState.seed]] from a labeled
+ * `Graph`, or — in IDWCC — by the clustering-coefficient seeding
+ * itself ([[InitialPartition.refineSeed]]), whose supersteps run on
+ * the same blocks and whose converged generation is handed over as
+ * is, so no `Graph` is built between the prune and the final labels.
  *
  * [[step]] advances a generation with ONE Spark job of at most three
  * stages:
@@ -111,14 +132,23 @@ private[wcc] final class Partial(val cIds: Array[Long], val sums: Array[Long],
  *                (0 for a seed state)
  * @param moved   vertices whose label changed building this one
  */
-final class RefineState private (
+final class RefineState private[wcc] (
     private[wcc] val blocks: RDD[(Int, VertexBlock)],
     private[wcc] val part: HashPartitioner,
     val stats: Map[Long, CommunityData], private[graft] val wccPrev: Double,
     private[graft] val moved: Long) {
   import RefineState._
 
-  def release(): Unit = blocks.unpersist(blocking = false)
+  /** the stats broadcast of a pending [[movedVertices]], which its
+   * consumer's action reads */
+  private var movedStats: Broadcast[Map[Long, CommunityData]] = null
+
+  /** Drops the cached blocks, and the stats broadcast of
+   * [[movedVertices]] — call it once that RDD has been materialized. */
+  def release(): Unit = {
+    blocks.unpersist(blocking = false)
+    if (movedStats != null) movedStats.unpersist(blocking = false)
+  }
 
   /** Global WCC of this generation under its own stats: one job over
    * the cached blocks (needs triangle counts). */
@@ -143,7 +173,8 @@ final class RefineState private (
       val (pid, b) = it.next()
       val s = bStats.value
       val wcc = if (score) wccSum(b, s) else 0.0
-      sendMoves(pid, b, decide(b, s, globalCC, vertexCount), wcc, p.numPartitions)
+      sendMoves(pid, b.adj, b.label, decide(b, s, globalCC, vertexCount), wcc,
+        p.numPartitions)
     }.partitionBy(p)
     val moved = blocks.zipPartitions(moves, preservesPartitioning = true)(applyMoves)
     val next = if (countTriangles) withTriangles(moved, p) else moved
@@ -156,26 +187,26 @@ final class RefineState private (
     finally bStats.unpersist(blocking = false)
   }
 
-  /** Labels after one more movement, without building a generation —
-   * the final fixed-5 iteration, which only feeds the output graph.
-   * Lazy: the caller's action runs stage A. */
-  private[wcc] def movedLabels(globalCC: Double, vertexCount: Long): RDD[(VertexId, Long)] = {
+  /** The vertices after one more movement, without building a
+   * generation — the final fixed-5 iteration, which only feeds the
+   * graft-back. Lazy: the caller's action runs stage A, and
+   * [[release]] then drops the stats broadcast it reads. */
+  private[wcc] def movedVertices(globalCC: Double,
+      vertexCount: Long): RDD[(VertexId, VertexData)] = {
+    require(movedStats == null, "movedVertices is already pending on this state")
     val bStats = blocks.sparkContext.broadcast(stats)
-    labelsOf(decide(_, bStats.value, globalCC, vertexCount))
+    movedStats = bStats
+    verticesOf(blocks)(decide(_, bStats.value, globalCC, vertexCount))
   }
 
+  /** this generation's vertices, under [[part]] */
+  private[wcc] def vertices: RDD[(VertexId, VertexData)] = verticesOf(blocks)(_.label)
+
   /** this generation's labels, under [[part]] */
-  private[wcc] def labels: RDD[(VertexId, Long)] = labelsOf(_.label)
+  private[wcc] def labels: RDD[(VertexId, Long)] = labelsOf(blocks)(_.label)
 
   /** labels of the generation this one was moved from */
-  private[wcc] def prevLabels: RDD[(VertexId, Long)] = labelsOf(_.prevLabel)
-
-  private def labelsOf(f: VertexBlock => Array[Long]): RDD[(VertexId, Long)] =
-    blocks.mapPartitions({ it =>
-      val b = it.next()._2
-      val l = f(b)
-      Iterator.range(0, l.length).map(i => (b.adj.ids(i), l(i)))
-    }, preservesPartitioning = true)
+  private[wcc] def prevLabels: RDD[(VertexId, Long)] = labelsOf(blocks)(_.prevLabel)
 }
 
 private[graft] object RefineState {
@@ -186,32 +217,16 @@ private[graft] object RefineState {
    * caller owns the release. */
   def seed(graph: Graph[VertexData, Int], countTriangles: Boolean): RefineState = {
     val part = new HashPartitioner(graph.vertices.getNumPartitions)
-    val verts: RDD[(VertexId, VertexData)] =
-      if (graph.vertices.partitioner.contains(part)) graph.vertices
-      else graph.vertices.partitionBy(part)
-    val slots = graph.triplets.mapPartitions { it =>
-      val self = new Array[ArrayBuilder.ofLong](part.numPartitions)
-      val nbr = new Array[ArrayBuilder.ofLong](part.numPartitions)
-      val lab = new Array[ArrayBuilder.ofLong](part.numPartitions)
-      def add(u: Long, v: Long, lv: Long): Unit = {
-        val q = part.getPartition(u)
-        if (self(q) == null) {
-          self(q) = new ArrayBuilder.ofLong; nbr(q) = new ArrayBuilder.ofLong
-          lab(q) = new ArrayBuilder.ofLong
-        }
-        self(q) += u; nbr(q) += v; lab(q) += lv
+    val slots = edgeSlots(graph.triplets.map(t => (t.srcAttr, t.dstAttr)), part,
+      ranks = false)
+    val base = underPart(graph.vertices, part)
+      .zipPartitions(slots, preservesPartitioning = true) { (vIt, sIt) =>
+        val pid = TaskContext.getPartitionId()
+        val (adj, label, ghostLabel) =
+          build(pid, part, vIt.toArray, sIt.map(_._2).toArray, ranks = false)
+        Iterator((pid, new VertexBlock(adj, label, ghostLabel,
+          ownDegrees(adj, label, ghostLabel), null, null, 0.0, 0L)))
       }
-      it.foreach { t =>
-        add(t.srcId, t.dstId, t.dstAttr.cId)
-        add(t.dstId, t.srcId, t.srcAttr.cId)
-      }
-      Iterator.range(0, self.length).filter(self(_) != null).map(q =>
-        (q, new EdgeSlots(self(q).result(), nbr(q).result(), lab(q).result())))
-    }.partitionBy(part)
-    val base = verts.zipPartitions(slots, preservesPartitioning = true) { (vIt, sIt) =>
-      val pid = TaskContext.getPartitionId()
-      Iterator((pid, build(pid, part, vIt.toArray, sIt.map(_._2).toArray)))
-    }
     val blocks = if (countTriangles) withTriangles(base, part) else base
     blocks.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -235,8 +250,64 @@ private[graft] object RefineState {
     g
   }
 
-  private def build(pid: Int, part: HashPartitioner,
-      vs: Array[(VertexId, VertexData)], slots: Array[EdgeSlots]): VertexBlock = {
+  /** per vertex of `blocks`: its id and `f` of its block */
+  private[wcc] def labelsOf(blocks: RDD[(Int, VertexBlock)])(
+      f: VertexBlock => Array[Long]): RDD[(VertexId, Long)] =
+    blocks.mapPartitions({ it =>
+      val b = it.next()._2
+      val l = f(b)
+      Iterator.range(0, l.length).map(i => (b.adj.ids(i), l(i)))
+    }, preservesPartitioning = true)
+
+  /** per vertex of `blocks`: its [[VertexData]] labeled by `f` of its block */
+  private def verticesOf(blocks: RDD[(Int, VertexBlock)])(
+      f: VertexBlock => Array[Long]): RDD[(VertexId, VertexData)] =
+    blocks.mapPartitions({ it =>
+      val b = it.next()._2
+      val l = f(b)
+      val a = b.adj
+      Iterator.range(0, l.length).map(i => (a.ids(i), VertexData(a.ids(i), a.t(i), a.vt(i), l(i))))
+    }, preservesPartitioning = true)
+
+  /** `vertices` under `part`, without a shuffle when already there */
+  private[wcc] def underPart(vertices: RDD[(VertexId, VertexData)],
+      part: HashPartitioner): RDD[(VertexId, VertexData)] =
+    if (vertices.partitioner.contains(part)) vertices else vertices.partitionBy(part)
+
+  /** The build's one shuffle: each edge (its two endpoint records) as a
+   * slot at each endpoint's partition, carrying the other endpoint's
+   * id and label — and, with `ranks`, its t and vt. */
+  private[wcc] def edgeSlots(edges: RDD[(VertexData, VertexData)], part: HashPartitioner,
+      ranks: Boolean): RDD[(Int, EdgeSlots)] =
+    edges.mapPartitions { it =>
+      val n = part.numPartitions
+      val self = new Array[ArrayBuilder.ofLong](n)
+      val nbr = new Array[ArrayBuilder.ofLong](n)
+      val lab = new Array[ArrayBuilder.ofLong](n)
+      val nt = new Array[ArrayBuilder.ofInt](n)
+      val nvt = new Array[ArrayBuilder.ofInt](n)
+      def add(u: Long, v: VertexData): Unit = {
+        val q = part.getPartition(u)
+        if (self(q) == null) {
+          self(q) = new ArrayBuilder.ofLong; nbr(q) = new ArrayBuilder.ofLong
+          lab(q) = new ArrayBuilder.ofLong
+          if (ranks) { nt(q) = new ArrayBuilder.ofInt; nvt(q) = new ArrayBuilder.ofInt }
+        }
+        self(q) += u; nbr(q) += v.vId; lab(q) += v.cId
+        if (ranks) { nt(q) += v.t; nvt(q) += v.vt }
+      }
+      it.foreach { case (s, d) => add(s.vId, d); add(d.vId, s) }
+      Iterator.range(0, n).filter(self(_) != null).map(q =>
+        (q, new EdgeSlots(self(q).result(), nbr(q).result(), lab(q).result(),
+          if (ranks) nt(q).result() else null, if (ranks) nvt(q).result() else null)))
+    }.partitionBy(part)
+
+  /** One partition's adjacency, own labels and ghost labels from its
+   * vertices and edge slots; with `ranks` (the slots then carry the
+   * neighbors' t and vt) the adjacency carries [[SeedRanks]]. */
+  private[wcc] def build(pid: Int, part: HashPartitioner,
+      vs: Array[(VertexId, VertexData)], slots: Array[EdgeSlots],
+      ranks: Boolean): (Adjacency, Array[Long], Array[Long]) = {
     java.util.Arrays.sort(vs, Ordering.by((v: (VertexId, VertexData)) => v._1))
     val n = vs.length
     val ids = vs.map(_._1)
@@ -255,6 +326,8 @@ private[graft] object RefineState {
     val ghosts = distinctSorted(ghostIds.result())
     ghostIds = null
     val ghostLabel = new Array[Long](ghosts.length)
+    val ghostCc = if (ranks) new Array[Double](ghosts.length) else null
+    val ghostVt = if (ranks) new Array[Int](ghosts.length) else null
     val nbrs = new Array[Long](offs(n))
     val cursor = java.util.Arrays.copyOf(offs, n)
     slots.foreach { s =>
@@ -262,8 +335,11 @@ private[graft] object RefineState {
       while (k < s.self.length) {
         val li = localIndex(ids, s.self(k))
         nbrs(cursor(li)) = s.nbr(k); cursor(li) += 1
-        if (part.getPartition(s.nbr(k)) != pid)
-          ghostLabel(java.util.Arrays.binarySearch(ghosts, s.nbr(k))) = s.nbrLabel(k)
+        if (part.getPartition(s.nbr(k)) != pid) {
+          val g = java.util.Arrays.binarySearch(ghosts, s.nbr(k))
+          ghostLabel(g) = s.nbrLabel(k)
+          if (ranks) { ghostCc(g) = VertexData.cc(s.nbrT(k), s.nbrVt(k)); ghostVt(g) = s.nbrVt(k) }
+        }
         k += 1
       }
     }
@@ -280,12 +356,36 @@ private[graft] object RefineState {
       }
       i += 1
     }
-    val adj = new Adjacency(ids, vs.map(_._2.t), vs.map(_._2.vt), offs, nbrs, ref,
-      ghosts, ghosts.map(part.getPartition))
-    val label = vs.map(_._2.cId)
-    new VertexBlock(adj, label, ghostLabel, ownDegrees(adj, label, ghostLabel),
-      null, null, 0.0, 0L)
+    val t = vs.map(_._2.t)
+    val vt = vs.map(_._2.vt)
+    val rank = if (!ranks) null else {
+      val cc = Array.tabulate(n)(k => VertexData.cc(t(k), vt(k)))
+      val up = new Array[Boolean](nbrs.length)
+      i = 0
+      while (i < n) {
+        var j = offs(i)
+        while (j < offs(i + 1)) {
+          val r = ref(j)
+          up(j) =
+            if (r >= 0) rankGt(cc(r), vt(r), ids(r), cc(i), vt(i), ids(i))
+            else rankGt(ghostCc(~r), ghostVt(~r), ghosts(~r), cc(i), vt(i), ids(i))
+          j += 1
+        }
+        i += 1
+      }
+      new SeedRanks(cc, ghostCc, ghostVt, up)
+    }
+    val adj = new Adjacency(ids, t, vt, offs, nbrs, ref, ghosts,
+      ghosts.map(part.getPartition), rank)
+    (adj, vs.map(_._2.cId), ghostLabel)
   }
+
+  /** The seeding's total order on (cc, vt, id), on primitives: cc is
+   * never NaN or -0.0 ([[VertexData.cc]] of non-negative counts), so
+   * plain comparisons equal [[VertexData.ordering]]. */
+  @inline private[wcc] def rankGt(cc1: Double, vt1: Int, id1: Long,
+      cc2: Double, vt2: Int, id2: Long): Boolean =
+    cc1 > cc2 || (cc1 == cc2 && (vt1 > vt2 || (vt1 == vt2 && id1 > id2)))
 
   private def localIndex(ids: Array[Long], v: Long): Int = {
     val i = java.util.Arrays.binarySearch(ids, v)
@@ -303,7 +403,7 @@ private[graft] object RefineState {
     java.util.Arrays.copyOf(a, w)
   }
 
-  private def ownDegrees(adj: Adjacency, label: Array[Long],
+  private[wcc] def ownDegrees(adj: Adjacency, label: Array[Long],
       ghostLabel: Array[Long]): Array[Int] = {
     val own = new Array[Int](adj.n)
     var i = 0
@@ -365,12 +465,12 @@ private[graft] object RefineState {
     next
   }
 
-  /** Stage A's output: the self message (moved own vertices plus the
-   * partition's WCC_V sum and move count), then one message per other
-   * partition holding a neighbor of a moved vertex. */
-  private def sendMoves(pid: Int, b: VertexBlock, next: Array[Long], wcc: Double,
-      numParts: Int): Iterator[(Int, Moves)] = {
-    val adj = b.adj
+  /** Stage A's output: the self message (the vertices whose label
+   * differs between `from` and `to`, plus the partition's WCC_V sum
+   * and move count), then one message per other partition holding a
+   * neighbor of such a vertex. */
+  private[wcc] def sendMoves(pid: Int, adj: Adjacency, from: Array[Long],
+      to: Array[Long], wcc: Double, numParts: Int): Iterator[(Int, Moves)] = {
     val ids = new Array[ArrayBuilder.ofLong](numParts)
     val labs = new Array[ArrayBuilder.ofLong](numParts)
     def add(q: Int, v: Long, l: Long): Unit = {
@@ -381,15 +481,15 @@ private[graft] object RefineState {
     var moved = 0L
     var i = 0
     while (i < adj.n) {
-      if (next(i) != b.label(i)) {
+      if (to(i) != from(i)) {
         moved += 1
-        add(pid, adj.ids(i), next(i))
+        add(pid, adj.ids(i), to(i))
         var j = adj.offs(i)
         while (j < adj.offs(i + 1)) {
           val r = adj.ref(j)
           if (r < 0) {
             val q = adj.ghostPart(~r)
-            if (stamp(q) != i + 1) { stamp(q) = i + 1; add(q, adj.ids(i), next(i)) }
+            if (stamp(q) != i + 1) { stamp(q) = i + 1; add(q, adj.ids(i), to(i)) }
           }
           j += 1
         }
@@ -491,8 +591,13 @@ private[graft] object RefineState {
   }
 
   /** The job-result function: a block's stats partial and carried sums */
-  private def partialOf(it: Iterator[(Int, VertexBlock)]): Partial = {
-    val b = it.next()._2
+  private def partialOf(it: Iterator[(Int, VertexBlock)]): Partial = partial(it.next()._2)
+
+  /** a block's stats partial (none while its same-community degrees
+   * are unknown) and carried sums */
+  private[wcc] def partial(b: VertexBlock): Partial = {
+    if (b.own == null)
+      return new Partial(Array.emptyLongArray, Array.emptyLongArray, b.wccPrev, b.moved)
     val m = new java.util.HashMap[Long, Array[Long]]()
     var i = 0
     while (i < b.adj.n) {
@@ -514,7 +619,7 @@ private[graft] object RefineState {
    * community stats (integer sums: a(c) is half the summed
    * same-community degree, every internal edge being seen from both
    * ends), the WCC_V sum and the move count. */
-  private def merge(parts: Array[Partial]): (Map[Long, CommunityData], Double, Long) = {
+  private[wcc] def merge(parts: Array[Partial]): (Map[Long, CommunityData], Double, Long) = {
     val m = new java.util.HashMap[Long, Array[Long]]()
     parts.foreach { p =>
       var k = 0

@@ -4,8 +4,10 @@ package graft.wcc
  * Core record types of the WCC pipeline.
  *
  * Immutable re-modeling of the reference's mutable records
- * (`VertexData.scala:13-54`, `VertexMessage.scala:7-49`,
- * `CommunityData.scala:11-32` in the reference repo).
+ * (`VertexData.scala:13-54`, `CommunityData.scala:11-32` in the
+ * reference repo). The reference's per-vertex neighbor list and
+ * `VertexMessage` of the seeding have no record here: the seeding runs
+ * on the columnar blocks of [[RefineState]].
  */
 
 /** Per-vertex triangle/community state.
@@ -20,59 +22,19 @@ package graft.wcc
 final case class VertexData(vId: Long, t: Int, vt: Int, cId: Long) {
   /** F1: clustering coefficient, 0 when vt < 2
    * (reference `VertexData.scala:16-22`). */
-  def cc: Double = if (vt < 2) 0.0 else 2.0 * t / (vt.toLong * (vt - 1))
+  def cc: Double = VertexData.cc(t, vt)
   def isCenter: Boolean = vId == cId
 }
 
 object VertexData {
+  /** [[VertexData.cc]] of the counts (t, vt) */
+  def cc(t: Int, vt: Int): Double = if (vt < 2) 0.0 else 2.0 * t / (vt.toLong * (vt - 1))
+
   /** Load-bearing total order deciding community centers
    * (reference `VertexData.scala:57-59`). */
   implicit val ordering: Ordering[VertexData] =
     Ordering.by((d: VertexData) => (d.cc, d.vt, d.vId))
 }
-
-/** Pregel message for the initial-partition phase: the sender's
- * decision-relevant coordinates. (cc, vt, vId) are immutable during
- * the Pregel; only cId (and so center-ness) evolves. */
-final case class NborMsg(vId: Long, vt: Int, cc: Double, cId: Long) {
-  def isCenter: Boolean = vId == cId
-}
-
-object NborMsg {
-  def of(d: VertexData): NborMsg = NborMsg(d.vId, d.vt, d.cc, d.cId)
-  /** Same total order as VertexData (reference `VertexMessage.scala:46-48`). */
-  implicit val ordering: Ordering[NborMsg] =
-    Ordering.by((m: NborMsg) => (m.cc, m.vt, m.vId))
-}
-
-/** Compact neighbor cache for the initial-partition Pregel: each
- * neighbor's decision-relevant coordinates in id-sorted parallel
- * PRIMITIVE arrays. (cc, vt, id) are immutable during the loop —
- * a later message can only flip the sender's center-ness — so one
- * boolean per neighbor replaces a boxed Map entry. This is the
- * pipeline's largest resident state (O(sum of pruned degrees) per
- * superstep generation); the array form is ~8x smaller than
- * Map[Long, NborMsg], which at 10x scale is the difference between
- * a ~42 GiB and a single-digit-GiB peak heap. Content-equal to the
- * reference's per-vertex neighbor List (`VertexData.scala:24-26`). */
-final case class NborCache(
-    ids: Array[Long], vts: Array[Int], ccs: Array[Double],
-    center: Array[Boolean]) {
-  def isEmpty: Boolean = ids.length == 0
-}
-
-object NborCache {
-  val empty: NborCache = NborCache(Array.emptyLongArray,
-    Array.emptyIntArray, Array.emptyDoubleArray, Array.empty[Boolean])
-}
-
-/** Initial-partition Pregel vertex state: VertexData + send-gate +
- * the cached neighbor coordinates (reference `VertexData.scala:24-26`,
- * a List unique by vId — here the compact [[NborCache]]). */
-final case class PState(
-    data: VertexData,
-    changed: Boolean,
-    neighbors: NborCache)
 
 /** Community statistics.
  *

@@ -50,10 +50,17 @@ object IncrDump {
     println(s"DUMP split=$split vertexCount=$vertexCount " +
       s"globalCC=$globalCC bits=${java.lang.Double.doubleToLongBits(globalCC)}")
 
-    val init = IncrementalWCC.performInitialPartition(m.fullGraph)
-    init.vertices.map { case (id, vd) => (id, vd.cId) }
-      .toDF("vid", "cid").coalesce(1).write.mode("overwrite").parquet(s"$outDir/core_seed")
-    init.edges.map(e => (math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)))
+    val seed = IncrementalWCC.performInitialPartition(m.fullGraph)
+    seed.labels.toDF("vid", "cid").coalesce(1).write.mode("overwrite")
+      .parquet(s"$outDir/core_seed")
+    val coreEdges = seed.blocks.flatMap { case (_, b) =>
+      (0 until b.adj.n).iterator.flatMap { i =>
+        (b.adj.offs(i) until b.adj.offs(i + 1)).iterator.map(j => b.adj.nbrs(j))
+          .filter(_ > b.adj.ids(i)).map(v => Edge(b.adj.ids(i), v, 1))
+      }
+    }
+    val init = Graph(seed.vertices, coreEdges)
+    init.edges.map(e => (e.srcId, e.dstId))
       .toDF("src", "dst").distinct()
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/core_edges")
 

@@ -4,12 +4,15 @@ import graft.{JobProbe, SparkSpec}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
-/** Pins the refine loops' plan shape (ROADMAP D3): a refinement
+/** Pins the WCC loops' plan shape (ROADMAP D3): a refinement
  * generation is ONE Spark job on the co-partitioned vertex-block
  * state ([[RefineState]]) — at most three stages for the batch loop
  * (move, apply + ship same-community arrays, intersect), at most two
  * for the IDWCC fixed-5 loop (no triangle stage) — and the seed
- * evaluation is at most two jobs (build, WCC fold).
+ * evaluation is at most two jobs (build, WCC fold). The seeding runs on
+ * the same blocks: its build is one job and each superstep one job of
+ * at most two stages (ship changed labels, re-decide); a whole IDWCC
+ * micro-batch fold has a job ceiling.
  *
  * Each pin carries a same-JVM calibration: on the GraphX reference
  * evaluation of one generation ([[CommunityOps.computeCommunityStats]]
@@ -87,6 +90,71 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       assert(c.jobs === 1, s"an IDWCC iteration ran ${c.jobs} jobs")
       assert(c.stages <= 2, s"an IDWCC iteration ran ${c.stages} stages")
       seed.release(); next.release()
+      release(init)
+    }
+  }
+
+  test("a seeding superstep is exactly 1 job and at most 2 stages") {
+    failAfter(180.seconds) {
+      val (init, n) = seeded()
+      calibrate(init, n)
+      val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
+      val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
+      val built = InitialPartition.build(pruned.vertices,
+        pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part)
+      assert(built.changed > 0, "premise: superstep 2 must change labels")
+      var next: InitialPartition.Gen = null
+      val c = JobProbe(spark.sparkContext) {
+        next = InitialPartition.superstep(built, part, decide = true)
+      }
+      assert(c.jobs === 1, s"a seeding superstep ran ${c.jobs} jobs")
+      assert(c.stages <= 2, s"a seeding superstep ran ${c.stages} stages")
+      built.release(); next.release()
+      release(init)
+    }
+  }
+
+  test("the seeding block build is 1 job") {
+    failAfter(180.seconds) {
+      val (init, n) = seeded()
+      calibrate(init, n)
+      val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
+      val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
+      var built: InitialPartition.Gen = null
+      val c = JobProbe(spark.sparkContext) {
+        built = InitialPartition.build(pruned.vertices,
+          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part)
+      }
+      assert(c.jobs === 1, s"the seeding block build ran ${c.jobs} jobs")
+      built.release()
+      release(init)
+    }
+  }
+
+  test("an IDWCC micro-batch fold runs at most 13 jobs") {
+    // bulk triangle {1,2,3}; the batch closes triangle {3,4,5} (the
+    // IncrementalWCCSpec fixture). The ceiling is the count measured
+    // when the seeding moved onto the vertex blocks: 3 merge jobs, 3
+    // delta-flag gate jobs, the seeding build, 2 supersteps and the
+    // label-shipping job, 1 refine iteration and the graft-back — 12 on
+    // the calling thread — plus the merge's concurrent global-cc fold,
+    // which the probe counts when its pool thread inherited the job
+    // group.
+    failAfter(180.seconds) {
+      val (init, n) = seeded()
+      calibrate(init, n)
+      val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
+      val batch = spark.sparkContext.parallelize(Seq(
+        org.apache.spark.graphx.Edge(3L, 4L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
+        org.apache.spark.graphx.Edge(3L, 5L, 1)))
+      var out: IncrementalWCC.State = null
+      val c = JobProbe(spark.sparkContext) {
+        out = IncrementalWCC.run(state, batch, releaseInput = false)
+      }
+      assert(c.jobs <= 13, s"an IDWCC micro-batch fold ran ${c.jobs} jobs")
+      release(out.graph)
+      release(state.graph)
+      state.bulkFlagged.foreach(_.unpersist(blocking = false))
       release(init)
     }
   }

@@ -16,13 +16,12 @@ class InitialPartitionSpec extends SparkSpec {
   }
 
   test("a duplicated (parallel) edge does not perturb the partition") {
-    // Duplicate senders are outside the canonical-edge contract, but
-    // vprog dedups the neighbor cache defensively (the old Map
-    // combiner did so implicitly; the parallel-array SeedMsg keeps
-    // copies, and a duplicated cache entry would let applyFlags flip
-    // only one twin on a center transition). Pin: a hand-built graph
-    // carrying a parallel edge yields the same labels as its clean
-    // twin.
+    // Parallel edges are outside the canonical-edge contract, but a
+    // duplicated adjacency slot must not change a seeding decision: the
+    // adoption takes the best center among the higher-ranked slots and
+    // a vertex re-decides when any of them flipped, both of which a
+    // twin slot leaves unchanged. Pin: a hand-built graph carrying a
+    // parallel edge yields the same labels as its clean twin.
     // the duplicate must bypass TriangleStats (it would perturb the
     // (t, vt) inputs too) — feed InitialPartition.run directly with
     // identical vertex attributes and only the edge list differing
@@ -62,6 +61,43 @@ class InitialPartitionSpec extends SparkSpec {
     assert(parts(3L) === 5L)
     assert(parts(1L) === 2L)
     assert(parts(2L) === 2L)
+  }
+
+  /** The seeding as the refinement's seed generation at 1, 4 and 80
+   * block partitions (all-local, mixed, nearly all-ghost): the labels
+   * must not depend on the layout, and the handed-over state must be
+   * exact — stats equal to the GraphX reference plan over the relabeled
+   * graph, every ghost label equal to its owner's label. */
+  private def layoutIndependent(edges: Seq[(Long, Long)]): Unit = {
+    val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
+    val viaRun = InitialPartition.run(pruned).vertices
+      .map { case (id, vd) => (id, vd.cId) }.collect().toMap
+    Seq(1, 4, 80).foreach { parts =>
+      val s = InitialPartition.refineSeed(pruned.vertices,
+        pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None,
+        new org.apache.spark.HashPartitioner(parts), 50)
+      val labels = s.labels.collect().toMap
+      assert(labels === viaRun, s"labels differ at $parts partitions")
+      val relabeled = RefineState.toGraph(pruned, s.labels)
+      assert(s.stats === CommunityOps.computeCommunityStats(relabeled),
+        s"stats differ at $parts partitions")
+      s.blocks.collect().foreach { case (_, b) =>
+        b.adj.ghosts.indices.foreach { g =>
+          assert(b.ghostLabel(g) === labels(b.adj.ghosts(g)),
+            s"ghost ${b.adj.ghosts(g)} at $parts partitions")
+        }
+      }
+      s.release()
+      relabeled.unpersistVertices(blocking = false)
+    }
+  }
+
+  test(s"seeded labels are layout-independent and the handed-over state exact (${ParityGraph.Name})") {
+    layoutIndependent(ParityGraph.edges())
+  }
+
+  test("seeded labels are layout-independent and the handed-over state exact (hub path)") {
+    layoutIndependent(hubPath)
   }
 
   test("deterministic across runs") {
