@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * graph pipeline. Replicates the sf0.1 co-purchase edge set K times
  * with disjoint vertex-id shifts (structure-preserving 10x scale:
  * same degree distribution, 10x volume) and times the heavy phases —
- * triangle stats (the adjacency exchange), Pregel seeding, and one
+ * triangle stats (the support kernel), the seeding supersteps, and one
  * full refinement-iteration equivalent (fused neighborhood surfaces
  * + derived stats + global-WCC evaluation) — while sampling peak JVM
  * heap.
@@ -389,8 +389,9 @@ object ScaleProbe {
         bg.unpersist(blocking = false)
       }
       if (skewSubOptIn("skew-wcc")) {
-        // the flagship's heavy phases on a hub graph: the degree-
-        // oriented triangle-stats exchange and the seeding Pregel
+        // the flagship's heavy phases on a hub graph: the triangle
+        // support kernel (galloping intersections on the vertex
+        // blocks) and the clustering-coefficient seeding supersteps
         // (the refinement loop only sees the triangle-PRUNED graph,
         // whose hubs survive only to the extent they close triangles)
         val sg = phase("skew graph build") {

@@ -146,12 +146,17 @@ object IncrementalWCC {
       newIds: Broadcast[Set[Long]],
       borderIds: Broadcast[Set[Long]],
       vertexCount: Long,
+      /** edges in the batch: the union with the state's edges is
+       * duplicate-free by contract, so the merged graph has exactly
+       * this many more edges than the state */
+      batchEdges: Long,
       /** deterministic merged-graph global cc ([[detGlobalCC]]),
        * computed as a CONCURRENT job over the already-materialized
        * cached vertices: its only consumer is the refinement, so the
        * fold overlaps the gate probe + flagging + seeding phases
        * instead of serializing inside the merge. Values unchanged —
-       * the blocked fold is bit-reproducible wherever it runs. */
+       * the blocked fold is bit-reproducible wherever it runs. Its job
+       * runs under the caller's job group and description. */
       globalCCF: java.util.concurrent.CompletableFuture[Double],
       /** sorted MERGED-graph neighborhoods of the touched
        * (border/new) vertices — built once here, consumed by BOTH
@@ -163,8 +168,15 @@ object IncrementalWCC {
   /** Merge phase (reference `IncrementalWCC.scala:79-112`). */
   private[wcc] def merge(state: State, newEdges: RDD[Edge[Int]]): MergeResult = {
     val sc = state.graph.vertices.sparkContext
-    // batch vertex ids: micro-batch-sized, safe on the driver
-    val batchIds = newEdges.flatMap(e => Iterator(e.srcId, e.dstId)).distinct().collect().toSet
+    // batch vertex ids (micro-batch-sized, safe on the driver) and the
+    // batch edge count, in one job
+    val perPart = newEdges.mapPartitions { it =>
+      val ids = scala.collection.mutable.HashSet.empty[Long]
+      var n = 0L
+      it.foreach { e => ids += e.srcId; ids += e.dstId; n += 1 }
+      Iterator((ids.toArray, n))
+    }.collect()
+    val batchIds = perPart.iterator.flatMap(_._1).toSet
     val bBatch = sc.broadcast(batchIds)
     val borderIds = state.graph.vertices
       .filter { case (id, _) => bBatch.value.contains(id) }
@@ -202,12 +214,23 @@ object IncrementalWCC {
     fullGraph.cache()
     val vertexCount = fullGraph.numVertices
     // numVertices above materialized the cached vertices, so the
-    // concurrent fold only re-reads blocks — no racing computation
-    val globalCCF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      detGlobalCC(fullGraph.vertices, vertexCount))
+    // concurrent fold only re-reads blocks — no racing computation.
+    // Local properties reach a pool thread only when it is created, so
+    // the fold sets the caller's job group and description itself.
+    val jobProps = JobGroupProperties.map(k => (k, sc.getLocalProperty(k)))
+    val globalCCF = java.util.concurrent.CompletableFuture.supplyAsync(() => {
+      jobProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try detGlobalCC(fullGraph.vertices, vertexCount)
+      finally jobProps.foreach { case (k, _) => sc.setLocalProperty(k, null) }
+    })
     bBatch.unpersist(blocking = false)
-    MergeResult(fullGraph, fg, bNew, bBorder, vertexCount, globalCCF, nbrs)
+    MergeResult(fullGraph, fg, bNew, bBorder, vertexCount, perPart.map(_._2).sum,
+      globalCCF, nbrs)
   }
+
+  /** the local properties `SparkContext.setJobGroup` sets */
+  private val JobGroupProperties =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
   /** Deterministic global clustering coefficient: ascending-vid left
    * fold of per-vertex cc within 65536-id blocks, then an
@@ -363,9 +386,9 @@ object IncrementalWCC {
    * harmless), so no `Graph` is built for the flagged or the pruned
    * graph. `precomputedKeep`, when present, is the merged graph's full
    * positive-support canonical key set assembled incrementally
-   * (bulk-invariant flags + [[deltaFlags]]); otherwise the hub-safe
-   * oriented support ([[TriangleStats.edgeSupport]]) flags the edges
-   * from scratch.
+   * (bulk-invariant flags + [[deltaFlags]]); otherwise the support
+   * kernel ([[TriangleStats.edgeSupport]]) flags the edges from
+   * scratch.
    *
    * Returns the converged seeding as the fixed-5 loop's seed
    * generation ([[InitialPartition.refineSeed]]): its ghost labels,
@@ -547,11 +570,7 @@ object IncrementalWCC {
     val useDelta = state.bulkFlagged.isDefined &&
       (deltaFlagMaxVolumeFraction.isPosInfinity || {
         val totalEdges = m.fullGraph.numEdges
-        // both edge counts are cached-RDD counts; the union is
-        // duplicate-free (batch edges are new by construction), so
-        // the subtraction is exact
-        val batchEdges = totalEdges - state.graph.edges.count()
-        deltaPrecheck(totalEdges, batchEdges, deltaFlagMaxVolumeFraction) &&
+        deltaPrecheck(totalEdges, m.batchEdges, deltaFlagMaxVolumeFraction) &&
           deltaVolume(newEdges, m.touchedNbrs) <=
             2.0 * totalEdges * deltaFlagMaxVolumeFraction
       })

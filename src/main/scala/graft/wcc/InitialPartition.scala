@@ -147,7 +147,8 @@ object InitialPartition {
           block(part, vIt, sIt.map(_._2).toArray, None)
         }
       case Some(k) =>
-        verts.zipPartitions(slots, keySlots(k, part), preservesPartitioning = true) {
+        verts.zipPartitions(slots, RefineState.pairSlots(k, part),
+          preservesPartitioning = true) {
           (vIt, sIt, kIt) =>
             block(part, vIt, sIt.map(_._2).toArray, Some(kIt.map(_._2).toArray))
         }
@@ -164,20 +165,6 @@ object InitialPartition {
     val (adj, label, ghostLabel) = RefineState.build(pid, part, vs, kept, ranks = true)
     Iterator((pid, decideRound(adj, label, ghostLabel, null)))
   }
-
-  /** every canonical key (s, d) as the pair (s, d) at s's partition and
-   * (d, s) at d's, in the [[EdgeSlots]] form without labels */
-  private def keySlots(keep: RDD[(Long, Long)], part: HashPartitioner): RDD[(Int, EdgeSlots)] =
-    keep.mapPartitions { it =>
-      val self = Array.fill(part.numPartitions)(new ArrayBuilder.ofLong)
-      val nbr = Array.fill(part.numPartitions)(new ArrayBuilder.ofLong)
-      it.foreach { case (s, d) =>
-        val p = part.getPartition(s); self(p) += s; nbr(p) += d
-        val q = part.getPartition(d); self(q) += d; nbr(q) += s
-      }
-      Iterator.range(0, part.numPartitions).map(q =>
-        (q, new EdgeSlots(self(q).result(), nbr(q).result(), null, null, null)))
-    }.partitionBy(part)
 
   /** the slots whose (self, neighbor) pair is among the `keys`;
    * `ids` are the partition's vertex ids, ascending */

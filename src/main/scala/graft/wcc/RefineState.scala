@@ -1,6 +1,7 @@
 package graft.wcc
 
 import scala.collection.mutable.ArrayBuilder
+import scala.reflect.ClassTag
 
 import graft.graph.SortedIntersect
 import org.apache.spark.{HashPartitioner, TaskContext}
@@ -217,16 +218,8 @@ private[graft] object RefineState {
    * caller owns the release. */
   def seed(graph: Graph[VertexData, Int], countTriangles: Boolean): RefineState = {
     val part = new HashPartitioner(graph.vertices.getNumPartitions)
-    val slots = edgeSlots(graph.triplets.map(t => (t.srcAttr, t.dstAttr)), part,
-      ranks = false)
-    val base = underPart(graph.vertices, part)
-      .zipPartitions(slots, preservesPartitioning = true) { (vIt, sIt) =>
-        val pid = TaskContext.getPartitionId()
-        val (adj, label, ghostLabel) =
-          build(pid, part, vIt.toArray, sIt.map(_._2).toArray, ranks = false)
-        Iterator((pid, new VertexBlock(adj, label, ghostLabel,
-          ownDegrees(adj, label, ghostLabel), null, null, 0.0, 0L)))
-      }
+    val base = refineBlocks(graph.vertices,
+      edgeSlots(graph.triplets.map(t => (t.srcAttr, t.dstAttr)), part, ranks = false), part)
     val blocks = if (countTriangles) withTriangles(base, part) else base
     blocks.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -269,6 +262,19 @@ private[graft] object RefineState {
       Iterator.range(0, l.length).map(i => (a.ids(i), VertexData(a.ids(i), a.t(i), a.vt(i), l(i))))
     }, preservesPartitioning = true)
 
+  /** The refinement blocks of `vertices` and their edge `slots`: the
+   * adjacency, labels and same-community degrees, no triangle counts. */
+  private[wcc] def refineBlocks(vertices: RDD[(VertexId, VertexData)],
+      slots: RDD[(Int, EdgeSlots)], part: HashPartitioner): RDD[(Int, VertexBlock)] =
+    underPart(vertices, part).zipPartitions(slots, preservesPartitioning = true) {
+      (vIt, sIt) =>
+        val pid = TaskContext.getPartitionId()
+        val (adj, label, ghostLabel) =
+          build(pid, part, vIt.toArray, sIt.map(_._2).toArray, ranks = false)
+        Iterator((pid, new VertexBlock(adj, label, ghostLabel,
+          ownDegrees(adj, label, ghostLabel), null, null, 0.0, 0L)))
+    }
+
   /** `vertices` under `part`, without a shuffle when already there */
   private[wcc] def underPart(vertices: RDD[(VertexId, VertexData)],
       part: HashPartitioner): RDD[(VertexId, VertexData)] =
@@ -302,9 +308,27 @@ private[graft] object RefineState {
           if (ranks) nt(q).result() else null, if (ranks) nvt(q).result() else null)))
     }.partitionBy(part)
 
+  /** Each pair (s, d) as the slot (s, d) at s's partition and (d, s)
+   * at d's, in the [[EdgeSlots]] form without labels. */
+  private[wcc] def pairSlots(pairs: RDD[(Long, Long)], part: HashPartitioner)
+      : RDD[(Int, EdgeSlots)] =
+    pairs.mapPartitions { it =>
+      val self = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      val nbr = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      def add(u: Long, v: Long): Unit = {
+        val q = part.getPartition(u)
+        if (self(q) == null) { self(q) = new ArrayBuilder.ofLong; nbr(q) = new ArrayBuilder.ofLong }
+        self(q) += u; nbr(q) += v
+      }
+      it.foreach { case (s, d) => add(s, d); add(d, s) }
+      Iterator.range(0, part.numPartitions).filter(self(_) != null).map(q =>
+        (q, new EdgeSlots(self(q).result(), nbr(q).result(), null, null, null)))
+    }.partitionBy(part)
+
   /** One partition's adjacency, own labels and ghost labels from its
    * vertices and edge slots; with `ranks` (the slots then carry the
-   * neighbors' t and vt) the adjacency carries [[SeedRanks]]. */
+   * neighbors' t and vt) the adjacency carries [[SeedRanks]]. Slots
+   * without labels leave every ghost label 0. */
   private[wcc] def build(pid: Int, part: HashPartitioner,
       vs: Array[(VertexId, VertexData)], slots: Array[EdgeSlots],
       ranks: Boolean): (Adjacency, Array[Long], Array[Long]) = {
@@ -337,7 +361,7 @@ private[graft] object RefineState {
         nbrs(cursor(li)) = s.nbr(k); cursor(li) += 1
         if (part.getPartition(s.nbr(k)) != pid) {
           val g = java.util.Arrays.binarySearch(ghosts, s.nbr(k))
-          ghostLabel(g) = s.nbrLabel(k)
+          if (s.nbrLabel != null) ghostLabel(g) = s.nbrLabel(k)
           if (ranks) { ghostCc(g) = VertexData.cc(s.nbrT(k), s.nbrVt(k)); ghostVt(g) = s.nbrVt(k) }
         }
         k += 1
@@ -527,7 +551,32 @@ private[graft] object RefineState {
 
   /** Stages B (ship) and C (intersect): `blocks` with triangle counts */
   private def withTriangles(blocks: RDD[(Int, VertexBlock)],
-      part: HashPartitioner): RDD[(Int, VertexBlock)] = {
+      part: HashPartitioner): RDD[(Int, VertexBlock)] =
+    sameCommonCounts(blocks, part) { (b, common) =>
+      val adj = b.adj
+      val tri = new Array[Int](adj.n)
+      var i = 0
+      while (i < adj.n) {
+        var c = 0; var j = adj.offs(i)
+        while (j < adj.offs(i + 1)) { c += common(j); j += 1 }
+        // each triangle is seen from both of its other edges at i
+        tri(i) = c / 2
+        i += 1
+      }
+      new VertexBlock(adj, b.label, b.ghostLabel, b.own, tri, b.prevLabel, b.wccPrev, b.moved)
+    }
+
+  /** Stages B and C of a triangle count over `blocks`: B ships every
+   * vertex's same-community neighbor array once to each other partition
+   * holding a same-community neighbor of it (never once per neighbor,
+   * so a hub costs at most one copy per partition); C intersects the
+   * two ends' arrays of every same-community slot with
+   * [[SortedIntersect]] and hands `f` each block with its per-slot
+   * counts of common same-community neighbors (0 on a slot across
+   * communities). With one label on every vertex the counts are the
+   * edges' triangle supports ([[TriangleStats]]). */
+  private[wcc] def sameCommonCounts[T: ClassTag](blocks: RDD[(Int, VertexBlock)],
+      part: HashPartitioner)(f: (VertexBlock, Array[Int]) => T): RDD[(Int, T)] = {
     val same = blocks.mapPartitions { it =>
       val (pid, b) = it.next()
       val adj = b.adj
@@ -570,23 +619,20 @@ private[graft] object RefineState {
         }
       }
       val local = Array.tabulate(adj.n)(b.sameNbrs)
-      val tri = new Array[Int](adj.n)
+      val common = new Array[Int](adj.nbrs.length)
       var i = 0
       while (i < adj.n) {
-        var c = 0; var j = adj.offs(i)
+        var j = adj.offs(i)
         while (j < adj.offs(i + 1)) {
           if (b.nbrLabel(j) == b.label(i)) {
             val r = adj.ref(j)
-            c += SortedIntersect.count(local(i), if (r >= 0) local(r) else remote(~r))
+            common(j) = SortedIntersect.count(local(i), if (r >= 0) local(r) else remote(~r))
           }
           j += 1
         }
-        // each triangle is seen from both of its other edges at i
-        tri(i) = c / 2
         i += 1
       }
-      Iterator((pid, new VertexBlock(adj, b.label, b.ghostLabel, b.own, tri,
-        b.prevLabel, b.wccPrev, b.moved)))
+      Iterator((pid, f(b, common)))
     }
   }
 

@@ -1,7 +1,9 @@
 package graft.wcc
 
-import graft.graph.SortedIntersect
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Triangle statistics + preprocessing prune (G1/G2/G3/P4 in
@@ -20,22 +22,21 @@ import org.apache.spark.graphx._
  * (`DistributedWCC.scala:88-130`). Both compute per-vertex triangle
  * counts via adjacency-list intersection.
  *
- * Scale: the adjacency exchange is ADAPTIVE (see
- * [[HubDegreeThreshold]]). Hub-free graphs — the dense, cliquey
- * co-purchase graphs of this suite — take the direct per-edge
- * full-adjacency merge intersection (cheapest exact plan: one
- * triplet scan, arrays replicated once per incident edge
- * partition). A graph with a power-law hub above the threshold
- * switches to the DEGREE-ORIENTED path: each edge assigns its
- * higher-(degree, id)-ranked endpoint to the lower one's out-list
- * (O(sqrt(2E)) amortized per shipped array), each triangle {x,y,z}
- * (rank x<y<z) is enumerated exactly once at the merge scan of edge
- * (x,y) and credits all THREE of its edges. Without that switch a
- * 10^5-degree hub concentrates 10^10 merge-scan steps in the few
- * tasks holding its edges — the straggler/OOM scale cliff. Both
- * paths produce identical exact per-edge supports — the prune
- * predicate the rest of the pipeline consumes
- * (`DistributedWCC.scala:111`).
+ * Execution shape: one support kernel on [[RefineState]]'s columnar
+ * vertex blocks, under the input's vertex `HashPartitioner`, with one
+ * label on every vertex ([[RefineState.sameCommonCounts]]):
+ *  - every edge goes as a slot to the partitions of both endpoints,
+ *    which build the sorted adjacency;
+ *  - each vertex's sorted adjacency goes once to every other partition
+ *    holding it as a ghost;
+ *  - one stage intersects the two ends' adjacency of every slot with
+ *    [[graft.graph.SortedIntersect]], which gives the edge's support,
+ *    and sums the supports into (t, vt).
+ * Hub-safe without orienting the edges: the intersection gallops on
+ * skewed pairs, so an edge costs O(min · log max) and the whole count
+ * stays within the Σ min(d_u, d_v) bound up to the log factor, and a
+ * hub's adjacency travels at most once per partition. [[run]] reads
+ * both surfaces off the blocks and materializes them in the same job.
  */
 object TriangleStats {
 
@@ -48,94 +49,63 @@ object TriangleStats {
        * TriangleCountResult dump surface */
       fullStats: VertexRDD[(Int, Int)])
 
-  /** Degree ceiling for the direct full-adjacency intersection path.
-   * Below it, per-edge merge scans cost Sum_e(d_u + d_v) <=
-   * 2*E*maxDeg steps with each vertex array shipped once per
-   * incident edge PARTITION (GraphX replication, <= 2*sqrt(P)) —
-   * the cheapest exact plan for dense hub-free graphs (the
-   * co-purchase graphs here: maxDeg ~200). Above it, a hub's edges
-   * concentrate O(maxDeg^2) merge-scan work in a few tasks — the
-   * straggler/OOM cliff — and the ORIENTED path takes over. */
-  private[wcc] val HubDegreeThreshold = 10000
+  /** One partition of the kernel's output: its vertices (ascending)
+   * and, in CSR form (see [[Adjacency]]), each vertex's neighbors
+   * (ascending) with the support of the edge to each; per vertex, t is
+   * half its summed supports and vt its count of edges with support
+   * > 0. */
+  private final class Supports(val ids: Array[Long], val offs: Array[Int],
+      val nbrs: Array[Long], val support: Array[Int]) extends Serializable {
+    val t = new Array[Int](ids.length)
+    val vt = new Array[Int](ids.length)
+    locally {
+      var i = 0
+      while (i < ids.length) {
+        var twoT = 0; var j = offs(i)
+        while (j < offs(i + 1)) {
+          twoT += support(j)
+          if (support(j) > 0) vt(i) += 1
+          j += 1
+        }
+        t(i) = twoT / 2
+        i += 1
+      }
+    }
 
-  private def maxDegree(graph: Graph[_, _]): Int =
-    graph.degrees.map(_._2).fold(0)(math.max)
-
-  /** Sorted oriented out-adjacency: each edge assigns its
-   * higher-(degree, id)-ranked endpoint to the lower one's list,
-   * bounding every shipped array by out-degree (O(sqrt(2E))
-   * amortized). Each triangle {x,y,z} with rank x<y<z then appears
-   * in exactly one merge scan — edge (x,y) (z is in BOTH out-lists
-   * only there). */
-  private def orientedAdj[V: scala.reflect.ClassTag](
-      graph: Graph[V, _]): Graph[Array[Long], _] = {
-    val gDeg: Graph[Int, _] =
-      graph.outerJoinVertices(graph.degrees)((_, _, d) => d.getOrElse(0))
-    val outAdj: VertexRDD[Array[Long]] = gDeg.aggregateMessages[Array[Long]](
-      ctx => {
-        val srcLower = ctx.srcAttr < ctx.dstAttr ||
-          (ctx.srcAttr == ctx.dstAttr && ctx.srcId < ctx.dstId)
-        if (srcLower) ctx.sendToSrc(Array(ctx.dstId))
-        else ctx.sendToDst(Array(ctx.srcId))
-      }, _ ++ _)
-    graph.outerJoinVertices(outAdj)((_, _, a) =>
-      a.map(_.sorted).getOrElse(Array.empty[Long]))
+    /** `f` on every edge once, at its lower endpoint */
+    def edges[T](f: (Long, Long, Int) => T): Iterator[T] =
+      Iterator.range(0, ids.length).flatMap { i =>
+        Iterator.range(offs(i), offs(i + 1)).filter(nbrs(_) > ids(i))
+          .map(j => f(ids(i), nbrs(j), support(j)))
+      }
   }
 
-  private def fullAdj[V: scala.reflect.ClassTag](
-      graph: Graph[V, _]): Graph[Array[Long], _] =
-    graph.outerJoinVertices(
-      graph.collectNeighborIds(EdgeDirection.Either))((_, _, a) =>
-      a.map(_.sorted).getOrElse(Array.empty[Long]))
+  /** The support kernel over `graph` (lazy): the blocks of the input's
+   * vertices, each edge's support on both of its slots. */
+  private def supports(graph: Graph[_, _]): RDD[(Int, Supports)] = {
+    val part = new HashPartitioner(graph.vertices.getNumPartitions)
+    val verts = graph.vertices.mapPartitions(_.map { case (id, _) =>
+      (id, VertexData(id, 0, 0, 0L))
+    }, preservesPartitioning = true)
+    val blocks = RefineState.refineBlocks(verts,
+      RefineState.pairSlots(graph.edges.map(e => (e.srcId, e.dstId)), part), part)
+    RefineState.sameCommonCounts(blocks, part) { (b, support) =>
+      new Supports(b.adj.ids, b.adj.offs, b.adj.nbrs, support)
+    }
+  }
 
   /** Per-edge triangle support, keyed by canonical (min, max)
-   * endpoint ids: the FULL common-neighbor count of each edge.
-   * Adaptive: hub-free graphs use the direct per-edge intersection
-   * of full adjacency (one triplet scan, no extra shuffle — every
-   * edge present, including zero-support ones); graphs with a
-   * >HubDegreeThreshold vertex use the oriented enumeration, where
-   * each triangle is found once and credits its three edges
-   * (3*T records through one reduceByKey — output-bound, hub-safe;
-   * zero-support edges absent). Values are identical. */
+   * endpoint ids: the full common-neighbor count of every edge,
+   * zero-support edges included — a view of the support kernel. */
   private[wcc] def edgeSupport[V: scala.reflect.ClassTag](
-      graph: Graph[V, _]): org.apache.spark.rdd.RDD[((Long, Long), Int)] = {
-    if (maxDegree(graph) <= HubDegreeThreshold)
-      fullAdj(graph).triplets.map { t =>
-        ((math.min(t.srcId, t.dstId), math.max(t.srcId, t.dstId)),
-          SortedIntersect.count(t.srcAttr, t.dstAttr))
-      }
-    else orientedAdj(graph).triplets.flatMap { t =>
-      val s = t.srcId; val d = t.dstId
-      val out = scala.collection.mutable.ArrayBuffer.empty[((Long, Long), Int)]
-      SortedIntersect.visitCommons(t.srcAttr, t.dstAttr) { x =>
-        out += (((math.min(s, d), math.max(s, d)), 1))
-        out += (((math.min(s, x), math.max(s, x)), 1))
-        out += (((math.min(d, x), math.max(d, x)), 1))
-      }
-      out
-    }.reduceByKey(_ + _)
-  }
+      graph: Graph[V, _]): RDD[((Long, Long), Int)] =
+    supports(graph).flatMap(_._2.edges((s, d, c) => ((s, d), c)))
 
-  def run(graph: Graph[Int, Int]): Result = {
-    val support = edgeSupport(graph)
-
-    // graft supports back onto the canonical edge set (0 for
-    // triangle-free edges)
-    val countedEdges = graph.edges
-      .map(e => ((math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)), ()))
-      .leftOuterJoin(support)
-      .map { case ((s, d), (_, c)) => Edge(s, d, c.getOrElse(0)) }
-
-    // default storage levels: Graph.apply re-persists the vertex RDD
-    // it is handed, and GraphX refuses to change an existing level —
-    // every graph in this library therefore uses the GraphX default.
-    val counted: Graph[Int, Int] = Graph(graph.vertices, countedEdges, 0)
-    fromCounted(counted)
-  }
+  def run(graph: Graph[Int, Int]): Result = result(supports(graph))
 
   /** Triangle stats of the id-restricted subgraph (both endpoints <
    * `split`) DERIVED from a precomputed FULL symmetric adjacency
-   * (vid, sorted nbrs) instead of a fresh GraphX adjacency exchange:
+   * (vid, sorted nbrs) instead of a fresh adjacency exchange:
    * the subgraph's neighbor lists are order-preserving filters of
    * the full lists, so per-edge supports come straight from the
    * native merge-scan intersection over the filtered arrays —
@@ -159,54 +129,64 @@ object TriangleStats {
       .join(bulkAdj.select(col("vid").as("dst"), col("nbrs").as("nb")), "dst")
       .select(col("src").cast("long"), col("dst").cast("long"),
         intersectCount(col("na"), col("nb")).cast("int").as("cnt"))
-    val countedEdges = sup.rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getInt(2)))
-    val verts = bulkAdj.select(col("vid").cast("long")).rdd.map(r => (r.getLong(0), 0))
-    fromCounted(Graph(verts, countedEdges, 0))
+    val verts = bulkAdj.select(col("vid").cast("long")).rdd.map(_.getLong(0))
+    val part = new HashPartitioner(verts.getNumPartitions)
+    val slots = sup.rdd.flatMap { r =>
+      val (s, d, c) = (r.getLong(0), r.getLong(1), r.getInt(2))
+      Iterator((s, (d, c)), (d, (s, c)))
+    }.partitionBy(part)
+    result(verts.map((_, ())).partitionBy(part).zipPartitions(slots,
+      preservesPartitioning = true) { (vIt, sIt) =>
+      Iterator((org.apache.spark.TaskContext.getPartitionId(),
+        supportsOf(vIt.map(_._1).toArray, sIt.toArray)))
+    })
   }
 
-  /** Shared tail of [[run]] / [[restrictedResult]]: per-vertex
-   * (t, vt) and the triangle-core prune from a graph whose edge attr
-   * is the edge's full common-neighbor count (0 for triangle-free
-   * edges, every canonical edge present). */
-  private def fromCounted(counted: Graph[Int, Int]): Result = {
-    counted.cache()
+  /** One partition's [[Supports]] from its vertex ids and its slots
+   * (self, (neighbor, support)). */
+  private def supportsOf(vs: Array[Long], slots: Array[(Long, (Long, Int))]): Supports = {
+    java.util.Arrays.sort(vs)
+    val sorted = slots.sortBy(s => (s._1, s._2._1))
+    val offs = new Array[Int](vs.length + 1)
+    sorted.foreach { s =>
+      val i = java.util.Arrays.binarySearch(vs, s._1)
+      require(i >= 0, s"edge endpoint ${s._1} is not a vertex of its partition")
+      offs(i + 1) += 1
+    }
+    var i = 0
+    while (i < vs.length) { offs(i + 1) += offs(i); i += 1 }
+    new Supports(vs, offs, sorted.map(_._2._1), sorted.map(_._2._2))
+  }
 
-    // G1+G3: per-vertex (2t, vt) in one pass — map-side combine free.
-    val stats: VertexRDD[(Int, Int)] = counted.aggregateMessages[(Int, Int)](
-      ctx => {
-        val inc = (ctx.attr, if (ctx.attr > 0) 1 else 0)
-        ctx.sendToSrc(inc); ctx.sendToDst(inc)
-      },
-      (x, y) => (x._1 + y._1, x._2 + y._2))
-
-    val fullStats: VertexRDD[(Int, Int)] =
-      counted.vertices.leftJoin(stats) { (_, _, s) =>
-        val (twoT, vt) = s.getOrElse((0, 0)); (twoT / 2, vt)
-      }
-
-    val dataGraph: Graph[VertexData, Int] =
-      counted.outerJoinVertices(fullStats) { (id, _, s) =>
-        val (t, vt) = s.getOrElse((0, 0))
-        VertexData(id, t, vt, id)
-      }
-
-    // P4: prune to the triangle core (reference
-    // `DistributedWCC.scala:109-112`). An edge with common count > 0
-    // implies both endpoints have t > 0, so vt (counted above over
-    // triangle edges) equals the pruned-graph degree.
-    val pruned = dataGraph.subgraph(
-      epred = e => e.attr > 0,
-      vpred = (_, vd) => vd.t > 0)
-
-    // Materialize the two output surfaces, then drop the scratch
-    // graphs — cached intermediates otherwise accumulate across the
-    // bulk + incremental pipelines that each call run().
-    pruned.cache()
-    fullStats.cache()
-    pruned.numVertices
-    fullStats.count()
-    counted.unpersistVertices(blocking = false)
-    counted.edges.unpersist(blocking = false)
-    Result(pruned, fullStats)
+  /** The shared tail of [[run]] and [[restrictedResult]]: both surfaces
+   * read off the support blocks and materialized — the pruned graph's
+   * vertices and edges and the full stats — in ONE job, after which
+   * the blocks are released. The surfaces keep the blocks' vertex
+   * partitioner. An edge with support > 0 implies both endpoints have
+   * t > 0, so vt (counted over triangle edges) equals the pruned-graph
+   * degree (reference `DistributedWCC.scala:109-112`). */
+  private def result(blocks: RDD[(Int, Supports)]): Result = {
+    blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val fullStats = VertexRDD(blocks.mapPartitions({ it =>
+        val b = it.next()._2
+        Iterator.range(0, b.ids.length).map(i => (b.ids(i), (b.t(i), b.vt(i))))
+      }, preservesPartitioning = true))
+      val core = blocks.mapPartitions({ it =>
+        val b = it.next()._2
+        Iterator.range(0, b.ids.length).filter(b.t(_) > 0)
+          .map(i => (b.ids(i), VertexData(b.ids(i), b.t(i), b.vt(i), b.ids(i))))
+      }, preservesPartitioning = true)
+      val coreEdges = blocks.mapPartitions(_.next()._2.edges((s, d, c) => Edge(s, d, c))
+        .filter(_.attr > 0))
+      // default storage levels: GraphX refuses to change an existing
+      // level — every graph in this library uses the GraphX default
+      val pruned = Graph(core, coreEdges)
+      pruned.cache()
+      fullStats.cache()
+      fullStats.zipPartitions(pruned.vertices, pruned.edges)((_, _, _) => Iterator.empty[Int])
+        .count()
+      Result(pruned, fullStats)
+    } finally blocks.unpersist(blocking = false)
   }
 }

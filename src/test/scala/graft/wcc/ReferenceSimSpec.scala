@@ -446,10 +446,11 @@ class ReferenceSimSpec extends SparkSpec {
     idwccParity(EdgeOps.canonicalize(ParityGraph.load(spark)), 3)
   }
 
-  // a hub above TriangleStats.HubDegreeThreshold: the refinement and
-  // the WCC evaluation run with hub-sized same-community arrays
+  // a hub of degree above 10,000 (the degree at which the triangle
+  // stats once switched exchanges): the refinement and the WCC
+  // evaluation run with hub-sized same-community arrays
   test("full DWCC partition matches the sequential pipeline simulation (hub above the degree threshold)") {
-    assert(hubPath.count(_._1 == 0L) > TriangleStats.HubDegreeThreshold)
+    assert(hubPath.count(_._1 == 0L) > 10000)
     dwccParity(graphOf(spark, hubPath))
   }
 

@@ -12,7 +12,8 @@ import org.scalatest.time.SpanSugar._
  * evaluation is at most two jobs (build, WCC fold). The seeding runs on
  * the same blocks: its build is one job and each superstep one job of
  * at most two stages (ship changed labels, re-decide); a whole IDWCC
- * micro-batch fold has a job ceiling.
+ * micro-batch fold has a job ceiling. The triangle stats run their
+ * support kernel on blocks too: at most two jobs.
  *
  * Each pin carries a same-JVM calibration: on the GraphX reference
  * evaluation of one generation ([[CommunityOps.computeCommunityStats]]
@@ -155,6 +156,57 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       release(out.graph)
       release(state.graph)
       state.bulkFlagged.foreach(_.unpersist(blocking = false))
+      release(init)
+    }
+  }
+
+  test("the merge's global-cc fold runs under the caller's job group on every fold") {
+    // the fold runs on a ForkJoinPool thread, which inherits local
+    // properties only when it is created: without carrying them over,
+    // every fold after the first would run under a stale group
+    failAfter(180.seconds) {
+      val sc = spark.sparkContext
+      val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
+      val batch = sc.parallelize(Seq(
+        org.apache.spark.graphx.Edge(3L, 4L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
+        org.apache.spark.graphx.Edge(3L, 5L, 1)))
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.stageInfos.exists(_.details.contains("detGlobalCC")))
+            groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+      }
+      val tags = (1 to 3).map(i => s"graft-fold-$i-${java.util.UUID.randomUUID()}")
+      sc.addSparkListener(listener)
+      try {
+        tags.foreach { tag =>
+          sc.setJobGroup(tag, "micro-batch fold")
+          try release(IncrementalWCC.run(state, batch, releaseInput = false).graph)
+          finally sc.clearJobGroup()
+        }
+        var waited = 0
+        while (groups.size < tags.size && waited < 100) { Thread.sleep(100); waited += 1 }
+      } finally sc.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      assert(groups.asScala.toSeq === tags)
+      release(state.graph)
+      state.bulkFlagged.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  test("TriangleStats.run is at most 2 jobs") {
+    failAfter(180.seconds) {
+      val (init, n) = seeded()
+      calibrate(init, n)
+      val g = graphOf(spark, edges)
+      g.cache(); g.numVertices
+      var res: TriangleStats.Result = null
+      val c = JobProbe(spark.sparkContext) { res = TriangleStats.run(g) }
+      assert(c.jobs <= 2, s"TriangleStats.run ran ${c.jobs} jobs (${c.stages} stages)")
+      release(res.pruned)
+      res.fullStats.unpersist(blocking = false)
+      g.unpersistVertices(blocking = false)
+      g.edges.unpersist(blocking = false)
       release(init)
     }
   }
