@@ -184,8 +184,7 @@ object Graft {
 
   /** K-truss: canonical edges surviving iterative support-< k-2
    * peeling, with per-edge support (GraphAlgs.ktrussPeel). The
-   * result rides a persisted RDD; call `KTruss.release()` when
-   * done, so prefer the full `GraphAlgs.ktrussPeel` handle. */
+   * result rides a cached RDD; close `KTruss.scope` when done. */
   def ktruss(canonicalEdges: DataFrame, k: Int = 4): graft.graph.GraphAlgs.KTruss =
     graft.graph.GraphAlgs.ktrussPeel(canonicalEdges, k)
 
@@ -206,13 +205,13 @@ object Graft {
 
   private def detDF(spark: SparkSession, canonicalEdges: DataFrame,
       out: String)(f: org.apache.spark.rdd.RDD[(Long, Array[Long])] =>
-        org.apache.spark.rdd.RDD[(Long, Long)]): DataFrame = {
+        (org.apache.spark.rdd.RDD[(Long, Long)], graft.graph.Fixpoint.CacheScope)): DataFrame = {
     val adj = graft.graph.GraphAlgs.adjacencyArrays(canonicalEdges).persist()
     adj.count()
-    val r = f(adj)
+    val (r, scope) = f(adj)
     val df = spark.createDataFrame(r).toDF("vid", out).cache()
     df.count()
-    r.unpersist(blocking = false)
+    scope.close()
     adj.unpersist(blocking = false)
     df
   }

@@ -153,7 +153,7 @@ object ScaleProbe {
       val kt = GraphAlgs.ktrussPeel(edges)
       val n = kt.edges.count()
       println(s"[scale-probe] ktruss survivors=$n converged=${kt.converged}")
-      kt.release()
+      kt.scope.close()
     }
 
     // flagship shape at scale (VERDICT r18 item 6): the exact
@@ -206,8 +206,7 @@ object ScaleProbe {
     // g_betweenness shape at scale (VERDICT r19 item 2): the exact
     // bench recipe — sampled-pivot Brandes from 5 deterministic
     // hash-picked roots at the shared 8-hop horizon — on the
-    // replicated graph, with the per-phase (adjacency / forward BFS /
-    // backward accumulation) split from the gated in-algo log. The
+    // replicated graph. The
     // closeness/harmonic rows share the 5-root/8-hop multi-source BFS
     // contract, so this slope covers them too. Note the replicated
     // graph is K disjoint copies and the 5 roots land in few
@@ -215,16 +214,13 @@ object ScaleProbe {
     // replica-invariant — what grows with K is the full-graph terms
     // (adjacency build; per-hop full-state zipPartitions scans),
     // which is exactly the sub-linear-vs-linear question.
-    if (wanted("betweenness")) {
-      System.setProperty("graft.betweenness.log", "on")
-      phase("betweenness (5 roots, 8 hops)") {
-        val roots = edges.select(col("src")).distinct()
-          .orderBy(md5(col("src").cast("string")), col("src")).limit(5)
-          .collect().map(_.getLong(0))
-        val r = GraphAlgs.sampledBetweennessRDD(g, roots, maxHops = 8)
-        println(s"[scale-probe] betweenness rows=${r.count()}")
-        r.unpersist(blocking = false)
-      }
+    if (wanted("betweenness")) phase("betweenness (5 roots, 8 hops)") {
+      val roots = edges.select(col("src")).distinct()
+        .orderBy(md5(col("src").cast("string")), col("src")).limit(5)
+        .collect().map(_.getLong(0))
+      val (r, scope) = GraphAlgs.sampledBetweennessRDD(g, roots, maxHops = 8)
+      println(s"[scale-probe] betweenness rows=${r.count()}")
+      scope.close()
     }
 
     // det/peel sf1 probes on the REPLICATED (hub-free) graph
@@ -267,15 +263,15 @@ object ScaleProbe {
         val (u, v) = (r.getLong(0), r.getLong(1))
         (u, v, 1000000000L / (1L + (u + v) % 97L))
       }
-      val (m, _, rel) = GraphAlgs.boruvkaMsfRDD(rdd)
+      val (m, _, scope) = GraphAlgs.boruvkaMsfRDD(rdd)
       println(s"[scale-probe] msf edges=${m.count()}")
-      rel()
+      scope.close()
     }
 
     if (wanted("hits")) phase("hits_det (8 rounds)") {
       val rdd = edges.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      val (h, a, rel) = GraphAlgs.hitsDetRDD(rdd)
-      h.count(); a.count(); rel()
+      val (h, a, scope) = GraphAlgs.hitsDetRDD(rdd)
+      h.count(); a.count(); scope.close()
     }
 
     val detAll = wanted("det")
@@ -286,18 +282,18 @@ object ScaleProbe {
       }
       if (detAll || wanted("pagerank"))
         phase("pagerank_det (10 rounds)") {
-          val r = GraphAlgs.pagerankDetRDD(adj)
-          r.count(); r.unpersist(blocking = false)
+          val (r, scope) = GraphAlgs.pagerankDetRDD(adj)
+          r.count(); scope.close()
         }
       if (detAll || wanted("eigen"))
         phase("eigencentrality_det (12 rounds)") {
-          val r = GraphAlgs.eigenCentralityDetRDD(adj)
-          r.count(); r.unpersist(blocking = false)
+          val (r, scope) = GraphAlgs.eigenCentralityDetRDD(adj)
+          r.count(); scope.close()
         }
       if (detAll || wanted("label"))
         phase("label_propagation_det (4 rounds)") {
-          val r = GraphAlgs.labelPropagationDetRDD(adj)
-          r.count(); r.unpersist(blocking = false)
+          val (r, scope) = GraphAlgs.labelPropagationDetRDD(adj)
+          r.count(); scope.close()
         }
       adj.unpersist(blocking = false)
     }
@@ -359,15 +355,15 @@ object ScaleProbe {
           a
         }
         phase("skew pagerank_det (10 rounds)") {
-          val r = GraphAlgs.pagerankDetRDD(adjStats)
-          r.count(); r.unpersist(blocking = false)
+          val (r, scope) = GraphAlgs.pagerankDetRDD(adjStats)
+          r.count(); scope.close()
         }
         adjStats.unpersist(blocking = false)
       }
       if (skewSub("skew-cc")) phase("skew cc two-phase") {
         val r = GraphAlgs.connectedComponentsTwoPhase(skewEdges)
         println(s"[scale-probe] skew cc converged=${r.converged} rounds=${r.rounds}")
-        r.release()
+        r.scope.close()
       }
       if (skewSubOptIn("skew-betweenness")) {
         // Brandes on a hub graph: forward messages are k longs per
@@ -382,9 +378,9 @@ object ScaleProbe {
           val roots = skewEdges.select(col("src")).distinct()
             .orderBy(md5(col("src").cast("string")), col("src")).limit(5)
             .collect().map(_.getLong(0))
-          val r = GraphAlgs.sampledBetweennessRDD(bg, roots, maxHops = 8)
+          val (r, scope) = GraphAlgs.sampledBetweennessRDD(bg, roots, maxHops = 8)
           println(s"[scale-probe] skew betweenness rows=${r.count()}")
-          r.unpersist(blocking = false)
+          scope.close()
         }
         bg.unpersist(blocking = false)
       }
@@ -464,7 +460,7 @@ object ScaleProbe {
           val kt = GraphAlgs.ktrussPeel(canon)
           val n = kt.edges.count()
           println(s"[scale-probe] skew ktruss survivors=$n converged=${kt.converged}")
-          kt.release()
+          kt.scope.close()
         }
       if (skewSubOptIn("skew-mis")) {
         // the two priority-schedule loops on a hub graph. The hub is
@@ -800,8 +796,8 @@ object ScaleProbe {
       // phase that would regress first if the routed fold stopped
       // scaling
       phase("pagerank float-det (10 rounds)") {
-        val (r, rel) = GraphAlgs.pagerankFloatRDD(g)
-        r.count(); rel()
+        val (r, scope) = GraphAlgs.pagerankFloatRDD(g)
+        r.count(); scope.close()
       }
       phase("eigencentrality float-det (20)") {
         val eg = GraphAlgs.eigenCentrality(g)

@@ -90,18 +90,42 @@ object GraphAlgs {
   }
 
   /** (vid, hops) rows for vertices reached within maxHops.
-   * The result is materialized (cached + counted) BEFORE the Pregel
-   * surfaces are unpersisted — the DataFrame is lazy, so releasing
-   * first would force a full lineage recompute at evaluation time. */
+   * The result is materialized (cached + counted) BEFORE the loop
+   * scope closes — the DataFrame is lazy, so releasing first would
+   * force a full lineage recompute at evaluation time. */
   def bfsHopsDF[V](g: Graph[V, Int], source: VertexId, maxHops: Int = 30): DataFrame = {
-    val (state, release) = multiSourceBfsRDD(g, Array(source), maxHops)
+    val (state, scope) = multiSourceBfsRDD(g, Array(source), maxHops)
     val rows = state.map { case (id, ds) => (id, ds(0).toLong) }
     val spark = org.apache.spark.sql.SparkSession.active
     val df = spark.createDataFrame(rows).toDF("vid", "hops").cache()
     df.count()
-    release()
+    scope.close()
     df
   }
+
+  /** Partition count of a loop's state: about 500k records per
+   * partition, at least 8, and never more than the input has. Tens
+   * of rounds each launch a job over every partition, so empty-task
+   * overhead dominates when partitions far outnumber the state. */
+  private def loopPartitions(inputPartitions: Int, records: Long): Int =
+    math.max(8, math.min(inputPartitions, (records / 500000L).toInt))
+
+  /** Per-partition hash map of a vertex-keyed pair RDD (one map per
+   * partition, partitioning preserved): a round then costs
+   * O(frontier) lookups instead of a cogroup over the full adjacency. */
+  private def adjacencyMaps(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])])
+      : org.apache.spark.rdd.RDD[java.util.HashMap[Long, Array[Long]]] =
+    adj.mapPartitions { it =>
+      val m = new java.util.HashMap[Long, Array[Long]]()
+      it.foreach(kv => m.put(kv._1, kv._2))
+      Iterator.single(m)
+    }
+
+  /** Both directions of every edge of `g`, grouped per vertex under `p`. */
+  private def symmetricAdjacency[V](g: Graph[V, Int], p: org.apache.spark.Partitioner)
+      : org.apache.spark.rdd.RDD[(Long, Array[Long])] =
+    g.edges.flatMap(e => Iterator((e.srcId, e.dstId), (e.dstId, e.srcId)))
+      .groupByKey(p).mapValues(_.toArray)
 
   /**
    * Frontier BFS from k sources on co-partitioned pair RDDs — the
@@ -115,25 +139,20 @@ object GraphAlgs {
    * identical to the Pregel formulation (both compute hop-layer
    * fixpoints); only reached vertices appear in the result.
    *
-   * Returns the persisted (vid, per-source hop distances) RDD
-   * (Int.MaxValue = unreached) plus a release handle.
+   * Returns the cached (vid, per-source hop distances) RDD
+   * (Int.MaxValue = unreached) and the scope that releases it.
    */
   def multiSourceBfsRDD[V](g: Graph[V, Int], sources: Array[VertexId],
-      maxHops: Int): (org.apache.spark.rdd.RDD[(Long, Array[Int])], () => Unit) = {
+      maxHops: Int): (org.apache.spark.rdd.RDD[(Long, Array[Int])], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
     require(sources.length <= 64, "source mask is a Long")
     val k = sources.length
     val INF = Int.MaxValue
     val sc = g.edges.sparkContext
     val nEdges = g.edges.count()
     val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(g.edges.getNumPartitions, (2 * nEdges / 500000L).toInt)))
-    val adjMap: org.apache.spark.rdd.RDD[java.util.HashMap[Long, Array[Long]]] =
-      g.edges.flatMap(e => Iterator((e.srcId, e.dstId), (e.dstId, e.srcId)))
-        .groupByKey(p).mapPartitions { it =>
-          val m = new java.util.HashMap[Long, Array[Long]]()
-          it.foreach(kv => m.put(kv._1, kv._2.toArray))
-          Iterator.single(m)
-        }.persist()
+      loopPartitions(g.edges.getNumPartitions, 2 * nEdges))
+    val adjMap = scope.cache(adjacencyMaps(symmetricAdjacency(g, p)))
     adjMap.count()
 
     // state value: (per-source hops, mask of sources set LAST round)
@@ -144,37 +163,25 @@ object GraphAlgs {
         ss.foreach { case (_, i) => a(i) = 0; mask |= 1L << i }
         (id, (a, mask))
       }
-    var state: org.apache.spark.rdd.RDD[(Long, (Array[Int], Long))] =
-      sc.parallelize(src0).partitionBy(p).persist()
-
-    var prevState: org.apache.spark.rdd.RDD[(Long, (Array[Int], Long))] = null
-    var prevMsgs: org.apache.spark.rdd.RDD[(Long, Long)] = null
-    var round = 0
-    var quiescent = false
-    while (!quiescent && round < maxHops) {
-      val frontier = state.mapPartitions(
+    // each round's count materializes the state the previous round
+    // built lazily, which the next state still reads: lag 1
+    val loop = scope.loop(maxHops)
+    val state0 = loop.init.cache(sc.parallelize(src0).partitionBy(p), lag = 1)
+    val (state, _) = loop.run((state0, false))(!_._2) { case (r, (prev, _)) =>
+      val frontier = prev.mapPartitions(
         _.collect { case (v, (_, m)) if m != 0L => (v, m) },
         preservesPartitioning = true)
-      val msgs = frontier.zipPartitions(adjMap) { (fIt, mIt) =>
+      val msgs = r.cache(frontier.zipPartitions(adjMap) { (fIt, mIt) =>
         val m = mIt.next()
         fIt.flatMap { case (v, mask) =>
           val nbrs = m.get(v)
           if (nbrs == null) Iterator.empty
           else nbrs.iterator.map(u => (u, mask))
         }
-      }.reduceByKey(p, _ | _)
-      msgs.persist()
-      val n = msgs.count() // materializes `state` (its one consumer)
-      if (prevState != null) prevState.unpersist(blocking = false)
-      if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
-      if (n == 0) {
-        quiescent = true
-        msgs.unpersist(blocking = false)
-      } else {
-        round += 1
-        val d = round
-        prevState = state
-        prevMsgs = msgs
+      }.reduceByKey(p, _ | _))
+      if (msgs.count() == 0) (prev, true) // materializes `prev` (its one consumer)
+      else {
+        val d = r.number
         // both sides live under p, but the state GROWS (first-reached
         // vertices enter), so the merge streams the state against a
         // hashed message side and then drains the unmatched messages
@@ -183,7 +190,7 @@ object GraphAlgs {
         // The remainder iterator touches the map only after the
         // streamed side is exhausted (Iterator.++ is lazy), so the
         // removes during the first phase are safe.
-        state = prevState.zipPartitions(msgs, preservesPartitioning = true) {
+        val next = prev.zipPartitions(msgs, preservesPartitioning = true) {
           (sIt, mIt) =>
             val mm = new java.util.HashMap[Long, java.lang.Long]()
             mIt.foreach(kv => mm.put(kv._1, kv._2))
@@ -221,19 +228,12 @@ object GraphAlgs {
               }
             }
             updated ++ fresh
-        }.persist()
+        }
+        (r.cache(next, lag = 1), false)
       }
     }
     state.count() // materialize the final generation
-    if (prevState != null) prevState.unpersist(blocking = false)
-    if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
-
-    val finalState = state
-    val dists = state.mapValues(_._1)
-    (dists, () => {
-      finalState.unpersist(blocking = false)
-      adjMap.unpersist(blocking = false)
-    })
+    state.mapValues(_._1)
   }
 
   /**
@@ -254,155 +254,125 @@ object GraphAlgs {
    * fold their successor terms sigma_v/sigma_w * (1 + delta_w) in
    * ascending successor-id order — the deterministic-fold contract,
    * bit-identical to the oracle's list_reduce replay). State lives
-   * on pair RDDs under one fixed HashPartitioner with the
-   * generational persist/release discipline of the other loops here.
+   * on pair RDDs under one fixed HashPartitioner.
    *
    * Returns (vid, n_roots, bc) where bc folds the per-source
    * dependencies in ascending SOURCE-ID order over the (source,
    * vertex) pairs with hop distance >= 1 (a root never counts
    * itself); rows cover exactly the vertices with at least one such
-   * pair.
+   * pair. The rows are cached; the returned scope releases them.
    */
   def sampledBetweennessRDD[V](g: Graph[V, Int], sources: Array[VertexId],
-      maxHops: Int): org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
+      maxHops: Int): (org.apache.spark.rdd.RDD[(Long, Long, Double)], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     require(sources.length <= 64, "source set is a small sample")
-    // probe-only phase timing (graft.betweenness.log=on or env
-    // SPARK_GRAFT_BC_LOG=on): attributes the wall to the adjacency
-    // build vs the forward sigma BFS vs the backward Brandes
-    // accumulation — the per-phase split the 10x slope probe needs
-    // (VERDICT r19 item 2)
-    val logOn = sys.props.get("graft.betweenness.log")
-      .orElse(sys.env.get("SPARK_GRAFT_BC_LOG")).contains("on")
-    var tMark = System.nanoTime()
-    def tlog(msg: => String): Unit = if (logOn) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[graft-betweenness] $msg (${(now - tMark) / 1e9}%.2f s)")
-      tMark = now
-    }
     val k = sources.length
     val INF = Int.MaxValue
     val sc = g.edges.sparkContext
     val nEdges = g.edges.count()
     val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(g.edges.getNumPartitions, (2 * nEdges / 500000L).toInt)))
+      loopPartitions(g.edges.getNumPartitions, 2 * nEdges))
     // neighbor order is irrelevant here: forward sigma sums are
     // order-free reduceByKey folds and the backward pass re-sorts
     // its terms per receiver — no O(Σ deg log deg) sort at build
-    val adjMap: RDD[java.util.HashMap[Long, Array[Long]]] =
-      g.edges.flatMap(e => Iterator((e.srcId, e.dstId), (e.dstId, e.srcId)))
-        .groupByKey(p).mapPartitions { it =>
-          val m = new java.util.HashMap[Long, Array[Long]]()
-          it.foreach(kv => m.put(kv._1, kv._2.toArray))
-          Iterator.single(m)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
+    val adjMap = scope.cache(adjacencyMaps(symmetricAdjacency(g, p)), MEMORY_AND_DISK)
     adjMap.count()
-    tlog(s"adjacency built (|E|=$nEdges)")
 
     // ---- forward: dist + sigma, synchronous hop layers ----
-    // state: vid -> (dist per source, sigma per source, lastMask)
+    // state: vid -> (dist per source, sigma per source, lastMask);
+    // loop state: (state, quiescent, deepest layer reached)
     type FState = (Array[Int], Array[Long], Long)
-    val src0: Seq[(Long, FState)] = sources.zipWithIndex
-      .groupBy(_._1).toSeq.map { case (id, ss) =>
-        val d = Array.fill(k)(INF); val s = Array.fill(k)(0L)
-        var mask = 0L
-        ss.foreach { case (_, i) => d(i) = 0; s(i) = 1L; mask |= 1L << i }
-        (id, (d, s, mask))
-      }
-    var state: RDD[(Long, FState)] =
-      sc.parallelize(src0).partitionBy(p).persist(StorageLevel.MEMORY_AND_DISK)
-    var prevState: RDD[(Long, FState)] = null
-    var prevMsgs: RDD[(Long, Array[Long])] = null
-    var round = 0
-    var quiescent = false
-    while (!quiescent && round < maxHops) {
-      val msgs = state.zipPartitions(adjMap, preservesPartitioning = false) {
-        (sIt, mIt) =>
-          val m = mIt.next()
-          sIt.flatMap { case (v, (_, sig, mask)) =>
-            if (mask == 0L) Iterator.empty
-            else {
-              val nbrs = m.get(v)
-              if (nbrs == null) Iterator.empty
-              else {
-                val contrib = Array.tabulate(k)(i =>
-                  if (((mask >> i) & 1L) == 1L) sig(i) else 0L)
-                nbrs.iterator.map(u => (u, contrib))
-              }
-            }
-          }
-      }.reduceByKey(p, (a, b) => Array.tabulate(k)(i => Math.addExact(a(i), b(i))))
-      msgs.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = msgs.count()
-      if (prevState != null) prevState.unpersist(blocking = false)
-      if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
-      if (n == 0) {
-        quiescent = true
-        msgs.unpersist(blocking = false)
-      } else {
-        round += 1
-        val d = round
-        prevState = state
-        prevMsgs = msgs
-        state = prevState.zipPartitions(msgs, preservesPartitioning = true) {
+    def forward(fwd: Fixpoint.CacheScope): (RDD[(Long, FState)], Int) = {
+      val src0: Seq[(Long, FState)] = sources.zipWithIndex
+        .groupBy(_._1).toSeq.map { case (id, ss) =>
+          val d = Array.fill(k)(INF); val s = Array.fill(k)(0L)
+          var mask = 0L
+          ss.foreach { case (_, i) => d(i) = 0; s(i) = 1L; mask |= 1L << i }
+          (id, (d, s, mask))
+        }
+      // the same generation shape as multiSourceBfsRDD: lag 1 states
+      val loop = fwd.loop(maxHops)
+      val state0 = loop.init.cache(sc.parallelize(src0).partitionBy(p), MEMORY_AND_DISK, lag = 1)
+      val (state, _, depth) = loop.run((state0, false, 0))(!_._2) { case (r, (prev, _, _)) =>
+        val msgs = r.cache(prev.zipPartitions(adjMap, preservesPartitioning = false) {
           (sIt, mIt) =>
-            val mm = new java.util.HashMap[Long, Array[Long]]()
-            mIt.foreach(kv => mm.put(kv._1, kv._2))
-            val updated = sIt.map { case (v, (da, sa, _)) =>
-              val inc = mm.remove(v)
-              if (inc == null) (v, (da, sa, 0L))
+            val m = mIt.next()
+            sIt.flatMap { case (v, (_, sig, mask)) =>
+              if (mask == 0L) Iterator.empty
               else {
-                var dn = da; var sn = sa; var set = 0L; var copied = false
-                var i = 0
-                while (i < k) {
-                  if (inc(i) > 0L && dn(i) == INF) {
-                    if (!copied) { dn = da.clone(); sn = sa.clone(); copied = true }
-                    dn(i) = d; sn(i) = inc(i); set |= 1L << i
+                val nbrs = m.get(v)
+                if (nbrs == null) Iterator.empty
+                else {
+                  val contrib = Array.tabulate(k)(i =>
+                    if (((mask >> i) & 1L) == 1L) sig(i) else 0L)
+                  nbrs.iterator.map(u => (u, contrib))
+                }
+              }
+            }
+        }.reduceByKey(p, (a, b) => Array.tabulate(k)(i => Math.addExact(a(i), b(i)))),
+          MEMORY_AND_DISK)
+        if (msgs.count() == 0) (prev, true, r.number - 1)
+        else {
+          val d = r.number
+          val next = prev.zipPartitions(msgs, preservesPartitioning = true) {
+            (sIt, mIt) =>
+              val mm = new java.util.HashMap[Long, Array[Long]]()
+              mIt.foreach(kv => mm.put(kv._1, kv._2))
+              val updated = sIt.map { case (v, (da, sa, _)) =>
+                val inc = mm.remove(v)
+                if (inc == null) (v, (da, sa, 0L))
+                else {
+                  var dn = da; var sn = sa; var set = 0L; var copied = false
+                  var i = 0
+                  while (i < k) {
+                    if (inc(i) > 0L && dn(i) == INF) {
+                      if (!copied) { dn = da.clone(); sn = sa.clone(); copied = true }
+                      dn(i) = d; sn(i) = inc(i); set |= 1L << i
+                    }
+                    i += 1
                   }
-                  i += 1
+                  (v, (dn, sn, set))
                 }
-                (v, (dn, sn, set))
               }
-            }
-            val fresh = new scala.collection.AbstractIterator[(Long, FState)] {
-              private lazy val it = mm.entrySet().iterator()
-              def hasNext: Boolean = it.hasNext
-              def next(): (Long, FState) = {
-                val e = it.next()
-                val inc = e.getValue
-                val dn = Array.fill(k)(INF); val sn = Array.fill(k)(0L)
-                var set = 0L; var i = 0
-                while (i < k) {
-                  if (inc(i) > 0L) { dn(i) = d; sn(i) = inc(i); set |= 1L << i }
-                  i += 1
+              val fresh = new scala.collection.AbstractIterator[(Long, FState)] {
+                private lazy val it = mm.entrySet().iterator()
+                def hasNext: Boolean = it.hasNext
+                def next(): (Long, FState) = {
+                  val e = it.next()
+                  val inc = e.getValue
+                  val dn = Array.fill(k)(INF); val sn = Array.fill(k)(0L)
+                  var set = 0L; var i = 0
+                  while (i < k) {
+                    if (inc(i) > 0L) { dn(i) = d; sn(i) = inc(i); set |= 1L << i }
+                    i += 1
+                  }
+                  (e.getKey, (dn, sn, set))
                 }
-                (e.getKey, (dn, sn, set))
               }
-            }
-            updated ++ fresh
-        }.persist(StorageLevel.MEMORY_AND_DISK)
+              updated ++ fresh
+          }
+          (r.cache(next, MEMORY_AND_DISK, lag = 1), false, d)
+        }
       }
+      state.count()
+      (state, depth)
     }
-    state.count()
-    if (prevState != null) prevState.unpersist(blocking = false)
-    if (prevMsgs != null) prevMsgs.unpersist(blocking = false)
-    val maxD = round // deepest layer actually reached
-    tlog(s"forward BFS done ($maxD hop layers)")
 
     // ---- backward: Brandes dependency accumulation per depth ----
-    // bstate: vid -> (dist, sigma, delta)
+    // bstate: vid -> (dist, sigma, delta). Its round 0 runs the
+    // forward pass in a scope that closes once bstate is cached.
     type BState = (Array[Int], Array[Long], Array[Double])
-    var bstate: RDD[(Long, BState)] = state
-      .mapValues { case (d, s, _) => (d, s, Array.fill(k)(0.0)) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    bstate.count()
-    state.unpersist(blocking = false)
-    var prevB: RDD[(Long, BState)] = null
-    var dDepth = maxD
-    while (dDepth >= 1) {
-      val depth = dDepth
+    val loop = scope.loop(maxHops)
+    val bstate0 = Fixpoint.using { fwd =>
+      val (state, maxD) = forward(fwd)
+      val b = loop.init.cache(state
+        .mapValues { case (d, s, _) => (d, s, Array.fill(k)(0.0)) }, MEMORY_AND_DISK)
+      b.count()
+      (b, maxD) // maxD: the deepest layer actually reached
+    }
+    val (bstate, _) = loop.run(bstate0)(_._2 >= 1) { case (r, (prev, depth)) =>
       // depth-d vertices ship ONE packed message per incident edge
       // carrying every active source index at once — [i, sigma_w,
       // doubleToRawLongBits(delta_w)] triples in a primitive Long
@@ -410,7 +380,7 @@ object GraphAlgs {
       // hub-receiver buffers than a per-(edge, source) tuple);
       // only depth-(d-1) receivers keep a triple
       val msgs: RDD[(Long, Iterable[(Long, Array[Long])])] =
-        bstate.zipPartitions(adjMap, preservesPartitioning = false) {
+        prev.zipPartitions(adjMap, preservesPartitioning = false) {
           (sIt, mIt) =>
             val m = mIt.next()
             sIt.flatMap { case (w, (da, sa, ga)) =>
@@ -438,10 +408,9 @@ object GraphAlgs {
               }
             }
         }.groupByKey(p)
-      // msgs has exactly one consumer (the state merge below) — no
-      // persist/count: each backward round is ONE Spark job
-      prevB = bstate
-      bstate = prevB.zipPartitions(msgs, preservesPartitioning = true) {
+      // msgs has exactly one consumer (the state merge below), so it
+      // is not cached: each backward round is ONE Spark job
+      val next = r.cache(prev.zipPartitions(msgs, preservesPartitioning = true) {
         (sIt, mIt) =>
           val mm = new java.util.HashMap[Long, Iterable[(Long, Array[Long])]]()
           mIt.foreach(kv => mm.put(kv._1, kv._2))
@@ -482,12 +451,10 @@ object GraphAlgs {
               if (gn == null) (v, (da, sa, ga)) else (v, (da, sa, gn))
             }
           }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      bstate.count()
-      prevB.unpersist(blocking = false)
-      dDepth -= 1
+      }, MEMORY_AND_DISK)
+      next.count()
+      (next, depth - 1)
     }
-    tlog(s"backward accumulation done ($maxD depth layers)")
 
     // ascending-source-id fold over the (source, vertex) pairs with
     // hop distance >= 1
@@ -500,10 +467,9 @@ object GraphAlgs {
       }
       if (n > 0L) Iterator.single((v, n, acc)) else Iterator.empty
     }
-    val out = result.persist(StorageLevel.MEMORY_AND_DISK)
+    val out = scope.cache(result, MEMORY_AND_DISK)
     out.count()
-    bstate.unpersist(blocking = false)
-    adjMap.unpersist(blocking = false)
+    scope.release(bstate, adjMap)
     out
   }
 
@@ -537,29 +503,20 @@ object GraphAlgs {
    * exactly what this formulation pays.
    */
   def coreness[V: scala.reflect.ClassTag](g: Graph[V, Int], maxIter: Int = 50): Graph[Int, Int] = {
-    val (ests, release) = corenessStates(g, maxIter)
+    val (ests, scope) = corenessStates(g, maxIter)
     val out = g.outerJoinVertices(ests)((_, _, e) => e.getOrElse(0))
     out.cache()
     out.vertices.count()
-    release()
+    scope.close()
     out
   }
 
   /** Core of the k-core loop: final (vid, coreness) for every
    * non-isolated vertex (isolated vertices have coreness 0 and are
-   * absent), plus a release handle for the loop's cached RDDs. The
-   * returned RDD stays persisted until `release()`. */
+   * absent), cached until the returned scope closes. */
   private def corenessStates[V](g: Graph[V, Int],
-      maxIter: Int): (org.apache.spark.rdd.RDD[(Long, Int)], () => Unit) = {
-    // probe-only per-round log (graft.kcore.log=on or env
-    // SPARK_GRAFT_KCORE_LOG=on): VERDICT r19 item 3 asks whether this
-    // peel needs the k-truss overlay treatment — the decisive numbers
-    // are the per-round WRITE volumes (CoreState objects actually
-    // allocated: receivers + send-gate clears; everything else passes
-    // through by reference) against the frontier, and the wall of the
-    // tail rounds against the job-dispatch floor
-    val logOn = sys.props.get("graft.kcore.log")
-      .orElse(sys.env.get("SPARK_GRAFT_KCORE_LOG")).contains("on")
+      maxIter: Int): (org.apache.spark.rdd.RDD[(Long, Int)], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
     // largest k <= bound with >= k neighbor estimates >= k, from a
     // histogram clipped at deg (cum accumulates the >= k tail,
     // including buckets above bound)
@@ -572,17 +529,10 @@ object GraphAlgs {
       }
       0
     }
-    // size the loop's partitioner to the data: tens of frontier
-    // rounds each launch a job over every partition, so empty-task
-    // overhead dominates when partitions far outnumber the state
-    // (~500k adjacency entries per partition; never more partitions
-    // than the edge RDD has)
     val nEdges = g.edges.count()
     val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(g.edges.getNumPartitions, (2 * nEdges / 500000L).toInt)))
-    val adj: org.apache.spark.rdd.RDD[(Long, Array[Long])] = g.edges
-      .flatMap(e => Iterator((e.srcId, e.dstId), (e.dstId, e.srcId)))
-      .groupByKey(p).mapValues(_.toArray).persist()
+      loopPartitions(g.edges.getNumPartitions, 2 * nEdges))
+    val adj = scope.cache(symmetricAdjacency(g, p))
     adj.count()
 
     // round 0: the one full exchange — every vertex's degree to every
@@ -604,7 +554,11 @@ object GraphAlgs {
       }
       .partitionBy(p)
 
-    var state: org.apache.spark.rdd.RDD[(Long, CoreState)] =
+    // the same generation shape as multiSourceBfsRDD: each round's
+    // count materializes the state the previous round built lazily
+    // (lag 1). The loop counts its rounds from the round-0 exchange.
+    val loop = scope.loop(maxIter - 1)
+    val state0 = loop.init.cache(
       adj.zipPartitions(degMsgs, preservesPartitioning = true) { (aIt, mIt) =>
         val hm = new java.util.HashMap[Long, Array[Int]]()
         aIt.foreach { case (v, nbrs) => hm.put(v, new Array[Int](nbrs.length + 1)) }
@@ -624,47 +578,21 @@ object GraphAlgs {
           out += ((e.getKey, CoreState(hIndexOf(deg, deg, counts), deg, counts)))
         }
         out.iterator
-      }.persist()
-    state.count()
+      }, lag = 1)
+    state0.count()
 
-    // one hash map of the partition's adjacency per partition: a
-    // round then costs O(frontier) lookups, not a cogroup that
-    // re-iterates (and re-buffers) the full adjacency every round
-    val adjMap: org.apache.spark.rdd.RDD[java.util.HashMap[Long, Array[Long]]] =
-      adj.mapPartitions { it =>
-        val m = new java.util.HashMap[Long, Array[Long]]()
-        it.foreach(kv => m.put(kv._1, kv._2))
-        Iterator.single(m)
-      }.persist()
+    val adjMap = scope.cache(adjacencyMaps(adj))
     adjMap.count()
-    adj.unpersist(blocking = false)
+    scope.release(adj)
 
-    // One Spark job per round: the dmsgs count below is the round's
-    // only action, and computing it materializes the (persisted)
-    // current state generation en route — so unpersists trail by one
-    // generation (a generation's blocks are only dropped once the
-    // NEXT generation is safely cached).
-    var prevState: org.apache.spark.rdd.RDD[(Long, CoreState)] = null
-    var prevDmsgs: org.apache.spark.rdd.RDD[(Long, CoreDelta)] = null
-    var it = 1
-    var quiescent = false
-    while (!quiescent && it < maxIter) {
-      val tRound = System.nanoTime()
-      val writeAcc =
-        if (logOn) Some(g.edges.sparkContext.longAccumulator("kcoreWrites"))
-        else None
-      val frontierAcc =
-        if (logOn) Some(g.edges.sparkContext.longAccumulator("kcoreFrontier"))
-        else None
+    val (state, _) = loop.run((state0, false))(!_._2) { case (r, (prev, _)) =>
       // the frontier filter preserves keys, so the co-partitioning
       // with adjMap (derived from adj under the same partitioner)
       // survives and zipPartitions lines up
-      val frontier = state.mapPartitions(
-        _.collect { case (v, st) if st.prev != st.est =>
-          frontierAcc.foreach(_.add(1L))
-          (v, (st.prev, st.est)) },
+      val frontier = prev.mapPartitions(
+        _.collect { case (v, st) if st.prev != st.est => (v, (st.prev, st.est)) },
         preservesPartitioning = true)
-      val dmsgs = frontier.zipPartitions(adjMap) { (fIt, mIt) =>
+      val dmsgs = r.cache(frontier.zipPartitions(adjMap) { (fIt, mIt) =>
         val m = mIt.next()
         fIt.flatMap { case (v, (o, n)) =>
           val nbrs = m.get(v)
@@ -676,23 +604,14 @@ object GraphAlgs {
           (on: (Int, Int)) => new CoreDelta(on._1, on._2),
           (d: CoreDelta, on: (Int, Int)) => d.add(on._1, on._2),
           (a: CoreDelta, b: CoreDelta) => CoreDelta.merge(a, b),
-          p)
-      dmsgs.persist()
-      val n = dmsgs.count() // materializes `state` (its one consumer)
-      if (prevState != null) prevState.unpersist(blocking = false)
-      if (prevDmsgs != null) prevDmsgs.unpersist(blocking = false)
-      if (n == 0) {
-        quiescent = true
-        dmsgs.unpersist(blocking = false)
-      } else {
-        it += 1
-        prevState = state
-        prevDmsgs = dmsgs
+          p))
+      if (dmsgs.count() == 0) (prev, true) // materializes `prev` (its one consumer)
+      else {
         // both sides live under p: hash the (frontier-sized) delta
         // side per partition and stream the state — a zipPartitions
         // merge, not a cogroup that re-buffers the full state every
         // round
-        state = prevState.zipPartitions(dmsgs, preservesPartitioning = true) {
+        val next = prev.zipPartitions(dmsgs, preservesPartitioning = true) {
           (sIt, mIt) =>
             val mm = new java.util.HashMap[Long, CoreDelta]()
             mIt.foreach(kv => mm.put(kv._1, kv._2))
@@ -707,53 +626,34 @@ object GraphAlgs {
                   c(math.min(m.news(j), deg)) += 1
                   j += 1
                 }
-                writeAcc.foreach(_.add(1L))
                 CoreState(math.min(st.est, hIndexOf(st.est, deg, c)), st.est, c)
-              } else {
+              } else if (st.prev != st.est) {
                 // clear the send gate on non-receivers: a vertex only
                 // re-sends in the round after it changed
-                if (st.prev != st.est) {
-                  writeAcc.foreach(_.add(1L))
-                  st.copy(prev = st.est)
-                } else st
-              }
+                st.copy(prev = st.est)
+              } else st
               (id, next)
             }
-        }.persist()
-        if (logOn) {
-          // probe-only extra action: materialize this generation NOW
-          // so the round's accumulators read complete (the production
-          // path keeps one job per round and lets the next round's
-          // count materialize it)
-          state.count()
-          System.err.println(f"[graft-kcore] round $it: frontier=${frontierAcc.fold(-1L)(_.value)} receivers=$n rewritten=${writeAcc.fold(-1L)(_.value)} wall=${(System.nanoTime() - tRound) / 1e9}%.3f s")
         }
+        (r.cache(next, lag = 1), false)
       }
     }
     state.count() // materialize the final generation
-    if (prevState != null) prevState.unpersist(blocking = false)
-    if (prevDmsgs != null) prevDmsgs.unpersist(blocking = false)
-    System.err.println(s"[graft-kcore] converged in $it rounds")
-    val finalState = state
-    val ests = state.mapValues(_.est)
-    (ests, () => {
-      finalState.unpersist(blocking = false)
-      adjMap.unpersist(blocking = false)
-    })
+    state.mapValues(_.est)
   }
 
   /** (vid, core) rows for the whole vertex set (isolated vertices at
-   * coreness 0), materialized before the loop surfaces are released
-   * — see bfsHopsDF. Goes through `corenessStates` directly so no
-   * graph sharing the caller's cached edge RDD is ever unpersisted. */
+   * coreness 0), materialized before the loop scope closes — see
+   * bfsHopsDF. Goes through `corenessStates` directly so no graph
+   * sharing the caller's cached edge RDD is ever unpersisted. */
   def corenessDF[V: scala.reflect.ClassTag](g: Graph[V, Int], maxIter: Int = 50): DataFrame = {
-    val (ests, release) = corenessStates(g, maxIter)
+    val (ests, scope) = corenessStates(g, maxIter)
     val rows = g.vertices.leftOuterJoin(ests)
       .map { case (id, (_, e)) => (id, e.getOrElse(0).toLong) }
     val spark = org.apache.spark.sql.SparkSession.active
     val df = spark.createDataFrame(rows).toDF("vid", "core").cache()
     df.count()
-    release()
+    scope.close()
     df
   }
 
@@ -878,10 +778,10 @@ object GraphAlgs {
   /** Integer-exact per-vertex reachability summary over the k
    * sources: (vid, n_reached, sum_dist, min_dist) — all integral so
    * the oracle hash never touches a float. Materialized before the
-   * Pregel surfaces are released (see bfsHopsDF). */
+   * loop scope closes (see bfsHopsDF). */
   def multiSourceBfsDF[V: scala.reflect.ClassTag](
       g: Graph[V, Int], sources: Array[VertexId], maxHops: Int = 10): DataFrame = {
-    val (state, release) = multiSourceBfsRDD(g, sources, maxHops)
+    val (state, scope) = multiSourceBfsRDD(g, sources, maxHops)
     val rows = state.flatMap { case (id, ds) =>
       val reached = ds.filter(_ != Int.MaxValue)
       if (reached.isEmpty) None
@@ -891,7 +791,7 @@ object GraphAlgs {
     val df = spark.createDataFrame(rows)
       .toDF("vid", "n_reached", "sum_dist", "min_dist").cache()
     df.count()
-    release()
+    scope.close()
     df
   }
 
@@ -930,6 +830,38 @@ object GraphAlgs {
       .longValueExact()
   }
 
+  /** One push step of the integer det family: hash the score
+   * partition, stream the co-partitioned adjacency, and send
+   * `value(score(u), deg(u))` from every vertex u to each of its
+   * neighbors. A vertex with no score reads 0. */
+  private def detPush(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
+      score: org.apache.spark.rdd.RDD[(Long, Long)])(
+      value: (Long, Int) => Long): org.apache.spark.rdd.RDD[(Long, Long)] =
+    adj.zipPartitions(score) { (aIt, sIt) =>
+      val m = new java.util.HashMap[Long, Long]()
+      sIt.foreach(kv => m.put(kv._1, kv._2))
+      aIt.flatMap { case (u, nbrs) =>
+        val c = value(m.get(u), nbrs.length)
+        nbrs.iterator.map(n => (n, c))
+      }
+    }
+
+  /** Run `rounds` lazily chained steps from `init` and cache the
+   * result in a new scope: ONE Spark job for the whole loop. No
+   * round needs a driver-side scalar, so the generations run as
+   * `rounds` shuffle stages inside the single job the final count()
+   * launches; each generation is consumed by exactly one downstream
+   * round, so nothing recomputes. Lineage depth = `rounds` (fixed,
+   * ~10); shuffle outputs provide the usual stage-level recovery. */
+  private def lazyRounds[T](init: org.apache.spark.rdd.RDD[T], rounds: Int)(
+      step: org.apache.spark.rdd.RDD[T] => org.apache.spark.rdd.RDD[T])
+      : (org.apache.spark.rdd.RDD[T], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
+      val last = scope.cache(scope.loop(rounds).run(init)(_ => true)((_, cur) => step(cur)))
+      last.count()
+      last
+    }
+
   /** Deterministic fixed-point PageRank in integer micro-units:
    * rank_0 = 10^6; rank' = 150000 + (850000 * Σ rank div deg) div
    * 10^6. Integer sums are order-free, so the scores are
@@ -940,38 +872,15 @@ object GraphAlgs {
    * Overflow-safe: the 850000 * Σ product routes through [[mulDiv]]
    * (exact at any Σ a Long can hold) and the contribution sum
    * itself adds via Math.addExact, so mass concentration beyond
-   * Long range fails loud instead of silently corrupting scores. */
+   * Long range fails loud instead of silently corrupting scores.
+   * The ranks stay cached until the returned scope closes. */
   def pagerankDetRDD(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      rounds: Int = 10): org.apache.spark.rdd.RDD[(Long, Long)] = {
+      rounds: Int = 10): (org.apache.spark.rdd.RDD[(Long, Long)], Fixpoint.CacheScope) = {
     val p = adj.partitioner.get
-    // ONE Spark job for the whole fixed-round loop (the hitsDetRDD
-    // job-elision discipline, extended): no round needs a
-    // driver-side scalar, so the generations chain LAZILY —
-    // `rounds` shuffle stages inside the single job the final
-    // count() launches — instead of paying a persist + count job
-    // per round (10 jobs -> 1; on a scheduler-latency-bound local
-    // run the dispatch floor was most of the wall). Values are
-    // byte-identical: the same recurrence evaluates once, stagewise,
-    // and each generation is consumed by exactly one downstream
-    // round, so nothing recomputes. Lineage depth = `rounds`
-    // (fixed, ~10) — the standard depth of any multi-stage SQL job;
-    // shuffle outputs provide the usual stage-level recovery.
-    var rank: org.apache.spark.rdd.RDD[(Long, Long)] =
-      adj.mapValues(_ => 1000000L)
-    (1 to rounds).foreach { _ =>
-      rank = adj.zipPartitions(rank) { (aIt, rIt) =>
-        val m = new java.util.HashMap[Long, Long]()
-        rIt.foreach(kv => m.put(kv._1, kv._2))
-        aIt.flatMap { case (u, nbrs) =>
-          val c = m.get(u) / nbrs.length
-          nbrs.iterator.map(n => (n, c))
-        }
-      }.reduceByKey(p, Math.addExact(_, _))
+    lazyRounds(adj.mapValues(_ => 1000000L), rounds) { rank =>
+      detPush(adj, rank)(_ / _).reduceByKey(p, Math.addExact(_, _))
         .mapValues(s => 150000L + mulDiv(s, 850000L, 1000000L))
     }
-    rank.persist()
-    rank.count()
-    rank
   }
 
   /** Personalized PageRank in the det family's integer micro-unit
@@ -985,30 +894,19 @@ object GraphAlgs {
    * locality. Seeds ride a broadcast set (bounded by construction
    * — callers pass a handful of hash-picked roots). */
   def pprDetRDD(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      seeds: Set[Long], rounds: Int = 10): org.apache.spark.rdd.RDD[(Long, Long)] = {
+      seeds: Set[Long], rounds: Int = 10)
+      : (org.apache.spark.rdd.RDD[(Long, Long)], Fixpoint.CacheScope) = {
     val p = adj.partitioner.get
     val bc = adj.sparkContext.broadcast(seeds)
-    // lazy fixed-round chain, one job total — see pagerankDetRDD
-    var rank: org.apache.spark.rdd.RDD[(Long, Long)] =
-      adj.mapPartitions(_.map { case (v, _) =>
-        (v, if (bc.value(v)) 1000000L else 0L) },
-        preservesPartitioning = true)
-    (1 to rounds).foreach { _ =>
-      rank = adj.zipPartitions(rank) { (aIt, rIt) =>
-        val m = new java.util.HashMap[Long, Long]()
-        rIt.foreach(kv => m.put(kv._1, kv._2))
-        aIt.flatMap { case (u, nbrs) =>
-          val c = m.get(u) / nbrs.length
-          nbrs.iterator.map(n => (n, c))
-        }
-      }.reduceByKey(p, Math.addExact(_, _))
+    val init = adj.mapPartitions(_.map { case (v, _) =>
+      (v, if (bc.value(v)) 1000000L else 0L) },
+      preservesPartitioning = true)
+    lazyRounds(init, rounds) { rank =>
+      detPush(adj, rank)(_ / _).reduceByKey(p, Math.addExact(_, _))
         .mapPartitions(_.map { case (v, s) =>
           (v, (if (bc.value(v)) 150000L else 0L) + mulDiv(s, 850000L, 1000000L)) },
           preservesPartitioning = true)
     }
-    rank.persist()
-    rank.count()
-    rank
   }
 
   /** Deterministic integer eigenvector centrality: shifted power
@@ -1020,62 +918,31 @@ object GraphAlgs {
    * of degree ~9.2e6 would already wrap) and the neighbor sums add
    * via Math.addExact, failing loud past Long range. */
   def eigenCentralityDetRDD(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      rounds: Int = 12): org.apache.spark.rdd.RDD[(Long, Long)] = {
+      rounds: Int = 12): (org.apache.spark.rdd.RDD[(Long, Long)], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
     val p = adj.partitioner.get
-    // ONE Spark job per round (the hitsDetRDD job-elision
-    // discipline): the max-normalization needs a driver-side scalar,
-    // so a round cannot be fully lazy — but the max-fold is the
-    // round's ONLY action. It materializes the persisted raw-sum
-    // generation en route, and the normalized scores are a LAZY
-    // mapValues view over that cache (partitioning preserved),
-    // consumed by the next round's zipPartitions — no separate
-    // count() job per round (24 jobs -> 13 for 12 rounds). The raw
-    // generation backing a lazy view must outlive its consumer, so
-    // unpersists trail by one round; the FINAL round materializes a
-    // concrete persisted RDD so the caller's existing
-    // unpersist-after-copy contract keeps working and no backing
-    // cache leaks. Values byte-identical — same recurrence, same
-    // integer ops, evaluated once per round either way.
-    var x: org.apache.spark.rdd.RDD[(Long, Long)] =
-      adj.mapValues(_ => 1000000L)
-    var rawLive: org.apache.spark.rdd.RDD[(Long, Long)] = null
-    var prevRaw: org.apache.spark.rdd.RDD[(Long, Long)] = null
-    (1 to rounds).foreach { r =>
-      val sums = adj.zipPartitions(x) { (aIt, xIt) =>
-        val m = new java.util.HashMap[Long, Long]()
-        xIt.foreach(kv => m.put(kv._1, kv._2))
-        aIt.flatMap { case (u, nbrs) =>
-          val xu = m.get(u)
-          nbrs.iterator.map(n => (n, xu))
-        }
-      }.reduceByKey(p, Math.addExact(_, _))
+    // ONE Spark job per round: the max-normalization needs a
+    // driver-side scalar, and the max-fold is the round's only
+    // action. It materializes the cached raw sums en route; the
+    // normalized scores are a lazy mapValues view over them
+    // (partitioning preserved), read by the next round (lag 1). The
+    // result is the last such view, over sums the scope holds.
+    scope.loop(rounds).run(adj.mapValues(_ => 1000000L))(_ => true) { (r, x) =>
+      val sums = detPush(adj, x)((xu, _) => xu).reduceByKey(p, Math.addExact(_, _))
       // x and sums share partitioner p: a zipPartitions hash merge
       // instead of the cogroup — same values, no per-key buffer
       // machinery (sums covers only vertices with >= 1 neighbor, so
       // absent keys contribute 0)
-      val s = x.zipPartitions(sums, preservesPartitioning = true) { (xIt, sIt) =>
+      val s = r.cache(x.zipPartitions(sums, preservesPartitioning = true) { (xIt, sIt) =>
         val m = new java.util.HashMap[Long, Long]()
         sIt.foreach(kv => m.put(kv._1, kv._2))
         xIt.map { case (id, own) =>
           (id, Math.addExact(own, m.getOrDefault(id, 0L)))
         }
-      }.persist()
+      }, lag = 1)
       val mx = s.map(_._2).fold(1L)(math.max) // materializes s
-      if (prevRaw != null) prevRaw.unpersist(blocking = false)
-      prevRaw = rawLive
-      rawLive = s
-      x = s.mapValues(v => mulDiv(v, 1000000L, mx))
-      if (r == rounds) {
-        // concrete final generation: callers unpersist the returned
-        // RDD after copying, so the result must own its own cache
-        x = x.persist()
-        x.count()
-        rawLive.unpersist(blocking = false)
-        rawLive = null
-      }
+      s.mapValues(v => mulDiv(v, 1000000L, mx))
     }
-    if (prevRaw != null) prevRaw.unpersist(blocking = false)
-    x
   }
 
   /** Deterministic synchronous label propagation: each vertex adopts
@@ -1083,32 +950,18 @@ object GraphAlgs {
    * — a total order, so unlike classic LPA (implementation-defined
    * tie-breaks) the result is exact and SQL-replayable. */
   def labelPropagationDetRDD(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      rounds: Int = 4): org.apache.spark.rdd.RDD[(Long, Long)] = {
+      rounds: Int = 4): (org.apache.spark.rdd.RDD[(Long, Long)], Fixpoint.CacheScope) = {
     val p = adj.partitioner.get
-    // Round shape: ONE exchange instead of two. The previous form
-    // shuffled ((receiver, label), 1) pairs, reduced, then paid a
-    // SECOND shuffle of the distinct (receiver, (count, label))
-    // triples to the receiver's partition for the argmax. Keying by
-    // the receiver directly with a map-side label->count combiner
-    // ships the same information in the first exchange (combiners
-    // collapse duplicate (receiver, label) pairs per map partition,
-    // exactly like the old first reduceByKey) and the argmax runs
-    // locally — the second exchange's ~2|E|-bounded triples never
-    // move. Counts and the (count DESC, label ASC) argmax are
+    // Round shape: ONE exchange. Keying by the receiver with a
+    // map-side label->count combiner ships everything the argmax
+    // needs in one shuffle (combiners collapse duplicate (receiver,
+    // label) pairs per map partition) and the argmax runs locally.
+    // Counts and the (count DESC, label ASC) argmax are
     // integer-exact and total-ordered, so the labels are
-    // byte-identical. Also lazily chained across the fixed rounds
-    // (one job total — see pagerankDetRDD).
-    var lab: org.apache.spark.rdd.RDD[(Long, Long)] =
-      adj.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
-    (1 to rounds).foreach { _ =>
-      lab = adj.zipPartitions(lab) { (aIt, lIt) =>
-        val m = new java.util.HashMap[Long, Long]()
-        lIt.foreach(kv => m.put(kv._1, kv._2))
-        aIt.flatMap { case (u, nbrs) =>
-          val lu = m.get(u)
-          nbrs.iterator.map(n => (n, lu))
-        }
-      }.combineByKey[java.util.HashMap[Long, Long]](
+    // byte-identical.
+    val init = adj.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
+    lazyRounds(init, rounds) { lab =>
+      detPush(adj, lab)((lu, _) => lu).combineByKey[java.util.HashMap[Long, Long]](
         (l: Long) => {
           val m = new java.util.HashMap[Long, Long](); m.put(l, 1L); m
         },
@@ -1131,9 +984,6 @@ object GraphAlgs {
           bestL
         }
     }
-    lab.persist()
-    lab.count()
-    lab
   }
 
   /**
@@ -1157,88 +1007,48 @@ object GraphAlgs {
    * both scores).
    *
    * Returns (hubs, authorities) keyed by node id — LAZY normalized
-   * views over the final persisted raw-sum generations (cheap
-   * mapValues per action; materialize once and reuse). The release
-   * thunk unpersists the backing raws and adjacencies — after it,
+   * views over the final cached raw-sum generations (cheap
+   * mapValues per action; materialize once and reuse). Closing the
+   * returned scope releases the raws and adjacencies — after it,
    * any further action on the views recomputes the full lineage.
    */
   def hitsDetRDD(edges: org.apache.spark.rdd.RDD[(Long, Long)],
       rounds: Int = 8): (org.apache.spark.rdd.RDD[(Long, Long)],
-        org.apache.spark.rdd.RDD[(Long, Long)], () => Unit) = {
+        org.apache.spark.rdd.RDD[(Long, Long)], Fixpoint.CacheScope) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     require(rounds >= 1, s"hitsDetRDD needs >= 1 round, got $rounds")
-    val nE = edges.count()
-    val parts = math.max(8, math.min(edges.getNumPartitions,
-      math.max(1, (2 * nE / 500000L).toInt)))
-    val pOut = new HashPartitioner(parts)
-    val pIn = new HashPartitioner(parts)
-    val adjOut: RDD[(Long, Array[Long])] = edges.groupByKey(pOut)
-      .mapValues(_.toArray).persist(StorageLevel.MEMORY_AND_DISK)
-    val adjIn: RDD[(Long, Array[Long])] = edges
-      .map { case (u, v) => (v, u) }.groupByKey(pIn)
-      .mapValues(_.toArray).persist(StorageLevel.MEMORY_AND_DISK)
-    adjOut.count(); adjIn.count()
+    val ((hub, auth), scope) = Fixpoint.scoped { scope =>
+      val parts = loopPartitions(edges.getNumPartitions, 2 * edges.count())
+      val pOut = new HashPartitioner(parts)
+      val pIn = new HashPartitioner(parts)
+      val adjOut = scope.cache(edges.groupByKey(pOut).mapValues(_.toArray), MEMORY_AND_DISK)
+      val adjIn = scope.cache(edges.map { case (u, v) => (v, u) }.groupByKey(pIn)
+        .mapValues(_.toArray), MEMORY_AND_DISK)
+      adjOut.count(); adjIn.count()
 
-    val hub0: RDD[(Long, Long)] = adjOut
-      .mapPartitions(_.map { case (u, _) => (u, 1000000L) },
-        preservesPartitioning = true).persist()
-    var hub: RDD[(Long, Long)] = hub0
-    var auth: RDD[(Long, Long)] = null
-    // ONE Spark job per half-round: the max-fold below is the
-    // half-round's only action, and running it materializes the
-    // persisted raw sums en route; the normalized scores are then a
-    // LAZY mapValues view over that cache (partitioning preserved),
-    // consumed by the next half-round's zipPartitions — no separate
-    // count() job per normalization. On a scheduler-latency-bound
-    // host this halves the loop's job count (32 -> 16 for 8 rounds).
-    // The raw generation backing a lazy view must outlive its
-    // consumer, so unpersists trail by one half-round.
-    var aRawLive: RDD[(Long, Long)] = null
-    var hRawLive: RDD[(Long, Long)] = null
-    var prevARaw: RDD[(Long, Long)] = null
-    var prevHRaw: RDD[(Long, Long)] = null
-    (1 to rounds).foreach { _ =>
-      // authority half-round: a'(v) = Σ_{u→v} h(u)
-      val aRaw = adjOut.zipPartitions(hub) { (aIt, hIt) =>
-        val m = new java.util.HashMap[Long, Long]()
-        hIt.foreach(kv => m.put(kv._1, kv._2))
-        aIt.flatMap { case (u, outs) =>
-          val hu = m.get(u)
-          outs.iterator.map(v => (v, hu))
-        }
-      }.reduceByKey(pIn, Math.addExact(_, _)).persist()
-      val aMax = aRaw.map(_._2).fold(1L)(math.max) // materializes aRaw
-      if (prevARaw != null) prevARaw.unpersist(blocking = false)
-      prevARaw = aRawLive
-      aRawLive = aRaw
-      auth = aRaw.mapValues(v => mulDiv(v, 1000000L, aMax))
-      // hub half-round: h'(u) = Σ_{u→v} a(v)
-      val hRaw = adjIn.zipPartitions(auth) { (aIt, sIt) =>
-        val m = new java.util.HashMap[Long, Long]()
-        sIt.foreach(kv => m.put(kv._1, kv._2))
-        aIt.flatMap { case (v, ins) =>
-          val av = m.get(v)
-          ins.iterator.map(u => (u, av))
-        }
-      }.reduceByKey(pOut, Math.addExact(_, _)).persist()
-      val hMax = hRaw.map(_._2).fold(1L)(math.max) // materializes hRaw
-      if (prevHRaw != null) prevHRaw.unpersist(blocking = false)
-      prevHRaw = hRawLive
-      hRawLive = hRaw
-      hub = hRaw.mapValues(v => mulDiv(v, 1000000L, hMax))
+      // ONE Spark job per half-round: the max-fold is the
+      // half-round's only action, and it materializes the cached raw
+      // sums en route; the normalized scores are a lazy mapValues
+      // view over them (partitioning preserved), read by the next
+      // half-round (lag 1)
+      val loop = scope.loop(rounds)
+      val hub0: RDD[(Long, Long)] = loop.init.cache(adjOut
+        .mapPartitions(_.map { case (u, _) => (u, 1000000L) }, preservesPartitioning = true))
+      def half(r: loop.Round, adj: RDD[(Long, Array[Long])], score: RDD[(Long, Long)],
+          to: HashPartitioner): RDD[(Long, Long)] = {
+        val raw = r.cache(detPush(adj, score)((s, _) => s)
+          .reduceByKey(to, Math.addExact(_, _)), lag = 1)
+        val mx = raw.map(_._2).fold(1L)(math.max) // materializes raw
+        raw.mapValues(v => mulDiv(v, 1000000L, mx))
+      }
+      loop.run((hub0, null: RDD[(Long, Long)]))(_ => true) { case (r, (hub, _)) =>
+        val auth = half(r, adjOut, hub, pIn) // a'(v) = Σ_{u→v} h(u)
+        (half(r, adjIn, auth, pOut), auth) // h'(u) = Σ_{u→v} a(v)
+      }
     }
-    if (prevARaw != null) prevARaw.unpersist(blocking = false)
-    if (prevHRaw != null) prevHRaw.unpersist(blocking = false)
-    hub0.unpersist(blocking = false) // superseded after round 1
-    val lastA = aRawLive; val lastH = hRawLive
-    (hub, auth, () => {
-      if (lastA != null) lastA.unpersist(blocking = false)
-      if (lastH != null) lastH.unpersist(blocking = false)
-      adjOut.unpersist(blocking = false)
-      adjIn.unpersist(blocking = false)
-    })
+    (hub, auth, scope)
   }
 
   def neighborJaccard(canonical: DataFrame, symmetrized: DataFrame): DataFrame =
@@ -1388,10 +1198,8 @@ object GraphAlgs {
    * exhibits on bipartite graphs (a star never converges without
    * it); max-normalization keeps the arithmetic inside +/· — no
    * sqrt, no libm. Each round is one message shuffle over the
-   * edge set with both surfaces materialized before the previous
-   * generation is released (the iterative-GraphX contract pinned in
-   * PERF.md). Per-vertex sums fold the incoming contributions in
-   * ascending sender-id order (see [[detFoldSums]]), so the float
+   * edge set. Per-vertex sums fold the incoming contributions in
+   * ascending sender-id order (see [[detFoldRound]]), so the float
    * result is BIT-IDENTICAL across partitionings and runs and the
    * DuckDB oracle can replay the recurrence exactly with an
    * order-preserving list fold; structural properties (hub
@@ -1399,11 +1207,11 @@ object GraphAlgs {
    */
   def eigenCentrality[V: scala.reflect.ClassTag](
       g: Graph[V, Int], iters: Int = 20): Graph[Double, Int] = {
-    val (scores, release) = eigenCentralityRDD(g, iters)
+    val (scores, scope) = eigenCentralityRDD(g, iters)
     val out = g.outerJoinVertices(scores)((_, _, s) => s.getOrElse(0.0))
     out.cache()
     out.vertices.count()
-    release()
+    scope.close()
     out
   }
 
@@ -1435,24 +1243,22 @@ object GraphAlgs {
   private final case class DetFoldCtx(
       inAdj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
       route: org.apache.spark.rdd.RDD[(Long, (Int, Array[Int]))],
-      byPid: org.apache.spark.Partitioner,
-      release: () => Unit)
+      byPid: org.apache.spark.Partitioner)
 
-  /** Build the loop-invariant fold surfaces from the DOUBLED edge
-   * set (both RDDs partitioned by `p`, so rounds co-partition with
-   * the score RDD). */
-  private def detFoldCtx(
-      sym: org.apache.spark.rdd.RDD[(Long, Long)],
-      p: org.apache.spark.Partitioner): DetFoldCtx = {
-    val inAdj = sym.groupByKey(p).mapValues { a =>
-      val arr = a.toArray
+  /** Build the loop-invariant fold surfaces of `g`'s DOUBLED edge
+   * set in `scope` (both RDDs partitioned by a loop-sized `p`, so
+   * rounds co-partition with the score RDD). */
+  private def detFoldCtx[V](scope: Fixpoint.CacheScope, g: Graph[V, Int]): DetFoldCtx = {
+    val p = new org.apache.spark.HashPartitioner(
+      loopPartitions(g.edges.getNumPartitions, 2 * g.edges.count()))
+    val inAdj = scope.cache(symmetricAdjacency(g, p).mapValues { arr =>
       java.util.Arrays.sort(arr)
       arr
-    }.persist()
+    })
     inAdj.count()
     // receiver partitions per sender, derived from the (symmetric)
     // adjacency locally — no extra shuffle
-    val route = inAdj.mapValues { nbrs =>
+    val route = scope.cache(inAdj.mapValues { nbrs =>
       val bits = new java.util.BitSet(p.numPartitions)
       var i = 0
       while (i < nbrs.length) { bits.set(p.getPartition(nbrs(i))); i += 1 }
@@ -1461,18 +1267,19 @@ object GraphAlgs {
       var b = bits.nextSetBit(0)
       while (b >= 0) { pids(k) = b; k += 1; b = bits.nextSetBit(b + 1) }
       (nbrs.length, pids)
-    }.persist()
+    })
     route.count()
     val byPid = new org.apache.spark.Partitioner {
       def numPartitions: Int = p.numPartitions
       def getPartition(key: Any): Int = key.asInstanceOf[Int]
     }
-    DetFoldCtx(inAdj, route, byPid, () => {
-      inAdj.unpersist(blocking = false)
-      route.unpersist(blocking = false)
-      ()
-    })
+    DetFoldCtx(inAdj, route, byPid)
   }
+
+  /** Every vertex of `g` at 1.0 under the fold context's partitioner. */
+  private def detFoldOnes[V](ctx: DetFoldCtx, g: Graph[V, Int])
+      : org.apache.spark.rdd.RDD[(Long, Double)] =
+    g.vertices.map { case (id, _) => (id, 1.0) }.partitionBy(ctx.inAdj.partitioner.get)
 
   /** One deterministic-fold round: per-sender message value
    * `msgOf(score, degree)` shipped once per receiver partition,
@@ -1504,78 +1311,50 @@ object GraphAlgs {
   /** Classic float PageRank (10 rounds of rank' = 0.15 + 0.85 ·
    * Σ_{u∈N(v)} rank(u)/deg(u) over the symmetrized graph, rank_0 =
    * 1.0) in the det family's loop shape: co-partitioned adjacency +
-   * score pair RDDs, one message shuffle per round, per-round
-   * materialization with generational release. The per-vertex sums
-   * go through [[detFoldSums]], so unlike GraphX's staticPageRank
-   * the double ranks are bit-identical across partitionings and
-   * runs — which is what lets the DuckDB oracle replay the float
-   * recurrence exactly (cf. the integer-exact [[pagerankDetRDD]]
-   * twin; this is the float surface with the same reproducibility
-   * contract). */
+   * score pair RDDs, one message shuffle per round. The per-vertex
+   * sums go through [[detFoldRound]], so unlike GraphX's
+   * staticPageRank the double ranks are bit-identical across
+   * partitionings and runs — which is what lets the DuckDB oracle
+   * replay the float recurrence exactly (cf. the integer-exact
+   * [[pagerankDetRDD]] twin; this is the float surface with the
+   * same reproducibility contract). */
   def pagerankFloatRDD[V: scala.reflect.ClassTag](g: Graph[V, Int],
-      iters: Int = 10): (org.apache.spark.rdd.RDD[(Long, Double)], () => Unit) = {
-    val nEdges = g.edges.count()
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(g.edges.getNumPartitions, (2 * nEdges / 500000L).toInt)))
-    val ctx = detFoldCtx(
-      g.edges.flatMap(e => Iterator((e.srcId, e.dstId), (e.dstId, e.srcId))), p)
-    // lazy fixed-round chain, one job total (see pagerankDetRDD): no
-    // round needs a driver-side scalar, so the final count() runs the
-    // whole loop as `iters` chained shuffle stages instead of a
-    // persist + count job per round. Doubles byte-identical — the
-    // identical sender-sorted folds evaluate once, stagewise.
-    var cur: org.apache.spark.rdd.RDD[(Long, Double)] = g.vertices
-      .map { case (id, _) => (id, 1.0) }.partitionBy(p)
-    var i = 0
-    while (i < iters) {
-      // share = rank/deg exactly like the oracle's rank/deg; the
-      // division repeats per receiver PARTITION — same double.
-      // Symmetric graph: every vertex has >= 1 neighbor, so the sum
-      // covers the full vertex set — no dangling-vertex patch-up
-      cur = detFoldRound(ctx, cur)((x, deg) => x / deg)
-        .mapValues(s => 0.15 + 0.85 * s)
-      i += 1
-    }
-    val last = cur.persist()
-    last.count()
-    (last, () => {
-      ctx.release()
-      last.unpersist(blocking = false)
-      ()
+      iters: Int = 10): (org.apache.spark.rdd.RDD[(Long, Double)], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
+    val ctx = detFoldCtx(scope, g)
+    // lazy fixed-round chain, one job total (see lazyRounds).
+    // share = rank/deg exactly like the oracle's rank/deg; the
+    // division repeats per receiver PARTITION — same double.
+    // Symmetric graph: every vertex has >= 1 neighbor, so the sum
+    // covers the full vertex set — no dangling-vertex patch-up
+    val last = scope.cache(scope.loop(iters).run(detFoldOnes(ctx, g))(_ => true) { (_, cur) =>
+      detFoldRound(ctx, cur)((x, deg) => x / deg).mapValues(s => 0.15 + 0.85 * s)
     })
+    last.count()
+    last
   }
 
   /** The power-iteration loop on co-partitioned pair RDDs: scores +
-   * a per-partition adjacency hash map (built once). Every round is
+   * the sender-sorted fold surfaces (built once). Every round is
    * inherently a full exchange (all scores change), but the RDD form
    * still skips the per-round GraphX graph rebuild and
-   * vertex-attribute re-shipping: one message shuffle + one
-   * normalization job per round. */
+   * vertex-attribute re-shipping. */
   private def eigenCentralityRDD[V](g: Graph[V, Int],
-      iters: Int): (org.apache.spark.rdd.RDD[(Long, Double)], () => Unit) = {
-    val nEdges = g.edges.count()
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(g.edges.getNumPartitions, (2 * nEdges / 500000L).toInt)))
-    val ctx = detFoldCtx(
-      g.edges.flatMap(e => Iterator((e.srcId, e.dstId), (e.dstId, e.srcId))), p)
+      iters: Int): (org.apache.spark.rdd.RDD[(Long, Double)], Fixpoint.CacheScope) =
+    Fixpoint.scoped { scope =>
+    val ctx = detFoldCtx(scope, g)
     // every vertex of g scores 1.0 initially, including isolated ones
-    var cur: org.apache.spark.rdd.RDD[(Long, Double)] = g.vertices
-      .map { case (id, _) => (id, 1.0) }.partitionBy(p).persist()
-    cur.count()
-
-    // ONE Spark job per round (the hitsDetRDD job-elision
-    // discipline): the max-normalization needs a driver-side scalar,
-    // so the round cannot be fully lazy — but the max-fold is the
-    // round's ONLY action (it materializes the persisted raw
-    // generation en route), and the normalized scores ride a LAZY
-    // mapValues view over that cache. The previous raw generation is
-    // fully materialized before its successor's fold returns, so it
-    // is released right after; the FINAL round materializes a
-    // concrete persisted RDD so the release() contract keeps
-    // working. Doubles byte-identical — same ops, same order.
-    var backer: org.apache.spark.rdd.RDD[(Long, Double)] = cur
-    var i = 0
-    while (i < iters) {
+    val loop = scope.loop(iters)
+    val cur0 = loop.init.cache(detFoldOnes(ctx, g))
+    cur0.count()
+    // ONE Spark job per round: the max-normalization needs a
+    // driver-side scalar, and the max-fold is the round's only
+    // action (it materializes the cached raw generation en route);
+    // the normalized scores ride a lazy mapValues view over it,
+    // which the next round's fold materializes its successor from.
+    // The result is the last such view. Doubles byte-identical —
+    // same ops, same order.
+    loop.run(cur0)(_ => true) { (r, cur) =>
       // deterministic sender-sorted fold (see detFoldCtx) — the
       // float sums are order-free: bit-identical across
       // partitionings and replayable by the DuckDB oracle's ordered
@@ -1585,41 +1364,26 @@ object GraphAlgs {
       // bipartite oscillation. cur and sums share partitioner p, so
       // the merge is a zipPartitions hash join (same doubles, no
       // cogroup buffers — the det-family round's measured win)
-      val raw = cur.zipPartitions(sums, preservesPartitioning = true) { (cIt, sIt) =>
+      val raw = r.cache(cur.zipPartitions(sums, preservesPartitioning = true) { (cIt, sIt) =>
         val m = new java.util.HashMap[Long, Double]()
         sIt.foreach(kv => m.put(kv._1, kv._2))
         cIt.map { case (id, own) => (id, own + m.getOrDefault(id, 0.0)) }
-      }
-      raw.persist()
+      })
       val mx = math.max(raw.map(_._2).fold(0.0)(math.max), Double.MinPositiveValue)
-      backer.unpersist(blocking = false) // raw fully materialized above
-      backer = raw
-      cur = raw.mapValues(_ / mx)
-      i += 1
+      raw.mapValues(_ / mx)
     }
-    if (iters > 0) {
-      cur = cur.persist()
-      cur.count()
-      backer.unpersist(blocking = false)
-    }
-    val finalScores = cur
-    (cur, () => {
-      finalScores.unpersist(blocking = false)
-      ctx.release()
-      ()
-    })
   }
 
   /** (vid, score) rows rounded to 1e-6; materialize-then-release. */
   def eigenCentralityDF[V: scala.reflect.ClassTag](
       g: Graph[V, Int], iters: Int = 20): DataFrame = {
-    val (scores, release) = eigenCentralityRDD(g, iters)
+    val (scores, scope) = eigenCentralityRDD(g, iters)
     val spark = org.apache.spark.sql.SparkSession.active
     val df = spark.createDataFrame(
       scores.map { case (id, s) => (id, math.floor(s * 1e6 + 0.5) / 1e6) })
       .toDF("vid", "score").cache()
     df.count()
-    release()
+    scope.close()
     df
   }
 
@@ -1635,25 +1399,24 @@ object GraphAlgs {
    * Each half-round is one groupBy(min) + one join + one projection
    * — no Pregel, no vertex state, and the edge set contracts toward
    * star graphs rooted at component minima in O(log n) rounds (vs
-   * O(diameter) for plain min-label propagation). The same
-   * generational-release discipline as ktrussPeel: each round's RDD
-   * is persisted explicitly, the superseded one freed, because the
-   * union-free but twice-referenced lineage would otherwise grow
-   * exponentially.
+   * O(diameter) for plain min-label propagation). Each round's rows
+   * are cached as a generation and re-wrapped in a fresh DataFrame,
+   * because the union-free but twice-referenced lineage would
+   * otherwise grow exponentially.
    *
    * Input: canonical (src < dst) edges. Output: (vid, component)
    * with component = the component's minimum vertex id — identical
    * to [[connectedComponentsDF]]'s GraphX result, which is what
    * makes the two implementations cross-checkable under one oracle.
    */
-  /** Two-phase CC result: per-vertex labels (cached — call
-   * `release()` when done), the round count, and whether the
+  /** Two-phase CC result: per-vertex labels (cached — close
+   * `scope` when done), the round count, and whether the
    * star-contraction fixpoint was reached within the round budget.
    * A non-converged run can carry WRONG labels (the min-per-vid
    * fallback merges whatever the last round produced), so callers
    * must check `converged` — the query wrapper throws on it. */
   final case class CCTwoPhase(labels: DataFrame, rounds: Int, converged: Boolean,
-      release: () => Unit)
+      scope: Fixpoint.CacheScope)
 
   /** `materializeLargeStar = false` is a TEST-CALIBRATION knob only
    * (ADVICE r18): LoopPlanGuardSpec pins the materialization win as a
@@ -1664,7 +1427,7 @@ object GraphAlgs {
   def connectedComponentsTwoPhase(canonical: DataFrame, maxRounds: Int = 25,
       materializeLargeStar: Boolean = true): CCTwoPhase = {
     val spark = canonical.sparkSession
-    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     // star step: the selected neighbors of u re-attach to
@@ -1688,81 +1451,54 @@ object GraphAlgs {
           greatest(col("dst"), col("m")).as("dst"))
         .distinct()
     }
-    var cur = canonical.select("src", "dst")
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    // hoisted so the failure path can release the in-flight round's
-    // persists (review r17: a failed round job otherwise leaves up to
-    // three MEMORY_AND_DISK generations pinned for the session)
-    var curLarge: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var curRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var outDf: DataFrame = null
-    var stable = false
-    var round = 0
-    try {
-    var curN = cur.count()
-    while (!stable && round < maxRounds) {
-      // materialize the large-star half-round: the small-star plan
-      // references its input FOUR times (sym doubles it for the min
-      // side and again for the neighbor side), and Catalyst does not
-      // dedupe unmaterialized common subplans — without this cache
-      // the large-star's shuffles replay once per reference
-      val largePlan = star(cur, large = true)
-      val largeDf = if (materializeLargeStar) {
-        curLarge = largePlan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        spark.createDataFrame(curLarge, largePlan.schema)
-      } else largePlan
-      val nextPlan = star(largeDf, large = false)
-      curRdd = nextPlan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val next = spark.createDataFrame(curRdd, nextPlan.schema)
-      val nextN = curRdd.count()
-      if (curLarge != null) // superseded once next is cached
-        curLarge.unpersist(blocking = false)
-      curLarge = null
-      // fixpoint: the star steps are idempotent on a forest of
-      // depth-1 stars, so an unchanged edge COUNT at these semantics
-      // means an unchanged edge set (both steps only ever lower dst
-      // labels; equal cardinality with monotone relabeling = no move)
-      stable = nextN == curN && next.except(cur).isEmpty
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
-      prevRdd = curRdd
-      curRdd = null
-      cur = next
-      curN = nextN
-      round += 1
+    // loop state: (edges, their cached rows — null for the input —,
+    // edge count, rounds run, stable)
+    val ((labels, rounds, stable), scope) = Fixpoint.scoped { scope =>
+      val cur0 = canonical.select("src", "dst")
+      val (cur, rows, _, rounds, stable) = scope.loop(maxRounds).run(
+          (cur0, null: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], cur0.count(), 0, false))(
+          !_._5) { case (r, (cur, _, curN, _, _)) =>
+        // materialize the large-star half-round: the small-star plan
+        // references its input FOUR times (sym doubles it for the min
+        // side and again for the neighbor side), and Catalyst does not
+        // dedupe unmaterialized common subplans — without this cache
+        // the large-star's shuffles replay once per reference
+        val largePlan = star(cur, large = true)
+        val large = if (materializeLargeStar) scope.cache(largePlan.rdd, MEMORY_AND_DISK) else null
+        val largeDf = if (large == null) largePlan
+          else spark.createDataFrame(large, largePlan.schema)
+        val nextPlan = star(largeDf, large = false)
+        val rows = r.cache(nextPlan.rdd, MEMORY_AND_DISK)
+        val next = spark.createDataFrame(rows, nextPlan.schema)
+        val nextN = rows.count()
+        scope.release(large) // superseded once next is cached
+        // fixpoint: the star steps are idempotent on a forest of
+        // depth-1 stars, so an unchanged edge COUNT at these semantics
+        // means an unchanged edge set (both steps only ever lower dst
+        // labels; equal cardinality with monotone relabeling = no move)
+        (next, rows, nextN, r.number, nextN == curN && next.except(cur).isEmpty)
+      }
+      // at the fixpoint every edge is (componentMin, member)
+      val members = cur.select(col("dst").as("vid"), col("src").as("component"))
+      val roots = cur.select(col("src").as("vid"), col("src").as("component"))
+        .distinct()
+      val out = members.union(roots)
+        .groupBy("vid").agg(min(col("component")).as("component"))
+      val outRows = scope.cache(out.rdd, MEMORY_AND_DISK)
+      outRows.count()
+      scope.release(rows)
+      (spark.createDataFrame(outRows, out.schema), rounds, stable)
     }
-    // at the fixpoint every edge is (componentMin, member)
-    val members = cur.select(col("dst").as("vid"), col("src").as("component"))
-    val roots = cur.select(col("src").as("vid"), col("src").as("component"))
-      .distinct()
-    val out = members.union(roots)
-      .groupBy("vid").agg(min(col("component")).as("component"))
-      .cache()
-    outDf = out
-    out.count()
-    val last = prevRdd
-    if (last != null) last.unpersist(blocking = false)
-    CCTwoPhase(out, round, stable, () => { out.unpersist(blocking = false); () })
-    } catch {
-      case t: Throwable =>
-        // swallowed cleanup failures: a throwing unpersist (stopped
-        // context — often the root cause itself) must not mask `t`
-        try {
-          if (curLarge != null) curLarge.unpersist(blocking = false)
-          if (curRdd != null) curRdd.unpersist(blocking = false)
-          if (prevRdd != null) prevRdd.unpersist(blocking = false)
-          if (outDf != null) outDf.unpersist(blocking = false)
-        } catch { case _: Throwable => () }
-        throw t
-    }
+    CCTwoPhase(labels, rounds, stable, scope)
   }
 
   /** K-truss fixpoint result: the surviving canonical edges (backed
-   * by a persisted RDD — call [[KTruss.release]] when done, plain
+   * by a cached RDD — close `scope` when done, plain
    * DataFrame.unpersist cannot free it), the round-1 survivor count,
    * and whether the peel loop reached its fixpoint within the round
    * budget. */
   final case class KTruss(edges: DataFrame, r1Count: Long, converged: Boolean,
-      release: () => Unit)
+      scope: Fixpoint.CacheScope)
 
   /** `a` minus `rm` over sorted distinct Long arrays; result stays
    * sorted (the k-truss overlay's lazy neighbor removal). */
@@ -1811,19 +1547,19 @@ object GraphAlgs {
    *   3. at u: shipped N(v) → f(u, v, N(u), N(v)) emitted here;
    *      request → forward N(u)               → (v, (u, N(u)))
    *   4. at v: f(u, v, N(u), N(v)) for the forwarded half
-   * Hop 3's tagged output is persisted (it feeds both the local
-   * results and the forwards); the returned release() frees it once
-   * the caller has materialized the result. Exactly one f record is
+   * Hop 3's tagged output is cached in `scope` (it feeds both the
+   * local results and the forwards); the caller closes the scope once
+   * it has materialized the result. Exactly one f record is
    * produced per query edge. `adj` must be partitioned by `pv` and
    * contain every query endpoint (both derive from the same edge
    * set; a missing endpoint indicates a routing bug upstream).
    */
   private def coLocatedIntersect[T: scala.reflect.ClassTag](
+      scope: Fixpoint.CacheScope,
       queries: org.apache.spark.rdd.RDD[(Long, Long)],
       adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
       pv: org.apache.spark.Partitioner)(
-      f: (Long, Long, Array[Long], Array[Long]) => T)
-    : (org.apache.spark.rdd.RDD[T], () => Unit) = {
+      f: (Long, Long, Array[Long], Array[Long]) => T): org.apache.spark.rdd.RDD[T] = {
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
     import scala.jdk.CollectionConverters._
@@ -1884,7 +1620,7 @@ object GraphAlgs {
     // hop 3 (at u): resolve shipped arrays locally, forward N(u) for
     // the requests. Tagged rows: done=true carries (u, v, result
     // inputs applied); done=false carries (v, u, N(u)) to hop 4.
-    val hop3: RDD[(Boolean, Long, Long, Array[Long], Any)] =
+    val hop3: RDD[(Boolean, Long, Long, Array[Long], Any)] = scope.cache(
       adj.zipPartitions(decided) { (aIt, dIt) =>
         val m = new java.util.HashMap[Long, java.util.ArrayList[(Long, Array[Long])]]()
         dIt.foreach { case (u, vn) =>
@@ -1901,7 +1637,7 @@ object GraphAlgs {
             else (false, v, u, nu, null)
           }
         }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      }, StorageLevel.MEMORY_AND_DISK)
     val resLocal = hop3.filter(_._1).map(_._5.asInstanceOf[T])
     val fwd: RDD[(Long, (Long, Array[Long]))] = hop3
       .filter(!_._1)
@@ -1921,7 +1657,7 @@ object GraphAlgs {
         else l.asScala.iterator.map { case (u, nu) => f(u, v, nu, nv) }
       }
     }
-    (resLocal.union(resFwd), () => { hop3.unpersist(blocking = false); () })
+    resLocal.union(resFwd)
   }
 
   /**
@@ -1935,63 +1671,39 @@ object GraphAlgs {
   def ktrussPeelRecompute(canonical: DataFrame, k: Int = 4, maxRounds: Int = 30): KTruss = {
     import org.apache.spark.sql.graft.GraftExpressions.intersectCount
     val spark = canonical.sparkSession
-    var cur = canonical.select("src", "dst")
-    var r1N = -1L
-    var converged = false
-    var round = 0
-    var keepDf: DataFrame = cur
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    // hoisted for the failure path (review r17, same class as the
-    // two-phase CC loop): a failed round job must not leave the
-    // in-flight or previous generation pinned for the session
-    var curRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    try {
-    var curN = cur.count()
-    while (!converged && round < maxRounds) {
-      val sym = cur.union(
-        cur.select(col("dst").as("src"), col("src").as("dst")))
-      val adj = sym.groupBy(col("src").as("vid"))
-        .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      // Cut the logical lineage EVERY round by persisting the round's
-      // row RDD and wrapping it in a fresh LogicalRDD: `cur` appears
-      // twice per round (union with its swap), so an uncut plan
-      // DOUBLES each round — 2^rounds nodes; at sf0.1 the analyzer
-      // hit a 2 GiB plan string around round 30. An explicit RDD
-      // (unlike localCheckpoint, whose blocks DataFrame.unpersist
-      // cannot release) lets each superseded generation be freed —
-      // leaked generations evicted every cached graph downstream and
-      // doubled the whole graph suite's bench.
-      val keepPlan = cur
-        .join(adj.select(col("vid").as("src"), col("nbrs").as("na")), "src")
-        .join(adj.select(col("vid").as("dst"), col("nbrs").as("nb")), "dst")
-        .select(col("src"), col("dst"),
-          intersectCount(col("na"), col("nb")).as("support"))
-        .where(col("support") >= k - 2)
-      curRdd = keepPlan.rdd.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      keepDf = spark.createDataFrame(curRdd, keepPlan.schema)
-      val keepN = curRdd.count()
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
-      prevRdd = curRdd
-      curRdd = null
-      if (round == 0) r1N = keepN
-      converged = keepN == curN
-      curN = keepN
-      cur = keepDf.select("src", "dst")
-      round += 1
+    // loop state: (survivors, count, round-1 count, converged)
+    val ((keep, r1N, converged), scope) = Fixpoint.scoped { scope =>
+      val cur0 = canonical.select("src", "dst")
+      val (keep, _, r1N, converged) = scope.loop(maxRounds)
+        .run((cur0, cur0.count(), -1L, false))(!_._4) { case (r, (keepDf, curN, r1N, _)) =>
+          val cur = keepDf.select("src", "dst")
+          val sym = cur.union(
+            cur.select(col("dst").as("src"), col("src").as("dst")))
+          val adj = sym.groupBy(col("src").as("vid"))
+            .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+          // Cut the logical lineage EVERY round by caching the round's
+          // row RDD and wrapping it in a fresh LogicalRDD: `cur`
+          // appears twice per round (union with its swap), so an uncut
+          // plan DOUBLES each round — 2^rounds nodes; at sf0.1 the
+          // analyzer hit a 2 GiB plan string around round 30. An
+          // explicit RDD (unlike localCheckpoint, whose blocks
+          // DataFrame.unpersist cannot release) lets each superseded
+          // generation be freed.
+          val keepPlan = cur
+            .join(adj.select(col("vid").as("src"), col("nbrs").as("na")), "src")
+            .join(adj.select(col("vid").as("dst"), col("nbrs").as("nb")), "dst")
+            .select(col("src"), col("dst"),
+              intersectCount(col("na"), col("nb")).as("support"))
+            .where(col("support") >= k - 2)
+          val rows = r.cache(keepPlan.rdd,
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val keepN = rows.count()
+          (spark.createDataFrame(rows, keepPlan.schema), keepN,
+            if (r.number == 1) keepN else r1N, keepN == curN)
+        }
+      (keep, r1N, converged)
     }
-    val last = prevRdd
-    KTruss(keepDf, r1N, converged,
-      () => if (last != null) { last.unpersist(blocking = false); () })
-    } catch {
-      case t: Throwable =>
-        // swallowed cleanup failures — same contract as the CC loop
-        try {
-          if (curRdd != null) curRdd.unpersist(blocking = false)
-          if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        } catch { case _: Throwable => () }
-        throw t
-    }
+    KTruss(keep, r1N, converged, scope)
   }
 
   /**
@@ -2015,8 +1727,7 @@ object GraphAlgs {
    * whose deletions shrink geometrically this turns ~30 full
    * passes into ~1 plus change. State (supports keyed by edge,
    * adjacency keyed by vertex) lives on pair RDDs under fixed
-   * HashPartitioners with the generational persist/release
-   * discipline of every other loop here; messages (deleted edges,
+   * HashPartitioners; messages (deleted edges,
    * triangle decrements, adjacency removals) are frontier-sized
    * and always the hashed side of a zipPartitions merge, never a
    * cogroup over the full state.
@@ -2036,60 +1747,44 @@ object GraphAlgs {
   def ktrussPeel(canonical: DataFrame, k: Int = 4, maxRounds: Int = 30): KTruss = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = canonical.sparkSession
-    // probe-only phase timing (graft.ktruss.log=on or env
-    // SPARK_GRAFT_KTRUSS_LOG=on): attributes the peel's wall to
-    // round-0 support vs the per-round delta phases — the r18 10x
-    // slope (6.4x per 5x volume) needed exactly this split
-    val logOn = sys.props.get("graft.ktruss.log")
-      .orElse(sys.env.get("SPARK_GRAFT_KTRUSS_LOG")).contains("on")
-    var tMark = System.nanoTime()
-    def tlog(msg: => String): Unit = if (logOn) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[graft-ktruss] $msg (${(now - tMark) / 1e9}%.2f s)")
-      tMark = now
-    }
-    val edges0 = canonical.select("src", "dst").rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ((edgesDf, r1N, converged), scope) = Fixpoint.scoped { scope =>
+    val edges0 = scope.cache(canonical.select("src", "dst").rdd
+      .map(r => (r.getLong(0), r.getLong(1))), MEMORY_AND_DISK)
     val nE = edges0.count()
-    val parts = math.max(8, math.min(edges0.getNumPartitions,
-      math.max(1, (2 * nE / 500000L).toInt)))
+    val parts = loopPartitions(edges0.getNumPartitions, 2 * nE)
     val pv = new HashPartitioner(parts) // vertex-keyed state
     val pe = new HashPartitioner(parts) // edge-keyed state
 
     // A_0: sorted distinct neighbor arrays over the full edge set
-    var adj: RDD[(Long, Array[Long])] = edges0
+    val adj0: RDD[(Long, Array[Long])] = scope.cache(edges0
       .flatMap { case (u, v) => Iterator((u, v), (v, u)) }
       .groupByKey(pv)
-      .mapValues { it => val a = it.toArray; java.util.Arrays.sort(a); a }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()
-    tlog(s"adjacency built (|E|=$nE, parts=$parts)")
+      .mapValues { it => val a = it.toArray; java.util.Arrays.sort(a); a }, MEMORY_AND_DISK)
+    adj0.count()
 
     // sup_0: both endpoint arrays co-located with min-side shipping
     // (see coLocatedIntersect) — exactly one support record per
     // edge, Σ min(deg_u, deg_v) shipped bytes, hub-safe where the
     // old ship-N(src)-to-dst pass paid O(hub²) on skewed graphs
-    val (sup0, rel0) = coLocatedIntersect(edges0, adj, pv) {
-      (u, v, nu, nv) => ((u, v), SortedIntersect.count(nu, nv))
+    val base0 = Fixpoint.using { hops =>
+      val sup0 = coLocatedIntersect(hops, edges0, adj0, pv) {
+        (u, v, nu, nv) => ((u, v), SortedIntersect.count(nu, nv))
+      }
+      val b = scope.cache(sup0.partitionBy(pe), MEMORY_AND_DISK)
+      b.count()
+      b
     }
-    var base: RDD[((Long, Long), Int)] =
-      sup0.partitionBy(pe).persist(StorageLevel.MEMORY_AND_DISK)
-    var survivors = base.count()
-    rel0()
-    edges0.unpersist(blocking = false)
-    tlog(s"round-0 supports ($survivors edges)")
+    scope.release(edges0)
 
     // OVERLAY STATE (VERDICT r18 item 2): the r17 shape re-persisted
     // the FULL survivor state and adjacency every round, so a tail
     // round deleting 40 edges still rewrote 11M cached entries —
     // per-round cost ∝ survivors, the one super-linear trend on the
     // r18 10x board (and at cluster scale, a full TB-state rewrite
-    // per peel round). Instead the persisted `base`/`adj` stay fixed
-    // while two SMALL persisted overlays accumulate the peel's
+    // per peel round). Instead the cached `base`/`adj` stay fixed
+    // while two SMALL cached overlays accumulate the peel's
     // effects — `mods` (per-edge cumulative decrement + deleted
     // flag) and `remAdj` (per-vertex removed-neighbor arrays) — and
     // the effective state/adjacency are 1-level zipPartitions views
@@ -2098,9 +1793,8 @@ object GraphAlgs {
     // old full rewrite) and the overlays reset — so heavy early
     // rounds behave as before while the geometric tail pays only
     // frontier-sized writes. Live cache footprint stays constant
-    // (base + one overlay generation, each persisted and counted
-    // before the previous is released); lineage still CHAINS through
-    // the unpersisted generations, so a cached-block loss late in
+    // (base + one overlay generation); lineage still CHAINS through
+    // the released generations, so a cached-block loss late in
     // the peel recomputes through the overlay/union chain — same
     // exposure as the old per-round state chain, nil in local mode;
     // checkpoint at compaction points if executor-loss recovery
@@ -2109,9 +1803,6 @@ object GraphAlgs {
       spark.sparkContext.emptyRDD[((Long, Long), (Int, Boolean))].partitionBy(pe)
     def emptyRem(): RDD[(Long, Array[Long])] =
       spark.sparkContext.emptyRDD[(Long, Array[Long])].partitionBy(pv)
-    var mods: RDD[((Long, Long), (Int, Boolean))] = emptyMods()
-    var modsN = 0L
-    var remAdj: RDD[(Long, Array[Long])] = emptyRem()
 
     // effective survivor state: base minus deleted, supports less
     // cumulative decrements
@@ -2143,19 +1834,26 @@ object GraphAlgs {
         }
       }
 
-    var r1N = -1L
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val d = effState(base, mods).filter(_._2 < k - 2)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // loop state: the base and adjacency (replaced only when
+    // compacted), the overlays (a new generation each round), the
+    // overlay size, the live edge count, the round-1 survivor
+    // count, and whether the delete set came up empty
+    final case class Peel(base: RDD[((Long, Long), Int)], adj: RDD[(Long, Array[Long])],
+        mods: RDD[((Long, Long), (Int, Boolean))], remAdj: RDD[(Long, Array[Long])],
+        modsN: Long, survivors: Long, r1N: Long, converged: Boolean)
+    val last = scope.loop(maxRounds).run(
+        Peel(base0, adj0, emptyMods(), emptyRem(), 0L, nE, -1L, false))(!_.converged) {
+      (r, st) =>
+      // the overlays outlive their round when it converges, so they
+      // are released by hand once their successors are cached
+      // the delete set and the dead-triangle hops live only until
+      // this round's overlay fold is cached
+      Fixpoint.using { tmp =>
+      val d = tmp.cache(effState(st.base, st.mods).filter(_._2 < k - 2), MEMORY_AND_DISK)
       val nD = d.count()
-      tlog(s"round $round: delete-set scan (nD=$nD)")
-      if (nD == 0L) {
-        converged = true
-        if (r1N < 0) r1N = survivors
-        d.unpersist(blocking = false)
-      } else {
+      if (nD == 0L)
+        st.copy(converged = true, r1N = if (st.r1N < 0) st.survivors else st.r1N)
+      else {
         // dead triangles: for each deleted (u,v), the apexes
         // x ∈ N(u) ∩ N(v) in A_r (min-side-shipped co-location, same
         // hub-safety as sup_0); each dead triangle decrements its
@@ -2163,8 +1861,8 @@ object GraphAlgs {
         // round's effective adjacency) still CONTAINS this round's
         // deleted edges — decrements landing on them are dropped by
         // the deleted flag, exactly as the old physical filter did.
-        val (dApex, relD) = coLocatedIntersect(
-          d.map { case ((u, v), _) => (u, v) }, effAdj(adj, remAdj), pv) {
+        val dApex = coLocatedIntersect(tmp,
+          d.map { case ((u, v), _) => (u, v) }, effAdj(st.adj, st.remAdj), pv) {
           (u, v, nu, nv) => ((u, v), SortedIntersect.commons(nu, nv))
         }
         val dec: RDD[((Long, Long), Int)] = dApex
@@ -2183,69 +1881,46 @@ object GraphAlgs {
           .reduceByKey(pe, _ + _)
         // fold this round's deletions + decrements into the overlay
         // (frontier-sized shuffle; the only cache WRITE of the round)
-        val newMods = mods
+        val mods = scope.cache(st.mods
           .union(dec.map { case (e, c) => (e, (c, false)) })
           .union(d.map { case (e, _) => (e, (0, true)) })
           .reduceByKey(pe, (x: (Int, Boolean), y: (Int, Boolean)) =>
-            (x._1 + y._1, x._2 || y._2))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val newModsN = newMods.count()
-        relD()
-        survivors -= nD
-        if (round == 0) r1N = survivors
-        tlog(s"round $round: nD=$nD, survivors -> $survivors, overlay=$newModsN")
+            (x._1 + y._1, x._2 || y._2)), MEMORY_AND_DISK)
+        val modsN = mods.count()
+        val survivors = st.survivors - nD
         // removed-neighbor overlay: merge this round's deleted pairs
         val remNew: RDD[(Long, Array[Long])] = d
           .flatMap { case ((u, v), _) => Iterator((u, Array(v)), (v, Array(u))) }
-        val newRemAdj = remAdj.union(remNew)
-          .reduceByKey(pv, sortedMergeDistinct _)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        newRemAdj.count()
-        tlog(s"round $round: removed-adjacency folded")
-        mods.unpersist(blocking = false)
-        remAdj.unpersist(blocking = false)
-        d.unpersist(blocking = false)
-        mods = newMods
-        modsN = newModsN
-        remAdj = newRemAdj
+        val remAdj = scope.cache(st.remAdj.union(remNew)
+          .reduceByKey(pv, sortedMergeDistinct _), MEMORY_AND_DISK)
+        remAdj.count()
+        scope.release(st.mods, st.remAdj)
+        val r1N = if (r.number == 1) survivors else st.r1N
         // compact when the overlay stops being small relative to the
         // live state: heavy rounds rewrite (as the old shape always
         // did), the geometric tail never does
         if (modsN * 8 > survivors) {
-          val nb = effState(base, mods).persist(StorageLevel.MEMORY_AND_DISK)
+          val nb = scope.cache(effState(st.base, mods), MEMORY_AND_DISK)
           nb.count()
-          val na = effAdj(adj, remAdj).persist(StorageLevel.MEMORY_AND_DISK)
+          val na = scope.cache(effAdj(st.adj, remAdj), MEMORY_AND_DISK)
           na.count()
-          base.unpersist(blocking = false)
-          adj.unpersist(blocking = false)
-          mods.unpersist(blocking = false)
-          remAdj.unpersist(blocking = false)
-          base = nb
-          adj = na
-          mods = emptyMods()
-          remAdj = emptyRem()
-          modsN = 0L
-          tlog(s"round $round: compacted (base=$survivors)")
-        }
+          scope.release(st.base, st.adj, mods, remAdj)
+          Peel(nb, na, emptyMods(), emptyRem(), 0L, survivors, r1N, false)
+        } else Peel(st.base, st.adj, mods, remAdj, modsN, survivors, r1N, false)
       }
-      round += 1
+      }
     }
     // final state: materialize the overlay view BEFORE releasing its
-    // parents (an unpersisted parent would silently recompute the
-    // whole peel from the source on the caller's first action)
-    val finalState = effState(base, mods)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // parents (a released parent would silently recompute the whole
+    // peel from the source on the caller's first action)
+    val finalState = scope.cache(effState(last.base, last.mods), MEMORY_AND_DISK)
     finalState.count()
-    base.unpersist(blocking = false)
-    mods.unpersist(blocking = false)
-    remAdj.unpersist(blocking = false)
-    adj.unpersist(blocking = false)
-    val edgesDf = spark.createDataFrame(
-      finalState.map { case ((u, v), s) => (u, v, s) })
-      .toDF("src", "dst", "support")
-    if (r1N < 0) r1N = survivors
-    KTruss(edgesDf, r1N, converged,
-      () => { finalState.unpersist(blocking = false); () })
+    scope.release(last.base, last.mods, last.remAdj, last.adj)
+    (spark.createDataFrame(finalState.map { case ((u, v), s) => (u, v, s) })
+      .toDF("src", "dst", "support"),
+      if (last.r1N < 0) last.survivors else last.r1N, last.converged)
+    }
+    KTruss(edgesDf, r1N, converged, scope)
   }
 
   /**
@@ -2270,21 +1945,20 @@ object GraphAlgs {
    * parent map). Components at least halve per round, so the whole
    * peel is O(log |V|) rounds over a shrinking edge set: the
    * textbook scale shape for distributed MSF. All state lives on
-   * pair RDDs under one fixed HashPartitioner with generational
-   * persist/release.
+   * pair RDDs under one fixed HashPartitioner.
    *
    * Returns (msfEdges (u, v, lenNano), labels (vid → component as
-   * min member vid), release).
+   * min member vid), the scope that releases both).
    */
   def boruvkaMsfRDD(edges: org.apache.spark.rdd.RDD[(Long, Long, Long)],
       maxRounds: Int = 40): (org.apache.spark.rdd.RDD[(Long, Long, Long)],
-        org.apache.spark.rdd.RDD[(Long, Long)], () => Unit) = {
+        org.apache.spark.rdd.RDD[(Long, Long)], Fixpoint.CacheScope) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val ((msf, outLabels), scope) = Fixpoint.scoped { scope =>
     val nE = edges.count()
-    val parts = math.max(8, math.min(edges.getNumPartitions,
-      math.max(1, (2 * nE / 500000L).toInt)))
+    val parts = loopPartitions(edges.getNumPartitions, 2 * nE)
     val pv = new HashPartitioner(parts)
 
     // Surviving candidate edge set. Labels only coarsen, so an edge
@@ -2297,19 +1971,16 @@ object GraphAlgs {
     // annotating the aligned endpoint is shuffle-free, so a round
     // costs exactly ONE |cross|-sized re-key shuffle — round 1 pays
     // it for the full set, later rounds only for the survivors.
-    val eByU: RDD[(Long, (Long, Long, Long))] = edges
+    val eByU: RDD[(Long, (Long, Long, Long))] = scope.cache(edges
       .map { case (u, v, len) => (u, (u, v, len)) }
-      .partitionBy(pv).persist(StorageLevel.MEMORY_AND_DISK)
+      .partitionBy(pv), MEMORY_AND_DISK)
     eByU.count()
-    var curEdges: RDD[(Long, (Long, Long, Long))] = eByU
-    var curN = nE
-    var keyIsU = true
 
-    var labels: RDD[(Long, Long)] = eByU
+    val labels0: RDD[(Long, Long)] = scope.cache(eByU
       .flatMap { case (_, (u, v, _)) => Iterator(u, v) }
       .distinct(parts).map(v => (v, v))
-      .partitionBy(pv).persist()
-    labels.count()
+      .partitionBy(pv))
+    labels0.count()
 
     // strict total order on edges: (len, u, v)
     def less(a: (Long, Long, Long), b: (Long, Long, Long)): Boolean = {
@@ -2317,14 +1988,16 @@ object GraphAlgs {
       l1 < l2 || (l1 == l2 && (u1 < u2 || (u1 == u2 && v1 < v2)))
     }
 
+    // loop state: (labels, candidate edges, their count, aligned on
+    // u, converged). A converged round keeps its input labels, so
+    // labels and candidates are released by hand once superseded.
     val chosen = scala.collection.mutable.ArrayBuffer.empty[RDD[(Long, Long, Long)]]
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
+    val (labels, curEdges, _, _, _) = scope.loop(maxRounds)
+        .run((labels0, eByU, nE, true, false))(!_._5) {
+      case (_, st @ (labels, curEdges, curN, kIsU, _)) => Fixpoint.using { tmp =>
       // annotate the aligned endpoint shuffle-free, re-key to the
       // other endpoint (the round's one cross-sized shuffle),
       // annotate it, and keep only the still-cross edges
-      val kIsU = keyIsU
       val ann1 = labels.zipPartitions(curEdges) { (lIt, eIt) =>
         val m = new java.util.HashMap[Long, Long]()
         lIt.foreach(kv => m.put(kv._1, kv._2))
@@ -2335,7 +2008,7 @@ object GraphAlgs {
         }
       }.partitionBy(pv)
       // records (k2, e, l1, l2) stay physically in k2's partitions
-      val cross = labels.zipPartitions(ann1) { (lIt, eIt) =>
+      val cross = tmp.cache(labels.zipPartitions(ann1) { (lIt, eIt) =>
         val m = new java.util.HashMap[Long, Long]()
         lIt.foreach(kv => m.put(kv._1, kv._2))
         eIt.flatMap { case (k2, (e, l1)) =>
@@ -2343,19 +2016,15 @@ object GraphAlgs {
           if (l1 == l2) Iterator.empty
           else Iterator((k2, e, l1, l2))
         }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      if (cross.isEmpty()) {
-        converged = true
-        cross.unpersist(blocking = false)
-      } else {
+      }, MEMORY_AND_DISK)
+      if (cross.isEmpty()) st.copy(_5 = true)
+      else {
         // min cross edge per component, by the strict total order
-        val minEdge: RDD[(Long, ((Long, Long, Long), Long))] = cross
+        val minEdge: RDD[(Long, ((Long, Long, Long), Long))] = tmp.cache(cross
           .flatMap { case (_, e, l1, l2) =>
             Iterator((l1, (e, l2)), (l2, (e, l1))) }
-          .reduceByKey(pv, (a, b) => if (less(a._1, b._1)) a else b)
-          .persist()
-        val sel = minEdge.map(_._2._1).distinct(parts)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .reduceByKey(pv, (a, b) => if (less(a._1, b._1)) a else b))
+        val sel = scope.cache(minEdge.map(_._2._1).distinct(parts), MEMORY_AND_DISK)
         sel.count()
         chosen += sel
 
@@ -2369,22 +2038,23 @@ object GraphAlgs {
             pIt.foreach(kv => m.put(kv._1, kv._2))
             sIt.map { case (p, c) => (c, (p, m.get(p))) }
           }
-        var ptr: RDD[(Long, Long)] = pOfP.map { case (c, (p, pp)) =>
+        val jumps = tmp.loop(Int.MaxValue)
+        val ptr0: RDD[(Long, Long)] = jumps.init.cache(pOfP.map { case (c, (p, pp)) =>
           if (pp == c) (c, math.min(c, p)) else (c, p)
-        }.partitionBy(pv).persist()
-        ptr.count()
-        minEdge.unpersist(blocking = false)
-
-        var jumping = true
-        while (jumping) {
-          val next = ptr.map(_.swap).partitionBy(pv)
+        }.partitionBy(pv))
+        ptr0.count()
+        tmp.release(minEdge)
+        // a jump that moves nothing returns a copy of its input, which
+        // then stands for the fixpoint
+        val (ptr, _) = jumps.run((ptr0, true))(_._2) { case (r, (ptr, _)) =>
+          val next = r.cache(ptr.map(_.swap).partitionBy(pv)
             .zipPartitions(ptr) { (sIt, pIt) =>
               val m = new java.util.HashMap[Long, Long]()
               pIt.foreach(kv => m.put(kv._1, kv._2))
               sIt.map { case (p, c) =>
                 (c, if (m.containsKey(p)) m.get(p) else p)
               }
-            }.partitionBy(pv).persist()
+            }.partitionBy(pv))
           val moved = next.zipPartitions(ptr) { (nIt, pIt) =>
             val m = new java.util.HashMap[Long, Long]()
             pIt.foreach(kv => m.put(kv._1, kv._2))
@@ -2392,28 +2062,27 @@ object GraphAlgs {
             nIt.foreach { case (c, r) => if (m.get(c) != r) changed += 1 }
             Iterator.single(changed)
           }.sum()
-          if (moved == 0) { next.unpersist(blocking = false); jumping = false }
-          else { ptr.unpersist(blocking = false); ptr = next }
+          (next, moved != 0)
         }
 
         // relabel: a component with a parent chain takes its root,
         // the rest keep their label
-        val newLabels = labels.map(_.swap).partitionBy(pv)
+        val newLabels = scope.cache(labels.map(_.swap).partitionBy(pv)
           .zipPartitions(ptr) { (sIt, pIt) =>
             val m = new java.util.HashMap[Long, Long]()
             pIt.foreach(kv => m.put(kv._1, kv._2))
             sIt.map { case (l, v) =>
               (v, if (m.containsKey(l)) m.get(l) else l)
             }
-          }.partitionBy(pv).persist()
+          }.partitionBy(pv))
         newLabels.count()
-        ptr.unpersist(blocking = false)
+        scope.release(labels)
         // Adopt this round's cross set as the next candidate set
         // ONLY when it at least halves the candidates: adopting
         // costs one |cross| materialization, and in the
         // giant-component regime (cross ≈ cur for most rounds —
         // measured 87 s -> 132 s at the 10x probe when adopting
-        // unconditionally) that persist churn never pays for
+        // unconditionally) that cache churn never pays for
         // itself. In the many-small-components regime cross
         // collapses after the first rounds and every later round
         // runs on the shrunken set. The set stays partition-aligned
@@ -2421,49 +2090,35 @@ object GraphAlgs {
         // endpoint flips on adoption.
         val crossN = cross.count()
         if (crossN * 2 < curN) {
-          val nextEdges = cross
+          val nextEdges = scope.cache(cross
             .mapPartitions(_.map { case (k2, e, _, _) => (k2, e) },
-              preservesPartitioning = true)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+              preservesPartitioning = true), MEMORY_AND_DISK)
           nextEdges.count()
-          cross.unpersist(blocking = false)
-          if (curEdges ne eByU) curEdges.unpersist(blocking = false)
-          curEdges = nextEdges
-          curN = crossN
-          keyIsU = !keyIsU
-        } else {
-          cross.unpersist(blocking = false)
-        }
-        labels.unpersist(blocking = false)
-        labels = newLabels
+          if (curEdges ne eByU) scope.release(curEdges)
+          (newLabels, nextEdges, crossN, !kIsU, false)
+        } else (newLabels, curEdges, curN, kIsU, false)
       }
-      round += 1
+      }
     }
-    if (curEdges ne eByU) curEdges.unpersist(blocking = false)
+    if (curEdges ne eByU) scope.release(curEdges)
 
     val msf: RDD[(Long, Long, Long)] =
       if (chosen.isEmpty) edges.sparkContext.emptyRDD
-      else edges.sparkContext.union(chosen.toSeq)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      else scope.cache(edges.sparkContext.union(chosen.toSeq), MEMORY_AND_DISK)
     msf.count()
 
     // canonical component label = min member vid
     val minV = labels.map(_.swap).reduceByKey(pv, math.min(_: Long, _: Long))
-    val outLabels = labels.map(_.swap).partitionBy(pv)
+    val outLabels = scope.cache(labels.map(_.swap).partitionBy(pv)
       .zipPartitions(minV) { (sIt, mIt) =>
         val m = new java.util.HashMap[Long, Long]()
         mIt.foreach(kv => m.put(kv._1, kv._2))
         sIt.map { case (l, v) => (v, m.get(l)) }
-      }.persist()
+      })
     outLabels.count()
-    val lab = labels
-    (msf, outLabels, () => {
-      msf.unpersist(blocking = false)
-      outLabels.unpersist(blocking = false)
-      lab.unpersist(blocking = false)
-      eByU.unpersist(blocking = false)
-      chosen.foreach(_.unpersist(blocking = false))
-    })
+    (msf, outLabels)
+    }
+    (msf, outLabels, scope)
   }
 
   /** Deterministic Luby-style MAXIMAL INDEPENDENT SET over the
@@ -2498,67 +2153,69 @@ object GraphAlgs {
   private def md5HexWith(md: java.security.MessageDigest, s: String): String =
     md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  def misDetDF(edges: DataFrame, maxIter: Int = 60): DataFrame = {
+  def misDetDF(edges: DataFrame, maxIter: Int = 60): DataFrame = Fixpoint.using { scope =>
     val spark = edges.sparkSession
-    val nSym = edges.count() * 2
-    val sym = edges
-      .select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)),
-        (r.getLong(1), r.getLong(0))))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(sym.getNumPartitions, (2 * nSym / 500000L).toInt)))
-    val eBySrc = sym.partitionBy(p).persist()
-    val adj = eBySrc.groupByKey(p).mapValues(_.toArray).persist()
-    var undecided = adj.mapPartitions({ it =>
+    val (p, eBySrc) = symmetricEdges(scope, edges)
+    val adj = scope.cache(eBySrc.groupByKey(p).mapValues(_.toArray))
+    val loop = scope.loop(maxIter)
+    val undecided0 = loop.init.cache(adj.mapPartitions({ it =>
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { case (v, _) => (v, md5HexWith(md, v.toString)) }
-    }, preservesPartitioning = true).persist()
-    var nUndecided = undecided.count()
-    var round = 0L
+    }, preservesPartitioning = true))
     val misParts =
       scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    while (nUndecided > 0) {
-      round += 1
-      require(round <= maxIter,
-        s"misDet: $nUndecided vertices undecided after $maxIter rounds — raise maxIter")
-      val r = round
+    loop.run((undecided0, undecided0.count()))(_._2 > 0,
+        s => s"misDet: ${s._2} vertices undecided after $maxIter rounds — raise maxIter") {
+      case (rnd, (undecided, _)) =>
+      val r = rnd.number.toLong
       // min undecided-neighbor priority, delivered only to vertices
       // with at least one undecided neighbor
       val minNbr = eBySrc.join(undecided, p)
         .map { case (src, (dst, prSrc)) => (dst, (prSrc, src)) }
         .reduceByKey(p, (a, b) =>
           if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
-      val newMis = undecided.leftOuterJoin(minNbr, p)
+      val newMis = scope.cache(undecided.leftOuterJoin(minNbr, p)
         .filter { case (v, (prV, m)) =>
           m.forall(mm => prV < mm._1 || (prV == mm._1 && v < mm._2)) }
-        .mapValues(_ => r).persist()
+        .mapValues(_ => r))
+      misParts += newMis
       val knocked = newMis.join(adj, p)
         .flatMap { case (_, (_, nbrs)) => nbrs.iterator.map((_, ())) }
         .union(newMis.mapValues(_ => ()))
         .reduceByKey(p, (a, _) => a)
-      val next = undecided.subtractByKey(knocked, p).persist()
-      // reliable checkpoint every 16 rounds (when a dir is set, as
-      // in every entry point): an uncut state lineage grows by ~4
-      // stages per round, and a deep run overflows the task
-      // serializer's stack long before maxIter
-      if (round % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined)
-        next.checkpoint()
-      nUndecided = next.count()
-      retired += undecided
-      undecided = next
-      misParts += newMis
+      val next = rnd.checkpoint(rnd.cache(undecided.subtractByKey(knocked, p)))
+      (next, next.count())
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(misParts.toSeq))
       .toDF("vid", "mis_round").cache()
     df.count()
-    (retired.toSeq :+ undecided).foreach(_.unpersist(blocking = false))
-    misParts.foreach(_.unpersist(blocking = false))
-    eBySrc.unpersist(blocking = false)
-    adj.unpersist(blocking = false)
     df
+  }
+
+  /** The doubled (src, dst) edge set of `edges`, cached in `scope`
+   * under a partitioner sized to it — the shared input of the
+   * priority-schedule loops (MIS and the colorings). */
+  private def symmetricEdges(scope: Fixpoint.CacheScope, edges: DataFrame)
+      : (org.apache.spark.HashPartitioner, org.apache.spark.rdd.RDD[(Long, Long)]) = {
+    val nSym = edges.count() * 2
+    val sym = edges
+      .select(col("src").cast("long"), col("dst").cast("long")).rdd
+      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)),
+        (r.getLong(1), r.getLong(0))))
+    val p = new org.apache.spark.HashPartitioner(loopPartitions(sym.getNumPartitions, 2 * nSym))
+    (p, scope.cache(sym.partitionBy(p)))
+  }
+
+  /** Smallest positive int absent from a sorted-ascending array. */
+  private def mex(sorted: Array[Long]): Long = {
+    var want = 1L
+    var i = 0
+    while (i < sorted.length && sorted(i) <= want) {
+      if (sorted(i) == want) want += 1
+      i += 1
+    }
+    want
   }
 
   /** Deterministic Jones–Plassmann GRAPH COLORING over the
@@ -2588,85 +2245,53 @@ object GraphAlgs {
    *
    * Returns (vid, color, jp_round) for EVERY vertex: 1-based
    * colors, the round tag certifying when each vertex committed. */
-  def colorDetDF(edges: DataFrame, maxIter: Int = 80): DataFrame = {
+  def colorDetDF(edges: DataFrame, maxIter: Int = 80): DataFrame = Fixpoint.using { scope =>
     val spark = edges.sparkSession
-    val nSym = edges.count() * 2
-    val sym = edges
-      .select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)),
-        (r.getLong(1), r.getLong(0))))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(sym.getNumPartitions, (2 * nSym / 500000L).toInt)))
-    val eBySrc = sym.partitionBy(p).persist()
-    // smallest positive int absent from a sorted-ascending array
-    def mex(sorted: Array[Long]): Long = {
-      var want = 1L
-      var i = 0
-      while (i < sorted.length && sorted(i) <= want) {
-        if (sorted(i) == want) want += 1
-        i += 1
-      }
-      want
-    }
+    val (p, eBySrc) = symmetricEdges(scope, edges)
     // uncolored state: vid -> (priority, used neighbor colors so far)
-    var uncolored = eBySrc.mapValues(_ => ())
+    val loop = scope.loop(maxIter)
+    val uncolored0 = loop.init.cache(eBySrc.mapValues(_ => ())
       .reduceByKey(p, (a, _) => a)
       .mapPartitions({ it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (v, _) =>
           (v, (md5HexWith(md, v.toString), Array.empty[Long])) }
-      }, preservesPartitioning = true).persist()
-    var nUncolored = uncolored.count()
-    var round = 0L
+      }, preservesPartitioning = true))
     val colorParts = scala.collection.mutable.ListBuffer
       .empty[org.apache.spark.rdd.RDD[(Long, (Long, Long))]]
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    while (nUncolored > 0) {
-      round += 1
-      require(round <= maxIter,
-        s"colorDet: $nUncolored vertices uncolored after $maxIter rounds — raise maxIter")
-      val r = round
+    loop.run((uncolored0, uncolored0.count()))(_._2 > 0,
+        s => s"colorDet: ${s._2} vertices uncolored after $maxIter rounds — raise maxIter") {
+      case (rnd, (uncolored, _)) =>
+      val r = rnd.number.toLong
       val minNbr = eBySrc.join(uncolored, p)
         .map { case (src, (dst, (prSrc, _))) => (dst, (prSrc, src)) }
         .reduceByKey(p, (a, b) =>
           if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
       // eligible vertices commit to mex(used): (vid, (color, round))
-      val newColored = uncolored.leftOuterJoin(minNbr, p)
+      val newColored = rnd.checkpoint(scope.cache(uncolored.leftOuterJoin(minNbr, p)
         .filter { case (v, ((prV, _), m)) =>
           m.forall(mm => prV < mm._1 || (prV == mm._1 && v < mm._2)) }
-        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) }
-        .persist()
+        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) }))
+      colorParts += newColored
       // each colored vertex notifies neighbors once, ever; merge the
       // arriving colors into the surviving uncolored states
       val notify = eBySrc.join(newColored, p)
         .map { case (_, (dst, (c, _))) => (dst, c) }
       val arrived = notify.groupByKey(p).mapValues(_.toArray.sorted)
-      val next = uncolored.subtractByKey(newColored, p)
+      // JP on denser-than-backbone inputs legitimately runs hundreds
+      // of rounds, which an uncut lineage cannot survive
+      val next = rnd.checkpoint(rnd.cache(uncolored.subtractByKey(newColored, p)
         .leftOuterJoin(arrived, p)
         .mapValues { case ((pr, used), add) =>
           (pr, add.fold(used)(a => (used ++ a).sorted))
-        }.persist()
-      // cut the state lineage every 16 rounds (see misDetDF): JP on
-      // denser-than-backbone inputs legitimately runs hundreds of
-      // rounds, which an uncut lineage cannot survive
-      if (round % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined) {
-        next.checkpoint()
-        newColored.checkpoint()
-      }
-      nUncolored = next.count()
-      retired += uncolored
-      uncolored = next
-      colorParts += newColored
+        }))
+      (next, next.count())
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(colorParts.toSeq)
         .map { case (v, (c, r)) => (v, c, r) })
       .toDF("vid", "color", "jp_round").cache()
     df.count()
-    (retired.toSeq :+ uncolored).foreach(_.unpersist(blocking = false))
-    colorParts.foreach(_.unpersist(blocking = false))
-    eBySrc.unpersist(blocking = false)
     df
   }
 
@@ -2697,83 +2322,51 @@ object GraphAlgs {
    * across the run.
    *
    * Returns (vid, color, mis_round) for EVERY vertex. */
-  def coloringMisDF(edges: DataFrame, maxIter: Int = 80): DataFrame = {
+  def coloringMisDF(edges: DataFrame, maxIter: Int = 80): DataFrame = Fixpoint.using { scope =>
     val spark = edges.sparkSession
-    val nSym = edges.count() * 2
-    val sym = edges
-      .select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)),
-        (r.getLong(1), r.getLong(0))))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(sym.getNumPartitions, (2 * nSym / 500000L).toInt)))
-    val eBySrc = sym.partitionBy(p).persist()
-    // smallest positive int absent from a sorted-ascending array
-    def mex(sorted: Array[Long]): Long = {
-      var want = 1L
-      var i = 0
-      while (i < sorted.length && sorted(i) <= want) {
-        if (sorted(i) == want) want += 1
-        i += 1
-      }
-      want
-    }
+    val (p, eBySrc) = symmetricEdges(scope, edges)
     // uncolored state: vid -> used neighbor colors so far (sorted);
     // priorities are NOT state — they are re-derived per round
-    var uncolored = eBySrc.mapValues(_ => ())
+    val loop = scope.loop(maxIter)
+    val uncolored0 = loop.init.cache(eBySrc.mapValues(_ => ())
       .reduceByKey(p, (a, _) => a)
-      .mapValues(_ => Array.empty[Long]).persist()
-    var nUncolored = uncolored.count()
-    var round = 0L
+      .mapValues(_ => Array.empty[Long]))
     val colorParts = scala.collection.mutable.ListBuffer
       .empty[org.apache.spark.rdd.RDD[(Long, (Long, Long))]]
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    while (nUncolored > 0) {
-      round += 1
-      require(round <= maxIter,
-        s"coloringMis: $nUncolored vertices uncolored after $maxIter rounds — raise maxIter")
-      val r = round
+    loop.run((uncolored0, uncolored0.count()))(_._2 > 0,
+        s => s"coloringMis: ${s._2} vertices uncolored after $maxIter rounds — raise maxIter") {
+      case (rnd, (uncolored, _)) =>
+      val r = rnd.number.toLong
       // this round's salted priorities over the uncolored set
-      val pri = uncolored.mapPartitions({ it =>
+      val pri = rnd.cache(uncolored.mapPartitions({ it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (v, used) => (v, (md5HexWith(md, s"$v-$r"), used)) }
-      }, preservesPartitioning = true).persist()
+      }, preservesPartitioning = true))
       val minNbr = eBySrc.join(pri, p)
         .map { case (src, (dst, (prSrc, _))) => (dst, (prSrc, src)) }
         .reduceByKey(p, (a, b) =>
           if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
       // eligible vertices commit to mex(used): (vid, (color, round))
-      val newColored = pri.leftOuterJoin(minNbr, p)
+      val newColored = rnd.checkpoint(scope.cache(pri.leftOuterJoin(minNbr, p)
         .filter { case (v, ((prV, _), m)) =>
           m.forall(mm => prV < mm._1 || (prV == mm._1 && v < mm._2)) }
-        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) }
-        .persist()
+        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) }))
+      colorParts += newColored
       val notify = eBySrc.join(newColored, p)
         .map { case (_, (dst, (c, _))) => (dst, c) }
       val arrived = notify.groupByKey(p).mapValues(_.toArray.sorted)
-      val next = uncolored.subtractByKey(newColored, p)
+      val next = rnd.checkpoint(rnd.cache(uncolored.subtractByKey(newColored, p)
         .leftOuterJoin(arrived, p)
         .mapValues { case (used, add) =>
           add.fold(used)(a => (used ++ a).sorted)
-        }.persist()
-      if (round % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined) {
-        next.checkpoint()
-        newColored.checkpoint()
-      }
-      nUncolored = next.count()
-      retired += uncolored
-      retired += pri
-      uncolored = next
-      colorParts += newColored
+        }))
+      (next, next.count())
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(colorParts.toSeq)
         .map { case (v, (c, r)) => (v, c, r) })
       .toDF("vid", "color", "mis_round").cache()
     df.count()
-    (retired.toSeq :+ uncolored).foreach(_.unpersist(blocking = false))
-    colorParts.foreach(_.unpersist(blocking = false))
-    eBySrc.unpersist(blocking = false)
     df
   }
 
@@ -2807,16 +2400,9 @@ object GraphAlgs {
    * the same mix arithmetic, the same md5 tie-break).
    *
    * Returns (vid, color, trial_round) for EVERY vertex. */
-  def coloringTrialDF(edges: DataFrame, maxIter: Int = 80): DataFrame = {
+  def coloringTrialDF(edges: DataFrame, maxIter: Int = 80): DataFrame = Fixpoint.using { scope =>
     val spark = edges.sparkSession
-    val nSym = edges.count() * 2
-    val sym = edges
-      .select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)),
-        (r.getLong(1), r.getLong(0))))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(sym.getNumPartitions, (2 * nSym / 500000L).toInt)))
-    val eBySrc = sym.partitionBy(p).persist()
+    val (p, eBySrc) = symmetricEdges(scope, edges)
     // k-th smallest of [1..deg+1] \ used (used sorted ascending and
     // DISTINCT — the merge below dedupes, and the scan below skips
     // runs anyway; entries past deg+1 can appear — a neighbor's own
@@ -2835,22 +2421,18 @@ object GraphAlgs {
       throw new IllegalStateException("unreachable")
     }
     // uncolored state: vid -> (original degree, used colors sorted)
-    var uncolored = eBySrc.mapValues(_ => 1)
+    val loop = scope.loop(maxIter)
+    val uncolored0 = loop.init.cache(eBySrc.mapValues(_ => 1)
       .reduceByKey(p, _ + _)
-      .mapValues(d => (d, Array.empty[Long])).persist()
-    var nUncolored = uncolored.count()
-    var round = 0L
+      .mapValues(d => (d, Array.empty[Long])))
     val colorParts = scala.collection.mutable.ListBuffer
       .empty[org.apache.spark.rdd.RDD[(Long, (Long, Long))]]
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    while (nUncolored > 0) {
-      round += 1
-      require(round <= maxIter,
-        s"coloringTrial: $nUncolored vertices uncolored after $maxIter rounds — raise maxIter")
-      val r = round
+    loop.run((uncolored0, uncolored0.count()))(_._2 > 0,
+        s => s"coloringTrial: ${s._2} vertices uncolored after $maxIter rounds — raise maxIter") {
+      case (rnd, (uncolored, _)) =>
+      val r = rnd.number.toLong
       // this round's proposal + tie-break priority per uncolored vertex
-      val prop = uncolored.mapPartitions({ it =>
+      val prop = rnd.cache(uncolored.mapPartitions({ it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (v, (deg, used)) =>
           var inPal = 0
@@ -2874,7 +2456,7 @@ object GraphAlgs {
           val k = Math.floorMod(v * 1000003L + r * 10007L, m.toLong)
           (v, (pick(deg, used, k), md5HexWith(md, s"$v-$r")))
         }
-      }, preservesPartitioning = true).persist()
+      }, preservesPartitioning = true))
       // conflict: an uncolored neighbor proposed the SAME color and
       // precedes me in (md5, vid) — one exchange over live edges
       val beaten = eBySrc.join(prop, p)
@@ -2884,34 +2466,24 @@ object GraphAlgs {
           cand == own && (pr < ownPr || (pr == ownPr && src < v)) }
         .mapValues(_ => ())
         .reduceByKey(p, (a, _) => a)
-      val newColored = prop.subtractByKey(beaten, p)
-        .map { case (v, (cand, _)) => (v, (cand, r)) }.persist()
+      val newColored = rnd.checkpoint(scope.cache(prop.subtractByKey(beaten, p)
+        .map { case (v, (cand, _)) => (v, (cand, r)) }))
+      colorParts += newColored
       val notify = eBySrc.join(newColored, p)
         .map { case (_, (dst, (c, _))) => (dst, c) }
       val arrived = notify.groupByKey(p).mapValues(_.toArray.sorted)
-      val next = uncolored.subtractByKey(newColored, p)
+      val next = rnd.checkpoint(rnd.cache(uncolored.subtractByKey(newColored, p)
         .leftOuterJoin(arrived, p)
         .mapValues { case ((deg, used), add) =>
           (deg, add.fold(used)(a => (used ++ a).distinct.sorted))
-        }.persist()
-      if (round % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined) {
-        next.checkpoint()
-        newColored.checkpoint()
-      }
-      nUncolored = next.count()
-      retired += uncolored
-      retired += prop
-      uncolored = next
-      colorParts += newColored
+        }))
+      (next, next.count())
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(colorParts.toSeq)
         .map { case (v, (c, r)) => (v, c, r) })
       .toDF("vid", "color", "trial_round").cache()
     df.count()
-    (retired.toSeq :+ uncolored).foreach(_.unpersist(blocking = false))
-    colorParts.foreach(_.unpersist(blocking = false))
-    eBySrc.unpersist(blocking = false)
     df
   }
 
@@ -2962,15 +2534,14 @@ object GraphAlgs {
    *
    * Returns (src, dst, match_round): matched edges only, round tags
    * certifying the trajectory. */
-  def matchingDetDF(edges: DataFrame, maxIter: Int = 60): DataFrame = {
+  def matchingDetDF(edges: DataFrame, maxIter: Int = 60): DataFrame = Fixpoint.using { scope =>
     val spark = edges.sparkSession
     val canon = edges
       .select(least(col("src"), col("dst")).cast("long").as("src"),
         greatest(col("src"), col("dst")).cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct()
     val nE = canon.count()
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(canon.rdd.getNumPartitions, (nE / 250000L).toInt)))
+    val p = new org.apache.spark.HashPartitioner(loopPartitions(canon.rdd.getNumPartitions, 2 * nE))
     // SYMMETRIC copy set: each undecided edge is stored under BOTH
     // endpoints, the two copies sharing ONE tie-break key built from
     // the canonical orientation. The ABSTRACT key is the 56-char
@@ -3003,7 +2574,8 @@ object GraphAlgs {
     // rows are IDENTICAL to the old formulation (same minima, same
     // total order, canonical orientation) — MatchingSpec and the
     // oracle replay pin it.
-    var undecided: org.apache.spark.rdd.RDD[(Long, (Long, Long, Long))] = canon.rdd
+    val loop = scope.loop(maxIter)
+    val undecided0: org.apache.spark.rdd.RDD[(Long, (Long, Long, Long))] = loop.init.cache(canon.rdd
       .map(r => (r.getLong(0), r.getLong(1)))
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
@@ -3022,7 +2594,7 @@ object GraphAlgs {
           Iterator((u, (v, w1, w2)), (v, (u, w1, w2)))
         }
       }
-      .partitionBy(p).persist()
+      .partitionBy(p))
     // Partition-local per-endpoint minimum over the symmetric copies
     // (every edge incident to x has a copy at x's partition), built
     // in ONE streaming pass — the map holds one mutated-in-place
@@ -3044,21 +2616,16 @@ object GraphAlgs {
       }
       m
     }
-    var nUndecided = nE
-    var round = 0L
     val matchedParts = scala.collection.mutable.ListBuffer
       .empty[org.apache.spark.rdd.RDD[(Long, Long, Long)]]
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    while (nUndecided > 0) {
-      round += 1
-      // "~" because the count comes from a transformation-side
-      // accumulator (at-least-once under task retries, ADVICE r17):
-      // the > 0 loop decision is retry-exact, the magnitude may read
-      // high on a retried run
-      require(round <= maxIter,
-        s"matchingDet: ~$nUndecided edges undecided after $maxIter rounds — raise maxIter")
-      val r = round
+    // "~" because the count comes from a transformation-side
+    // accumulator (at-least-once under task retries, ADVICE r17):
+    // the > 0 loop decision is retry-exact, the magnitude may read
+    // high on a retried run
+    loop.run((undecided0, nE))(_._2 > 0,
+        s => s"matchingDet: ~${s._2} edges undecided after $maxIter rounds — raise maxIter") {
+      case (rnd, (undecided, _)) =>
+      val r = rnd.number.toLong
       // copies that ARE their endpoint's minimum, forwarded to the
       // other endpoint: at most one record per undecided vertex —
       // emitted straight from the argmin map (the map entry IS the
@@ -3081,13 +2648,14 @@ object GraphAlgs {
       // are unique per edge (md5 + endpoint tie-break), so "the
       // forwarded key equals y's minimum" is exactly "y's argmin
       // edge IS (x, y)" — an edge-identity probe, no key compare.
-      val matched = undecided.zipPartitions(cand) { (uIt, cIt) =>
+      val matched = scope.cache(undecided.zipPartitions(cand) { (uIt, cIt) =>
         val m = localMin(uIt)
         cIt.filter { case (y, (x, _, _)) =>
           if (y <= x) false
           else { val e = m.get(y); e != null && e.y == x }
         }.map { case (y, (x, _, _)) => (x, y, r) }
-      }.persist()
+      })
+      matchedParts += matched
       val knocked = matched
         .flatMap { case (u, v, _) => Iterator((u, ()), (v, ())) }
         .reduceByKey(p, (a, _) => a)
@@ -3105,27 +2673,19 @@ object GraphAlgs {
         uIt.collect { case (x, (y, w1, w2)) if !dead.contains(x) =>
           (y, (x, w1, w2)) }
       }.partitionBy(p)
-      val next = phaseA.zipPartitions(knocked) { (aIt, kIt) =>
+      val next = rnd.checkpoint(rnd.cache(phaseA.zipPartitions(knocked) { (aIt, kIt) =>
         val dead = new java.util.HashSet[Long]()
         kIt.foreach(kv => dead.add(kv._1))
         aIt.collect { case (x, (y, w1, w2)) if !dead.contains(x) =>
           nUndecidedAcc.add(1L); (x, (y, w1, w2)) }
-      }.persist()
-      // cut the state lineage every 16 rounds (see misDetDF)
-      if (round % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined)
-        next.checkpoint()
+      }))
       next.foreachPartition(_ => ()) // materialize; populates the accumulator
-      nUndecided = nUndecidedAcc.value / 2
-      retired += undecided
-      undecided = next
-      matchedParts += matched
+      (next, nUndecidedAcc.value / 2)
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(matchedParts.toSeq))
       .toDF("src", "dst", "match_round").cache()
     df.count()
-    (retired.toSeq :+ undecided).foreach(_.unpersist(blocking = false))
-    matchedParts.foreach(_.unpersist(blocking = false))
     df
   }
 
@@ -3137,55 +2697,41 @@ object GraphAlgs {
    * the DAG depth, message volume O(E) per round. Cycles never
    * converge, so the maxIter guard doubles as a loud input
    * validator. Returns (vid, level) for every vertex. */
-  def dagLevelsDF(dedges: DataFrame, maxIter: Int = 100): DataFrame = {
+  def dagLevelsDF(dedges: DataFrame, maxIter: Int = 100): DataFrame = Fixpoint.using { scope =>
     val spark = dedges.sparkSession
     val nE = dedges.count()
     val e0 = dedges
       .select(col("src").cast("long"), col("dst").cast("long")).rdd
       .map(r => (r.getLong(0), r.getLong(1)))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(e0.getNumPartitions, (nE / 250000L).toInt)))
-    val eF = e0.partitionBy(p).persist()
-    var st = eF.mapValues(_ => ()).union(e0.map(e => (e._2, ())))
+    val p = new org.apache.spark.HashPartitioner(loopPartitions(e0.getNumPartitions, 2 * nE))
+    val eF = scope.cache(e0.partitionBy(p))
+    val loop = scope.loop(maxIter)
+    val st0 = loop.init.cache(eF.mapValues(_ => ()).union(e0.map(e => (e._2, ())))
       .reduceByKey(p, (a, _) => a)
       .mapPartitions(_.map { case (v, _) => (v, 1L) },
-        preservesPartitioning = true).persist()
-    var changed = 1L
-    var round = 0
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    while (changed > 0) {
-      round += 1
-      require(round <= maxIter,
-        s"dagLevels: not converged after $maxIter rounds — cycle in input, or raise maxIter")
+        preservesPartitioning = true))
+    val (st, _) = loop.run((st0, 1L))(_._2 > 0,
+        _ => s"dagLevels: not converged after $maxIter rounds — cycle in input, or raise maxIter") {
+      case (r, (st, _)) =>
       val msg = eF.join(st, p)
         .map { case (_, (dst, l)) => (dst, l + 1L) }
         .reduceByKey(p, math.max(_: Long, _: Long))
       // changed-count fused into the round's materializing job via a
-      // transformation-side accumulator (see sccDetDF): the old shape
-      // paid an extra JOIN of next against st plus a count pass per
-      // round just to detect convergence. Retry-exact for the same
-      // reason — only zero-ness is read.
+      // transformation-side accumulator (see sccDetDF). Retry-exact
+      // for the same reason — only zero-ness is read.
       val changedAcc = spark.sparkContext
-        .longAccumulator(s"daglevels-changed-$round")
-      val next = st.leftOuterJoin(msg, p)
+        .longAccumulator(s"daglevels-changed-${r.number}")
+      val next = r.checkpoint(r.cache(st.leftOuterJoin(msg, p)
         .mapValues { case (l, m) =>
           val l2 = math.max(l, m.getOrElse(l))
           if (l2 != l) changedAcc.add(1L)
           l2
-        }
-        .persist()
-      if (round % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined)
-        next.checkpoint()
+        }))
       next.foreachPartition(_ => ()) // materialize; populates the accumulator
-      changed = changedAcc.value
-      retired += st
-      st = next
+      (next, changedAcc.value)
     }
     val df = spark.createDataFrame(st).toDF("vid", "level").cache()
     df.count()
-    (retired.toSeq :+ st).foreach(_.unpersist(blocking = false))
-    eF.unpersist(blocking = false)
     df
   }
 
@@ -3219,33 +2765,29 @@ object GraphAlgs {
    *
    * Returns (vid, scc, scc_size) for every vertex of the edge set. */
   def sccDetDF(dedges: DataFrame, maxOuter: Int = 40,
-      maxInner: Int = 200): DataFrame = {
+      maxInner: Int = 200): DataFrame = Fixpoint.using { scope =>
     val spark = dedges.sparkSession
     val nE = dedges.count()
     val e0 = dedges
       .select(col("src").cast("long"), col("dst").cast("long")).rdd
       .map(r => (r.getLong(0), r.getLong(1)))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(8, math.min(e0.getNumPartitions, (nE / 250000L).toInt)))
+    val p = new org.apache.spark.HashPartitioner(loopPartitions(e0.getNumPartitions, 2 * nE))
+    val INF = Long.MaxValue
     // one exchange RDD for BOTH directions: keyed by the SENDING
     // vertex, payload (receiver, isForward) — halves the per-round
     // job count vs separate forward/backward joins
-    var eAll = e0.map { case (u, v) => (u, (v, true)) }
+    val peels = scope.loop(maxOuter)
+    val eAll0 = peels.init.cache(e0.map { case (u, v) => (u, (v, true)) }
       .union(e0.map { case (u, v) => (v, (u, false)) })
-      .partitionBy(p).persist()
-    var active = eAll.mapValues(_ => ())
-      .reduceByKey(p, (a, _) => a).persist()
-    var nActive = active.count()
-    var outer = 0
+      .partitionBy(p))
+    val active0 = peels.init.cache(eAll0.mapValues(_ => ())
+      .reduceByKey(p, (a, _) => a))
     val done = scala.collection.mutable.ListBuffer
       .empty[org.apache.spark.rdd.RDD[(Long, Long)]]
-    val retired =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    val INF = Long.MaxValue
-    while (nActive > 0) {
-      outer += 1
-      require(outer <= maxOuter,
-        s"sccDet: $nActive vertices active after $maxOuter peel rounds — raise maxOuter")
+    // loop state: (edges between active vertices, active vertices, their count)
+    peels.run((eAll0, active0, active0.count()))(_._3 > 0,
+        s => s"sccDet: ${s._3} vertices active after $maxOuter peel rounds — raise maxOuter") {
+      case (r, (eAll, active, _)) =>
       // inner fixpoint: (fmin, bmin, fp, bp, changed) over the
       // active subgraph. fp/bp are POINTER-DOUBLING chase pointers
       // (VERDICT r11 order #6 / r12 order #6, the depth escape):
@@ -3264,94 +2806,85 @@ object GraphAlgs {
       // sets), so the emitted labels — and the g_scc oracle hashes —
       // are bit-identical; convergence is still detected on a plain
       // edge round with zero label changes, BEFORE any jump runs.
-      val fwdE = eAll.filter(_._2._2)
-      val fpInit = fwdE.map { case (u, (v, _)) => (v, u) }
-        .reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
-      val bpInit = fwdE.map { case (u, (v, _)) => (u, v) }
-        .reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
-      var st = active.leftOuterJoin(fpInit, p).leftOuterJoin(bpInit, p)
-        .map { case (v, ((_, fp), bp)) =>
-          (v, (v, v, fp.getOrElse(v), bp.getOrElse(v), true)) }
-        .partitionBy(p).persist()
-      var changed = 1L
-      var inner = 0
-      while (changed > 0) {
-        inner += 1
-        require(inner <= maxInner,
-          s"sccDet: min-propagation not converged after $maxInner rounds — raise maxInner")
-        val msg = eAll.join(st, p)
-          .map { case (_, ((nbr, isFwd), (f, b, _, _, _))) =>
-            (nbr, if (isFwd) (f, INF) else (INF, b)) }
-          .reduceByKey(p, (x, y) =>
-            (math.min(x._1, y._1), math.min(x._2, y._2)))
-        // changed-count via a transformation-side accumulator bumped
-        // inside the round's own materializing job (the matchingDetDF
-        // discipline) — the old shape paid a SECOND full pass over
-        // the persisted state per inner round just to count flags.
-        // At-least-once under task retries: the loop only tests > 0,
-        // and a retry can never inflate a true zero (retried
-        // partitions with no changes add nothing) — the convergence
-        // decision is retry-exact, like matching's.
-        val changedAcc = spark.sparkContext
-          .longAccumulator(s"scc-changed-$outer-$inner")
-        val next = st.leftOuterJoin(msg, p)
-          .mapValues { case ((f, b, fp, bp, _), m) =>
-            val f2 = math.min(f, m.fold(INF)(_._1))
-            val b2 = math.min(b, m.fold(INF)(_._2))
-            val ch = f2 != f || b2 != b
-            if (ch) changedAcc.add(1L)
-            (f2, b2, fp, bp, ch)
-          }.persist()
-        // cut the state lineage every 16 rounds (see misDetDF)
-        if (inner % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined)
-          next.checkpoint()
-        next.foreachPartition(_ => ()) // materialize; populates the accumulator
-        changed = changedAcc.value
-        retired += st
-        st = next
-        if (changed > 0 && inner % 2 == 0) {
-          val req = st.flatMap { case (v, (_, _, fp, bp, _)) =>
-            Iterator((fp, (v, true)), (bp, (v, false))) }
-          val resolved = req.join(st, p)
-            .map { case (_, ((v, isFwd), (fw, bw, fpw, bpw, _))) =>
-              (v, if (isFwd) (fw, fpw, INF, INF) else (INF, INF, bw, bpw)) }
+      // The inner loop's generations close with it once `peel` is
+      // cached.
+      val peel = Fixpoint.using { inner =>
+        val fwdE = eAll.filter(_._2._2)
+        val fpInit = fwdE.map { case (u, (v, _)) => (v, u) }
+          .reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
+        val bpInit = fwdE.map { case (u, (v, _)) => (u, v) }
+          .reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
+        val props = inner.loop(maxInner)
+        val st0 = props.init.cache(active.leftOuterJoin(fpInit, p).leftOuterJoin(bpInit, p)
+          .map { case (v, ((_, fp), bp)) =>
+            (v, (v, v, fp.getOrElse(v), bp.getOrElse(v), true)) }
+          .partitionBy(p))
+        val outer = r.number
+        val (st, _) = props.run((st0, 1L))(_._2 > 0,
+            _ => s"sccDet: min-propagation not converged after $maxInner rounds — raise maxInner") {
+          case (ri, (st, _)) =>
+          val msg = eAll.join(st, p)
+            .map { case (_, ((nbr, isFwd), (f, b, _, _, _))) =>
+              (nbr, if (isFwd) (f, INF) else (INF, b)) }
             .reduceByKey(p, (x, y) =>
-              (math.min(x._1, y._1), math.min(x._2, y._2),
-                math.min(x._3, y._3), math.min(x._4, y._4)))
-          val jumped = st.join(resolved, p)
-            .mapValues { case ((f, b, _, _, ch), (fj, fp2, bj, bp2)) =>
-              val f2 = math.min(f, fj)
-              val b2 = math.min(b, bj)
-              (f2, b2, fp2, bp2, ch || f2 != f || b2 != b)
-            }.persist()
-          if (inner % 16 == 0 && spark.sparkContext.getCheckpointDir.isDefined)
-            jumped.checkpoint()
-          jumped.count()
-          retired += st
-          st = jumped
+              (math.min(x._1, y._1), math.min(x._2, y._2)))
+          // changed-count via a transformation-side accumulator bumped
+          // inside the round's own materializing job (the matchingDetDF
+          // discipline). At-least-once under task retries: the loop
+          // only tests > 0, and a retry can never inflate a true zero
+          // (retried partitions with no changes add nothing) — the
+          // convergence decision is retry-exact, like matching's.
+          val changedAcc = spark.sparkContext
+            .longAccumulator(s"scc-changed-$outer-${ri.number}")
+          val next = ri.checkpoint(ri.cache(st.leftOuterJoin(msg, p)
+            .mapValues { case ((f, b, fp, bp, _), m) =>
+              val f2 = math.min(f, m.fold(INF)(_._1))
+              val b2 = math.min(b, m.fold(INF)(_._2))
+              val ch = f2 != f || b2 != b
+              if (ch) changedAcc.add(1L)
+              (f2, b2, fp, bp, ch)
+            }))
+          next.foreachPartition(_ => ()) // materialize; populates the accumulator
+          val changed = changedAcc.value
+          if (changed > 0 && ri.number % 2 == 0) {
+            val req = next.flatMap { case (v, (_, _, fp, bp, _)) =>
+              Iterator((fp, (v, true)), (bp, (v, false))) }
+            val resolved = req.join(next, p)
+              .map { case (_, ((v, isFwd), (fw, bw, fpw, bpw, _))) =>
+                (v, if (isFwd) (fw, fpw, INF, INF) else (INF, INF, bw, bpw)) }
+              .reduceByKey(p, (x, y) =>
+                (math.min(x._1, y._1), math.min(x._2, y._2),
+                  math.min(x._3, y._3), math.min(x._4, y._4)))
+            val jumped = ri.checkpoint(ri.cache(next.join(resolved, p)
+              .mapValues { case ((f, b, _, _, ch), (fj, fp2, bj, bp2)) =>
+                val f2 = math.min(f, fj)
+                val b2 = math.min(b, bj)
+                (f2, b2, fp2, bp2, ch || f2 != f || b2 != b)
+              }))
+            jumped.count()
+            (jumped, changed)
+          } else (next, changed)
         }
+        val peel = scope.cache(st
+          .filter { case (_, (f, b, _, _, _)) => f == b }
+          .map { case (v, (f, _, _, _, _)) => (v, f) })
+        peel.count()
+        peel
       }
-      val peel = st
-        .filter { case (_, (f, b, _, _, _)) => f == b }
-        .map { case (v, (f, _, _, _, _)) => (v, f) }.persist()
-      peel.count()
       done += peel
-      retired += st
-      val nextActive = active.subtractByKey(peel, p).persist()
-      nActive = nextActive.count()
-      retired += active
-      active = nextActive
-      if (nActive > 0) {
-        // restrict edges to the surviving vertex set (both endpoints)
-        val eAll2 = eAll.join(nextActive, p)
+      val nextActive = r.cache(active.subtractByKey(peel, p))
+      val nActive = nextActive.count()
+      // restrict edges to the surviving vertex set (both endpoints)
+      val eNext = if (nActive == 0) eAll else {
+        val e = r.cache(eAll.join(nextActive, p)
           .map { case (u, ((v, dir), _)) => (v, (u, dir)) }.partitionBy(p)
           .join(nextActive, p)
           .map { case (v, ((u, dir), _)) => (u, (v, dir)) }
-          .partitionBy(p).persist()
-        eAll2.count()
-        retired += eAll
-        eAll = eAll2
+          .partitionBy(p))
+        e.count()
+        e
       }
+      (eNext, nextActive, nActive)
     }
     val lab = spark.sparkContext.union(done.toSeq)
     val sizes = lab.map { case (_, s) => (s, 1L) }
@@ -3362,9 +2895,6 @@ object GraphAlgs {
     val df = spark.createDataFrame(rows)
       .toDF("vid", "scc", "scc_size").cache()
     df.count()
-    (retired.toSeq :+ active).foreach(_.unpersist(blocking = false))
-    done.foreach(_.unpersist(blocking = false))
-    eAll.unpersist(blocking = false)
     df
   }
 }

@@ -434,7 +434,7 @@ object GraphQueries {
    * integer-exact contract (the spec additionally asserts the
    * rank-mass invariant). */
   def pagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rank, release) =
+    val (rank, scope) =
       graft.graph.GraphAlgs.pagerankFloatRDD(graph(spark, sfDir))
     val rows = rank.map { case (id, r) =>
       (id, math.floor(r * 1e6 + 0.5) / 1e6)
@@ -444,7 +444,7 @@ object GraphQueries {
     // 10-iteration recompute when the result is evaluated
     val df = spark.createDataFrame(rows).toDF("vid", "rank").cache()
     df.count()
-    release()
+    scope.close()
     df.orderBy("vid")
   }
 
@@ -464,10 +464,10 @@ object GraphQueries {
    * sums themselves addExact-throw rather than corrupt. The DuckDB
    * side sums in HUGEINT and casts back. */
   def pagerankDeterministic(spark: SparkSession, sfDir: String): DataFrame = {
-    val rank = graft.graph.GraphAlgs.pagerankDetRDD(adjArrays(spark, sfDir))
+    val (rank, scope) = graft.graph.GraphAlgs.pagerankDetRDD(adjArrays(spark, sfDir))
     val df = spark.createDataFrame(rank).toDF("vid", "rank").cache()
     df.count()
-    rank.unpersist(blocking = false)
+    scope.close()
     df.orderBy("vid")
   }
 
@@ -481,10 +481,10 @@ object GraphQueries {
    * with the seed indicator folded into the edge CTE once. */
   def pprDeterministic(spark: SparkSession, sfDir: String): DataFrame = {
     val seeds = bfsSources(spark, sfDir).toSet
-    val rank = graft.graph.GraphAlgs.pprDetRDD(adjArrays(spark, sfDir), seeds)
+    val (rank, scope) = graft.graph.GraphAlgs.pprDetRDD(adjArrays(spark, sfDir), seeds)
     val df = spark.createDataFrame(rank).toDF("vid", "rank").cache()
     df.count()
-    rank.unpersist(blocking = false)
+    scope.close()
     df.orderBy("vid")
   }
 
@@ -783,7 +783,7 @@ object GraphQueries {
   private def bfs5(spark: SparkSession, sfDir: String): Array[(Long, Long, Long, Long, Long)] =
     memoize(spark, s"bfs5:$sfDir") {
       val sources = bfsSources(spark, sfDir)
-      val (state, release) = graft.graph.GraphAlgs
+      val (state, scope) = graft.graph.GraphAlgs
         .multiSourceBfsRDD(graph(spark, sfDir), sources, maxHops = 8)
       val perRoot = state.flatMap { case (_, ds) =>
         ds.zipWithIndex.collect { case (d, i) if d != Int.MaxValue => (i, d) }
@@ -793,7 +793,7 @@ object GraphQueries {
         { case ((n1, s1, m1, h1), (n2, s2, m2, h2)) =>
           (n1 + n2, s1 + s2, math.max(m1, m2), h1 + h2) })
         .collect().sortBy(_._1)
-      release()
+      scope.close()
       perRoot.map { case (i, (n, s, mx, h)) => (sources(i), n, s, mx.toLong, h) }
     }
 
@@ -806,7 +806,7 @@ object GraphQueries {
    * bit-identical doubles, zero tolerance at the shared 1e-9
    * rounding. */
   def betweenness(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = graft.graph.GraphAlgs.sampledBetweennessRDD(
+    val (rows, scope) = graft.graph.GraphAlgs.sampledBetweennessRDD(
       graph(spark, sfDir), bfsSources(spark, sfDir), maxHops = 8)
     val out = spark.createDataFrame(rows).toDF("vid", "n_roots", "bc_raw")
       .select(col("vid"), col("n_roots"),
@@ -814,7 +814,7 @@ object GraphQueries {
       .orderBy("vid")
     val materialized = out.cache()
     materialized.count()
-    rows.unpersist(blocking = false)
+    scope.close()
     materialized
   }
 
@@ -932,10 +932,10 @@ object GraphQueries {
    * sums past Long range addExact-throw rather than corrupt (DuckDB
    * already sums in HUGEINT). */
   def eigenCentralityDeterministic(spark: SparkSession, sfDir: String): DataFrame = {
-    val x = graft.graph.GraphAlgs.eigenCentralityDetRDD(adjArrays(spark, sfDir))
+    val (x, scope) = graft.graph.GraphAlgs.eigenCentralityDetRDD(adjArrays(spark, sfDir))
     val df = spark.createDataFrame(x).toDF("vid", "score").cache()
     df.count()
-    x.unpersist(blocking = false)
+    scope.close()
     df.orderBy("vid")
   }
 
@@ -946,10 +946,10 @@ object GraphQueries {
    * implementation-defined map-iteration order) the result is exact
    * and the oracle replays it with a row_number window. */
   def labelPropagationDeterministic(spark: SparkSession, sfDir: String): DataFrame = {
-    val lab = graft.graph.GraphAlgs.labelPropagationDetRDD(adjArrays(spark, sfDir))
+    val (lab, scope) = graft.graph.GraphAlgs.labelPropagationDetRDD(adjArrays(spark, sfDir))
     val df = spark.createDataFrame(lab).toDF("vid", "label").cache()
     df.count()
-    lab.unpersist(blocking = false)
+    scope.close()
     df.orderBy("vid")
   }
 
@@ -1047,7 +1047,7 @@ object GraphQueries {
         .agg(min(col("s"))).head()
       !row.isNullAt(0) && row.getInt(0) >= k - 2
     }
-    truss.release()
+    truss.scope.close()
     spark.createDataFrame(Seq((nVertices, truss.r1Count, supportOk, truss.converged)))
       .toDF("n_vertices", "n_edges_r1", "support_ok", "converged")
   }
@@ -1315,7 +1315,7 @@ object GraphQueries {
   def msf(spark: SparkSession, sfDir: String): DataFrame = {
     val rdd = msfInputEdges(spark, sfDir).rdd
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val (msfE, labels, release) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
+    val (msfE, labels, scope) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
     val comp = spark.createDataFrame(labels).toDF("vid", "component").cache()
     val msfDf = spark.createDataFrame(msfE).toDF("src", "dst", "len_nano")
     val sizes = comp.groupBy("component").agg(count(lit(1)).as("n_vertices"))
@@ -1326,7 +1326,7 @@ object GraphQueries {
     val out = sizes.join(eAgg, "component").orderBy("component").cache()
     out.count()
     comp.unpersist(blocking = false)
-    release()
+    scope.close()
     out
   }
 
@@ -1352,7 +1352,7 @@ object GraphQueries {
       if (!r.converged) {
         // free the cached (and possibly wrong) labels before failing
         // — otherwise they leak in the block manager with no handle
-        r.release()
+        r.scope.close()
         throw new IllegalStateException(
           s"two-phase CC: no fixpoint within ${r.rounds} rounds")
       }

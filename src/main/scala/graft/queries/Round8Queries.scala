@@ -75,12 +75,12 @@ object Round8Queries {
     val pe = purchaseEdges(spark, sfDir).cache()
     pe.count()
     val edges = pe.rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val (hub, auth, release) = graft.graph.GraphAlgs.hitsDetRDD(edges, rounds = 8)
+    val (hub, auth, scope) = graft.graph.GraphAlgs.hitsDetRDD(edges, rounds = 8)
     val rows = hub.map { case (v, s) => ("hub", v, s) }
       .union(auth.map { case (v, s) => ("auth", v - SuppOffset, s) })
     val df = spark.createDataFrame(rows).toDF("role", "id", "score").cache()
     df.count()
-    release()
+    scope.close()
     pe.unpersist(blocking = false)
     df.orderBy("role", "id")
   }

@@ -486,8 +486,8 @@ object StreamOps {
    * per-batch check runs as the same cluster-keyed join. */
   def semDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ops.Similarity
-    // probe-only phase timer (optimization r21, same gate pattern as
-    // graft.kcore.log): never on in bench/verify runs
+    // probe-only phase timer (optimization r21): never on in
+    // bench/verify runs
     val logOn = sys.props.get("graft.semdedup.log")
       .orElse(sys.env.get("SPARK_GRAFT_SEMDD_LOG")).contains("on")
     var tMark = System.nanoTime()

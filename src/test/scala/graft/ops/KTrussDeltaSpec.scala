@@ -32,7 +32,7 @@ class KTrussDeltaSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet
     val fEdges = full.edges.select("src", "dst", "support")
       .as[(Long, Long, Int)].collect().toSet
-    delta.release(); full.release()
+    delta.scope.close(); full.scope.close()
     assert(dEdges == fEdges,
       s"k=$k: delta fixpoint ${dEdges.size} edges != recompute ${fEdges.size}")
     assert(delta.r1Count == full.r1Count, s"k=$k r1 mismatch")

@@ -79,9 +79,9 @@ class LoopPropertySpec extends SparkSpec {
         val g = graphOf(spark, edges)
         val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
         val sources = verts.take(3).toArray
-        val (state, release) = GraphAlgs.multiSourceBfsRDD(g, sources, maxHops = 30)
+        val (state, scope) = GraphAlgs.multiSourceBfsRDD(g, sources, maxHops = 30)
         val got = state.collect().toMap
-        release()
+        scope.close()
         sources.zipWithIndex.foreach { case (s, i) =>
           val want = bruteBfs(edges, s)
           got.foreach { case (vid, ds) =>

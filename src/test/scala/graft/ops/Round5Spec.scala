@@ -61,17 +61,17 @@ class Round5Spec extends SparkSpec {
       .vertices.collect().toMap
       // the RDD form only carries touched vertices
       .filter { case (_, ds) => ds.exists(_ != Int.MaxValue) }
-    val (state, release) = GraphAlgs.multiSourceBfsRDD(g, sources, maxHops = 10)
+    val (state, scope) = GraphAlgs.multiSourceBfsRDD(g, sources, maxHops = 10)
     val rdd = state.collect().toMap
-    release()
+    scope.close()
     assert(rdd.keySet === pregel.keySet)
     rdd.foreach { case (vid, ds) =>
       assert(ds.toSeq === pregel(vid).toSeq, s"vid=$vid")
     }
     // maxHops cap semantics match the Pregel superstep budget
-    val (capped, release2) = GraphAlgs.multiSourceBfsRDD(g, Array(1L), maxHops = 2)
+    val (capped, scope2) = GraphAlgs.multiSourceBfsRDD(g, Array(1L), maxHops = 2)
     val cm = capped.collect().toMap
-    release2()
+    scope2.close()
     assert(cm(3L)(0) === 2 && !cm.contains(4L))
   }
 

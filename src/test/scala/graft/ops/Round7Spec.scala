@@ -19,7 +19,7 @@ class Round7Spec extends SparkSpec {
     assert(out.converged)
     assert(out.r1Count == 6) // round 1 already drops triangle + pendant
     val kept = out.edges.select("src", "dst").as[(Long, Long)].collect().toSet
-    out.release()
+    out.scope.close()
     assert(kept == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
   }
 
@@ -40,7 +40,7 @@ class Round7Spec extends SparkSpec {
     assert(out.converged)
     val kept = out.edges.select("src", "dst", "support")
       .as[(Long, Long, Int)].collect().toSet
-    out.release()
+    out.scope.close()
     val k5 = (k4 ++ spokes).map { case (u, v) => (u, v, 3) }.toSet
     assert(kept == k5, s"expected the K5 at support 3, got $kept")
   }
@@ -55,7 +55,7 @@ class Round7Spec extends SparkSpec {
     assert(out.converged)
     assert(out.r1Count == 1)
     assert(out.edges.count() == 0)
-    out.release()
+    out.scope.close()
   }
 
   // ---- two-phase connected components ------------------------------
@@ -83,14 +83,14 @@ class Round7Spec extends SparkSpec {
 
   test("two-phase CC non-converged release frees every cached surface") {
     // exhaust the round budget on a long path (needs ~log n rounds),
-    // then assert release() drops the labels AND the per-round RDD
+    // then assert closing the scope drops the labels AND the per-round RDD
     // from the block manager — the non-converged path the query
     // wrapper takes before throwing must not leak (ADVICE round 7)
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val cc = GraphAlgs.connectedComponentsTwoPhase(edges, maxRounds = 1)
     assert(!cc.converged)
-    cc.release()
+    cc.scope.close()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persisted RDD ids: $leaked")
   }
@@ -137,7 +137,7 @@ class Round7Spec extends SparkSpec {
     val out = GraphAlgs.ktrussPeel(edges, k = 3)
     assert(out.converged)
     val kept = out.edges.select("src", "dst").as[(Long, Long)].collect().toSet
-    out.release()
+    out.scope.close()
     assert(kept == Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L)))
   }
 }

@@ -102,11 +102,15 @@ class SccSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lv === Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 3L,
       5L -> 4L, 10L -> 1L, 11L -> 2L))
+    // the tripped guard releases everything the loop cached
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalArgumentException] {
       GraphAlgs.dagLevelsDF(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"),
         maxIter = 10)
     }
     assert(ex.getMessage.contains("cycle"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDD ids: $leaked")
   }
 
   test("sccDetDF on the g_scc fixture at sf0.001 matches Kosaraju") {

@@ -25,9 +25,9 @@ class FloatDetSpec extends SparkSpec {
 
   test("float pagerank is bit-identical across input partitionings") {
     val runs = Seq(1, 3, 7).map { parts =>
-      val (r, rel) = GraphAlgs.pagerankFloatRDD(EdgeOps.toGraph(edgeDf(parts)))
+      val (r, scope) = GraphAlgs.pagerankFloatRDD(EdgeOps.toGraph(edgeDf(parts)))
       val m = r.collect().toMap
-      rel()
+      scope.close()
       m
     }
     // exact Double equality — not a tolerance compare

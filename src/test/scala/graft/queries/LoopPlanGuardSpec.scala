@@ -64,7 +64,7 @@ class LoopPlanGuardSpec extends SparkSpec with TimeLimits {
           graft.graph.GraphAlgs
             .connectedComponentsTwoPhase(edges, maxRounds = maxRounds,
               materializeLargeStar = materialize)
-            .release()
+            .scope.close()
         }
         (c.stages, c.shuffleRecordsRead)
       }

@@ -65,6 +65,16 @@ class MisSpec extends SparkSpec {
     check((2L to 30L).map(v => (1L, v)))
   }
 
+  test("mis loud on an exhausted round budget, with nothing left cached") {
+    // a 40-vertex path needs more than one knockout round
+    val path = (1L until 40L).map(v => (v, v + 1)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalArgumentException](GraphAlgs.misDetDF(path, maxIter = 1))
+    assert(ex.getMessage.contains("raise maxIter"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDD ids: $leaked")
+  }
+
   test("mis on the sf0.001 co-purchase graph: replay, independence, maximality") {
     val e = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .selectExpr("l_orderkey AS o", "l_partkey AS p")

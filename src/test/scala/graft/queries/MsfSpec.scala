@@ -33,10 +33,10 @@ class MsfSpec extends SparkSpec {
 
   private def check(edges: Seq[(Long, Long, Long)]): Unit = {
     val rdd = spark.sparkContext.parallelize(edges, 4)
-    val (msfE, labels, release) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
+    val (msfE, labels, scope) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
     val gotEdges = msfE.collect().toSet
     val gotLabels = labels.collect().toMap
-    release()
+    scope.close()
     val (wantEdges, wantLabels) = kruskal(edges)
     assert(gotEdges === wantEdges)
     assert(gotLabels === wantLabels)
@@ -48,11 +48,11 @@ class MsfSpec extends SparkSpec {
     check(edges)
     // and the distributed run is reproducible bit-for-bit
     val rdd = spark.sparkContext.parallelize(edges, 8)
-    val (a, la, relA) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
-    val (b, lb, relB) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
+    val (a, la, scopeA) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
+    val (b, lb, scopeB) = graft.graph.GraphAlgs.boruvkaMsfRDD(rdd)
     assert(a.collect().sorted === b.collect().sorted)
     assert(la.collect().sorted === lb.collect().sorted)
-    relA(); relB()
+    scopeA.close(); scopeB.close()
   }
 
   test("chain graph forces deep parent chains through the pointer jumping") {
