@@ -925,8 +925,9 @@ object GraphAlgs {
     // driver-side scalar, and the max-fold is the round's only
     // action. It materializes the cached raw sums en route; the
     // normalized scores are a lazy mapValues view over them
-    // (partitioning preserved), read by the next round (lag 1). The
-    // result is the last such view, over sums the scope holds.
+    // (partitioning preserved), whose last reader is the next
+    // round's max-fold (lag 0). The result is the last such view,
+    // over sums the scope holds.
     scope.loop(rounds).run(adj.mapValues(_ => 1000000L))(_ => true) { (r, x) =>
       val sums = detPush(adj, x)((xu, _) => xu).reduceByKey(p, Math.addExact(_, _))
       // x and sums share partitioner p: a zipPartitions hash merge
@@ -939,7 +940,7 @@ object GraphAlgs {
         xIt.map { case (id, own) =>
           (id, Math.addExact(own, m.getOrDefault(id, 0L)))
         }
-      }, lag = 1)
+      })
       val mx = s.map(_._2).fold(1L)(math.max) // materializes s
       s.mapValues(v => mulDiv(v, 1000000L, mx))
     }
@@ -1031,15 +1032,15 @@ object GraphAlgs {
       // ONE Spark job per half-round: the max-fold is the
       // half-round's only action, and it materializes the cached raw
       // sums en route; the normalized scores are a lazy mapValues
-      // view over them (partitioning preserved), read by the next
-      // half-round (lag 1)
+      // view over them (partitioning preserved), whose last reader is
+      // the next half-round's max-fold (lag 0)
       val loop = scope.loop(rounds)
       val hub0: RDD[(Long, Long)] = loop.init.cache(adjOut
         .mapPartitions(_.map { case (u, _) => (u, 1000000L) }, preservesPartitioning = true))
       def half(r: loop.Round, adj: RDD[(Long, Array[Long])], score: RDD[(Long, Long)],
           to: HashPartitioner): RDD[(Long, Long)] = {
         val raw = r.cache(detPush(adj, score)((s, _) => s)
-          .reduceByKey(to, Math.addExact(_, _)), lag = 1)
+          .reduceByKey(to, Math.addExact(_, _)))
         val mx = raw.map(_._2).fold(1L)(math.max) // materializes raw
         raw.mapValues(v => mulDiv(v, 1000000L, mx))
       }

@@ -209,10 +209,10 @@ object InitialPartition {
    * changed, then — with `decide` — re-decide the vertices with a
    * flipped higher-ranked neighbor. */
   private[wcc] def superstep(g: Gen, part: HashPartitioner, decide: Boolean): Gen = {
-    val moves = g.blocks.mapPartitions { it =>
+    val moves = RefineState.exchange(g.blocks.mapPartitions { it =>
       val (pid, b) = it.next()
       RefineState.sendMoves(pid, b.adj, b.prevLabel, b.label, 0.0, part.numPartitions)
-    }.partitionBy(part)
+    }, part)
     finish(g.blocks.zipPartitions(moves, preservesPartitioning = true) { (bIt, mIt) =>
       val (pid, b) = bIt.next()
       val adj = b.adj

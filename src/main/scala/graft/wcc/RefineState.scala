@@ -1,5 +1,8 @@
 package graft.wcc
 
+import java.io.{EOFException, InputStream, OutputStream, StreamCorruptedException}
+import java.nio.ByteBuffer
+
 import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 
@@ -7,7 +10,9 @@ import graft.graph.SortedIntersect
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer,
+  SerializerInstance}
 import org.apache.spark.storage.StorageLevel
 
 /** The label-independent half of a vertex block: one partition's
@@ -74,24 +79,209 @@ private[wcc] final class VertexBlock(
   }
 }
 
+/** A message between vertex blocks. Every block exchange
+ * ([[RefineState.exchange]]) carries one per target partition, and
+ * [[BlockCodec]] is its one wire format. */
+private[wcc] sealed trait BlockMessage extends Serializable
+
 /** Stage A -> B message: new labels of moved vertices. A partition
  * always sends one to itself (`src` == target), which also carries
  * its WCC_V sum and move count to the job result. The seeding
- * supersteps ship their changed labels in the same form. */
+ * supersteps ship their changed labels in the same form.
+ * [[BlockCodec]] is its one wire format. */
 private[wcc] final class Moves(val src: Int, val ids: Array[Long],
-    val labels: Array[Long], val wcc: Double, val moved: Long) extends Serializable
+    val labels: Array[Long], val wcc: Double, val moved: Long) extends BlockMessage
 
 /** Stage B -> C message: same-community neighbor arrays, one per
- * vertex with a same-community neighbor in the target partition. */
+ * vertex with a same-community neighbor in the target partition.
+ * [[BlockCodec]] is its one wire format. */
 private[wcc] final class SameSets(val ids: Array[Long],
-    val sets: Array[Array[Long]]) extends Serializable
+    val sets: Array[Array[Long]]) extends BlockMessage
 
 /** Build-time edge slots bound for one partition: (self, neighbor,
  * neighbor label), plus the neighbor's t and vt when the block is
- * built for the seeding (null otherwise). */
+ * built for the seeding (null otherwise). Slots built from bare pairs
+ * carry no labels either (null). [[BlockCodec]] is its one wire
+ * format. */
 private[wcc] final class EdgeSlots(val self: Array[Long], val nbr: Array[Long],
     val nbrLabel: Array[Long], val nbrT: Array[Int], val nbrVt: Array[Int])
-    extends Serializable
+    extends BlockMessage
+
+/**
+ * The wire format of the block exchanges: their `Int` target-partition
+ * keys and their [[BlockMessage]]s. A record is a tag byte, then its
+ * fields: an int or long as a zigzag varint, a double as its 8 raw
+ * bytes, an array as a varint of its length + 1 (0 for null) followed
+ * by its elements. No class names and no reflection; the codec holds
+ * no state, so a task builds nothing but its streams, each with one
+ * 4 KiB buffer.
+ */
+private[wcc] object BlockCodec extends Serializer with Serializable {
+  private final val TagInt = 0
+  private final val TagEdgeSlots = 1
+  private final val TagMoves = 2
+  private final val TagSameSets = 3
+  private final val BufferSize = 4096
+
+  override def newInstance(): SerializerInstance = Instance
+
+  private object Instance extends SerializerInstance {
+    override def serialize[T: ClassTag](t: T): ByteBuffer = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      serializeStream(bytes).writeObject(t).close()
+      ByteBuffer.wrap(bytes.toByteArray)
+    }
+
+    override def deserialize[T: ClassTag](bytes: ByteBuffer): T = {
+      val a = new Array[Byte](bytes.remaining)
+      bytes.duplicate().get(a)
+      deserializeStream(new java.io.ByteArrayInputStream(a)).readObject[T]()
+    }
+
+    override def deserialize[T: ClassTag](bytes: ByteBuffer, loader: ClassLoader): T =
+      deserialize[T](bytes)
+
+    override def serializeStream(s: OutputStream): SerializationStream = new Writer(s)
+
+    override def deserializeStream(s: InputStream): DeserializationStream = new Reader(s)
+  }
+
+  private final class Writer(out: OutputStream) extends SerializationStream {
+    private val buf = new Array[Byte](BufferSize)
+    private var pos = 0
+
+    private def byte(b: Int): Unit = {
+      if (pos == buf.length) drain()
+      buf(pos) = b.toByte; pos += 1
+    }
+
+    private def drain(): Unit = { out.write(buf, 0, pos); pos = 0 }
+
+    private def varint(v: Long): Unit = {
+      var x = v
+      while ((x & ~0x7FL) != 0) { byte((x & 0x7F).toInt | 0x80); x >>>= 7 }
+      byte(x.toInt)
+    }
+
+    private def int(v: Int): Unit = varint(Integer.toUnsignedLong((v << 1) ^ (v >> 31)))
+    private def long(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+
+    private def double(v: Double): Unit = {
+      val b = java.lang.Double.doubleToRawLongBits(v)
+      var k = 56
+      while (k >= 0) { byte((b >>> k).toInt); k -= 8 }
+    }
+
+    private def longs(a: Array[Long]): Unit =
+      if (a == null) varint(0) else {
+        varint(a.length + 1L)
+        var k = 0
+        while (k < a.length) { long(a(k)); k += 1 }
+      }
+
+    private def ints(a: Array[Int]): Unit =
+      if (a == null) varint(0) else {
+        varint(a.length + 1L)
+        var k = 0
+        while (k < a.length) { int(a(k)); k += 1 }
+      }
+
+    override def writeObject[T: ClassTag](t: T): SerializationStream = {
+      t match {
+        case k: java.lang.Integer => byte(TagInt); int(k)
+        case s: EdgeSlots =>
+          byte(TagEdgeSlots)
+          longs(s.self); longs(s.nbr); longs(s.nbrLabel); ints(s.nbrT); ints(s.nbrVt)
+        case m: Moves =>
+          byte(TagMoves)
+          int(m.src); longs(m.ids); longs(m.labels); double(m.wcc); long(m.moved)
+        case s: SameSets =>
+          byte(TagSameSets)
+          longs(s.ids); varint(s.sets.length.toLong); s.sets.foreach(longs)
+        case other => throw new IllegalArgumentException("BlockCodec cannot write " +
+          (if (other == null) "null" else s"a ${other.getClass.getName}"))
+      }
+      this
+    }
+
+    override def flush(): Unit = { drain(); out.flush() }
+
+    override def close(): Unit = { drain(); out.close() }
+  }
+
+  private final class Reader(in: InputStream) extends DeserializationStream {
+    private val buf = new Array[Byte](BufferSize)
+    private var pos = 0
+    private var lim = 0
+
+    /** false at the end of the input */
+    private def fill(): Boolean = {
+      pos = 0; lim = math.max(in.read(buf), 0)
+      lim > 0
+    }
+
+    private def byte(): Int = {
+      if (pos == lim && !fill()) throw new StreamCorruptedException("block message truncated")
+      val b = buf(pos); pos += 1
+      b & 0xFF
+    }
+
+    private def varint(): Long = {
+      var x = 0L; var shift = 0; var b = 0x80
+      while ((b & 0x80) != 0) {
+        if (shift > 63) throw new StreamCorruptedException("block message varint too long")
+        b = byte(); x |= (b & 0x7FL) << shift; shift += 7
+      }
+      x
+    }
+
+    private def int(): Int = { val z = varint().toInt; (z >>> 1) ^ -(z & 1) }
+    private def long(): Long = { val z = varint(); (z >>> 1) ^ -(z & 1) }
+
+    private def double(): Double = {
+      var b = 0L; var k = 0
+      while (k < 8) { b = (b << 8) | byte(); k += 1 }
+      java.lang.Double.longBitsToDouble(b)
+    }
+
+    private def longs(): Array[Long] = {
+      val n = varint().toInt - 1
+      if (n < 0) null else {
+        val a = new Array[Long](n)
+        var k = 0
+        while (k < n) { a(k) = long(); k += 1 }
+        a
+      }
+    }
+
+    private def ints(): Array[Int] = {
+      val n = varint().toInt - 1
+      if (n < 0) null else {
+        val a = new Array[Int](n)
+        var k = 0
+        while (k < n) { a(k) = int(); k += 1 }
+        a
+      }
+    }
+
+    /** The next record; EOFException at the end of the input, which
+     * ends [[asKeyValueIterator]]. */
+    override def readObject[T: ClassTag](): T = {
+      if (pos == lim && !fill()) throw new EOFException
+      (byte() match {
+        case TagInt => Int.box(int())
+        case TagEdgeSlots => new EdgeSlots(longs(), longs(), longs(), ints(), ints())
+        case TagMoves => new Moves(int(), longs(), longs(), double(), long())
+        case TagSameSets =>
+          val ids = longs()
+          new SameSets(ids, Array.fill(varint().toInt)(longs()))
+        case tag => throw new StreamCorruptedException(s"unknown block message tag $tag")
+      }).asInstanceOf[T]
+    }
+
+    override def close(): Unit = in.close()
+  }
+}
 
 /** One partition's job result: its community-stat partial (per
  * community: members, summed same-community degree, summed external
@@ -170,13 +360,13 @@ final class RefineState private[wcc] (
     val sc = blocks.sparkContext
     val bStats = sc.broadcast(stats)
     val p = part
-    val moves = blocks.mapPartitions { it =>
+    val moves = exchange(blocks.mapPartitions { it =>
       val (pid, b) = it.next()
       val s = bStats.value
       val wcc = if (score) wccSum(b, s) else 0.0
       sendMoves(pid, b.adj, b.label, decide(b, s, globalCC, vertexCount), wcc,
         p.numPartitions)
-    }.partitionBy(p)
+    }, p)
     val moved = blocks.zipPartitions(moves, preservesPartitioning = true)(applyMoves)
     val next = if (countTriangles) withTriangles(moved, p) else moved
     next.persist(StorageLevel.MEMORY_AND_DISK)
@@ -275,6 +465,12 @@ private[graft] object RefineState {
           ownDegrees(adj, label, ghostLabel), null, null, 0.0, 0L)))
     }
 
+  /** `msgs` delivered to their target partitions under `part`, on
+   * [[BlockCodec]]: the one exchange of every block message. */
+  private[wcc] def exchange[M <: BlockMessage : ClassTag](msgs: RDD[(Int, M)],
+      part: HashPartitioner): RDD[(Int, M)] =
+    new ShuffledRDD[Int, M, M](msgs, part).setSerializer(BlockCodec)
+
   /** `vertices` under `part`, without a shuffle when already there */
   private[wcc] def underPart(vertices: RDD[(VertexId, VertexData)],
       part: HashPartitioner): RDD[(VertexId, VertexData)] =
@@ -285,7 +481,7 @@ private[graft] object RefineState {
    * id and label — and, with `ranks`, its t and vt. */
   private[wcc] def edgeSlots(edges: RDD[(VertexData, VertexData)], part: HashPartitioner,
       ranks: Boolean): RDD[(Int, EdgeSlots)] =
-    edges.mapPartitions { it =>
+    exchange(edges.mapPartitions { it =>
       val n = part.numPartitions
       val self = new Array[ArrayBuilder.ofLong](n)
       val nbr = new Array[ArrayBuilder.ofLong](n)
@@ -306,13 +502,13 @@ private[graft] object RefineState {
       Iterator.range(0, n).filter(self(_) != null).map(q =>
         (q, new EdgeSlots(self(q).result(), nbr(q).result(), lab(q).result(),
           if (ranks) nt(q).result() else null, if (ranks) nvt(q).result() else null)))
-    }.partitionBy(part)
+    }, part)
 
   /** Each pair (s, d) as the slot (s, d) at s's partition and (d, s)
    * at d's, in the [[EdgeSlots]] form without labels. */
   private[wcc] def pairSlots(pairs: RDD[(Long, Long)], part: HashPartitioner)
       : RDD[(Int, EdgeSlots)] =
-    pairs.mapPartitions { it =>
+    exchange(pairs.mapPartitions { it =>
       val self = new Array[ArrayBuilder.ofLong](part.numPartitions)
       val nbr = new Array[ArrayBuilder.ofLong](part.numPartitions)
       def add(u: Long, v: Long): Unit = {
@@ -323,7 +519,7 @@ private[graft] object RefineState {
       it.foreach { case (s, d) => add(s, d); add(d, s) }
       Iterator.range(0, part.numPartitions).filter(self(_) != null).map(q =>
         (q, new EdgeSlots(self(q).result(), nbr(q).result(), null, null, null)))
-    }.partitionBy(part)
+    }, part)
 
   /** One partition's adjacency, own labels and ghost labels from its
    * vertices and edge slots; with `ranks` (the slots then carry the
@@ -577,7 +773,7 @@ private[graft] object RefineState {
    * edges' triangle supports ([[TriangleStats]]). */
   private[wcc] def sameCommonCounts[T: ClassTag](blocks: RDD[(Int, VertexBlock)],
       part: HashPartitioner)(f: (VertexBlock, Array[Int]) => T): RDD[(Int, T)] = {
-    val same = blocks.mapPartitions { it =>
+    val same = exchange(blocks.mapPartitions { it =>
       val (pid, b) = it.next()
       val adj = b.adj
       val ids = new Array[ArrayBuilder.ofLong](part.numPartitions)
@@ -606,7 +802,7 @@ private[graft] object RefineState {
       }
       Iterator.range(0, part.numPartitions).filter(q => q != pid && ids(q) != null)
         .map(q => (q, new SameSets(ids(q).result(), sets(q).result())))
-    }.partitionBy(part)
+    }, part)
     blocks.zipPartitions(same, preservesPartitioning = true) { (bIt, sIt) =>
       val (pid, b) = bIt.next()
       val adj = b.adj

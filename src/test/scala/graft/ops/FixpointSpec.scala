@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.{JobProbe, SparkSpec}
-import graft.graph.{EdgeOps, GraphAlgs}
+import graft.graph.{EdgeOps, Fixpoint, GraphAlgs}
 
 /** The shared fixpoint scaffold: Spark jobs per round of the loops
  * built on it, measured as the job-count difference between a run
@@ -48,6 +48,28 @@ class FixpointSpec extends SparkSpec {
     assert(jobsPerRound(2) { r =>
       GraphAlgs.hitsDetRDD(edges, rounds = r)._3.close()
     } === 2)
+  }
+
+  test("det eigencentrality and HITS keep only the last round's raw sums cached") {
+    val sc = spark.sparkContext
+    def heldBy(run: => Fixpoint.CacheScope): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val scope = run
+      val held = (sc.getPersistentRDDs.keySet -- before).size
+      scope.close()
+      held
+    }
+    val adj = GraphAlgs.adjacencyArrays(path).persist()
+    adj.count()
+    // after round 3: round 3's raw sums, under the returned view
+    assert(heldBy {
+      val (x, scope) = GraphAlgs.eigenCentralityDetRDD(adj, rounds = 3)
+      x.count()
+      scope
+    } === 1)
+    adj.unpersist(blocking = false)
+    // after round 3: the two adjacencies and round 3's two raw sums
+    assert(heldBy(GraphAlgs.hitsDetRDD(path.as[(Long, Long)].rdd, rounds = 3)._3) === 4)
   }
 
   test("k-core runs one job per round") {

@@ -1,6 +1,8 @@
 package graft.wcc
 
 import graft.{JobProbe, SparkSpec}
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
@@ -19,7 +21,11 @@ import org.scalatest.time.SpanSugar._
  * evaluation of one generation ([[CommunityOps.computeCommunityStats]]
  * plus [[CommunityOps.computeGlobalWCC]]) the probe must count more
  * than one job and more than three stages, proving it sees the
- * per-generation fan-out this state replaced. */
+ * per-generation fan-out this state replaced.
+ *
+ * Every block exchange of those loops runs on [[BlockCodec]]: a
+ * message shuffle that falls back to the session serializer fails
+ * here. */
 class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   private implicit val signaler: Signaler = ThreadSignaler
   import GraphFixtures._
@@ -50,6 +56,67 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     assert(ref.jobs > 1 && ref.stages > 3, s"calibration failed: the probe " +
       s"counted ${ref.jobs} job(s) / ${ref.stages} stage(s) on the GraphX " +
       "reference evaluation — it cannot see the fan-out it guards")
+  }
+
+  private val messageClasses =
+    Seq(classOf[EdgeSlots], classOf[Moves], classOf[SameSets]).map(_.getName)
+
+  /** the shuffles in `rdd`'s lineage that carry block messages, with
+   * the class of their values (`valueClassName` is Spark-private, so
+   * it is read reflectively) */
+  private def blockShuffles(rdd: RDD[_]): Seq[(String, ShuffleDependency[_, _, _])] = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Seq[(String, ShuffleDependency[_, _, _])] =
+      if (!seen.add(r.id)) Nil
+      else r.dependencies.flatMap { d =>
+        val here = d match {
+          case s: ShuffleDependency[_, _, _] =>
+            val v = s.getClass.getMethod("valueClassName").invoke(s).asInstanceOf[String]
+            if (messageClasses.contains(v)) Seq((v, s)) else Nil
+          case _ => Nil
+        }
+        here ++ walk(d.rdd)
+      }
+    walk(rdd)
+  }
+
+  /** `rdd`'s lineage holds a shuffle of each `expected` message class,
+   * and every block-message shuffle in it runs on [[BlockCodec]] */
+  private def assertOnCodec(what: String, rdd: RDD[_], expected: Seq[Class[_]]): Unit = {
+    val found = blockShuffles(rdd)
+    val missing = expected.map(_.getName).toSet -- found.map(_._1)
+    assert(missing.isEmpty, s"$what: no ${missing.mkString(", ")} shuffle in its lineage")
+    found.foreach { case (v, s) =>
+      assert(s.serializer eq BlockCodec,
+        s"$what: a $v shuffle runs on ${s.serializer.getClass.getName}, not BlockCodec")
+    }
+  }
+
+  test("every block exchange runs on the block codec") {
+    failAfter(180.seconds) {
+      val (init, n) = seeded()
+      val (seed, _, _) = DistributedWCC.seedEvaluation(init, n)
+      val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
+      // a batch step, back to the seed's build
+      val gen = seed.step(globalCC, n, score = true, countTriangles = true, checkpoint = false)
+      assertOnCodec("a batch step", gen.blocks,
+        Seq(classOf[EdgeSlots], classOf[Moves], classOf[SameSets]))
+      // a seeding superstep, back to the seeding build
+      val tri = TriangleStats.run(graphOf(spark, edges))
+      val pruned = tri.pruned
+      val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
+      val built = InitialPartition.build(pruned.vertices,
+        pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part)
+      val next = InitialPartition.superstep(built, part, decide = true)
+      assertOnCodec("a seeding superstep", next.blocks, Seq(classOf[EdgeSlots], classOf[Moves]))
+      // the triangle support kernel
+      assertOnCodec("the triangle kernel", TriangleStats.edgeSupport(graphOf(spark, edges)),
+        Seq(classOf[EdgeSlots], classOf[SameSets]))
+      seed.release(); gen.release(); built.release(); next.release()
+      release(pruned)
+      tri.fullStats.unpersist(blocking = false)
+      release(init)
+    }
   }
 
   test("a batch generation is exactly 1 job and at most 3 stages") {
