@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, Fixpoint}
 import graft.wcc._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -118,13 +118,13 @@ object ScaleProbe {
         // one production refinement generation: the seed blocks, then
         // the one-job step that scores them and builds the next
         val globalCC = IncrementalWCC.detGlobalCC(init.vertices, vertexCount)
-        val seed = RefineState.seed(init, countTriangles = true)
-        val next = seed.step(globalCC, vertexCount, score = true,
-          countTriangles = true, checkpoint = false)
-        println(s"[scale-probe] communities=${seed.stats.size} " +
-          s"wcc=${next.wccPrev / vertexCount} moves=${next.moved}")
-        seed.release()
-        next.release()
+        Fixpoint.using { scope =>
+          val seed = RefineState.seed(init, countTriangles = true, scope)
+          val next = seed.step(globalCC, vertexCount, score = true,
+            countTriangles = true, RefineState.in(scope))
+          println(s"[scale-probe] communities=${seed.stats.size} " +
+            s"wcc=${next.wccPrev / vertexCount} moves=${next.moved}")
+        }
       }
     }
 

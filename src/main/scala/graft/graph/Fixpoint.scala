@@ -1,21 +1,29 @@
 package graft.graph
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.graphx.Graph
+import org.apache.spark.graphx.impl.{EdgeRDDImpl, VertexRDDImpl}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
 /**
  * The iteration lifecycle shared by the fixpoint loops in
- * [[GraphAlgs]]: who owns a cached RDD, when a generation is
+ * [[GraphAlgs]] and the WCC pipelines (`graft.wcc`): who owns a cached RDD, when a generation is
  * released, when lineage is cut, and what happens when a loop runs
  * out of rounds. The round bodies stay with the algorithms, and so
  * does each round's one action (a count, a max-fold, or an
  * accumulator read inside the round's own job).
  *
- * Ownership: every RDD a computation caches goes through a
- * [[Fixpoint.CacheScope]], which unpersists whatever it still holds
- * on `close()`. [[Fixpoint.scoped]] and [[Fixpoint.using]] also
- * close it when the computation throws, so a failed job or a
- * tripped round guard leaves nothing cached behind it.
+ * Ownership: every RDD, GraphX graph and broadcast a computation
+ * caches goes through a [[Fixpoint.CacheScope]], which unpersists
+ * whatever it still holds on `close()`. [[Fixpoint.scoped]],
+ * [[Fixpoint.returning]] and [[Fixpoint.using]] also close it when the
+ * computation throws, so a failed job or a tripped round guard leaves
+ * nothing cached behind it. Only what a computation returns leaves
+ * its scope; the receiver owns it from there.
  *
  * Release rule: an RDD cached through round n's `Loop.Round` is
  * released right after the body of round n + 1 + lag returns,
@@ -36,31 +44,71 @@ object Fixpoint {
   /** Rounds between reliable checkpoints of a marked loop state. */
   val CheckpointEvery = 16
 
-  /** The RDDs one computation has cached, released together. */
+  /** The cached data one computation owns, released together. */
   final class CacheScope private[Fixpoint] () extends AutoCloseable {
-    private val held = new java.util.LinkedHashSet[RDD[_]]()
+    // keyed by the id of the RDD Spark registers as persistent
+    private val held = new java.util.LinkedHashMap[Int, RDD[_]]()
+    private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
 
     /** Persist `rdd` at `level` and hold it until it is released or
      * the scope closes. */
     def cache[T](rdd: RDD[T], level: StorageLevel = StorageLevel.MEMORY_ONLY): RDD[T] = {
       rdd.persist(level)
-      held.add(rdd)
+      adopt(rdd)
       rdd
     }
 
-    /** Unpersist RDDs this scope still holds; others are ignored. */
-    def release(rdds: RDD[_]*): Unit =
-      rdds.foreach(r => if (held.remove(r)) r.unpersist(blocking = false))
+    /** Cache `g` and hold its vertices and edges. A GraphX operator
+     * persists nothing else: each of its self-persists is the
+     * vertices or edges of its receiver or of the graph it returns. */
+    def own[VD, ED](g: Graph[VD, ED]): Graph[VD, ED] = {
+      g.cache()
+      adopt(g.vertices, g.edges)
+      g
+    }
+
+    /** Hold RDDs persisted elsewhere, such as what a nested call
+     * returned: releasing them is now this scope's job. */
+    def adopt(rdds: RDD[_]*): Unit =
+      rdds.map(registered).foreach(r => held.put(r.id, r))
+
+    /** A broadcast of `value`, unpersisted when the scope closes. */
+    def broadcast[T: ClassTag](sc: SparkContext, value: T): Broadcast[T] = {
+      val b = sc.broadcast(value)
+      broadcasts += b
+      b
+    }
+
+    /** Unpersist RDDs this scope still holds; others, null among
+     * them, are ignored. */
+    def release(rdds: RDD[_]*): Unit = rdds.filter(_ != null).foreach { r =>
+      Option(held.remove(registered(r).id)).foreach(_.unpersist(blocking = false))
+    }
+
+    /** Stop holding `rdds` without unpersisting them: they leave the
+     * scope with a result, and its receiver owns them. */
+    def disown(rdds: RDD[_]*): Unit = rdds.foreach(r => held.remove(registered(r).id))
 
     /** Unpersist everything the scope still holds. */
     def close(): Unit = {
-      val all = held.toArray(Array.empty[RDD[_]])
+      val all = held.values.toArray(Array.empty[RDD[_]])
       held.clear()
       all.foreach(_.unpersist(blocking = false))
+      broadcasts.foreach(_.unpersist(blocking = false))
+      broadcasts.clear()
     }
 
     /** A round driver whose generations this scope owns. */
     def loop(maxRounds: Int): Loop = new Loop(this, maxRounds)
+  }
+
+  /** The RDD Spark registers when `rdd` persists: GraphX's vertex and
+   * edge RDDs persist their partitions RDD, not themselves, so the
+   * scope compares these ids. */
+  private def registered(rdd: RDD[_]): RDD[_] = rdd match {
+    case v: VertexRDDImpl[_] => v.partitionsRDD
+    case e: EdgeRDDImpl[_, _] => e.partitionsRDD
+    case _ => rdd
   }
 
   /** Run `body` in a new scope and hand the scope back with its
@@ -79,11 +127,25 @@ object Fixpoint {
   }
 
   /** Run `body` in a new scope that closes when `body` returns or
-   * throws. The result must not read the scope's caches lazily. */
-  def using[T](body: CacheScope => T): T = {
-    val (out, scope) = scoped(body)
+   * throws, except that the RDDs `out` names of the result leave it
+   * with the result, for the caller to own. The rest of the result
+   * must not read the scope's caches lazily. */
+  def returning[T](body: CacheScope => T)(out: T => Seq[RDD[_]]): T = {
+    val (res, scope) = scoped(body)
+    scope.disown(out(res): _*)
     scope.close()
-    out
+    res
+  }
+
+  /** [[returning]] with nothing leaving the scope. */
+  def using[T](body: CacheScope => T): T = returning(body)(_ => Nil)
+
+  /** Mark `rdd` for a reliable checkpoint if `number` is a cadence
+   * round and a checkpoint dir is set. Call before its first action. */
+  def checkpoint[T](rdd: RDD[T], number: Int): RDD[T] = {
+    if (number % CheckpointEvery == 0 && rdd.sparkContext.getCheckpointDir.isDefined)
+      rdd.checkpoint()
+    rdd
   }
 
   /** Drives the rounds of one loop: the round counter, the
@@ -127,11 +189,7 @@ object Fixpoint {
       /** Mark `rdd` for a reliable checkpoint if this is a cadence
        * round and a checkpoint dir is set. Call before the round's
        * action. */
-      def checkpoint[T](rdd: RDD[T]): RDD[T] = {
-        if (number % CheckpointEvery == 0 && rdd.sparkContext.getCheckpointDir.isDefined)
-          rdd.checkpoint()
-        rdd
-      }
+      def checkpoint[T](rdd: RDD[T]): RDD[T] = Fixpoint.checkpoint(rdd, number)
     }
   }
 }

@@ -293,8 +293,10 @@ object StreamOps {
    * stream. The caller provides the initial state from
    * `IncrementalWCC.prepare`; `releaseInitial = false` leaves that
    * state's graph cached (for callers folding from a shared,
-   * session-memoized bulk state) — intermediate states produced by
-   * the fold itself are always released batch-over-batch. */
+   * session-memoized bulk state). Each fold releases the state it
+   * folded from (the initial one only with `releaseInitial`) and all
+   * else it cached besides the new state, so of the states the fold
+   * makes only the final one stays cached. */
   def incrementalWcc(edges: DataFrame, initial: IncrementalWCC.State,
       releaseInitial: Boolean = true): IncrementalWCC.State = {
     @volatile var state = initial

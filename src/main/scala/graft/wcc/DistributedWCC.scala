@@ -1,5 +1,6 @@
 package graft.wcc
 
+import graft.graph.Fixpoint
 import org.apache.spark.graphx._
 
 /**
@@ -14,8 +15,8 @@ import org.apache.spark.graphx._
  * SURVEY.md §4/§7: phase outputs are cached (the reference recomputes
  * the whole DAG on every action), intermediate debug CSV sinks become
  * caller-visible DataFrames/RDDs instead of hard-coded paths, and
- * the refinement's lineage is truncated by a checkpoint every 8
- * generations.
+ * the refinement's lineage is truncated by a checkpoint every
+ * [[graft.graph.Fixpoint.CheckpointEvery]] generations.
  */
 object DistributedWCC {
 
@@ -42,7 +43,12 @@ object DistributedWCC {
       /** refined partition on the pruned core (before the graft-back
        * onto the original vertex set) — callers that only need
        * `graph` can release these cached phase surfaces */
-      refinedCore: Graph[VertexData, Int])
+      refinedCore: Graph[VertexData, Int]) {
+    /** the RDDs these surfaces hold cached */
+    private[wcc] def cached: Seq[org.apache.spark.rdd.RDD[_]] =
+      Seq(graph, initialPartition, prunedCore, refinedCore).flatMap(WccUtil.cached) :+
+        triangleStats
+  }
 
   /** Phase wall-clock logging, mirroring the reference's
    * instrumentation points (`DistributedWCC.scala:43,59,281,295-302`,
@@ -54,77 +60,70 @@ object DistributedWCC {
     r
   }
 
+  /** The partition of `graph`. Only the [[Output]] surfaces stay
+   * cached, and a precomputed input is the caller's, except the seed
+   * state, which the refinement releases. */
   def run(graph: Graph[Int, Int], maxRetries: Int = DefaultMaxRetries,
       maxPregelIterations: Int = 50,
       precomputedStats: Option[TriangleStats.Result] = None,
       precomputedInit: Option[Graph[VertexData, Int]] = None,
       precomputedSeedEval: Option[(RefineState, Map[Long, CommunityData],
-        Double)] = None): Output = {
+        Double)] = None): Output = Fixpoint.returning { scope =>
+    // released here if a phase before the refinement fails
+    precomputedSeedEval.foreach(s => scope.adopt(s._1.blocks))
     val vertexCount = graph.numVertices
-    // failure-path sweep (review r17): precomputed inputs predate the
-    // snapshot and survive; a failure in any phase below drops every
-    // cache this call registered (incl. GraphX self-persists)
-    val sweepBase = WccUtil.cacheSnapshot(graph.vertices.sparkContext)
-    try {
 
     // Phase: preprocessing (`DistributedWCC.scala:88-130`)
     // TriangleStats.run caches and materializes the pruned core
-    val tri = precomputedStats.getOrElse(timed("preprocess")(TriangleStats.run(graph)))
+    val tri = precomputedStats.getOrElse {
+      val t = timed("preprocess")(TriangleStats.run(graph))
+      scope.adopt(t.cached: _*)
+      t
+    }
+    Failpoint("after preprocess")
     val pruned = tri.pruned
 
     // Phase: community initialization (`:138-152`)
-    val initGraph = precomputedInit.getOrElse(timed("initial-partition") {
-      InitialPartition.run(pruned, maxPregelIterations)
-    })
+    val initGraph = precomputedInit.getOrElse {
+      val i = timed("initial-partition")(InitialPartition.run(pruned, maxPregelIterations))
+      scope.adopt(WccUtil.cached(i): _*)
+      i
+    }
+    Failpoint("after initial-partition")
 
     // Phase: WCC iteration (`:260-329`)
+    precomputedSeedEval.foreach(s => scope.disown(s._1.blocks))
     val (best, bestCs, bestWcc, globalCC) = timed("refinement") {
       refinePartition(initGraph, vertexCount, maxRetries, precomputedSeedEval)
     }
+    if (best ne initGraph) scope.adopt(WccUtil.cached(best): _*)
 
     // Graft results onto the original graph: every input vertex is in
     // the output; pruned ones as singletons (`:64-77`).
-    val resultGraph = graph.outerJoinVertices(best.vertices) { (id, _, vdOpt) =>
+    val resultGraph = scope.own(graph.outerJoinVertices(best.vertices) { (id, _, vdOpt) =>
       vdOpt.getOrElse(VertexData(id, 0, 0, id))
-    }
+    })
 
     Output(resultGraph, bestCs, bestWcc, globalCC, tri.fullStats, initGraph,
       pruned, best)
-    } catch {
-      case t: Throwable =>
-        // a PRECOMPUTED seed state predates the snapshot, so the
-        // sweep cannot reach it — but the documented contract says
-        // refinement owns its release and callers keep only the
-        // scalar score, so a failure BEFORE refinement consumed it
-        // must release it here (review r17)
-        WccUtil.quietly(precomputedSeedEval.foreach(_._1.release()))
-        WccUtil.quietly(
-          WccUtil.sweepNewCaches(graph.vertices.sparkContext, sweepBase))
-        throw t
-    }
-  }
-
-  /** TEST-ONLY failure seam: when >= 0, the refinement loop throws
-   * at the matching point — 0 = right after the iteration-0 seed
-   * evaluation, k >= 1 = the top of generation k — letting the leak
-   * specs prove the thrown-through release coverage on every stage.
-   * Never set outside specs. */
-  @volatile private[wcc] var testFailAtIter: Int = -1
+  }(_.cached)
 
   /** Iteration-0 evaluation of a seed partition — THE evaluation the
    * refinement loop starts from: the seed [[RefineState]] (cached
-   * vertex blocks with triangle counts; the caller, or the refinement
-   * it is handed to, owns the release), its community stats and its
-   * global WCC. Two Spark jobs: the block build, whose result is the
-   * stats, and the WCC_V fold under them. Exposed so a caller
-   * verifying the seed partition (the seeding value check) can share
-   * it with [[run]] via `precomputedSeedEval` instead of evaluating
-   * twice. */
+   * vertex blocks with triangle counts, which the caller owns — or the
+   * refinement it is handed to), its community stats and its global
+   * WCC. Two Spark jobs: the block build, whose result is the stats,
+   * and the WCC_V fold under them. Exposed so a caller verifying the
+   * seed partition (the seeding value check) can share it with [[run]]
+   * via `precomputedSeedEval` instead of evaluating twice. */
   private[graft] def seedEvaluation(initGraph: Graph[VertexData, Int],
-      vertexCount: Long): (RefineState, Map[Long, CommunityData], Double) = {
-    val s = RefineState.seed(initGraph, countTriangles = true)
-    try (s, s.stats, s.wcc(vertexCount))
-    catch { case t: Throwable => s.release(); throw t }
+      vertexCount: Long): (RefineState, Map[Long, CommunityData], Double) =
+    Fixpoint.returning(seedEvaluation(initGraph, vertexCount, _))(s => Seq(s._1.blocks))
+
+  private def seedEvaluation(initGraph: Graph[VertexData, Int], vertexCount: Long,
+      scope: Fixpoint.CacheScope): (RefineState, Map[Long, CommunityData], Double) = {
+    val s = RefineState.seed(initGraph, countTriangles = true, scope)
+    (s, s.stats, s.wcc(vertexCount))
   }
 
   /** Refinement loop (G5, reference `DistributedWCC.scala:260-329`):
@@ -139,55 +138,46 @@ object DistributedWCC {
    * the sequential one: k+1 is moved from k under k's stats, exactly
    * as after accepting k. The WCC of a generation is its per-partition
    * WCC_V sums folded in partition order, so repeated runs agree to
-   * the bit. Generation 8, 16, ... is checkpointed when the context
-   * has a checkpoint directory. Only the best labels go back to a
-   * `Graph`; `globalCC` is [[IncrementalWCC.detGlobalCC]], shared with
-   * the incremental mode. */
+   * the bit. Every [[Fixpoint.CheckpointEvery]]-th generation is
+   * checkpointed when the context has a checkpoint directory. Only the
+   * best labels go back to a `Graph`, the one cached surface the call
+   * returns; `globalCC` is [[IncrementalWCC.detGlobalCC]], shared with
+   * the incremental mode. The seed state, `seedEval` included, is
+   * released. */
   private[wcc] def refinePartition(initGraph: Graph[VertexData, Int], vertexCount: Long,
       maxRetries: Int,
       seedEval: Option[(RefineState, Map[Long, CommunityData], Double)] = None)
-      : (Graph[VertexData, Int], Map[Long, CommunityData], Double, Double) = {
-    val sc = initGraph.vertices.sparkContext
-    // entry snapshot for the failure-path sweep: a precomputed seed
-    // state and the init graph predate it, so the sweep can never
-    // touch caller-owned caches
-    val sweepBase = WccUtil.cacheSnapshot(sc)
-    // every generation this call holds; released by name on every exit
-    var live = seedEval.map(_._1).toList
-    def hold(s: RefineState): RefineState = { live ::= s; s }
-    def drop(s: RefineState): Unit = { s.release(); live = live.filterNot(_ eq s) }
-    def checkpointGen(no: Int) = no % 8 == 0 && sc.getCheckpointDir.isDefined
-    try {
+      : (Graph[VertexData, Int], Map[Long, CommunityData], Double, Double) =
+    Fixpoint.returning { scope =>
+      seedEval.foreach(s => scope.adopt(s._1.blocks))
       // globalCC = (sum of cc over PRUNED vertices) / ORIGINAL count
       // (reference `:261-262` — the sum runs on the optimized graph)
       val globalCC = IncrementalWCC.detGlobalCC(initGraph.vertices, vertexCount)
       // The seed evaluation may arrive precomputed (GraphQueries
       // memoizes it so the seeding value check shares it). It MUST be
       // [[seedEvaluation]] of the same seed graph, so the trajectory is
-      // unchanged; this loop owns its release.
-      val (seed, seedCs, seedWcc) = seedEval.getOrElse {
-        val s = seedEvaluation(initGraph, vertexCount); hold(s._1); s
-      }
-      if (testFailAtIter == 0)
-        throw new RuntimeException("injected test failure after seed evaluation")
+      // unchanged.
+      val (seed, seedCs, seedWcc) =
+        seedEval.getOrElse(seedEvaluation(initGraph, vertexCount, scope))
+      Failpoint("after seed evaluation")
+      // generation `no`'s blocks, cached in the scope
+      def gen(no: Int): RefineState.Cache = b => Fixpoint.checkpoint(RefineState.in(scope)(b), no)
       var bestCs = seedCs
       var bestWcc = seedWcc
       var retriesLeft = maxRetries
       // `cur` is generation `no`, the one the next job scores
       var no = 1
-      var cur = hold(seed.step(globalCC, vertexCount, score = false,
-        countTriangles = true, checkpoint = checkpointGen(1)))
-      drop(seed)
+      var cur = seed.step(globalCC, vertexCount, score = false, countTriangles = true, gen(1))
+      scope.release(seed.blocks)
       System.err.println(s"[graft-wcc] gen 1 moves=${cur.moved}")
       // labels of the best generation; null while it is the seed
       var bestLabels: org.apache.spark.rdd.RDD[(VertexId, Long)] = null
       var done = false
       while (!done) {
-        if (no == testFailAtIter)
-          throw new RuntimeException(s"injected test failure at iter $no")
+        Failpoint(s"at iter $no")
         val t0 = System.currentTimeMillis()
-        val next = hold(cur.step(globalCC, vertexCount, score = true,
-          countTriangles = true, checkpoint = checkpointGen(no + 1)))
+        val next = cur.step(globalCC, vertexCount, score = true, countTriangles = true,
+          gen(no + 1))
         val newWcc = next.wccPrev / vertexCount
         retriesLeft -= 1
         System.err.println(s"[graft-wcc] refine iter $no: " +
@@ -198,7 +188,7 @@ object DistributedWCC {
           bestWcc = newWcc
           bestCs = cur.stats
           // `next` keeps the accepted labels as its previous labels
-          drop(cur)
+          scope.release(cur.blocks)
           cur = next
           no += 1
           bestLabels = cur.prevLabels
@@ -206,20 +196,10 @@ object DistributedWCC {
         } else done = true
       }
       val best = if (bestLabels == null) initGraph
-        else RefineState.toGraph(initGraph, bestLabels)
-      live.foreach(_.release())
-      live = Nil
+        else RefineState.toGraph(initGraph, bestLabels, scope)
       (best, bestCs, bestWcc, globalCC)
-    } catch {
-      case t: Throwable =>
-        WccUtil.quietly(live.foreach(_.release()))
-        // drop the GraphX-internal self-persists the names above
-        // cannot reach — everything registered since entry is this
-        // call's garbage on failure
-        WccUtil.quietly(WccUtil.sweepNewCaches(sc, sweepBase))
-        throw t
-    }
-  }
+    } { case (best, _, _, _) => WccUtil.cached(best) }
+
   /** F7 (reference `DistributedWCC.scala:368-405`): REMOVE iff
    * wccR - wccT > 1e-5 and wccR > 0; else TRANSFER to the best
    * candidate iff wccT > 0; else STAY. Candidates are the neighbor

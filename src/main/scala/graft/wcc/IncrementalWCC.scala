@@ -1,6 +1,6 @@
 package graft.wcc
 
-import graft.graph.SortedIntersect
+import graft.graph.{Fixpoint, SortedIntersect}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
@@ -45,21 +45,9 @@ object IncrementalWCC {
    * it None — [[performInitialPartition]] then takes the
    * from-scratch path. */
   final case class State(graph: Graph[VertexData, Int], stats: Map[Long, CommunityData],
-      bulkFlagged: Option[RDD[(Long, Long)]] = None)
-
-  /** TEST-ONLY failure seam: when set, [[run]] throws right after
-   * the named phase ("initial-partition" | "refine" | "graft")
-   * completes, so the leak spec can exercise the catch's release
-   * coverage for POST-merge cached generations (ADVICE r16). Never
-   * set outside specs; reads cost one volatile load per phase. */
-  @volatile private[wcc] var testFailAfter: Option[String] = None
-  private def failpoint(phase: String): Unit =
-    if (testFailAfter.contains(phase))
-      throw new RuntimeException(s"injected test failure after $phase")
-
-  private def release(g: Graph[_, _]): Unit = {
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
+      bulkFlagged: Option[RDD[(Long, Long)]] = None) {
+    /** the RDDs this state holds cached */
+    private[wcc] def cached: Seq[RDD[_]] = WccUtil.cached(graph) ++ bulkFlagged
   }
 
   /** The reference's graft-back join body (`DistributedWCC.scala:68-77`
@@ -98,50 +86,32 @@ object IncrementalWCC {
    * stats for batch callers, so the quirk is re-applied here where
    * the reference semantics need it. */
   def prepare(graph: Graph[Int, Int],
-      precomputedStats: Option[TriangleStats.Result] = None): State = {
-    // failure-path sweep (review r17, same contract as [[run]]):
-    // the input graph and any precomputed stats predate the snapshot
-    // and survive; everything this call registers is garbage on a
-    // thrown-through path
-    val sweepBase = WccUtil.cacheSnapshot(graph.vertices.sparkContext)
-    try {
-    val out = DistributedWCC.run(graph, precomputedStats = precomputedStats)
-    val stateGraph = out.graph.mapVertices((id, vd) =>
-      graftQuirk(id, Some(vd)))
-    stateGraph.cache()
-    stateGraph.vertices.count()
-    stateGraph.edges.count()
-    // harvest the batch-invariant flag set BEFORE releasing the
-    // pruned core it derives from: the core's edges are exactly the
-    // bulk edges with positive triangle support (epred attr > 0
-    // decides membership alone — attr > 0 implies both endpoint
-    // t > 0), i.e. the bulk half of every future batch's
-    // triangle-edge flagging (see [[State.bulkFlagged]]).
-    val bulkFlagged = out.prunedCore.edges
-      .map(e => (math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)))
-      .cache()
-    bulkFlagged.count()
-    // NOT released: out.graph shares its edge RDD with stateGraph
-    // (mapVertices preserves edges), and it was never cached here —
-    // only the phase surfaces below hold storage.
-    release(out.prunedCore)
-    release(out.initialPartition)
-    release(out.refinedCore)
-    out.triangleStats.unpersist(blocking = false)
-    release(graph)
-    State(stateGraph, out.communityStats, Some(bulkFlagged))
-    } catch {
-      case t: Throwable =>
-        WccUtil.quietly(
-          WccUtil.sweepNewCaches(graph.vertices.sparkContext, sweepBase))
-        throw t
-    }
-  }
+      precomputedStats: Option[TriangleStats.Result] = None): State =
+    Fixpoint.returning { scope =>
+      val out = DistributedWCC.run(graph, precomputedStats = precomputedStats)
+      scope.adopt(out.cached: _*)
+      val stateGraph = scope.own(out.graph.mapVertices((id, vd) =>
+        graftQuirk(id, Some(vd))))
+      stateGraph.vertices.count()
+      stateGraph.edges.count()
+      // harvest the batch-invariant flag set from the pruned core: the
+      // core's edges are exactly the bulk edges with positive triangle
+      // support (epred attr > 0 decides membership alone — attr > 0
+      // implies both endpoint t > 0), i.e. the bulk half of every
+      // future batch's triangle-edge flagging (see [[State.bulkFlagged]]).
+      val bulkFlagged = scope.cache(out.prunedCore.edges
+        .map(e => (math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId))))
+      bulkFlagged.count()
+      Failpoint("after prepare")
+      // the input is consumed: it goes with the bulk run's surfaces
+      scope.adopt(WccUtil.cached(graph): _*)
+      State(stateGraph, out.communityStats, Some(bulkFlagged))
+    }(_.cached)
 
   final case class MergeResult(
       fullGraph: Graph[VertexData, Int],
-      /** raw unioned graph fullGraph was derived from (released by
-       * `run` once the seed blocks are materialized) */
+      /** repartitioned union graph fullGraph was derived from (released
+       * by `run` once the seed blocks are materialized) */
       merged: Graph[VertexData, Int],
       newIds: Broadcast[Set[Long]],
       borderIds: Broadcast[Set[Long]],
@@ -165,8 +135,10 @@ object IncrementalWCC {
        * initial partition. */
       touchedNbrs: RDD[(Long, Array[Long])])
 
-  /** Merge phase (reference `IncrementalWCC.scala:79-112`). */
-  private[wcc] def merge(state: State, newEdges: RDD[Edge[Int]]): MergeResult = {
+  /** Merge phase (reference `IncrementalWCC.scala:79-112`). Everything
+   * it caches and broadcasts belongs to `scope`. */
+  private[wcc] def merge(state: State, newEdges: RDD[Edge[Int]],
+      scope: Fixpoint.CacheScope): MergeResult = {
     val sc = state.graph.vertices.sparkContext
     // batch vertex ids (micro-batch-sized, safe on the driver) and the
     // batch edge count, in one job
@@ -177,13 +149,13 @@ object IncrementalWCC {
       Iterator((ids.toArray, n))
     }.collect()
     val batchIds = perPart.iterator.flatMap(_._1).toSet
-    val bBatch = sc.broadcast(batchIds)
+    val bBatch = scope.broadcast(sc, batchIds)
     val borderIds = state.graph.vertices
       .filter { case (id, _) => bBatch.value.contains(id) }
       .map(_._1).collect().toSet
     val newIds = batchIds -- borderIds
-    val bBorder = sc.broadcast(borderIds)
-    val bNew = sc.broadcast(newIds)
+    val bBorder = scope.broadcast(sc, borderIds)
+    val bNew = scope.broadcast(sc, newIds)
 
     // graph union (`:94`); union of canonical edge sets stays
     // duplicate-free because batch edges are new by construction.
@@ -199,21 +171,20 @@ object IncrementalWCC {
     // the union keeps it and the merged graph's vertices stay where the
     // state's are: no vertex shuffle here, and the seeded labels graft
     // back onto the state without one
-    val fg: Graph[VertexData, Int] = Graph(
+    val union = scope.own(Graph(
       state.graph.vertices.union(
         sc.parallelize(newIds.toSeq).map(id => (id, VertexData(id, 0, 0, id)))
           .partitionBy(state.graph.vertices.partitioner.get)),
-      state.graph.edges.union(newEdges))
-      .partitionBy(PartitionStrategy.EdgePartition2D,
-        state.graph.edges.getNumPartitions)
-    fg.cache()
+      state.graph.edges.union(newEdges)))
+    val fg = scope.own(union.partitionBy(PartitionStrategy.EdgePartition2D,
+      state.graph.edges.getNumPartitions))
 
-    val nbrs = touchedNeighborhoods(fg, bBorder, bNew)
-    nbrs.cache()
-    val fullGraph = updateVertexData(fg, bBorder, bNew, nbrs)
-    fullGraph.cache()
-    val vertexCount = fullGraph.numVertices
-    // numVertices above materialized the cached vertices, so the
+    val nbrs = scope.cache(touchedNeighborhoods(fg, bBorder, bNew))
+    val (fullGraph, vertexCount) = updateVertexData(fg, bBorder, bNew, nbrs, scope)
+    // fg is materialized: nothing reads the union any more
+    scope.release(WccUtil.cached(union): _*)
+    Failpoint("in merge")
+    // the count above materialized the cached vertices, so the
     // concurrent fold only re-reads blocks — no racing computation.
     // Local properties reach a pool thread only when it is created, so
     // the fold sets the caller's job group and description itself.
@@ -223,7 +194,6 @@ object IncrementalWCC {
       try detGlobalCC(fullGraph.vertices, vertexCount)
       finally jobProps.foreach { case (k, _) => sc.setLocalProperty(k, null) }
     })
-    bBatch.unpersist(blocking = false)
     MergeResult(fullGraph, fg, bNew, bBorder, vertexCount, perPart.map(_._2).sum,
       globalCCF, nbrs)
   }
@@ -292,13 +262,17 @@ object IncrementalWCC {
    * only border/new vertices get (possibly partial) recounts, via
    * intersections of their post-merge neighborhoods restricted by the
    * reference's newEdge/borderEdge/newVt flag logic. `touchedNbrs`
-   * must be [[touchedNeighborhoods]] of this same graph. */
-  private[wcc] def updateVertexData(graph: Graph[VertexData, Int],
+   * must be [[touchedNeighborhoods]] of this same graph. Returns the
+   * updated graph, cached in `scope` with its vertices materialized,
+   * and their count. */
+  private def updateVertexData(graph: Graph[VertexData, Int],
       bBorder: Broadcast[Set[Long]], bNew: Broadcast[Set[Long]],
-      touchedNbrs: RDD[(Long, Array[Long])]): Graph[VertexData, Int] = {
+      touchedNbrs: RDD[(Long, Array[Long])],
+      scope: Fixpoint.CacheScope): (Graph[VertexData, Int], Long) = {
+    // outerJoinVertices caches a graph of another vertex type itself
     val ng: Graph[(VertexData, Array[Long]), Int] =
-      graph.outerJoinVertices(touchedNbrs)((_, vd, a) =>
-        (vd, a.getOrElse(Array.empty[Long])))
+      scope.own(graph.outerJoinVertices(touchedNbrs)((_, vd, a) =>
+        (vd, a.getOrElse(Array.empty[Long]))))
 
     // per-edge delta counters with the reference's flag logic
     // (`:132-160`): counter counts common neighbors w of a
@@ -331,7 +305,7 @@ object IncrementalWCC {
     // absolute counts; both get cId reset to self (VertexData
     // constructor default — reference quirk). Untouched vertices keep
     // their data.
-    graph.outerJoinVertices(stats) { (id, vd, sOpt) =>
+    val updated = scope.own(graph.outerJoinVertices(stats) { (id, vd, sOpt) =>
       sOpt match {
         case Some((c, ind)) if c != 0 || ind != 0 =>
           if (bBorder.value.contains(id))
@@ -340,7 +314,10 @@ object IncrementalWCC {
             VertexData(id, c / 2, ind, id)
         case _ => vd
       }
-    }
+    })
+    val n = updated.numVertices
+    scope.release(WccUtil.cached(ng): _*)
+    (updated, n)
   }
 
   /** Canonical (min, max) keys of every merged-graph edge belonging
@@ -390,12 +367,11 @@ object IncrementalWCC {
    * kernel ([[TriangleStats.edgeSupport]]) flags the edges from
    * scratch.
    *
-   * Returns the converged seeding as the fixed-5 loop's seed
-   * generation ([[InitialPartition.refineSeed]]): its ghost labels,
-   * same-community degrees and stats are exact. The caller owns the
-   * release. */
+   * Returns the converged seeding, cached in `scope`, as the fixed-5
+   * loop's seed generation ([[InitialPartition.refineSeed]]): its ghost
+   * labels, same-community degrees and stats are exact. */
   private[wcc] def performInitialPartition(graph: Graph[VertexData, Int],
-      maxIterations: Int = 50,
+      scope: Fixpoint.CacheScope, maxIterations: Int = 50,
       precomputedKeep: Option[RDD[(Long, Long)]] = None): RefineState = {
     val keep = precomputedKeep.getOrElse(
       TriangleStats.edgeSupport(graph).filter(_._2 > 0).map(_._1))
@@ -403,7 +379,7 @@ object IncrementalWCC {
       graph.triplets.filter(t => t.srcAttr.t > 0 && t.dstAttr.t > 0)
         .map(t => (t.srcAttr, t.dstAttr)),
       Some(keep), new org.apache.spark.HashPartitioner(graph.vertices.getNumPartitions),
-      maxIterations)
+      maxIterations, scope)
   }
 
   /** Fixed-5 refinement (reference `IncrementalWCC.scala:332-393`):
@@ -412,7 +388,7 @@ object IncrementalWCC {
    * recomputed from the same graph each iteration).
    *
    * Runs on the [[RefineState]] blocks the seeding converged on
-   * (`seed`, which this call consumes): each iteration is ONE job of two
+   * (`seed`, held by `scope`): each iteration is ONE job of two
    * stages — the movement decisions with their label messages, and
    * the label application whose job result is the next stats and the
    * move count. No stage counts triangles: this loop never scores WCC.
@@ -430,30 +406,23 @@ object IncrementalWCC {
    * the last generation, run by the job that materializes the
    * graft-back, with no label exchange and no stats.
    *
-   * Returns that generation, which the caller releases once the
-   * graft-back has materialized, and the refined vertices read from it. */
+   * Each generation is released once the next one is built; the last
+   * one stays in `scope`, which must stay open until the returned
+   * refined vertices, read from it, have been materialized. */
   private[wcc] def refinePartition(seed: RefineState, globalCC: Double,
-      vertexCount: Long): (RefineState, RDD[(VertexId, VertexData)]) = {
-    var s = seed
-    try {
-      var it = 0
-      var out: RDD[(VertexId, VertexData)] = null
-      while (out == null) {
-        it += 1
-        if (it == 5) out = s.movedVertices(globalCC, vertexCount)
-        else {
-          val next = s.step(globalCC, vertexCount, score = false,
-            countTriangles = false, checkpoint = false)
-          s.release()
-          s = next
-          if (next.moved == 0L) {
-            System.err.println(s"[graft-idwcc] refine quiesced after iter $it")
-            out = next.vertices
-          }
-        }
-      }
-      (s, out)
-    } catch { case t: Throwable => s.release(); throw t }
+      vertexCount: Long, scope: Fixpoint.CacheScope): RDD[(VertexId, VertexData)] = {
+    val loop = scope.loop(4)
+    // the seed joins round 0's generation: released once round 1 built its successor
+    RefineState.in(loop.init)(seed.blocks)
+    var quiesced = false
+    val last = loop.run(seed)(_ => !quiesced) { (r, s) =>
+      val next = s.step(globalCC, vertexCount, score = false, countTriangles = false,
+        RefineState.in(r))
+      quiesced = next.moved == 0L
+      if (quiesced) System.err.println(s"[graft-idwcc] refine quiesced after iter ${r.number}")
+      next
+    }
+    if (quiesced) last.vertices else last.movedVertices(globalCC, vertexCount, scope)
   }
 
   private def timed[T](phase: String)(f: => T): T = {
@@ -511,12 +480,13 @@ object IncrementalWCC {
   /** One micro-batch (reference `IncrementalWCC.scala:27-71`).
    * CONSUMES `state` by default: the superseded state graph and every
    * intermediate graph generation are uncached once the new state is
-   * materialized, so resident memory stays one-generation-sized no
-   * matter how many micro-batches replay. `releaseInput = false`
-   * keeps the input state's graph cached — for callers that hold a
-   * SHARED bulk state (e.g. the session-memoized prepare that both
-   * the batch replay and its Structured Streaming twin fold from)
-   * and remain its owner.
+   * materialized, so a fold leaves exactly the new state cached: its
+   * graph, plus the `bulkFlagged` set it shares with the input state.
+   * `releaseInput = false` keeps the input state's graph cached — for
+   * callers that hold a SHARED bulk state (e.g. the session-memoized
+   * prepare that both the batch replay and its Structured Streaming
+   * twin fold from) and remain its owner. A failed fold leaves nothing
+   * cached beyond its input.
    *
    * `deltaFlagMaxVolumeFraction` tunes the incremental-flagging gate
    * (see [[DeltaFlagMaxVolumeFraction]]); `PositiveInfinity` forces
@@ -538,27 +508,8 @@ object IncrementalWCC {
   def run(state: State, newEdges: RDD[Edge[Int]],
       releaseInput: Boolean = true,
       deltaFlagMaxVolumeFraction: Double = DeltaFlagMaxVolumeFraction,
-      expectDeltaPath: Boolean = false): State = {
-    val sc = state.graph.vertices.sparkContext
-    // entry snapshot for the failure-path sweep: on a thrown-through
-    // path every cache this call registered is garbage — including
-    // GraphX-internal self-persists (Graph.apply, upgraded replicated
-    // views) no targeted release can name (leak-spec finding, r17)
-    val sweepBase = WccUtil.cacheSnapshot(sc)
-    val m = try timed("merge")(merge(state, newEdges)) catch {
-      case t: Throwable =>
-        WccUtil.quietly(WccUtil.sweepNewCaches(sc, sweepBase)); throw t
-    }
-    // cached generations the catch below must be able to release: a
-    // failure in performInitialPartition / refinePartition / the
-    // graft-back would otherwise leave them pinned (ADVICE r16 — the
-    // same leak class the merge-side catch was added to close).
-    // `failpoint` is the spec-injected seam that PROVES the coverage
-    // (IncrementalWCCSpec's phase-failure leak test).
-    // the live vertex-block generation (the seed, then the refined
-    // one) and the graft-back result
-    var live: RefineState = null
-    var resG: Graph[VertexData, Int] = null
+      expectDeltaPath: Boolean = false): State = Fixpoint.returning { scope =>
+    val m = timed("merge")(merge(state, newEdges, scope))
     try {
     // incremental triangle flagging for genuinely micro batches: the
     // state's batch-invariant bulk flag set + the new triangles this
@@ -581,18 +532,15 @@ object IncrementalWCC {
     val keep = state.bulkFlagged
       .filter(_ => useDelta)
       .map(_.union(deltaFlags(newEdges, m.touchedNbrs)))
-    live = timed("initial-partition")(
-      performInitialPartition(m.fullGraph, precomputedKeep = keep))
-    failpoint("initial-partition")
+    val seed = timed("initial-partition")(
+      performInitialPartition(m.fullGraph, scope, precomputedKeep = keep))
+    Failpoint("after initial-partition")
     val globalCC = WccUtil.joinUnwrapped(m.globalCCF)
     // the seed blocks are materialized: nothing reads the merge's
     // surfaces any more
-    m.touchedNbrs.unpersist(blocking = false)
-    release(m.merged)
-    release(m.fullGraph)
-    val refined = timed("refine")(refinePartition(live, globalCC, m.vertexCount))
-    live = refined._1
-    failpoint("refine")
+    scope.release(m.touchedNbrs +: (WccUtil.cached(m.merged) ++ WccUtil.cached(m.fullGraph)): _*)
+    val refined = timed("refine")(refinePartition(seed, globalCC, m.vertexCount, scope))
+    Failpoint("after refine")
 
     // graft onto the PREVIOUS graph's vertex/edge set (so batch edges
     // never persist into the state — the next merge unions onto the
@@ -603,57 +551,27 @@ object IncrementalWCC {
     // job: materializing the edges materializes the vertices they are
     // shipped from, and the refinement's last movement with them.
     val resultGraph = timed("graft") {
-      val g = state.graph.outerJoinVertices(refined._2) { (id, _, vdOpt) =>
+      val g = scope.own(state.graph.outerJoinVertices(refined) { (id, _, vdOpt) =>
         graftQuirk(id, vdOpt)
-      }
-      resG = g
-      g.cache()
+      })
       g.edges.count()
       g
     }
-    failpoint("graft")
-    live.release()
-    if (releaseInput) release(state.graph)
-    // unpersist (not destroy): evicted lineage re-fetches from the
-    // driver if a cached partition is ever recomputed
-    m.newIds.unpersist(blocking = false)
-    m.borderIds.unpersist(blocking = false)
+    Failpoint("after graft")
+    if (releaseInput) scope.adopt(WccUtil.cached(state.graph): _*)
     // bulkFlagged carries over unchanged: the graft-back keeps the
     // result's edge set identical to the state's (bulk) edge set.
     State(resultGraph, state.stats, state.bulkFlagged)
     } catch {
       case t: Throwable =>
-        // A failure between the merge and the state hand-off — the
+        // a failure between the merge and the state hand-off — the
         // expectDeltaPath require included — must not abandon the
-        // concurrent global-cc fold unobserved (its job would keep
-        // running on the shared context with any failure swallowed)
-        // or leave the merge's caches pinned for the session. Await
-        // the fold, drop everything the merge materialized, rethrow.
-        // Double-unpersist of surfaces the body already released on
-        // a later failure is a harmless no-op.
-        // every cleanup below is quietly-guarded (review r17): a
-        // throwing unpersist must neither mask `t` nor skip the
-        // sweep sequenced after it
-        try { m.globalCCF.join(); () } catch { case _: Throwable => () }
-        WccUtil.quietly {
-          m.touchedNbrs.unpersist(blocking = false)
-          release(m.merged)
-          release(m.fullGraph)
-          // post-merge generations (ADVICE r16): whichever vertex-block
-          // generation or graft-back result had materialized by the
-          // failure point is pinned too — release them
-          if (live != null) live.release()
-          if (resG != null) release(resG)
-          m.newIds.unpersist(blocking = false)
-          m.borderIds.unpersist(blocking = false)
-        }
-        // the targeted releases above drop what this method can name;
-        // the sweep drops the GraphX-internal self-persists it cannot
-        // (everything registered since entry is this call's garbage)
-        WccUtil.quietly(WccUtil.sweepNewCaches(sc, sweepBase))
+        // concurrent global-cc fold unobserved: its job would keep
+        // running on the shared context with any failure swallowed
+        try m.globalCCF.join() catch { case _: Throwable => () }
         throw t
     }
-  }
+  }(_.cached)
 
   /**
    * Micro-batch driver (G9, reference `CSVGraph.scala:47-103`): split
@@ -679,36 +597,38 @@ object IncrementalWCC {
     val maxVertex = maxRow.getLong(0)
     val splitVertex = math.floor(maxVertex * bulkToStreamRatio)
 
-    val edgeRdd = canonicalEdges
-      .select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    edgeRdd.cache()
-    val bulk = edgeRdd.filter(e => e.srcId < splitVertex && e.dstId < splitVertex)
-    val stream = edgeRdd.filter(e => e.srcId >= splitVertex || e.dstId >= splitVertex)
+    Fixpoint.using { scope =>
+      val edgeRdd = scope.cache(canonicalEdges
+        .select(col("src").cast("long"), col("dst").cast("long")).rdd
+        .map(r => Edge(r.getLong(0), r.getLong(1), 1)))
+      val bulk = edgeRdd.filter(e => e.srcId < splitVertex && e.dstId < splitVertex)
+      val stream = edgeRdd.filter(e => e.srcId >= splitVertex || e.dstId >= splitVertex)
 
-    // edge-count-sized partitioning (the query layer's idiom): at
-    // bench SFs every superstep is task dispatch, so don't inherit a
-    // wide shuffle layout for a small bulk graph; the min() defers to
-    // the input's own partitioning at scale. Micro-batch merges
-    // re-pin to this count (see merge()).
-    val bulkParts = math.max(8, math.min(edgeRdd.getNumPartitions,
-      (bulk.count() / 250000L).toInt))
-    var state = prepare(
-      Graph.fromEdges(bulk, 0)
-        .partitionBy(PartitionStrategy.EdgePartition2D, bulkParts),
-      bulkStatsFor.map(f => f(splitVertex)))
-    val microBatchSize = math.floor((maxVertex - splitVertex) / microBatchCount)
-    (1 to microBatchCount).foreach { i =>
-      val lower = splitVertex + (i - 1) * microBatchSize
-      val higher = if (i == microBatchCount) maxVertex + 1.0
-        else splitVertex + i * microBatchSize
-      val batch = stream.filter(e =>
-        (e.srcId >= lower || e.dstId >= lower) &&
-          e.srcId < higher && e.dstId < higher)
-      state = run(state, batch)
+      // edge-count-sized partitioning (the query layer's idiom): at
+      // bench SFs every superstep is task dispatch, so don't inherit a
+      // wide shuffle layout for a small bulk graph; the min() defers to
+      // the input's own partitioning at scale. Micro-batch merges
+      // re-pin to this count (see merge()).
+      val bulkParts = math.max(8, math.min(edgeRdd.getNumPartitions,
+        (bulk.count() / 250000L).toInt))
+      // fromEdges caches its edges; prepare consumes the repartitioned graph
+      val bulkGraph = Graph.fromEdges(bulk, 0)
+      scope.adopt(WccUtil.cached(bulkGraph): _*)
+      var state = prepare(bulkGraph.partitionBy(PartitionStrategy.EdgePartition2D, bulkParts),
+        bulkStatsFor.map(f => f(splitVertex)))
+      val microBatchSize = math.floor((maxVertex - splitVertex) / microBatchCount)
+      (1 to microBatchCount).foreach { i =>
+        val lower = splitVertex + (i - 1) * microBatchSize
+        val higher = if (i == microBatchCount) maxVertex + 1.0
+          else splitVertex + i * microBatchSize
+        val batch = stream.filter(e =>
+          (e.srcId >= lower || e.dstId >= lower) &&
+            e.srcId < higher && e.dstId < higher)
+        state = run(state, batch)
+      }
+      // the rows read the final state, left cached for the returned frame
+      val rows = state.graph.vertices.map { case (id, vd) => (id, vd.cId) }
+      spark.createDataFrame(rows).toDF("vid", "cid").orderBy("vid")
     }
-    edgeRdd.unpersist(blocking = false)
-    val rows = state.graph.vertices.map { case (id, vd) => (id, vd.cId) }
-    spark.createDataFrame(rows).toDF("vid", "cid").orderBy("vid")
   }
 }

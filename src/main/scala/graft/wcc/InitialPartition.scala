@@ -2,10 +2,10 @@ package graft.wcc
 
 import scala.collection.mutable.ArrayBuilder
 
+import graft.graph.Fixpoint
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Clustering-coefficient-seeded initial partition (G4 in SURVEY.md
@@ -79,52 +79,53 @@ object InitialPartition {
   /** A cached seeding generation and its round totals; `stats` is exact
    * when `changed` is 0. */
   private[wcc] final class Gen(val blocks: RDD[(Int, VertexBlock)], val changed: Long,
-      val pending: Long, val stats: Map[Long, CommunityData]) {
-    def release(): Unit = blocks.unpersist(blocking = false)
-  }
+      val pending: Long, val stats: Map[Long, CommunityData])
 
   /** The seeded partition of `pruned`: the block loop plus one relabel
    * (cached; its vertices materialized). */
-  def run(pruned: Graph[VertexData, Int], maxIterations: Int = 50): Graph[VertexData, Int] = {
-    val part = new HashPartitioner(pruned.vertices.getNumPartitions)
-    val g = converge(build(pruned.vertices, pruned.triplets.map(t => (t.srcAttr, t.dstAttr)),
-      None, part), part, maxIterations)
-    try RefineState.toGraph(pruned, RefineState.labelsOf(g.blocks)(_.label))
-    finally g.release()
-  }
+  def run(pruned: Graph[VertexData, Int], maxIterations: Int = 50): Graph[VertexData, Int] =
+    Fixpoint.returning { scope =>
+      val part = new HashPartitioner(pruned.vertices.getNumPartitions)
+      val g = converge(build(pruned.vertices, pruned.triplets.map(t => (t.srcAttr, t.dstAttr)),
+        None, part, _), part, maxIterations, scope)
+      val out = RefineState.toGraph(pruned, RefineState.labelsOf(g.blocks)(_.label), scope)
+      scope.release(g.blocks)
+      Failpoint("after seeding")
+      out
+    }(WccUtil.cached)
 
   /** The converged seeding of `vertices` (under `part`) and `edges`
    * (each edge's two endpoint records; with `keep`, restricted to its
-   * canonical keys) as the seed generation of the refinement: one more
-   * label-shipping job when the last superstep changed labels, so ghost
-   * labels, same-community degrees and stats are exact. The caller
-   * owns the release. */
+   * canonical keys) as the seed generation of the refinement, its
+   * blocks cached in `scope`: one more label-shipping job when the last
+   * superstep changed labels, so ghost labels, same-community degrees
+   * and stats are exact. */
   private[wcc] def refineSeed(vertices: RDD[(VertexId, VertexData)],
       edges: RDD[(VertexData, VertexData)], keep: Option[RDD[(Long, Long)]],
-      part: HashPartitioner, maxIterations: Int): RefineState = {
-    var g = converge(build(vertices, edges, keep, part), part, maxIterations)
+      part: HashPartitioner, maxIterations: Int, scope: Fixpoint.CacheScope): RefineState = {
+    var g = converge(build(vertices, edges, keep, part, _), part, maxIterations, scope)
     if (g.changed > 0) {
       val last = g
-      g = try superstep(last, part, decide = false) finally last.release()
+      g = superstep(last, part, decide = false, RefineState.in(scope))
+      scope.release(last.blocks)
     }
     new RefineState(g.blocks, part, g.stats, 0.0, 0L)
   }
 
-  /** One job per superstep from the build job's `built` until
-   * quiescence. */
-  private def converge(built: => Gen, part: HashPartitioner, maxIterations: Int): Gen = {
+  /** One job per superstep from the build job's generation until
+   * quiescence; each generation is released once the next one is
+   * built, and the last stays in `scope`. */
+  private def converge(build: RefineState.Cache => Gen, part: HashPartitioner,
+      maxIterations: Int, scope: Fixpoint.CacheScope): Gen = {
     val t0 = System.currentTimeMillis()
-    var g = built
+    val loop = scope.loop(maxIterations - 2)
+    val built = build(RefineState.in(loop.init))
     val t1 = System.currentTimeMillis()
     var i = 2
-    try {
-      while (g.pending > 0 && i < maxIterations) {
-        val prev = g
-        g = superstep(prev, part, decide = true)
-        prev.release()
-        i += 1
-      }
-    } catch { case t: Throwable => g.release(); throw t }
+    val g = loop.run(built)(_.pending > 0) { (r, prev) =>
+      i = r.number + 2
+      superstep(prev, part, decide = true, RefineState.in(r))
+    }
     System.err.println(s"[graft-wcc] initial-partition: build ${t1 - t0} ms, " +
       s"supersteps to $i ${System.currentTimeMillis() - t1} ms")
     g
@@ -138,7 +139,7 @@ object InitialPartition {
    * shuffle of its own. */
   private[wcc] def build(vertices: RDD[(VertexId, VertexData)],
       edges: RDD[(VertexData, VertexData)], keep: Option[RDD[(Long, Long)]],
-      part: HashPartitioner): Gen = {
+      part: HashPartitioner, cache: RefineState.Cache): Gen = {
     val verts = RefineState.underPart(vertices, part)
     val slots = RefineState.edgeSlots(edges, part, ranks = true)
     finish(keep match {
@@ -152,7 +153,7 @@ object InitialPartition {
           (vIt, sIt, kIt) =>
             block(part, vIt, sIt.map(_._2).toArray, Some(kIt.map(_._2).toArray))
         }
-    })
+    }, cache)
   }
 
   /** One partition's seeding block, superstep-2 decisions made */
@@ -208,7 +209,8 @@ object InitialPartition {
   /** One superstep (one job): ship the labels the previous superstep
    * changed, then — with `decide` — re-decide the vertices with a
    * flipped higher-ranked neighbor. */
-  private[wcc] def superstep(g: Gen, part: HashPartitioner, decide: Boolean): Gen = {
+  private[wcc] def superstep(g: Gen, part: HashPartitioner, decide: Boolean,
+      cache: RefineState.Cache): Gen = {
     val moves = RefineState.exchange(g.blocks.mapPartitions { it =>
       val (pid, b) = it.next()
       RefineState.sendMoves(pid, b.adj, b.prevLabel, b.label, 0.0, part.numPartitions)
@@ -235,7 +237,7 @@ object InitialPartition {
         else new VertexBlock(adj, b.label, ghostLabel,
           RefineState.ownDegrees(adj, b.label, ghostLabel), null, b.label, 0.0, 0L)
       Iterator((pid, next))
-    })
+    }, cache)
   }
 
   /** Per vertex: whether a higher-ranked neighbor's center flag flipped
@@ -310,14 +312,12 @@ object InitialPartition {
     if (found) bId else adj.ids(i)
   }
 
-  /** Persists `blocks` and runs the round's one job on it. */
-  private def finish(blocks: RDD[(Int, VertexBlock)]): Gen = {
-    blocks.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rounds = blocks.sparkContext.runJob(blocks, roundOf _)
-      val (stats, _, _) = RefineState.merge(rounds.map(_.partial))
-      new Gen(blocks, rounds.map(_.changed).sum, rounds.map(_.pending).sum, stats)
-    } catch { case t: Throwable => blocks.unpersist(blocking = false); throw t }
+  /** Caches `blocks` and runs the round's one job on them. */
+  private def finish(blocks: RDD[(Int, VertexBlock)], cache: RefineState.Cache): Gen = {
+    cache(blocks)
+    val rounds = blocks.sparkContext.runJob(blocks, roundOf _)
+    val (stats, _, _) = RefineState.merge(rounds.map(_.partial))
+    new Gen(blocks, rounds.map(_.changed).sum, rounds.map(_.pending).sum, stats)
   }
 
   /** The job-result function of a seeding generation's block */

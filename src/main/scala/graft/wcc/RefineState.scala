@@ -6,9 +6,8 @@ import java.nio.ByteBuffer
 import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 
-import graft.graph.SortedIntersect
+import graft.graph.{Fixpoint, SortedIntersect}
 import org.apache.spark.{HashPartitioner, TaskContext}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer,
@@ -330,17 +329,6 @@ final class RefineState private[wcc] (
     private[graft] val moved: Long) {
   import RefineState._
 
-  /** the stats broadcast of a pending [[movedVertices]], which its
-   * consumer's action reads */
-  private var movedStats: Broadcast[Map[Long, CommunityData]] = null
-
-  /** Drops the cached blocks, and the stats broadcast of
-   * [[movedVertices]] — call it once that RDD has been materialized. */
-  def release(): Unit = {
-    blocks.unpersist(blocking = false)
-    if (movedStats != null) movedStats.unpersist(blocking = false)
-  }
-
   /** Global WCC of this generation under its own stats: one job over
    * the cached blocks (needs triangle counts). */
   private[wcc] def wcc(vertexCount: Long): Double = {
@@ -354,9 +342,9 @@ final class RefineState private[wcc] (
   /** The next generation, built by one job (see the class doc).
    * `score` adds this generation's WCC_V sum to the result (its
    * triangle counts must exist); `countTriangles` runs stage C;
-   * `checkpoint` marks the new generation for a reliable checkpoint. */
+   * `cache` caches the new generation's blocks for their owner. */
   private[graft] def step(globalCC: Double, vertexCount: Long, score: Boolean,
-      countTriangles: Boolean, checkpoint: Boolean): RefineState = {
+      countTriangles: Boolean, cache: Cache): RefineState = {
     val sc = blocks.sparkContext
     val bStats = sc.broadcast(stats)
     val p = part
@@ -368,25 +356,20 @@ final class RefineState private[wcc] (
         p.numPartitions)
     }, p)
     val moved = blocks.zipPartitions(moves, preservesPartitioning = true)(applyMoves)
-    val next = if (countTriangles) withTriangles(moved, p) else moved
-    next.persist(StorageLevel.MEMORY_AND_DISK)
-    if (checkpoint) next.checkpoint()
+    val next = cache(if (countTriangles) withTriangles(moved, p) else moved)
     try {
       val (cs, wcc, n) = merge(sc.runJob(next, partialOf _))
       new RefineState(next, p, cs, wcc, n)
-    } catch { case t: Throwable => next.unpersist(blocking = false); throw t }
-    finally bStats.unpersist(blocking = false)
+    } finally bStats.unpersist(blocking = false)
   }
 
   /** The vertices after one more movement, without building a
    * generation — the final fixed-5 iteration, which only feeds the
-   * graft-back. Lazy: the caller's action runs stage A, and
-   * [[release]] then drops the stats broadcast it reads. */
-  private[wcc] def movedVertices(globalCC: Double,
-      vertexCount: Long): RDD[(VertexId, VertexData)] = {
-    require(movedStats == null, "movedVertices is already pending on this state")
-    val bStats = blocks.sparkContext.broadcast(stats)
-    movedStats = bStats
+   * graft-back. Lazy: the caller's action runs stage A, and closing
+   * `scope` drops the stats broadcast it reads. */
+  private[wcc] def movedVertices(globalCC: Double, vertexCount: Long,
+      scope: Fixpoint.CacheScope): RDD[(VertexId, VertexData)] = {
+    val bStats = scope.broadcast(blocks.sparkContext, stats)
     verticesOf(blocks)(decide(_, bStats.value, globalCC, vertexCount))
   }
 
@@ -402,33 +385,38 @@ final class RefineState private[wcc] (
 
 private[graft] object RefineState {
 
-  /** The seed generation of `graph`: one job that builds the blocks
-   * (adjacency, labels, same-community degrees and, with
-   * `countTriangles`, the triangle counts) and returns their stats. The
-   * caller owns the release. */
-  def seed(graph: Graph[VertexData, Int], countTriangles: Boolean): RefineState = {
+  /** Caches a new generation's blocks for their owner: [[in]] a scope,
+   * or in one round of a loop, which releases them by its rule. */
+  type Cache = RDD[(Int, VertexBlock)] => RDD[(Int, VertexBlock)]
+
+  def in(scope: Fixpoint.CacheScope): Cache = scope.cache(_, StorageLevel.MEMORY_AND_DISK)
+
+  def in(round: Fixpoint.Loop#Round): Cache = round.cache(_, StorageLevel.MEMORY_AND_DISK)
+
+  /** The seed generation of `graph`, its blocks cached in `scope`: one
+   * job that builds the blocks (adjacency, labels, same-community
+   * degrees and, with `countTriangles`, the triangle counts) and
+   * returns their stats. */
+  def seed(graph: Graph[VertexData, Int], countTriangles: Boolean,
+      scope: Fixpoint.CacheScope): RefineState = {
     val part = new HashPartitioner(graph.vertices.getNumPartitions)
     val base = refineBlocks(graph.vertices,
       edgeSlots(graph.triplets.map(t => (t.srcAttr, t.dstAttr)), part, ranks = false), part)
-    val blocks = if (countTriangles) withTriangles(base, part) else base
-    blocks.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (cs, _, _) = merge(blocks.sparkContext.runJob(blocks, partialOf _))
-      new RefineState(blocks, part, cs, 0.0, 0L)
-    } catch { case t: Throwable => blocks.unpersist(blocking = false); throw t }
+    val blocks = in(scope)(if (countTriangles) withTriangles(base, part) else base)
+    val (cs, _, _) = merge(blocks.sparkContext.runJob(blocks, partialOf _))
+    new RefineState(blocks, part, cs, 0.0, 0L)
   }
 
-  /** `graph` relabeled by `labels`, cached and materialized — the
-   * one GraphX step of a refinement: handing the result back. */
-  def toGraph(graph: Graph[VertexData, Int],
-      labels: RDD[(VertexId, Long)]): Graph[VertexData, Int] = {
-    val g = graph.outerJoinVertices(labels) { (_, vd, l) =>
+  /** `graph` relabeled by `labels`, cached in `scope` and materialized
+   * — the one GraphX step of a refinement: handing the result back. */
+  def toGraph(graph: Graph[VertexData, Int], labels: RDD[(VertexId, Long)],
+      scope: Fixpoint.CacheScope): Graph[VertexData, Int] = {
+    val g = scope.own(graph.outerJoinVertices(labels) { (_, vd, l) =>
       l match {
         case Some(c) if c != vd.cId => vd.copy(cId = c)
         case _ => vd
       }
-    }
-    g.cache()
+    })
     g.vertices.count()
     g
   }

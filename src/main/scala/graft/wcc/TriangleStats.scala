@@ -1,5 +1,6 @@
 package graft.wcc
 
+import graft.graph.Fixpoint
 import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
@@ -47,7 +48,10 @@ object TriangleStats {
       /** (vId, t, vt) for EVERY vertex of the input graph, including
        * non-triangle ones (t=0) — the reference's
        * TriangleCountResult dump surface */
-      fullStats: VertexRDD[(Int, Int)])
+      fullStats: VertexRDD[(Int, Int)]) {
+    /** the RDDs these surfaces hold cached */
+    private[wcc] def cached: Seq[RDD[_]] = WccUtil.cached(pruned) :+ fullStats
+  }
 
   /** One partition of the kernel's output: its vertices (ascending)
    * and, in CSR form (see [[Adjacency]]), each vertex's neighbors
@@ -101,7 +105,8 @@ object TriangleStats {
       graph: Graph[V, _]): RDD[((Long, Long), Int)] =
     supports(graph).flatMap(_._2.edges((s, d, c) => ((s, d), c)))
 
-  def run(graph: Graph[Int, Int]): Result = result(supports(graph))
+  def run(graph: Graph[Int, Int]): Result =
+    Fixpoint.returning(result(supports(graph), _))(_.cached)
 
   /** Triangle stats of the id-restricted subgraph (both endpoints <
    * `split`) DERIVED from a precomputed FULL symmetric adjacency
@@ -135,11 +140,12 @@ object TriangleStats {
       val (s, d, c) = (r.getLong(0), r.getLong(1), r.getInt(2))
       Iterator((s, (d, c)), (d, (s, c)))
     }.partitionBy(part)
-    result(verts.map((_, ())).partitionBy(part).zipPartitions(slots,
+    val blocks = verts.map((_, ())).partitionBy(part).zipPartitions(slots,
       preservesPartitioning = true) { (vIt, sIt) =>
       Iterator((org.apache.spark.TaskContext.getPartitionId(),
         supportsOf(vIt.map(_._1).toArray, sIt.toArray)))
-    })
+    }
+    Fixpoint.returning(result(blocks, _))(_.cached)
   }
 
   /** One partition's [[Supports]] from its vertex ids and its slots
@@ -161,32 +167,32 @@ object TriangleStats {
   /** The shared tail of [[run]] and [[restrictedResult]]: both surfaces
    * read off the support blocks and materialized — the pruned graph's
    * vertices and edges and the full stats — in ONE job, after which
-   * the blocks are released. The surfaces keep the blocks' vertex
-   * partitioner. An edge with support > 0 implies both endpoints have
-   * t > 0, so vt (counted over triangle edges) equals the pruned-graph
-   * degree (reference `DistributedWCC.scala:109-112`). */
-  private def result(blocks: RDD[(Int, Supports)]): Result = {
-    blocks.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val fullStats = VertexRDD(blocks.mapPartitions({ it =>
-        val b = it.next()._2
-        Iterator.range(0, b.ids.length).map(i => (b.ids(i), (b.t(i), b.vt(i))))
-      }, preservesPartitioning = true))
-      val core = blocks.mapPartitions({ it =>
-        val b = it.next()._2
-        Iterator.range(0, b.ids.length).filter(b.t(_) > 0)
-          .map(i => (b.ids(i), VertexData(b.ids(i), b.t(i), b.vt(i), b.ids(i))))
-      }, preservesPartitioning = true)
-      val coreEdges = blocks.mapPartitions(_.next()._2.edges((s, d, c) => Edge(s, d, c))
-        .filter(_.attr > 0))
-      // default storage levels: GraphX refuses to change an existing
-      // level — every graph in this library uses the GraphX default
-      val pruned = Graph(core, coreEdges)
-      pruned.cache()
-      fullStats.cache()
-      fullStats.zipPartitions(pruned.vertices, pruned.edges)((_, _, _) => Iterator.empty[Int])
-        .count()
-      Result(pruned, fullStats)
-    } finally blocks.unpersist(blocking = false)
+   * the blocks are released; only the surfaces stay in `scope`. They
+   * keep the blocks' vertex partitioner. An edge with support > 0
+   * implies both endpoints have t > 0, so vt (counted over triangle
+   * edges) equals the pruned-graph degree (reference
+   * `DistributedWCC.scala:109-112`). */
+  private def result(blocks: RDD[(Int, Supports)], scope: Fixpoint.CacheScope): Result = {
+    scope.cache(blocks, StorageLevel.MEMORY_AND_DISK)
+    val fullStats = VertexRDD(blocks.mapPartitions({ it =>
+      val b = it.next()._2
+      Iterator.range(0, b.ids.length).map(i => (b.ids(i), (b.t(i), b.vt(i))))
+    }, preservesPartitioning = true))
+    val core = blocks.mapPartitions({ it =>
+      val b = it.next()._2
+      Iterator.range(0, b.ids.length).filter(b.t(_) > 0)
+        .map(i => (b.ids(i), VertexData(b.ids(i), b.t(i), b.vt(i), b.ids(i))))
+    }, preservesPartitioning = true)
+    val coreEdges = blocks.mapPartitions(_.next()._2.edges((s, d, c) => Edge(s, d, c))
+      .filter(_.attr > 0))
+    // default storage levels: GraphX refuses to change an existing
+    // level — every graph in this library uses the GraphX default
+    val pruned = scope.own(Graph(core, coreEdges))
+    scope.cache(fullStats)
+    fullStats.zipPartitions(pruned.vertices, pruned.edges)((_, _, _) => Iterator.empty[Int])
+      .count()
+    scope.release(blocks)
+    Failpoint("after triangle stats")
+    Result(pruned, fullStats)
   }
 }

@@ -1,6 +1,6 @@
 package graft.wcc
 
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, Fixpoint}
 import org.apache.spark.graphx._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -39,7 +39,8 @@ object IncrDump {
       .toDF("vid", "t", "vt", "cid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/bulk_state")
 
-    val m = IncrementalWCC.merge(state, stream)
+    // the dump's caches live until the session stops
+    val (m, scope) = Fixpoint.scoped(IncrementalWCC.merge(state, stream, _))
     m.fullGraph.vertices.map { case (id, vd) => (id, vd.t, vd.vt, vd.cId) }
       .toDF("vid", "t", "vt", "cid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/merged_stats")
@@ -50,7 +51,7 @@ object IncrDump {
     println(s"DUMP split=$split vertexCount=$vertexCount " +
       s"globalCC=$globalCC bits=${java.lang.Double.doubleToLongBits(globalCC)}")
 
-    val seed = IncrementalWCC.performInitialPartition(m.fullGraph)
+    val seed = IncrementalWCC.performInitialPartition(m.fullGraph, scope)
     seed.labels.toDF("vid", "cid").coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/core_seed")
     val coreEdges = seed.blocks.flatMap { case (_, b) =>

@@ -1,7 +1,7 @@
 package graft.wcc
 
 import graft.SparkSpec
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, Fixpoint}
 import org.apache.spark.graphx.{Edge, Graph}
 
 class IncrementalWCCSpec extends SparkSpec {
@@ -14,24 +14,27 @@ class IncrementalWCCSpec extends SparkSpec {
     val state = IncrementalWCC.prepare(bulk)
     val newEdges = spark.sparkContext.parallelize(Seq(
       Edge(3L, 4L, 1), Edge(4L, 5L, 1), Edge(3L, 5L, 1)))
-    val m = IncrementalWCC.merge(state, newEdges)
-    assert(m.borderIds.value === Set(3L))
-    assert(m.newIds.value === Set(4L, 5L))
-    assert(m.vertexCount === 5L)
-    val verts = m.fullGraph.vertices.collect().toMap
-    // new vertices 4,5: one new triangle each
-    assert(verts(4L).t === 1)
-    assert(verts(5L).t === 1)
-    // border vertex 3: delta-adds the new triangle to its STATE count,
-    // which the bulk graft-back ZEROED — 3 is the bulk triangle's
-    // center (highest (cc, vt, vId) rank), and the reference's
-    // conditional graft (`DistributedWCC.scala:68-77`) resets
-    // self-labeled vertices to (t=0, vt=0). So 0 + 1, not 1 + 1.
-    assert(verts(3L).t === 1)
-    assert(verts(3L).vt === 2)
-    // untouched non-center vertices keep their true data (cId = 3)
-    assert(verts(1L).t === 1)
-    assert(verts(2L).t === 1)
+    Fixpoint.using { scope =>
+      val m = IncrementalWCC.merge(state, newEdges, scope)
+      assert(m.borderIds.value === Set(3L))
+      assert(m.newIds.value === Set(4L, 5L))
+      assert(m.vertexCount === 5L)
+      val verts = m.fullGraph.vertices.collect().toMap
+      // new vertices 4,5: one new triangle each
+      assert(verts(4L).t === 1)
+      assert(verts(5L).t === 1)
+      // border vertex 3: delta-adds the new triangle to its STATE count,
+      // which the bulk graft-back ZEROED — 3 is the bulk triangle's
+      // center (highest (cc, vt, vId) rank), and the reference's
+      // conditional graft (`DistributedWCC.scala:68-77`) resets
+      // self-labeled vertices to (t=0, vt=0). So 0 + 1, not 1 + 1.
+      assert(verts(3L).t === 1)
+      assert(verts(3L).vt === 2)
+      // untouched non-center vertices keep their true data (cId = 3)
+      assert(verts(1L).t === 1)
+      assert(verts(2L).t === 1)
+      m.globalCCF.join()
+    }
   }
 
   test("run returns previous vertex universe with updated communities") {
@@ -57,10 +60,13 @@ class IncrementalWCCSpec extends SparkSpec {
     // batch: 5 new leaves on the hub — merged deg(0) = 205, deg(new) = 1
     val batch = spark.sparkContext.parallelize(
       (201L to 205L).map(i => Edge(0L, i, 1)))
-    val m = IncrementalWCC.merge(state, batch)
-    // hub endpoint: 5 incident batch edges x degree 205; each new
-    // leaf: 1 incident batch edge x degree 1
-    assert(IncrementalWCC.deltaVolume(batch, m.touchedNbrs) === 5L * 205L + 5L)
+    Fixpoint.using { scope =>
+      val m = IncrementalWCC.merge(state, batch, scope)
+      // hub endpoint: 5 incident batch edges x degree 205; each new
+      // leaf: 1 incident batch edge x degree 1
+      assert(IncrementalWCC.deltaVolume(batch, m.touchedNbrs) === 5L * 205L + 5L)
+      m.globalCCF.join()
+    }
   }
 
   test("volume gate falls back on a hub-heavy batch that a count gate would pass") {
@@ -131,15 +137,14 @@ class IncrementalWCCSpec extends SparkSpec {
     val state = IncrementalWCC.prepare(bulk)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     for (phase <- Seq("initial-partition", "refine", "graft")) {
-      IncrementalWCC.testFailAfter = Some(phase)
-      try {
+      Failpoint.arm(s"after $phase") {
         val newEdges = spark.sparkContext.parallelize(Seq(
           Edge(3L, 4L, 1), Edge(4L, 5L, 1), Edge(3L, 5L, 1)))
         val e = intercept[RuntimeException] {
           IncrementalWCC.run(state, newEdges, releaseInput = false)
         }
         assert(e.getMessage.contains(phase))
-      } finally IncrementalWCC.testFailAfter = None
+      }
       val leaked = spark.sparkContext.getPersistentRDDs.view
         .filterKeys(!before.contains(_)).toMap
       assert(leaked.isEmpty,
@@ -214,13 +219,16 @@ class IncrementalWCCSpec extends SparkSpec {
       Graph.fromEdges(bulkEdges, 0)
         .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
     assert(state.bulkFlagged.isDefined)
-    val m = IncrementalWCC.merge(state, batchRdd)
-    val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
-      .filter(_._2 > 0).map(_._1).collect().toSet
-    val incremental = state.bulkFlagged.get
-      .union(IncrementalWCC.deltaFlags(batchRdd, m.touchedNbrs))
-      .distinct().collect().toSet
-    assert(incremental === fromScratch)
+    Fixpoint.using { scope =>
+      val m = IncrementalWCC.merge(state, batchRdd, scope)
+      val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
+        .filter(_._2 > 0).map(_._1).collect().toSet
+      val incremental = state.bulkFlagged.get
+        .union(IncrementalWCC.deltaFlags(batchRdd, m.touchedNbrs))
+        .distinct().collect().toSet
+      assert(incremental === fromScratch)
+      m.globalCCF.join()
+    }
   }
 
   test("delta triangle flags equal the from-scratch merged-graph support flags") {

@@ -1,6 +1,7 @@
 package graft.wcc
 
 import graft.SparkSpec
+import graft.graph.Fixpoint
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -77,50 +78,50 @@ class PropertySpec extends SparkSpec {
         val g = graphOf(spark, edges)
           .mapVertices((id, _) => VertexData(id, 1, 2, id % 3))
         val n = g.numVertices
-        val seed = RefineState.seed(g, countTriangles = true)
-        val blocks = seed.blocks.collect().map(_._2)
-        // community degrees from the blocks' neighbor labels
-        val deg = CommunityOps.vertexCommunityDegrees(g).collect().toMap
-        val fromBlocks = blocks.flatMap { b =>
-          (0 until b.adj.n).filter(b.adj.deg(_) > 0).map { i =>
-            b.adj.ids(i) -> (b.adj.offs(i) until b.adj.offs(i + 1))
-              .groupBy(b.nbrLabel).map { case (c, js) => c -> js.size }
+        Fixpoint.using { scope =>
+          val seed = RefineState.seed(g, countTriangles = true, scope)
+          val blocks = seed.blocks.collect().map(_._2)
+          // community degrees from the blocks' neighbor labels
+          val deg = CommunityOps.vertexCommunityDegrees(g).collect().toMap
+          val fromBlocks = blocks.flatMap { b =>
+            (0 until b.adj.n).filter(b.adj.deg(_) > 0).map { i =>
+              b.adj.ids(i) -> (b.adj.offs(i) until b.adj.offs(i + 1))
+                .groupBy(b.nbrLabel).map { case (c, js) => c -> js.size }
+            }
+          }.toMap
+          assert(fromBlocks === deg)
+          // sorted adjacency and same-community arrays against brute force
+          val und = edges.filter(e => e._1 != e._2)
+            .map(e => if (e._1 < e._2) e else e.swap).distinct
+          val adjBrute = und.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+            .map { case (v, es) => v -> es.map(_._2).sorted }
+          blocks.foreach { b =>
+            (0 until b.adj.n).foreach { i =>
+              val v = b.adj.ids(i)
+              val nb = b.adj.nbrs.slice(b.adj.offs(i), b.adj.offs(i + 1)).toSeq
+              assert(nb === adjBrute.getOrElse(v, Nil), s"adjacency diverges at $v")
+              assert(b.sameNbrs(i).toSeq === nb.filter(_ % 3 == v % 3))
+            }
           }
-        }.toMap
-        assert(fromBlocks === deg)
-        // sorted adjacency and same-community arrays against brute force
-        val und = edges.filter(e => e._1 != e._2)
-          .map(e => if (e._1 < e._2) e else e.swap).distinct
-        val adjBrute = und.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
-          .map { case (v, es) => v -> es.map(_._2).sorted }
-        blocks.foreach { b =>
-          (0 until b.adj.n).foreach { i =>
-            val v = b.adj.ids(i)
-            val nb = b.adj.nbrs.slice(b.adj.offs(i), b.adj.offs(i + 1)).toSeq
-            assert(nb === adjBrute.getOrElse(v, Nil), s"adjacency diverges at $v")
-            assert(b.sameNbrs(i).toSeq === nb.filter(_ % 3 == v % 3))
-          }
+          // stats integer-exact, WCC equal up to float summation order
+          val cs = CommunityOps.computeCommunityStats(g)
+          assert(seed.stats === cs)
+          val w = seed.wcc(n)
+          val wRef = CommunityOps.computeGlobalWCC(g, cs, n)
+          assert(math.abs(w - wRef) < 1e-12, s"wcc $w vs $wRef")
+          // one scored step: it carries the seed's WCC (same fold), and
+          // the generation it builds equals the reference plans over its
+          // labels
+          val next = seed.step(IncrementalWCC.detGlobalCC(g.vertices, n), n,
+            score = true, countTriangles = true, RefineState.in(scope))
+          assert(next.wccPrev / n === w)
+          val moved = RefineState.toGraph(g, next.labels, scope)
+          val movedCs = CommunityOps.computeCommunityStats(moved)
+          assert(next.stats === movedCs)
+          val wNext = next.wcc(n)
+          val wNextRef = CommunityOps.computeGlobalWCC(moved, movedCs, n)
+          assert(math.abs(wNext - wNextRef) < 1e-12, s"wcc $wNext vs $wNextRef")
         }
-        // stats integer-exact, WCC equal up to float summation order
-        val cs = CommunityOps.computeCommunityStats(g)
-        assert(seed.stats === cs)
-        val w = seed.wcc(n)
-        val wRef = CommunityOps.computeGlobalWCC(g, cs, n)
-        assert(math.abs(w - wRef) < 1e-12, s"wcc $w vs $wRef")
-        // one scored step: it carries the seed's WCC (same fold), and
-        // the generation it builds equals the reference plans over its
-        // labels
-        val next = seed.step(IncrementalWCC.detGlobalCC(g.vertices, n), n,
-          score = true, countTriangles = true, checkpoint = false)
-        assert(next.wccPrev / n === w)
-        val moved = RefineState.toGraph(g, next.labels)
-        val movedCs = CommunityOps.computeCommunityStats(moved)
-        assert(next.stats === movedCs)
-        val wNext = next.wcc(n)
-        val wNextRef = CommunityOps.computeGlobalWCC(moved, movedCs, n)
-        assert(math.abs(wNext - wNextRef) < 1e-12, s"wcc $wNext vs $wNextRef")
-        seed.release(); next.release()
-        moved.unpersistVertices(blocking = false)
       }
     }
   }
@@ -141,15 +142,13 @@ class PropertySpec extends SparkSpec {
               org.apache.spark.graphx.Edge(e._1, e._2, 1)), parts), 0)
           g0.mapVertices((id, _) => VertexData(id, 1, 2, id % 3))
         }
-        def run(parts: Int) = {
+        def run(parts: Int) = Fixpoint.using { scope =>
           val g = gAt(parts)
-          val seed = RefineState.seed(g, countTriangles = false)
+          val seed = RefineState.seed(g, countTriangles = false, scope)
           val next = seed.step(1.0, g.numVertices, score = false,
-            countTriangles = false, checkpoint = false)
-          val out = (g.vertices.getNumPartitions, seed.stats,
+            countTriangles = false, RefineState.in(scope))
+          (g.vertices.getNumPartitions, seed.stats,
             next.labels.collect().sortBy(_._1).toSeq)
-          seed.release(); next.release()
-          out
         }
         val (_, sN, lN) = run(4)
         val (wideParts, sW, lW) = run(80)

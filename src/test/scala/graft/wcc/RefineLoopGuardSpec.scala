@@ -1,6 +1,7 @@
 package graft.wcc
 
 import graft.{JobProbe, SparkSpec}
+import graft.graph.Fixpoint
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.rdd.RDD
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
@@ -97,24 +98,26 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val (init, n) = seeded()
       val (seed, _, _) = DistributedWCC.seedEvaluation(init, n)
       val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
-      // a batch step, back to the seed's build
-      val gen = seed.step(globalCC, n, score = true, countTriangles = true, checkpoint = false)
-      assertOnCodec("a batch step", gen.blocks,
-        Seq(classOf[EdgeSlots], classOf[Moves], classOf[SameSets]))
-      // a seeding superstep, back to the seeding build
-      val tri = TriangleStats.run(graphOf(spark, edges))
-      val pruned = tri.pruned
-      val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
-      val built = InitialPartition.build(pruned.vertices,
-        pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part)
-      val next = InitialPartition.superstep(built, part, decide = true)
-      assertOnCodec("a seeding superstep", next.blocks, Seq(classOf[EdgeSlots], classOf[Moves]))
-      // the triangle support kernel
-      assertOnCodec("the triangle kernel", TriangleStats.edgeSupport(graphOf(spark, edges)),
-        Seq(classOf[EdgeSlots], classOf[SameSets]))
-      seed.release(); gen.release(); built.release(); next.release()
-      release(pruned)
-      tri.fullStats.unpersist(blocking = false)
+      Fixpoint.using { scope =>
+        scope.adopt(seed.blocks)
+        // a batch step, back to the seed's build
+        val gen = seed.step(globalCC, n, score = true, countTriangles = true,
+          RefineState.in(scope))
+        assertOnCodec("a batch step", gen.blocks,
+          Seq(classOf[EdgeSlots], classOf[Moves], classOf[SameSets]))
+        // a seeding superstep, back to the seeding build
+        val tri = TriangleStats.run(graphOf(spark, edges))
+        scope.adopt(tri.cached: _*)
+        val pruned = tri.pruned
+        val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
+        val built = InitialPartition.build(pruned.vertices,
+          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, RefineState.in(scope))
+        val next = InitialPartition.superstep(built, part, decide = true, RefineState.in(scope))
+        assertOnCodec("a seeding superstep", next.blocks, Seq(classOf[EdgeSlots], classOf[Moves]))
+        // the triangle support kernel
+        assertOnCodec("the triangle kernel", TriangleStats.edgeSupport(graphOf(spark, edges)),
+          Seq(classOf[EdgeSlots], classOf[SameSets]))
+      }
       release(init)
     }
   }
@@ -125,21 +128,21 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       calibrate(init, n)
       val (seed, _, _) = DistributedWCC.seedEvaluation(init, n)
       val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
-      var gen1: RefineState = null
-      var gen2: RefineState = null
-      val build = JobProbe(spark.sparkContext) {
-        gen1 = seed.step(globalCC, n, score = false, countTriangles = true,
-          checkpoint = false)
+      Fixpoint.using { scope =>
+        scope.adopt(seed.blocks)
+        var gen1: RefineState = null
+        val build = JobProbe(spark.sparkContext) {
+          gen1 = seed.step(globalCC, n, score = false, countTriangles = true,
+            RefineState.in(scope))
+        }
+        val scored = JobProbe(spark.sparkContext) {
+          gen1.step(globalCC, n, score = true, countTriangles = true, RefineState.in(scope))
+        }
+        Seq(build, scored).foreach { c =>
+          assert(c.jobs === 1, s"a batch generation ran ${c.jobs} jobs")
+          assert(c.stages <= 3, s"a batch generation ran ${c.stages} stages")
+        }
       }
-      val scored = JobProbe(spark.sparkContext) {
-        gen2 = gen1.step(globalCC, n, score = true, countTriangles = true,
-          checkpoint = false)
-      }
-      Seq(build, scored).foreach { c =>
-        assert(c.jobs === 1, s"a batch generation ran ${c.jobs} jobs")
-        assert(c.stages <= 3, s"a batch generation ran ${c.stages} stages")
-      }
-      seed.release(); gen1.release(); gen2.release()
       release(init)
     }
   }
@@ -148,16 +151,15 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     failAfter(180.seconds) {
       val (init, n) = seeded()
       calibrate(init, n)
-      val seed = RefineState.seed(init, countTriangles = false)
-      val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
-      var next: RefineState = null
-      val c = JobProbe(spark.sparkContext) {
-        next = seed.step(globalCC, n, score = false, countTriangles = false,
-          checkpoint = false)
+      Fixpoint.using { scope =>
+        val seed = RefineState.seed(init, countTriangles = false, scope)
+        val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
+        val c = JobProbe(spark.sparkContext) {
+          seed.step(globalCC, n, score = false, countTriangles = false, RefineState.in(scope))
+        }
+        assert(c.jobs === 1, s"an IDWCC iteration ran ${c.jobs} jobs")
+        assert(c.stages <= 2, s"an IDWCC iteration ran ${c.stages} stages")
       }
-      assert(c.jobs === 1, s"an IDWCC iteration ran ${c.jobs} jobs")
-      assert(c.stages <= 2, s"an IDWCC iteration ran ${c.stages} stages")
-      seed.release(); next.release()
       release(init)
     }
   }
@@ -168,16 +170,16 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       calibrate(init, n)
       val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
       val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
-      val built = InitialPartition.build(pruned.vertices,
-        pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part)
-      assert(built.changed > 0, "premise: superstep 2 must change labels")
-      var next: InitialPartition.Gen = null
-      val c = JobProbe(spark.sparkContext) {
-        next = InitialPartition.superstep(built, part, decide = true)
+      Fixpoint.using { scope =>
+        val built = InitialPartition.build(pruned.vertices,
+          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, RefineState.in(scope))
+        assert(built.changed > 0, "premise: superstep 2 must change labels")
+        val c = JobProbe(spark.sparkContext) {
+          InitialPartition.superstep(built, part, decide = true, RefineState.in(scope))
+        }
+        assert(c.jobs === 1, s"a seeding superstep ran ${c.jobs} jobs")
+        assert(c.stages <= 2, s"a seeding superstep ran ${c.stages} stages")
       }
-      assert(c.jobs === 1, s"a seeding superstep ran ${c.jobs} jobs")
-      assert(c.stages <= 2, s"a seeding superstep ran ${c.stages} stages")
-      built.release(); next.release()
       release(init)
     }
   }
@@ -188,13 +190,13 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       calibrate(init, n)
       val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
       val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
-      var built: InitialPartition.Gen = null
-      val c = JobProbe(spark.sparkContext) {
-        built = InitialPartition.build(pruned.vertices,
-          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part)
+      val c = Fixpoint.using { scope =>
+        JobProbe(spark.sparkContext) {
+          InitialPartition.build(pruned.vertices,
+            pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, RefineState.in(scope))
+        }
       }
       assert(c.jobs === 1, s"the seeding block build ran ${c.jobs} jobs")
-      built.release()
       release(init)
     }
   }
@@ -287,7 +289,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
         seed = DistributedWCC.seedEvaluation(init, n)._1
       }
       assert(c.jobs <= 2, s"the seed evaluation ran ${c.jobs} jobs")
-      seed.release()
+      seed.blocks.unpersist(blocking = false)
       release(init)
     }
   }

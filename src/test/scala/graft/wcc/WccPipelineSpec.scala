@@ -1,7 +1,7 @@
 package graft.wcc
 
 import graft.SparkSpec
-import graft.graph.EdgeOps
+import graft.graph.{EdgeOps, Fixpoint}
 
 class InitialPartitionSpec extends SparkSpec {
   import GraphFixtures._
@@ -73,22 +73,22 @@ class InitialPartitionSpec extends SparkSpec {
     val viaRun = InitialPartition.run(pruned).vertices
       .map { case (id, vd) => (id, vd.cId) }.collect().toMap
     Seq(1, 4, 80).foreach { parts =>
-      val s = InitialPartition.refineSeed(pruned.vertices,
-        pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None,
-        new org.apache.spark.HashPartitioner(parts), 50)
-      val labels = s.labels.collect().toMap
-      assert(labels === viaRun, s"labels differ at $parts partitions")
-      val relabeled = RefineState.toGraph(pruned, s.labels)
-      assert(s.stats === CommunityOps.computeCommunityStats(relabeled),
-        s"stats differ at $parts partitions")
-      s.blocks.collect().foreach { case (_, b) =>
-        b.adj.ghosts.indices.foreach { g =>
-          assert(b.ghostLabel(g) === labels(b.adj.ghosts(g)),
-            s"ghost ${b.adj.ghosts(g)} at $parts partitions")
+      Fixpoint.using { scope =>
+        val s = InitialPartition.refineSeed(pruned.vertices,
+          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None,
+          new org.apache.spark.HashPartitioner(parts), 50, scope)
+        val labels = s.labels.collect().toMap
+        assert(labels === viaRun, s"labels differ at $parts partitions")
+        val relabeled = RefineState.toGraph(pruned, s.labels, scope)
+        assert(s.stats === CommunityOps.computeCommunityStats(relabeled),
+          s"stats differ at $parts partitions")
+        s.blocks.collect().foreach { case (_, b) =>
+          b.adj.ghosts.indices.foreach { g =>
+            assert(b.ghostLabel(g) === labels(b.adj.ghosts(g)),
+              s"ghost ${b.adj.ghosts(g)} at $parts partitions")
+          }
         }
       }
-      s.release()
-      relabeled.unpersistVertices(blocking = false)
     }
   }
 
@@ -131,13 +131,12 @@ class DistributedWCCSpec extends SparkSpec {
     val res = TriangleStats.run(g)
     val init = InitialPartition.run(res.pruned)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    DistributedWCC.testFailAtIter = 1
-    try {
+    Failpoint.arm("at iter 1") {
       val e = intercept[RuntimeException] {
         DistributedWCC.refinePartition(init, g.numVertices, 5)
       }
       assert(e.getMessage.contains("injected test failure"))
-    } finally DistributedWCC.testFailAtIter = -1
+    }
     val leaked = spark.sparkContext.getPersistentRDDs.view
       .filterKeys(!before.contains(_)).toMap
     assert(leaked.isEmpty, "leaked persisted RDDs: " +
@@ -160,13 +159,12 @@ class DistributedWCCSpec extends SparkSpec {
     val res = TriangleStats.run(g)
     val init = InitialPartition.run(res.pruned)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    DistributedWCC.testFailAtIter = 0
-    try {
+    Failpoint.arm("after seed evaluation") {
       val e = intercept[RuntimeException] {
         DistributedWCC.refinePartition(init, g.numVertices, 5)
       }
       assert(e.getMessage.contains("seed evaluation"))
-    } finally DistributedWCC.testFailAtIter = -1
+    }
     val leaked = spark.sparkContext.getPersistentRDDs.view
       .filterKeys(!before.contains(_)).toMap
     assert(leaked.isEmpty, "leaked persisted RDDs: " +
@@ -184,13 +182,12 @@ class DistributedWCCSpec extends SparkSpec {
     val res = TriangleStats.run(g)
     val init = InitialPartition.run(res.pruned)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    DistributedWCC.testFailAtIter = 1
-    try {
+    Failpoint.arm("at iter 1") {
       val e = intercept[RuntimeException] {
         DistributedWCC.refinePartition(init, g.numVertices, 5)
       }
       assert(e.getMessage.contains("injected test failure at iter 1"))
-    } finally DistributedWCC.testFailAtIter = -1
+    }
     val leaked = spark.sparkContext.getPersistentRDDs.view
       .filterKeys(!before.contains(_)).toMap
     assert(leaked.isEmpty, "leaked persisted RDDs: " +
