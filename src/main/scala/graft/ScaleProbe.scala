@@ -167,7 +167,7 @@ object ScaleProbe {
     // volume-bound in the merged-graph size. Explicit opt-in
     // (not `wanted`): the bare "wcc" token must not pick this up.
     if (phaseFilter.exists(_.contains("idwcc"))) {
-      import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
+      import org.apache.spark.graphx.Edge
       val maxV = edges.agg(max(greatest(col("src"), col("dst"))))
         .head().getLong(0)
       val split = math.floor(maxV * 0.8)
@@ -183,8 +183,7 @@ object ScaleProbe {
         val bulkParts = graft.queries.GraphQueries
           .partsFor(bulk.getNumPartitions, bulkN)
         println(s"[scale-probe] idwcc bulk |E|=$bulkN parts=$bulkParts")
-        val s = IncrementalWCC.prepare(Graph.fromEdges(bulk, 0)
-          .partitionBy(PartitionStrategy.EdgePartition2D, bulkParts))
+        val s = IncrementalWCC.prepareEdges(bulk, bulkParts)
         bulk.unpersist(blocking = false)
         s
       }
@@ -433,16 +432,14 @@ object ScaleProbe {
         // that grows first. B scales with |E| so the 2x/10x diff
         // exposes the growth exponent.
         phase("skew idwcc hub-arrival merge") {
-          import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
+          import org.apache.spark.graphx.Edge
           val maxV = skewEdges
             .agg(max(greatest(col("src"), col("dst")))).head().getLong(0)
           val b = math.max(5000L, nBase * replicas / 40L)
           val hubId = maxV + 1
           println(s"[scale-probe] idwcc hub batch: B=$b hub=$hubId")
           val bulkRdd = skewEdges.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-          val bulkGraph = Graph.fromEdges(bulkRdd, 0)
-            .partitionBy(PartitionStrategy.EdgePartition2D)
-          val state = IncrementalWCC.prepare(bulkGraph, None)
+          val state = IncrementalWCC.prepareEdges(bulkRdd, bulkRdd.getNumPartitions)
           val batch = spark.sparkContext.range(1L, b + 1)
             .map(i => Edge(i, hubId, 1))
           val out = IncrementalWCC.run(state, batch)

@@ -34,7 +34,7 @@ object GraphQueries {
    * lineitem self-join exactly once per (session, sfDir): the
    * groupBy-count behind the weighted surface is the same shuffle as
    * the distinct it replaces. */
-  private def canonEdges(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def canonEdges(spark: SparkSession, sfDir: String): DataFrame =
     memoize(spark, s"canon:$sfDir") {
       val df = weightedEdges(spark, sfDir)
         .select(col("src"), col("dst")).cache(); df.count(); df
@@ -492,17 +492,7 @@ object GraphQueries {
    * reference's bulk/stream split-and-replay driver loop, replayed
    * exactly by the DuckDB oracle ([[incrReplayCte]] — the last
    * formerly rows-only query of the suite). Memoized so the
-   * invariant certificate shares the run.
-   *
-   * Measured negative result (PERF.md, round 7): deriving the
-   * bulk-prepare's triangle stats from the session's memoized full
-   * adjacency (TriangleStats.restrictedResult — value-identical,
-   * parity-pinned) costs ~9.6 s at sf0.1 vs ~5.2 s for the
-   * from-scratch exchange it replaces: at this bulk size the
-   * DataFrame->GraphX rebuild outweighs the avoided adjacency
-   * shuffle, so the replay keeps the plain path. The derivation
-   * stays in the library (testStream's bulkStatsFor hook) for
-   * callers whose adjacency is much larger than the conversion. */
+   * invariant certificate shares the run. */
   def wccIncremental(spark: SparkSession, sfDir: String): DataFrame =
     memoize(spark, s"idwcc:$sfDir") {
       val (state, streamEdges) = idwccShared(spark, sfDir)
@@ -565,20 +555,15 @@ object GraphQueries {
       df
     }
 
-  /** G8+G9, delta-flag path (VERDICT r14 order #3): ONE genuinely
+  /** G8+G9, micro-batch shape (VERDICT r14 order #3): ONE genuinely
    * micro batch — the stream edges of the single id window
    * [split, split + z), z = max(1, floor((maxId - split) / 400)) —
-   * folded through `IncrementalWCC.run` with the incremental
-   * triangle flagging FORCED on (`deltaFlagMaxVolumeFraction =
-   * +Inf`, `expectDeltaPath = true`), so the 100 TB-shape path
-   * (batch-invariant bulk flags + [[graft.wcc.IncrementalWCC
-   * .deltaFlags]]) is continuously VALUE-verified by the driver's
-   * DuckDB compare, not just spec-pinned (the sf replay batches sit
-   * above the adaptive volume gate, so without this row the delta
-   * path never runs under the correctness gate). Shares the
-   * session-memoized 0.8-split bulk prepare; the oracle replays the
-   * same window as batch 1 of a 400-window split — valid for either
-   * flagging path because the delta flag set provably equals the
+   * folded through `IncrementalWCC.run` with `expectDeltaPath = true`,
+   * so the fold provably seeds from the state's bulk flags plus its
+   * delta triangle pass (`IncrementalWCC.deltaTriangles`)
+   * under the driver's DuckDB compare. Shares the session-memoized
+   * 0.8-split bulk prepare; the oracle replays the same window as
+   * batch 1 of a 400-window split — the delta flags provably equal the
    * from-scratch support flags (IncrementalWCCSpec). */
   def wccIncrementalDelta(spark: SparkSession, sfDir: String): DataFrame =
     memoize(spark, s"idwccDelta:$sfDir") {
@@ -606,7 +591,6 @@ object GraphQueries {
       batchDf.cache()
       val batch = batchDf.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
       val fin = IncrementalWCC.run(state, batch, releaseInput = false,
-        deltaFlagMaxVolumeFraction = Double.PositiveInfinity,
         expectDeltaPath = true)
       val rows = fin.graph.vertices.map { case (id, vd) => (id, vd.cId) }
       val df = spark.createDataFrame(rows).toDF("vid", "cid").orderBy("vid").cache()
@@ -631,7 +615,7 @@ object GraphQueries {
   private[graft] def idwccShared(spark: SparkSession, sfDir: String)
       : (IncrementalWCC.State, DataFrame) =
     memoize(spark, s"idwccBulk:$sfDir") {
-      import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
+      import org.apache.spark.graphx.Edge
       val canon = canonEdges(spark, sfDir)
         .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       val maxVertex = canon.agg(max(greatest(col("src"), col("dst")))).head().getLong(0)
@@ -642,10 +626,7 @@ object GraphQueries {
       // size from the ACTUAL edge set being partitioned (the bulk
       // region, ~64% of the canonical count), the same rule every
       // other surface uses — not the full-graph count (ADVICE r15)
-      val bulkParts = partsFor(bulk.getNumPartitions, bulk.count())
-      val state = IncrementalWCC.prepare(
-        Graph.fromEdges(bulk, 0).partitionBy(
-          PartitionStrategy.EdgePartition2D, bulkParts))
+      val state = IncrementalWCC.prepareEdges(bulk, partsFor(bulk.getNumPartitions, bulk.count()))
       bulk.unpersist(blocking = false)
       val streamEdges = canon
         .where(col("src") >= split || col("dst") >= split).cache()

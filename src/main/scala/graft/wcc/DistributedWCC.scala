@@ -99,8 +99,13 @@ object DistributedWCC {
     if (best ne initGraph) scope.adopt(WccUtil.cached(best): _*)
 
     // Graft results onto the original graph: every input vertex is in
-    // the output; pruned ones as singletons (`:64-77`).
-    val resultGraph = scope.own(graph.outerJoinVertices(best.vertices) { (id, _, vdOpt) =>
+    // the output; pruned ones as singletons (`:64-77`). The core's
+    // vertices join as a plain pair RDD under the same partitioner:
+    // handed its VertexRDD, whose index (the core's vertex set) differs
+    // from the input's, GraphX warns once per partition that it must
+    // re-index them — the same per-partition rebuild this join does.
+    val coreVertices = best.vertices.mapPartitions(identity, preservesPartitioning = true)
+    val resultGraph = scope.own(graph.outerJoinVertices(coreVertices) { (id, _, vdOpt) =>
       vdOpt.getOrElse(VertexData(id, 0, 0, id))
     })
 

@@ -1,6 +1,9 @@
 package graft.wcc
 
+import scala.collection.mutable.ArrayBuilder
+
 import graft.graph.{Fixpoint, SortedIntersect}
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
@@ -39,11 +42,11 @@ object IncrementalWCC {
    * edge set fixed at the bulk edge set across batches
    * (reference `IncrementalWCC.scala:56-58` — batch edges never
    * persist), so the set stays valid for every subsequent [[run]] and
-   * each batch only enumerates the NEW triangles its own edges close
-   * ([[deltaFlags]]) instead of re-running the full-merged-graph
+   * each batch only adds the keys its delta triangle pass flags
+   * ([[deltaTriangles]]) instead of re-running the full-merged-graph
    * support exchange. Callers constructing a State by hand may leave
-   * it None — [[performInitialPartition]] then takes the
-   * from-scratch path. */
+   * it None — [[performInitialPartition]] then flags the merged graph
+   * from scratch. */
   final case class State(graph: Graph[VertexData, Int], stats: Map[Long, CommunityData],
       bulkFlagged: Option[RDD[(Long, Long)]] = None) {
     /** the RDDs this state holds cached */
@@ -73,10 +76,6 @@ object IncrementalWCC {
    * CONSUMES the input graph: once the state graph is materialized,
    * the input and the bulk run's phase surfaces are uncached (they
    * would otherwise stay resident for the whole stream).
-   * `precomputedStats` short-circuits the bulk preprocess when the
-   * caller already holds the bulk graph's triangle stats (e.g.
-   * derived from a session-memoized full adjacency via
-   * `TriangleStats.restrictedResult` — value-identical, spec-pinned).
    *
    * The state graph applies [[graftQuirk]] on top of
    * `DistributedWCC.run`'s output graft: the reference's bulk graft
@@ -85,10 +84,9 @@ object IncrementalWCC {
    * graft's own `Output.graph` deliberately keeps the richer true
    * stats for batch callers, so the quirk is re-applied here where
    * the reference semantics need it. */
-  def prepare(graph: Graph[Int, Int],
-      precomputedStats: Option[TriangleStats.Result] = None): State =
+  def prepare(graph: Graph[Int, Int]): State =
     Fixpoint.returning { scope =>
-      val out = DistributedWCC.run(graph, precomputedStats = precomputedStats)
+      val out = DistributedWCC.run(graph)
       scope.adopt(out.cached: _*)
       val stateGraph = scope.own(out.graph.mapVertices((id, vd) =>
         graftQuirk(id, Some(vd))))
@@ -108,6 +106,16 @@ object IncrementalWCC {
       State(stateGraph, out.communityStats, Some(bulkFlagged))
     }(_.cached)
 
+  /** [[prepare]] on the graph of `bulk`, its edges laid out by
+   * `EdgePartition2D` in `numParts` partitions. `Graph.fromEdges`
+   * caches a graph of its own, which only that repartitioning reads:
+   * it is released with the rest of the input. */
+  def prepareEdges(bulk: RDD[Edge[Int]], numParts: Int): State = Fixpoint.using { scope =>
+    val g = Graph.fromEdges(bulk, 0)
+    scope.adopt(WccUtil.cached(g): _*)
+    prepare(g.partitionBy(PartitionStrategy.EdgePartition2D, numParts))
+  }
+
   final case class MergeResult(
       fullGraph: Graph[VertexData, Int],
       /** repartitioned union graph fullGraph was derived from (released
@@ -116,39 +124,37 @@ object IncrementalWCC {
       newIds: Broadcast[Set[Long]],
       borderIds: Broadcast[Set[Long]],
       vertexCount: Long,
-      /** edges in the batch: the union with the state's edges is
-       * duplicate-free by contract, so the merged graph has exactly
-       * this many more edges than the state */
-      batchEdges: Long,
       /** deterministic merged-graph global cc ([[detGlobalCC]]),
        * computed as a CONCURRENT job over the already-materialized
        * cached vertices: its only consumer is the refinement, so the
-       * fold overlaps the gate probe + flagging + seeding phases
-       * instead of serializing inside the merge. Values unchanged —
-       * the blocked fold is bit-reproducible wherever it runs. Its job
-       * runs under the caller's job group and description. */
+       * fold overlaps the seeding instead of serializing inside the
+       * merge. Values unchanged — the blocked fold is
+       * bit-reproducible wherever it runs. Its job runs under the
+       * caller's job group and description. */
       globalCCF: java.util.concurrent.CompletableFuture[Double],
-      /** sorted MERGED-graph neighborhoods of the touched
-       * (border/new) vertices — built once here, consumed by BOTH
-       * the delta stat update and the delta triangle flagging
-       * ([[deltaFlags]]); cached, released by `run` after the
-       * initial partition. */
-      touchedNbrs: RDD[(Long, Array[Long])])
+      /** the [[deltaTriangles]] pass whose (c, ind) sums fullGraph
+       * carries; cached, released by `run` after the initial
+       * partition */
+      delta: RDD[(Int, Delta)]) {
+    /** the canonical keys of the triangle edges the delta pass flagged */
+    def deltaKeys: RDD[(Long, Long)] = delta.mapPartitions { it =>
+      val d = it.next()._2
+      Iterator.range(0, d.lo.length).map(k => (d.lo(k), d.hi(k)))
+    }
+  }
 
-  /** Merge phase (reference `IncrementalWCC.scala:79-112`). Everything
-   * it caches and broadcasts belongs to `scope`. */
+  /** Merge phase (reference `IncrementalWCC.scala:79-181`): the union
+   * graph and the delta triangle-stat update of its touched vertices.
+   * Everything it caches and broadcasts belongs to `scope`. */
   private[wcc] def merge(state: State, newEdges: RDD[Edge[Int]],
       scope: Fixpoint.CacheScope): MergeResult = {
     val sc = state.graph.vertices.sparkContext
-    // batch vertex ids (micro-batch-sized, safe on the driver) and the
-    // batch edge count, in one job
-    val perPart = newEdges.mapPartitions { it =>
+    // batch vertex ids (micro-batch-sized, safe on the driver)
+    val batchIds = newEdges.mapPartitions { it =>
       val ids = scala.collection.mutable.HashSet.empty[Long]
-      var n = 0L
-      it.foreach { e => ids += e.srcId; ids += e.dstId; n += 1 }
-      Iterator((ids.toArray, n))
-    }.collect()
-    val batchIds = perPart.iterator.flatMap(_._1).toSet
+      it.foreach { e => ids += e.srcId; ids += e.dstId }
+      Iterator(ids.toArray)
+    }.collect().iterator.flatten.toSet
     val bBatch = scope.broadcast(sc, batchIds)
     val borderIds = state.graph.vertices
       .filter { case (id, _) => bBatch.value.contains(id) }
@@ -179,10 +185,33 @@ object IncrementalWCC {
     val fg = scope.own(union.partitionBy(PartitionStrategy.EdgePartition2D,
       state.graph.edges.getNumPartitions))
 
-    val nbrs = scope.cache(touchedNeighborhoods(fg, bBorder, bNew))
-    val (fullGraph, vertexCount) = updateVertexData(fg, bBorder, bNew, nbrs, scope)
-    // fg is materialized: nothing reads the union any more
-    scope.release(WccUtil.cached(union): _*)
+    val part = new HashPartitioner(fg.vertices.getNumPartitions)
+    val isTouched = (v: Long) => bBorder.value.contains(v) || bNew.value.contains(v)
+    val touched = scope.cache(touchedNeighborhoods(fg, isTouched, part))
+    val delta = scope.cache(deltaTriangles(touched, isTouched, bNew, part))
+    val sums = delta.mapPartitions({ it =>
+      val d = it.next()._2
+      Iterator.range(0, d.ids.length).map(i => (d.ids(i), (d.c(i), d.ind(i))))
+    }, preservesPartitioning = true)
+    // join (`:163-178`): border vertices ADD deltas; new vertices get
+    // absolute counts; both get cId reset to self (VertexData
+    // constructor default — reference quirk). Untouched vertices keep
+    // their data.
+    val fullGraph = scope.own(fg.outerJoinVertices(sums) { (id, vd, sOpt) =>
+      sOpt match {
+        case Some((c, ind)) if c != 0 || ind != 0 =>
+          if (bBorder.value.contains(id))
+            VertexData(id, vd.t + c / 2, vd.vt + ind, id)
+          else
+            VertexData(id, c / 2, ind, id)
+        case _ => vd
+      }
+    })
+    // one job: the delta pass and the updated vertices
+    val vertexCount = fullGraph.numVertices
+    // fg is materialized: nothing reads the union or the
+    // neighborhoods any more
+    scope.release(touched +: WccUtil.cached(union): _*)
     Failpoint("in merge")
     // the count above materialized the cached vertices, so the
     // concurrent fold only re-reads blocks — no racing computation.
@@ -194,8 +223,7 @@ object IncrementalWCC {
       try detGlobalCC(fullGraph.vertices, vertexCount)
       finally jobProps.foreach { case (k, _) => sc.setLocalProperty(k, null) }
     })
-    MergeResult(fullGraph, fg, bNew, bBorder, vertexCount, perPart.map(_._2).sum,
-      globalCCF, nbrs)
+    MergeResult(fullGraph, fg, bNew, bBorder, vertexCount, globalCCF, delta)
   }
 
   /** the local properties `SparkContext.setJobGroup` sets */
@@ -235,121 +263,139 @@ object IncrementalWCC {
     s / vertexCount
   }
 
-  /** Post-merge neighborhoods for border/new vertices only
-   * (reference `:120-130`), built with a groupByKey shuffle rather
-   * than an aggregateMessages array-concat combiner: the concat
-   * combiner left-folds `_ ++ _`, reallocating the growing array once
-   * per message — O(D²/P) allocation churn for a degree-D vertex,
-   * which the hub-arrival skew probe measured as tens of GiB of
-   * garbage on a 202k-degree hub. groupByKey buffers the group
-   * once and converts to an array once: O(D) state and
-   * allocations, any skew. */
-  private[wcc] def touchedNeighborhoods(graph: Graph[VertexData, Int],
-      bBorder: Broadcast[Set[Long]], bNew: Broadcast[Set[Long]])
-      : RDD[(Long, Array[Long])] = graph.edges
-    .flatMap { e =>
-      // capture eagerly: GraphX edge iterators reuse the Edge object
-      val u = e.srcId; val v = e.dstId
-      val border = bBorder.value; val nw = bNew.value
-      val touched = (id: Long) => border.contains(id) || nw.contains(id)
-      (if (touched(u)) (u, v) :: Nil else Nil) :::
-        (if (touched(v)) (v, u) :: Nil else Nil)
-    }
-    .groupByKey()
-    .mapValues { it => val a = it.toArray; java.util.Arrays.sort(a); a }
+  /** One partition's touched (border/new) vertices, ascending, with
+   * their sorted merged neighborhoods. */
+  private final class Touched(val ids: Array[Long], val nbrs: Array[Array[Long]])
+      extends Serializable
 
-  /** Delta triangle-stat update (reference `IncrementalWCC.scala:114-181`):
-   * only border/new vertices get (possibly partial) recounts, via
-   * intersections of their post-merge neighborhoods restricted by the
-   * reference's newEdge/borderEdge/newVt flag logic. `touchedNbrs`
-   * must be [[touchedNeighborhoods]] of this same graph. Returns the
-   * updated graph, cached in `scope` with its vertices materialized,
-   * and their count. */
-  private def updateVertexData(graph: Graph[VertexData, Int],
-      bBorder: Broadcast[Set[Long]], bNew: Broadcast[Set[Long]],
-      touchedNbrs: RDD[(Long, Array[Long])],
-      scope: Fixpoint.CacheScope): (Graph[VertexData, Int], Long) = {
-    // outerJoinVertices caches a graph of another vertex type itself
-    val ng: Graph[(VertexData, Array[Long]), Int] =
-      scope.own(graph.outerJoinVertices(touchedNbrs)((_, vd, a) =>
-        (vd, a.getOrElse(Array.empty[Long]))))
-
-    // per-edge delta counters with the reference's flag logic
-    // (`:132-160`): counter counts common neighbors w of a
-    // border-border or new-incident edge, incrementing only when the
-    // edge is new-incident or w itself is new; otherwise the shared
-    // newVt flag is cleared. i = 1 iff counter > 0 and newVt held.
-    val stats: VertexRDD[(Int, Int)] = ng.aggregateMessages[(Int, Int)](
-      ctx => {
-        val border = bBorder.value; val nw = bNew.value
-        val borderEdge = border.contains(ctx.srcId) && border.contains(ctx.dstId)
-        val newEdge = nw.contains(ctx.srcId) || nw.contains(ctx.dstId)
-        if (newEdge || borderEdge) {
-          // skewed pairs (hub-leaf edges dominate a power-law batch)
-          // gallop inside the kernel: O(min * log max) instead of the
-          // merge scan's O(D) per incident edge of a degree-D hub
-          // (the skew probe's super-linear wall term)
-          var c = 0; var newVt = true
-          SortedIntersect.visitCommons(ctx.srcAttr._2, ctx.dstAttr._2) { x =>
-            if (x != ctx.srcId && x != ctx.dstId) {
-              if (newEdge || nw.contains(x)) c += 1 else newVt = false
-            }
+  /** Post-merge neighborhoods of the border/new vertices only
+   * (reference `:120-130`), one [[Touched]] block per partition of
+   * `part`: every merged edge goes as a slot to the partition of each
+   * of its touched endpoints, which groups the slots per vertex — O(D)
+   * state and allocations for a degree-D vertex, any skew. */
+  private def touchedNeighborhoods(graph: Graph[VertexData, Int], isTouched: Long => Boolean,
+      part: HashPartitioner): RDD[(Int, Touched)] =
+    RefineState.pairSlots(graph.edges.map(e => (e.srcId, e.dstId)), part, isTouched)
+      .mapPartitions({ it =>
+        val byId = new java.util.HashMap[Long, ArrayBuilder.ofLong]()
+        it.foreach { case (_, s) =>
+          var k = 0
+          while (k < s.self.length) {
+            byId.computeIfAbsent(s.self(k), _ => new ArrayBuilder.ofLong) += s.nbr(k)
+            k += 1
           }
-          val ind = if (c > 0 && newVt) 1 else 0
-          ctx.sendToSrc((c, ind)); ctx.sendToDst((c, ind))
         }
-      },
-      (x, y) => (x._1 + y._1, x._2 + y._2))
+        val ids = new Array[Long](byId.size)
+        var i = 0
+        byId.keySet.forEach { v => ids(i) = v; i += 1 }
+        java.util.Arrays.sort(ids)
+        val nbrs = ids.map { v => val a = byId.get(v).result(); java.util.Arrays.sort(a); a }
+        Iterator((TaskContext.getPartitionId(), new Touched(ids, nbrs)))
+      }, preservesPartitioning = true)
 
-    // join (`:163-178`): border vertices ADD deltas; new vertices get
-    // absolute counts; both get cId reset to self (VertexData
-    // constructor default — reference quirk). Untouched vertices keep
-    // their data.
-    val updated = scope.own(graph.outerJoinVertices(stats) { (id, vd, sOpt) =>
-      sOpt match {
-        case Some((c, ind)) if c != 0 || ind != 0 =>
-          if (bBorder.value.contains(id))
-            VertexData(id, vd.t + c / 2, vd.vt + ind, id)
-          else
-            VertexData(id, c / 2, ind, id)
-        case _ => vd
-      }
-    })
-    val n = updated.numVertices
-    scope.release(WccUtil.cached(ng): _*)
-    (updated, n)
-  }
+  /** One partition's [[deltaTriangles]]: its touched vertices,
+   * ascending, with their (c, ind) sums, and the canonical keys
+   * (lo(k), hi(k)) of the triangle edges it flagged. */
+  private[wcc] final class Delta(val ids: Array[Long], val c: Array[Int], val ind: Array[Int],
+      val lo: Array[Long], val hi: Array[Long]) extends Serializable
 
-  /** Canonical (min, max) keys of every merged-graph edge belonging
-   * to a triangle that a BATCH edge closes: for each batch edge
-   * (u, v) — whose endpoints are touched by construction — every
-   * common merged-graph neighbor w of u and v witnesses the new
-   * triangle {u, v, w}, and all three of its edges are flagged.
-   * Together with the batch-invariant bulk flag set this is EXACTLY
-   * the merged graph's positive-support edge set: adjacency only
-   * grows across a merge (batch edges are new, nothing is deleted),
-   * so a bulk-flagged edge stays flagged, and any triangle absent
-   * from the bulk graph contains >= 1 batch edge and is enumerated
-   * here (pinned flag-set-equal to the from-scratch
-   * `TriangleStats.edgeSupport` path by IncrementalWCCSpec).
-   * Output size is O(new triangles); it may repeat a key, which the
-   * seeding's edge filter tolerates. */
-  private[wcc] def deltaFlags(newEdges: RDD[Edge[Int]],
-      touchedNbrs: RDD[(Long, Array[Long])]): RDD[(Long, Long)] = {
-    newEdges.map(e => (e.srcId, e.dstId))
-      .join(touchedNbrs)
-      .map { case (u, (v, nu)) => (v, (u, nu)) }
-      .join(touchedNbrs)
-      .flatMap { case (v, ((u, nu), nv)) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        @inline def canon(a: Long, b: Long): (Long, Long) =
-          (math.min(a, b), math.max(a, b))
-        SortedIntersect.visitCommons(nu, nv) { w =>
-          // w == u / w == v impossible: no self-loops in either region
-          out += canon(u, v); out += canon(u, w); out += canon(v, w)
+  /** Delta triangle-stat update (reference `IncrementalWCC.scala:114-181`)
+   * and the batch's new triangle edges, in one pass over the
+   * [[touchedNeighborhoods]] blocks:
+   *  - each touched neighborhood goes once to every other partition
+   *    holding a touched neighbor of it (never once per edge, so a hub
+   *    costs at most one copy per partition);
+   *  - one stage intersects the two ends' neighborhoods of every
+   *    touched–touched edge with [[SortedIntersect]], at each end.
+   * Those are exactly the edges the reference recounts: `newEdge ||
+   * borderEdge` holds iff both endpoints are touched. Per edge, c
+   * counts the common neighbors w for which the edge is new-incident
+   * or w itself is new; any other w clears the edge's newVt flag, and
+   * ind = 1 iff c > 0 and newVt held. Each touched vertex sums (c, ind)
+   * over its touched–touched edges.
+   *
+   * Each common neighbor w of a touched–touched edge (u, v) closes the
+   * triangle {u, v, w}: u flags its slots of v and w, v its slots of u
+   * and w, so every edge of the triangle is flagged at each touched
+   * endpoint. A flagged edge's key is emitted by its touched endpoint
+   * of lower id: once over all partitions. Together with the bulk flags
+   * these keys are EXACTLY the merged graph's positive-support edge
+   * set: adjacency only grows across a merge, so a bulk-flagged edge
+   * stays flagged; a triangle absent from the bulk graph has a batch
+   * edge, both of whose endpoints are touched; and every key lies on a
+   * merged-graph triangle (pinned to `TriangleStats.edgeSupport` by
+   * IncrementalWCCSpec). */
+  private def deltaTriangles(touched: RDD[(Int, Touched)], isTouched: Long => Boolean,
+      bNew: Broadcast[Set[Long]], part: HashPartitioner): RDD[(Int, Delta)] = {
+    val shipped = RefineState.exchange(touched.mapPartitions { it =>
+      val (pid, b) = it.next()
+      val ids = new Array[ArrayBuilder.ofLong](part.numPartitions)
+      val sets = new Array[ArrayBuilder.ofRef[Array[Long]]](part.numPartitions)
+      val stamp = new Array[Int](part.numPartitions)
+      var i = 0
+      while (i < b.ids.length) {
+        b.nbrs(i).foreach { v =>
+          val q = part.getPartition(v)
+          if (q != pid && stamp(q) != i + 1 && isTouched(v)) {
+            stamp(q) = i + 1
+            if (ids(q) == null) {
+              ids(q) = new ArrayBuilder.ofLong; sets(q) = new ArrayBuilder.ofRef[Array[Long]]
+            }
+            ids(q) += b.ids(i); sets(q) += b.nbrs(i)
+          }
         }
-        out
+        i += 1
       }
+      Iterator.range(0, part.numPartitions).filter(ids(_) != null)
+        .map(q => (q, new SameSets(ids(q).result(), sets(q).result())))
+    }, part)
+    touched.zipPartitions(shipped, preservesPartitioning = true) { (bIt, sIt) =>
+      val (pid, b) = bIt.next()
+      val nw = bNew.value
+      val remote = new java.util.HashMap[Long, Array[Long]]()
+      sIt.foreach { case (_, s) => s.ids.indices.foreach(k => remote.put(s.ids(k), s.sets(k))) }
+      val c = new Array[Int](b.ids.length)
+      val ind = new Array[Int](b.ids.length)
+      val lo = new ArrayBuilder.ofLong
+      val hi = new ArrayBuilder.ofLong
+      var i = 0
+      while (i < b.ids.length) {
+        val u = b.ids(i); val nu = b.nbrs(i)
+        val flagged = new Array[Boolean](nu.length)
+        var j = 0
+        while (j < nu.length) {
+          val v = nu(j)
+          if (isTouched(v)) {
+            val nv = if (part.getPartition(v) == pid)
+              b.nbrs(java.util.Arrays.binarySearch(b.ids, v)) else remote.get(v)
+            val newEdge = nw.contains(u) || nw.contains(v)
+            var cuv = 0; var newVt = true
+            // skewed pairs (hub-leaf edges dominate a power-law batch)
+            // gallop inside the kernel: O(min * log max) instead of the
+            // merge scan's O(D) per incident edge of a degree-D hub
+            SortedIntersect.visitCommons(nu, nv) { w =>
+              if (w != u && w != v) {
+                if (newEdge || nw.contains(w)) cuv += 1 else newVt = false
+                flagged(j) = true
+                flagged(java.util.Arrays.binarySearch(nu, w)) = true
+              }
+            }
+            c(i) += cuv
+            if (cuv > 0 && newVt) ind(i) += 1
+          }
+          j += 1
+        }
+        j = 0
+        while (j < nu.length) {
+          if (flagged(j) && (u < nu(j) || !isTouched(nu(j)))) {
+            lo += math.min(u, nu(j)); hi += math.max(u, nu(j))
+          }
+          j += 1
+        }
+        i += 1
+      }
+      Iterator((pid, new Delta(b.ids, c, ind, lo.result(), hi.result())))
+    }
   }
 
   /** Incremental initial partition (reference
@@ -363,9 +409,9 @@ object IncrementalWCC {
    * harmless), so no `Graph` is built for the flagged or the pruned
    * graph. `precomputedKeep`, when present, is the merged graph's full
    * positive-support canonical key set assembled incrementally
-   * (bulk-invariant flags + [[deltaFlags]]); otherwise the support
-   * kernel ([[TriangleStats.edgeSupport]]) flags the edges from
-   * scratch.
+   * (bulk-invariant flags + the [[deltaTriangles]] keys); otherwise
+   * the support kernel ([[TriangleStats.edgeSupport]]) flags the edges
+   * from scratch.
    *
    * Returns the converged seeding, cached in `scope`, as the fixed-5
    * loop's seed generation ([[InitialPartition.refineSeed]]): its ghost
@@ -432,51 +478,6 @@ object IncrementalWCC {
     r
   }
 
-  /** Exact shipped-element volume of the [[deltaFlags]] join for this
-   * batch: each batch edge ships BOTH endpoint neighborhoods, so the
-   * volume is sum over batch edges of (deg(src) + deg(dst)) in the
-   * MERGED graph — computable from the already-cached `touchedNbrs`
-   * array lengths (batch endpoints are touched by construction).
-   * One touched-sized job; the driver gate below reads it. */
-  private[wcc] def deltaVolume(newEdges: RDD[Edge[Int]],
-      touchedNbrs: RDD[(Long, Array[Long])]): Long = {
-    val degs = touchedNbrs.mapValues(_.length.toLong)
-    newEdges
-      .flatMap(e => Iterator((e.srcId, 1L), (e.dstId, 1L)))
-      .reduceByKey(_ + _)
-      .join(degs)
-      .map { case (_, (cnt, deg)) => cnt * deg }
-      .fold(0L)(_ + _)
-  }
-
-  /** Driver-side gate precheck (ADVICE r15): every batch edge ships
-   * at least its own two endpoints' adjacency entries (each merged
-   * endpoint degree >= 1), so 2 x batchEdges lower-bounds the
-   * [[deltaVolume]] the probe would measure. A batch that busts the
-   * 2 x |E| x fraction budget on that bound alone — e.g. the
-   * whole-region streaming fold, which previously paid a shuffle
-   * just to decide to fall back — skips the distributed probe
-   * entirely. Returns true iff the probe is still worth running. */
-  private[wcc] def deltaPrecheck(totalEdges: Long, batchEdges: Long,
-      fraction: Double): Boolean =
-    2.0 * batchEdges <= 2.0 * totalEdges * fraction
-
-  /** Delta-path cost fraction above which [[run]] falls back to the
-   * from-scratch support exchange. The gate compares the delta
-   * flagging's ACTUAL shuffle volume ([[deltaVolume]] — what the
-   * neighborhood-shipping join moves) against the from-scratch
-   * exchange's ~O(total degree) adjacency shuffle, NOT the
-   * touched-vertex count: a count gate has a hub-skew hole (ADVICE
-   * r13/r14 — a micro-batch touching one 200k-degree hub counts few
-   * vertices yet pays O(batch_edges x hub_degree)); the volume gate
-   * prices exactly that term. Calibration: the sf0.1 replay's
-   * 0.8-id-split "batch" touches ~37% of all edges and measured
-   * 3.7-5.0 s delta vs 2.2-2.4 s from-scratch (PERF.md round-18) —
-   * at 10% of total degree the delta join moves an order of
-   * magnitude less data than the exchange it replaces, keeping the
-   * crossover comfortably on the winning side of both regimes. */
-  val DeltaFlagMaxVolumeFraction = 0.1
-
   /** One micro-batch (reference `IncrementalWCC.scala:27-71`).
    * CONSUMES `state` by default: the superseded state graph and every
    * intermediate graph generation are uncached once the new state is
@@ -488,13 +489,13 @@ object IncrementalWCC {
    * twin fold from) and remain its owner. A failed fold leaves nothing
    * cached beyond its input.
    *
-   * `deltaFlagMaxVolumeFraction` tunes the incremental-flagging gate
-   * (see [[DeltaFlagMaxVolumeFraction]]); `PositiveInfinity` forces
-   * the delta path without paying the volume probe (parity tests and
-   * the continuously-verified `g_wcc_incremental_delta` row).
-   * `expectDeltaPath = true` makes the call fail LOUDLY if the gate
-   * falls back — for callers whose purpose is exercising the delta
-   * path, where a silent fallback would hollow out the check.
+   * The seeding keeps the merged graph's triangle edges: the state's
+   * `bulkFlagged` set plus the keys of the merge's delta triangle pass
+   * ([[deltaTriangles]]), whatever the batch's size or skew. Without
+   * `bulkFlagged` it flags the merged graph from scratch.
+   * `expectDeltaPath = true` makes the call fail LOUDLY in that case —
+   * for callers whose purpose is exercising the delta path, where a
+   * silent fallback would hollow out the check.
    *
    * Between the merge and the graft-back the fold holds ONE vertex-block
    * state ([[RefineState]]) and builds no `Graph`: the seeding builds
@@ -507,38 +508,19 @@ object IncrementalWCC {
    * vertex shuffle. */
   def run(state: State, newEdges: RDD[Edge[Int]],
       releaseInput: Boolean = true,
-      deltaFlagMaxVolumeFraction: Double = DeltaFlagMaxVolumeFraction,
       expectDeltaPath: Boolean = false): State = Fixpoint.returning { scope =>
+    require(!expectDeltaPath || state.bulkFlagged.isDefined,
+      "IncrementalWCC.run: expectDeltaPath — state.bulkFlagged is None, so " +
+        "the fold would flag the merged graph's triangle edges from scratch")
     val m = timed("merge")(merge(state, newEdges, scope))
     try {
-    // incremental triangle flagging for genuinely micro batches: the
-    // state's batch-invariant bulk flag set + the new triangles this
-    // batch's edges close (the merged neighborhoods are already in
-    // hand from the delta stat update) — instead of a full support
-    // exchange over the near-bulk-sized merged graph. Adaptive on the
-    // delta join's actual shuffle volume vs the ~2|E| elements the
-    // from-scratch exchange ships.
-    val useDelta = state.bulkFlagged.isDefined &&
-      (deltaFlagMaxVolumeFraction.isPosInfinity || {
-        val totalEdges = m.fullGraph.numEdges
-        deltaPrecheck(totalEdges, m.batchEdges, deltaFlagMaxVolumeFraction) &&
-          deltaVolume(newEdges, m.touchedNbrs) <=
-            2.0 * totalEdges * deltaFlagMaxVolumeFraction
-      })
-    require(!expectDeltaPath || useDelta,
-      "IncrementalWCC.run: expectDeltaPath — the delta-flag volume " +
-        "gate fell back to the from-scratch support exchange (batch " +
-        "too large or too hub-heavy, or state.bulkFlagged is None)")
-    val keep = state.bulkFlagged
-      .filter(_ => useDelta)
-      .map(_.union(deltaFlags(newEdges, m.touchedNbrs)))
-    val seed = timed("initial-partition")(
-      performInitialPartition(m.fullGraph, scope, precomputedKeep = keep))
+    val seed = timed("initial-partition")(performInitialPartition(m.fullGraph, scope,
+      precomputedKeep = state.bulkFlagged.map(_.union(m.deltaKeys))))
     Failpoint("after initial-partition")
     val globalCC = WccUtil.joinUnwrapped(m.globalCCF)
     // the seed blocks are materialized: nothing reads the merge's
     // surfaces any more
-    scope.release(m.touchedNbrs +: (WccUtil.cached(m.merged) ++ WccUtil.cached(m.fullGraph)): _*)
+    scope.release(m.delta +: (WccUtil.cached(m.merged) ++ WccUtil.cached(m.fullGraph)): _*)
     val refined = timed("refine")(refinePartition(seed, globalCC, m.vertexCount, scope))
     Failpoint("after refine")
 
@@ -564,10 +546,10 @@ object IncrementalWCC {
     State(resultGraph, state.stats, state.bulkFlagged)
     } catch {
       case t: Throwable =>
-        // a failure between the merge and the state hand-off — the
-        // expectDeltaPath require included — must not abandon the
-        // concurrent global-cc fold unobserved: its job would keep
-        // running on the shared context with any failure swallowed
+        // a failure between the merge and the state hand-off must not
+        // abandon the concurrent global-cc fold unobserved: its job
+        // would keep running on the shared context with any failure
+        // swallowed
         try m.globalCCF.join() catch { case _: Throwable => () }
         throw t
     }
@@ -583,9 +565,7 @@ object IncrementalWCC {
   def testStream(spark: org.apache.spark.sql.SparkSession,
       canonicalEdges: org.apache.spark.sql.DataFrame,
       bulkToStreamRatio: Double = 0.8,
-      microBatchCount: Int = 1,
-      bulkStatsFor: Option[Double => TriangleStats.Result] = None)
-      : org.apache.spark.sql.DataFrame = {
+      microBatchCount: Int = 1): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, greatest, max}
     // an empty edge set nulls the max aggregate — fail with the
     // operator's own message instead of an NPE from getLong
@@ -611,11 +591,7 @@ object IncrementalWCC {
       // re-pin to this count (see merge()).
       val bulkParts = math.max(8, math.min(edgeRdd.getNumPartitions,
         (bulk.count() / 250000L).toInt))
-      // fromEdges caches its edges; prepare consumes the repartitioned graph
-      val bulkGraph = Graph.fromEdges(bulk, 0)
-      scope.adopt(WccUtil.cached(bulkGraph): _*)
-      var state = prepare(bulkGraph.partitionBy(PartitionStrategy.EdgePartition2D, bulkParts),
-        bulkStatsFor.map(f => f(splitVertex)))
+      var state = prepareEdges(bulk, bulkParts)
       val microBatchSize = math.floor((maxVertex - splitVertex) / microBatchCount)
       (1 to microBatchCount).foreach { i =>
         val lower = splitVertex + (i - 1) * microBatchSize

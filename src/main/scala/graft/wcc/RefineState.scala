@@ -493,9 +493,10 @@ private[graft] object RefineState {
     }, part)
 
   /** Each pair (s, d) as the slot (s, d) at s's partition and (d, s)
-   * at d's, in the [[EdgeSlots]] form without labels. */
-  private[wcc] def pairSlots(pairs: RDD[(Long, Long)], part: HashPartitioner)
-      : RDD[(Int, EdgeSlots)] =
+   * at d's, in the [[EdgeSlots]] form without labels — only at the
+   * endpoints `at` accepts. */
+  private[wcc] def pairSlots(pairs: RDD[(Long, Long)], part: HashPartitioner,
+      at: Long => Boolean = _ => true): RDD[(Int, EdgeSlots)] =
     exchange(pairs.mapPartitions { it =>
       val self = new Array[ArrayBuilder.ofLong](part.numPartitions)
       val nbr = new Array[ArrayBuilder.ofLong](part.numPartitions)
@@ -504,7 +505,7 @@ private[graft] object RefineState {
         if (self(q) == null) { self(q) = new ArrayBuilder.ofLong; nbr(q) = new ArrayBuilder.ofLong }
         self(q) += u; nbr(q) += v
       }
-      it.foreach { case (s, d) => add(s, d); add(d, s) }
+      it.foreach { case (s, d) => if (at(s)) add(s, d); if (at(d)) add(d, s) }
       Iterator.range(0, part.numPartitions).filter(self(_) != null).map(q =>
         (q, new EdgeSlots(self(q).result(), nbr(q).result(), null, null, null)))
     }, part)

@@ -105,75 +105,15 @@ object TriangleStats {
       graph: Graph[V, _]): RDD[((Long, Long), Int)] =
     supports(graph).flatMap(_._2.edges((s, d, c) => ((s, d), c)))
 
-  def run(graph: Graph[Int, Int]): Result =
-    Fixpoint.returning(result(supports(graph), _))(_.cached)
-
-  /** Triangle stats of the id-restricted subgraph (both endpoints <
-   * `split`) DERIVED from a precomputed FULL symmetric adjacency
-   * (vid, sorted nbrs) instead of a fresh adjacency exchange:
-   * the subgraph's neighbor lists are order-preserving filters of
-   * the full lists, so per-edge supports come straight from the
-   * native merge-scan intersection over the filtered arrays —
-   * value-identical to run() on the restricted graph (spec-pinned).
-   * Lets the IDWCC replay harness reuse a session's memoized
-   * adjacency for its bulk-prepare phase instead of re-exchanging
-   * the bulk adjacency from scratch. */
-  def restrictedResult(adj: org.apache.spark.sql.DataFrame,
-      canonical: org.apache.spark.sql.DataFrame, splitId: Double): Result = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.GraftExpressions.intersectCount
-    // a vertex of the restricted graph = a vertex below the split
-    // with >= 1 neighbor below the split (Graph.fromEdges induces
-    // the vertex set from the surviving edges' endpoints)
-    val bulkAdj = adj
-      .where(col("vid") < splitId)
-      .select(col("vid"), filter(col("nbrs"), n => n < splitId).as("nbrs"))
-      .where(size(col("nbrs")) > 0)
-    val sup = canonical.where(col("src") < splitId && col("dst") < splitId)
-      .join(bulkAdj.select(col("vid").as("src"), col("nbrs").as("na")), "src")
-      .join(bulkAdj.select(col("vid").as("dst"), col("nbrs").as("nb")), "dst")
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        intersectCount(col("na"), col("nb")).cast("int").as("cnt"))
-    val verts = bulkAdj.select(col("vid").cast("long")).rdd.map(_.getLong(0))
-    val part = new HashPartitioner(verts.getNumPartitions)
-    val slots = sup.rdd.flatMap { r =>
-      val (s, d, c) = (r.getLong(0), r.getLong(1), r.getInt(2))
-      Iterator((s, (d, c)), (d, (s, c)))
-    }.partitionBy(part)
-    val blocks = verts.map((_, ())).partitionBy(part).zipPartitions(slots,
-      preservesPartitioning = true) { (vIt, sIt) =>
-      Iterator((org.apache.spark.TaskContext.getPartitionId(),
-        supportsOf(vIt.map(_._1).toArray, sIt.toArray)))
-    }
-    Fixpoint.returning(result(blocks, _))(_.cached)
-  }
-
-  /** One partition's [[Supports]] from its vertex ids and its slots
-   * (self, (neighbor, support)). */
-  private def supportsOf(vs: Array[Long], slots: Array[(Long, (Long, Int))]): Supports = {
-    java.util.Arrays.sort(vs)
-    val sorted = slots.sortBy(s => (s._1, s._2._1))
-    val offs = new Array[Int](vs.length + 1)
-    sorted.foreach { s =>
-      val i = java.util.Arrays.binarySearch(vs, s._1)
-      require(i >= 0, s"edge endpoint ${s._1} is not a vertex of its partition")
-      offs(i + 1) += 1
-    }
-    var i = 0
-    while (i < vs.length) { offs(i + 1) += offs(i); i += 1 }
-    new Supports(vs, offs, sorted.map(_._2._1), sorted.map(_._2._2))
-  }
-
-  /** The shared tail of [[run]] and [[restrictedResult]]: both surfaces
-   * read off the support blocks and materialized — the pruned graph's
-   * vertices and edges and the full stats — in ONE job, after which
-   * the blocks are released; only the surfaces stay in `scope`. They
-   * keep the blocks' vertex partitioner. An edge with support > 0
-   * implies both endpoints have t > 0, so vt (counted over triangle
-   * edges) equals the pruned-graph degree (reference
+  /** Both surfaces read off the support blocks and materialized — the
+   * pruned graph's vertices and edges and the full stats — in ONE job,
+   * after which the blocks are released; only the surfaces stay
+   * cached. They keep the blocks' vertex partitioner. An edge with
+   * support > 0 implies both endpoints have t > 0, so vt (counted over
+   * triangle edges) equals the pruned-graph degree (reference
    * `DistributedWCC.scala:109-112`). */
-  private def result(blocks: RDD[(Int, Supports)], scope: Fixpoint.CacheScope): Result = {
-    scope.cache(blocks, StorageLevel.MEMORY_AND_DISK)
+  def run(graph: Graph[Int, Int]): Result = Fixpoint.returning { scope =>
+    val blocks = scope.cache(supports(graph), StorageLevel.MEMORY_AND_DISK)
     val fullStats = VertexRDD(blocks.mapPartitions({ it =>
       val b = it.next()._2
       Iterator.range(0, b.ids.length).map(i => (b.ids(i), (b.t(i), b.vt(i))))
@@ -194,5 +134,5 @@ object TriangleStats {
     scope.release(blocks)
     Failpoint("after triangle stats")
     Result(pruned, fullStats)
-  }
+  }(_.cached)
 }

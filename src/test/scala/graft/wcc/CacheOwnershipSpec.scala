@@ -55,6 +55,26 @@ class CacheOwnershipSpec extends SparkSpec {
     unpersist(state.cached)
   }
 
+  test("the memoized IDWCC bulk prepare leaves only its state and the stream edges cached") {
+    // a session of its own: the memo is per session, so no other
+    // suite's prepare on the shared session can answer this call
+    val session = spark.newSession()
+    val dir = "/root/testdata/sf0.001"
+    val start = persisted()
+    graft.queries.GraphQueries.canonEdges(session, dir)
+    val before = persisted()
+    val (state, stream) = graft.queries.GraphQueries.idwccShared(session, dir)
+    try {
+      stream.unpersist(blocking = true)
+      assert(persisted() -- before === idsOf(state.cached))
+    } finally {
+      unpersist(state.cached)
+      graft.queries.SessionMemo.clear(session)
+      (before -- start).foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
+        .foreach(_.unpersist(blocking = false)))
+    }
+  }
+
   test("DistributedWCC.run leaves only its Output surfaces cached") {
     val g = graphOf(spark, pairs)
     val before = persisted()

@@ -2,7 +2,7 @@ package graft.wcc
 
 import graft.SparkSpec
 import graft.graph.{EdgeOps, Fixpoint}
-import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.graphx.Edge
 
 class IncrementalWCCSpec extends SparkSpec {
   import GraphFixtures._
@@ -49,72 +49,31 @@ class IncrementalWCCSpec extends SparkSpec {
     assert(out.stats === state.stats)
   }
 
-
-
-
-
-  test("deltaVolume prices each batch edge at the sum of its endpoint degrees") {
+  test("a hub-heavy batch folds on the delta pass with the from-scratch flags and labels") {
     // star: hub 0 - {1..200}, plus triangle edge (1,2) for nonzero stats
     val bulkEdges = (1L to 200L).map(i => (0L, i)) :+ (1L, 2L)
     val state = IncrementalWCC.prepare(graphOf(spark, bulkEdges))
-    // batch: 5 new leaves on the hub — merged deg(0) = 205, deg(new) = 1
+    // 5 new leaves on the hub, and 2 of them close triangles with it:
+    // every batch edge drags in the hub's 205-long merged neighborhood
     val batch = spark.sparkContext.parallelize(
-      (201L to 205L).map(i => Edge(0L, i, 1)))
+      (201L to 205L).map(i => Edge(0L, i, 1)) ++ Seq(Edge(201L, 202L, 1), Edge(3L, 203L, 1)))
     Fixpoint.using { scope =>
       val m = IncrementalWCC.merge(state, batch, scope)
-      // hub endpoint: 5 incident batch edges x degree 205; each new
-      // leaf: 1 incident batch edge x degree 1
-      assert(IncrementalWCC.deltaVolume(batch, m.touchedNbrs) === 5L * 205L + 5L)
+      val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
+        .filter(_._2 > 0).map(_._1).collect().toSet
+      val keys = m.deltaKeys.collect()
+      assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
+      assert(state.bulkFlagged.get.collect().toSet ++ keys === fromScratch)
       m.globalCCF.join()
     }
-  }
-
-  test("volume gate falls back on a hub-heavy batch that a count gate would pass") {
-    val bulkEdges = (1L to 200L).map(i => (0L, i)) :+ (1L, 2L)
-    val state = IncrementalWCC.prepare(graphOf(spark, bulkEdges))
-    // 6 touched vertices of 206 (~3% — far under any count gate), but
-    // the delta join would ship the hub's 205-length neighborhood per
-    // batch edge (volume 1030 vs gate 2 * 206 * 0.1 = 41.2): the
-    // volume gate must take the from-scratch exchange, which
-    // expectDeltaPath surfaces loudly (ADVICE hub-skew hazard)
-    val batch = spark.sparkContext.parallelize(
-      (201L to 205L).map(i => Edge(0L, i, 1)))
+    def labels(s: IncrementalWCC.State) =
+      s.graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
+    val fast = IncrementalWCC.run(state, batch, releaseInput = false, expectDeltaPath = true)
+    val slow = IncrementalWCC.run(state.copy(bulkFlagged = None), batch, releaseInput = false)
+    assert(labels(fast) === labels(slow))
+    // without the bulk flags the fold cannot take the delta path
     val e = intercept[IllegalArgumentException] {
-      IncrementalWCC.run(state, batch, releaseInput = false,
-        expectDeltaPath = true)
-    }
-    assert(e.getMessage.contains("expectDeltaPath"))
-    // a genuinely light batch on the same state passes the gate:
-    // one leaf-leaf edge ships degree-3 + degree-1 neighborhoods
-    val light = spark.sparkContext.parallelize(Seq(Edge(1L, 201L, 1)))
-    val out = IncrementalWCC.run(state, light, releaseInput = false,
-      expectDeltaPath = true)
-    assert(out.graph.vertices.count() > 0)
-  }
-
-  test("driver-side precheck skips the volume probe for non-micro batches, keeps it for micro ones") {
-    // ADVICE r15: the whole-region streaming fold paid a distributed
-    // probe join just to decide to fall back. The precheck's 2x
-    // batch-edge lower bound settles obviously-large batches on the
-    // driver: 60% of edges arriving can never fit a 10% volume budget
-    assert(!IncrementalWCC.deltaPrecheck(totalEdges = 1000L,
-      batchEdges = 600L, fraction = 0.1))
-    // a genuinely micro batch passes the precheck — the exact volume
-    // probe (which prices hub skew the count bound cannot see) then
-    // decides, exactly as before
-    assert(IncrementalWCC.deltaPrecheck(totalEdges = 1000L,
-      batchEdges = 50L, fraction = 0.1))
-    // boundary: the bound equals the budget — probe still runs (<=)
-    assert(IncrementalWCC.deltaPrecheck(totalEdges = 1000L,
-      batchEdges = 100L, fraction = 0.1))
-    // end-to-end: a batch past the precheck bound falls back loudly
-    // under expectDeltaPath, same observable contract as the hub case
-    val bulkEdges = (1L to 200L).map(i => (0L, i)) :+ (1L, 2L)
-    val state = IncrementalWCC.prepare(graphOf(spark, bulkEdges))
-    val bigBatch = spark.sparkContext.parallelize(
-      (1L to 150L).map(i => Edge(300L + i, 600L + i, 1)))
-    val e = intercept[IllegalArgumentException] {
-      IncrementalWCC.run(state, bigBatch, releaseInput = false,
+      IncrementalWCC.run(state.copy(bulkFlagged = None), batch, releaseInput = false,
         expectDeltaPath = true)
     }
     assert(e.getMessage.contains("expectDeltaPath"))
@@ -187,27 +146,6 @@ class IncrementalWCCSpec extends SparkSpec {
     testStreamSane(EdgeOps.canonicalize(ParityGraph.load(spark)))
   }
 
-  private def derivedBulkStatsReplay(canon: org.apache.spark.sql.DataFrame): Unit = {
-    val plain = IncrementalWCC.testStream(spark, canon, 0.8, 1).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val adj = graft.graph.GraphAlgs.weightedAdjacency(EdgeOps.symmetrize(canon))
-    val derived = IncrementalWCC.testStream(spark, canon, 0.8, 1,
-      bulkStatsFor = Some(split =>
-        TriangleStats.restrictedResult(adj, canon, split))).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(derived === plain)
-  }
-
-  test("testStream with derived bulk stats equals the from-scratch replay") {
-    val raw = EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv")
-    val canon = EdgeOps.canonicalize(raw)
-    derivedBulkStatsReplay(canon)
-  }
-
-  test(s"testStream with derived bulk stats equals the from-scratch replay (${ParityGraph.Name})") {
-    derivedBulkStatsReplay(EdgeOps.canonicalize(ParityGraph.load(spark)))
-  }
-
   private def deltaFlagsParity(canon: org.apache.spark.sql.DataFrame): Unit = {
     val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
     val split = math.floor(maxVertex * 0.8)
@@ -215,18 +153,15 @@ class IncrementalWCCSpec extends SparkSpec {
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
     val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val state = IncrementalWCC.prepare(
-      Graph.fromEdges(bulkEdges, 0)
-        .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
+    val state = IncrementalWCC.prepareEdges(bulkEdges, bulkEdges.getNumPartitions)
     assert(state.bulkFlagged.isDefined)
     Fixpoint.using { scope =>
       val m = IncrementalWCC.merge(state, batchRdd, scope)
       val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
         .filter(_._2 > 0).map(_._1).collect().toSet
-      val incremental = state.bulkFlagged.get
-        .union(IncrementalWCC.deltaFlags(batchRdd, m.touchedNbrs))
-        .distinct().collect().toSet
-      assert(incremental === fromScratch)
+      val keys = m.deltaKeys.collect()
+      assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
+      assert(state.bulkFlagged.get.collect().toSet ++ keys === fromScratch)
       m.globalCCF.join()
     }
   }
@@ -248,13 +183,11 @@ class IncrementalWCCSpec extends SparkSpec {
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
     val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val state = IncrementalWCC.prepare(
-      Graph.fromEdges(bulkEdges, 0)
-        .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D))
-    // force the delta path regardless of the adaptive volume
-    // crossover (this fixture's 0.8-split batch is far from micro)
+    val state = IncrementalWCC.prepareEdges(bulkEdges, bulkEdges.getNumPartitions)
+    // the whole 0.8-split stream region as one batch: far from micro,
+    // it still folds on the delta pass
     val fast = IncrementalWCC.run(state, batchRdd, releaseInput = false,
-      deltaFlagMaxVolumeFraction = Double.PositiveInfinity)
+      expectDeltaPath = true)
       .graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
     val slow = IncrementalWCC.run(state.copy(bulkFlagged = None), batchRdd,
       releaseInput = false)

@@ -117,6 +117,15 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
         // the triangle support kernel
         assertOnCodec("the triangle kernel", TriangleStats.edgeSupport(graphOf(spark, edges)),
           Seq(classOf[EdgeSlots], classOf[SameSets]))
+        // the IDWCC merge's delta triangle pass
+        val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
+        scope.adopt(state.cached: _*)
+        val m = IncrementalWCC.merge(state, spark.sparkContext.parallelize(Seq(
+          org.apache.spark.graphx.Edge(3L, 4L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
+          org.apache.spark.graphx.Edge(3L, 5L, 1))), scope)
+        m.globalCCF.join()
+        assertOnCodec("the delta triangle pass", m.deltaKeys,
+          Seq(classOf[EdgeSlots], classOf[SameSets]))
       }
       release(init)
     }
@@ -201,15 +210,16 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     }
   }
 
-  test("an IDWCC micro-batch fold runs at most 13 jobs") {
+  test("an IDWCC micro-batch fold runs at most 10 jobs") {
     // bulk triangle {1,2,3}; the batch closes triangle {3,4,5} (the
     // IncrementalWCCSpec fixture). The ceiling is the count measured
-    // when the seeding moved onto the vertex blocks: 3 merge jobs, 3
-    // delta-flag gate jobs, the seeding build, 2 supersteps and the
-    // label-shipping job, 1 refine iteration and the graft-back — 12 on
+    // when the delta triangle pass replaced the delta graph, the
+    // delta-flag join and its volume gate: 3 merge jobs (batch ids,
+    // border ids, and the delta pass that materializes the merged
+    // vertices), the seeding build, 2 supersteps and the
+    // label-shipping job, 1 refine iteration and the graft-back — 9 on
     // the calling thread — plus the merge's concurrent global-cc fold,
-    // which the probe counts when its pool thread inherited the job
-    // group.
+    // which runs under the caller's job group.
     failAfter(180.seconds) {
       val (init, n) = seeded()
       calibrate(init, n)
@@ -221,7 +231,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val c = JobProbe(spark.sparkContext) {
         out = IncrementalWCC.run(state, batch, releaseInput = false)
       }
-      assert(c.jobs <= 13, s"an IDWCC micro-batch fold ran ${c.jobs} jobs")
+      assert(c.jobs <= 10, s"an IDWCC micro-batch fold ran ${c.jobs} jobs")
       release(out.graph)
       release(state.graph)
       state.bulkFlagged.foreach(_.unpersist(blocking = false))

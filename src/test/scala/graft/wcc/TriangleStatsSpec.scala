@@ -178,46 +178,4 @@ class TriangleStatsSpec extends SparkSpec {
     assert(graft.graph.SortedIntersect.count(Array(1L, 3L, 5L), Array(2L, 3L, 5L, 7L)) === 2)
     assert(graft.graph.SortedIntersect.count(Array.empty[Long], Array(1L)) === 0)
   }
-
-  private def restrictedParity(canon: org.apache.spark.sql.DataFrame): Unit = {
-    import graft.graph.EdgeOps
-    import org.apache.spark.sql.functions.{col, greatest, max}
-    val maxVertex = canon.agg(max(greatest(col("src"), col("dst"))))
-      .head().getLong(0)
-    val split = math.floor(maxVertex * 0.8) // the IDWCC harness split
-    val adj = graft.graph.GraphAlgs.weightedAdjacency(EdgeOps.symmetrize(canon))
-
-    val derived = TriangleStats.restrictedResult(adj, canon, split)
-
-    val bulkEdges = canon.where(col("src") < split && col("dst") < split)
-      .select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val direct = TriangleStats.run(Graph.fromEdges(bulkEdges, 0))
-
-    // identical (t, vt) for the identical vertex universe
-    val dStats = derived.fullStats.collect().toMap
-    val sStats = direct.fullStats.collect().toMap
-    assert(dStats === sStats)
-    // identical pruned core: vertex data and support-weighted edges
-    val dV = derived.pruned.vertices.collect().toMap
-    val sV = direct.pruned.vertices.collect().toMap
-    assert(dV === sV)
-    val dE = derived.pruned.edges.collect()
-      .map(e => ((math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)), e.attr)).toMap
-    val sE = direct.pruned.edges.collect()
-      .map(e => ((math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId)), e.attr)).toMap
-    assert(dE === sE)
-  }
-
-  test("restrictedResult equals run() on the restricted email-Eu-core graph") {
-    import graft.graph.EdgeOps
-    val canon = EdgeOps.canonicalize(
-      EdgeOps.loadCsvEdges(spark, "/root/reference/test_graph.csv"))
-    restrictedParity(canon)
-  }
-
-  test(s"restrictedResult equals run() on the restricted ${ParityGraph.Name} graph") {
-    import graft.graph.EdgeOps
-    restrictedParity(EdgeOps.canonicalize(ParityGraph.load(spark)))
-  }
 }
