@@ -119,7 +119,7 @@ object ScaleProbe {
         // the one-job step that scores them and builds the next
         val globalCC = IncrementalWCC.detGlobalCC(init.vertices, vertexCount)
         Fixpoint.using { scope =>
-          val seed = RefineState.seed(init, countTriangles = true, scope)
+          val seed = RefineState.seed(init, countTriangles = true, RefineState.in(scope))
           val next = seed.step(globalCC, vertexCount, score = true,
             countTriangles = true, RefineState.in(scope))
           println(s"[scale-probe] communities=${seed.stats.size} " +

@@ -38,6 +38,28 @@ import org.apache.spark.storage.StorageLevel
  * context has a checkpoint dir (every entry point sets one). An
  * uncut lineage grows a few stages per round and overflows the task
  * serializer's stack on deep runs.
+ *
+ * A hand-off is cut locally instead ([[CacheScope.cut]],
+ * `Round.cut`): the RDD is persisted `MEMORY_AND_DISK` and marked
+ * with `localCheckpoint()` before its first action. The first job
+ * whose lineage walk reaches it, the action that already materializes
+ * it, stores it and truncates its lineage without a job of its own
+ * (Spark's scaladoc names long GraphX lineages as the use case). Every
+ * later job then schedules only the stages after the cut, instead of
+ * re-registering the whole history of a carried state. A walk stops
+ * at the first marked RDD it meets, so a job that materializes
+ * several cuts must reach each of them directly ([[materialize]]).
+ *
+ * Invariant: a cut RDD, once released, can no longer be recomputed:
+ * its lineage is gone, and a reader of its released blocks fails
+ * where an uncut one would silently recompute them from the input.
+ * So any RDD that outlives a cut parent must be cut itself, and
+ * materialized before that parent is released.
+ *
+ * Trade-off: a local checkpoint lives in the block managers of the
+ * executors that computed it. A block lost with its executor fails
+ * the job instead of replaying the pipeline. Every entry point runs
+ * `local[N]`, where the executor and the driver die together.
  */
 object Fixpoint {
 
@@ -56,6 +78,23 @@ object Fixpoint {
       rdd.persist(level)
       adopt(rdd)
       rdd
+    }
+
+    /** [[cache]] `rdd` as a lineage cut (see "Lineage" on
+     * [[Fixpoint]]): persisted `MEMORY_AND_DISK` and checkpointed
+     * locally by the action that first materializes it. */
+    def cut[T](rdd: RDD[T]): RDD[T] = {
+      cache(rdd, StorageLevel.MEMORY_AND_DISK)
+      mark(rdd)
+    }
+
+    /** [[own]] `g` as a lineage cut: its vertices and its edges, each
+     * checkpointed locally by the action that first materializes it. */
+    def cut[VD, ED](g: Graph[VD, ED]): Graph[VD, ED] = {
+      own(g)
+      mark(g.vertices)
+      mark(g.edges)
+      g
     }
 
     /** Cache `g` and hold its vertices and edges. A GraphX operator
@@ -111,6 +150,18 @@ object Fixpoint {
     case _ => rdd
   }
 
+  /** Mark `rdd` for a local checkpoint (GraphX's vertex and edge
+   * RDDs through their partitions RDD, which holds the data). */
+  private def mark[T](rdd: RDD[T]): RDD[T] = {
+    registered(rdd).localCheckpoint()
+    rdd
+  }
+
+  /** Materialize every one of `rdds` in ONE job whose lineage walk
+   * reaches each of them, so the cuts marked on them all ride on it. */
+  def materialize(rdds: RDD[_]*): Unit =
+    rdds.head.sparkContext.union(rdds.map(_.map(_ => ()))).count()
+
   /** Run `body` in a new scope and hand the scope back with its
    * result: the caller closes it once it is done with the result.
    * If `body` throws, the scope is closed before the throw goes on. */
@@ -139,14 +190,6 @@ object Fixpoint {
 
   /** [[returning]] with nothing leaving the scope. */
   def using[T](body: CacheScope => T): T = returning(body)(_ => Nil)
-
-  /** Mark `rdd` for a reliable checkpoint if `number` is a cadence
-   * round and a checkpoint dir is set. Call before its first action. */
-  def checkpoint[T](rdd: RDD[T], number: Int): RDD[T] = {
-    if (number % CheckpointEvery == 0 && rdd.sparkContext.getCheckpointDir.isDefined)
-      rdd.checkpoint()
-    rdd
-  }
 
   /** Drives the rounds of one loop: the round counter, the
    * `maxRounds` bound, the checkpoint cadence and the release of
@@ -186,10 +229,18 @@ object Fixpoint {
         rdd
       }
 
+      /** [[cache]] `rdd` in this round's generation as a lineage cut
+       * (see "Lineage" on [[Fixpoint]]). */
+      def cut[T](rdd: RDD[T]): RDD[T] = mark(cache(rdd, StorageLevel.MEMORY_AND_DISK))
+
       /** Mark `rdd` for a reliable checkpoint if this is a cadence
        * round and a checkpoint dir is set. Call before the round's
        * action. */
-      def checkpoint[T](rdd: RDD[T]): RDD[T] = Fixpoint.checkpoint(rdd, number)
+      def checkpoint[T](rdd: RDD[T]): RDD[T] = {
+        if (number % CheckpointEvery == 0 && rdd.sparkContext.getCheckpointDir.isDefined)
+          rdd.checkpoint()
+        rdd
+      }
     }
   }
 }

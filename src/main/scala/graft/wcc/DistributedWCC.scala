@@ -15,8 +15,9 @@ import org.apache.spark.graphx._
  * SURVEY.md §4/§7: phase outputs are cached (the reference recomputes
  * the whole DAG on every action), intermediate debug CSV sinks become
  * caller-visible DataFrames/RDDs instead of hard-coded paths, and
- * the refinement's lineage is truncated by a checkpoint every
- * [[graft.graph.Fixpoint.CheckpointEvery]] generations.
+ * every phase output and refine generation is a lineage cut
+ * (`Fixpoint.CacheScope.cut`), so a phase schedules only its own
+ * stages.
  */
 object DistributedWCC {
 
@@ -42,7 +43,8 @@ object DistributedWCC {
       prunedCore: Graph[VertexData, Int],
       /** refined partition on the pruned core (before the graft-back
        * onto the original vertex set) — callers that only need
-       * `graph` can release these cached phase surfaces */
+       * `graph` can release these cached phase surfaces once `graph`
+       * is materialized: until then its vertices read this one */
       refinedCore: Graph[VertexData, Int]) {
     /** the RDDs these surfaces hold cached */
     private[wcc] def cached: Seq[org.apache.spark.rdd.RDD[_]] =
@@ -105,7 +107,7 @@ object DistributedWCC {
     // from the input's, GraphX warns once per partition that it must
     // re-index them — the same per-partition rebuild this join does.
     val coreVertices = best.vertices.mapPartitions(identity, preservesPartitioning = true)
-    val resultGraph = scope.own(graph.outerJoinVertices(coreVertices) { (id, _, vdOpt) =>
+    val resultGraph = scope.cut(graph.outerJoinVertices(coreVertices) { (id, _, vdOpt) =>
       vdOpt.getOrElse(VertexData(id, 0, 0, id))
     })
 
@@ -127,7 +129,7 @@ object DistributedWCC {
 
   private def seedEvaluation(initGraph: Graph[VertexData, Int], vertexCount: Long,
       scope: Fixpoint.CacheScope): (RefineState, Map[Long, CommunityData], Double) = {
-    val s = RefineState.seed(initGraph, countTriangles = true, scope)
+    val s = RefineState.seed(initGraph, countTriangles = true, RefineState.in(scope))
     (s, s.stats, s.wcc(vertexCount))
   }
 
@@ -143,8 +145,8 @@ object DistributedWCC {
    * the sequential one: k+1 is moved from k under k's stats, exactly
    * as after accepting k. The WCC of a generation is its per-partition
    * WCC_V sums folded in partition order, so repeated runs agree to
-   * the bit. Every [[Fixpoint.CheckpointEvery]]-th generation is
-   * checkpointed when the context has a checkpoint directory. Only the
+   * the bit. Every generation is a lineage cut, so its job schedules
+   * no stage of the ones before it. Only the
    * best labels go back to a `Graph`, the one cached surface the call
    * returns; `globalCC` is [[IncrementalWCC.detGlobalCC]], shared with
    * the incremental mode. The seed state, `seedEval` included, is
@@ -165,14 +167,13 @@ object DistributedWCC {
       val (seed, seedCs, seedWcc) =
         seedEval.getOrElse(seedEvaluation(initGraph, vertexCount, scope))
       Failpoint("after seed evaluation")
-      // generation `no`'s blocks, cached in the scope
-      def gen(no: Int): RefineState.Cache = b => Fixpoint.checkpoint(RefineState.in(scope)(b), no)
       var bestCs = seedCs
       var bestWcc = seedWcc
       var retriesLeft = maxRetries
       // `cur` is generation `no`, the one the next job scores
       var no = 1
-      var cur = seed.step(globalCC, vertexCount, score = false, countTriangles = true, gen(1))
+      var cur = seed.step(globalCC, vertexCount, score = false, countTriangles = true,
+        RefineState.in(scope))
       scope.release(seed.blocks)
       System.err.println(s"[graft-wcc] gen 1 moves=${cur.moved}")
       // labels of the best generation; null while it is the seed
@@ -182,7 +183,7 @@ object DistributedWCC {
         Failpoint(s"at iter $no")
         val t0 = System.currentTimeMillis()
         val next = cur.step(globalCC, vertexCount, score = true, countTriangles = true,
-          gen(no + 1))
+          RefineState.in(scope))
         val newWcc = next.wccPrev / vertexCount
         retriesLeft -= 1
         System.err.println(s"[graft-wcc] refine iter $no: " +

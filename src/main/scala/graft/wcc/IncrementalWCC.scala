@@ -7,6 +7,7 @@ import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Incremental DWCC ("IDWCC", SURVEY.md §3.3): given a previously
@@ -46,7 +47,12 @@ object IncrementalWCC {
    * ([[deltaTriangles]]) instead of re-running the full-merged-graph
    * support exchange. Callers constructing a State by hand may leave
    * it None — [[performInitialPartition]] then flags the merged graph
-   * from scratch. */
+   * from scratch.
+   *
+   * [[prepare]] and [[run]] hand over the graph and `bulkFlagged` as
+   * lineage cuts (`Fixpoint.CacheScope.cut`): a fold schedules none of
+   * the stages that built its input state, however many folds came
+   * before it. */
   final case class State(graph: Graph[VertexData, Int], stats: Map[Long, CommunityData],
       bulkFlagged: Option[RDD[(Long, Long)]] = None) {
     /** the RDDs this state holds cached */
@@ -88,18 +94,18 @@ object IncrementalWCC {
     Fixpoint.returning { scope =>
       val out = DistributedWCC.run(graph)
       scope.adopt(out.cached: _*)
-      val stateGraph = scope.own(out.graph.mapVertices((id, vd) =>
+      val stateGraph = scope.cut(out.graph.mapVertices((id, vd) =>
         graftQuirk(id, Some(vd))))
-      stateGraph.vertices.count()
-      stateGraph.edges.count()
       // harvest the batch-invariant flag set from the pruned core: the
       // core's edges are exactly the bulk edges with positive triangle
       // support (epred attr > 0 decides membership alone — attr > 0
       // implies both endpoint t > 0), i.e. the bulk half of every
       // future batch's triangle-edge flagging (see [[State.bulkFlagged]]).
-      val bulkFlagged = scope.cache(out.prunedCore.edges
+      val bulkFlagged = scope.cut(out.prunedCore.edges
         .map(e => (math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId))))
-      bulkFlagged.count()
+      // one job; the bulk run's surfaces are released below, so every
+      // cut must be materialized first
+      Fixpoint.materialize(stateGraph.vertices, stateGraph.edges, bulkFlagged)
       Failpoint("after prepare")
       // the input is consumed: it goes with the bulk run's surfaces
       scope.adopt(WccUtil.cached(graph): _*)
@@ -149,17 +155,23 @@ object IncrementalWCC {
   private[wcc] def merge(state: State, newEdges: RDD[Edge[Int]],
       scope: Fixpoint.CacheScope): MergeResult = {
     val sc = state.graph.vertices.sparkContext
-    // batch vertex ids (micro-batch-sized, safe on the driver)
-    val batchIds = newEdges.mapPartitions { it =>
-      val ids = scala.collection.mutable.HashSet.empty[Long]
-      it.foreach { e => ids += e.srcId; ids += e.dstId }
-      Iterator(ids.toArray)
-    }.collect().iterator.flatten.toSet
-    val bBatch = scope.broadcast(sc, batchIds)
-    val borderIds = state.graph.vertices
-      .filter { case (id, _) => bBatch.value.contains(id) }
-      .map(_._1).collect().toSet
-    val newIds = batchIds -- borderIds
+    // the batch vertex ids classified in ONE job: each goes as an edge
+    // slot to its vertex partition, beside the state's vertices there;
+    // per partition, (new ids, border ids)
+    val classes = scope.cache(state.graph.vertices.zipPartitions(
+      RefineState.pairSlots(newEdges.map(e => (e.srcId, e.dstId)),
+        new HashPartitioner(state.graph.vertices.getNumPartitions)),
+      preservesPartitioning = true) { (vIt, sIt) =>
+      val batch = scala.collection.mutable.HashSet.empty[Long]
+      sIt.foreach(batch ++= _._2.self)
+      val border = new ArrayBuilder.ofLong
+      if (batch.nonEmpty) vIt.foreach { case (id, _) => if (batch.remove(id)) border += id }
+      Iterator((batch.toArray, border.result()))
+    })
+    // micro-batch-sized, safe on the driver
+    val classified = classes.collect()
+    val newIds = classified.iterator.flatMap(_._1).toSet
+    val borderIds = classified.iterator.flatMap(_._2).toSet
     val bBorder = scope.broadcast(sc, borderIds)
     val bNew = scope.broadcast(sc, newIds)
 
@@ -173,14 +185,14 @@ object IncrementalWCC {
     // add up — a micro-batch must not widen the standing layout,
     // and the state's count carries the edge-count sizing its
     // builder chose)
-    // the new vertices join under the state's vertex partitioner, so
-    // the union keeps it and the merged graph's vertices stay where the
-    // state's are: no vertex shuffle here, and the seeded labels graft
-    // back onto the state without one
+    // the new vertices come from their classification, under the
+    // state's vertex partitioner, so the union keeps it and the merged
+    // graph's vertices stay where the state's are: no vertex shuffle
+    // here, and the seeded labels graft back onto the state without one
     val union = scope.own(Graph(
-      state.graph.vertices.union(
-        sc.parallelize(newIds.toSeq).map(id => (id, VertexData(id, 0, 0, id)))
-          .partitionBy(state.graph.vertices.partitioner.get)),
+      state.graph.vertices.union(classes.mapPartitions(
+        _.next()._1.iterator.map(id => (id, VertexData(id, 0, 0, id))),
+        preservesPartitioning = true)),
       state.graph.edges.union(newEdges)))
     val fg = scope.own(union.partitionBy(PartitionStrategy.EdgePartition2D,
       state.graph.edges.getNumPartitions))
@@ -209,9 +221,9 @@ object IncrementalWCC {
     })
     // one job: the delta pass and the updated vertices
     val vertexCount = fullGraph.numVertices
-    // fg is materialized: nothing reads the union or the
-    // neighborhoods any more
-    scope.release(touched +: WccUtil.cached(union): _*)
+    // fg is materialized: nothing reads the union, the
+    // classification or the neighborhoods any more
+    scope.release(classes +: touched +: WccUtil.cached(union): _*)
     Failpoint("in merge")
     // the count above materialized the cached vertices, so the
     // concurrent fold only re-reads blocks — no racing computation.
@@ -458,8 +470,9 @@ object IncrementalWCC {
   private[wcc] def refinePartition(seed: RefineState, globalCC: Double,
       vertexCount: Long, scope: Fixpoint.CacheScope): RDD[(VertexId, VertexData)] = {
     val loop = scope.loop(4)
-    // the seed joins round 0's generation: released once round 1 built its successor
-    RefineState.in(loop.init)(seed.blocks)
+    // the seed (already a cut) joins round 0's generation: released
+    // once round 1 built its successor
+    loop.init.cache(seed.blocks, StorageLevel.MEMORY_AND_DISK)
     var quiesced = false
     val last = loop.run(seed)(_ => !quiesced) { (r, s) =>
       val next = s.step(globalCC, vertexCount, score = false, countTriangles = false,
@@ -529,14 +542,16 @@ object IncrementalWCC {
     // BULK edge set again) and return the STALE incoming stats
     // (reference quirks, see object Scaladoc). The join body is the
     // reference's conditional reset ([[graftQuirk]]): self-labeled
-    // result vertices carry ZEROED (t, vt) into the next batch. One
-    // job: materializing the edges materializes the vertices they are
-    // shipped from, and the refinement's last movement with them.
+    // result vertices carry ZEROED (t, vt) into the next batch. The new
+    // state graph is a lineage cut, so the next fold schedules none of
+    // this one's stages. One job materializes its vertices and edges,
+    // and the refinement's last movement with them; the generations it
+    // reads are released when the fold returns.
     val resultGraph = timed("graft") {
-      val g = scope.own(state.graph.outerJoinVertices(refined) { (id, _, vdOpt) =>
+      val g = scope.cut(state.graph.outerJoinVertices(refined) { (id, _, vdOpt) =>
         graftQuirk(id, vdOpt)
       })
-      g.edges.count()
+      Fixpoint.materialize(g.vertices, g.edges)
       g
     }
     Failpoint("after graft")

@@ -12,7 +12,6 @@ import org.apache.spark.graphx._
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer,
   SerializerInstance}
-import org.apache.spark.storage.StorageLevel
 
 /** The label-independent half of a vertex block: one partition's
  * vertices and their sorted adjacency, built once per seed state and
@@ -385,33 +384,36 @@ final class RefineState private[wcc] (
 
 private[graft] object RefineState {
 
-  /** Caches a new generation's blocks for their owner: [[in]] a scope,
-   * or in one round of a loop, which releases them by its rule. */
+  /** Caches a new generation's blocks for their owner as a lineage
+   * cut, so the job that builds them is the last to see the stages
+   * before them: [[in]] a scope, or in one round of a loop, which
+   * releases them by its rule. */
   type Cache = RDD[(Int, VertexBlock)] => RDD[(Int, VertexBlock)]
 
-  def in(scope: Fixpoint.CacheScope): Cache = scope.cache(_, StorageLevel.MEMORY_AND_DISK)
+  def in(scope: Fixpoint.CacheScope): Cache = scope.cut(_)
 
-  def in(round: Fixpoint.Loop#Round): Cache = round.cache(_, StorageLevel.MEMORY_AND_DISK)
+  def in(round: Fixpoint.Loop#Round): Cache = round.cut(_)
 
-  /** The seed generation of `graph`, its blocks cached in `scope`: one
+  /** The seed generation of `graph`, its blocks cached by `cache`: one
    * job that builds the blocks (adjacency, labels, same-community
    * degrees and, with `countTriangles`, the triangle counts) and
    * returns their stats. */
   def seed(graph: Graph[VertexData, Int], countTriangles: Boolean,
-      scope: Fixpoint.CacheScope): RefineState = {
+      cache: Cache): RefineState = {
     val part = new HashPartitioner(graph.vertices.getNumPartitions)
     val base = refineBlocks(graph.vertices,
       edgeSlots(graph.triplets.map(t => (t.srcAttr, t.dstAttr)), part, ranks = false), part)
-    val blocks = in(scope)(if (countTriangles) withTriangles(base, part) else base)
+    val blocks = cache(if (countTriangles) withTriangles(base, part) else base)
     val (cs, _, _) = merge(blocks.sparkContext.runJob(blocks, partialOf _))
     new RefineState(blocks, part, cs, 0.0, 0L)
   }
 
-  /** `graph` relabeled by `labels`, cached in `scope` and materialized
-   * — the one GraphX step of a refinement: handing the result back. */
+  /** `graph` relabeled by `labels`, cut in `scope` and its vertices
+   * materialized — the one GraphX step of a refinement: handing the
+   * result back. Its edges are cut by the job that first reads them. */
   def toGraph(graph: Graph[VertexData, Int], labels: RDD[(VertexId, Long)],
       scope: Fixpoint.CacheScope): Graph[VertexData, Int] = {
-    val g = scope.own(graph.outerJoinVertices(labels) { (_, vd, l) =>
+    val g = scope.cut(graph.outerJoinVertices(labels) { (_, vd, l) =>
       l match {
         case Some(c) if c != vd.cId => vd.copy(cId = c)
         case _ => vd

@@ -108,7 +108,7 @@ object TriangleStats {
   /** Both surfaces read off the support blocks and materialized — the
    * pruned graph's vertices and edges and the full stats — in ONE job,
    * after which the blocks are released; only the surfaces stay
-   * cached. They keep the blocks' vertex partitioner. An edge with
+   * cached, as lineage cuts. They keep the blocks' vertex partitioner. An edge with
    * support > 0 implies both endpoints have t > 0, so vt (counted over
    * triangle edges) equals the pruned-graph degree (reference
    * `DistributedWCC.scala:109-112`). */
@@ -125,10 +125,11 @@ object TriangleStats {
     }, preservesPartitioning = true)
     val coreEdges = blocks.mapPartitions(_.next()._2.edges((s, d, c) => Edge(s, d, c))
       .filter(_.attr > 0))
-    // default storage levels: GraphX refuses to change an existing
-    // level — every graph in this library uses the GraphX default
-    val pruned = scope.own(Graph(core, coreEdges))
-    scope.cache(fullStats)
+    // both surfaces are lineage cuts, so nothing after this call
+    // schedules the kernel's stages again; the one job below reaches
+    // all three cut RDDs directly
+    val pruned = scope.cut(Graph(core, coreEdges))
+    scope.cut(fullStats)
     fullStats.zipPartitions(pruned.vertices, pruned.edges)((_, _, _) => Iterator.empty[Int])
       .count()
     scope.release(blocks)

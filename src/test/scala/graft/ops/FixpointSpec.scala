@@ -9,7 +9,8 @@ import graft.graph.{EdgeOps, Fixpoint, GraphAlgs}
 /** The shared fixpoint scaffold: Spark jobs per round of the loops
  * built on it, measured as the job-count difference between a run
  * of r + 1 rounds and a run of r rounds (setup and finish cancel),
- * and the rule that only `Fixpoint` cuts lineage under graft/graph. */
+ * and the rule that only `Fixpoint` cuts lineage under graft/graph
+ * and graft/wcc. */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -77,14 +78,16 @@ class FixpointSpec extends SparkSpec {
     assert(jobsPerRound(3) { r => GraphAlgs.corenessDF(g, maxIter = r).count() } === 1)
   }
 
-  test("only Fixpoint checkpoints under graft/graph") {
-    val root = Paths.get("src/main/scala/graft/graph")
-    assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
+  test("only Fixpoint cuts lineage under graft/graph and graft/wcc") {
+    val roots = Seq("src/main/scala/graft/graph", "src/main/scala/graft/wcc").map(Paths.get(_))
+    roots.foreach(root => assert(Files.isDirectory(root),
+      s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})"))
     val hits = for {
+      root <- roots
       file <- Files.walk(root).iterator().asScala.toSeq
       if file.toString.endsWith(".scala") && file.getFileName.toString != "Fixpoint.scala"
       (line, i) <- Files.readAllLines(file).asScala.zipWithIndex
-      if line.contains("getCheckpointDir") || line.contains(".checkpoint()")
+      if Seq("getCheckpointDir", ".checkpoint()", ".localCheckpoint(").exists(line.contains)
     } yield s"$file:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("lineage cut outside Fixpoint:\n", "\n", ""))
   }

@@ -83,7 +83,9 @@ class StreamOpsSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Long)]
     stream.addData((3L, 4L), (4L, 5L), (3L, 5L))
     val edgesDf = stream.toDF().toDF("src", "dst")
-    val streamedState = StreamOps.incrementalWcc(edgesDf, init)
+    // both folds start from `init`: the first must not release it (a
+    // released state is a lineage cut that cannot be recomputed)
+    val streamedState = StreamOps.incrementalWcc(edgesDf, init, releaseInitial = false)
 
     val loopState = IncrementalWCC.run(init,
       spark.sparkContext.parallelize(Seq(

@@ -55,6 +55,27 @@ class CacheOwnershipSpec extends SparkSpec {
     unpersist(state.cached)
   }
 
+  /** the RDDs reachable through `dependencies` from `rdds` */
+  private def lineage(rdds: Seq[RDD[_]]): Int = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Unit = if (seen.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+    rdds.foreach(walk)
+    seen.size
+  }
+
+  test("an IDWCC state's lineage does not grow from fold to fold") {
+    // the state is a lineage cut at every hand-off: without one, each
+    // fold's graph is built on the last one's and its lineage keeps
+    // every earlier fold
+    var state = IncrementalWCC.prepare(graphOf(spark, bulkPairs))
+    val sizes = windows.map { case (lo, hi) =>
+      state = IncrementalWCC.run(state, batch(lo, hi))
+      lineage(state.cached)
+    }
+    assert(sizes(2) === sizes(0), s"state lineage after folds 1-3: ${sizes.mkString(", ")}")
+    unpersist(state.cached)
+  }
+
   test("the memoized IDWCC bulk prepare leaves only its state and the stream edges cached") {
     // a session of its own: the memo is per session, so no other
     // suite's prepare on the shared session can answer this call

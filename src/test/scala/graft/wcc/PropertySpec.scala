@@ -79,7 +79,7 @@ class PropertySpec extends SparkSpec {
           .mapVertices((id, _) => VertexData(id, 1, 2, id % 3))
         val n = g.numVertices
         Fixpoint.using { scope =>
-          val seed = RefineState.seed(g, countTriangles = true, scope)
+          val seed = RefineState.seed(g, countTriangles = true, RefineState.in(scope))
           val blocks = seed.blocks.collect().map(_._2)
           // community degrees from the blocks' neighbor labels
           val deg = CommunityOps.vertexCommunityDegrees(g).collect().toMap
@@ -144,7 +144,7 @@ class PropertySpec extends SparkSpec {
         }
         def run(parts: Int) = Fixpoint.using { scope =>
           val g = gAt(parts)
-          val seed = RefineState.seed(g, countTriangles = false, scope)
+          val seed = RefineState.seed(g, countTriangles = false, RefineState.in(scope))
           val next = seed.step(1.0, g.numVertices, score = false,
             countTriangles = false, RefineState.in(scope))
           (g.vertices.getNumPartitions, seed.stats,

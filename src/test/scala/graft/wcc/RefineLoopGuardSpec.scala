@@ -81,10 +81,10 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     walk(rdd)
   }
 
-  /** `rdd`'s lineage holds a shuffle of each `expected` message class,
-   * and every block-message shuffle in it runs on [[BlockCodec]] */
-  private def assertOnCodec(what: String, rdd: RDD[_], expected: Seq[Class[_]]): Unit = {
-    val found = blockShuffles(rdd)
+  /** `found` holds a shuffle of each `expected` message class, and
+   * every block-message shuffle in it runs on [[BlockCodec]] */
+  private def assertOnCodec(what: String, found: Seq[(String, ShuffleDependency[_, _, _])],
+      expected: Seq[Class[_]]): Unit = {
     val missing = expected.map(_.getName).toSet -- found.map(_._1)
     assert(missing.isEmpty, s"$what: no ${missing.mkString(", ")} shuffle in its lineage")
     found.foreach { case (v, s) =>
@@ -96,26 +96,44 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   test("every block exchange runs on the block codec") {
     failAfter(180.seconds) {
       val (init, n) = seeded()
-      val (seed, _, _) = DistributedWCC.seedEvaluation(init, n)
       val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
       Fixpoint.using { scope =>
-        scope.adopt(seed.blocks)
-        // a batch step, back to the seed's build
-        val gen = seed.step(globalCC, n, score = true, countTriangles = true,
-          RefineState.in(scope))
-        assertOnCodec("a batch step", gen.blocks,
-          Seq(classOf[EdgeSlots], classOf[Moves], classOf[SameSets]))
-        // a seeding superstep, back to the seeding build
+        // a generation's lineage ends at the cut before it, so each is
+        // read as its job is about to build it: `capture` records its
+        // block shuffles, then caches it as the loops do
+        val seen =
+          scala.collection.mutable.ArrayBuffer.empty[(String, ShuffleDependency[_, _, _])]
+        val capture: RefineState.Cache = { b =>
+          seen ++= blockShuffles(b)
+          RefineState.in(scope)(b)
+        }
+        def captured(what: String, expected: Seq[Class[_]])(build: => Any): Unit = {
+          seen.clear()
+          build
+          assertOnCodec(what, seen.toSeq, expected)
+        }
+        var seed: RefineState = null
+        captured("the seed build", Seq(classOf[EdgeSlots], classOf[SameSets])) {
+          seed = RefineState.seed(init, countTriangles = true, capture)
+        }
+        captured("a batch step", Seq(classOf[Moves], classOf[SameSets])) {
+          seed.step(globalCC, n, score = true, countTriangles = true, capture)
+        }
         val tri = TriangleStats.run(graphOf(spark, edges))
         scope.adopt(tri.cached: _*)
         val pruned = tri.pruned
         val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
-        val built = InitialPartition.build(pruned.vertices,
-          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, RefineState.in(scope))
-        val next = InitialPartition.superstep(built, part, decide = true, RefineState.in(scope))
-        assertOnCodec("a seeding superstep", next.blocks, Seq(classOf[EdgeSlots], classOf[Moves]))
+        var built: InitialPartition.Gen = null
+        captured("the seeding build", Seq(classOf[EdgeSlots])) {
+          built = InitialPartition.build(pruned.vertices,
+            pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, capture)
+        }
+        captured("a seeding superstep", Seq(classOf[Moves])) {
+          InitialPartition.superstep(built, part, decide = true, capture)
+        }
         // the triangle support kernel
-        assertOnCodec("the triangle kernel", TriangleStats.edgeSupport(graphOf(spark, edges)),
+        assertOnCodec("the triangle kernel",
+          blockShuffles(TriangleStats.edgeSupport(graphOf(spark, edges))),
           Seq(classOf[EdgeSlots], classOf[SameSets]))
         // the IDWCC merge's delta triangle pass
         val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
@@ -124,7 +142,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
           org.apache.spark.graphx.Edge(3L, 4L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
           org.apache.spark.graphx.Edge(3L, 5L, 1))), scope)
         m.globalCCF.join()
-        assertOnCodec("the delta triangle pass", m.deltaKeys,
+        assertOnCodec("the delta triangle pass", blockShuffles(m.deltaKeys),
           Seq(classOf[EdgeSlots], classOf[SameSets]))
       }
       release(init)
@@ -161,7 +179,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val (init, n) = seeded()
       calibrate(init, n)
       Fixpoint.using { scope =>
-        val seed = RefineState.seed(init, countTriangles = false, scope)
+        val seed = RefineState.seed(init, countTriangles = false, RefineState.in(scope))
         val globalCC = IncrementalWCC.detGlobalCC(init.vertices, n)
         val c = JobProbe(spark.sparkContext) {
           seed.step(globalCC, n, score = false, countTriangles = false, RefineState.in(scope))
@@ -210,14 +228,13 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     }
   }
 
-  test("an IDWCC micro-batch fold runs at most 10 jobs") {
+  test("an IDWCC micro-batch fold runs at most 9 jobs") {
     // bulk triangle {1,2,3}; the batch closes triangle {3,4,5} (the
     // IncrementalWCCSpec fixture). The ceiling is the count measured
-    // when the delta triangle pass replaced the delta graph, the
-    // delta-flag join and its volume gate: 3 merge jobs (batch ids,
-    // border ids, and the delta pass that materializes the merged
-    // vertices), the seeding build, 2 supersteps and the
-    // label-shipping job, 1 refine iteration and the graft-back — 9 on
+    // once one job classified the batch ids: 2 merge jobs (the
+    // border/new classification, and the delta pass that materializes
+    // the merged vertices), the seeding build, 2 supersteps and the
+    // label-shipping job, 1 refine iteration and the graft-back — 8 on
     // the calling thread — plus the merge's concurrent global-cc fold,
     // which runs under the caller's job group.
     failAfter(180.seconds) {
@@ -231,11 +248,37 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val c = JobProbe(spark.sparkContext) {
         out = IncrementalWCC.run(state, batch, releaseInput = false)
       }
-      assert(c.jobs <= 10, s"an IDWCC micro-batch fold ran ${c.jobs} jobs")
+      assert(c.jobs <= 9, s"an IDWCC micro-batch fold ran ${c.jobs} jobs")
       release(out.graph)
       release(state.graph)
       state.bulkFlagged.foreach(_.unpersist(blocking = false))
       release(init)
+    }
+  }
+
+  test("a fold into a prepared state skips none of the prepare's stages") {
+    // the state is a lineage cut: a fold's jobs skip only stages an
+    // earlier job of the same fold ran, each holding an RDD the fold
+    // made. Stage ids do not tell: a later job makes a new stage for
+    // an old shuffle once the jobs that needed it are done.
+    failAfter(180.seconds) {
+      val sc = spark.sparkContext
+      val g = graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L), (2L, 4L), (3L, 4L)))
+      val state = IncrementalWCC.prepare(g)
+      // every RDD made before the fold has a smaller id
+      val before = sc.emptyRDD[Int].id
+      val batch = sc.parallelize(Seq(
+        org.apache.spark.graphx.Edge(3L, 5L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
+        org.apache.spark.graphx.Edge(5L, 6L, 1)))
+      var out: IncrementalWCC.State = null
+      val fold = JobProbe(sc) { out = IncrementalWCC.run(state, batch, releaseInput = false) }
+      assert(fold.skipped > 0, "premise: the fold's later jobs skip its earlier stages")
+      val old = fold.skippedRdds.count(_.forall(_ < before))
+      assert(old === 0, s"the fold skipped $old stages of RDDs made before it " +
+        s"(${fold.skipped} skipped in all): its lineage reaches back into the prepare")
+      release(out.graph)
+      release(state.graph)
+      state.bulkFlagged.foreach(_.unpersist(blocking = false))
     }
   }
 
