@@ -1,6 +1,5 @@
 package graft.wcc
 
-import graft.graph.SortedIntersect
 import org.apache.spark.graphx._
 
 /**
@@ -64,51 +63,4 @@ object CommunityOps {
   private[wcc] def mergeCountMaps(a: Map[Long, Int], b: Map[Long, Int]): Map[Long, Int] =
     if (a.size >= b.size) b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0) + v) }
     else a.foldLeft(b) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0) + v) }
-
-  /**
-   * G7: global WCC = (sum over vertices of WCC_V) / vertexCount.
-   *
-   * The reference's own plan (`DistributedWCC.scala:422-533`): one
-   * aggregateMessages pass for the same-community adjacency arrays,
-   * one for the per-edge intersections, then the WCC_V sum under the
-   * broadcast community stats. The refinement loops evaluate on
-   * [[RefineState]] blocks instead; this form shares none of their
-   * array building and is the reference PropertySpec pins them
-   * against.
-   *
-   * @param vertexCount divisor — the ORIGINAL (unpruned) vertex count
-   *                    (reference passes `this.vertexCount`, `:41`)
-   */
-  def computeGlobalWCC(graph: Graph[VertexData, Int],
-      stats: Map[Long, CommunityData], vertexCount: Long): Double = {
-    val sc = graph.vertices.sparkContext
-    val bStats = sc.broadcast(stats)
-    // same-community neighbor ids per vertex (`:509-533`)
-    val commNbors: VertexRDD[Array[Long]] = graph.aggregateMessages[Array[Long]](
-      ctx => if (ctx.srcAttr.cId == ctx.dstAttr.cId) {
-        ctx.sendToSrc(Array(ctx.dstId)); ctx.sendToDst(Array(ctx.srcId))
-      }, _ ++ _)
-    val gA: Graph[(VertexData, Array[Long]), Int] =
-      graph.outerJoinVertices(commNbors)((_, vd, a) =>
-        (vd, a.map(_.sorted).getOrElse(Array.empty[Long])))
-    // intra-community triangles per vertex (`:462-507`): per
-    // same-community edge, intersect the two same-community
-    // neighborhoods; each triangle is seen once per incident edge,
-    // hence /2. Endpoints cannot appear in an intersection (no
-    // self-loops).
-    val commTri: VertexRDD[Int] = gA.aggregateMessages[Int](
-      ctx => if (ctx.srcAttr._1.cId == ctx.dstAttr._1.cId) {
-        val c = SortedIntersect.count(ctx.srcAttr._2, ctx.dstAttr._2)
-        ctx.sendToSrc(c); ctx.sendToDst(c)
-      }, _ + _)
-    val sumWcc = gA.outerJoinVertices(commTri)((_, va, tcOpt) =>
-        (va._1, va._2.length, tcOpt.getOrElse(0) / 2))
-      .vertices
-      .map { case (_, (vd, vtC, tC)) =>
-        WCCMetric.computeWccV(vd, bStats.value(vd.cId), vtC, tC)
-      }
-      .sum()
-    bStats.destroy()
-    sumWcc / vertexCount
-  }
 }

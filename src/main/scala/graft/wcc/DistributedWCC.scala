@@ -209,21 +209,10 @@ object DistributedWCC {
   /** F7 (reference `DistributedWCC.scala:368-405`): REMOVE iff
    * wccR - wccT > 1e-5 and wccR > 0; else TRANSFER to the best
    * candidate iff wccT > 0; else STAY. Candidates are the neighbor
-   * communities with r > 1 other than the current one. Map adapter
-   * over the compact core (used by the reference simulator in the
-   * parity suite, so the sim exercises the same decision code). */
-  private[wcc] def bestMovement(vertex: VertexData, vcDegrees: Map[Long, Int],
-      communityStats: Map[Long, CommunityData], globalCC: Double,
-      vertexCount: Long): VertexData = {
-    val sorted = vcDegrees.toArray.sortBy(_._1)
-    bestMovementCompact(vertex, sorted.map(_._1), sorted.map(_._2),
-      communityStats, globalCC, vertexCount)
-  }
-
-  /** The movement decision on the compact (sorted cId, count)
-   * arrays. Candidate iteration in ascending cId order: the
-   * reference iterates an unspecified Map order, so ties on
-   * candidateWccT are implementation-defined there; sorting makes
+   * communities with r > 1 other than the current one, given as the
+   * compact (sorted cId, count) arrays. Candidate iteration in ascending
+   * cId order: the reference iterates an unspecified Map order, so ties
+   * on candidateWccT are implementation-defined there; sorting makes
    * ours deterministic. */
   private[wcc] def bestMovementCompact(vertex: VertexData, cIds: Array[Long],
       counts: Array[Int], communityStats: Map[Long, CommunityData],

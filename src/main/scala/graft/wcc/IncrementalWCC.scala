@@ -36,7 +36,11 @@ import org.apache.spark.storage.StorageLevel
  */
 object IncrementalWCC {
 
-  /** `bulkFlagged`, when present, is the canonical (min, max) key set
+  /** The standing partition: `graph`, the last graft-back, whose
+   * vertices and edges a merge reads as they are, and the bulk run's
+   * `stats` (reference quirk: a fold never updates them).
+   *
+   * `bulkFlagged`, when present, is the canonical (min, max) key set
    * of STATE-graph edges with >= 1 common neighbor IN THE STATE GRAPH
    * ALONE — the batch-invariant half of each micro-batch's
    * triangle-edge flagging. The graft-back contract keeps the state's
@@ -44,10 +48,10 @@ object IncrementalWCC {
    * (reference `IncrementalWCC.scala:56-58` — batch edges never
    * persist), so the set stays valid for every subsequent [[run]] and
    * each batch only adds the keys its delta triangle pass flags
-   * ([[deltaTriangles]]) instead of re-running the full-merged-graph
-   * support exchange. Callers constructing a State by hand may leave
-   * it None — [[performInitialPartition]] then flags the merged graph
-   * from scratch.
+   * ([[deltaTriangles]]); the seeding reads the two as its edge pairs.
+   * Callers constructing a State by hand may leave it None —
+   * [[performInitialPartition]] then flags the merged graph from
+   * scratch.
    *
    * [[prepare]] and [[run]] hand over the graph and `bulkFlagged` as
    * lineage cuts (`Fixpoint.CacheScope.cut`): a fold schedules none of
@@ -122,11 +126,13 @@ object IncrementalWCC {
     prepare(g.partitionBy(PartitionStrategy.EdgePartition2D, numParts))
   }
 
+  /** The merged graph as a merge hands it on, built into no `Graph`. */
   final case class MergeResult(
-      fullGraph: Graph[VertexData, Int],
-      /** repartitioned union graph fullGraph was derived from (released
-       * by `run` once the seed blocks are materialized) */
-      merged: Graph[VertexData, Int],
+      /** the state's vertices, touched ones with their delta stats, and
+       * the new ids, under the state's vertex partitioner; cached */
+      vertices: RDD[(VertexId, VertexData)],
+      /** the merged edges as id pairs: the state's and the batch's */
+      pairs: RDD[(Long, Long)],
       newIds: Broadcast[Set[Long]],
       borderIds: Broadcast[Set[Long]],
       vertexCount: Long,
@@ -138,7 +144,7 @@ object IncrementalWCC {
        * bit-reproducible wherever it runs. Its job runs under the
        * caller's job group and description. */
       globalCCF: java.util.concurrent.CompletableFuture[Double],
-      /** the [[deltaTriangles]] pass whose (c, ind) sums fullGraph
+      /** the [[deltaTriangles]] pass whose (c, ind) sums `vertices`
        * carries; cached, released by `run` after the initial
        * partition */
       delta: RDD[(Int, Delta)]) {
@@ -149,18 +155,20 @@ object IncrementalWCC {
     }
   }
 
-  /** Merge phase (reference `IncrementalWCC.scala:79-181`): the union
-   * graph and the delta triangle-stat update of its touched vertices.
-   * Everything it caches and broadcasts belongs to `scope`. */
+  /** Merge phase (reference `IncrementalWCC.scala:79-181`): the merged
+   * vertices and edges and the delta triangle-stat update of the touched
+   * vertices. The state's vertices are zipped with the new ids and the
+   * delta sums in place, so the seeded labels graft back without a
+   * shuffle. Everything it caches and broadcasts belongs to `scope`. */
   private[wcc] def merge(state: State, newEdges: RDD[Edge[Int]],
       scope: Fixpoint.CacheScope): MergeResult = {
     val sc = state.graph.vertices.sparkContext
+    val part = new HashPartitioner(state.graph.vertices.getNumPartitions)
     // the batch vertex ids classified in ONE job: each goes as an edge
     // slot to its vertex partition, beside the state's vertices there;
     // per partition, (new ids, border ids)
     val classes = scope.cache(state.graph.vertices.zipPartitions(
-      RefineState.pairSlots(newEdges.map(e => (e.srcId, e.dstId)),
-        new HashPartitioner(state.graph.vertices.getNumPartitions)),
+      RefineState.pairSlots(RefineState.pairsOf(newEdges), part),
       preservesPartitioning = true) { (vIt, sIt) =>
       val batch = scala.collection.mutable.HashSet.empty[Long]
       sIt.foreach(batch ++= _._2.self)
@@ -175,55 +183,35 @@ object IncrementalWCC {
     val bBorder = scope.broadcast(sc, borderIds)
     val bNew = scope.broadcast(sc, newIds)
 
-    // graph union (`:94`); union of canonical edge sets stays
-    // duplicate-free because batch edges are new by construction.
-    // Re-partition the unioned edge set (EdgePartition2D bounds vertex
-    // replication) — a plain union leaves batch edges wherever the
-    // source RDD put them.
-    // repartition to the STATE graph's partition count, not the
-    // union's (state partitions + batch partitions would otherwise
-    // add up — a micro-batch must not widen the standing layout,
-    // and the state's count carries the edge-count sizing its
-    // builder chose)
-    // the new vertices come from their classification, under the
-    // state's vertex partitioner, so the union keeps it and the merged
-    // graph's vertices stay where the state's are: no vertex shuffle
-    // here, and the seeded labels graft back onto the state without one
-    val union = scope.own(Graph(
-      state.graph.vertices.union(classes.mapPartitions(
-        _.next()._1.iterator.map(id => (id, VertexData(id, 0, 0, id))),
-        preservesPartitioning = true)),
-      state.graph.edges.union(newEdges)))
-    val fg = scope.own(union.partitionBy(PartitionStrategy.EdgePartition2D,
-      state.graph.edges.getNumPartitions))
-
-    val part = new HashPartitioner(fg.vertices.getNumPartitions)
+    // graph union (`:94`) as id pairs; duplicate-free because batch
+    // edges are new by construction
+    val pairs = RefineState.pairsOf(state.graph.edges).union(RefineState.pairsOf(newEdges))
     val isTouched = (v: Long) => bBorder.value.contains(v) || bNew.value.contains(v)
-    val touched = scope.cache(touchedNeighborhoods(fg, isTouched, part))
+    val touched = scope.cache(touchedNeighborhoods(pairs, isTouched, part))
     val delta = scope.cache(deltaTriangles(touched, isTouched, bNew, part))
-    val sums = delta.mapPartitions({ it =>
-      val d = it.next()._2
-      Iterator.range(0, d.ids.length).map(i => (d.ids(i), (d.c(i), d.ind(i))))
-    }, preservesPartitioning = true)
     // join (`:163-178`): border vertices ADD deltas; new vertices get
     // absolute counts; both get cId reset to self (VertexData
     // constructor default — reference quirk). Untouched vertices keep
-    // their data.
-    val fullGraph = scope.own(fg.outerJoinVertices(sums) { (id, vd, sOpt) =>
-      sOpt match {
-        case Some((c, ind)) if c != 0 || ind != 0 =>
-          if (bBorder.value.contains(id))
-            VertexData(id, vd.t + c / 2, vd.vt + ind, id)
-          else
-            VertexData(id, c / 2, ind, id)
-        case _ => vd
+    // their data. The state's vertices in the delta are its border.
+    val vertices = scope.cache(state.graph.vertices.zipPartitions(classes, delta,
+      preservesPartitioning = true) { (vIt, cIt, dIt) =>
+      val d = dIt.next()._2
+      def deltaOf(id: Long): Int = {
+        val i = java.util.Arrays.binarySearch(d.ids, id)
+        if (i >= 0 && (d.c(i) != 0 || d.ind(i) != 0)) i else -1
+      }
+      vIt.map { case (id, vd) =>
+        val i = deltaOf(id)
+        if (i < 0) (id, vd) else (id, VertexData(id, vd.t + d.c(i) / 2, vd.vt + d.ind(i), id))
+      } ++ cIt.next()._1.iterator.map { id =>
+        val i = deltaOf(id)
+        (id, if (i < 0) VertexData(id, 0, 0, id) else VertexData(id, d.c(i) / 2, d.ind(i), id))
       }
     })
-    // one job: the delta pass and the updated vertices
-    val vertexCount = fullGraph.numVertices
-    // fg is materialized: nothing reads the union, the
-    // classification or the neighborhoods any more
-    scope.release(classes +: touched +: WccUtil.cached(union): _*)
+    // one job: the delta pass and the merged vertices
+    val vertexCount = vertices.count()
+    // nothing reads the classification or the neighborhoods any more
+    scope.release(classes, touched)
     Failpoint("in merge")
     // the count above materialized the cached vertices, so the
     // concurrent fold only re-reads blocks — no racing computation.
@@ -232,10 +220,10 @@ object IncrementalWCC {
     val jobProps = JobGroupProperties.map(k => (k, sc.getLocalProperty(k)))
     val globalCCF = java.util.concurrent.CompletableFuture.supplyAsync(() => {
       jobProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      try detGlobalCC(fullGraph.vertices, vertexCount)
+      try detGlobalCC(vertices, vertexCount)
       finally jobProps.foreach { case (k, _) => sc.setLocalProperty(k, null) }
     })
-    MergeResult(fullGraph, fg, bNew, bBorder, vertexCount, globalCCF, delta)
+    MergeResult(vertices, pairs, bNew, bBorder, vertexCount, globalCCF, delta)
   }
 
   /** the local properties `SparkContext.setJobGroup` sets */
@@ -257,7 +245,7 @@ object IncrementalWCC {
    * the driver: #blocks = maxId/2^16 (a 10^12-id space yields ~15M
    * doubles; past that add a super-block tier with the same
    * discipline). */
-  private[graft] def detGlobalCC(vertices: VertexRDD[VertexData],
+  private[graft] def detGlobalCC(vertices: RDD[(VertexId, VertexData)],
       vertexCount: Long): Double = {
     val blockSums = vertices
       .map { case (id, vd) => (id >>> 16, (id, vd.cc)) }
@@ -285,9 +273,9 @@ object IncrementalWCC {
    * `part`: every merged edge goes as a slot to the partition of each
    * of its touched endpoints, which groups the slots per vertex — O(D)
    * state and allocations for a degree-D vertex, any skew. */
-  private def touchedNeighborhoods(graph: Graph[VertexData, Int], isTouched: Long => Boolean,
+  private def touchedNeighborhoods(pairs: RDD[(Long, Long)], isTouched: Long => Boolean,
       part: HashPartitioner): RDD[(Int, Touched)] =
-    RefineState.pairSlots(graph.edges.map(e => (e.srcId, e.dstId)), part, isTouched)
+    RefineState.pairSlots(pairs, part, isTouched)
       .mapPartitions({ it =>
         val byId = new java.util.HashMap[Long, ArrayBuilder.ofLong]()
         it.foreach { case (_, s) =>
@@ -414,30 +402,25 @@ object IncrementalWCC {
    * `IncrementalWCC.scala:185-227`): keep only the merged graph's
    * triangle-closing edges and its t > 0 vertices — the vertex and edge
    * sets of `subgraph(epred = flagged, vpred = t > 0)` — and run the
-   * SAME seeding loop, seeded by the surviving cIds. The blocks are
-   * built straight from the merged graph's triplets, filtered by the
-   * keep set inside the build job ([[InitialPartition.build]]; a
-   * delta-flagged edge may also be bulk-flagged — duplicate keys are
-   * harmless), so no `Graph` is built for the flagged or the pruned
-   * graph. `precomputedKeep`, when present, is the merged graph's full
+   * SAME seeding loop, seeded by the surviving cIds, on blocks built
+   * from the merged `vertices` and the keep pairs under the t > 0
+   * predicate (a key in both halves of the keep set collapses to one
+   * slot). `precomputedKeep`, when present, is the merged graph's full
    * positive-support canonical key set assembled incrementally
-   * (bulk-invariant flags + the [[deltaTriangles]] keys); otherwise
-   * the support kernel ([[TriangleStats.edgeSupport]]) flags the edges
-   * from scratch.
+   * (bulk-invariant flags + the [[deltaTriangles]] keys); otherwise the
+   * support kernel ([[TriangleStats.edgeSupport]]) flags the merged
+   * `pairs` from scratch.
    *
    * Returns the converged seeding, cached in `scope`, as the fixed-5
    * loop's seed generation ([[InitialPartition.refineSeed]]): its ghost
    * labels, same-community degrees and stats are exact. */
-  private[wcc] def performInitialPartition(graph: Graph[VertexData, Int],
-      scope: Fixpoint.CacheScope, maxIterations: Int = 50,
+  private[wcc] def performInitialPartition(vertices: RDD[(VertexId, VertexData)],
+      pairs: RDD[(Long, Long)], scope: Fixpoint.CacheScope, maxIterations: Int = 50,
       precomputedKeep: Option[RDD[(Long, Long)]] = None): RefineState = {
     val keep = precomputedKeep.getOrElse(
-      TriangleStats.edgeSupport(graph).filter(_._2 > 0).map(_._1))
-    InitialPartition.refineSeed(graph.vertices.filter(_._2.t > 0),
-      graph.triplets.filter(t => t.srcAttr.t > 0 && t.dstAttr.t > 0)
-        .map(t => (t.srcAttr, t.dstAttr)),
-      Some(keep), new org.apache.spark.HashPartitioner(graph.vertices.getNumPartitions),
-      maxIterations, scope)
+      TriangleStats.edgeSupport(vertices, pairs).filter(_._2 > 0).map(_._1))
+    InitialPartition.refineSeed(vertices, keep, new HashPartitioner(vertices.getNumPartitions),
+      maxIterations, scope, vpred = Some(_.t > 0))
   }
 
   /** Fixed-5 refinement (reference `IncrementalWCC.scala:332-393`):
@@ -510,13 +493,13 @@ object IncrementalWCC {
    * for callers whose purpose is exercising the delta path, where a
    * silent fallback would hollow out the check.
    *
-   * Between the merge and the graft-back the fold holds ONE vertex-block
-   * state ([[RefineState]]) and builds no `Graph`: the seeding builds
-   * the blocks from the merged graph's triplets and the flag set
+   * The fold builds one GraphX graph, the graft-back. The merge reads
+   * the state's vertices and edges as they are ([[merge]]), the seeding
+   * builds vertex blocks from the merged vertices and the flag set
    * ([[performInitialPartition]]), the fixed-5 refinement moves the
    * converged blocks ([[refinePartition]]), and the last movement's
    * labels are grafted onto the state graph in the job that
-   * materializes it. The merged graph keeps the state's vertex
+   * materializes it. The merged vertices keep the state's vertex
    * partitioner, so the blocks and the graft-back join without a
    * vertex shuffle. */
   def run(state: State, newEdges: RDD[Edge[Int]],
@@ -527,13 +510,13 @@ object IncrementalWCC {
         "the fold would flag the merged graph's triangle edges from scratch")
     val m = timed("merge")(merge(state, newEdges, scope))
     try {
-    val seed = timed("initial-partition")(performInitialPartition(m.fullGraph, scope,
+    val seed = timed("initial-partition")(performInitialPartition(m.vertices, m.pairs, scope,
       precomputedKeep = state.bulkFlagged.map(_.union(m.deltaKeys))))
     Failpoint("after initial-partition")
     val globalCC = WccUtil.joinUnwrapped(m.globalCCF)
     // the seed blocks are materialized: nothing reads the merge's
     // surfaces any more
-    scope.release(m.delta +: (WccUtil.cached(m.merged) ++ WccUtil.cached(m.fullGraph)): _*)
+    scope.release(m.delta, m.vertices)
     val refined = timed("refine")(refinePartition(seed, globalCC, m.vertexCount, scope))
     Failpoint("after refine")
 

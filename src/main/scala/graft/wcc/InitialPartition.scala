@@ -1,9 +1,7 @@
 package graft.wcc
 
-import scala.collection.mutable.ArrayBuilder
-
 import graft.graph.Fixpoint
-import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
 
@@ -39,11 +37,13 @@ import org.apache.spark.rdd.RDD
  * blocks under the vertex RDD's `HashPartitioner`, one cached
  * [[VertexBlock]] per partition whose adjacency carries the
  * [[SeedRanks]]:
- *  - the build job ships every edge as a slot to the partitions of
- *    both endpoints, the neighbor's (t, vt, cId) riding on the slot,
- *    builds the blocks and makes the superstep-2 decisions: every
- *    vertex with a neighbor decides on its neighbors' initial center
- *    flags;
+ *  - the build job ([[RefineState.blocks]]) ships each vertex's
+ *    (cId, t, vt) once to every partition holding it as a ghost, builds
+ *    the blocks and makes the superstep-2 decisions: every vertex with a
+ *    neighbor decides on its neighbors' initial center flags. The
+ *    attributes no longer ride on every edge slot (16 bytes a slot):
+ *    that saved a stage only while GraphX triplets fed the build, whose
+ *    own vertex shipping the ghost exchange now replaces;
  *  - every later superstep is ONE job of two stages. Each vertex whose
  *    label changed in the previous superstep sends its new label (its
  *    center flag is `label == id`) once per partition holding it as a
@@ -86,24 +86,23 @@ object InitialPartition {
   def run(pruned: Graph[VertexData, Int], maxIterations: Int = 50): Graph[VertexData, Int] =
     Fixpoint.returning { scope =>
       val part = new HashPartitioner(pruned.vertices.getNumPartitions)
-      val g = converge(build(pruned.vertices, pruned.triplets.map(t => (t.srcAttr, t.dstAttr)),
-        None, part, _), part, maxIterations, scope)
+      val g = converge(build(pruned.vertices, RefineState.pairsOf(pruned.edges), part, None, _),
+        part, maxIterations, scope)
       val out = RefineState.toGraph(pruned, RefineState.labelsOf(g.blocks)(_.label), scope)
       scope.release(g.blocks)
       Failpoint("after seeding")
       out
     }(WccUtil.cached)
 
-  /** The converged seeding of `vertices` (under `part`) and `edges`
-   * (each edge's two endpoint records; with `keep`, restricted to its
-   * canonical keys) as the seed generation of the refinement, its
-   * blocks cached in `scope`: one more label-shipping job when the last
-   * superstep changed labels, so ghost labels, same-community degrees
-   * and stats are exact. */
+  /** The converged seeding of `vertices` (under `part`, those `vpred`
+   * accepts) and their edges `pairs` as the seed generation of the
+   * refinement, its blocks cached in `scope`: one more label-shipping
+   * job when the last superstep changed labels, so ghost labels,
+   * same-community degrees and stats are exact. */
   private[wcc] def refineSeed(vertices: RDD[(VertexId, VertexData)],
-      edges: RDD[(VertexData, VertexData)], keep: Option[RDD[(Long, Long)]],
-      part: HashPartitioner, maxIterations: Int, scope: Fixpoint.CacheScope): RefineState = {
-    var g = converge(build(vertices, edges, keep, part, _), part, maxIterations, scope)
+      pairs: RDD[(Long, Long)], part: HashPartitioner, maxIterations: Int,
+      scope: Fixpoint.CacheScope, vpred: Option[VertexData => Boolean] = None): RefineState = {
+    var g = converge(build(vertices, pairs, part, vpred, _), part, maxIterations, scope)
     if (g.changed > 0) {
       val last = g
       g = superstep(last, part, decide = false, RefineState.in(scope))
@@ -131,80 +130,14 @@ object InitialPartition {
     g
   }
 
-  /** The build job: the blocks of `vertices` (under `part`) and `edges`
-   * — with `keep`, only the edges whose canonical (min, max) key it
-   * holds (duplicate keys allowed) — and the superstep-2 decisions.
-   * The keys travel to both endpoint partitions in the same stage as
-   * the edge slots and filter them there, so the flag join costs no
-   * shuffle of its own. */
-  private[wcc] def build(vertices: RDD[(VertexId, VertexData)],
-      edges: RDD[(VertexData, VertexData)], keep: Option[RDD[(Long, Long)]],
-      part: HashPartitioner, cache: RefineState.Cache): Gen = {
-    val verts = RefineState.underPart(vertices, part)
-    val slots = RefineState.edgeSlots(edges, part, ranks = true)
-    finish(keep match {
-      case None =>
-        verts.zipPartitions(slots, preservesPartitioning = true) { (vIt, sIt) =>
-          block(part, vIt, sIt.map(_._2).toArray, None)
-        }
-      case Some(k) =>
-        verts.zipPartitions(slots, RefineState.pairSlots(k, part),
-          preservesPartitioning = true) {
-          (vIt, sIt, kIt) =>
-            block(part, vIt, sIt.map(_._2).toArray, Some(kIt.map(_._2).toArray))
-        }
-    }, cache)
-  }
-
-  /** One partition's seeding block, superstep-2 decisions made */
-  private def block(part: HashPartitioner, vIt: Iterator[(VertexId, VertexData)],
-      slots: Array[EdgeSlots], keys: Option[Array[EdgeSlots]]): Iterator[(Int, VertexBlock)] = {
-    val pid = TaskContext.getPartitionId()
-    val vs = vIt.toArray
-    java.util.Arrays.sort(vs, Ordering.by((v: (VertexId, VertexData)) => v._1))
-    val kept = keys.fold(slots)(restrict(vs.map(_._1), slots, _))
-    val (adj, label, ghostLabel) = RefineState.build(pid, part, vs, kept, ranks = true)
-    Iterator((pid, decideRound(adj, label, ghostLabel, null)))
-  }
-
-  /** the slots whose (self, neighbor) pair is among the `keys`;
-   * `ids` are the partition's vertex ids, ascending */
-  private def restrict(ids: Array[Long], slots: Array[EdgeSlots],
-      keys: Array[EdgeSlots]): Array[EdgeSlots] = {
-    // the keys as sorted neighbor lists per local vertex (CSR)
-    val offs = new Array[Int](ids.length + 1)
-    def local(v: Long) = java.util.Arrays.binarySearch(ids, v)
-    keys.foreach(k => k.self.foreach { v => val i = local(v); if (i >= 0) offs(i + 1) += 1 })
-    var i = 0
-    while (i < ids.length) { offs(i + 1) += offs(i); i += 1 }
-    val nbrs = new Array[Long](offs(ids.length))
-    val cursor = java.util.Arrays.copyOf(offs, ids.length)
-    keys.foreach { k =>
-      var x = 0
-      while (x < k.self.length) {
-        val li = local(k.self(x))
-        if (li >= 0) { nbrs(cursor(li)) = k.nbr(x); cursor(li) += 1 }
-        x += 1
-      }
-    }
-    i = 0
-    while (i < ids.length) { java.util.Arrays.sort(nbrs, offs(i), offs(i + 1)); i += 1 }
-    slots.map { s =>
-      val self = new ArrayBuilder.ofLong; val nbr = new ArrayBuilder.ofLong
-      val lab = new ArrayBuilder.ofLong
-      val t = new ArrayBuilder.ofInt; val vt = new ArrayBuilder.ofInt
-      var x = 0
-      while (x < s.self.length) {
-        val li = local(s.self(x))
-        if (li >= 0 && java.util.Arrays.binarySearch(nbrs, offs(li), offs(li + 1), s.nbr(x)) >= 0) {
-          self += s.self(x); nbr += s.nbr(x); lab += s.nbrLabel(x)
-          t += s.nbrT(x); vt += s.nbrVt(x)
-        }
-        x += 1
-      }
-      new EdgeSlots(self.result(), nbr.result(), lab.result(), t.result(), vt.result())
-    }
-  }
+  /** The build job: the ranked blocks of `vertices` (under `part`) and
+   * `pairs` ([[RefineState.blocks]], with `vpred`) and the superstep-2
+   * decisions. */
+  private[wcc] def build(vertices: RDD[(VertexId, VertexData)], pairs: RDD[(Long, Long)],
+      part: HashPartitioner, vpred: Option[VertexData => Boolean],
+      cache: RefineState.Cache): Gen =
+    finish(RefineState.blocks(vertices, pairs, part, RefineState.Ship.Ranks, vpred)(
+      decideRound(_, _, _, null)), cache)
 
   /** One superstep (one job): ship the labels the previous superstep
    * changed, then — with `decide` — re-decide the vertices with a

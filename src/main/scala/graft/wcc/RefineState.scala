@@ -96,14 +96,17 @@ private[wcc] final class Moves(val src: Int, val ids: Array[Long],
 private[wcc] final class SameSets(val ids: Array[Long],
     val sets: Array[Array[Long]]) extends BlockMessage
 
-/** Build-time edge slots bound for one partition: (self, neighbor,
- * neighbor label), plus the neighbor's t and vt when the block is
- * built for the seeding (null otherwise). Slots built from bare pairs
- * carry no labels either (null). [[BlockCodec]] is its one wire
- * format. */
-private[wcc] final class EdgeSlots(val self: Array[Long], val nbr: Array[Long],
-    val nbrLabel: Array[Long], val nbrT: Array[Int], val nbrVt: Array[Int])
+/** Build-time edge slots bound for one partition: (self, neighbor) id
+ * pairs, one per edge end it holds, with no attributes ([[GhostAttrs]]
+ * carry those). [[BlockCodec]] is its one wire format. */
+private[wcc] final class EdgeSlots(val self: Array[Long], val nbr: Array[Long])
     extends BlockMessage
+
+/** Build-time ghost attributes bound for one partition, once per vertex
+ * of the sender with a slot there: its label and, for the seeding, its
+ * t and vt (null otherwise). [[BlockCodec]] is its one wire format. */
+private[wcc] final class GhostAttrs(val ids: Array[Long], val labels: Array[Long],
+    val t: Array[Int], val vt: Array[Int]) extends BlockMessage
 
 /**
  * The wire format of the block exchanges: their `Int` target-partition
@@ -119,6 +122,7 @@ private[wcc] object BlockCodec extends Serializer with Serializable {
   private final val TagEdgeSlots = 1
   private final val TagMoves = 2
   private final val TagSameSets = 3
+  private final val TagGhostAttrs = 4
   private final val BufferSize = 4096
 
   override def newInstance(): SerializerInstance = Instance
@@ -187,9 +191,9 @@ private[wcc] object BlockCodec extends Serializer with Serializable {
     override def writeObject[T: ClassTag](t: T): SerializationStream = {
       t match {
         case k: java.lang.Integer => byte(TagInt); int(k)
-        case s: EdgeSlots =>
-          byte(TagEdgeSlots)
-          longs(s.self); longs(s.nbr); longs(s.nbrLabel); ints(s.nbrT); ints(s.nbrVt)
+        case s: EdgeSlots => byte(TagEdgeSlots); longs(s.self); longs(s.nbr)
+        case a: GhostAttrs =>
+          byte(TagGhostAttrs); longs(a.ids); longs(a.labels); ints(a.t); ints(a.vt)
         case m: Moves =>
           byte(TagMoves)
           int(m.src); longs(m.ids); longs(m.labels); double(m.wcc); long(m.moved)
@@ -268,7 +272,8 @@ private[wcc] object BlockCodec extends Serializer with Serializable {
       if (pos == lim && !fill()) throw new EOFException
       (byte() match {
         case TagInt => Int.box(int())
-        case TagEdgeSlots => new EdgeSlots(longs(), longs(), longs(), ints(), ints())
+        case TagEdgeSlots => new EdgeSlots(longs(), longs())
+        case TagGhostAttrs => new GhostAttrs(longs(), longs(), ints(), ints())
         case TagMoves => new Moves(int(), longs(), longs(), double(), long())
         case TagSameSets =>
           val ids = longs()
@@ -295,11 +300,14 @@ private[wcc] final class Partial(val cIds: Array[Long], val sums: Array[Long],
  * `part.getPartition(v)`; a block is keyed by its partition index,
  * which the same partitioner maps to itself.
  *
- * A state is built in one job: by [[RefineState.seed]] from a labeled
- * `Graph`, or — in IDWCC — by the clustering-coefficient seeding
- * itself ([[InitialPartition.refineSeed]]), whose supersteps run on
- * the same blocks and whose converged generation is handed over as
- * is, so no `Graph` is built between the prune and the final labels.
+ * Every block is built from vertices and id pairs, each vertex's
+ * attributes shipped once per partition holding it as a ghost
+ * ([[RefineState.blocks]]). A state is built in one job: by
+ * [[RefineState.seed]] from a labeled `Graph`, or — in IDWCC — by the
+ * clustering-coefficient seeding itself
+ * ([[InitialPartition.refineSeed]]), whose supersteps run on the same
+ * blocks and whose converged generation is handed over as is, so no
+ * `Graph` is built between the prune and the final labels.
  *
  * [[step]] advances a generation with ONE Spark job of at most three
  * stages:
@@ -396,13 +404,12 @@ private[graft] object RefineState {
 
   /** The seed generation of `graph`, its blocks cached by `cache`: one
    * job that builds the blocks (adjacency, labels, same-community
-   * degrees and, with `countTriangles`, the triangle counts) and
-   * returns their stats. */
+   * degrees and, with `countTriangles`, the triangle counts) from its
+   * vertices and edges and returns their stats. */
   def seed(graph: Graph[VertexData, Int], countTriangles: Boolean,
       cache: Cache): RefineState = {
     val part = new HashPartitioner(graph.vertices.getNumPartitions)
-    val base = refineBlocks(graph.vertices,
-      edgeSlots(graph.triplets.map(t => (t.srcAttr, t.dstAttr)), part, ranks = false), part)
+    val base = refineBlocks(graph.vertices, pairsOf(graph.edges), part, Ship.Labels)
     val blocks = cache(if (countTriangles) withTriangles(base, part) else base)
     val (cs, _, _) = merge(blocks.sparkContext.runJob(blocks, partialOf _))
     new RefineState(blocks, part, cs, 0.0, 0L)
@@ -410,15 +417,18 @@ private[graft] object RefineState {
 
   /** `graph` relabeled by `labels`, cut in `scope` and its vertices
    * materialized — the one GraphX step of a refinement: handing the
-   * result back. Its edges are cut by the job that first reads them. */
+   * result back. Its edges are cut by the job that first reads them.
+   * The null type evidence keeps `graph`'s edges as they are, without
+   * GraphX's ship of the changed vertices: a stage every read of the
+   * edges ([[seed]]) would pay and no block build needs. */
   def toGraph(graph: Graph[VertexData, Int], labels: RDD[(VertexId, Long)],
       scope: Fixpoint.CacheScope): Graph[VertexData, Int] = {
-    val g = scope.cut(graph.outerJoinVertices(labels) { (_, vd, l) =>
+    val g = scope.cut(graph.outerJoinVertices(labels) { (_, vd, l: Option[Long]) =>
       l match {
         case Some(c) if c != vd.cId => vd.copy(cId = c)
         case _ => vd
       }
-    })
+    }(implicitly, implicitly, null))
     g.vertices.count()
     g
   }
@@ -442,18 +452,50 @@ private[graft] object RefineState {
       Iterator.range(0, l.length).map(i => (a.ids(i), VertexData(a.ids(i), a.t(i), a.vt(i), l(i))))
     }, preservesPartitioning = true)
 
-  /** The refinement blocks of `vertices` and their edge `slots`: the
+  /** `edges` as (src, dst) id pairs */
+  private[wcc] def pairsOf(edges: RDD[Edge[Int]]): RDD[(Long, Long)] =
+    edges.map(e => (e.srcId, e.dstId))
+
+  /** What a block build ships of each ghost beyond its id: nothing (every
+   * ghost label 0), its label, or its label, t and vt ([[SeedRanks]]). */
+  private[wcc] sealed trait Ship
+  private[wcc] object Ship {
+    case object Ids extends Ship; case object Labels extends Ship; case object Ranks extends Ship
+  }
+
+  /** The refinement blocks of `vertices` and their edges `pairs`: the
    * adjacency, labels and same-community degrees, no triangle counts. */
   private[wcc] def refineBlocks(vertices: RDD[(VertexId, VertexData)],
-      slots: RDD[(Int, EdgeSlots)], part: HashPartitioner): RDD[(Int, VertexBlock)] =
-    underPart(vertices, part).zipPartitions(slots, preservesPartitioning = true) {
-      (vIt, sIt) =>
-        val pid = TaskContext.getPartitionId()
-        val (adj, label, ghostLabel) =
-          build(pid, part, vIt.toArray, sIt.map(_._2).toArray, ranks = false)
-        Iterator((pid, new VertexBlock(adj, label, ghostLabel,
-          ownDegrees(adj, label, ghostLabel), null, null, 0.0, 0L)))
+      pairs: RDD[(Long, Long)], part: HashPartitioner, ship: Ship): RDD[(Int, VertexBlock)] =
+    blocks(vertices, pairs, part, ship) { (adj, label, ghostLabel) =>
+      new VertexBlock(adj, label, ghostLabel, ownDegrees(adj, label, ghostLabel), null, null,
+        0.0, 0L)
     }
+
+  /** The one block build: each of the `pairs` goes as an id-only slot to
+   * both endpoint partitions ([[pairSlots]]), each partition sends its
+   * `vertices`' attributes once to every other partition holding a slot
+   * to them ([[GhostAttrs]], none for [[Ship.Ids]]) and builds its block
+   * once for `f` ([[build]]). With `vpred`, only its vertices are built. */
+  private[wcc] def blocks[T: ClassTag](vertices: RDD[(VertexId, VertexData)],
+      pairs: RDD[(Long, Long)], part: HashPartitioner, ship: Ship,
+      vpred: Option[VertexData => Boolean] = None)(
+      f: (Adjacency, Array[Long], Array[Long]) => T): RDD[(Int, T)] = {
+    val placed = if (vertices.partitioner.contains(part)) vertices else vertices.partitionBy(part)
+    val verts = vpred.fold(placed)(p => placed.filter(v => p(v._2)))
+    val slots = pairSlots(pairs, part)
+    val ranks = ship == Ship.Ranks
+    val prune = vpred.isDefined
+    if (ship == Ship.Ids)
+      verts.zipPartitions(slots, preservesPartitioning = true)(build(part, _, _, null, ranks,
+        prune)(f))
+    else {
+      val attrs = exchange(verts.zipPartitions(slots)(sendGhostAttrs(part, _, _, ranks)), part)
+      verts.zipPartitions(slots, attrs, preservesPartitioning = true) { (vIt, sIt, aIt) =>
+        build(part, vIt, sIt, aIt.map(_._2).toArray, ranks, prune)(f)
+      }
+    }
+  }
 
   /** `msgs` delivered to their target partitions under `part`, on
    * [[BlockCodec]]: the one exchange of every block message. */
@@ -461,42 +503,9 @@ private[graft] object RefineState {
       part: HashPartitioner): RDD[(Int, M)] =
     new ShuffledRDD[Int, M, M](msgs, part).setSerializer(BlockCodec)
 
-  /** `vertices` under `part`, without a shuffle when already there */
-  private[wcc] def underPart(vertices: RDD[(VertexId, VertexData)],
-      part: HashPartitioner): RDD[(VertexId, VertexData)] =
-    if (vertices.partitioner.contains(part)) vertices else vertices.partitionBy(part)
-
-  /** The build's one shuffle: each edge (its two endpoint records) as a
-   * slot at each endpoint's partition, carrying the other endpoint's
-   * id and label — and, with `ranks`, its t and vt. */
-  private[wcc] def edgeSlots(edges: RDD[(VertexData, VertexData)], part: HashPartitioner,
-      ranks: Boolean): RDD[(Int, EdgeSlots)] =
-    exchange(edges.mapPartitions { it =>
-      val n = part.numPartitions
-      val self = new Array[ArrayBuilder.ofLong](n)
-      val nbr = new Array[ArrayBuilder.ofLong](n)
-      val lab = new Array[ArrayBuilder.ofLong](n)
-      val nt = new Array[ArrayBuilder.ofInt](n)
-      val nvt = new Array[ArrayBuilder.ofInt](n)
-      def add(u: Long, v: VertexData): Unit = {
-        val q = part.getPartition(u)
-        if (self(q) == null) {
-          self(q) = new ArrayBuilder.ofLong; nbr(q) = new ArrayBuilder.ofLong
-          lab(q) = new ArrayBuilder.ofLong
-          if (ranks) { nt(q) = new ArrayBuilder.ofInt; nvt(q) = new ArrayBuilder.ofInt }
-        }
-        self(q) += u; nbr(q) += v.vId; lab(q) += v.cId
-        if (ranks) { nt(q) += v.t; nvt(q) += v.vt }
-      }
-      it.foreach { case (s, d) => add(s.vId, d); add(d.vId, s) }
-      Iterator.range(0, n).filter(self(_) != null).map(q =>
-        (q, new EdgeSlots(self(q).result(), nbr(q).result(), lab(q).result(),
-          if (ranks) nt(q).result() else null, if (ranks) nvt(q).result() else null)))
-    }, part)
-
   /** Each pair (s, d) as the slot (s, d) at s's partition and (d, s)
-   * at d's, in the [[EdgeSlots]] form without labels — only at the
-   * endpoints `at` accepts. */
+   * at d's, as id-only [[EdgeSlots]] — only at the endpoints `at`
+   * accepts. */
   private[wcc] def pairSlots(pairs: RDD[(Long, Long)], part: HashPartitioner,
       at: Long => Boolean = _ => true): RDD[(Int, EdgeSlots)] =
     exchange(pairs.mapPartitions { it =>
@@ -509,47 +518,115 @@ private[graft] object RefineState {
       }
       it.foreach { case (s, d) => if (at(s)) add(s, d); if (at(d)) add(d, s) }
       Iterator.range(0, part.numPartitions).filter(self(_) != null).map(q =>
-        (q, new EdgeSlots(self(q).result(), nbr(q).result(), null, null, null)))
+        (q, new EdgeSlots(self(q).result(), nbr(q).result())))
     }, part)
 
-  /** One partition's adjacency, own labels and ghost labels from its
-   * vertices and edge slots; with `ranks` (the slots then carry the
-   * neighbors' t and vt) the adjacency carries [[SeedRanks]]. Slots
-   * without labels leave every ghost label 0. */
-  private[wcc] def build(pid: Int, part: HashPartitioner,
-      vs: Array[(VertexId, VertexData)], slots: Array[EdgeSlots],
-      ranks: Boolean): (Adjacency, Array[Long], Array[Long]) = {
-    java.util.Arrays.sort(vs, Ordering.by((v: (VertexId, VertexData)) => v._1))
-    val n = vs.length
-    val ids = vs.map(_._1)
-    val offs = new Array[Int](n + 1)
-    var ghostIds = new ArrayBuilder.ofLong
-    slots.foreach { s =>
+  /** [[build]] calls in this JVM, where a local-mode job runs its tasks */
+  private[wcc] val builds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A partition's [[GhostAttrs]] to each other partition: its vertices
+   * with a slot from there (a slot at a vertex not here is left to the
+   * build), ascending, with their label and, with `ranks`, t and vt. */
+  private def sendGhostAttrs(part: HashPartitioner, vIt: Iterator[(VertexId, VertexData)],
+      sIt: Iterator[(Int, EdgeSlots)], ranks: Boolean): Iterator[(Int, GhostAttrs)] = {
+    val pid = TaskContext.getPartitionId()
+    val vs = vIt.toArray
+    val ids = byId(vs)
+    val to = new Array[ArrayBuilder.ofLong](part.numPartitions)
+    sIt.foreach { case (_, s) =>
       var k = 0
       while (k < s.self.length) {
-        offs(localIndex(ids, s.self(k)) + 1) += 1
-        if (part.getPartition(s.nbr(k)) != pid) ghostIds += s.nbr(k)
+        val q = part.getPartition(s.nbr(k))
+        val i = if (q == pid) -1 else java.util.Arrays.binarySearch(ids, s.self(k))
+        if (i >= 0) { if (to(q) == null) to(q) = new ArrayBuilder.ofLong; to(q) += i }
         k += 1
       }
     }
+    Iterator.range(0, part.numPartitions).filter(to(_) != null).map { q =>
+      val is = distinctSorted(to(q).result()).map(_.toInt)
+      (q, new GhostAttrs(is.map(ids), is.map(vs(_)._2.cId),
+        if (ranks) is.map(vs(_)._2.t) else null, if (ranks) is.map(vs(_)._2.vt) else null))
+    }
+  }
+
+  /** sorts `vs` by id; their ids, ascending */
+  private def byId(vs: Array[(VertexId, VertexData)]): Array[Long] = {
+    java.util.Arrays.sort(vs, Ordering.by((v: (VertexId, VertexData)) => v._1))
+    vs.map(_._1)
+  }
+
+  /** One partition's block for `f`: the adjacency, own labels and ghost
+   * labels of its vertices and id-only slots, duplicate slots collapsed.
+   * `attrs` are the [[GhostAttrs]] sent to it (null: ghost labels 0, a
+   * slot's remote end unchecked); with `ranks` the adjacency carries
+   * [[SeedRanks]]. A slot at an endpoint that is neither a vertex here nor
+   * a ghost sent here is dropped with `prune`, and fails the build without. */
+  private[wcc] def build[T](part: HashPartitioner, vIt: Iterator[(VertexId, VertexData)],
+      sIt: Iterator[(Int, EdgeSlots)], attrs: Array[GhostAttrs], ranks: Boolean,
+      prune: Boolean)(f: (Adjacency, Array[Long], Array[Long]) => T): Iterator[(Int, T)] = {
+    builds.incrementAndGet()
+    val pid = TaskContext.getPartitionId()
+    val vs = vIt.toArray
+    val ids = byId(vs)
+    val n = ids.length
+    val slots = sIt.map(_._2).toArray
+    def eachSlot(g: (Long, Long) => Unit): Unit = slots.foreach { s =>
+      var k = 0
+      while (k < s.self.length) { g(s.self(k), s.nbr(k)); k += 1 }
+    }
+    val sent = if (attrs == null) null else distinctSorted(attrs.flatMap(_.ids))
+    // per slot: its vertex's local index, or -1 when the slot is dropped
+    val at = new Array[Int](slots.iterator.map(_.self.length).sum)
+    val offs = new Array[Int](n + 1)
+    var x = 0
+    eachSlot { (u, v) =>
+      val li = java.util.Arrays.binarySearch(ids, u)
+      val known = li >= 0 && (
+        if (part.getPartition(v) == pid) java.util.Arrays.binarySearch(ids, v) >= 0
+        else sent == null || java.util.Arrays.binarySearch(sent, v) >= 0)
+      if (!known && !prune) throw new IllegalArgumentException(s"edge slot ($u, $v) at " +
+        s"partition $pid: an endpoint is neither a vertex there nor a ghost it was sent")
+      at(x) = if (known) li else -1
+      if (known) offs(li + 1) += 1
+      x += 1
+    }
     var i = 0
     while (i < n) { offs(i + 1) += offs(i); i += 1 }
-    val ghosts = distinctSorted(ghostIds.result())
-    ghostIds = null
-    val ghostLabel = new Array[Long](ghosts.length)
-    val ghostCc = if (ranks) new Array[Double](ghosts.length) else null
-    val ghostVt = if (ranks) new Array[Int](ghosts.length) else null
-    val nbrs = new Array[Long](offs(n))
+    var nbrs = new Array[Long](offs(n))
     val cursor = java.util.Arrays.copyOf(offs, n)
-    slots.foreach { s =>
+    x = 0
+    eachSlot { (_, v) =>
+      if (at(x) >= 0) { nbrs(cursor(at(x))) = v; cursor(at(x)) += 1 }
+      x += 1
+    }
+    // sort each vertex's neighbors and collapse duplicates in place
+    var w = 0; var start = 0
+    i = 0
+    while (i < n) {
+      val end = offs(i + 1)
+      java.util.Arrays.sort(nbrs, start, end)
+      offs(i) = w
+      var j = start
+      while (j < end) {
+        if (j == start || nbrs(j) != nbrs(j - 1)) { nbrs(w) = nbrs(j); w += 1 }
+        j += 1
+      }
+      start = end
+      i += 1
+    }
+    offs(n) = w
+    if (w < nbrs.length) nbrs = java.util.Arrays.copyOf(nbrs, w)
+    val ghosts = distinctSorted(nbrs.filter(part.getPartition(_) != pid))
+    val ghostLabel = new Array[Long](ghosts.length)
+    val ghostT = if (ranks) new Array[Int](ghosts.length) else null
+    val ghostVt = if (ranks) new Array[Int](ghosts.length) else null
+    if (attrs != null) attrs.foreach { a =>
       var k = 0
-      while (k < s.self.length) {
-        val li = localIndex(ids, s.self(k))
-        nbrs(cursor(li)) = s.nbr(k); cursor(li) += 1
-        if (part.getPartition(s.nbr(k)) != pid) {
-          val g = java.util.Arrays.binarySearch(ghosts, s.nbr(k))
-          if (s.nbrLabel != null) ghostLabel(g) = s.nbrLabel(k)
-          if (ranks) { ghostCc(g) = VertexData.cc(s.nbrT(k), s.nbrVt(k)); ghostVt(g) = s.nbrVt(k) }
+      while (k < a.ids.length) {
+        val g = java.util.Arrays.binarySearch(ghosts, a.ids(k))
+        if (g >= 0) {
+          ghostLabel(g) = a.labels(k)
+          if (ranks) { ghostT(g) = a.t(k); ghostVt(g) = a.vt(k) }
         }
         k += 1
       }
@@ -557,11 +634,10 @@ private[graft] object RefineState {
     val ref = new Array[Int](nbrs.length)
     i = 0
     while (i < n) {
-      java.util.Arrays.sort(nbrs, offs(i), offs(i + 1))
       var j = offs(i)
       while (j < offs(i + 1)) {
         ref(j) =
-          if (part.getPartition(nbrs(j)) == pid) localIndex(ids, nbrs(j))
+          if (part.getPartition(nbrs(j)) == pid) java.util.Arrays.binarySearch(ids, nbrs(j))
           else ~java.util.Arrays.binarySearch(ghosts, nbrs(j))
         j += 1
       }
@@ -570,6 +646,7 @@ private[graft] object RefineState {
     val t = vs.map(_._2.t)
     val vt = vs.map(_._2.vt)
     val rank = if (!ranks) null else {
+      val ghostCc = Array.tabulate(ghosts.length)(g => VertexData.cc(ghostT(g), ghostVt(g)))
       val cc = Array.tabulate(n)(k => VertexData.cc(t(k), vt(k)))
       val up = new Array[Boolean](nbrs.length)
       i = 0
@@ -588,7 +665,7 @@ private[graft] object RefineState {
     }
     val adj = new Adjacency(ids, t, vt, offs, nbrs, ref, ghosts,
       ghosts.map(part.getPartition), rank)
-    (adj, vs.map(_._2.cId), ghostLabel)
+    Iterator((pid, f(adj, vs.map(_._2.cId), ghostLabel)))
   }
 
   /** The seeding's total order on (cc, vt, id), on primitives: cc is

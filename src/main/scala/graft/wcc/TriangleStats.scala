@@ -84,26 +84,26 @@ object TriangleStats {
       }
   }
 
-  /** The support kernel over `graph` (lazy): the blocks of the input's
-   * vertices, each edge's support on both of its slots. */
-  private def supports(graph: Graph[_, _]): RDD[(Int, Supports)] = {
-    val part = new HashPartitioner(graph.vertices.getNumPartitions)
-    val verts = graph.vertices.mapPartitions(_.map { case (id, _) =>
+  /** The support kernel over `vertices` and their edges `pairs` (lazy):
+   * their blocks, each edge's support on both of its slots. */
+  private def supports[V](vertices: RDD[(VertexId, V)],
+      pairs: RDD[(Long, Long)]): RDD[(Int, Supports)] = {
+    val part = new HashPartitioner(vertices.getNumPartitions)
+    val verts = vertices.mapPartitions(_.map { case (id, _) =>
       (id, VertexData(id, 0, 0, 0L))
     }, preservesPartitioning = true)
-    val blocks = RefineState.refineBlocks(verts,
-      RefineState.pairSlots(graph.edges.map(e => (e.srcId, e.dstId)), part), part)
+    val blocks = RefineState.refineBlocks(verts, pairs, part, RefineState.Ship.Ids)
     RefineState.sameCommonCounts(blocks, part) { (b, support) =>
       new Supports(b.adj.ids, b.adj.offs, b.adj.nbrs, support)
     }
   }
 
   /** Per-edge triangle support, keyed by canonical (min, max)
-   * endpoint ids: the full common-neighbor count of every edge,
+   * endpoint ids: the full common-neighbor count of every pair,
    * zero-support edges included — a view of the support kernel. */
-  private[wcc] def edgeSupport[V: scala.reflect.ClassTag](
-      graph: Graph[V, _]): RDD[((Long, Long), Int)] =
-    supports(graph).flatMap(_._2.edges((s, d, c) => ((s, d), c)))
+  private[wcc] def edgeSupport[V](vertices: RDD[(VertexId, V)],
+      pairs: RDD[(Long, Long)]): RDD[((Long, Long), Int)] =
+    supports(vertices, pairs).flatMap(_._2.edges((s, d, c) => ((s, d), c)))
 
   /** Both surfaces read off the support blocks and materialized — the
    * pruned graph's vertices and edges and the full stats — in ONE job,
@@ -113,7 +113,8 @@ object TriangleStats {
    * triangle edges) equals the pruned-graph degree (reference
    * `DistributedWCC.scala:109-112`). */
   def run(graph: Graph[Int, Int]): Result = Fixpoint.returning { scope =>
-    val blocks = scope.cache(supports(graph), StorageLevel.MEMORY_AND_DISK)
+    val blocks = scope.cache(supports(graph.vertices, RefineState.pairsOf(graph.edges)),
+      StorageLevel.MEMORY_AND_DISK)
     val fullStats = VertexRDD(blocks.mapPartitions({ it =>
       val b = it.next()._2
       Iterator.range(0, b.ids.length).map(i => (b.ids(i), (b.t(i), b.vt(i))))

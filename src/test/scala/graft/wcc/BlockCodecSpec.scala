@@ -16,12 +16,15 @@ class BlockCodecSpec extends SparkSpec {
   private val extremes = Array(Long.MinValue, -1L, 0L, 1L, 127L, 128L, Long.MaxValue)
 
   private val records: Seq[(Int, BlockMessage)] = Seq(
-    0 -> new EdgeSlots(extremes, extremes.reverse, Array.fill(7)(-300L),
+    0 -> new EdgeSlots(extremes, extremes.reverse),
+    1 -> new EdgeSlots(Array(3L, 4L), Array(-9L, 9L)),
+    2 -> new EdgeSlots(null, Array(4L)),
+    3 -> new EdgeSlots(Array.emptyLongArray, Array.emptyLongArray),
+    10 -> new GhostAttrs(extremes, Array.fill(7)(-300L),
       Array(Int.MinValue, -1, 0, 1, 63, 64, Int.MaxValue), Array(-5, 5, -64, 64, 0, 7, -7)),
-    1 -> new EdgeSlots(Array(3L, 4L), Array(-9L, 9L), null, null, null),
-    2 -> new EdgeSlots(Array(3L), Array(4L), Array(-2L), null, null),
-    3 -> new EdgeSlots(Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray,
-      Array.emptyIntArray, Array.emptyIntArray),
+    11 -> new GhostAttrs(Array(3L, 4L), Array(-2L, Long.MaxValue), null, null),
+    12 -> new GhostAttrs(Array.emptyLongArray, Array.emptyLongArray, Array.emptyIntArray,
+      Array.emptyIntArray),
     Int.MaxValue -> new Moves(7, extremes, extremes, -0.0, Long.MaxValue),
     5 -> new Moves(-1, Array.emptyLongArray, Array.emptyLongArray, Double.NaN, Long.MinValue),
     6 -> new Moves(0, Array(1L), Array(2L), 1234.5678e-9, 0L),
@@ -89,7 +92,8 @@ object BlockCodecSpec {
   private def view(x: Any): Any = {
     def seq[A](a: Array[A]) = Option(a).map(_.toSeq)
     x match {
-      case s: EdgeSlots => ("slots", seq(s.self), seq(s.nbr), seq(s.nbrLabel), seq(s.nbrT), seq(s.nbrVt))
+      case s: EdgeSlots => ("slots", seq(s.self), seq(s.nbr))
+      case a: GhostAttrs => ("ghosts", seq(a.ids), seq(a.labels), seq(a.t), seq(a.vt))
       case m: Moves => ("moves", m.src, seq(m.ids), seq(m.labels),
         java.lang.Double.doubleToRawLongBits(m.wcc), m.moved)
       case s: SameSets => ("same", seq(s.ids), s.sets.toSeq.map(seq(_)))

@@ -41,7 +41,7 @@ object IncrDump {
 
     // the dump's caches live until the session stops
     val (m, scope) = Fixpoint.scoped(IncrementalWCC.merge(state, stream, _))
-    m.fullGraph.vertices.map { case (id, vd) => (id, vd.t, vd.vt, vd.cId) }
+    m.vertices.map { case (id, vd) => (id, vd.t, vd.vt, vd.cId) }
       .toDF("vid", "t", "vt", "cid")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/merged_stats")
     // hoist to locals: the movement closure below must not capture
@@ -51,7 +51,7 @@ object IncrDump {
     println(s"DUMP split=$split vertexCount=$vertexCount " +
       s"globalCC=$globalCC bits=${java.lang.Double.doubleToLongBits(globalCC)}")
 
-    val seed = IncrementalWCC.performInitialPartition(m.fullGraph, scope)
+    val seed = IncrementalWCC.performInitialPartition(m.vertices, m.pairs, scope)
     seed.labels.toDF("vid", "cid").coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/core_seed")
     val coreEdges = seed.blocks.flatMap { case (_, b) =>
@@ -75,7 +75,7 @@ object IncrDump {
       val moved = g.outerJoinVertices(deg) { (_, vd, degOpt) =>
         degOpt match {
           case Some(d) =>
-            DistributedWCC.bestMovement(vd, d, bStats.value, globalCC, vertexCount)
+            ReferenceEval.bestMovement(vd, d, bStats.value, globalCC, vertexCount)
           case None => vd
         }
       }

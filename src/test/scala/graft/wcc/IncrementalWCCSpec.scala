@@ -19,7 +19,7 @@ class IncrementalWCCSpec extends SparkSpec {
       assert(m.borderIds.value === Set(3L))
       assert(m.newIds.value === Set(4L, 5L))
       assert(m.vertexCount === 5L)
-      val verts = m.fullGraph.vertices.collect().toMap
+      val verts = m.vertices.collect().toMap
       // new vertices 4,5: one new triangle each
       assert(verts(4L).t === 1)
       assert(verts(5L).t === 1)
@@ -59,7 +59,7 @@ class IncrementalWCCSpec extends SparkSpec {
       (201L to 205L).map(i => Edge(0L, i, 1)) ++ Seq(Edge(201L, 202L, 1), Edge(3L, 203L, 1)))
     Fixpoint.using { scope =>
       val m = IncrementalWCC.merge(state, batch, scope)
-      val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
+      val fromScratch = TriangleStats.edgeSupport(m.vertices, m.pairs)
         .filter(_._2 > 0).map(_._1).collect().toSet
       val keys = m.deltaKeys.collect()
       assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
@@ -157,7 +157,7 @@ class IncrementalWCCSpec extends SparkSpec {
     assert(state.bulkFlagged.isDefined)
     Fixpoint.using { scope =>
       val m = IncrementalWCC.merge(state, batchRdd, scope)
-      val fromScratch = TriangleStats.edgeSupport(m.fullGraph)
+      val fromScratch = TriangleStats.edgeSupport(m.vertices, m.pairs)
         .filter(_._2 > 0).map(_._1).collect().toSet
       val keys = m.deltaKeys.collect()
       assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
@@ -176,7 +176,11 @@ class IncrementalWCCSpec extends SparkSpec {
     deltaFlagsParity(EdgeOps.canonicalize(ParityGraph.load(spark)))
   }
 
-  private def bulkFlaggedRunParity(canon: org.apache.spark.sql.DataFrame): Unit = {
+  /** `overlapping`: assert as a premise that some delta keys are also
+   * bulk flags, so the seeding's keep set holds duplicate pairs and
+   * their collapse to one adjacency slot runs */
+  private def bulkFlaggedRunParity(canon: org.apache.spark.sql.DataFrame,
+      overlapping: Boolean = false): Unit = {
     val maxVertex = canon.selectExpr("max(greatest(src, dst))").head().getLong(0)
     val split = math.floor(maxVertex * 0.8)
     val bulkEdges = canon.where(s"src < $split and dst < $split").rdd
@@ -184,6 +188,12 @@ class IncrementalWCCSpec extends SparkSpec {
     val batchRdd = canon.where(s"src >= $split or dst >= $split").rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
     val state = IncrementalWCC.prepareEdges(bulkEdges, bulkEdges.getNumPartitions)
+    if (overlapping) Fixpoint.using { scope =>
+      val m = IncrementalWCC.merge(state, batchRdd, scope)
+      val shared = m.deltaKeys.intersection(state.bulkFlagged.get).count()
+      m.globalCCF.join()
+      assert(shared > 0, "premise: the delta keys overlap the bulk flags")
+    }
     // the whole 0.8-split stream region as one batch: far from micro,
     // it still folds on the delta pass
     val fast = IncrementalWCC.run(state, batchRdd, releaseInput = false,
@@ -202,7 +212,7 @@ class IncrementalWCCSpec extends SparkSpec {
   }
 
   test(s"run with bulkFlagged emits the same labels as the from-scratch path (${ParityGraph.Name})") {
-    bulkFlaggedRunParity(EdgeOps.canonicalize(ParityGraph.load(spark)))
+    bulkFlaggedRunParity(EdgeOps.canonicalize(ParityGraph.load(spark)), overlapping = true)
   }
 
   private def multiBatchReplay(canon: org.apache.spark.sql.DataFrame): Unit = {

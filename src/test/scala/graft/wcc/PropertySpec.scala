@@ -107,7 +107,7 @@ class PropertySpec extends SparkSpec {
           val cs = CommunityOps.computeCommunityStats(g)
           assert(seed.stats === cs)
           val w = seed.wcc(n)
-          val wRef = CommunityOps.computeGlobalWCC(g, cs, n)
+          val wRef = ReferenceEval.computeGlobalWCC(g, cs, n)
           assert(math.abs(w - wRef) < 1e-12, s"wcc $w vs $wRef")
           // one scored step: it carries the seed's WCC (same fold), and
           // the generation it builds equals the reference plans over its
@@ -119,7 +119,7 @@ class PropertySpec extends SparkSpec {
           val movedCs = CommunityOps.computeCommunityStats(moved)
           assert(next.stats === movedCs)
           val wNext = next.wcc(n)
-          val wNextRef = CommunityOps.computeGlobalWCC(moved, movedCs, n)
+          val wNextRef = ReferenceEval.computeGlobalWCC(moved, movedCs, n)
           assert(math.abs(wNext - wNextRef) < 1e-12, s"wcc $wNext vs $wNextRef")
         }
       }

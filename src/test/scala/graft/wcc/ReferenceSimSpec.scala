@@ -178,7 +178,7 @@ object ReferenceSim {
       if (vcDeg.isEmpty) u -> part(u) // no degrees -> joinWithVertices miss
       else {
         val (t, vt) = stats(u)
-        u -> DistributedWCC.bestMovement(VertexData(u, t, vt, part(u)),
+        u -> ReferenceEval.bestMovement(VertexData(u, t, vt, part(u)),
           vcDeg, cs, globalCC, vertexCount).cId
       }
     }.toMap

@@ -20,13 +20,14 @@ import org.scalatest.time.SpanSugar._
  *
  * Each pin carries a same-JVM calibration: on the GraphX reference
  * evaluation of one generation ([[CommunityOps.computeCommunityStats]]
- * plus [[CommunityOps.computeGlobalWCC]]) the probe must count more
+ * plus [[ReferenceEval.computeGlobalWCC]]) the probe must count more
  * than one job and more than three stages, proving it sees the
  * per-generation fan-out this state replaced.
  *
  * Every block exchange of those loops runs on [[BlockCodec]]: a
  * message shuffle that falls back to the session serializer fails
- * here. */
+ * here. So does any other shuffle in an IDWCC fold but the global-cc
+ * fold's and the graft-back's. */
 class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   private implicit val signaler: Signaler = ThreadSignaler
   import GraphFixtures._
@@ -48,11 +49,11 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   }
 
   /** the probe sees the fan-out of the GraphX reference evaluation of
-   * one generation: its stats collect plus [[CommunityOps.computeGlobalWCC]] */
+   * one generation: its stats collect plus [[ReferenceEval.computeGlobalWCC]] */
   private def calibrate(init: org.apache.spark.graphx.Graph[VertexData, Int],
       n: Long): Unit = {
     val ref = JobProbe(spark.sparkContext) {
-      CommunityOps.computeGlobalWCC(init, CommunityOps.computeCommunityStats(init), n)
+      ReferenceEval.computeGlobalWCC(init, CommunityOps.computeCommunityStats(init), n)
     }
     assert(ref.jobs > 1 && ref.stages > 3, s"calibration failed: the probe " +
       s"counted ${ref.jobs} job(s) / ${ref.stages} stage(s) on the GraphX " +
@@ -60,7 +61,8 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   }
 
   private val messageClasses =
-    Seq(classOf[EdgeSlots], classOf[Moves], classOf[SameSets]).map(_.getName)
+    Seq(classOf[EdgeSlots], classOf[GhostAttrs], classOf[Moves], classOf[SameSets])
+      .map(_.getName)
 
   /** the shuffles in `rdd`'s lineage that carry block messages, with
    * the class of their values (`valueClassName` is Spark-private, so
@@ -113,7 +115,8 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
           assertOnCodec(what, seen.toSeq, expected)
         }
         var seed: RefineState = null
-        captured("the seed build", Seq(classOf[EdgeSlots], classOf[SameSets])) {
+        captured("the seed build",
+          Seq(classOf[EdgeSlots], classOf[GhostAttrs], classOf[SameSets])) {
           seed = RefineState.seed(init, countTriangles = true, capture)
         }
         captured("a batch step", Seq(classOf[Moves], classOf[SameSets])) {
@@ -124,16 +127,16 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
         val pruned = tri.pruned
         val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
         var built: InitialPartition.Gen = null
-        captured("the seeding build", Seq(classOf[EdgeSlots])) {
-          built = InitialPartition.build(pruned.vertices,
-            pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, capture)
+        captured("the seeding build", Seq(classOf[EdgeSlots], classOf[GhostAttrs])) {
+          built = InitialPartition.build(pruned.vertices, RefineState.pairsOf(pruned.edges), part,
+            None, capture)
         }
         captured("a seeding superstep", Seq(classOf[Moves])) {
           InitialPartition.superstep(built, part, decide = true, capture)
         }
         // the triangle support kernel
         assertOnCodec("the triangle kernel",
-          blockShuffles(TriangleStats.edgeSupport(graphOf(spark, edges))),
+          blockShuffles(TriangleStats.edgeSupport(pruned.vertices, RefineState.pairsOf(pruned.edges))),
           Seq(classOf[EdgeSlots], classOf[SameSets]))
         // the IDWCC merge's delta triangle pass
         val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
@@ -198,8 +201,8 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
       val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
       Fixpoint.using { scope =>
-        val built = InitialPartition.build(pruned.vertices,
-          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, RefineState.in(scope))
+        val built = InitialPartition.build(pruned.vertices, RefineState.pairsOf(pruned.edges), part,
+          None, RefineState.in(scope))
         assert(built.changed > 0, "premise: superstep 2 must change labels")
         val c = JobProbe(spark.sparkContext) {
           InitialPartition.superstep(built, part, decide = true, RefineState.in(scope))
@@ -217,13 +220,17 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       calibrate(init, n)
       val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
       val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
+      val before = RefineState.builds.get()
       val c = Fixpoint.using { scope =>
         JobProbe(spark.sparkContext) {
-          InitialPartition.build(pruned.vertices,
-            pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None, part, RefineState.in(scope))
+          InitialPartition.build(pruned.vertices, RefineState.pairsOf(pruned.edges), part, None,
+            RefineState.in(scope))
         }
       }
       assert(c.jobs === 1, s"the seeding block build ran ${c.jobs} jobs")
+      val builds = RefineState.builds.get() - before
+      assert(builds === part.numPartitions,
+        s"the seeding build ran RefineState.build $builds times on ${part.numPartitions} partitions")
       release(init)
     }
   }
@@ -236,7 +243,11 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     // the merged vertices), the seeding build, 2 supersteps and the
     // label-shipping job, 1 refine iteration and the graft-back — 8 on
     // the calling thread — plus the merge's concurrent global-cc fold,
-    // which runs under the caller's job group.
+    // which runs under the caller's job group. The stage ceiling is the
+    // count measured once the merge built no GraphX graph and the
+    // seeding read id pairs: 20 stages, against 25 while the merge
+    // built the union graph, repartitioned it and fed the seeding
+    // build its triplets.
     failAfter(180.seconds) {
       val (init, n) = seeded()
       calibrate(init, n)
@@ -249,10 +260,77 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
         out = IncrementalWCC.run(state, batch, releaseInput = false)
       }
       assert(c.jobs <= 9, s"an IDWCC micro-batch fold ran ${c.jobs} jobs")
+      assert(c.stages <= 20, s"an IDWCC micro-batch fold ran ${c.stages} stages")
       release(out.graph)
       release(state.graph)
       state.bulkFlagged.foreach(_.unpersist(blocking = false))
       release(init)
+    }
+  }
+
+  /** The shuffles the jobs of `body` read, under a job group of their
+   * own (the merge's global-cc fold carries it too): per RDD that reads
+   * one — an RDD with a parent outside its stage — its job id and call
+   * site. Read once the listener's counts held still for five 100 ms
+   * samples, as [[JobProbe]] does. */
+  private def shuffleReads(body: => Unit): Seq[(Int, String)] = {
+    val sc = spark.sparkContext
+    val tag = s"graft-shuffle-reads-${java.util.UUID.randomUUID()}"
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    def ours(p: java.util.Properties) = p != null && tag == p.getProperty("spark.jobGroup.id")
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (ours(js.properties)) js.stageInfos.foreach(i => jobOf.put(i.stageId, js.jobId))
+      override def onStageSubmitted(
+          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (ours(ss.properties)) {
+          val info = ss.stageInfo
+          val here = info.rddInfos.map(_.id).toSet
+          info.rddInfos.filter(_.parentIds.exists(!here(_))).foreach { r =>
+            reads.add((jobOf.getOrDefault(info.stageId, -1), r.callSite))
+          }
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "shuffle reads")
+      try body finally sc.clearJobGroup()
+      var prev = -1; var stable = 0; var spins = 0
+      while (stable < 5 && spins < 200) {
+        Thread.sleep(100)
+        if (reads.size == prev) stable += 1 else { stable = 0; prev = reads.size }
+        spins += 1
+      }
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    reads.asScala.toSeq
+  }
+
+  test("every shuffle of an IDWCC fold is a block exchange, but the global-cc fold's " +
+    "and the graft-back's") {
+    failAfter(180.seconds) {
+      val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
+      val batch = spark.sparkContext.parallelize(Seq(
+        org.apache.spark.graphx.Edge(3L, 4L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
+        org.apache.spark.graphx.Edge(3L, 5L, 1)))
+      var out: IncrementalWCC.State = null
+      val reads = shuffleReads { out = IncrementalWCC.run(state, batch, releaseInput = false) }
+      // RefineState.exchange's ShuffledRDD, which runs on BlockCodec
+      // ("every block exchange runs on the block codec" above)
+      val (block, other) = reads.partition(_._2.startsWith("ShuffledRDD at RefineState.scala"))
+      val (cc, graft) = other.partition(_._2.startsWith("groupByKey at IncrementalWCC.scala"))
+      assert(block.nonEmpty, s"premise: the probe sees the block exchanges in ${reads.mkString("; ")}")
+      assert(cc.size === 1, s"the global-cc fold's groupByKey: ${cc.mkString("; ")}")
+      // the rest is the graft-back's vertex update: GraphX's own shuffles,
+      // in the fold's last job
+      assert(graft.nonEmpty, s"premise: the graft-back ships vertices in ${reads.mkString("; ")}")
+      val last = reads.map(_._1).filter(_ != cc.head._1).max
+      assert(graft.forall(_._1 == last), "a shuffle outside the block exchanges, the " +
+        s"global-cc fold and the graft-back: ${graft.filter(_._1 != last).mkString("; ")}")
+      release(out.graph)
+      release(state.graph)
+      state.bulkFlagged.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -167,7 +167,8 @@ class TriangleStatsSpec extends SparkSpec {
 
   test("edgeSupport's positive keys are the brute-force triangle edges") {
     Seq(ParityGraph.edges(), hubPath, star).foreach { es =>
-      val got = TriangleStats.edgeSupport(graphOf(spark, es))
+      val g = graphOf(spark, es)
+      val got = TriangleStats.edgeSupport(g.vertices, RefineState.pairsOf(g.edges))
         .filter(_._2 > 0).map(_._1).collect()
       assert(got.length === got.distinct.length, "a key appears twice")
       assert(got.toSet === bruteSupports(es).filter(_._2 > 0).keySet)

@@ -74,8 +74,7 @@ class InitialPartitionSpec extends SparkSpec {
       .map { case (id, vd) => (id, vd.cId) }.collect().toMap
     Seq(1, 4, 80).foreach { parts =>
       Fixpoint.using { scope =>
-        val s = InitialPartition.refineSeed(pruned.vertices,
-          pruned.triplets.map(t => (t.srcAttr, t.dstAttr)), None,
+        val s = InitialPartition.refineSeed(pruned.vertices, RefineState.pairsOf(pruned.edges),
           new org.apache.spark.HashPartitioner(parts), 50, scope)
         val labels = s.labels.collect().toMap
         assert(labels === viaRun, s"labels differ at $parts partitions")
