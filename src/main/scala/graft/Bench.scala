@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE final JSON line (the scored artifact).
   *
@@ -18,17 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core: the harness contract is local[32] on a
-    // 32-cpu box; a hardcoded small default would quietly benchmark
-    // at a fraction of the machine
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    // measurement honesty (VERDICT r14 order #1): disable the
-    // s_wcc_incremental whole-region shortcut so the streaming row
-    // times a real end-to-end IncrementalWCC.run fold inside
-    // foreachBatch instead of the batch twin's memoized labels
-    System.setProperty("graft.stream.wccShortcut", "off")
     // optional graph-partition override for local A/B probes (sbt's
     // forked run does not forward -D flags, so route through env)
     sys.env.get("SPARK_GRAFT_GRAPH_PARTS").foreach(v =>
@@ -167,19 +156,7 @@ object Bench {
       }, "bench-load-trace")
       tracer.setDaemon(true)
       tracer.start()
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.sql.adaptive.enabled", "true")
-        // events.ts is parquet TIMESTAMP(NANOS); Spark reads it as Long
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      val spark = LocalSession(LocalSession.cpus)
       // deterministic run order (alphabetical), errors surfaced on stderr
       val results = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>

@@ -240,7 +240,7 @@ object Graft {
    * source's unigram distribution; `docs` needs
    * (doc_id, source, text). */
   def dsirWeights(docs: DataFrame, targetSource: String): DataFrame =
-    graft.queries.Round7Queries.dsirWeightsOf(docs, targetSource)
+    graft.queries.CorpusQueries.dsirWeightsOf(docs, targetSource)
 
   // ---- temporal joins ----------------------------------------------
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.graph.{EdgeOps, Fixpoint}
 import graft.wcc._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not part of the library surface): scale-up probe for the
@@ -49,18 +48,7 @@ object ScaleProbe {
     })
     def wanted(name: String): Boolean =
       phaseFilter.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-scale-ckpt").toString)
+    val spark = LocalSession(LocalSession.cpus)
 
     @volatile var peak = 0L
     val sampler = new Thread(() => {

@@ -1,246 +1,29 @@
 package graft
 
-import graft.queries.{AdvancedQueries, GraphQueries, PipelineQueries, RelationalQueries, Round5Queries, Round6Queries, Round7Queries, Round8Queries, Round11Queries, SqlSurfaceQueries}
+import graft.queries.{QueryRegistry, WccQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Driver contract (see SURVEY.md §7 and the harness docs):
  *  - `entry`: flagship query, smoke-checked at sf0.001;
- *  - `queries`: one entry per implemented operator from SURVEY.md §2
- *    (and per training-pipeline extension), each `(spark, sfDir) =>
+ *  - `queries`: every registered query, each `(spark, sfDir) =>
  *    DataFrame` over the parquet tables in sfDir;
- *  - `oracleSql`: DuckDB-equivalent SQL per query; omitted for
- *    non-SQL-expressible operators (Pregel phases), which get a
- *    rows-only check.
+ *  - `oracleSql`: the DuckDB SQL that predicts each query's rows.
  *
+ * Both maps are views of the one [[graft.queries.QueryRegistry]].
  * Column names are aliased identically on both sides — the driver's
  * comparison sorts columns by name before hashing.
  */
 object SparkEntry {
 
-  /** Closed-window (watermark-evicted) hourly aggregate — shared by
-   * the append-mode memory sink and the FileStreamSink round trip,
-   * which emit the identical row set. */
-  private val ClosedWindowOracle: String =
-    """WITH b AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hour, event_type,
-      |  count(*) AS n, floor(sum(value) * 1e4 + 0.5) / 1e4 AS sum_value
-      |  FROM events GROUP BY 1, 2),
-      |wm AS (SELECT (epoch_us(max(ts)) // 1000) * 1000 - 3600000000 AS w FROM events)
-      |SELECT hour, event_type, n, sum_value FROM b, wm
-      |WHERE epoch_us(hour) + 3600000000 <= w""".stripMargin
-
   /** Flagship: full batch DWCC community detection on the
    * co-purchase graph (SURVEY.md §3.1). */
   def entry(spark: SparkSession): DataFrame =
-    GraphQueries.wccPartition(spark, "/root/testdata/sf0.001")
+    WccQueries.wccPartition(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ AdvancedQueries.queries ++ GraphQueries.queries ++
-      PipelineQueries.queries ++ SqlSurfaceQueries.queries ++ Round5Queries.queries ++ Round6Queries.queries ++ Round7Queries.queries ++ Round8Queries.queries ++ Round11Queries.queries ++ Map(
-      "s_stream_hourly" -> (graft.streaming.StreamOps.hourlyEventCounts _),
-      "s_stream_hourly_rocksdb" -> (graft.streaming.StreamOps.hourlyEventCountsRocksDB _),
-      "s_stream_hourly_append" -> (graft.streaming.StreamOps.hourlyEventCountsAppend _),
-      "s_stream_file_sink" -> (graft.streaming.StreamOps.fileSinkRoundtrip _),
-      "s_stream_multibatch_topk" -> ((s: SparkSession, d: String) =>
-        graft.streaming.StreamOps.multiBatchTopUsers(s, d)),
-      "s_stream_sessions" -> (graft.streaming.StreamOps.sessionizeStream _),
-      "s_stream_dedup" -> (graft.streaming.StreamOps.streamingDedup _),
-      "s_stream_dedup_ww" -> (graft.streaming.StreamOps.streamingDedupWithinWatermark _),
-      "s_stream_enrich" -> (graft.streaming.StreamOps.streamStaticEnrich _),
-      "s_stream_join" -> (graft.streaming.StreamOps.streamStreamJoin _),
-      "s_stream_running_state" -> (graft.streaming.StreamOps.runningUserState _),
-      "s_stream_tws_running" -> (graft.streaming.StreamOps.transformWithStateRunning _),
-      "s_stream_tws_toplist" -> (graft.streaming.StreamOps.transformWithStateTopList _),
-      "s_stream_tws_mapstate" -> (graft.streaming.StreamOps.transformWithStateMapCounts _),
-      "s_stream_left_outer" -> (graft.streaming.StreamOps.streamStreamLeftOuter _),
-      "s_stream_ckpt_resume" -> (graft.streaming.StreamOps.checkpointedResume _),
-      "s_state_reader" -> (graft.streaming.StreamOps.stateStoreReader _),
-      "s_state_reader_rocksdb" -> (graft.streaming.StreamOps.stateStoreReaderRocksDB _),
-      "s_stream_observe" -> (graft.streaming.StreamOps.streamObserve _),
-      "s_stream_session_window" -> (graft.streaming.StreamOps.sessionWindowStream _),
-      "s_wcc_incremental" -> (graft.streaming.StreamOps.incrementalWccStream _),
-      "s_stream_ann" -> (graft.streaming.StreamOps.annRetrieveStream _),
-      "s_stream_semdedup" -> (graft.streaming.StreamOps.semDedupStream _))
+    QueryRegistry.all.map { case (name, spec) => name -> spec.run }
 
   def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ AdvancedQueries.oracles ++ GraphQueries.oracles ++
-      PipelineQueries.oracles ++ SqlSurfaceQueries.oracles ++ Round5Queries.oracles ++ Round6Queries.oracles ++ Round7Queries.oracles ++ Round8Queries.oracles ++ Round11Queries.oracles ++ Map(
-      // the streaming query drains the bounded source completely, so
-      // its final table equals the batch aggregation
-      "s_stream_hourly" -> RelationalQueries.oracles("r_events_hourly"),
-      // the RocksDB provider changes only where state lives — same
-      // drained table, same oracle
-      "s_stream_hourly_rocksdb" -> RelationalQueries.oracles("r_events_hourly"),
-      // append mode emits exactly the windows whose end the final
-      // watermark (max event time - 1h, ms-truncated) has passed
-      "s_stream_hourly_append" -> ClosedWindowOracle,
-      // the exactly-once FileStreamSink commits the same closed
-      // windows append mode emits — ONE shared definition, so a
-      // contract tweak can never leave the twins checking
-      // different SQL
-      "s_stream_file_sink" -> ClosedWindowOracle,
-      // the Structured Streaming IDWCC twin drains the stream-region
-      // edges as one AvailableNow micro-batch folded through
-      // IncrementalWCC.run — the same single-batch replay the batch
-      // twin runs, so ONE shared oracle CTE predicts both
-      "s_wcc_incremental" -> GraphQueries.oracles("g_wcc_incremental"),
-      // each query vector arrives in exactly one micro-batch and is
-      // scored against the STATIC persisted index, so the drained
-      // union equals the batch cell-probe — one shared oracle
-      "s_stream_ann" -> PipelineQueries.oracles("p_ann_ivf"),
-      // online semantic dedup-on-ingest: arrivals staged in ascending
-      // id order, each checked against static pool + every seen
-      // arrival — the drained output equals one batch pass over
-      // corpus + arrivals (see StreamOps.semDedupStream)
-      "s_stream_semdedup" -> PipelineQueries.SemDedupStreamOracle,
-      // within-watermark dedup over a drained bounded stream = batch
-      // distinct per (user, type), counted per user
-      "s_stream_dedup_ww" ->
-        """SELECT user_id, count(DISTINCT event_type) AS n_types
-          |FROM events GROUP BY user_id""".stripMargin,
-      // watermarked keep-first dedup over a drained bounded stream =
-      // batch distinct per key
-      "s_stream_dedup" ->
-        """SELECT event_type, count(DISTINCT user_id) AS n_users
-          |FROM events GROUP BY event_type""".stripMargin,
-      // count/max fold across forced micro-batches = the batch
-      // aggregate (both folds are batching-insensitive)
-      "s_stream_multibatch_topk" ->
-        """SELECT user_id, count(*) AS n_events,
-          |  floor(max(value) * 1e4 + 0.5) / 1e4 AS max_value
-          |FROM events GROUP BY user_id
-          |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin,
-      // drained watermarked stream-stream join = the batch range join
-      "s_stream_join" ->
-        """SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id,
-          |  epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
-          |FROM events p JOIN events v
-          |  ON p.event_type = 'purchase' AND v.event_type = 'view'
-          |  AND v.user_id = p.user_id
-          |  AND v.ts <= p.ts
-          |  AND v.ts >= p.ts - INTERVAL 1 HOUR""".stripMargin,
-      // native session_window in append mode emits exactly the
-      // sessions whose end (last event + 30min gap) the final
-      // watermark (ms-truncated max event time - 1h) has passed
-      "s_stream_session_window" ->
-        """WITH x AS (
-          |  SELECT user_id, event_id, epoch_us(ts) AS us, value,
-          |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-          |      OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 1800000000 THEN 1 ELSE 0 END AS brk
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-          |), s AS (
-          |  SELECT user_id, us, value,
-          |    sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-          |      ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM x),
-          |wm AS (SELECT (epoch_us(max(ts)) // 1000) * 1000 - 3600000000 AS w FROM events),
-          |sess AS (
-          |  SELECT user_id, min(us) AS start_us, max(us) + 1800000000 AS end_us,
-          |    count(*) AS n_events, floor(sum(value) * 1e4 + 0.5) / 1e4 AS sum_value
-          |  FROM s GROUP BY user_id, sid)
-          |SELECT user_id, start_us, end_us, n_events, sum_value
-          |FROM sess, wm WHERE end_us <= wm.w""".stripMargin,
-      // checkpoint-recovered restart: upserted update-mode emissions
-      // across two query runs sharing one checkpoint = batch aggregate
-      "s_stream_ckpt_resume" ->
-        """SELECT event_type, count(*) AS n,
-          |  floor(sum(value) * 1e4 + 0.5) / 1e4 AS sum_value
-          |FROM events GROUP BY event_type""".stripMargin,
-      // observed metrics of the single-batch drain = the whole table
-      "s_stream_observe" ->
-        """SELECT count(*) AS n_rows,
-          |  floor(sum(value) * 1e4 + 0.5) / 1e4 AS sum_value,
-          |  CAST(count_if(value > 250.0) AS BIGINT) AS n_big
-          |FROM events""".stripMargin,
-      // the checkpointed aggregation state re-read through the Spark 4
-      // state data source = the batch per-user aggregate (count/max
-      // are batching-insensitive)
-      "s_state_reader" ->
-        """SELECT user_id, count(*) AS n_events,
-          |  floor(max(value) * 1e4 + 0.5) / 1e4 AS max_value
-          |FROM events GROUP BY user_id""".stripMargin,
-      // same state, written under the RocksDB provider and re-read
-      // through the same state data source
-      "s_state_reader_rocksdb" ->
-        """SELECT user_id, count(*) AS n_events,
-          |  floor(max(value) * 1e4 + 0.5) / 1e4 AS max_value
-          |FROM events GROUP BY user_id""".stripMargin,
-      // update-mode mapGroupsWithState drained fully: the monotone-max
-      // running state per user = the batch per-user aggregate
-      "s_stream_running_state" ->
-        """SELECT user_id, count(*) AS n_events,
-          |  floor(sum(value) * 1e4 + 0.5) / 1e4 AS sum_value
-          |FROM events GROUP BY user_id""".stripMargin,
-      // transformWithState (explicit ValueState, RocksDB store) drains
-      // to the same monotone-max-per-user = batch aggregate contract
-      "s_stream_tws_running" ->
-        """SELECT user_id, count(*) AS n_events,
-          |  floor(sum(value) * 1e4 + 0.5) / 1e4 AS sum_value
-          |FROM events GROUP BY user_id""".stripMargin,
-      // MapState per-(user, type) counters drained fully = the batch
-      // two-key group-by count
-      "s_stream_tws_mapstate" ->
-        """SELECT user_id, event_type, count(*) AS n_type
-          |FROM events GROUP BY user_id, event_type""".stripMargin,
-      // ListState top-3 is arrival-order-insensitive (the multiset
-      // only improves), so the drained state = the batch top-3
-      "s_stream_tws_toplist" ->
-        """WITH s AS (SELECT user_id, value, row_number() OVER (
-          |    PARTITION BY user_id ORDER BY value DESC) AS rn FROM events)
-          |SELECT user_id,
-          |  floor(max(CASE WHEN rn = 1 THEN value END) * 1e4 + 0.5) / 1e4 AS top1,
-          |  floor(max(CASE WHEN rn = 2 THEN value END) * 1e4 + 0.5) / 1e4 AS top2,
-          |  floor(max(CASE WHEN rn = 3 THEN value END) * 1e4 + 0.5) / 1e4 AS top3
-          |FROM s GROUP BY user_id""".stripMargin,
-      // left-outer stream-stream join: all inner matches, plus
-      // null-matched purchases evicted from join state. The global
-      // watermark is the MIN over both watermarked streams (views and
-      // purchases each track their own max event time, ms-truncated,
-      // minus the 1h delay); a purchase emits its null row once its
-      // event time falls below that global watermark (the range
-      // condition v_ts <= p_ts adds no extra margin on the left side:
-      // no view at or above the watermark can match an older purchase).
-      "s_stream_left_outer" ->
-        """WITH p AS (SELECT user_id, event_id AS purchase_id, epoch_us(ts) AS pts
-          |    FROM events WHERE event_type = 'purchase'),
-          |v AS (SELECT user_id, event_id AS view_id, epoch_us(ts) AS vts
-          |    FROM events WHERE event_type = 'view'),
-          |wm AS (SELECT least(
-          |      (epoch_us(max(CASE WHEN event_type = 'view' THEN ts END)) // 1000) * 1000,
-          |      (epoch_us(max(CASE WHEN event_type = 'purchase' THEN ts END)) // 1000) * 1000)
-          |    - 3600000000 AS w FROM events),
-          |m AS (SELECT p.user_id, p.purchase_id, v.view_id FROM p JOIN v
-          |    ON v.user_id = p.user_id AND v.vts <= p.pts
-          |    AND v.vts >= p.pts - 3600000000),
-          |um AS (SELECT p.user_id, p.purchase_id, -1 AS view_id FROM p, wm
-          |    WHERE p.pts < wm.w
-          |    AND NOT EXISTS (SELECT 1 FROM m WHERE m.purchase_id = p.purchase_id))
-          |SELECT user_id, purchase_id, CAST(view_id AS BIGINT) AS view_id FROM m
-          |UNION ALL
-          |SELECT user_id, purchase_id, CAST(view_id AS BIGINT) AS view_id FROM um""".stripMargin,
-      // drained stream-static join in complete mode = the batch join
-      "s_stream_enrich" ->
-        """SELECT c_mktsegment, count(*) AS n_events,
-          |  floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
-          |FROM events JOIN customer ON user_id = c_custkey
-          |GROUP BY c_mktsegment""".stripMargin,
-      // closed sessions = every session except each user's last
-      // (the open one stays in flatMapGroupsWithState state)
-      "s_stream_sessions" ->
-        """WITH x AS (
-          |  SELECT user_id, event_id, epoch_us(ts) AS us, value,
-          |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-          |      OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 1800000000 THEN 1 ELSE 0 END AS brk
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-          |), s AS (
-          |  SELECT user_id, us, value,
-          |    sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-          |      ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM x
-          |), agg AS (
-          |  SELECT user_id, sid, min(us) AS start_us, max(us) + 1800000000 AS end_us,
-          |    count(*) AS n_events, floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
-          |  FROM s GROUP BY user_id, sid)
-          |SELECT user_id, start_us, end_us, n_events, sum_value FROM agg
-          |QUALIFY sid < max(sid) OVER (PARTITION BY user_id)""".stripMargin)
+    QueryRegistry.all.map { case (name, spec) => name -> spec.oracle }
 }

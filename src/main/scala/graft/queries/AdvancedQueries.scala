@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Round-2 relational surface: temporal joins (as-of, banded range),
+ * Relational rows over temporal joins (as-of, banded range),
  * window lead/lag, correlated subqueries, bucketed co-located joins,
  * and sketch-based approximate distinct counts.
  *
@@ -90,7 +90,7 @@ object AdvancedQueries {
   /** Join over tables bucketed on the join key: both sides are
    * written `bucketBy(8, custkey)` so the sort-merge join reads
    * co-located buckets with NO shuffle exchange on either side
-   * (asserted by `ExplainCheckSpec`) — the table-layout contract that
+   * (asserted by `AdvancedQueriesSpec`) — the table-layout contract that
    * replaces repartitioning for repeated fact-fact joins at 100 TB. */
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val tag = math.abs(sfDir.hashCode).toString
@@ -438,43 +438,16 @@ object AdvancedQueries {
           col("exact_users").cast("double") * 0.05).as("approx_ok"))
       .orderBy("event_type")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r_lead_lag" -> leadLag _,
-    "r_asof_join" -> asofJoin _,
-    "r_range_join" -> rangeJoin _,
-    "r_correlated" -> correlatedAgg _,
-    "r_bucketed_join" -> bucketedJoin _,
-    "r_partition_pruning" -> partitionPruning _,
-    "r_json_struct" -> jsonStruct _,
-    "r_json_roundtrip" -> jsonRoundtrip _,
-    "r_csv_quoted_roundtrip" -> csvQuotedRoundtrip _,
-    "r_array_funcs" -> arrayFuncs _,
-    "r_rank_funcs" -> rankFuncs _,
-    "r_intersect_except" -> intersectExcept _,
-    "r_sliding_window" -> slidingWindow _,
-    "r_cube" -> cubeAgg _,
-    "r_approx_distinct" -> approxDistinct _,
-    "r_approx_quantiles" -> approxQuantiles _,
-    "r_posexplode" -> posExplode _,
-    "r_map_funcs" -> mapFuncs _,
-    "r_custom_udaf" -> customUdaf _,
-    "r_orc_roundtrip" -> orcRoundtrip _,
-    "r_range_frame" -> rangeFrame _,
-    "r_typed_cogroup" -> typedCogroup _,
-    "r_typed_mapgroups" -> typedMapGroups _,
-    "r_unpivot" -> unpivot _
-  )
-
-  val oracles: Map[String, String] = Map(
-    "r_lead_lag" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("r_lead_lag", leadLag,
       """SELECT event_id, user_id, epoch_us(ts) AS us,
         |  coalesce(floor((lag(value, 1) OVER w) * 1e4 + 0.5) / 1e4, -1.0) AS prev_value,
         |  coalesce(lead(event_type, 1) OVER w, 'none') AS next_type,
         |  floor((sum(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |    ROWS UNBOUNDED PRECEDING)) * 1e4 + 0.5) / 1e4 AS run_sum
         |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)""".stripMargin,
-    "r_asof_join" ->
+        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)""".stripMargin),
+    QuerySpec("r_asof_join", asofJoin,
       """WITH o AS (SELECT o_custkey AS k, epoch_us(o_orderdate) AS tt,
         |    o_orderkey, o_totalprice FROM orders),
         |e AS (SELECT user_id AS k, epoch_us(ts) AS tt, event_id FROM events),
@@ -492,49 +465,49 @@ object AdvancedQueries {
         |SELECT event_id, k AS user_id, tt AS us,
         |  coalesce(last_okey, -1) AS last_orderkey,
         |  coalesce(floor(last_oprice * 1e2 + 0.5) / 1e2, 0.0) AS last_totalprice
-        |FROM m WHERE side = 1""".stripMargin,
-    "r_range_join" ->
+        |FROM m WHERE side = 1""".stripMargin),
+    QuerySpec("r_range_join", rangeJoin,
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events)
         |SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
         |  abs(b.us - a.us) AS gap_us
         |FROM e a JOIN e b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        |  AND abs(b.us - a.us) <= 3600000000""".stripMargin,
-    "r_correlated" ->
+        |  AND abs(b.us - a.us) <= 3600000000""".stripMargin),
+    QuerySpec("r_correlated", correlatedAgg,
       """SELECT c_nationkey, count(*) AS n_above
         |FROM customer c
         |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer c2
         |                   WHERE c2.c_nationkey = c.c_nationkey)
-        |GROUP BY c_nationkey""".stripMargin,
-    "r_bucketed_join" ->
+        |GROUP BY c_nationkey""".stripMargin),
+    QuerySpec("r_bucketed_join", bucketedJoin,
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  floor((sum(o_totalprice)) * 1e2 + 0.5) / 1e2 AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "r_partition_pruning" ->
+        |GROUP BY c_mktsegment""".stripMargin),
+    QuerySpec("r_partition_pruning", partitionPruning,
       """WITH b AS (SELECT CAST(min(ts) AS DATE) AS d0 FROM events)
         |SELECT CAST(ts AS DATE) AS day, count(*) AS n,
         |  floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
         |FROM events, b
         |WHERE CAST(ts AS DATE) >= d0 + INTERVAL 30 DAY
         |  AND CAST(ts AS DATE) < d0 + INTERVAL 60 DAY
-        |GROUP BY 1""".stripMargin,
-    "r_json_struct" ->
+        |GROUP BY 1""".stripMargin),
+    QuerySpec("r_json_struct", jsonStruct,
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events""".stripMargin,
-    "r_json_roundtrip" ->
+        |FROM events""".stripMargin),
+    QuerySpec("r_json_roundtrip", jsonRoundtrip,
       """SELECT event_type, count(*) AS n,
         |  floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value,
         |  max(epoch_us(ts)) AS max_us
-        |FROM events GROUP BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type""".stripMargin),
     // the quoted-CSV round trip is lossless, so the oracle
     // aggregates the original table directly
-    "r_csv_quoted_roundtrip" ->
+    QuerySpec("r_csv_quoted_roundtrip", csvQuotedRoundtrip,
       """SELECT c_mktsegment, count(*) AS n,
         |  floor(sum(c_acctbal) * 1e2 + 0.5) / 1e2 AS sum_bal,
         |  CAST(sum(length(c_name)) AS BIGINT) AS name_chars
-        |FROM customer GROUP BY c_mktsegment""".stripMargin,
-    "r_rank_funcs" ->
+        |FROM customer GROUP BY c_mktsegment""".stripMargin),
+    QuerySpec("r_rank_funcs", rankFuncs,
       """SELECT o_orderkey, o_orderpriority, rnk, drnk, prnk, quartile FROM (
         |  SELECT o_orderkey, o_orderpriority,
         |    rank() OVER w AS rnk, dense_rank() OVER w AS drnk,
@@ -543,40 +516,40 @@ object AdvancedQueries {
         |  FROM orders
         |  WINDOW w AS (PARTITION BY o_orderpriority
         |    ORDER BY o_totalprice DESC, o_orderkey))
-        |WHERE rnk <= 10""".stripMargin,
-    "r_intersect_except" ->
+        |WHERE rnk <= 10""".stripMargin),
+    QuerySpec("r_intersect_except", intersectExcept,
       """SELECT 'intersect' AS setop, count(*) AS n FROM (
         |  SELECT o_custkey AS k FROM orders
         |  INTERSECT SELECT c_custkey FROM customer)
         |UNION ALL
         |SELECT 'except', count(*) FROM (
         |  SELECT c_custkey AS k FROM customer
-        |  EXCEPT SELECT o_custkey FROM orders)""".stripMargin,
-    "r_sliding_window" ->
+        |  EXCEPT SELECT o_custkey FROM orders)""".stripMargin),
+    QuerySpec("r_sliding_window", slidingWindow,
       """WITH x AS (SELECT
         |  unnest([time_bucket(INTERVAL '1 hour', ts) - INTERVAL '1 hour',
         |          time_bucket(INTERVAL '1 hour', ts)]) AS wstart,
         |  event_type, value FROM events)
         |SELECT wstart, event_type, count(*) AS n,
         |  floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
-        |FROM x GROUP BY wstart, event_type""".stripMargin,
-    "r_array_funcs" ->
+        |FROM x GROUP BY wstart, event_type""".stripMargin),
+    QuerySpec("r_array_funcs", arrayFuncs,
       """WITH g AS (SELECT l_orderkey, list_sort(list(l_quantity)) AS qs
         |  FROM lineitem GROUP BY l_orderkey)
         |SELECT l_orderkey, len(qs) AS n_items,
         |  qs[1] AS q_min, qs[-1] AS q_max,
         |  floor((list_reduce(list_prepend(0.0, qs), (a, b) -> a + b)) * 1e4 + 0.5) / 1e4
         |    AS q_total
-        |FROM g""".stripMargin,
-    "r_unpivot" ->
+        |FROM g""".stripMargin),
+    QuerySpec("r_unpivot", unpivot,
       """WITH g AS (SELECT l_returnflag, count(*) AS n_lines,
         |  count(DISTINCT l_orderkey) AS n_orders,
         |  count(DISTINCT l_partkey) AS n_parts
         |  FROM lineitem GROUP BY l_returnflag)
         |SELECT l_returnflag, 'n_lines' AS metric, n_lines AS value FROM g
         |UNION ALL SELECT l_returnflag, 'n_orders', n_orders FROM g
-        |UNION ALL SELECT l_returnflag, 'n_parts', n_parts FROM g""".stripMargin,
-    "r_typed_cogroup" ->
+        |UNION ALL SELECT l_returnflag, 'n_parts', n_parts FROM g""".stripMargin),
+    QuerySpec("r_typed_cogroup", typedCogroup,
       """WITH o AS (SELECT o_custkey AS k, count(*) AS n_orders,
         |  floor((sum(o_totalprice)) * 1e2 + 0.5) / 1e2 AS revenue
         |  FROM orders GROUP BY 1),
@@ -588,8 +561,8 @@ object AdvancedQueries {
         |  coalesce(revenue, 0.0) AS revenue,
         |  coalesce(n_events, 0) AS n_events,
         |  coalesce(sum_value, 0.0) AS sum_value
-        |FROM o FULL JOIN e ON o.k = e.k""".stripMargin,
-    "r_typed_mapgroups" ->
+        |FROM o FULL JOIN e ON o.k = e.k""".stripMargin),
+    QuerySpec("r_typed_mapgroups", typedMapGroups,
       """WITH s AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
         |x AS (SELECT user_id, event_id, us,
         |  row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) AS rn_a,
@@ -599,31 +572,31 @@ object AdvancedQueries {
         |  max(CASE WHEN rn_a = 1 THEN event_id END) AS first_event,
         |  max(CASE WHEN rn_d = 1 THEN event_id END) AS last_event,
         |  max(us) - min(us) AS span_us, count(*) AS n_events
-        |FROM x GROUP BY user_id""".stripMargin,
-    "r_range_frame" ->
+        |FROM x GROUP BY user_id""".stripMargin),
+    QuerySpec("r_range_frame", rangeFrame,
       """SELECT event_id, user_id, epoch_us(ts) AS us,
         |  count(*) OVER w AS hour_n,
         |  floor((sum(value) OVER w) * 1e4 + 0.5) / 1e4 AS hour_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "r_custom_udaf" ->
+        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin),
+    QuerySpec("r_custom_udaf", customUdaf,
       """SELECT l_returnflag, count(*) AS n,
         |  floor((sum(l_quantity) / count(*)) * 1e6 + 0.5) / 1e6 AS mean,
         |  floor((sum(l_quantity * l_quantity) / count(*)
         |    - (sum(l_quantity) / count(*)) * (sum(l_quantity) / count(*)))
         |    * 1e6 + 0.5) / 1e6 AS var_pop
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "r_orc_roundtrip" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("r_orc_roundtrip", orcRoundtrip,
       """SELECT o_orderpriority, count(*) AS n,
         |  floor((sum(o_totalprice)) * 1e2 + 0.5) / 1e2 AS revenue
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "r_posexplode" ->
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
+    QuerySpec("r_posexplode", posExplode,
       """WITH g AS (SELECT l_orderkey, list_sort(list(l_quantity)) AS qs
         |  FROM lineitem WHERE l_orderkey % 100 = 0 GROUP BY l_orderkey)
         |SELECT l_orderkey, CAST(t.i - 1 AS BIGINT) AS pos, qs[i] AS qty
-        |FROM g, unnest(generate_series(1, len(qs))) t(i)""".stripMargin,
-    "r_map_funcs" ->
+        |FROM g, unnest(generate_series(1, len(qs))) t(i)""".stripMargin),
+    QuerySpec("r_map_funcs", mapFuncs,
       """WITH d AS (SELECT l_orderkey, l_linenumber, min(l_quantity) AS q
         |  FROM lineitem GROUP BY l_orderkey, l_linenumber),
         |g AS (SELECT l_orderkey,
@@ -632,26 +605,24 @@ object AdvancedQueries {
         |  FROM d GROUP BY l_orderkey)
         |SELECT l_orderkey, CAST(cardinality(m) AS BIGINT) AS n_lines,
         |  m[1][1] AS q_line1, m[2][1] AS q_line2
-        |FROM g""".stripMargin,
-    "r_cube" ->
+        |FROM g""".stripMargin),
+    QuerySpec("r_cube", cubeAgg,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  floor((sum(l_quantity)) * 1e4 + 0.5) / 1e4 AS sum_qty,
         |  CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
         |  CAST(grouping(l_linestatus) AS BIGINT) AS g_ls
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin
-    ,
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin),
     // self-certifying sketch contracts: exact values from the oracle,
     // accuracy booleans the oracle states as TRUE (a degraded sketch
     // flips them on the Spark side and the hash compare fails)
-    "r_approx_distinct" ->
+    QuerySpec("r_approx_distinct", approxDistinct,
       """SELECT event_type, count(DISTINCT user_id) AS exact_users,
         |  TRUE AS approx_ok
-        |FROM events GROUP BY event_type""".stripMargin,
-    "r_approx_quantiles" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QuerySpec("r_approx_quantiles", approxQuantiles,
       """SELECT l_returnflag,
         |  floor((quantile_cont(l_extendedprice, 0.5)) * 1e4 + 0.5) / 1e4 AS exact_p50,
         |  floor((quantile_cont(l_extendedprice, 0.9)) * 1e4 + 0.5) / 1e4 AS exact_p90,
         |  TRUE AS p50_ok, TRUE AS p90_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin
-  )
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin))
 }

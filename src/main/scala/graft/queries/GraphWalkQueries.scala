@@ -4,19 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Round-8 graph-analytics depth: deterministic integer HITS over
- * the directed customer→supplier purchase graph, and (see
- * GraphQueries) harmonic centrality riding the shared BFS memo.
+ * Graph rows over seeded walks and the directed purchase graph:
+ * random walks, node2vec walks and GraphSAGE-style neighbour
+ * sampling over the symmetrized co-purchase graph, and deterministic
+ * integer HITS over the customer→supplier purchase graph.
  *
- * Everything here follows the deterministic-fixpoint contract the
- * det family established: integer micro-unit state, order-free
- * sums (Math.addExact on the Spark side, HUGEINT on DuckDB's),
- * floor-division normalization through GraphAlgs.mulDiv — so every
- * score is bit-identical across engines, partitionings, and runs,
- * and the oracle replays the exact recurrence as unrolled CTE
- * rounds.
+ * Everything here is deterministic: each "random" choice is an md5
+ * hash both engines compute identically, and HITS keeps integer
+ * micro-unit scores with order-free sums (Math.addExact on the Spark
+ * side, HUGEINT on DuckDB's) and floor-division normalization through
+ * GraphAlgs.mulDiv. So every row is bit-identical across engines,
+ * partitionings and runs, and the oracle replays the exact recurrence
+ * as unrolled CTEs.
  */
-object Round8Queries {
+object GraphWalkQueries {
 
   import RelationalQueries.t
 
@@ -294,22 +295,8 @@ object Round8Queries {
       .orderBy("root", "walk")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g_hits_det" -> hitsDeterministic _,
-    "g_random_walks" -> randomWalks _,
-    "g_sage_sample" -> sageSample _,
-    "g_node2vec" -> node2vecWalks _)
-
-  /** Unrolled-CTE replay of the exact HITS recurrence. Every
-   * per-round state CTE is referenced exactly once by the next
-   * half-round (DuckDB inlines CTEs — a state CTE referenced twice
-   * doubles the plan per round); the final SELECT's second
-   * reference to a8 only duplicates the chain once, at the end.
-   * DuckDB sums BIGINT into HUGEINT (exact), and
-   * (s * 1000000) // max is precisely mulDiv's floor semantics on
-   * positive operands. */
-  val oracles: Map[String, String] = Map(
-    "g_hits_det" -> {
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("g_hits_det", hitsDeterministic, {
       val rounds = (1 to 8).map { i =>
         s"""ar$i AS (SELECT e.dst AS vid, sum(h.h) AS s
            |  FROM e JOIN h${i - 1} h ON h.vid = e.src GROUP BY e.dst),
@@ -328,11 +315,11 @@ object Round8Queries {
          |SELECT 'hub' AS role, vid AS id, h AS score FROM h8
          |UNION ALL
          |SELECT 'auth' AS role, vid - 1000000 AS id, a AS score FROM a8""".stripMargin
-    },
+    }),
     // Exact replay of the hash-walk recurrence: the ranked adjacency
     // is a window pair, each unrolled step joins only its
     // predecessor (plus the static adjr)
-    "g_random_walks" -> {
+    QuerySpec("g_random_walks", randomWalks, {
       val steps = (1 to 8).map { i =>
         s"""w$i AS (SELECT p.root, p.walk, a.n AS vid
            |  FROM w${i - 1} p JOIN adjr a ON a.v = p.vid
@@ -349,12 +336,12 @@ object Round8Queries {
          |       FROM srcs s CROSS JOIN (SELECT unnest([0,1,2,3]) AS walk) wk),
          |$steps
          |SELECT root, walk, vid AS final_vid FROM w8""".stripMargin
-    },
+    }),
     // Exact replay of the layered hash sample: same md5 edge hash,
     // same top-k windows. l1 is referenced twice (l2 + the final
     // union) — constant-depth duplication, not the per-round kind
     // the unrolled fixpoints must avoid.
-    "g_sage_sample" ->
+    QuerySpec("g_sage_sample", sageSample,
       s"""${GraphQueries.EdgeCte},
          |srcs AS (SELECT src AS v FROM (
          |  SELECT DISTINCT src FROM raw
@@ -371,14 +358,14 @@ object Round8Queries {
          |       FROM l1 p JOIN adjr a ON a.v = p.vid AND a.hrank <= 3)
          |SELECT root, layer, parent, vid FROM l1
          |UNION ALL
-         |SELECT root, layer, parent, vid FROM l2""".stripMargin,
+         |SELECT root, layer, parent, vid FROM l2""".stripMargin),
     // Exact replay of the biased second-order recurrence: per step
     // one candidate expansion (edges), one EXISTS triangle flag
     // (edges again — static set, constant duplication), one window
     // pair for the cumulative-weight slots. Each w$i is referenced
     // exactly once by w${i+1}; the path string carries the full
     // trajectory so no step needs a second reference.
-    "g_node2vec" -> {
+    QuerySpec("g_node2vec", node2vecWalks, {
       val steps = (2 to 8).map { i =>
         s"""c$i AS (SELECT p.root, p.walk, p.prev, p.cur, a.dst AS n, p.path,
            |    CASE WHEN a.dst = p.prev THEN CAST(1 AS BIGINT)
@@ -414,5 +401,5 @@ object Round8Queries {
          |    AND a.rn = (s.v * 1000003 + wk.walk * 10007 + 101) % a.deg),
          |$steps
          |SELECT root, walk, path, cur AS final_vid FROM w8""".stripMargin
-    })
+    }))
 }

@@ -23,7 +23,6 @@ import org.apache.spark.sql.Column
  */
 object RelationalQueries {
 
-
   /** Deterministic rounding identical to the oracle side: both
    * engines evaluate floor(x*10^d + 0.5)/10^d with the same IEEE
    * doubles, so results are bit-equal (Spark's rnd() does exact
@@ -57,6 +56,18 @@ object RelationalQueries {
       case _ => raw
     }
   }
+
+  /** The documents table, cached once per (session, sfDir): the
+   * pipeline rows read it many times in one Verify/Bench session. */
+  private[queries] def docs(spark: SparkSession, sfDir: String): DataFrame =
+    SessionMemo.memoize(spark, s"docs:$sfDir") {
+      val df = t(spark, sfDir, "documents").cache()
+      df.count(); df
+    }
+
+  /** SQL-side twin of [[rnd]] for oracle strings. */
+  private[queries] def rndSql(e: String, d: Int): String =
+    s"floor(($e) * 1e$d + 0.5) / 1e$d"
 
   /** P1+A1: pricing summary (classic scan -> group agg; map-side
    * partial aggregation; only referenced columns are read). */
@@ -280,38 +291,23 @@ object RelationalQueries {
       .select(col("l_returnflag"), col("F").as("n_f"), col("O").as("n_o"))
       .orderBy("l_returnflag")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r_pivot" -> pivotAgg _,
-    "r_json_extract" -> jsonExtract _,
-    "r_funnel" -> funnel _,
-    "r_rollup" -> rollupAgg _,
-    "r_percentiles" -> percentiles _,
-    "r_string_funcs" -> stringFuncs _,
-    "r_datetime_funcs" -> datetimeFuncs _,
-    "r_salted_agg" -> saltedAgg _,
-    "r_sessionize" -> sessionize _,
-    "r_pricing_summary" -> pricingSummary _,
-    "r_filter_pushdown" -> filterPushdown _,
-    "r_join_agg" -> joinAgg _,
-    "r_semi_anti" -> semiAnti _,
-    "r_argmax_per_group" -> argmaxPerGroup _,
-    "r_topk_per_group" -> topkPerGroup _,
-    "r_union_distinct_count" -> unionDistinctCount _,
-    "r_global_agg" -> globalAgg _,
-    "r_events_by_type" -> eventsByType _,
-    "r_events_hourly" -> eventsHourly _
-  )
+  /** Oracle of `r_events_hourly`. The drained streaming rows
+   * `s_stream_hourly` and `s_stream_hourly_rocksdb` return the same table. */
+  val EventsHourlyOracle: String =
+    """SELECT time_bucket(INTERVAL '1 hour', ts) AS hour, event_type,
+      |  count(*) AS n, floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
+      |FROM events GROUP BY 1, 2""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "r_pivot" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("r_pivot", pivotAgg,
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
         |  CAST(sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "r_json_extract" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("r_json_extract", jsonExtract,
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events""".stripMargin,
-    "r_funnel" ->
+        |FROM events""".stripMargin),
+    QuerySpec("r_funnel", funnel,
       """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
         |  WHERE event_type = 'view' GROUP BY user_id),
         |c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
@@ -322,38 +318,38 @@ object RelationalQueries {
         |  WHERE e.event_type = 'purchase' GROUP BY e.user_id)
         |SELECT 'view' AS stage, count(*) AS users FROM v
         |UNION ALL SELECT 'view_click', count(*) FROM c
-        |UNION ALL SELECT 'view_click_purchase', count(*) FROM p""".stripMargin,
-    "r_rollup" ->
+        |UNION ALL SELECT 'view_click_purchase', count(*) FROM p""".stripMargin),
+    QuerySpec("r_rollup", rollupAgg,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  floor((sum(l_quantity)) * 1e4 + 0.5) / 1e4 AS sum_qty,
         |  CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
         |  CAST(grouping(l_linestatus) AS BIGINT) AS g_ls
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "r_percentiles" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    QuerySpec("r_percentiles", percentiles,
       """SELECT l_returnflag,
         |  floor((quantile_cont(l_quantity, 0.5)) * 1e6 + 0.5) / 1e6 AS p50,
         |  floor((quantile_cont(l_quantity, 0.9)) * 1e6 + 0.5) / 1e6 AS p90,
         |  floor((quantile_cont(l_extendedprice, 0.5)) * 1e4 + 0.5) / 1e4 AS price_p50
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "r_string_funcs" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("r_string_funcs", stringFuncs,
       """SELECT c_custkey, upper(c_name) AS uname, lower(c_mktsegment) AS lseg,
         |  substring(c_name, 1, 8) AS prefix,
         |  regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
         |  length(c_name) AS name_len,
         |  concat_ws('|', c_mktsegment, c_name) AS joined,
         |  c_name LIKE '%1%' AS has_one
-        |FROM customer""".stripMargin,
-    "r_datetime_funcs" ->
+        |FROM customer""".stripMargin),
+    QuerySpec("r_datetime_funcs", datetimeFuncs,
       """SELECT event_id, date_trunc('day', ts) AS day,
         |  CAST(year(ts) AS BIGINT) AS y, CAST(month(ts) AS BIGINT) AS m,
         |  CAST(day(ts) AS BIGINT) AS d, CAST(hour(ts) AS BIGINT) AS h,
         |  epoch_us(ts) AS us
-        |FROM events""".stripMargin,
-    "r_salted_agg" ->
+        |FROM events""".stripMargin),
+    QuerySpec("r_salted_agg", saltedAgg,
       """SELECT l_returnflag, floor((sum(l_quantity)) * 1e4 + 0.5) / 1e4 AS sum_qty,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "r_sessionize" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("r_sessionize", sessionize,
       """WITH x AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us, value,
         |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
@@ -366,57 +362,53 @@ object RelationalQueries {
         |  FROM x)
         |SELECT user_id, min(us) AS start_us, max(us) + 1800000000 AS end_us,
         |  count(*) AS n_events, floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-    "r_pricing_summary" ->
+        |FROM s GROUP BY user_id, sid""".stripMargin),
+    QuerySpec("r_pricing_summary", pricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  floor((sum(l_quantity)) * 1e4 + 0.5) / 1e4 AS sum_qty,
         |  floor((sum(l_extendedprice)) * 1e2 + 0.5) / 1e2 AS sum_base,
         |  floor((sum(l_extendedprice * (1 - l_discount))) * 1e2 + 0.5) / 1e2 AS sum_disc,
         |  floor((avg(l_discount)) * 1e6 + 0.5) / 1e6 AS avg_disc,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "r_filter_pushdown" ->
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    QuerySpec("r_filter_pushdown", filterPushdown,
       """SELECT l_orderkey, l_linenumber,
         |  floor((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 1e4 + 0.5) / 1e4 AS charge
-        |FROM lineitem WHERE l_quantity > 45 AND l_discount >= 0.05""".stripMargin,
-    "r_join_agg" ->
+        |FROM lineitem WHERE l_quantity > 45 AND l_discount >= 0.05""".stripMargin),
+    QuerySpec("r_join_agg", joinAgg,
       """SELECT n_name, count(*) AS n_orders, floor((sum(o_totalprice)) * 1e2 + 0.5) / 1e2 AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "r_semi_anti" ->
+        |GROUP BY n_name""".stripMargin),
+    QuerySpec("r_semi_anti", semiAnti,
       """SELECT c_mktsegment, 'with' AS grp, count(*) AS n_customers FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
         |GROUP BY c_mktsegment
         |UNION ALL
         |SELECT c_mktsegment, 'without' AS grp, count(*) AS n_customers FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY c_mktsegment""".stripMargin,
-    "r_argmax_per_group" ->
+        |GROUP BY c_mktsegment""".stripMargin),
+    QuerySpec("r_argmax_per_group", argmaxPerGroup,
       """SELECT c_nationkey, c_name, floor((c_acctbal) * 1e4 + 0.5) / 1e4 AS acctbal FROM (
         |  SELECT *, row_number() OVER (
         |    PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_name) AS rn
-        |  FROM customer) WHERE rn = 1""".stripMargin,
-    "r_topk_per_group" ->
+        |  FROM customer) WHERE rn = 1""".stripMargin),
+    QuerySpec("r_topk_per_group", topkPerGroup,
       """SELECT o_orderpriority, rn, o_orderkey, floor((o_totalprice) * 1e2 + 0.5) / 1e2 AS totalprice
         |FROM (
         |  SELECT *, row_number() OVER (
         |    PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "r_union_distinct_count" ->
+        |  FROM orders) WHERE rn <= 3""".stripMargin),
+    QuerySpec("r_union_distinct_count", unionDistinctCount,
       """SELECT count(*) AS n FROM (
-        |  SELECT o_custkey AS k FROM orders UNION SELECT c_custkey AS k FROM customer)""".stripMargin,
-    "r_global_agg" ->
+        |  SELECT o_custkey AS k FROM orders UNION SELECT c_custkey AS k FROM customer)""".stripMargin),
+    QuerySpec("r_global_agg", globalAgg,
       """SELECT floor((min(l_quantity)) * 1e4 + 0.5) / 1e4 AS min_qty, floor((max(l_quantity)) * 1e4 + 0.5) / 1e4 AS max_qty,
         |  floor((sum(l_extendedprice)) * 1e2 + 0.5) / 1e2 AS sum_price, count(*) AS n
-        |FROM lineitem""".stripMargin,
-    "r_events_by_type" ->
+        |FROM lineitem""".stripMargin),
+    QuerySpec("r_events_by_type", eventsByType,
       """SELECT event_type, count(*) AS n, floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value,
         |  count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type""".stripMargin,
-    "r_events_hourly" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS hour, event_type,
-        |  count(*) AS n, floor((sum(value)) * 1e4 + 0.5) / 1e4 AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin
-  )
+        |FROM events GROUP BY event_type""".stripMargin),
+    QuerySpec("r_events_hourly", eventsHourly, EventsHourlyOracle))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Round-3 SQL-surface breadth: higher-order array lambdas, dense
+ * Relational SQL-surface rows: higher-order array lambdas, dense
  * time-series gap filling, GROUPING SETS, IGNORE NULLS window
  * carry-forward, bitwise aggregates, and EXISTS/IN subqueries.
  *
@@ -332,35 +332,16 @@ object SqlSurfaceQueries {
       .orderBy("cohort_day", "age_days")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r_union_by_name" -> unionByNameEvolved _,
-    "r_cohort_retention" -> cohortRetention _,
-    "r_time_weighted_avg" -> timeWeightedAvg _,
-    "r_interval_union" -> intervalUnion _,
-    "r_nullsafe_join" -> nullSafeJoin _,
-    "r_multiset_ops" -> multisetOps _,
-    "r_decimal_agg" -> decimalAgg _,
-    "r_star_join" -> starJoin _,
-    "r_conditional_agg" -> conditionalAgg _,
-    "r_full_outer" -> fullOuter _,
-    "r_lateral_view" -> lateralView _,
-    "r_lambda_funcs" -> lambdaFuncs _,
-    "r_gap_fill" -> gapFill _,
-    "r_grouping_sets" -> groupingSets _,
-    "r_ignore_nulls" -> ignoreNullsCarry _,
-    "r_bitwise_flags" -> bitwiseFlags _,
-    "r_exists_subquery" -> existsSubquery _)
-
-  val oracles: Map[String, String] = Map(
-    "r_cohort_retention" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("r_cohort_retention", cohortRetention,
       """WITH act AS (SELECT DISTINCT user_id,
         |  epoch_us(ts) // 86400000000 AS day FROM events),
         |cohort AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY user_id)
         |SELECT cohort_day, day - cohort_day AS age_days,
         |  count(DISTINCT a.user_id) AS n_users
         |FROM act a JOIN cohort c ON c.user_id = a.user_id
-        |GROUP BY cohort_day, age_days""".stripMargin,
-    "r_union_by_name" ->
+        |GROUP BY cohort_day, age_days""".stripMargin),
+    QuerySpec("r_union_by_name", unionByNameEvolved,
       """WITH u AS (
         |  SELECT c_custkey AS id, c_mktsegment AS segment, 'v1' AS src FROM customer
         |  UNION ALL BY NAME
@@ -368,8 +349,8 @@ object SqlSurfaceQueries {
         |    floor(c_acctbal * 1e2 + 0.5) / 1e2 AS balance, 'v2' AS src FROM customer)
         |SELECT id, src, coalesce(segment, '?') AS segment,
         |  coalesce(balance, -1.0) AS balance
-        |FROM u""".stripMargin,
-    "r_multiset_ops" ->
+        |FROM u""".stripMargin),
+    QuerySpec("r_multiset_ops", multisetOps,
       """WITH a AS (SELECT user_id % 50 AS k FROM events
         |  WHERE event_type <> 'view'),
         |b AS (SELECT user_id % 50 AS k FROM events
@@ -378,17 +359,17 @@ object SqlSurfaceQueries {
         |  FROM (SELECT k FROM a EXCEPT ALL SELECT k FROM b) GROUP BY k),
         |ia AS (SELECT 'intersect_all' AS op, k, count(*) AS n
         |  FROM (SELECT k FROM a INTERSECT ALL SELECT k FROM b) GROUP BY k)
-        |SELECT op, k, n FROM ea UNION ALL SELECT op, k, n FROM ia""".stripMargin,
+        |SELECT op, k, n FROM ea UNION ALL SELECT op, k, n FROM ia""".stripMargin),
     // decimal sums are exact, so no floor-rounding is needed: the
     // double cast of an exact DECIMAL(18,2) value is deterministic
-    "r_decimal_agg" ->
+    QuerySpec("r_decimal_agg", decimalAgg,
       """SELECT l_returnflag,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "r_nullsafe_join" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("r_nullsafe_join", nullSafeJoin,
       """WITH ev AS (SELECT DISTINCT
         |  CASE WHEN user_id % 10 = 0 THEN NULL ELSE user_id % 100 END AS k
         |  FROM events),
@@ -397,8 +378,8 @@ object SqlSurfaceQueries {
         |  c_custkey FROM customer)
         |SELECT coalesce(k, -1) AS key, count(*) AS n_matches
         |FROM ev JOIN cust ON k IS NOT DISTINCT FROM ck
-        |GROUP BY 1""".stripMargin,
-    "r_interval_union" ->
+        |GROUP BY 1""".stripMargin),
+    QuerySpec("r_interval_union", intervalUnion,
       """WITH x AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
         |y AS (SELECT user_id, event_id, us,
         |  max(us + 1800000000) OVER (PARTITION BY user_id ORDER BY us, event_id
@@ -416,23 +397,23 @@ object SqlSurfaceQueries {
         |  FROM isl GROUP BY user_id, island)
         |SELECT user_id, count(*) AS n_islands,
         |  CAST(sum(end_us - start_us) AS BIGINT) AS covered_us
-        |FROM g GROUP BY user_id""".stripMargin,
-    "r_time_weighted_avg" ->
+        |FROM g GROUP BY user_id""".stripMargin),
+    QuerySpec("r_time_weighted_avg", timeWeightedAvg,
       """WITH x AS (SELECT event_id, user_id, epoch_us(ts) AS us, value,
         |  lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS next_us
         |  FROM events)
         |SELECT user_id, count(*) AS n_intervals,
         |  floor((sum(value * (next_us - us)) / sum(next_us - us)) * 1e6 + 0.5) / 1e6 AS tw_avg
-        |FROM x WHERE next_us IS NOT NULL GROUP BY user_id""".stripMargin,
-    "r_star_join" ->
+        |FROM x WHERE next_us IS NOT NULL GROUP BY user_id""".stripMargin),
+    QuerySpec("r_star_join", starJoin,
       """SELECT n_name, p_brand, count(*) AS n,
         |  floor(sum(l_extendedprice * (1 - l_discount)) * 1e2 + 0.5) / 1e2 AS revenue
         |FROM lineitem
         |JOIN part ON p_partkey = l_partkey
         |JOIN supplier ON s_suppkey = l_suppkey
         |JOIN nation ON n_nationkey = s_nationkey
-        |GROUP BY n_name, p_brand""".stripMargin,
-    "r_full_outer" ->
+        |GROUP BY n_name, p_brand""".stripMargin),
+    QuerySpec("r_full_outer", fullOuter,
       """WITH ev AS (SELECT user_id, count(*) AS n_events FROM events
         |  WHERE value > 450 GROUP BY user_id),
         |cust AS (SELECT c_custkey, c_mktsegment FROM customer
@@ -441,20 +422,20 @@ object SqlSurfaceQueries {
         |  coalesce(n_events, 0) AS n_events,
         |  coalesce(c_mktsegment, 'none') AS segment,
         |  (user_id IS NOT NULL AND c_custkey IS NOT NULL) AS matched
-        |FROM ev FULL OUTER JOIN cust ON user_id = c_custkey""".stripMargin,
-    "r_lateral_view" ->
+        |FROM ev FULL OUTER JOIN cust ON user_id = c_custkey""".stripMargin),
+    QuerySpec("r_lateral_view", lateralView,
       """SELECT o_orderkey, parts[i] AS part, CAST(i - 1 AS BIGINT) AS pos
         |FROM (SELECT o_orderkey, string_split(o_orderpriority, '-') AS parts
         |      FROM orders WHERE o_orderkey % 100 = 0),
-        |  unnest(generate_series(1, len(parts))) t(i)""".stripMargin,
-    "r_conditional_agg" ->
+        |  unnest(generate_series(1, len(parts))) t(i)""".stripMargin),
+    QuerySpec("r_conditional_agg", conditionalAgg,
       """SELECT event_type, count(*) AS n,
         |  count(*) FILTER (WHERE value > 100) AS n_big,
         |  bool_and(value > 0) AS all_pos,
         |  bool_or(value > 400) AS any_huge,
         |  floor(sum(value) FILTER (WHERE value <= 100) * 1e4 + 0.5) / 1e4 AS sum_small
-        |FROM events GROUP BY event_type""".stripMargin,
-    "r_lambda_funcs" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QuerySpec("r_lambda_funcs", lambdaFuncs,
       """WITH g AS (SELECT l_orderkey,
         |  list_sort(list(CAST(l_quantity AS INT))) AS qs
         |  FROM lineitem GROUP BY l_orderkey)
@@ -465,8 +446,8 @@ object SqlSurfaceQueries {
         |  CAST(qs[-1] AS BIGINT) AS max_q,
         |  CAST(list_sum(list_transform(generate_series(1, len(qs)),
         |    i -> qs[i] * i)) AS BIGINT) AS weighted_sum
-        |FROM g""".stripMargin,
-    "r_gap_fill" ->
+        |FROM g""".stripMargin),
+    QuerySpec("r_gap_fill", gapFill,
       """WITH ev AS (SELECT (epoch_us(ts) // 900000000) * 900000000 AS bucket_us,
         |  event_type FROM events),
         |c AS (SELECT bucket_us, event_type, count(*) AS n FROM ev GROUP BY 1, 2),
@@ -475,23 +456,23 @@ object SqlSurfaceQueries {
         |types AS (SELECT DISTINCT event_type FROM ev)
         |SELECT g.bucket_us, t.event_type, coalesce(c.n, 0) AS n
         |FROM grid g CROSS JOIN types t
-        |LEFT JOIN c ON c.bucket_us = g.bucket_us AND c.event_type = t.event_type""".stripMargin,
-    "r_grouping_sets" ->
+        |LEFT JOIN c ON c.bucket_us = g.bucket_us AND c.event_type = t.event_type""".stripMargin),
+    QuerySpec("r_grouping_sets", groupingSets,
       """SELECT o_orderpriority, o_orderstatus, count(*) AS n,
         |  CAST(grouping(o_orderpriority) AS BIGINT) AS g_pri,
         |  CAST(grouping(o_orderstatus) AS BIGINT) AS g_st,
         |  floor(sum(o_totalprice) * 1e2 + 0.5) / 1e2 AS revenue
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
-        |  (o_orderpriority), (o_orderstatus), ())""".stripMargin,
-    "r_ignore_nulls" ->
+        |  (o_orderpriority), (o_orderstatus), ())""".stripMargin),
+    QuerySpec("r_ignore_nulls", ignoreNullsCarry,
       """SELECT event_id, user_id, epoch_us(ts) AS us,
         |  floor(coalesce(last_value(
         |      CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
         |    OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |      ROWS UNBOUNDED PRECEDING), -1.0) * 1e4 + 0.5) / 1e4 AS carried
-        |FROM events""".stripMargin,
-    "r_bitwise_flags" ->
+        |FROM events""".stripMargin),
+    QuerySpec("r_bitwise_flags", bitwiseFlags,
       """WITH ev AS (SELECT user_id, event_type FROM events WHERE value > 100),
         |idx AS (SELECT event_type,
         |  CAST(row_number() OVER (ORDER BY event_type) - 1 AS INT) AS idx
@@ -501,13 +482,13 @@ object SqlSurfaceQueries {
         |SELECT CAST(flags AS BIGINT) AS flags, count(*) AS n_users,
         |  CAST(flags & 1 AS BIGINT) AS has_first,
         |  CAST(xor(flags, 31) AS BIGINT) AS missing_mask
-        |FROM f GROUP BY flags""".stripMargin,
-    "r_exists_subquery" ->
+        |FROM f GROUP BY flags""".stripMargin),
+    QuerySpec("r_exists_subquery", existsSubquery,
       """SELECT s.s_nationkey, count(*) AS n_suppliers
         |FROM supplier s
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |        WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity >= 49)
         |  AND s.s_suppkey NOT IN (SELECT l_suppkey FROM lineitem
         |        WHERE l_quantity <= 2 AND l_tax = 0.08)
-        |GROUP BY s.s_nationkey""".stripMargin)
+        |GROUP BY s.s_nationkey""".stripMargin))
 }

@@ -326,33 +326,10 @@ object StreamOps {
    * single-batch replay the shared DuckDB oracle (`incrReplayCte`)
    * predicts for `g_wcc_incremental`. The expensive bulk prepare is
    * the session-memoized state shared with the batch twin
-   * ([[graft.queries.GraphQueries.idwccShared]]).
-   *
-   * Post-batch memo (VERDICT r11 order #2): the arriving micro-batch
-   * is content-verified against the staged stream region (count +
-   * empty anti-join — both cheap); on an exact match the twin's
-   * result IS the batch twin's session-memoized post-batch labels
-   * ([[graft.queries.GraphQueries.wccIncremental]] — ONE refinement
-   * fold per session for both rows), because `IncrementalWCC.run` is
-   * deterministic in (state, batch edge set) and the state is the
-   * same shared bulk prepare. The streaming plumbing — file staging,
-   * schema'd source, AvailableNow drain, foreachBatch delivery, batch
-   * content — is still exercised and verified end to end; only the
-   * duplicate refinement is skipped. Any content mismatch falls back
-   * to the real fold.
-   *
-   * Bench honesty (VERDICT r14 order #1): with the shortcut active
-   * this row times plumbing, not the fold it nominally covers, so
-   * benchmark runs disable it via the system property
-   * `graft.stream.wccShortcut=off` (set by [[graft.Bench]] before any
-   * run) — the bench timing then reflects a real end-to-end
-   * `IncrementalWCC.run` inside `foreachBatch`. Correctness dumps
-   * ([[graft.Verify]]) leave the property unset and keep the
-   * memoized twin; both paths emit identical rows. */
+   * ([[graft.queries.WccQueries.idwccShared]]), so the first fold
+   * keeps its input state (`releaseInput = false`). */
   def incrementalWccStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val shortcutEnabled = !sys.props.get("graft.stream.wccShortcut").contains("off")
-    val (initial, streamEdges) = graft.queries.GraphQueries.idwccShared(spark, sfDir)
-    val regionCount = streamEdges.count() // cached by idwccShared
+    val (initial, streamEdges) = graft.queries.WccQueries.idwccShared(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("graft-idwcc-stream")
     try {
       val staged = dir.resolve("edges").toString
@@ -362,46 +339,30 @@ object StreamOps {
           StructField("src", LongType), StructField("dst", LongType))))
         .parquet(staged)
       @volatile var state = initial
-      @volatile var shortcut = false
       val q = src.writeStream
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val canon = EdgeOps.canonicalize(batch).cache()
-          if (canon.count() > 0) {
-            val wholeRegion = shortcutEnabled && (state eq initial) && !shortcut &&
-              canon.count() == regionCount &&
-              canon.join(streamEdges, Seq("src", "dst"), "left_anti").isEmpty
-            if (wholeRegion) shortcut = true
-            else {
-              // the single staged file can only deliver the whole
-              // region as one batch; edges after a shortcut would
-              // make the memoized labels stale — fail loud
-              require(!shortcut,
-                "unexpected micro-batch after the full stream region arrived")
-              state = IncrementalWCC.run(state,
-                canon.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)),
-                releaseInput = state ne initial)
-            }
-          }
+          if (canon.count() > 0)
+            state = IncrementalWCC.run(state,
+              canon.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)),
+              releaseInput = state ne initial)
           canon.unpersist(blocking = false)
           ()
         }
         .start()
       q.awaitTermination()
-      if (shortcut) graft.queries.GraphQueries.wccIncremental(spark, sfDir)
-      else {
-        // materialize the labels on the driver before the staging dir
-        // (part of the result's lineage via the checkpointless source)
-        // is deleted — #bulk-vertices rows of two longs, micro-sized
-        val rows = state.graph.vertices
-          .map { case (id, vd) => (id, vd.cId) }.collect().toSeq
-        if (state ne initial) {
-          state.graph.unpersistVertices(blocking = false)
-          state.graph.edges.unpersist(blocking = false)
-        }
-        spark.createDataFrame(rows).toDF("vid", "cid").orderBy("vid")
+      // materialize the labels on the driver before the staging dir
+      // (part of the result's lineage via the checkpointless source)
+      // is deleted — #bulk-vertices rows of two longs, micro-sized
+      val rows = state.graph.vertices
+        .map { case (id, vd) => (id, vd.cId) }.collect().toSeq
+      if (state ne initial) {
+        state.graph.unpersistVertices(blocking = false)
+        state.graph.edges.unpersist(blocking = false)
       }
+      spark.createDataFrame(rows).toDF("vid", "cid").orderBy("vid")
     } finally cleanupTree(dir)
   }
 
@@ -488,17 +449,6 @@ object StreamOps {
    * per-batch check runs as the same cluster-keyed join. */
   def semDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ops.Similarity
-    // probe-only phase timer (optimization r21): never on in
-    // bench/verify runs
-    val logOn = sys.props.get("graft.semdedup.log")
-      .orElse(sys.env.get("SPARK_GRAFT_SEMDD_LOG")).contains("on")
-    var tMark = System.nanoTime()
-    def tlog(msg: => String): Unit = if (logOn) {
-      val now = System.nanoTime()
-      System.err.println(
-        f"[graft-semdedup] $msg (${(now - tMark) / 1e9}%.2f s)")
-      tMark = now
-    }
     val dir = java.nio.file.Files.createTempDirectory("graft-semdd")
     try {
       val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -510,9 +460,7 @@ object StreamOps {
       // while semDedup fails loudly (review r16)
       Similarity.requireSemDedupDims(base,
         Similarity.SemDedupTauNum, Similarity.SemDedupTauDen, "semDedupStream")
-      tlog("read + dim guard")
       val (_, centroids) = Similarity.kmeansDetWithCentroids(base)
-      tlog("static k-means")
       // one projection (optimization r21): the k-means final
       // assignment IS the argmin against the returned centroids, so
       // the pool carries qs/n2/cluster from a single scan instead of
@@ -520,7 +468,6 @@ object StreamOps {
       // vec_id — value-identical (deterministic argmin, same rows)
       val pool0 = Similarity.signedQsWithCell(base, centroids).cache()
       pool0.count()
-      tlog("static pool build")
       try {
 
       // stage the three arrival groups as one file each, mtimes
@@ -558,9 +505,7 @@ object StreamOps {
       }
 
       src7.unpersist(blocking = false)
-      tlog("arrival staging")
       val schema = spark.read.parquet(arrDir.toString).schema
-      tlog("schema read")
       val seen = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Seq[Long], Long)]
       val out = scala.collection.mutable.ArrayBuffer
@@ -613,12 +558,10 @@ object StreamOps {
             }
           }
           arrived.unpersist(blocking = false)
-          tlog(s"micro-batch (${rows.length} arrivals)")
           ()
         }
         .start()
       q.awaitTermination()
-      tlog("stream drained")
       spark.createDataFrame(out.toSeq)
         .toDF("vec_id", "cluster", "dup_of", "kept")
         .orderBy("vec_id")

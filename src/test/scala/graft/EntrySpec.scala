@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.{QueryRegistry, QuerySpec}
+
 /** Guard for the driver's smoke check: entry() must return rows. */
 class EntrySpec extends SparkSpec {
   test("entry returns >0 rows at sf0.001") {
@@ -35,5 +37,22 @@ class EntrySpec extends SparkSpec {
     assert(actual === rowsOnly,
       s"unexpected rows-only queries (add an oracle or document here): " +
         s"${actual -- rowsOnly}; stale entries: ${rowsOnly -- actual}")
+  }
+
+  test("every query name carries its domain module's prefix") {
+    // a name belongs to the domain with its longest matching prefix,
+    // so a g_wcc_ row filed under the graph module is misplaced too
+    val prefixes = QueryRegistry.domains.map(_._1)
+    for ((prefix, specs) <- QueryRegistry.domains; spec <- specs) {
+      val owner = prefixes.filter(spec.name.startsWith).maxByOption(_.length)
+      assert(owner.contains(prefix), s"${spec.name} is registered under $prefix")
+    }
+  }
+
+  test("a name registered twice fails the registry") {
+    val spec = QuerySpec("r_twice", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](QueryRegistry.build(Seq(spec, spec)))
+    assert(e.getMessage.contains("r_twice"))
+    assert(QueryRegistry.build(Seq(spec)).keySet === Set("r_twice"))
   }
 }

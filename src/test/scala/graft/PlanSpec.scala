@@ -1,10 +1,9 @@
 package graft
 
 /** Physical-plan pins under `sbt test` (sf0.001, seconds): the plan
- * properties the engine is designed around must not silently rot —
- * ExplainCheck asserts the full set at sf0.01 as a dev tool, this
- * suite keeps the load-bearing subset in CI. Each check finalizes
- * the AQE plan with an action before inspecting it. */
+ * properties the engine is designed around must not silently rot.
+ * Each check finalizes the AQE plan with an action before inspecting
+ * it. */
 class PlanSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -69,5 +68,28 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"))
     assert(p.contains("WindowGroupLimit"))
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("ngram top-k pushes a window group limit below the shuffle") {
+    assert(plan("p_ngram_freq").contains("WindowGroupLimit"))
+  }
+
+  test("gap-fill grid join broadcasts") {
+    assert(plan("r_gap_fill").contains("BroadcastHashJoin"))
+  }
+
+  test("zipf top-500 is a partial top-k, never a global sort") {
+    assert(plan("p_zipf_slope").contains("TakeOrderedAndProject"))
+  }
+
+  test("listagg region dimension join broadcasts") {
+    assert(plan("r_listagg").contains("BroadcastHashJoin"))
+  }
+
+  test("lateral join decorrelates to a partial window group limit and a broadcast rejoin") {
+    val p = plan("r_lateral_join")
+    assert(p.contains("WindowGroupLimit") && p.contains("Partial"))
+    assert(p.contains("BroadcastHashJoin"))
+    assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"))
   }
 }

@@ -106,7 +106,7 @@ class Round5Spec extends SparkSpec {
   }
 
   test("SHUFFLE_HASH hint steers the join strategy") {
-    val df = graft.queries.Round5Queries.joinHints(spark, "/root/testdata/sf0.001")
+    val df = graft.queries.SqlFunctionQueries.joinHints(spark, "/root/testdata/sf0.001")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"),
@@ -114,7 +114,7 @@ class Round5Spec extends SparkSpec {
   }
 
   test("range-partitioned write produces disjoint sorted files") {
-    val r = graft.queries.Round5Queries
+    val r = graft.queries.StorageQueries
       .rangePartitionedWrite(spark, "/root/testdata/sf0.001").head()
     assert(r.getLong(0) === 4L, "4 non-empty range files")
     assert(r.getLong(2) === 0L, "no overlapping file ranges")

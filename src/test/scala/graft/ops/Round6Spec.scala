@@ -78,7 +78,7 @@ class Round6Spec extends SparkSpec {
   // ---- recursive CTE (Spark 4 UnionLoop) ---------------------------
 
   test("recursive CTE series folds correctly") {
-    val r = graft.queries.Round6Queries.recursiveCte(spark, "").head()
+    val r = graft.queries.SqlFunctionQueries.recursiveCte(spark, "").head()
     assert(r.getLong(0) == 100L)
     assert(r.getLong(1) == 5050L)
     assert(r.getLong(2) == 338350L)

@@ -12,10 +12,10 @@ class HitsDetSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("deterministic HITS equals the sequential recurrence bit-for-bit") {
-    val got = Round8Queries.hitsDeterministic(spark, sf)
+    val got = GraphWalkQueries.hitsDeterministic(spark, sf)
       .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2))).toMap
 
-    val edges = Round8Queries.purchaseEdges(spark, sf)
+    val edges = GraphWalkQueries.purchaseEdges(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adjOut = edges.groupBy(_._1).map { case (u, es) => (u, es.map(_._2)) }
     val adjIn = edges.groupBy(_._2).map { case (v, es) => (v, es.map(_._1)) }
@@ -36,7 +36,7 @@ class HitsDetSpec extends SparkSpec {
     assert(hub.values.max === 1000000L)
     assert(auth.values.max === 1000000L)
 
-    val again = Round8Queries.hitsDeterministic(spark, sf)
+    val again = GraphWalkQueries.hitsDeterministic(spark, sf)
       .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2))).toMap
     assert(again === got)
   }

@@ -110,7 +110,7 @@ class LoopPlanGuardSpec extends SparkSpec with TimeLimits {
         // a lazy (or merely cached) plan exponentially
         val step = cur.as("l").join(cur.as("r"), $"l.a" === $"r.a")
           .select($"l.a".as("a"), ($"l.b" + $"r.b").as("b"))
-        val (next, rel) = Round8Queries.materializeStep(step)
+        val (next, rel) = GraphWalkQueries.materializeStep(step)
         release()
         release = rel
         cur = next

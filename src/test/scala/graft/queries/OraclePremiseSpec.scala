@@ -8,7 +8,7 @@ import graft.SparkSpec
  * SEEDING fixpoint in SQL (`seedReplayCte`) — they are exact oracles
  * because, on the driver's gate corpus (sf0.01), the refinement loop
  * REJECTS every movement, so the flagship partition coincides with
- * the seeding graft (documented at `GraphQueries.scala` on
+ * the seeding graft (documented at `WccQueries.scala` on
  * `wccCheckValue` / `wccValueReplayCtes`). That premise is a property
  * of the fixture, not the code: an sf0.001 sweep (round 16) showed
  * refinement DOES accept movements there, and the same oracles
@@ -26,9 +26,9 @@ class OraclePremiseSpec extends SparkSpec {
 
   test("sf0.01 gate premise: refinement rejects every movement — flagship == seeding graft") {
     val sf = "/root/testdata/sf0.01"
-    val flagship = GraphQueries.wccPartition(spark, sf)
+    val flagship = WccQueries.wccPartition(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val seeding = GraphQueries.wccInitialPartition(spark, sf)
+    val seeding = WccQueries.wccInitialPartition(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // the seeding surface covers exactly the pruned triangle core;
     // the flagship grafts it onto the full vertex set with pruned

@@ -16,7 +16,7 @@ class RandomWalksSpec extends SparkSpec with TimeLimits {
 
   test("hash walks equal the sequential replay bit-for-bit") {
     failAfter(180.seconds) {
-    val got = Round8Queries.randomWalks(spark, sf).collect()
+    val got = GraphWalkQueries.randomWalks(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
 
     val edges = GraphQueries.symmetrizedEdges(spark, sf)
@@ -33,7 +33,7 @@ class RandomWalksSpec extends SparkSpec with TimeLimits {
     }).toMap
     assert(got === want)
 
-    val again = Round8Queries.randomWalks(spark, sf).collect()
+    val again = GraphWalkQueries.randomWalks(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(again === got)
     }
@@ -44,9 +44,9 @@ class RandomWalksSpec extends SparkSpec with TimeLimits {
     // pick a negative mix silently selects the first neighbor while
     // the oracle raises; the shared adjacency guard must throw first
     val e = intercept[IllegalArgumentException] {
-      Round8Queries.requireWalkIdWidth(9000000000000L)
+      GraphWalkQueries.requireWalkIdWidth(9000000000000L)
     }
     assert(e.getMessage.contains("step mix"))
-    assert(Round8Queries.requireWalkIdWidth(8999999999999L) === 8999999999999L)
+    assert(GraphWalkQueries.requireWalkIdWidth(8999999999999L) === 8999999999999L)
   }
 }

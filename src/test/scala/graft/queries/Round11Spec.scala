@@ -24,7 +24,7 @@ class Round11Spec extends SparkSpec {
     text.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
 
   test("bm25 top-k equals the sequential replay") {
-    val got = Round11Queries.bm25TopK(spark, sf).collect()
+    val got = CorpusQueries.bm25TopK(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSeq
 
@@ -70,7 +70,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("approx_top_k strictly-above-boundary set equals the exact replay") {
-    val got = Round11Queries.approxTopK(spark, sf).collect()
+    val got = SqlFunctionQueries.approxTopK(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
     val counts = spark.read.parquet(s"$sf/events.parquet")
@@ -118,7 +118,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("bpe merges equal the sequential trainer replay") {
-    val got = Round11Queries.bpeMerges(spark, sf).collect()
+    val got = CorpusQueries.bpeMerges(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
         r.getLong(4))).toSeq
 
@@ -129,7 +129,7 @@ class Round11Spec extends SparkSpec {
     assert(expected.map(_._5) == expected.map(_._5).sorted.reverse)
 
     // the vocabulary report off the same trainer state
-    val gotVocab = Round11Queries.bpeVocab(spark, sf).collect()
+    val gotVocab = CorpusQueries.bpeVocab(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val tokc = scala.collection.mutable.Map[String, Long]()
     segs.values.foreach { case (c, seg) =>
@@ -142,7 +142,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("bpe encode equals the per-document application of the learned tokenizer") {
-    val got = Round11Queries.bpeEncode(spark, sf).collect()
+    val got = CorpusQueries.bpeEncode(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
 
     val (_, segs) = sequentialBpe()
@@ -164,7 +164,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("bloom decontamination exact values equal the set replay") {
-    val row = Round11Queries.bloomDecontaminate(spark, sf).head()
+    val row = CorpusQueries.bloomDecontaminate(spark, sf).head()
 
     // mirror bloomDecontaminate EXACTLY: TextOps.words keeps the
     // single empty token a whitespace-only text splits to (so such a

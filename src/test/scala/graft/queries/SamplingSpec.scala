@@ -30,7 +30,7 @@ class SamplingSpec extends SparkSpec with TimeLimits {
 
   test("sage sample equals the md5-ranked top-k replay") {
     failAfter(180.seconds) {
-    val got = Round8Queries.sageSample(spark, sf).collect()
+    val got = GraphWalkQueries.sageSample(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
 
@@ -46,7 +46,7 @@ class SamplingSpec extends SparkSpec with TimeLimits {
 
   test("node2vec walks equal the biased sequential replay bit-for-bit") {
     failAfter(180.seconds) {
-    val got = Round8Queries.node2vecWalks(spark, sf).collect()
+    val got = GraphWalkQueries.node2vecWalks(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getString(2), r.getLong(3))))
       .toMap
 
@@ -80,7 +80,7 @@ class SamplingSpec extends SparkSpec with TimeLimits {
     }).toMap
     assert(got === want)
 
-    val again = Round8Queries.node2vecWalks(spark, sf).collect()
+    val again = GraphWalkQueries.node2vecWalks(spark, sf).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getString(2), r.getLong(3))))
       .toMap
     assert(again === got)

@@ -4,7 +4,7 @@ import graft.SparkSpec
 
 /**
  * Pins the shared-prepare memo contract for the WCC-incremental
- * family (VERDICT r19 item 5): `GraphQueries.idwccShared` must key
+ * family (VERDICT r19 item 5): `WccQueries.idwccShared` must key
  * its memoized bulk-prepare on INPUT IDENTITY — (session, sfDir) —
  * so that `g_wcc_incremental`, `_multibatch`, `_delta` and
  * `s_wcc_incremental` all fold from ONE `IncrementalWCC.prepare`
@@ -15,8 +15,8 @@ class SessionMemoIdentitySpec extends SparkSpec {
 
   test("idwccShared returns the identical prepared state on repeat calls (same session + sfDir)") {
     val dir = "/root/testdata/sf0.001"
-    val (s1, e1) = GraphQueries.idwccShared(spark, dir)
-    val (s2, e2) = GraphQueries.idwccShared(spark, dir)
+    val (s1, e1) = WccQueries.idwccShared(spark, dir)
+    val (s2, e2) = WccQueries.idwccShared(spark, dir)
     // reference identity, not value equality: a second prepare would
     // produce an equal-but-distinct graph and silently double the
     // bench family's cost

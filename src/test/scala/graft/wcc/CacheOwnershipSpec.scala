@@ -84,7 +84,7 @@ class CacheOwnershipSpec extends SparkSpec {
     val start = persisted()
     graft.queries.GraphQueries.canonEdges(session, dir)
     val before = persisted()
-    val (state, stream) = graft.queries.GraphQueries.idwccShared(session, dir)
+    val (state, stream) = graft.queries.WccQueries.idwccShared(session, dir)
     try {
       stream.unpersist(blocking = true)
       assert(persisted() -- before === idsOf(state.cached))
