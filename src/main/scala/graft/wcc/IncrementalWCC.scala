@@ -40,17 +40,18 @@ object IncrementalWCC {
    * vertices and edges a merge reads as they are, and the bulk run's
    * `stats` (reference quirk: a fold never updates them).
    *
-   * `bulkFlagged`, when present, is the canonical (min, max) key set
-   * of STATE-graph edges with >= 1 common neighbor IN THE STATE GRAPH
-   * ALONE — the batch-invariant half of each micro-batch's
-   * triangle-edge flagging. The graft-back contract keeps the state's
-   * edge set fixed at the bulk edge set across batches
-   * (reference `IncrementalWCC.scala:56-58` — batch edges never
-   * persist), so the set stays valid for every subsequent [[run]] and
-   * each batch only adds the keys its delta triangle pass flags
-   * ([[deltaTriangles]]); the seeding reads the two as its edge pairs.
-   * Callers constructing a State by hand may leave it None —
-   * [[performInitialPartition]] then flags the merged graph from
+   * `bulkFlagged`, when present, holds the STATE-graph edges with >= 1
+   * common neighbor IN THE STATE GRAPH ALONE — the batch-invariant half
+   * of each micro-batch's triangle-edge flagging — as resident id-only
+   * [[EdgeSlots]]: each edge at both endpoint partitions under the
+   * state's vertex `HashPartitioner` ([[RefineState.pairSlots]]). The
+   * graft-back contract keeps the state's edge set fixed at the bulk
+   * edge set across batches (reference `IncrementalWCC.scala:56-58` —
+   * batch edges never persist), so the slots stay valid for every
+   * subsequent [[run]]: a fold ships only the keys its delta triangle
+   * pass flags ([[deltaTriangles]]) and the seeding reads both halves
+   * where they lie. Callers constructing a State by hand may leave it
+   * None — [[performInitialPartition]] then flags the merged graph from
    * scratch.
    *
    * [[prepare]] and [[run]] hand over the graph and `bulkFlagged` as
@@ -58,9 +59,16 @@ object IncrementalWCC {
    * the stages that built its input state, however many folds came
    * before it. */
   final case class State(graph: Graph[VertexData, Int], stats: Map[Long, CommunityData],
-      bulkFlagged: Option[RDD[(Long, Long)]] = None) {
+      bulkFlagged: Option[RDD[(Int, EdgeSlots)]] = None) {
     /** the RDDs this state holds cached */
     private[wcc] def cached: Seq[RDD[_]] = WccUtil.cached(graph) ++ bulkFlagged
+
+    /** the canonical (min, max) keys of `bulkFlagged`, each read off
+     * its slot at the lower endpoint */
+    private[wcc] def bulkKeys: Option[RDD[(Long, Long)]] = bulkFlagged.map(_.flatMap {
+      case (_, s) =>
+        s.self.indices.filter(k => s.self(k) < s.nbr(k)).map(k => (s.self(k), s.nbr(k)))
+    })
   }
 
   /** The reference's graft-back join body (`DistributedWCC.scala:68-77`
@@ -104,9 +112,11 @@ object IncrementalWCC {
       // core's edges are exactly the bulk edges with positive triangle
       // support (epred attr > 0 decides membership alone — attr > 0
       // implies both endpoint t > 0), i.e. the bulk half of every
-      // future batch's triangle-edge flagging (see [[State.bulkFlagged]]).
-      val bulkFlagged = scope.cut(out.prunedCore.edges
-        .map(e => (math.min(e.srcId, e.dstId), math.max(e.srcId, e.dstId))))
+      // future batch's triangle-edge flagging (see [[State.bulkFlagged]]),
+      // shipped once to the partitions of the state's vertices
+      val part = new HashPartitioner(stateGraph.vertices.getNumPartitions)
+      val bulkFlagged = scope.cut(RefineState.pairSlots(RefineState.pairsOf(out.prunedCore.edges),
+        part))
       // one job; the bulk run's surfaces are released below, so every
       // cut must be materialized first
       Fixpoint.materialize(stateGraph.vertices, stateGraph.edges, bulkFlagged)
@@ -403,23 +413,24 @@ object IncrementalWCC {
    * triangle-closing edges and its t > 0 vertices — the vertex and edge
    * sets of `subgraph(epred = flagged, vpred = t > 0)` — and run the
    * SAME seeding loop, seeded by the surviving cIds, on blocks built
-   * from the merged `vertices` and the keep pairs under the t > 0
+   * from the merged vertices and the keep slots under the t > 0
    * predicate (a key in both halves of the keep set collapses to one
-   * slot). `precomputedKeep`, when present, is the merged graph's full
-   * positive-support canonical key set assembled incrementally
-   * (bulk-invariant flags + the [[deltaTriangles]] keys); otherwise the
-   * support kernel ([[TriangleStats.edgeSupport]]) flags the merged
-   * `pairs` from scratch.
+   * slot). With `bulk`, the state's resident slots ([[State.bulkFlagged]]),
+   * the keep set is assembled incrementally: only the merge's
+   * [[deltaTriangles]] keys are shipped, and a partitioner-aware union
+   * reads the bulk half where it lies. Without it, the support kernel
+   * ([[TriangleStats.edgeSupport]]) flags the merged pairs from scratch.
    *
    * Returns the converged seeding, cached in `scope`, as the fixed-5
    * loop's seed generation ([[InitialPartition.refineSeed]]): its ghost
    * labels, same-community degrees and stats are exact. */
-  private[wcc] def performInitialPartition(vertices: RDD[(VertexId, VertexData)],
-      pairs: RDD[(Long, Long)], scope: Fixpoint.CacheScope, maxIterations: Int = 50,
-      precomputedKeep: Option[RDD[(Long, Long)]] = None): RefineState = {
-    val keep = precomputedKeep.getOrElse(
-      TriangleStats.edgeSupport(vertices, pairs).filter(_._2 > 0).map(_._1))
-    InitialPartition.refineSeed(vertices, keep, new HashPartitioner(vertices.getNumPartitions),
+  private[wcc] def performInitialPartition(m: MergeResult, bulk: Option[RDD[(Int, EdgeSlots)]],
+      scope: Fixpoint.CacheScope, maxIterations: Int = 50): RefineState = {
+    val part = new HashPartitioner(m.vertices.getNumPartitions)
+    val flagged = if (bulk.isDefined) m.deltaKeys
+      else TriangleStats.edgeSupport(m.vertices, m.pairs).filter(_._2 > 0).map(_._1)
+    val shipped = RefineState.pairSlots(flagged, part)
+    InitialPartition.refineSeed(m.vertices, bulk.fold(shipped)(_.union(shipped)), part,
       maxIterations, scope, vpred = Some(_.t > 0))
   }
 
@@ -478,7 +489,7 @@ object IncrementalWCC {
    * CONSUMES `state` by default: the superseded state graph and every
    * intermediate graph generation are uncached once the new state is
    * materialized, so a fold leaves exactly the new state cached: its
-   * graph, plus the `bulkFlagged` set it shares with the input state.
+   * graph, plus the `bulkFlagged` slots it shares with the input state.
    * `releaseInput = false` keeps the input state's graph cached — for
    * callers that hold a SHARED bulk state (e.g. the session-memoized
    * prepare that both the batch replay and its Structured Streaming
@@ -486,8 +497,9 @@ object IncrementalWCC {
    * cached beyond its input.
    *
    * The seeding keeps the merged graph's triangle edges: the state's
-   * `bulkFlagged` set plus the keys of the merge's delta triangle pass
-   * ([[deltaTriangles]]), whatever the batch's size or skew. Without
+   * resident `bulkFlagged` slots, read where they lie, plus the keys of
+   * the merge's delta triangle pass ([[deltaTriangles]]), the only keep
+   * slots the fold ships, whatever the batch's size or skew. Without
    * `bulkFlagged` it flags the merged graph from scratch.
    * `expectDeltaPath = true` makes the call fail LOUDLY in that case —
    * for callers whose purpose is exercising the delta path, where a
@@ -495,13 +507,13 @@ object IncrementalWCC {
    *
    * The fold builds one GraphX graph, the graft-back. The merge reads
    * the state's vertices and edges as they are ([[merge]]), the seeding
-   * builds vertex blocks from the merged vertices and the flag set
+   * builds vertex blocks from the merged vertices and the keep slots
    * ([[performInitialPartition]]), the fixed-5 refinement moves the
    * converged blocks ([[refinePartition]]), and the last movement's
    * labels are grafted onto the state graph in the job that
    * materializes it. The merged vertices keep the state's vertex
-   * partitioner, so the blocks and the graft-back join without a
-   * vertex shuffle. */
+   * partitioner, so the blocks, the resident slots and the graft-back
+   * join without a vertex shuffle. */
   def run(state: State, newEdges: RDD[Edge[Int]],
       releaseInput: Boolean = true,
       expectDeltaPath: Boolean = false): State = Fixpoint.returning { scope =>
@@ -510,8 +522,7 @@ object IncrementalWCC {
         "the fold would flag the merged graph's triangle edges from scratch")
     val m = timed("merge")(merge(state, newEdges, scope))
     try {
-    val seed = timed("initial-partition")(performInitialPartition(m.vertices, m.pairs, scope,
-      precomputedKeep = state.bulkFlagged.map(_.union(m.deltaKeys))))
+    val seed = timed("initial-partition")(performInitialPartition(m, state.bulkFlagged, scope))
     Failpoint("after initial-partition")
     val globalCC = WccUtil.joinUnwrapped(m.globalCCF)
     // the seed blocks are materialized: nothing reads the merge's
@@ -539,8 +550,8 @@ object IncrementalWCC {
     }
     Failpoint("after graft")
     if (releaseInput) scope.adopt(WccUtil.cached(state.graph): _*)
-    // bulkFlagged carries over unchanged: the graft-back keeps the
-    // result's edge set identical to the state's (bulk) edge set.
+    // the resident slots carry over unchanged: the graft-back keeps the
+    // result's edge set and vertex partitioner the state's
     State(resultGraph, state.stats, state.bulkFlagged)
     } catch {
       case t: Throwable =>

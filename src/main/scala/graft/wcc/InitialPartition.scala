@@ -86,8 +86,8 @@ object InitialPartition {
   def run(pruned: Graph[VertexData, Int], maxIterations: Int = 50): Graph[VertexData, Int] =
     Fixpoint.returning { scope =>
       val part = new HashPartitioner(pruned.vertices.getNumPartitions)
-      val g = converge(build(pruned.vertices, RefineState.pairsOf(pruned.edges), part, None, _),
-        part, maxIterations, scope)
+      val slots = RefineState.pairSlots(RefineState.pairsOf(pruned.edges), part)
+      val g = converge(build(pruned.vertices, slots, part, None, _), part, maxIterations, scope)
       val out = RefineState.toGraph(pruned, RefineState.labelsOf(g.blocks)(_.label), scope)
       scope.release(g.blocks)
       Failpoint("after seeding")
@@ -95,14 +95,14 @@ object InitialPartition {
     }(WccUtil.cached)
 
   /** The converged seeding of `vertices` (under `part`, those `vpred`
-   * accepts) and their edges `pairs` as the seed generation of the
+   * accepts) and their edge `slots` as the seed generation of the
    * refinement, its blocks cached in `scope`: one more label-shipping
    * job when the last superstep changed labels, so ghost labels,
    * same-community degrees and stats are exact. */
   private[wcc] def refineSeed(vertices: RDD[(VertexId, VertexData)],
-      pairs: RDD[(Long, Long)], part: HashPartitioner, maxIterations: Int,
+      slots: RDD[(Int, EdgeSlots)], part: HashPartitioner, maxIterations: Int,
       scope: Fixpoint.CacheScope, vpred: Option[VertexData => Boolean] = None): RefineState = {
-    var g = converge(build(vertices, pairs, part, vpred, _), part, maxIterations, scope)
+    var g = converge(build(vertices, slots, part, vpred, _), part, maxIterations, scope)
     if (g.changed > 0) {
       val last = g
       g = superstep(last, part, decide = false, RefineState.in(scope))
@@ -131,12 +131,12 @@ object InitialPartition {
   }
 
   /** The build job: the ranked blocks of `vertices` (under `part`) and
-   * `pairs` ([[RefineState.blocks]], with `vpred`) and the superstep-2
+   * `slots` ([[RefineState.blocks]], with `vpred`) and the superstep-2
    * decisions. */
-  private[wcc] def build(vertices: RDD[(VertexId, VertexData)], pairs: RDD[(Long, Long)],
+  private[wcc] def build(vertices: RDD[(VertexId, VertexData)], slots: RDD[(Int, EdgeSlots)],
       part: HashPartitioner, vpred: Option[VertexData => Boolean],
       cache: RefineState.Cache): Gen =
-    finish(RefineState.blocks(vertices, pairs, part, RefineState.Ship.Ranks, vpred)(
+    finish(RefineState.blocks(vertices, slots, part, RefineState.Ship.Ranks, vpred)(
       decideRound(_, _, _, null)), cache)
 
   /** One superstep (one job): ship the labels the previous superstep

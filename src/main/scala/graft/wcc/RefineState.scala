@@ -300,8 +300,8 @@ private[wcc] final class Partial(val cIds: Array[Long], val sums: Array[Long],
  * `part.getPartition(v)`; a block is keyed by its partition index,
  * which the same partitioner maps to itself.
  *
- * Every block is built from vertices and id pairs, each vertex's
- * attributes shipped once per partition holding it as a ghost
+ * Every block is built from vertices and id-only edge slots, each
+ * vertex's attributes shipped once per partition holding it as a ghost
  * ([[RefineState.blocks]]). A state is built in one job: by
  * [[RefineState.seed]] from a labeled `Graph`, or — in IDWCC — by the
  * clustering-coefficient seeding itself
@@ -467,23 +467,23 @@ private[graft] object RefineState {
    * adjacency, labels and same-community degrees, no triangle counts. */
   private[wcc] def refineBlocks(vertices: RDD[(VertexId, VertexData)],
       pairs: RDD[(Long, Long)], part: HashPartitioner, ship: Ship): RDD[(Int, VertexBlock)] =
-    blocks(vertices, pairs, part, ship) { (adj, label, ghostLabel) =>
+    blocks(vertices, pairSlots(pairs, part), part, ship) { (adj, label, ghostLabel) =>
       new VertexBlock(adj, label, ghostLabel, ownDegrees(adj, label, ghostLabel), null, null,
         0.0, 0L)
     }
 
-  /** The one block build: each of the `pairs` goes as an id-only slot to
-   * both endpoint partitions ([[pairSlots]]), each partition sends its
-   * `vertices`' attributes once to every other partition holding a slot
-   * to them ([[GhostAttrs]], none for [[Ship.Ids]]) and builds its block
-   * once for `f` ([[build]]). With `vpred`, only its vertices are built. */
+  /** The one block build over the edge `slots`, co-partitioned under
+   * `part` (each edge end at its vertex's partition, as [[pairSlots]]
+   * places them): each partition sends its `vertices`' attributes once
+   * to every other partition holding a slot to them ([[GhostAttrs]],
+   * none for [[Ship.Ids]]) and builds its block once for `f`
+   * ([[build]]). With `vpred`, only its vertices are built. */
   private[wcc] def blocks[T: ClassTag](vertices: RDD[(VertexId, VertexData)],
-      pairs: RDD[(Long, Long)], part: HashPartitioner, ship: Ship,
+      slots: RDD[(Int, EdgeSlots)], part: HashPartitioner, ship: Ship,
       vpred: Option[VertexData => Boolean] = None)(
       f: (Adjacency, Array[Long], Array[Long]) => T): RDD[(Int, T)] = {
     val placed = if (vertices.partitioner.contains(part)) vertices else vertices.partitionBy(part)
     val verts = vpred.fold(placed)(p => placed.filter(v => p(v._2)))
-    val slots = pairSlots(pairs, part)
     val ranks = ship == Ship.Ranks
     val prune = vpred.isDefined
     if (ship == Ship.Ids)

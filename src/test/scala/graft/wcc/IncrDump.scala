@@ -51,7 +51,7 @@ object IncrDump {
     println(s"DUMP split=$split vertexCount=$vertexCount " +
       s"globalCC=$globalCC bits=${java.lang.Double.doubleToLongBits(globalCC)}")
 
-    val seed = IncrementalWCC.performInitialPartition(m.vertices, m.pairs, scope)
+    val seed = IncrementalWCC.performInitialPartition(m, None, scope)
     seed.labels.toDF("vid", "cid").coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/core_seed")
     val coreEdges = seed.blocks.flatMap { case (_, b) =>

@@ -7,6 +7,27 @@ import org.apache.spark.graphx.Edge
 class IncrementalWCCSpec extends SparkSpec {
   import GraphFixtures._
 
+  /** The canonical key set of `state`'s resident bulk slots, read
+   * through `bulkKeys`, once each key is asserted to sit at exactly its
+   * two endpoint partitions under the state's vertex partitioner. */
+  private def bulkKeySet(state: IncrementalWCC.State): Set[(Long, Long)] = {
+    val part = new org.apache.spark.HashPartitioner(state.graph.vertices.getNumPartitions)
+    val slots = state.bulkFlagged.get
+    assert(slots.partitioner === Some(part), "the bulk slots are not under the vertex partitioner")
+    val keys = state.bulkKeys.get.collect()
+    assert(keys.length === keys.distinct.length, "a bulk key is held twice")
+    val placed = slots.mapPartitionsWithIndex { (i, it) =>
+      it.flatMap { case (q, s) => s.self.indices.map(k => (i, q, s.self(k), s.nbr(k))) }
+    }.collect()
+    assert(placed.forall(p => p._1 == p._2), "a slot block sits at a partition not its own")
+    val expected = keys.flatMap { case (lo, hi) =>
+      Seq((part.getPartition(lo), lo, hi), (part.getPartition(hi), hi, lo))
+    }
+    assert(placed.map(p => (p._1, p._3, p._4)).sorted.toSeq === expected.sorted.toSeq,
+      "a bulk key is not held at exactly its two endpoint partitions")
+    keys.toSet
+  }
+
   test("merge classifies border vs new and updates triangle deltas") {
     // bulk: triangle {1,2,3}; batch adds triangle {3,4,5} -> 3 is
     // border, 4 and 5 are new
@@ -63,7 +84,7 @@ class IncrementalWCCSpec extends SparkSpec {
         .filter(_._2 > 0).map(_._1).collect().toSet
       val keys = m.deltaKeys.collect()
       assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
-      assert(state.bulkFlagged.get.collect().toSet ++ keys === fromScratch)
+      assert(bulkKeySet(state) ++ keys === fromScratch)
       m.globalCCF.join()
     }
     def labels(s: IncrementalWCC.State) =
@@ -161,7 +182,7 @@ class IncrementalWCCSpec extends SparkSpec {
         .filter(_._2 > 0).map(_._1).collect().toSet
       val keys = m.deltaKeys.collect()
       assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
-      assert(state.bulkFlagged.get.collect().toSet ++ keys === fromScratch)
+      assert(bulkKeySet(state) ++ keys === fromScratch)
       m.globalCCF.join()
     }
   }
@@ -190,7 +211,7 @@ class IncrementalWCCSpec extends SparkSpec {
     val state = IncrementalWCC.prepareEdges(bulkEdges, bulkEdges.getNumPartitions)
     if (overlapping) Fixpoint.using { scope =>
       val m = IncrementalWCC.merge(state, batchRdd, scope)
-      val shared = m.deltaKeys.intersection(state.bulkFlagged.get).count()
+      val shared = m.deltaKeys.intersection(state.bulkKeys.get).count()
       m.globalCCF.join()
       assert(shared > 0, "premise: the delta keys overlap the bulk flags")
     }

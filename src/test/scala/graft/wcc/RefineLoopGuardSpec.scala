@@ -3,6 +3,7 @@ package graft.wcc
 import graft.{JobProbe, SparkSpec}
 import graft.graph.Fixpoint
 import org.apache.spark.ShuffleDependency
+import org.apache.spark.graphx.Edge
 import org.apache.spark.rdd.RDD
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
@@ -27,7 +28,8 @@ import org.scalatest.time.SpanSugar._
  * Every block exchange of those loops runs on [[BlockCodec]]: a
  * message shuffle that falls back to the session serializer fails
  * here. So does any other shuffle in an IDWCC fold but the global-cc
- * fold's and the graft-back's. */
+ * fold's and the graft-back's, and a seeding keep-slot exchange whose
+ * bytes grow with the state rather than the batch. */
 class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   private implicit val signaler: Signaler = ThreadSignaler
   import GraphFixtures._
@@ -59,6 +61,11 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       s"counted ${ref.jobs} job(s) / ${ref.stages} stage(s) on the GraphX " +
       "reference evaluation — it cannot see the fan-out it guards")
   }
+
+  /** `pruned`'s edges as block-build slots under `part` */
+  private def slotsOf(pruned: org.apache.spark.graphx.Graph[VertexData, Int],
+      part: org.apache.spark.HashPartitioner) =
+    RefineState.pairSlots(RefineState.pairsOf(pruned.edges), part)
 
   private val messageClasses =
     Seq(classOf[EdgeSlots], classOf[GhostAttrs], classOf[Moves], classOf[SameSets])
@@ -128,7 +135,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
         val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
         var built: InitialPartition.Gen = null
         captured("the seeding build", Seq(classOf[EdgeSlots], classOf[GhostAttrs])) {
-          built = InitialPartition.build(pruned.vertices, RefineState.pairsOf(pruned.edges), part,
+          built = InitialPartition.build(pruned.vertices, slotsOf(pruned, part), part,
             None, capture)
         }
         captured("a seeding superstep", Seq(classOf[Moves])) {
@@ -201,7 +208,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val pruned = TriangleStats.run(graphOf(spark, edges)).pruned
       val part = new org.apache.spark.HashPartitioner(pruned.vertices.getNumPartitions)
       Fixpoint.using { scope =>
-        val built = InitialPartition.build(pruned.vertices, RefineState.pairsOf(pruned.edges), part,
+        val built = InitialPartition.build(pruned.vertices, slotsOf(pruned, part), part,
           None, RefineState.in(scope))
         assert(built.changed > 0, "premise: superstep 2 must change labels")
         val c = JobProbe(spark.sparkContext) {
@@ -223,7 +230,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       val before = RefineState.builds.get()
       val c = Fixpoint.using { scope =>
         JobProbe(spark.sparkContext) {
-          InitialPartition.build(pruned.vertices, RefineState.pairsOf(pruned.edges), part, None,
+          InitialPartition.build(pruned.vertices, slotsOf(pruned, part), part, None,
             RefineState.in(scope))
         }
       }
@@ -268,43 +275,73 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
     }
   }
 
-  /** The shuffles the jobs of `body` read, under a job group of their
-   * own (the merge's global-cc fold carries it too): per RDD that reads
-   * one — an RDD with a parent outside its stage — its job id and call
-   * site. Read once the listener's counts held still for five 100 ms
-   * samples, as [[JobProbe]] does. */
-  private def shuffleReads(body: => Unit): Seq[(Int, String)] = {
+  /** Runs `body` under a job group of its own with the listener `listen`
+   * builds from a test for that group's properties attached, and returns
+   * once `count` held still for five 100 ms samples, as [[JobProbe]]
+   * does. The merge's global-cc fold carries the group too. */
+  private def grouped(count: => Int)(
+      listen: (java.util.Properties => Boolean) => org.apache.spark.scheduler.SparkListener)(
+      body: => Unit): Unit = {
     val sc = spark.sparkContext
-    val tag = s"graft-shuffle-reads-${java.util.UUID.randomUUID()}"
-    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-    def ours(p: java.util.Properties) = p != null && tag == p.getProperty("spark.jobGroup.id")
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (ours(js.properties)) js.stageInfos.foreach(i => jobOf.put(i.stageId, js.jobId))
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (ours(ss.properties)) {
-          val info = ss.stageInfo
-          val here = info.rddInfos.map(_.id).toSet
-          info.rddInfos.filter(_.parentIds.exists(!here(_))).foreach { r =>
-            reads.add((jobOf.getOrDefault(info.stageId, -1), r.callSite))
-          }
-        }
-    }
+    val tag = s"graft-grouped-${java.util.UUID.randomUUID()}"
+    val listener = listen(p => p != null && tag == p.getProperty("spark.jobGroup.id"))
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(tag, "shuffle reads")
+      sc.setJobGroup(tag, "grouped probe")
       try body finally sc.clearJobGroup()
       var prev = -1; var stable = 0; var spins = 0
       while (stable < 5 && spins < 200) {
         Thread.sleep(100)
-        if (reads.size == prev) stable += 1 else { stable = 0; prev = reads.size }
+        if (count == prev) stable += 1 else { stable = 0; prev = count }
         spins += 1
       }
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The shuffles the jobs of `body` read ([[grouped]]): per RDD that
+   * reads one — an RDD with a parent outside its stage — its job id and
+   * call site. */
+  private def shuffleReads(body: => Unit): Seq[(Int, String)] = {
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    grouped(reads.size) { ours =>
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (ours(js.properties)) js.stageInfos.foreach(i => jobOf.put(i.stageId, js.jobId))
+        override def onStageSubmitted(
+            ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          if (ours(ss.properties)) {
+            val info = ss.stageInfo
+            val here = info.rddInfos.map(_.id).toSet
+            info.rddInfos.filter(_.parentIds.exists(!here(_))).foreach { r =>
+              reads.add((jobOf.getOrDefault(info.stageId, -1), r.callSite))
+            }
+          }
+      }
+    }(body)
     import scala.jdk.CollectionConverters._
     reads.asScala.toSeq
+  }
+
+  /** The stages the jobs of `body` ran ([[grouped]]): per stage, its call
+   * site in long form (the stack that built its last RDD) and the shuffle
+   * bytes it wrote. */
+  private def stageWrites(body: => Unit): Seq[(String, Long)] = {
+    val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    grouped(writes.size) { ours =>
+      new org.apache.spark.scheduler.SparkListener {
+        override def onStageSubmitted(
+            ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          if (ours(ss.properties)) ran.add(ss.stageInfo.stageId)
+        override def onStageCompleted(
+            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          if (ran.contains(sc.stageInfo.stageId)) writes.add((sc.stageInfo.details,
+            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten))
+      }
+    }(body)
+    import scala.jdk.CollectionConverters._
+    writes.asScala.toSeq
   }
 
   test("every shuffle of an IDWCC fold is a block exchange, but the global-cc fold's " +
@@ -331,6 +368,50 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
       release(out.graph)
       release(state.graph)
       state.bulkFlagged.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  test("an IDWCC fold's keep-slot exchange writes the same bytes however large the state") {
+    // the holme-kim-1k bulk region, alone and beside 3 replicas of it at
+    // disjoint id offsets (multiples of the partition count, so each
+    // replica vertex sits at its original's partition), and one batch:
+    // the edges of the lowest stream-region vertex, which touch no
+    // replica. The resident bulk slots are never shipped again, so the
+    // seeding's keep-slot exchange carries the batch's keys alone.
+    failAfter(300.seconds) {
+      val all = ParityGraph.edges()
+      val split = math.floor(all.map(_._2).max * 0.8).toLong
+      val bulk = all.filter(_._2 < split)
+      val first = all.map(_._2).filter(_ >= split).min
+      val batch = all.filter(_._2 == first)
+      val offset = 1L << 20
+      def keepSlotBytes(bulkEdges: Seq[(Long, Long)]): Long = {
+        val sc = spark.sparkContext
+        val state = IncrementalWCC.prepareEdges(
+          sc.parallelize(bulkEdges.map { case (a, b) => Edge(a, b, 1) }, 4), 4)
+        val edges = sc.parallelize(batch.map { case (a, b) => Edge(a, b, 1) }, 2)
+        var out: IncrementalWCC.State = null
+        val writes = stageWrites { out = IncrementalWCC.run(state, edges, releaseInput = false) }
+        release(out.graph)
+        release(state.graph)
+        state.bulkFlagged.foreach(_.unpersist(blocking = false))
+        // the stage that ships the keep slots: built by the seeding's
+        // own pairSlots call
+        val keep = writes.filter { case (site, _) =>
+          site.contains("RefineState$.pairSlots") &&
+            site.contains("IncrementalWCC$.performInitialPartition")
+        }
+        assert(keep.size === 1, "premise: one keep-slot exchange among " +
+          writes.map(_._1.linesIterator.take(3).mkString(" < ")).mkString("; "))
+        assert(keep.head._2 > 0, "premise: the batch flags keep slots")
+        keep.head._2
+      }
+      val alone = keepSlotBytes(bulk)
+      val replicated = keepSlotBytes(bulk ++ (1 to 3).flatMap { k =>
+        bulk.map { case (a, b) => (a + k * offset, b + k * offset) }
+      })
+      assert(replicated === alone, s"the keep-slot exchange wrote $alone bytes on the " +
+        s"holme-kim-1k state and $replicated with 3 replicas beside it")
     }
   }
 

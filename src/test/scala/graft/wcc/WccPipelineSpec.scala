@@ -74,8 +74,9 @@ class InitialPartitionSpec extends SparkSpec {
       .map { case (id, vd) => (id, vd.cId) }.collect().toMap
     Seq(1, 4, 80).foreach { parts =>
       Fixpoint.using { scope =>
-        val s = InitialPartition.refineSeed(pruned.vertices, RefineState.pairsOf(pruned.edges),
-          new org.apache.spark.HashPartitioner(parts), 50, scope)
+        val part = new org.apache.spark.HashPartitioner(parts)
+        val s = InitialPartition.refineSeed(pruned.vertices,
+          RefineState.pairSlots(RefineState.pairsOf(pruned.edges), part), part, 50, scope)
         val labels = s.labels.collect().toMap
         assert(labels === viaRun, s"labels differ at $parts partitions")
         val relabeled = RefineState.toGraph(pruned, s.labels, scope)
