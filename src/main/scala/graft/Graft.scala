@@ -1,7 +1,7 @@
 package graft
 
 import graft.graph.EdgeOps
-import graft.ops.{Dedup, Joins, Multimodal, Similarity, TextOps}
+import graft.ops.{Dedup, Joins, Similarity, TextOps}
 import graft.wcc.{DistributedWCC, IncrementalWCC, VertexData}
 import org.apache.spark.graphx.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -50,12 +50,6 @@ object Graft {
    * seeded Pregel -> WCC hill-climbing refinement. */
   def wcc(graph: Graph[Int, Int]): DistributedWCC.Output =
     DistributedWCC.run(graph)
-
-  /** One IDWCC micro-batch fold step over an existing state. */
-  def wccStep(state: IncrementalWCC.State,
-      newEdges: org.apache.spark.rdd.RDD[org.apache.spark.graphx.Edge[Int]])
-      : IncrementalWCC.State =
-    IncrementalWCC.run(state, newEdges)
 
   /** The reference's bulk/stream split-and-replay driver:
    * (vid, cid) partition after draining the stream. */
@@ -127,14 +121,6 @@ object Graft {
 
   // ---- similarity search -------------------------------------------
 
-  /** Exact cosine top-k ground truth. Unbounded by default; pass
-   * `maxQueryId` at scale to keep the scan O(|sample| * n). */
-  def annBruteForce(embeddings: DataFrame, k: Int = 5,
-      maxQueryId: Long = Long.MaxValue): DataFrame =
-    Similarity.bruteForceTopK(embeddings, k, maxQueryId = maxQueryId)
-  def annIvf(embeddings: DataFrame, k: Int = 5): DataFrame =
-    Similarity.ivfKmeansTopK(embeddings, k)
-
   /** Near-duplicate pairs above a cosine threshold. APPROXIMATE by
    * default: banded-LSH candidate generation (band-key width derived
    * from the corpus count) followed by an exact cosine re-rank —
@@ -166,7 +152,6 @@ object Graft {
     TextOps.contextChunks(docs, win, step)
   def redactPii(df: DataFrame, textCol: String = "text"): DataFrame =
     TextOps.redactPii(df, textCol)
-  def repetitionSignals(docs: DataFrame): DataFrame = TextOps.repetition(docs)
   def topNgrams(docs: DataFrame, n: Int = 2, k: Int = 10): DataFrame =
     TextOps.topNgrams(docs, n, k)
   def sequencePacking(docs: DataFrame, budget: Int = 2048,
@@ -176,9 +161,6 @@ object Graft {
     TextOps.vocabCoverage(docs, k)
   def quantizeInt8(embeddings: DataFrame): DataFrame =
     Similarity.quantizeInt8(embeddings)
-  def mediaChunks(media: DataFrame): DataFrame = Multimodal.chunks(media)
-  def decodeMedia(spark: SparkSession, media: DataFrame): DataFrame =
-    Multimodal.decodeAll(spark, media).toDF()
 
   // ---- graph analytics (round 6-7 additions) -----------------------
 
@@ -248,10 +230,6 @@ object Graft {
       right: DataFrame, rKey: String, rTime: String, rTie: String,
       payload: Seq[String]): DataFrame =
     Joins.asof(left, lKey, lTime, right, rKey, rTime, rTie, payload)
-
-  def withinBandPairs(df: DataFrame, key: String, id: String, time: String,
-      band: Long): DataFrame =
-    Joins.bandedSelfPairs(df, key, id, time, band)
 
   /** Interval-union sweep: merge each user's overlapping
    * `span`-microsecond point intervals into islands and total the

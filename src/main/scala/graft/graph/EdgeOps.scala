@@ -163,8 +163,4 @@ object EdgeOps {
     val p = if (numPartitions > 0) numPartitions else edges.getNumPartitions
     g.partitionBy(PartitionStrategy.EdgePartition2D, p)
   }
-
-  /** Convenience: canonical co-purchase GraphX graph for an sf dir. */
-  def coPurchaseGraph(spark: SparkSession, sfDir: String): Graph[Int, Int] =
-    toGraph(coPurchaseEdges(spark, sfDir))
 }

@@ -33,28 +33,33 @@ import org.apache.spark.storage.StorageLevel
  * lazy view which only the round after that materializes. When the
  * loop stops, its last generations stay in the scope until it closes.
  *
- * Lineage: a state marked with `Round.checkpoint` is reliably
- * checkpointed every [[Fixpoint.CheckpointEvery]] rounds when the
- * context has a checkpoint dir (every entry point sets one). An
- * uncut lineage grows a few stages per round and overflows the task
- * serializer's stack on deep runs.
- *
- * A hand-off is cut locally instead ([[CacheScope.cut]],
- * `Round.cut`): the RDD is persisted `MEMORY_AND_DISK` and marked
- * with `localCheckpoint()` before its first action. The first job
- * whose lineage walk reaches it, the action that already materializes
- * it, stores it and truncates its lineage without a job of its own
- * (Spark's scaladoc names long GraphX lineages as the use case). Every
- * later job then schedules only the stages after the cut, instead of
- * re-registering the whole history of a carried state. A walk stops
- * at the first marked RDD it meets, so a job that materializes
- * several cuts must reach each of them directly ([[materialize]]).
+ * Lineage: the one way lineage is cut is locally
+ * ([[CacheScope.cut]], `Round.cut`). Every WCC hand-off and
+ * generation is a cut, and so is the state of every loop in
+ * [[GraphAlgs]] that runs to a data-dependent depth (MIS, the
+ * colorings, matching, DAG levels, SCC). An uncut state's lineage
+ * grows a few stages per round: each round's job lists the whole
+ * history as skipped stages, and a deep run overflows the task
+ * serializer's stack. A cut RDD is persisted `MEMORY_AND_DISK` and
+ * marked with `localCheckpoint()` before its first action. The first
+ * job whose lineage walk reaches it, the action that already
+ * materializes it, stores it and truncates its lineage without a job
+ * of its own (Spark's scaladoc names long GraphX lineages as the use
+ * case). Every later job then schedules only the stages after the
+ * cut, so a round's job is the same at round 4 as at round 400. A
+ * walk stops at the first marked RDD it meets, so a job that
+ * materializes several cuts must reach each of them directly
+ * ([[materialize]]).
  *
  * Invariant: a cut RDD, once released, can no longer be recomputed:
  * its lineage is gone, and a reader of its released blocks fails
  * where an uncut one would silently recompute them from the input.
  * So any RDD that outlives a cut parent must be cut itself, and
- * materialized before that parent is released.
+ * materialized before that parent is released: a loop that keeps a
+ * part of each round to union at the end cuts that part and
+ * materializes it in the round's own job, beside the next state. A
+ * cached DataFrame built over a loop's cuts is materialized before the
+ * scope closes, and once unpersisted it cannot be recomputed either.
  *
  * Trade-off: a local checkpoint lives in the block managers of the
  * executors that computed it. A block lost with its executor fails
@@ -62,9 +67,6 @@ import org.apache.spark.storage.StorageLevel
  * `local[N]`, where the executor and the driver die together.
  */
 object Fixpoint {
-
-  /** Rounds between reliable checkpoints of a marked loop state. */
-  val CheckpointEvery = 16
 
   /** The cached data one computation owns, released together. */
   final class CacheScope private[Fixpoint] () extends AutoCloseable {
@@ -158,9 +160,15 @@ object Fixpoint {
   }
 
   /** Materialize every one of `rdds` in ONE job whose lineage walk
-   * reaches each of them, so the cuts marked on them all ride on it. */
-  def materialize(rdds: RDD[_]*): Unit =
-    rdds.head.sparkContext.union(rdds.map(_.map(_ => ()))).count()
+   * reaches each of them, so the cuts marked on them all ride on it,
+   * and return their counts in order. */
+  def materialize(rdds: RDD[_]*): Seq[Long] = {
+    val sc = rdds.head.sparkContext
+    val sizes = sc.runJob(sc.union(rdds.map(_.map(_ => ()))),
+      (it: Iterator[Unit]) => it.foldLeft(0L)((n, _) => n + 1))
+    val bounds = rdds.scanLeft(0)(_ + _.getNumPartitions)
+    bounds.zip(bounds.tail).map { case (from, until) => sizes.slice(from, until).sum }
+  }
 
   /** Run `body` in a new scope and hand the scope back with its
    * result: the caller closes it once it is done with the result.
@@ -192,8 +200,7 @@ object Fixpoint {
   def using[T](body: CacheScope => T): T = returning(body)(_ => Nil)
 
   /** Drives the rounds of one loop: the round counter, the
-   * `maxRounds` bound, the checkpoint cadence and the release of
-   * superseded generations. */
+   * `maxRounds` bound and the release of superseded generations. */
   final class Loop private[Fixpoint] (scope: CacheScope, maxRounds: Int) {
     private val due = scala.collection.mutable.ArrayBuffer.empty[(Int, RDD[_])]
 
@@ -232,15 +239,6 @@ object Fixpoint {
       /** [[cache]] `rdd` in this round's generation as a lineage cut
        * (see "Lineage" on [[Fixpoint]]). */
       def cut[T](rdd: RDD[T]): RDD[T] = mark(cache(rdd, StorageLevel.MEMORY_AND_DISK))
-
-      /** Mark `rdd` for a reliable checkpoint if this is a cadence
-       * round and a checkpoint dir is set. Call before the round's
-       * action. */
-      def checkpoint[T](rdd: RDD[T]): RDD[T] = {
-        if (number % CheckpointEvery == 0 && rdd.sparkContext.getCheckpointDir.isDefined)
-          rdd.checkpoint()
-        rdd
-      }
     }
   }
 }

@@ -2175,7 +2175,7 @@ object GraphAlgs {
         .map { case (src, (dst, prSrc)) => (dst, (prSrc, src)) }
         .reduceByKey(p, (a, b) =>
           if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
-      val newMis = scope.cache(undecided.leftOuterJoin(minNbr, p)
+      val newMis = scope.cut(undecided.leftOuterJoin(minNbr, p)
         .filter { case (v, (prV, m)) =>
           m.forall(mm => prV < mm._1 || (prV == mm._1 && v < mm._2)) }
         .mapValues(_ => r))
@@ -2184,8 +2184,8 @@ object GraphAlgs {
         .flatMap { case (_, (_, nbrs)) => nbrs.iterator.map((_, ())) }
         .union(newMis.mapValues(_ => ()))
         .reduceByKey(p, (a, _) => a)
-      val next = rnd.checkpoint(rnd.cache(undecided.subtractByKey(knocked, p)))
-      (next, next.count())
+      val next = rnd.cut(undecided.subtractByKey(knocked, p))
+      (next, Fixpoint.materialize(next, newMis).head)
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(misParts.toSeq))
@@ -2269,10 +2269,10 @@ object GraphAlgs {
         .reduceByKey(p, (a, b) =>
           if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
       // eligible vertices commit to mex(used): (vid, (color, round))
-      val newColored = rnd.checkpoint(scope.cache(uncolored.leftOuterJoin(minNbr, p)
+      val newColored = scope.cut(uncolored.leftOuterJoin(minNbr, p)
         .filter { case (v, ((prV, _), m)) =>
           m.forall(mm => prV < mm._1 || (prV == mm._1 && v < mm._2)) }
-        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) }))
+        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) })
       colorParts += newColored
       // each colored vertex notifies neighbors once, ever; merge the
       // arriving colors into the surviving uncolored states
@@ -2281,12 +2281,12 @@ object GraphAlgs {
       val arrived = notify.groupByKey(p).mapValues(_.toArray.sorted)
       // JP on denser-than-backbone inputs legitimately runs hundreds
       // of rounds, which an uncut lineage cannot survive
-      val next = rnd.checkpoint(rnd.cache(uncolored.subtractByKey(newColored, p)
+      val next = rnd.cut(uncolored.subtractByKey(newColored, p)
         .leftOuterJoin(arrived, p)
         .mapValues { case ((pr, used), add) =>
           (pr, add.fold(used)(a => (used ++ a).sorted))
-        }))
-      (next, next.count())
+        })
+      (next, Fixpoint.materialize(next, newColored).head)
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(colorParts.toSeq)
@@ -2348,20 +2348,20 @@ object GraphAlgs {
         .reduceByKey(p, (a, b) =>
           if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
       // eligible vertices commit to mex(used): (vid, (color, round))
-      val newColored = rnd.checkpoint(scope.cache(pri.leftOuterJoin(minNbr, p)
+      val newColored = scope.cut(pri.leftOuterJoin(minNbr, p)
         .filter { case (v, ((prV, _), m)) =>
           m.forall(mm => prV < mm._1 || (prV == mm._1 && v < mm._2)) }
-        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) }))
+        .map { case (v, ((_, used), _)) => (v, (mex(used), r)) })
       colorParts += newColored
       val notify = eBySrc.join(newColored, p)
         .map { case (_, (dst, (c, _))) => (dst, c) }
       val arrived = notify.groupByKey(p).mapValues(_.toArray.sorted)
-      val next = rnd.checkpoint(rnd.cache(uncolored.subtractByKey(newColored, p)
+      val next = rnd.cut(uncolored.subtractByKey(newColored, p)
         .leftOuterJoin(arrived, p)
         .mapValues { case (used, add) =>
           add.fold(used)(a => (used ++ a).sorted)
-        }))
-      (next, next.count())
+        })
+      (next, Fixpoint.materialize(next, newColored).head)
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(colorParts.toSeq)
@@ -2467,18 +2467,18 @@ object GraphAlgs {
           cand == own && (pr < ownPr || (pr == ownPr && src < v)) }
         .mapValues(_ => ())
         .reduceByKey(p, (a, _) => a)
-      val newColored = rnd.checkpoint(scope.cache(prop.subtractByKey(beaten, p)
-        .map { case (v, (cand, _)) => (v, (cand, r)) }))
+      val newColored = scope.cut(prop.subtractByKey(beaten, p)
+        .map { case (v, (cand, _)) => (v, (cand, r)) })
       colorParts += newColored
       val notify = eBySrc.join(newColored, p)
         .map { case (_, (dst, (c, _))) => (dst, c) }
       val arrived = notify.groupByKey(p).mapValues(_.toArray.sorted)
-      val next = rnd.checkpoint(rnd.cache(uncolored.subtractByKey(newColored, p)
+      val next = rnd.cut(uncolored.subtractByKey(newColored, p)
         .leftOuterJoin(arrived, p)
         .mapValues { case ((deg, used), add) =>
           (deg, add.fold(used)(a => (used ++ a).distinct.sorted))
-        }))
-      (next, next.count())
+        })
+      (next, Fixpoint.materialize(next, newColored).head)
     }
     val df = spark.createDataFrame(
       spark.sparkContext.union(colorParts.toSeq)
@@ -2649,7 +2649,7 @@ object GraphAlgs {
       // are unique per edge (md5 + endpoint tie-break), so "the
       // forwarded key equals y's minimum" is exactly "y's argmin
       // edge IS (x, y)" — an edge-identity probe, no key compare.
-      val matched = scope.cache(undecided.zipPartitions(cand) { (uIt, cIt) =>
+      val matched = scope.cut(undecided.zipPartitions(cand) { (uIt, cIt) =>
         val m = localMin(uIt)
         cIt.filter { case (y, (x, _, _)) =>
           if (y <= x) false
@@ -2674,13 +2674,13 @@ object GraphAlgs {
         uIt.collect { case (x, (y, w1, w2)) if !dead.contains(x) =>
           (y, (x, w1, w2)) }
       }.partitionBy(p)
-      val next = rnd.checkpoint(rnd.cache(phaseA.zipPartitions(knocked) { (aIt, kIt) =>
+      val next = rnd.cut(phaseA.zipPartitions(knocked) { (aIt, kIt) =>
         val dead = new java.util.HashSet[Long]()
         kIt.foreach(kv => dead.add(kv._1))
         aIt.collect { case (x, (y, w1, w2)) if !dead.contains(x) =>
           nUndecidedAcc.add(1L); (x, (y, w1, w2)) }
-      }))
-      next.foreachPartition(_ => ()) // materialize; populates the accumulator
+      })
+      Fixpoint.materialize(next, matched) // populates the accumulator
       (next, nUndecidedAcc.value / 2)
     }
     val df = spark.createDataFrame(
@@ -2722,12 +2722,12 @@ object GraphAlgs {
       // for the same reason — only zero-ness is read.
       val changedAcc = spark.sparkContext
         .longAccumulator(s"daglevels-changed-${r.number}")
-      val next = r.checkpoint(r.cache(st.leftOuterJoin(msg, p)
+      val next = r.cut(st.leftOuterJoin(msg, p)
         .mapValues { case (l, m) =>
           val l2 = math.max(l, m.getOrElse(l))
           if (l2 != l) changedAcc.add(1L)
           l2
-        }))
+        })
       next.foreachPartition(_ => ()) // materialize; populates the accumulator
       (next, changedAcc.value)
     }
@@ -2837,14 +2837,14 @@ object GraphAlgs {
           // convergence decision is retry-exact, like matching's.
           val changedAcc = spark.sparkContext
             .longAccumulator(s"scc-changed-$outer-${ri.number}")
-          val next = ri.checkpoint(ri.cache(st.leftOuterJoin(msg, p)
+          val next = ri.cut(st.leftOuterJoin(msg, p)
             .mapValues { case ((f, b, fp, bp, _), m) =>
               val f2 = math.min(f, m.fold(INF)(_._1))
               val b2 = math.min(b, m.fold(INF)(_._2))
               val ch = f2 != f || b2 != b
               if (ch) changedAcc.add(1L)
               (f2, b2, fp, bp, ch)
-            }))
+            })
           next.foreachPartition(_ => ()) // materialize; populates the accumulator
           val changed = changedAcc.value
           if (changed > 0 && ri.number % 2 == 0) {
@@ -2856,17 +2856,17 @@ object GraphAlgs {
               .reduceByKey(p, (x, y) =>
                 (math.min(x._1, y._1), math.min(x._2, y._2),
                   math.min(x._3, y._3), math.min(x._4, y._4)))
-            val jumped = ri.checkpoint(ri.cache(next.join(resolved, p)
+            val jumped = ri.cut(next.join(resolved, p)
               .mapValues { case ((f, b, _, _, ch), (fj, fp2, bj, bp2)) =>
                 val f2 = math.min(f, fj)
                 val b2 = math.min(b, bj)
                 (f2, b2, fp2, bp2, ch || f2 != f || b2 != b)
-              }))
+              })
             jumped.count()
             (jumped, changed)
           } else (next, changed)
         }
-        val peel = scope.cache(st
+        val peel = scope.cut(st
           .filter { case (_, (f, b, _, _, _)) => f == b }
           .map { case (v, (f, _, _, _, _)) => (v, f) })
         peel.count()

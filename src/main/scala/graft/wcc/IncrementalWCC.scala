@@ -1,9 +1,11 @@
 package graft.wcc
 
 import scala.collection.mutable.ArrayBuilder
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 import graft.graph.{Fixpoint, SortedIntersect}
-import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.{FutureAction, HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
@@ -146,18 +148,22 @@ object IncrementalWCC {
       newIds: Broadcast[Set[Long]],
       borderIds: Broadcast[Set[Long]],
       vertexCount: Long,
-      /** deterministic merged-graph global cc ([[detGlobalCC]]),
-       * computed as a CONCURRENT job over the already-materialized
-       * cached vertices: its only consumer is the refinement, so the
-       * fold overlaps the seeding instead of serializing inside the
-       * merge. Values unchanged — the blocked fold is
-       * bit-reproducible wherever it runs. Its job runs under the
-       * caller's job group and description. */
-      globalCCF: java.util.concurrent.CompletableFuture[Double],
+      /** the block sums of [[detGlobalCC]] over `vertices`, an
+       * asynchronous job over the already-materialized cached
+       * vertices: its only consumer is the refinement, so the job
+       * overlaps the seeding instead of serializing inside the merge.
+       * Submitted from the merging thread, it runs under that
+       * thread's job group and description. */
+      globalCCBlocks: FutureAction[Seq[(Long, Double)]],
       /** the [[deltaTriangles]] pass whose (c, ind) sums `vertices`
        * carries; cached, released by `run` after the initial
        * partition */
       delta: RDD[(Int, Delta)]) {
+    /** [[detGlobalCC]] of the merged vertices: awaits
+     * [[globalCCBlocks]] and folds its sums on the driver. A failed
+     * job raises its own exception. */
+    def globalCC: Double = foldGlobalCC(Await.result(globalCCBlocks, Duration.Inf), vertexCount)
+
     /** the canonical keys of the triangle edges the delta pass flagged */
     def deltaKeys: RDD[(Long, Long)] = delta.mapPartitions { it =>
       val d = it.next()._2
@@ -224,21 +230,10 @@ object IncrementalWCC {
     scope.release(classes, touched)
     Failpoint("in merge")
     // the count above materialized the cached vertices, so the
-    // concurrent fold only re-reads blocks — no racing computation.
-    // Local properties reach a pool thread only when it is created, so
-    // the fold sets the caller's job group and description itself.
-    val jobProps = JobGroupProperties.map(k => (k, sc.getLocalProperty(k)))
-    val globalCCF = java.util.concurrent.CompletableFuture.supplyAsync(() => {
-      jobProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      try detGlobalCC(vertices, vertexCount)
-      finally jobProps.foreach { case (k, _) => sc.setLocalProperty(k, null) }
-    })
-    MergeResult(vertices, pairs, bNew, bBorder, vertexCount, globalCCF, delta)
+    // concurrent block sums only re-read blocks — no racing computation
+    val globalCCBlocks = detGlobalCCBlocks(vertices).collectAsync()
+    MergeResult(vertices, pairs, bNew, bBorder, vertexCount, globalCCBlocks, delta)
   }
-
-  /** the local properties `SparkContext.setJobGroup` sets */
-  private val JobGroupProperties =
-    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
   /** Deterministic global clustering coefficient: ascending-vid left
    * fold of per-vertex cc within 65536-id blocks, then an
@@ -256,8 +251,13 @@ object IncrementalWCC {
    * doubles; past that add a super-block tier with the same
    * discipline). */
   private[graft] def detGlobalCC(vertices: RDD[(VertexId, VertexData)],
-      vertexCount: Long): Double = {
-    val blockSums = vertices
+      vertexCount: Long): Double =
+    foldGlobalCC(detGlobalCCBlocks(vertices).collect(), vertexCount)
+
+  /** [[detGlobalCC]]'s per-block sums, (block, ascending-vid left fold
+   * of the block's cc) */
+  private def detGlobalCCBlocks(vertices: RDD[(VertexId, VertexData)]): RDD[(Long, Double)] =
+    vertices
       .map { case (id, vd) => (id >>> 16, (id, vd.cc)) }
       .groupByKey()
       .mapValues { it =>
@@ -266,8 +266,11 @@ object IncrementalWCC {
         while (i < arr.length) { s += arr(i)._2; i += 1 }
         s
       }
-      .collect()
-      .sortBy(_._1)
+
+  /** [[detGlobalCC]]'s ascending-block left fold of the block sums,
+   * over the vertex count */
+  private def foldGlobalCC(blocks: Seq[(Long, Double)], vertexCount: Long): Double = {
+    val blockSums = blocks.sortBy(_._1)
     var s = 0.0; var i = 0
     while (i < blockSums.length) { s += blockSums(i)._2; i += 1 }
     s / vertexCount
@@ -524,7 +527,7 @@ object IncrementalWCC {
     try {
     val seed = timed("initial-partition")(performInitialPartition(m, state.bulkFlagged, scope))
     Failpoint("after initial-partition")
-    val globalCC = WccUtil.joinUnwrapped(m.globalCCF)
+    val globalCC = m.globalCC
     // the seed blocks are materialized: nothing reads the merge's
     // surfaces any more
     scope.release(m.delta, m.vertices)
@@ -556,10 +559,9 @@ object IncrementalWCC {
     } catch {
       case t: Throwable =>
         // a failure between the merge and the state hand-off must not
-        // abandon the concurrent global-cc fold unobserved: its job
-        // would keep running on the shared context with any failure
-        // swallowed
-        try m.globalCCF.join() catch { case _: Throwable => () }
+        // leave the concurrent block-sum job running on the shared
+        // context with nobody to read its result
+        m.globalCCBlocks.cancel()
         throw t
     }
   }(_.cached)

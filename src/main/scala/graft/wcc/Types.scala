@@ -50,23 +50,10 @@ final case class CommunityData(r: Int, a: Double, b: Int) {
 
   def removeVertex(dIn: Int, dOut: Int): CommunityData =
     CommunityData(r - 1, a - dIn, b + dIn - dOut)
-
-  def addVertex(dIn: Int, dOut: Int): CommunityData =
-    CommunityData(r + 1, a + dIn, b - dIn + dOut)
 }
 
 /** Shared helpers of the WCC pipelines. */
 private[wcc] object WccUtil {
-  /** `join()` with the wrapper peeled: a failure inside a
-   * `CompletableFuture` job surfaces as the underlying Spark
-   * exception, not a `CompletionException` — one definition for
-   * every overlap site so failure handling cannot drift. */
-  def joinUnwrapped[T](f: java.util.concurrent.CompletableFuture[T]): T =
-    try f.join() catch {
-      case e: java.util.concurrent.CompletionException =>
-        throw Option(e.getCause).getOrElse(e)
-    }
-
   /** the RDDs a cached graph holds: its vertices and edges */
   def cached(g: org.apache.spark.graphx.Graph[_, _]): Seq[org.apache.spark.rdd.RDD[_]] =
     Seq(g.vertices, g.edges)

@@ -8,6 +8,20 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("the README's batch DWCC lines run through the Graft facade") {
+    import spark.implicits._
+    // two triangles joined by one bridge, each edge in both directions
+    val raw = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    val out = Graft.wcc(Graft.toGraph(Graft.canonicalize(raw)))
+    val labels = Graft.partitionRows(spark, out.graph)
+    assert(labels.columns.toSeq === Seq("vid", "cid"))
+    assert(labels.as[(Long, Long)].collect().map(_._1).sorted.toSeq === (1L to 6L))
+    Seq(out.graph, out.initialPartition, out.prunedCore, out.refinedCore)
+      .foreach(_.unpersist(blocking = false))
+    out.triangleStats.unpersist(blocking = false)
+  }
+
   test("every oracle key has a query") {
     val qs = SparkEntry.queries.keySet
     val missing = SparkEntry.oracleSql.keySet -- qs

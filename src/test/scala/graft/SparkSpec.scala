@@ -17,7 +17,6 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    s.sparkContext.setCheckpointDir("/tmp/graft-test-checkpoint")
     s
   }
 }

@@ -9,13 +9,14 @@ import graft.graph.{EdgeOps, Fixpoint, GraphAlgs}
 /** The shared fixpoint scaffold: Spark jobs per round of the loops
  * built on it, measured as the job-count difference between a run
  * of r + 1 rounds and a run of r rounds (setup and finish cancel),
- * and the rule that only `Fixpoint` cuts lineage under graft/graph
- * and graft/wcc. */
+ * and the rule that only `Fixpoint` cuts lineage, and only locally. */
 class FixpointSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jobsPerRound(r: Int)(run: Int => Unit): Int =
-    JobProbe(spark.sparkContext)(run(r + 1)).jobs - JobProbe(spark.sparkContext)(run(r)).jobs
+  private def perRound(r: Int, count: JobProbe.Counts => Int)(run: Int => Unit): Int =
+    count(JobProbe(spark.sparkContext)(run(r + 1))) - count(JobProbe(spark.sparkContext)(run(r)))
+
+  private def jobsPerRound(r: Int)(run: Int => Unit): Int = perRound(r, _.jobs)(run)
 
   // a path: deep enough that no loop below converges in the rounds
   // it is given (MIS needs 3 rounds on it, DAG levels 60, k-core ~30)
@@ -27,10 +28,20 @@ class FixpointSpec extends SparkSpec {
     } === 1)
   }
 
+  private def dagLevels(rounds: Int): Unit =
+    intercept[IllegalArgumentException](GraphAlgs.dagLevelsDF(path, maxIter = rounds))
+
   test("DAG levels run one job per round") {
-    assert(jobsPerRound(2) { r =>
-      intercept[IllegalArgumentException](GraphAlgs.dagLevelsDF(path, maxIter = r))
-    } === 1)
+    assert(jobsPerRound(2)(dagLevels) === 1)
+  }
+
+  test("DAG levels run one job at round 16 too") {
+    assert(jobsPerRound(15)(dagLevels) === 1)
+  }
+
+  test("a DAG-level round's job skips as many stages at round 13 as at round 5") {
+    // a cut state leaves a round's job nothing of earlier rounds to list
+    assert(perRound(4, _.skipped)(dagLevels) === perRound(12, _.skipped)(dagLevels))
   }
 
   test("det eigencentrality runs one job per round") {
@@ -78,17 +89,19 @@ class FixpointSpec extends SparkSpec {
     assert(jobsPerRound(3) { r => GraphAlgs.corenessDF(g, maxIter = r).count() } === 1)
   }
 
-  test("only Fixpoint cuts lineage under graft/graph and graft/wcc") {
-    val roots = Seq("src/main/scala/graft/graph", "src/main/scala/graft/wcc").map(Paths.get(_))
-    roots.foreach(root => assert(Files.isDirectory(root),
-      s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})"))
+  test("only Fixpoint cuts lineage, and nothing in main code checkpoints reliably") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
     val hits = for {
-      root <- roots
       file <- Files.walk(root).iterator().asScala.toSeq
-      if file.toString.endsWith(".scala") && file.getFileName.toString != "Fixpoint.scala"
+      if file.toString.endsWith(".scala")
+      banned = Seq(".checkpoint(", "getCheckpointDir", "setCheckpointDir") ++
+        (if (file.getFileName.toString == "Fixpoint.scala") Nil else Seq(".localCheckpoint("))
       (line, i) <- Files.readAllLines(file).asScala.zipWithIndex
-      if Seq("getCheckpointDir", ".checkpoint()", ".localCheckpoint(").exists(line.contains)
+      if banned.exists(line.contains)
     } yield s"$file:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("lineage cut outside Fixpoint:\n", "\n", ""))
+    assert(hits.isEmpty, hits.mkString("lineage cut outside Fixpoint or reliable checkpoint:\n",
+      "\n", ""))
   }
 }

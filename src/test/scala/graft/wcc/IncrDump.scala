@@ -46,7 +46,7 @@ object IncrDump {
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/merged_stats")
     // hoist to locals: the movement closure below must not capture
     // `m` itself (MergeResult now carries a non-serializable future)
-    val globalCC = m.globalCCF.join()
+    val globalCC = m.globalCC
     val vertexCount = m.vertexCount
     println(s"DUMP split=$split vertexCount=$vertexCount " +
       s"globalCC=$globalCC bits=${java.lang.Double.doubleToLongBits(globalCC)}")

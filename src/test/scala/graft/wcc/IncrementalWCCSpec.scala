@@ -54,7 +54,7 @@ class IncrementalWCCSpec extends SparkSpec {
       // untouched non-center vertices keep their true data (cId = 3)
       assert(verts(1L).t === 1)
       assert(verts(2L).t === 1)
-      m.globalCCF.join()
+      m.globalCC
     }
   }
 
@@ -85,7 +85,7 @@ class IncrementalWCCSpec extends SparkSpec {
       val keys = m.deltaKeys.collect()
       assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
       assert(bulkKeySet(state) ++ keys === fromScratch)
-      m.globalCCF.join()
+      m.globalCC
     }
     def labels(s: IncrementalWCC.State) =
       s.graph.vertices.map { case (id, vd) => (id, vd.cId) }.collect().sorted.toSeq
@@ -183,7 +183,7 @@ class IncrementalWCCSpec extends SparkSpec {
       val keys = m.deltaKeys.collect()
       assert(keys.length === keys.distinct.length, "a delta key was emitted twice")
       assert(bulkKeySet(state) ++ keys === fromScratch)
-      m.globalCCF.join()
+      m.globalCC
     }
   }
 
@@ -212,7 +212,7 @@ class IncrementalWCCSpec extends SparkSpec {
     if (overlapping) Fixpoint.using { scope =>
       val m = IncrementalWCC.merge(state, batchRdd, scope)
       val shared = m.deltaKeys.intersection(state.bulkKeys.get).count()
-      m.globalCCF.join()
+      m.globalCC
       assert(shared > 0, "premise: the delta keys overlap the bulk flags")
     }
     // the whole 0.8-split stream region as one batch: far from micro,

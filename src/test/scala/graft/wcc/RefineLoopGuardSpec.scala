@@ -151,7 +151,7 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
         val m = IncrementalWCC.merge(state, spark.sparkContext.parallelize(Seq(
           org.apache.spark.graphx.Edge(3L, 4L, 1), org.apache.spark.graphx.Edge(4L, 5L, 1),
           org.apache.spark.graphx.Edge(3L, 5L, 1))), scope)
-        m.globalCCF.join()
+        m.globalCC
         assertOnCodec("the delta triangle pass", blockShuffles(m.deltaKeys),
           Seq(classOf[EdgeSlots], classOf[SameSets]))
       }
@@ -442,9 +442,10 @@ class RefineLoopGuardSpec extends SparkSpec with TimeLimits {
   }
 
   test("the merge's global-cc fold runs under the caller's job group on every fold") {
-    // the fold runs on a ForkJoinPool thread, which inherits local
-    // properties only when it is created: without carrying them over,
-    // every fold after the first would run under a stale group
+    // the block-sum job overlaps the seeding; a job submitted from any
+    // thread but the caller's (a pool thread keeps the local properties
+    // it was created with) would run every fold after the first under a
+    // stale group
     failAfter(180.seconds) {
       val sc = spark.sparkContext
       val state = IncrementalWCC.prepare(graphOf(spark, Seq((1L, 2L), (2L, 3L), (1L, 3L))))
